@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.sources.Tables
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR.
   * Streams ONE JSON line per completed query ({"metric":"query",...}) so a
@@ -34,17 +34,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // contract: bench runs at local[32] (all cores); env only overrides down
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) =>
-      builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // contract: bench runs on every core; SPARK_GRAFT_CPUS only overrides
+    val cpus = Tables.cpus
+    val spark = Tables.session("graft-bench")
     // SPARK_GRAFT_BENCH_ONLY=q80,q29 — comma-separated name prefixes for
     // focused timing runs; unset = the full suite (the official artifact)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -231,9 +223,7 @@ object Bench {
     // cpus + the resolved master in the artifact itself (round-17
     // verdict item 1): the scaling run's core count is no longer only
     // in the driver's wrapper
-    val cpusJson =
-      try cpus.trim.toInt.toString catch { case _: Throwable => s""""$cpus"""" }
-    val totalLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"suspect":$suspectJson,"reps":$reps,"calib_sec":$calibBest%.3f,"calib_ratio":$calibRatio%.2f,"calib_ratios":$ratiosJson,"quiet_certified":$quietCertified,"cpus":$cpusJson,"master":"local[$cpus]","scale_probe_sec":$scaleProbeSec%.3f,"sf":"$sfDir"}"""
+    val totalLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"suspect":$suspectJson,"reps":$reps,"calib_sec":$calibBest%.3f,"calib_ratio":$calibRatio%.2f,"calib_ratios":$ratiosJson,"quiet_certified":$quietCertified,"cpus":$cpus,"master":"local[$cpus]","scale_probe_sec":$scaleProbeSec%.3f,"sf":"$sfDir"}"""
     println(totalLine)
     // standalone artifact: the stdout capture that becomes BENCH_r{N}.json
     // truncates to a tail window, losing most per-query timings — writing

@@ -1,25 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+/** Prints the formatted physical plan of each named query (the
+  * `.explain("formatted")` dumps under plans/).
+  *
+  * Usage: Explain <sfDir> <query>... */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val builder = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_EXPLAIN_MODE=formatted gives the judge-facing
-    // .explain("formatted") dump (plans/r16 contract); default stays
-    // the compact SimpleMode for interactive plan reading.
-    val mode =
-      if (sys.env.get("GRAFT_EXPLAIN_MODE").contains("formatted"))
-        org.apache.spark.sql.execution.FormattedMode
-      else org.apache.spark.sql.execution.SimpleMode
+    val spark = graft.sources.Tables.session("graft-explain")
     args.drop(1).foreach { q =>
       println(s"===== $q =====")
       println(SparkEntry.queries(q)(spark, sfDir).queryExecution
-        .explainString(mode))
+        .explainString(FormattedMode))
     }
     spark.stop()
   }

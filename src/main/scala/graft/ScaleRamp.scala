@@ -195,16 +195,7 @@ object ScaleRamp {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-scale-ramp"
     val factor = if (args.length > 2) args(2).toInt else 10
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) =>
-      builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Tables.session("graft-scale-ramp")
     // SPARK_GRAFT_SCALE_FAMILIES / _TABLES subset the run — the ×100
     // second-decade probe ramps only the worst-×10 document/embedding
     // families, so staging events/lineitem 100× would be pure waste

@@ -17,14 +17,7 @@ import graft.sources.Sinks
 object PipelineMain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]").appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Tables.session("graft-pipeline")
     run(spark, sfDir, outDir)
     spark.stop()
   }

@@ -821,8 +821,7 @@ object Dedup extends org.apache.spark.internal.Logging {
     withH.groupBy("doc_id").agg(sigs.head, sigs.tail: _*)
   }
 
-  private def withSignature(df: DataFrame,
-                            cfg: DedupConfig = DedupConfig.Default): DataFrame =
+  private def withSignature(df: DataFrame, cfg: DedupConfig): DataFrame =
     signaturesFrom(shingleRows(df, cfg), cfg)
 
   /** MinHash signatures (k=numHashes) over shingleN-gram shingles — per-doc

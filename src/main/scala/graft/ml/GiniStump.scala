@@ -39,7 +39,6 @@ object GiniStump {
   val MaxBins = 16
   val NumFeats = 4 // embedding components used as features f0..f3
 
-  private val dec = DecimalType(38, 0)
   private def featNames = (0 until NumFeats).map(j => s"f$j")
 
   private[graft] def pts(s: SparkSession, dir: String): DataFrame =
@@ -369,7 +368,7 @@ object GiniStump {
       var cur = binned
       val splitRows = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.Row]
-      for (level <- 1 to depth) {
+      for (_ <- 1 to depth) {
         // ≤ 2^(level-1) split rows, node size included (nl + nr)
         val best = chooseSplits(binnedCountsFromBins(cur).collect(), thrByFeat)
         splitRows ++= best

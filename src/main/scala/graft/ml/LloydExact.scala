@@ -158,17 +158,6 @@ object LloydExact {
       .getField("cluster")
   }
 
-  /** Per-cluster per-dimension exact-decimal means → new center arrays. */
-  private def recompute(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cluster"), posexplode(col("e")).as(Seq("pos", "val")))
-      .groupBy("cluster", "pos")
-      .agg((sum(col("val").cast(DecimalType(28, 9))).cast(DoubleType) /
-        count(lit(1))).as("m"))
-      .groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("c"))
-
   /** q57: cluster sizes + center norms after `Iters` exact Lloyd rounds. */
   def clusterQuery(s: SparkSession, dir: String): DataFrame = {
     val pts = points(s, dir)

@@ -117,6 +117,24 @@ object Tables {
     // actual plans are unaffected.
     "spark.sql.maxPlanStringLength" -> "65536")
 
+  /** Task slots for every graft session: SPARK_GRAFT_CPUS when set, else
+    * every core of the host. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The one session policy of every graft entry point: `local[cpus]`,
+    * one shuffle partition per slot, UI off, [[sessionConfigs]], WARN
+    * logging. */
+  def session(app: String, cpus: Int = Tables.cpus): SparkSession = {
+    val b = SparkSession.builder().master(s"local[$cpus]").appName(app)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Fan a small/single-split input out to cluster parallelism before a
     * compute-dense narrow stage (shingling, hashing, vector math).
     *
@@ -319,10 +337,9 @@ object Sinks {
   private[graft] val RtCols =
     Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
 
-  /** One side of a format round-trip — shared by [[formatRoundTrip]] and
-    * `Profile --roundtrip`, so the profiler can never drift from the
-    * write/read options the benchmarked queries actually use. "parquet"
-    * is the profiler's format-neutral control. */
+  /** One side of a format round-trip, shared by [[formatRoundTrip]] and
+    * q382's `formatCertificate` so both use the same write options.
+    * "parquet" is the certificate's format-neutral control. */
   private[graft] def rtWrite(src: DataFrame, format: String, path: String): Unit =
     format match {
       case "orc" =>

@@ -1,7 +1,6 @@
 package graft.sources.fixedwidth
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -115,7 +114,6 @@ class FwScanBuilder(spec: Seq[FixedWidthSource.FwField], path: String)
   private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    val want = requiredSchema.fieldNames.toSet
     // preserve the REQUESTED order: Spark expects rows in requiredSchema
     // field order, not layout order
     required = requiredSchema.fieldNames.toSeq

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Structured Streaming surface (SURVEY.md §2.10). The reference declares a
   * Kafka→Spark path (scripts/kafka_producer.py feeds topic `us_accidents`;
@@ -1204,8 +1203,8 @@ object EventStream {
       // dominant cost of the q270/q319 harness). `delta` is bounded by
       // the sketch size (d·w) by construction; the bucket memo is bounded
       // below, so per-task memory stays O(sketch + bound).
-      val delta = new java.util.HashMap[java.lang.Long, Long]()
-      val pdelta = new java.util.HashMap[java.lang.Long, Long]()
+      val delta = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+      val pdelta = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       val bcache = new java.util.HashMap[java.lang.Long, Array[Long]]()
       val BcacheMax = 1 << 16
       rows.foreach { e =>
@@ -1218,24 +1217,18 @@ object EventStream {
         }
         var j = 0
         while (j < d) {
-          val k: java.lang.Long = cells(j)
-          val cur = delta.get(k)
-          delta.put(k, (if (cur == null) 0L else cur.longValue) + 1L)
+          delta.merge(cells(j), 1L, _ + _)
           j += 1
         }
-        if (uid % 97 == 0) {
-          val k: java.lang.Long = uid
-          val cur = pdelta.get(k)
-          pdelta.put(k, (if (cur == null) 0L else cur.longValue) + 1L)
-        }
+        if (uid % 97 == 0) pdelta.merge(uid, 1L, _ + _)
       }
       delta.forEach { (k, add) =>
         val cur = if (cm.containsKey(k)) cm.getValue(k) else 0L
-        cm.updateValue(k, cur + add)
+        cm.updateValue(k, cur + add.longValue)
       }
       pdelta.forEach { (k, add) =>
         val cur = if (pcnt.containsKey(k)) pcnt.getValue(k) else 0L
-        pcnt.updateValue(k, cur + add)
+        pcnt.updateValue(k, cur + add.longValue)
       }
       seen.update(n)
       // materialize eagerly: state handles (cm/pcnt) must only be
@@ -2725,7 +2718,6 @@ object EventStream {
     * row, or a row landing on both sides would each break it. Stateless
     * routing ⇒ no watermark, no sentinel staging needed. */
   def quarantineDualSink(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val tmp = graft.sources.Tables.scratchTempDir("graft-q147")
     var q: StreamingQuery = null
     try {

@@ -231,7 +231,7 @@ object BpeTrain {
   /** The per-step CTE block — the same algorithm as [[step]], spelled
     * once and instantiated per iteration so Spark and oracle cannot
     * drift. */
-  private def stepCtes(i: Int, pre: String = ""): String = {
+  private def stepCtes(i: Int, pre: String): String = {
     val prev = s"${pre}t${i - 1}"
     s"""${pre}p$i AS (SELECT word, freq, pos, sym,
        |  lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt

@@ -220,7 +220,7 @@ object TextOps {
       "2_diversity" -> (col("ttr") < minTtr),
       "3_stopword"  -> (col("stopr") < minStop),
       "4_len_band"  -> (col("toks") < minToks || col("toks") > maxToks))
-    val sums = rules.zipWithIndex.flatMap { case ((nm, fail), i) =>
+    val sums = rules.zipWithIndex.flatMap { case ((_, fail), i) =>
       val marg = rules.take(i).map(r => !r._2)
         .foldLeft(fail) { case (c, pass) => c && pass }
       Seq(

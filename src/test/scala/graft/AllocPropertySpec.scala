@@ -61,7 +61,6 @@ class AllocPropertySpec extends SparkSpec {
   }
 
   test("property: ES sample ≡ driver ranking of the same derived keys") {
-    import spark.implicits._
     // the operator is fixture-bound; property-check the KEY RANKING LAW
     // it relies on: ln(u)/w ordering == u^(1/w) ordering for any u,w
     val caseGen = for {

@@ -279,7 +279,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q187 chunk dup ratio: agrees with a driver-side recount of shared digests") {
-    import org.apache.spark.sql.functions._
     val rows = Dedup.chunkDupRatio(spark, sfDir).collect()
     // independent recount from the chunk stream itself
     val chunks = graft.text.TextOps.chunkDocs(spark, sfDir)
@@ -539,7 +538,6 @@ class DedupSpec extends SparkSpec {
   test("q320 winnowing: the packed-key window min selects exactly the " +
       "paper's rightmost-min fingerprint per window (brute-forced), and " +
       "every injected near-dup variant pair surfaces — the w+n-1 guarantee") {
-    import org.apache.spark.sql.functions._
     val D = graft.dedup.Dedup
     val (n, w) = (4, 4)
     val corpus = D.nearDupCorpus(spark, sfDir)
@@ -584,7 +582,6 @@ class DedupSpec extends SparkSpec {
   test("q325 k-core: hand-checked peel — pendant chain stripped, cycle " +
       "kept; deep path needs its rounds; fixture core ⊆ component nodes") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val D = graft.dedup.Dedup
     def core(es: Seq[(Long, Long)], k: Int = 2, rounds: Int = 8) =
       D.kcoreOf(es.toDF("doc_a", "doc_b"), k, rounds).collect()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ml.Knn
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.Vectors
 import scala.util.Random
 
 class KnnSpec extends SparkSpec {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Sinks, Tables}
+import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 
 /** Live-connector smoke (round-10 verdict item 7): the last two

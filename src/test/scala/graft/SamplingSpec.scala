@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.sql.functions._
 
 /** R1-R4 sampling/split operators (SURVEY.md §2.7): seeded determinism
   * within THIS engine (the property the reference relies on with seed=42),

@@ -27,7 +27,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tumblingCounts aggregates a file-sourced micro-batch like its batch twin") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     // stage the sf0.001 events as the streamed input
     graft.sources.Tables.load(spark, sfDir, "events")
@@ -914,7 +913,6 @@ class StreamingSpec extends SparkSpec {
 
   test("q319 MapState read-back: every populated count-min cell equals " +
       "the relational rebuild; column sums count every event") {
-    import org.apache.spark.sql.functions._
     val rows = graft.streaming.EventStream
       .cmStateRead(spark, sfDir).collect()
     assert(rows.nonEmpty)

@@ -218,7 +218,6 @@ class TextPrimsSpec extends SparkSpec {
   }
 
   test("q186 length batching: batches full except tails, caps honored, fill exact") {
-    import org.apache.spark.sql.functions._
     val B = 8
     val rows = graft.text.TextOps.lengthBucketBatches(spark, sfDir, B).collect()
     val caps = Set(16, 32, 64, 128, 256, 512)
@@ -589,7 +588,6 @@ class TextPrimsSpec extends SparkSpec {
   }
 
   test("q242 funnel: stages monotone, dedup keep matches a direct count") {
-    import org.apache.spark.sql.functions._
     val rows = graft.text.TextOps.curationFunnel(spark, sfDir).collect()
     assert(rows.map(_.getString(0)).toSeq === Seq("0_corpus", "1_quality",
       "2_exact_dedup", "3_pii_clean", "4_len_band"))
@@ -706,7 +704,6 @@ class TextPrimsSpec extends SparkSpec {
   }
 
   test("q249 compression: merges only shrink, totals recounted directly") {
-    import spark.implicits._
     val rows = graft.text.BpeTrain.bpeCompression(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -738,7 +735,6 @@ class TextPrimsSpec extends SparkSpec {
 
   test("q321 vocab: totals reconcile with q246's final-step stats, " +
       "coverage monotone, merged symbols rank above their residue") {
-    import spark.implicits._
     // full inventory (topK beyond the vocab size): Σcnt and the row
     // count must equal the merge curve's final corpus_syms / sym_types
     val full = graft.text.BpeTrain.bpeVocab(spark, sfDir, topK = 1 << 20)
@@ -764,7 +760,6 @@ class TextPrimsSpec extends SparkSpec {
 
   test("q250 LOO impact: deltas consistent, one source recounted by an " +
       "actual leave-out pass") {
-    import spark.implicits._
     val rows = graft.text.TextOps.looSourceImpact(spark, sfDir).collect()
     val docsDf = graft.sources.Tables.load(spark, sfDir, "documents")
     assert(rows.map(_.getAs[Int]("n_docs")).sum === docsDf.count())
@@ -1062,7 +1057,6 @@ class TextPrimsSpec extends SparkSpec {
   test("q276 loops: planted period-2 loop measured exactly, clean doc " +
       "stays clean") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // doc 1: "x y x y x y x y" — period 2, t(i)=t(i+2) for i=1..6,
     // loop covers 6+2=8 tokens; period 1 never matches
     // doc 2: all-distinct tokens — no loop at any period
