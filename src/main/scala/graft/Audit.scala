@@ -14,7 +14,7 @@ import org.apache.spark.sql.graft.listenerBus
   *
   * Usage: Audit <sfDir> <query>...
   * JSON: {"metric":"audit","name":…,"dir":…,"wall_sec":…,"executor_sec":…,
-  *  "input_mb":…,"shuffle_write_mb":…,"shuffle_read_mb":…,"stages":…,
+  *  "input_bytes":…,"shuffle_write_bytes":…,"shuffle_read_bytes":…,"stages":…,
   *  "tasks":…,"rows":…} */
 object Audit {
   val Reps = 2
@@ -23,14 +23,14 @@ object Audit {
 
   final case class Report(name: String, dir: String, wallSec: Double,
                           jobs: Seq[Job], executorSec: Double,
-                          inputMb: Double, shuffleWriteMb: Double,
-                          shuffleReadMb: Double, stages: Long, tasks: Long,
+                          inputBytes: Long, shuffleWriteBytes: Long,
+                          shuffleReadBytes: Long, stages: Long, tasks: Long,
                           rows: Long) {
     def lines: Seq[String] =
       f"== $name wall=$wallSec%.2f s, ${jobs.size} jobs (last rep)" +:
         jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%7.3f s  ${j.tasks}%5d tasks  ${j.site}") :+
         f"  sum-of-jobs ${jobs.map(_.sec).sum}%.3f s (gaps = driver/stage-setup time)" :+
-        f"""{"metric":"audit","name":"$name","dir":"$dir","wall_sec":$wallSec%.3f,"executor_sec":$executorSec%.3f,"input_mb":$inputMb%.1f,"shuffle_write_mb":$shuffleWriteMb%.1f,"shuffle_read_mb":$shuffleReadMb%.1f,"stages":$stages,"tasks":$tasks,"rows":$rows}"""
+        f"""{"metric":"audit","name":"$name","dir":"$dir","wall_sec":$wallSec%.3f,"executor_sec":$executorSec%.3f,"input_bytes":$inputBytes,"shuffle_write_bytes":$shuffleWriteBytes,"shuffle_read_bytes":$shuffleReadBytes,"stages":$stages,"tasks":$tasks,"rows":$rows}"""
   }
 
   /** Job and stage counters of one run; read only after the bus drains. */
@@ -67,9 +67,8 @@ object Audit {
 
     def report(name: String, dir: String, wallSec: Double, rows: Long)
         : Report = synchronized {
-      def mb(b: Long): Double = b / (1024.0 * 1024.0)
       Report(name, dir, wallSec, jobs.sortBy(_.id).toSeq, runMs / 1e3,
-        mb(input), mb(shufW), mb(shufR), stages, tasks, rows)
+        input, shufW, shufR, stages, tasks, rows)
     }
   }
 

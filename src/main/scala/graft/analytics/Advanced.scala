@@ -4106,15 +4106,12 @@ object Advanced {
     * by construction (Bloom FPs only let through rows the join re-
     * checks); the spec asserts the `might_contain` actually landed in
     * the plan. */
-  def runtimeFilterJoin(s: SparkSession, dir: String): DataFrame = {
-    val knobs = Map(
+  def runtimeFilterJoin(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.withConfs(s, Map(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtimeFilter.number.threshold" -> "10",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val old = knobs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      knobs.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val ord = t(s, dir, "orders")
         .filter(col("o_orderstatus") === "F" &&
           col("o_totalprice") > 150000.0)
@@ -4128,9 +4125,7 @@ object Advanced {
           dsum(col("l_quantity")).as("sum_qty"))
         .orderBy("o_orderpriority")
         .localCheckpoint() // execute under the pinned knobs
-    } finally old.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
+    }
 
   /** q351: LOCF GAP FILL — last-observation-carried-forward over a dense
     * calendar spine: each user's daily metric series is completed so

@@ -314,11 +314,8 @@ object GiniStump {
     // (production sizes the same conf to data volume); restored after.
     // fitTree's result is a driver-built LocalRelation, so nothing lazy
     // escapes with the narrowed setting.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try fitTree(pts(s, dir), depth, approxBinning)
-    finally s.conf.set(partsKey, partsPrev)
+    graft.sources.Tables.withConfs(s, Map("spark.sql.shuffle.partitions" -> "8"))(
+      fitTree(pts(s, dir), depth, approxBinning))
   }
 
   /** The per-level recursion, BIN-ONCE form: raw features are read

@@ -1454,15 +1454,11 @@ object Similarity {
     * partitions; the checkpoint makes increments exactly-once across
     * job restarts — this is how an embedding index stays fresh under
     * continuous ingest without rebuild downtime. */
-  def annIvfUpsertStream(s: SparkSession, dir: String): DataFrame = {
-    val L = graft.ml.LloydExact
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q298")
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val path = tmp.resolve("ivf").toString
+  def annIvfUpsertStream(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.EventStream.staged(s, "q298",
+        graft.streaming.EventStream.Parts8) { h =>
+      val L = graft.ml.LloydExact
+      val path = h.dir.resolve("ivf").toString
       val pts = L.points(s, dir)
       // the frozen quantizer: every micro-batch assigns against it
       val centers = L.centersFor(pts).localCheckpoint()
@@ -1473,12 +1469,10 @@ object Similarity {
         .filter(col("vec_id") % 15 === 4 && col("vec_id") >= 10)
         .select((col("vec_id") + UpsertOffset).as("vec_id"), col("e"))
         .localCheckpoint() // three slice writes read it
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
       // write and move split so the third increment can be STAGED while
       // run 1 executes (guide §2.6) and moved only once no job is running
       def writeSlice(slice: Int): java.nio.file.Path = {
-        val stage = tmp.resolve(s"stage$slice")
+        val stage = h.dir.resolve(s"stage$slice")
         // shard on the add's ORDINAL within the id plane, not vec_id
         // mod 3: every add satisfies (vec_id − UpsertOffset) ≡ 4
         // (mod 15) and UpsertOffset ≡ 2 (mod 3), so vec_id is CONSTANT
@@ -1496,48 +1490,39 @@ object Similarity {
       }
       def stageSlice(slice: Int, name: String, mtimeMs: Long): Unit =
         graft.streaming.EventStream.moveOnlyParquet(
-          writeSlice(slice), in.resolve(name), mtimeMs)
+          writeSlice(slice), h.in.resolve(name), mtimeMs)
       val addSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id", LongType),
         org.apache.spark.sql.types.StructField("e",
           ArrayType(DoubleType))))
       // both runs build the IDENTICAL plan for checkpoint compatibility
       def run(): org.apache.spark.sql.streaming.StreamingQuery =
-        s.readStream.schema(addSchema)
+        h.track(s.readStream.schema(addSchema)
           .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString)
+          .parquet(h.in.toString)
           .writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
             L.assign(b, centers)
               .withColumn("nrm", sqrt(dotp(col("e"), col("e"))))
               .write.mode("append").partitionBy("cluster").parquet(path)
             () }
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
+          .option("checkpointLocation", h.ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+          .start())
       // ---- run 1: two increments
       stageSlice(0, "aa-add0.parquet", 1000000L)
       stageSlice(1, "bb-add1.parquet", 1060000L)
-      q = run()
+      val q1 = run()
       // stage (but do NOT move) the third increment while run 1 streams
       val stage2 = writeSlice(2)
-      require(q.awaitTermination(300000),
-        "q298 upsert-stream run 1 did not terminate within 300 s")
-      q = null
+      h.await(q1, "upsert-stream run 1")
       // ---- the third increment lands while no job is running
       graft.streaming.EventStream.moveOnlyParquet(
-        stage2, in.resolve("cc-add2.parquet"), 1120000L)
+        stage2, h.in.resolve("cc-add2.parquet"), 1120000L)
       // ---- run 2: resumed from the same checkpoint
-      q = run()
-      require(q.awaitTermination(300000),
-        "q298 upsert-stream run 2 did not terminate within 300 s")
+      h.await(run(), "upsert-stream run 2")
       probeIvf(s.read.parquet(path)).localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      Tables.rmTree(tmp)
     }
-  }
 
   /** q305: FILTERED VECTOR SEARCH — predicate-constrained retrieval,
     * the production ANN feature tombstones (q262) only approximate:

@@ -65,21 +65,28 @@ object Tables {
         .getOrElse(sys.props("java.io.tmpdir"))
     }
 
-  /** Per-query scratch temp dir (staging copies, stream checkpoints,
-    * sink round-trip outputs) on the SAME fast scratch as the shuffle
-    * dirs: the streaming harnesses commit offset/state/commit logs as
-    * many small files per micro-batch, and on this sandbox's root FS
-    * those creates dominate harness wall time exactly like the shuffle
-    * files did. Callers already rmTree these in their finally blocks;
-    * the fallback is the stock temp dir. */
-  private[graft] def scratchTempDir(prefix: String): java.nio.file.Path =
+  /** Root of every per-query scratch dir: `graft-tmp` on the node-local
+    * tmpfs when one is writable, else the JVM tmpdir. */
+  private[graft] def scratchRoot: java.nio.file.Path =
     fastScratchBase match {
-      case Some(base) =>
-        val root = new java.io.File(base, "graft-tmp")
-        java.nio.file.Files.createDirectories(root.toPath)
-        java.nio.file.Files.createTempDirectory(root.toPath, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
+      case Some(base) => new java.io.File(base, "graft-tmp").toPath
+      case None => java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
     }
+
+  /** Per-query scratch temp dir (staging copies, stream checkpoints,
+    * sink round-trip outputs) under [[scratchRoot]]: the streaming
+    * harnesses commit offset/state/commit logs as many small files per
+    * micro-batch, and on a slow root FS those creates dominate harness
+    * wall time. SPARK_GRAFT_LOCAL_DIR does not move these: it moves only
+    * the shuffle dirs ([[scratchDir]]), so with it set, shuffle files
+    * follow the variable while these dirs stay on `/dev/shm` whenever it
+    * is writable (one scratch policy for both is ROADMAP item 3).
+    * Callers delete the dir when done. */
+  private[graft] def scratchTempDir(prefix: String): java.nio.file.Path = {
+    val root = scratchRoot
+    java.nio.file.Files.createDirectories(root)
+    java.nio.file.Files.createTempDirectory(root, prefix)
+  }
 
   /** Session configs every graft SparkSession needs. */
   val sessionConfigs: Map[String, String] = Map(
@@ -133,6 +140,17 @@ object Tables {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Runs `body` with each of `confs` set on the session; on every exit
+    * restores each key's prior value, or unsets it if it had none. */
+  def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
+    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach { case (k, v) =>
+      v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 
   /** Fan a small/single-split input out to cluster parallelism before a

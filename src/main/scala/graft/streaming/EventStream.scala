@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
@@ -217,35 +217,17 @@ object EventStream {
     * shuffle, NoTimeout. On a live deployment swap in [[kafkaSource]];
     * the recursion is micro-batch-sliceable by construction (state
     * carries the fold). */
-  def ewmaStreamParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q194")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(in.toString)
-      val ds = fileSource(s, in.toString)
+  def ewmaStreamParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q194", Parts8) { h =>
+      import s.implicits._
+      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
+        .parquet(h.in.toString)
+      val ds = fileSource(s, h.in.toString)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
-      q = toParquet(ewmaByUser(ds).toDF(), tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q194 ewma stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
-        .orderBy("user_id", "n")
-        .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
+      h.await(h.sink(ewmaByUser(ds).toDF()))
+      h.output.orderBy("user_id", "n").localCheckpoint()
     }
-  }
 
   /** q212 — STREAMING DRIFT HISTOGRAM parity, the twelfth streaming
     * surface: q205's reference decile boundaries (fit batch-side on the
@@ -258,45 +240,12 @@ object EventStream {
     * streamed artifact). Proves broadcast-static join + HOF binning +
     * windowed aggregation compose in one streaming plan. Oracle: the
     * identical histogram computed batch-side. */
-  def driftHistogramParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q212")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      // q85's sentinel staging: Append mode emits a window only after
-      // the watermark passes it, so the real data lands in one file and
-      // a far-future sentinel in a second micro-batch pushes the
-      // watermark beyond every real window. The sentinel's fake
-      // event_type never matches a boundary row, so the inner broadcast
-      // join drops it before it could pollute a histogram cell.
-      // data write ∥ bounds agg (guide §2.6) — independent jobs; the
-      // sentinel (which needs maxTs) follows inside the same wave arm
-      var maxTs: java.sql.Timestamp = null
-      stagingWave(Seq(
-        () => {
-          val stage0 = tmp.resolve("stage0")
-          events.coalesce(1).write.mode("overwrite").parquet(stage0.toString)
-          moveOnlyParquet(stage0, in.resolve("aa-data.parquet"),
-            mtimeMs = 1000000L)
-        },
-        () => {
-          maxTs = events.agg(max("ts")).head().getTimestamp(0)
-          val stage = tmp.resolve("sentinel")
-          Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L),
-               -1L, "__watermark_sentinel__", 0.0, "{}"))
-            .toDF("event_id", "ts", "user_id", "event_type", "value",
-              "props")
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          moveOnlyParquet(stage, in.resolve("zz-sentinel.parquet"),
-            mtimeMs = 1060000L)
-        }))
+  def driftHistogramParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q212", Parts8) { h =>
+      // q85's sentinel staging: the sentinel's fake event_type never
+      // matches a boundary row, so the inner broadcast join drops it
+      // before it could pollute a histogram cell
+      stageDataThenSentinel(h, stagedEvents(s, dir))
       val vq = (col("value").cast(DecimalType(18, 6)) * 1000000)
         .cast(LongType)
       // reference boundaries: batch-fit, static, broadcast into the stream
@@ -308,9 +257,7 @@ object EventStream {
         .agg(expr(s"percentile(vq, array(${qsArr.mkString(", ")}))")
           .as("bnd"))
         .localCheckpoint()
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      val binned = src
+      val binned = inBatches(h)
         // watermark at the SOURCE, before the boundary join: the far-
         // future sentinel must advance event time even though the inner
         // join (rightly) drops its fake event_type from the histogram
@@ -324,19 +271,9 @@ object EventStream {
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("bin"), col("n"))
-      q = toParquet(binned, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q212 drift stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
-        .orderBy("window_start", "event_type", "bin")
-        .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
+      h.await(h.sink(binned))
+      h.output.orderBy("window_start", "event_type", "bin").localCheckpoint()
     }
-  }
 
   /** Streaming exact dedup — the incremental twin of Dedup.dedupExact:
     * drops re-deliveries of the same key while the watermark bounds how
@@ -425,59 +362,14 @@ object EventStream {
     * unreported).
     * Staging uses q135's per-side far-future sentinels so BOTH inputs'
     * watermarks advance past the trailing clicks. */
-  def antiJoinParity(s: SparkSession, dir: String): DataFrame = {
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(noDataKey, "true")
-    try antiJoinParityStaged(s, dir)
-    finally noDataPrev match {
-      case Some(v) => s.conf.set(noDataKey, v)
-      case None    => s.conf.unset(noDataKey)
-    }
-  }
-
-  private def antiJoinParityStaged(s: SparkSession, dir: String)
-      : DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q295")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      // data write ∥ bounds agg (guide §2.6): the sentinel APPEND must
-      // follow the overwrite, but the agg reads the source table, not
-      // `in/` — so only the append stays ordered
-      var maxTs: java.sql.Timestamp = null
-      stagingWave(Seq(
-        () => { events.coalesce(1).write.mode("overwrite")
-          .parquet(in.toString); () },
-        () => { maxTs = events.agg(max("ts")).head().getTimestamp(0) }))
-      val far = new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L)
-      Seq((-1L, far, -1L, "click", 0.0, "{}"),
-          (-2L, far, -2L, "error", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(in.toString)
-      val absent = correlateAnti(
-        fileSource(s, in.toString), fileSource(s, in.toString))
-      q = toParquet(absent, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q295 anti-join stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
-        .filter(col("click_id") >= 0)
-        .orderBy("click_id")
+  def antiJoinParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q295", Flush) { h =>
+      stageWithSideSentinels(h, stagedEvents(s, dir))
+      h.await(h.sink(correlateAnti(
+        fileSource(s, h.in.toString), fileSource(s, h.in.toString))))
+      h.output.filter(col("click_id") >= 0).orderBy("click_id")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q85 — oracle-checked streaming parity: the SAME hourly aggregation as
     * q21 (`Relational.tumblingWindowAgg`), executed INCREMENTALLY by
@@ -509,102 +401,26 @@ object EventStream {
     * On a live deployment this is the reference's intended Kafka path
     * (S10): swap `fileSource` for `kafkaSource` and drop the sentinel
     * staging — a live stream's own arrivals advance the watermark. */
-  def streamingParity(s: SparkSession, dir: String): DataFrame = {
-    // the trailing ~2h of real windows are flushed by the no-data
-    // micro-batch after the sentinel batch (see scaladoc) — make that
-    // dependency explicit instead of relying on the ambient default.
-    // Restored in the OUTER finally so no failure path (staging, query
-    // start, even cleanup) leaks the override into the shared session.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(noDataKey, "true")
-    try streamingParityStaged(s, dir)
-    finally noDataPrev match {
-      case Some(v) => s.conf.set(noDataKey, v)
-      case None    => s.conf.unset(noDataKey)
-    }
-  }
-
-  /** q85 body: staging, the streaming run, read-back (see
-    * [[streamingParity]], which owns the session-conf guard). */
-  private def streamingParityStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q85")
-    // EVERYTHING from here — staging writes, query start, read-back — runs
-    // inside the try: a failure at any point still deletes the staged
-    // events copy + checkpoint (bench runs this reps× per round, so a
-    // leak per failing attempt would accumulate)
-    var q: StreamingQuery = null
-    // the windowed aggregation keeps one state store per shuffle
-    // partition, each committing a version per micro-batch — size the
-    // stateful shuffle to the fixture like every later surface
-    // (q109/q135/q143; production sizes this to key cardinality),
-    // restored in the finally
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      // ONE real-data file → ONE micro-batch. A multi-file write's parts
-      // share mtimes, and with maxFilesPerTrigger=1 the FileStreamSource
-      // tie-break could batch the newest-timestamped part first — the
-      // watermark would ratchet past older parts and silently drop them as
-      // late. A single file removes the intra-data ordering hazard entirely.
-      // ONE sentinel in its own strictly-later micro-batch: the real-data
-      // batch ends by raising the watermark to maxTs−2h, and Append mode
-      // emits expired windows in the NEXT batch — the sentinel batch both
-      // pushes the watermark past every real window (maxTs+7d−2h) and IS
-      // that next batch, so all real windows flush in it. The sentinel's
-      // own window never finalizes, which is fine: it's filtered out.
-      // Data write ∥ bounds agg + sentinel (guide §2.6): independent jobs,
-      // micro-batch order carried by the explicit mtimes.
-      stagingWave(Seq(
-        () => {
-          val stage0 = tmp.resolve("stage0")
-          events.coalesce(1).write.mode("overwrite").parquet(stage0.toString)
-          moveOnlyParquet(stage0, in.resolve("aa-data.parquet"),
-            mtimeMs = 1000000L)
-        },
-        () => {
-          val maxTs = events.agg(max("ts")).head().getTimestamp(0)
-          val stage = tmp.resolve("sentinel")
-          Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L),
-               -1L, "__watermark_sentinel__", 0.0, "{}"))
-            .toDF("event_id", "ts", "user_id", "event_type", "value",
-              "props")
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          moveOnlyParquet(stage, in.resolve("zz-sentinel.parquet"),
-            mtimeMs = 1060000L)
-        }))
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      val agg = src
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
-            .as("sum_value"))
-        .select(col("window.start").as("hour_start"), col("event_type"),
-          col("n"), col("sum_value"))
-      q = toParquet(agg, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q85 streaming query did not terminate within 300 s")
-      // materialize OFF the staging dir — the finally below deletes it
-      s.read.parquet(tmp.resolve("out").toString)
-        .filter(col("event_type") =!= "__watermark_sentinel__")
+  def streamingParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q85", Flush) { h =>
+      stageDataThenSentinel(h, stagedEvents(s, dir))
+      h.await(h.sink(hourlyAgg(inBatches(h))))
+      h.output.filter(col("event_type") =!= "__watermark_sentinel__")
         .localCheckpoint()
         .orderBy("hour_start", "event_type")
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      // timeout path: don't leave the query running
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
+
+  /** q85's streamed aggregate (q21's hourly count + DECIMAL-routed sum)
+    * under a 2 h watermark; q143 runs the identical plan twice. */
+  private def hourlyAgg(src: DataFrame): DataFrame =
+    src
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
+          .as("sum_value"))
+      .select(col("window.start").as("hour_start"), col("event_type"),
+        col("n"), col("sum_value"))
 
   /** Move the single parquet part out of a one-file staged write, stamping
     * a deterministic mtime (FileStreamSource batches oldest-mtime-first). */
@@ -617,9 +433,6 @@ object EventStream {
     java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
   }
-
-  private def rmTree(root: java.nio.file.Path): Unit =
-    graft.sources.Tables.rmTree(root)
 
   /** Run independent STAGING jobs as one bounded concurrent wave (guide
     * §2.6, round-17): Spark schedules concurrent jobs FIFO and
@@ -639,6 +452,204 @@ object EventStream {
     finally { pool.shutdownNow(); () }
   }
 
+  /** The stateful shuffle sized to the fixture: every shuffle partition
+    * holds a state store that commits a version per micro-batch (a
+    * stream-stream join keeps four per partition), so per-batch cost
+    * scales with partitions, not data. Production sizes the same conf
+    * to key cardinality. */
+  private[graft] val Parts8 = Map("spark.sql.shuffle.partitions" -> "8")
+
+  private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** [[Parts8]] plus no-data micro-batches pinned on: the batch after the
+    * last sentinel flushes the trailing windows (see q85), so the
+    * sentinel harnesses set it instead of relying on the ambient
+    * default. */
+  private val Flush = Parts8 + (NoDataKey -> "true")
+
+  /** [[Parts8]] plus the RocksDB state store `transformWithState`
+    * requires. */
+  private val Rocks = Parts8 + ("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** The q308-family confs: [[Rocks]], the Avro state encoding (UnsafeRow
+    * forbids ANY schema change; Avro is the evolution-capable format and
+    * must be set from the FIRST run — the checkpoint records it), and
+    * changelog checkpointing (per-batch RocksDB changelogs instead of
+    * full snapshot uploads — the production default for large state,
+    * and the prerequisite for q312's change-feed read-back). */
+  private val Evo = Rocks ++ Map(
+    "spark.sql.streaming.stateStore.encodingFormat" -> "avro",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** One parity run's scratch: `in/` (created) for the staged input,
+    * `out/` and `ckpt/` for the query's sink and checkpoint, and every
+    * query started through it. Made only by [[staged]]. */
+  private[graft] final class Staged private[EventStream] (
+      val s: SparkSession, label: String, val dir: java.nio.file.Path) {
+    val in: java.nio.file.Path = dir.resolve("in")
+    val out: String = dir.resolve("out").toString
+    val ckpt: String = dir.resolve("ckpt").toString
+    private val started =
+      scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    private var outSchema: StructType = null
+
+    /** Starts `df` into `out/` through [[toParquet]]. */
+    def sink(df: DataFrame): StreamingQuery =
+      startInto(toParquet(df, out, ckpt), df.schema)
+
+    /** Starts `df` AvailableNow with every micro-batch appended to `out/`
+      * by foreachBatch (the file sink takes no Update mode). */
+    def appendEach(df: DataFrame, mode: OutputMode): StreamingQuery =
+      startInto(df.writeStream
+        .outputMode(mode)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").parquet(out); () }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start(), df.schema)
+
+    /** Tracks a query started outside [[sink]]/[[appendEach]], so it is
+      * stopped on exit too. */
+    def track(q: StreamingQuery): StreamingQuery = { started += q; q }
+
+    private def startInto(q: StreamingQuery, schema: StructType)
+        : StreamingQuery = {
+      outSchema = schema
+      track(q)
+    }
+
+    /** Waits for `q` to drain; `run` names it in the timeout message. */
+    def await(q: StreamingQuery, run: String = "stream"): Unit =
+      require(q.awaitTermination(300000),
+        s"$label $run did not terminate within 300 s")
+
+    /** `out/` read back with the schema of the frame last started into
+      * it — the writer knew it, so no inference job. */
+    def output: DataFrame = {
+      require(outSchema != null, s"$label started no query into out/")
+      s.read.schema(outSchema).parquet(out)
+    }
+
+    private[EventStream] def stopActive(): Unit =
+      started.foreach(q => if (q.isActive) q.stop())
+  }
+
+  /** The one lifecycle of every streaming parity harness: pins `confs`
+    * ([[graft.sources.Tables.withConfs]]), makes the scratch dir
+    * `graft-<label>…` with `in/`, runs `body`, and on every exit stops
+    * each tracked query still active and deletes the dir — a failure at
+    * any point (staging, query start, timeout, read-back) leaves no
+    * query, conf or scratch behind. The body's result must not read the
+    * dir lazily: materialize it (localCheckpoint) before returning. */
+  private[graft] def staged[T](s: SparkSession, label: String,
+      confs: Map[String, String] = Map.empty)(body: Staged => T): T =
+    graft.sources.Tables.withConfs(s, confs) {
+      val h = new Staged(s, label,
+        graft.sources.Tables.scratchTempDir(s"graft-$label"))
+      try {
+        java.nio.file.Files.createDirectories(h.in)
+        body(h)
+      } finally try h.stopActive() finally graft.sources.Tables.rmTree(h.dir)
+    }
+
+  /** The events table with every streamed column, as the harnesses stage
+    * it. */
+  private def stagedEvents(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.load(s, dir, "events")
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** The staged `in/` streamed one file per micro-batch. */
+  private def inBatches(h: Staged): DataFrame =
+    h.s.readStream.schema(eventSchema)
+      .option("maxFilesPerTrigger", 1).parquet(h.in.toString)
+
+  /** [[inBatches]] as typed events. */
+  private def typedInBatches(h: Staged): Dataset[Event] = {
+    import h.s.implicits._
+    inBatches(h).select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event]
+  }
+
+  /** One file per predicate, `slice<i>.parquet` with strictly increasing
+    * STAMPED mtimes, so each is its own micro-batch (explicit FileTime
+    * instead of sleeping between writes keeps the staging cost off the
+    * measured path). */
+  private def stageSlices(h: Staged, events: DataFrame,
+                          preds: Seq[Column]): Unit =
+    preds.zipWithIndex.foreach { case (pred, slice) =>
+      val stage = h.dir.resolve(s"stage$slice")
+      events.filter(pred)
+        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      moveOnlyParquet(stage, h.in.resolve(s"slice$slice.parquet"),
+        1000000000000L + slice * 60000L)
+    }
+
+  /** Even then odd event ids: every user's events fold across a batch
+    * boundary. */
+  private def idParity: Seq[Column] =
+    Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1)
+
+  /** A one-row event `days` after `maxTs`, on user −1 with a fake
+    * event_type: its arrival pushes the watermark past every real
+    * window. */
+  private def sentinel(s: SparkSession, maxTs: java.sql.Timestamp,
+                       days: Long, eventId: Long): DataFrame = {
+    import s.implicits._
+    Seq((eventId, new java.sql.Timestamp(maxTs.getTime + days * 86400000L),
+         -1L, "__watermark_sentinel__", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+  }
+
+  /** q85's staging, shared by q212 and q234. ONE real-data file → ONE
+    * micro-batch: a multi-file write's parts share mtimes, and with
+    * maxFilesPerTrigger=1 the FileStreamSource tie-break could batch the
+    * newest-timestamped part first — the watermark would ratchet past
+    * older parts and silently drop them as late. ONE sentinel in its own
+    * strictly-later micro-batch: the real-data batch ends by raising the
+    * watermark to maxTs−2h, and Append mode emits expired windows in the
+    * NEXT batch — the sentinel batch both pushes the watermark past every
+    * real window (maxTs+7d−2h) and IS that next batch. The sentinel's own
+    * window never finalizes; readers filter it. Data write ∥ bounds agg +
+    * sentinel (guide §2.6): independent jobs, micro-batch order carried
+    * by the explicit mtimes. */
+  private def stageDataThenSentinel(h: Staged, events: DataFrame): Unit =
+    stagingWave(Seq(
+      () => {
+        val stage0 = h.dir.resolve("stage0")
+        events.coalesce(1).write.mode("overwrite").parquet(stage0.toString)
+        moveOnlyParquet(stage0, h.in.resolve("aa-data.parquet"),
+          mtimeMs = 1000000L)
+      },
+      () => {
+        val maxTs = events.agg(max("ts")).head().getTimestamp(0)
+        val stage = h.dir.resolve("sentinel")
+        sentinel(h.s, maxTs, 7L, -1L)
+          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        moveOnlyParquet(stage, h.in.resolve("zz-sentinel.parquet"),
+          mtimeMs = 1060000L)
+      }))
+
+  /** q135's staging, shared by q295: the events copy written to `in/`,
+    * then one far-future sentinel PER JOIN SIDE appended — a click and an
+    * error on users −1/−2, so they match nothing — which advances BOTH
+    * inputs' watermarks past the trailing clicks. Data write ∥ bounds agg
+    * (guide §2.6): only the sentinel APPEND must follow the overwrite. */
+  private def stageWithSideSentinels(h: Staged, events: DataFrame): Unit = {
+    import h.s.implicits._
+    var maxTs: java.sql.Timestamp = null
+    stagingWave(Seq(
+      () => { events.coalesce(1).write.mode("overwrite")
+        .parquet(h.in.toString); () },
+      () => { maxTs = events.agg(max("ts")).head().getTimestamp(0) }))
+    val far = new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L)
+    Seq((-1L, far, -1L, "click", 0.0, "{}"),
+        (-2L, far, -2L, "error", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("append").parquet(h.in.toString)
+  }
+
   /** q107 — oracle-checked UPSERT parity: q85 proved the streaming
     * AGGREGATION path equals its batch twin; this proves the streaming
     * MERGE path ([[upsertSink]]) equals q88's batch SCD-1 semantics. The
@@ -649,13 +660,9 @@ object EventStream {
     * write-then-swap sink computes the identical keyed merge
     * incrementally. On a live deployment the file source is the Kafka CDC
     * feed and the snapshot is the warehouse dimension table. */
-  def upsertParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q107")
-    val snap = tmp.resolve("snap").toString
-    val in = tmp.resolve("in")
-    java.nio.file.Files.createDirectories(in)
-    var q: StreamingQuery = null
-    try {
+  def upsertParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q107") { h =>
+      val snap = h.dir.resolve("snap").toString
       val orders = graft.sources.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           col("o_orderdate"))
@@ -666,22 +673,16 @@ object EventStream {
         .filter(col("o_orderkey") % 10 === 0)
         .select(col("o_orderkey"), lit("U").as("o_orderstatus"),
           (col("o_totalprice") * 1.1).as("o_totalprice"), col("o_orderdate"))
-      updates.coalesce(1).write.mode("overwrite").parquet(in.toString)
+      updates.coalesce(1).write.mode("overwrite").parquet(h.in.toString)
       val src = s.readStream.schema(
-        StructType(updates.schema.fields)).parquet(in.toString)
-      q = upsertSink(src, "o_orderkey", "o_orderdate", snap,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q107 upsert stream did not terminate within 300 s")
+        StructType(updates.schema.fields)).parquet(h.in.toString)
+      h.await(h.track(
+        upsertSink(src, "o_orderkey", "o_orderdate", snap, h.ckpt)))
       s.read.parquet(snap)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .orderBy("o_orderkey")
         .localCheckpoint()
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q109 — oracle-checked INTERVAL-JOIN parity, closing the third
     * streaming surface (q85 = aggregation, q107 = merge, this = join):
@@ -694,40 +695,16 @@ object EventStream {
     * AvailableNow pass yields every match. And because the query is a
     * pure join (no aggregation), output values are raw column values —
     * bit-exact across engines with no DECIMAL routing. */
-  def intervalJoinParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q109")
-    var q: StreamingQuery = null
-    // a stream-stream join maintains FOUR keyed state stores (two per
-    // side) in EVERY shuffle partition, each committing a checkpoint
-    // version per micro-batch — per-batch cost scales with partitions,
-    // not data. Size the stateful shuffle to the fixture (the production
-    // knob is the same conf, sized to throughput); restored after.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(in.toString)
+  def intervalJoinParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q109", Parts8) { h =>
+      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
+        .parquet(h.in.toString)
       // two INDEPENDENT file sources over the same staged copy — the
       // stream-stream join requires distinct source plans per side
-      val joined = correlateStreams(
-        fileSource(s, in.toString), fileSource(s, in.toString))
-      q = toParquet(joined, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q109 interval-join stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
-        .orderBy("click_id", "error_id")
-        .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
+      h.await(h.sink(correlateStreams(
+        fileSource(s, h.in.toString), fileSource(s, h.in.toString))))
+      h.output.orderBy("click_id", "error_id").localCheckpoint()
     }
-  }
 
   /** q247 — oracle-checked stream-stream LEFT-SEMI interval-join parity
     * (15th streaming surface; q109 = inner, q135 = left outer, this =
@@ -740,33 +717,14 @@ object EventStream {
     * window: hash-equality proves first-match-once semantics (a
     * duplicate emission per extra error, or a dropped click, both
     * break the hash). */
-  def semiJoinParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q247")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(in.toString)
-      val matched = correlateSemi(
-        fileSource(s, in.toString), fileSource(s, in.toString))
-      q = toParquet(matched, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q247 semi-join stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
-        .orderBy("click_id")
-        .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
+  def semiJoinParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q247", Parts8) { h =>
+      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
+        .parquet(h.in.toString)
+      h.await(h.sink(correlateSemi(
+        fileSource(s, h.in.toString), fileSource(s, h.in.toString))))
+      h.output.orderBy("click_id").localCheckpoint()
     }
-  }
 
   final case class UserAgg(n: Long, sumScaled: Long, maxV: Double)
   final case class UserTotals(user_id: Long, n: Long, sum_value: Double,
@@ -828,65 +786,20 @@ object EventStream {
     * each user's highest-n emission. The oracle is the plain batch
     * aggregate: hash-equality proves the cross-batch fold loses
     * nothing, double-counts nothing. */
-  def twsParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q253")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      // two slices, strictly ordered STAMPED mtimes → two micro-batches
-      // (explicit FileTime instead of sleeping between writes: the
-      // staging cost stays off the measured path)
-      Seq(0, 1).foreach { slice =>
-        val stage = tmp.resolve(s"stage$slice")
-        events.filter(col("event_id") % 2 === slice)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        moveOnlyParquet(stage, in.resolve(s"slice$slice.parquet"),
-          1000000000000L + slice * 60000L)
-      }
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      val out = tmp.resolve("out").toString
-      q = userStatsTws(ds).toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q253 transformWithState stream did not terminate within 300 s")
+  def twsParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q253", Rocks) { h =>
+      stageSlices(h, stagedEvents(s, dir), idParity)
+      h.await(h.appendEach(userStatsTws(typedInBatches(h)).toDF(),
+        OutputMode.Update()))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n").desc)
-      s.read.parquet(out)
+      h.output
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1) // the latest (highest-n) emission per key
         .select("user_id", "n", "sum_value", "max_value")
         .orderBy("user_id")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   final case class HllRow(event_type: String, n_seen: Long, n_filled: Int,
                           hll_est: Double)
@@ -975,62 +888,20 @@ object EventStream {
     * ranks, integer harmonic sum, 6-dp linear-counting branch — over
     * the full events table in DuckDB. Hash-equality proves register
     * max-merge across batch boundaries loses nothing. */
-  def hllStreamParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q260")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      Seq(0, 1).foreach { slice =>
-        val stage = tmp.resolve(s"stage$slice")
-        events.filter(col("event_id") % 2 === slice)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        moveOnlyParquet(stage, in.resolve(s"slice$slice.parquet"),
-          1000000000000L + slice * 60000L)
-      }
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      val out = tmp.resolve("out").toString
-      q = hllStream(ds).toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q260 HLL stream did not terminate within 300 s")
+  def hllStreamParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q260", Rocks) { h =>
+      stageSlices(h, stagedEvents(s, dir), idParity)
+      h.await(h.appendEach(hllStream(typedInBatches(h)).toDF(),
+        OutputMode.Update()))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy(col("n_seen").desc)
-      s.read.parquet(out)
+      h.output
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("event_type", "n_filled", "hll_est")
         .orderBy("event_type")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   final case class Slot(us: Long, eid: Long)
   final case class ReplayRow(user_id: Long, n_seen: Long, n_buf: Int,
@@ -1095,62 +966,20 @@ object EventStream {
     * the kept-5 buffer must merge stored slots with new arrivals —
     * order-independence made falsifiable. The oracle is the batch
     * top-5-latest window per user, the ids joined newest-first. */
-  def replayParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q261")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      Seq(0, 1).foreach { slice =>
-        val stage = tmp.resolve(s"stage$slice")
-        events.filter(col("event_id") % 2 === slice)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        moveOnlyParquet(stage, in.resolve(s"slice$slice.parquet"),
-          1000000000000L + slice * 60000L)
-      }
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      val out = tmp.resolve("out").toString
-      q = replayStream(ds).toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q261 replay stream did not terminate within 300 s")
+  def replayParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q261", Rocks) { h =>
+      stageSlices(h, stagedEvents(s, dir), idParity)
+      h.await(h.appendEach(replayStream(typedInBatches(h)).toDF(),
+        OutputMode.Update()))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_seen").desc)
-      s.read.parquet(out)
+      h.output
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("user_id", "n_buf", "last5")
         .orderBy("user_id")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   final case class CmRow(event_type: String, n_seen: Long, user_id: Long,
                          n_exact: Long, n_est: Long)
@@ -1270,11 +1099,11 @@ object EventStream {
     * on the user-id universe) — hash-equality proves linear mergeability
     * end to end. */
   def cmStreamParity(s: SparkSession, dir: String): DataFrame =
-    withRocksConfs(s, "graft-q270") { tmp =>
-      runCmHarness(s, dir, tmp)
+    staged(s, "q270", Rocks) { h =>
+      runCmHarness(h, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type", "user_id").orderBy(col("n_seen").desc)
-      s.read.parquet(tmp.resolve("out").toString)
+      h.output
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("event_type", "user_id", "n_exact", "n_est")
@@ -1282,70 +1111,13 @@ object EventStream {
         .localCheckpoint()
     }
 
-  /** Conf bracket shared by q270/q319: 8 shuffle partitions + RocksDB
-    * provider; restores every conf and deletes `tmp` after `body`,
-    * whose result must be materialized before return. */
-  private def withRocksConfs(s: SparkSession, tmpPrefix: String)(
-      body: java.nio.file.Path => DataFrame): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir(tmpPrefix)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body(tmp)
-    finally {
-      s.conf.set(partsKey, partsPrev)
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      rmTree(tmp)
-    }
-  }
-
   /** The q270/q319 harness body: the two event-id-parity slices staged
     * mtime-ordered, the CM stream run to completion on a fresh
-    * checkpoint at `tmp/ckpt`, emissions appended under `tmp/out`. An
-    * active query is stopped on the exception path. */
-  private def runCmHarness(s: SparkSession, dir: String,
-                           tmp: java.nio.file.Path): Unit = {
-    import s.implicits._
-    var q: StreamingQuery = null
-    val in = tmp.resolve("in")
-    java.nio.file.Files.createDirectories(in)
-    val events = graft.sources.Tables.load(s, dir, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    try {
-      Seq(0, 1).foreach { slice =>
-        val stage = tmp.resolve(s"stage$slice")
-        events.filter(col("event_id") % 2 === slice)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        moveOnlyParquet(stage, in.resolve(s"slice$slice.parquet"),
-          1000000000000L + slice * 60000L)
-      }
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      q = cmStream(ds).toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(tmp.resolve("out").toString)
-          () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "count-min stream did not terminate within 300 s")
-    } catch {
-      case t: Throwable =>
-        if (q != null && q.isActive) q.stop()
-        throw t
-    }
+    * checkpoint, emissions appended under `out/`. */
+  private def runCmHarness(h: Staged, dir: String): Unit = {
+    stageSlices(h, stagedEvents(h.s, dir), idParity)
+    h.await(h.appendEach(cmStream(typedInBatches(h)).toDF(),
+      OutputMode.Update()))
   }
 
   /** q319 — COMPOSITE-STATE (MapState) READ-BACK, the thirtieth
@@ -1366,10 +1138,10 @@ object EventStream {
     * the latest snapshot — no stream replay — the same forensics
     * primitive as q309 extended to Spark 4's collection state types. */
   def cmStateRead(s: SparkSession, dir: String): DataFrame =
-    withRocksConfs(s, "graft-q319") { tmp =>
-      runCmHarness(s, dir, tmp)
+    staged(s, "q319", Rocks) { h =>
+      runCmHarness(h, dir)
       val st = s.read.format("statestore")
-        .option("path", tmp.resolve("ckpt").toString)
+        .option("path", h.ckpt)
         .option("stateVarName", "cm")
         .option("flattenCollectionTypes", "true")
         .load()
@@ -1444,58 +1216,22 @@ object EventStream {
     * user's latest cumulative row; the oracle evaluates the identical
     * integer recursion as a DuckDB RECURSIVE CTE (the q194 pattern
     * with three state integers instead of one double). */
-  def rateLimiterParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q284")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      Seq(0, 1).foreach { slice =>
-        val stage = tmp.resolve(s"stage$slice")
-        val pred =
-          if (slice == 0) dayofmonth(col("ts")) <= 15
-          else dayofmonth(col("ts")) > 15
-        events.filter(pred)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        moveOnlyParquet(stage, in.resolve(s"slice$slice.parquet"),
-          1000000000000L + slice * 60000L)
-      }
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      val out = tmp.resolve("out").toString
-      q = rateLimiter(ds).toDF().writeStream
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q284 rate-limiter stream did not terminate within 300 s")
+  def rateLimiterParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q284", Parts8) { h =>
+      stageSlices(h, stagedEvents(s, dir),
+        Seq(dayofmonth(col("ts")) <= 15, dayofmonth(col("ts")) > 15))
+      h.await(h.appendEach(rateLimiter(typedInBatches(h)).toDF(),
+        OutputMode.Append()))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n_seen").desc)
-      s.read.parquet(out)
+      h.output
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("user_id", "n_seen", "n_admitted", "n_rejected",
           "tokens_left")
         .orderBy("user_id")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** Session accumulator for the timer-closed sessionizer: the
     * [[SessionState]] conventions (µs event times, fixed-point 1e-4
@@ -1600,25 +1336,10 @@ object EventStream {
     * within the watermark horizon — RocksDB-backed, keyed by the
     * shuffle; timers are range-scanned per partition. Swap
     * [[kafkaSource]] in and drop the staging. */
-  def timerSessionParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q264")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(noDataKey, "true")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+  def timerSessionParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q264", Rocks + (NoDataKey -> "true")) { h =>
+      import s.implicits._
+      val events = stagedEvents(s, dir)
       val bounds = events.agg(min("ts"), max("ts")).head()
       val (minTs, maxTs) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
       val mid = new java.sql.Timestamp(
@@ -1630,10 +1351,10 @@ object EventStream {
       val sliceWork =
         Seq(("aa", col("ts") < lit(mid)), ("bb", col("ts") >= lit(mid)))
           .zipWithIndex.map { case ((nm, pred), i) => () => {
-            val stage = tmp.resolve(s"stage$nm")
+            val stage = h.dir.resolve(s"stage$nm")
             events.filter(pred).coalesce(1)
               .write.mode("overwrite").parquet(stage.toString)
-            moveOnlyParquet(stage, in.resolve(s"$nm-slice.parquet"),
+            moveOnlyParquet(stage, h.in.resolve(s"$nm-slice.parquet"),
               1000000000000L + i * 60000L)
           } }
       // TWO sentinels: unlike the windowed-aggregation surfaces, a TWS
@@ -1650,20 +1371,14 @@ object EventStream {
       // instead, the q234 convention.
       val sentinelWork = Seq(("zy", 7L, -1L), ("zz", 14L, -2L)).zipWithIndex
         .map { case ((nm, days, eid), i) => () => {
-          val stage = tmp.resolve(s"sentinel$nm")
-          Seq((eid,
-               new java.sql.Timestamp(maxTs.getTime + days * 86400000L),
-               -1L, "__watermark_sentinel__", 0.0, "{}"))
-            .toDF("event_id", "ts", "user_id", "event_type", "value",
-              "props")
+          val stage = h.dir.resolve(s"sentinel$nm")
+          sentinel(s, maxTs, days, eid)
             .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          moveOnlyParquet(stage, in.resolve(s"$nm-sentinel.parquet"),
+          moveOnlyParquet(stage, h.in.resolve(s"$nm-sentinel.parquet"),
             1000000000000L + 120000L + i * 60000L)
         } }
       stagingWave(sliceWork ++ sentinelWork)
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
+      val ds = inBatches(h)
         .withWatermark("ts", "2 hours")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
@@ -1672,19 +1387,10 @@ object EventStream {
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Append(),
           org.apache.spark.sql.Encoders.product[UserSession])
-      val out = tmp.resolve("out").toString
-      q = sessions.toDF().writeStream
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q264 timer-session stream did not terminate within 300 s")
+      h.await(h.appendEach(sessions.toDF(), OutputMode.Append()))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("session_start")
-      s.read.parquet(out)
+      h.output
         .filter(col("user_id") =!= -1L) // the sentinels' own sessions
         .withColumn("session_idx",
           row_number().over(w).cast(IntegerType))
@@ -1692,20 +1398,7 @@ object EventStream {
           col("session_end"), col("n_events"), col("sum_value"))
         .orderBy("user_id", "session_idx")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      noDataPrev match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None    => s.conf.unset(noDataKey)
-      }
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   final case class EvoAggV1(n: Long, sumScaled: Long)
   final case class EvoAggV2(n: Long, sumScaled: Long,
@@ -1788,11 +1481,11 @@ object EventStream {
     * a state rebuild — per-key state stays O(1), the schema check is
     * per-variable metadata, and old records upgrade lazily on read. */
   def stateEvolutionParity(s: SparkSession, dir: String): DataFrame =
-    withEvoConfs(s, "graft-q308") { tmp =>
-      runEvoHarness(s, dir, tmp)
+    staged(s, "q308", Evo) { h =>
+      runEvoHarness(h, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n").desc)
-      s.read.parquet(tmp.resolve("out").toString)
+      h.output
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1) // the latest (highest-n) emission
         .select("user_id", "n", "sum_value", "max_v_since_upgrade")
@@ -1800,119 +1493,43 @@ object EventStream {
         .localCheckpoint()
     }
 
-  /** Conf bracket shared by q308/q309: 8 shuffle partitions (= state
-    * shards), RocksDB provider, and the Avro state encoding (UnsafeRow
-    * forbids ANY schema change; Avro is the evolution-capable format
-    * and must be set from the FIRST run — the checkpoint records it).
-    * Restores every conf and deletes `tmp` after `body`, whose result
-    * must therefore be materialized (localCheckpoint) before return. */
-  private def withEvoConfs(s: SparkSession, tmpPrefix: String)(
-      body: java.nio.file.Path => DataFrame): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir(tmpPrefix)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    val encKey = "spark.sql.streaming.stateStore.encodingFormat"
-    val encPrev = s.conf.getOption(encKey)
-    // changelog checkpointing: per-batch RocksDB changelogs instead of
-    // full snapshot uploads — the production default for large state,
-    // and the prerequisite for q312's change-feed read-back
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val clPrev = s.conf.getOption(clKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set(encKey, "avro")
-    s.conf.set(clKey, "true")
-    try body(tmp)
-    finally {
-      s.conf.set(partsKey, partsPrev)
-      clPrev match {
-        case Some(v) => s.conf.set(clKey, v)
-        case None    => s.conf.unset(clKey)
-      }
-      encPrev match {
-        case Some(v) => s.conf.set(encKey, v)
-        case None    => s.conf.unset(encKey)
-      }
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      rmTree(tmp)
-    }
-  }
-
-  /** The q308/q309 two-run harness body: stage the day≤15 half, run
-    * [[EvoV1Processor]] to completion on a fresh checkpoint at
-    * `tmp/ckpt`, stage the day>15 half, resume the SAME checkpoint
-    * with [[EvoV2Processor]]. Emissions append under `tmp/out`. Both
-    * queries have terminated when this returns; an active query is
-    * stopped on the exception path. Caller sets confs via
-    * [[withEvoConfs]] and owns teardown. */
-  private def runEvoHarness(s: SparkSession, dir: String,
-                            tmp: java.nio.file.Path): Unit = {
-    import s.implicits._
-    var q: StreamingQuery = null
-    val in = tmp.resolve("in")
-    java.nio.file.Files.createDirectories(in)
-    val events = graft.sources.Tables.load(s, dir, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value",
-        "props")
-    val out = tmp.resolve("out").toString
+  /** The q308/q309/q312/q317 two-run harness body: stage the day≤15
+    * half, run [[EvoV1Processor]] to completion on a fresh checkpoint,
+    * stage the day>15 half, resume the SAME checkpoint with
+    * [[EvoV2Processor]]. Emissions append under `out/`. Both queries
+    * have terminated when this returns. */
+  private def runEvoHarness(h: Staged, dir: String): Unit = {
+    import h.s.implicits._
+    val events = stagedEvents(h.s, dir)
     def run(proc: org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, EvoTotals]): StreamingQuery = {
-      val ds = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      ds.groupByKey(_.user_id)
+        Long, Event, EvoTotals]): StreamingQuery =
+      h.appendEach(typedInBatches(h).groupByKey(_.user_id)
         .transformWithState(proc,
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update(),
           org.apache.spark.sql.Encoders.product[EvoTotals])
-        .toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); () }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    try {
-      // ---- run 1: the V1 job over the first half-month
-      val stage1 = tmp.resolve("stage1")
-      events.filter(dayofmonth(col("ts")) <= 15)
-        .coalesce(1).write.mode("overwrite").parquet(stage1.toString)
-      moveOnlyParquet(stage1, in.resolve("aa-half1.parquet"),
-        mtimeMs = 1000000L)
-      q = run(new EvoV1Processor)
-      // guide §2.6 (round-17): run 1 executes asynchronously — stage the
-      // second half INTO ITS STAGING DIR on the main thread while the V1
-      // micro-batches run. Only the move into `in/` waits for run 1, so
-      // the restart semantics (file lands while no job runs) and the
-      // run-1 file snapshot are untouched.
-      val stage2 = tmp.resolve("stage2")
-      events.filter(dayofmonth(col("ts")) > 15)
-        .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
-      require(q.awaitTermination(300000),
-        "evolution harness V1 run did not terminate within 300 s")
-      q = null
-      // ---- the upgrade deploys; the rest of the month lands
-      moveOnlyParquet(stage2, in.resolve("mm-half2.parquet"),
-        mtimeMs = 1060000L)
-      // ---- run 2: the V2 job resumes the same checkpoint
-      q = run(new EvoV2Processor)
-      require(q.awaitTermination(300000),
-        "evolution harness V2 run did not terminate within 300 s")
-    } catch {
-      case t: Throwable =>
-        if (q != null && q.isActive) q.stop()
-        throw t
-    }
+        .toDF(), OutputMode.Update())
+    // ---- run 1: the V1 job over the first half-month
+    val stage1 = h.dir.resolve("stage1")
+    events.filter(dayofmonth(col("ts")) <= 15)
+      .coalesce(1).write.mode("overwrite").parquet(stage1.toString)
+    moveOnlyParquet(stage1, h.in.resolve("aa-half1.parquet"),
+      mtimeMs = 1000000L)
+    val v1 = run(new EvoV1Processor)
+    // guide §2.6 (round-17): run 1 executes asynchronously — stage the
+    // second half INTO ITS STAGING DIR on the main thread while the V1
+    // micro-batches run. Only the move into `in/` waits for run 1, so
+    // the restart semantics (file lands while no job runs) and the
+    // run-1 file snapshot are untouched.
+    val stage2 = h.dir.resolve("stage2")
+    events.filter(dayofmonth(col("ts")) > 15)
+      .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
+    h.await(v1, "V1 run")
+    // ---- the upgrade deploys; the rest of the month lands
+    moveOnlyParquet(stage2, h.in.resolve("mm-half2.parquet"),
+      mtimeMs = 1060000L)
+    // ---- run 2: the V2 job resumes the same checkpoint
+    h.await(run(new EvoV2Processor), "V2 run")
   }
 
   /** q309 — STATE-STORE READER, the twenty-sixth streaming surface and
@@ -1960,10 +1577,10 @@ object EventStream {
     * CDC, incremental materialization off a streaming job's state, and
     * state-regression forensics between two batches. */
   def stateChangeFeed(s: SparkSession, dir: String): DataFrame =
-    withEvoConfs(s, "graft-q312") { tmp =>
-      runEvoHarness(s, dir, tmp)
+    staged(s, "q312", Evo) { h =>
+      runEvoHarness(h, dir)
       val cf = s.read.format("statestore")
-        .option("path", tmp.resolve("ckpt").toString)
+        .option("path", h.ckpt)
         .option("stateVarName", "agg")
         .option("readChangeFeed", "true")
         .option("changeStartBatchId", "0")
@@ -1998,10 +1615,10 @@ object EventStream {
     * and the input to offline state diffing — O(state at that version)
     * with one task per shard, no replay of the input stream. */
   def stateTimeTravel(s: SparkSession, dir: String): DataFrame =
-    withEvoConfs(s, "graft-q317") { tmp =>
-      runEvoHarness(s, dir, tmp)
+    staged(s, "q317", Evo) { h =>
+      runEvoHarness(h, dir)
       val st = s.read.format("statestore")
-        .option("path", tmp.resolve("ckpt").toString)
+        .option("path", h.ckpt)
         .option("stateVarName", "agg")
         .option("batchId", "0")
         .load()
@@ -2018,17 +1635,16 @@ object EventStream {
     }
 
   def stateStoreRead(s: SparkSession, dir: String): DataFrame =
-    withEvoConfs(s, "graft-q309") { tmp =>
-      runEvoHarness(s, dir, tmp)
-      val ckpt = tmp.resolve("ckpt").toString
+    staged(s, "q309", Evo) { h =>
+      runEvoHarness(h, dir)
       // 1-row topology frame: shard count + last committed batch id
-      val meta = s.read.format("state-metadata").load(ckpt)
+      val meta = s.read.format("state-metadata").load(h.ckpt)
         .filter(col("operatorName") === "transformWithStateExec")
         .select(col("numPartitions").cast(IntegerType)
             .as("n_state_shards"),
           col("maxBatchId").cast(LongType).as("last_batch"))
       val st = s.read.format("statestore")
-        .option("path", ckpt)
+        .option("path", h.ckpt)
         .option("stateVarName", "agg")
         .load()
       st.select(col("key.value").as("user_id"),
@@ -2134,42 +1750,20 @@ object EventStream {
     * is O(1), eviction is the store's range-scan on expiry timestamps,
     * and the surface swaps to [[kafkaSource]] by dropping the
     * staging. */
-  def ttlStateParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q297")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
+  def ttlStateParity(s: SparkSession, dir: String): DataFrame =
     // no-data micro-batches must be OFF here: with TTL state in
     // ProcessingTime mode the operator always reports "might have work
     // as time advances", so AvailableNow would loop empty batches
     // forever instead of terminating (observed: 600+ empty jobs until
     // the await timeout). TTL doesn't need them — expiry is evaluated
     // on READ, so run 2's real batch sees the eviction regardless.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(partsKey, "8")
-    s.conf.set(noDataKey, "false")
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value",
-          "props")
-      val out = tmp.resolve("out").toString
+    staged(s, "q297", Rocks + (NoDataKey -> "false")) { h =>
+      import s.implicits._
+      val events = stagedEvents(s, dir)
       // both runs must build the IDENTICAL plan for checkpoint
       // compatibility — one definition, invoked twice
-      def run(): StreamingQuery = {
-        val ds = s.readStream.schema(eventSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
-        ds.groupByKey(_.user_id)
+      def run(): StreamingQuery =
+        h.appendEach(typedInBatches(h).groupByKey(_.user_id)
           .transformWithState(
             new TtlCacheProcessor(
               java.time.Duration.ofMinutes(60),
@@ -2177,60 +1771,36 @@ object EventStream {
             org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
             OutputMode.Append(),
             org.apache.spark.sql.Encoders.product[TtlCacheRow])
-          .toDF().writeStream
-          .outputMode(OutputMode.Append())
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(out); () }
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+          .toDF(), OutputMode.Append())
       // ---- run 1: the first half-month, one file = one batch
-      val stage1 = tmp.resolve("stage1")
+      val stage1 = h.dir.resolve("stage1")
       events.filter(dayofmonth(col("ts")) <= 15)
         .coalesce(1).write.mode("overwrite").parquet(stage1.toString)
-      moveOnlyParquet(stage1, in.resolve("aa-half1.parquet"),
+      moveOnlyParquet(stage1, h.in.resolve("aa-half1.parquet"),
         mtimeMs = 1000000L)
-      q = run()
+      val q1 = run()
       // guide §2.6 (round-17): stage the second half while run 1's
       // micro-batch executes — the file enters `in/` only after the
       // gap, so run boundaries and the TTL clock are untouched (the
       // eviction gap is measured AFTER run 1 commits, as before; a
       // stall can only grow it — the margin stays one-sided)
-      val stage2 = tmp.resolve("stage2")
+      val stage2 = h.dir.resolve("stage2")
       events.filter(dayofmonth(col("ts")) > 15)
         .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
-      require(q.awaitTermination(300000),
-        "q297 TTL run 1 did not terminate within 300 s")
-      q = null
+      h.await(q1, "run 1")
       // ---- the eviction gap: > ephemeral TTL, ≪ durable TTL
       Thread.sleep(TtlGapMs)
       // ---- run 2: the rest, resumed from the same checkpoint
-      moveOnlyParquet(stage2, in.resolve("mm-half2.parquet"),
+      moveOnlyParquet(stage2, h.in.resolve("mm-half2.parquet"),
         mtimeMs = 1060000L)
-      q = run()
-      require(q.awaitTermination(300000),
-        "q297 TTL run 2 did not terminate within 300 s")
-      s.read.parquet(out)
+      h.await(run(), "run 2")
+      h.output
         .select(col("user_id"), col("appear_idx"), col("warm_durable"),
           col("n_total"), col("sum_total"), col("n_since_evict"),
           col("sum_since_evict"))
         .orderBy("user_id", "appear_idx")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      noDataPrev match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None    => s.conf.unset(noDataKey)
-      }
-      provPrev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q111 — oracle-checked streaming-DEDUP parity, closing the fourth
     * stateful streaming surface (q85 = aggregation, q107 = merge, q109 =
@@ -2251,30 +1821,18 @@ object EventStream {
     * state store per shuffle partition; like q109 the stateful shuffle
     * is sized to the fixture (production sizes the same conf to key
     * cardinality per watermark horizon). */
-  def dedupParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q111")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+  def dedupParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q111", Parts8) { h =>
+      val events = stagedEvents(s, dir)
       // ONE staged file: both copies of each duplicated row share the
       // single micro-batch (first arrival survives, re-delivery drops)
       // and the multi-part mtime-ordering hazard never arises
       events.union(events.filter(col("event_id") % 10 === 0))
-        .coalesce(1).write.mode("overwrite").parquet(in.toString)
-      val deduped = dedupStream(fileSource(s, in.toString))
-      q = toParquet(deduped, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q111 dedup stream did not terminate within 300 s")
+        .coalesce(1).write.mode("overwrite").parquet(h.in.toString)
+      h.await(h.sink(dedupStream(fileSource(s, h.in.toString))))
       // batch-side aggregate over the survivors (q85's shape; DECIMAL-
       // routed sum so accumulation order can't perturb the hash)
-      s.read.parquet(tmp.resolve("out").toString)
+      h.output
         .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
           col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -2282,12 +1840,7 @@ object EventStream {
             .as("sum_value"))
         .orderBy("hour_start", "event_type")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q115 — stream-STATIC enrichment parity (fifth streaming surface:
     * q85 = aggregation, q107 = merge, q109 = stream-stream join, q111 =
@@ -2302,26 +1855,18 @@ object EventStream {
     * DuckDB over the original tables. At 100 TB this is the canonical
     * fact-stream × dim-table shape: the dim re-broadcasts per batch (and
     * can be refreshed between batches), the fact side never shuffles. */
-  def streamStaticJoinParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q115")
-    var q: StreamingQuery = null
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(in.toString)
+  def streamStaticJoinParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q115") { h =>
+      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
+        .parquet(h.in.toString)
       val dim = broadcast(graft.sources.Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey")))
-      val enriched = fileSource(s, in.toString)
+      val enriched = fileSource(s, h.in.toString)
         .join(dim, col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("c_nationkey"),
           col("event_type"), col("value"))
-      q = toParquet(enriched, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q115 stream-static join did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
+      h.await(h.sink(enriched))
+      h.output
         .groupBy(col("c_nationkey").as("nation"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("user_id")).as("users"),
@@ -2329,11 +1874,7 @@ object EventStream {
             .as("sum_value"))
         .orderBy("nation")
         .localCheckpoint()
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q313 — DEDUP-STATE EVICTION made visible, q111's bounded-state
     * complement and the twenty-eighth streaming surface. q111 proves
@@ -2360,18 +1901,9 @@ object EventStream {
     * store per shuffle partition, bounded by the watermark horizon;
     * this surface is the measured proof of WHY that bound is safe to
     * rely on (expired keys really do come back as new). */
-  def dedupEvictionParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q313")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value",
-          "props")
+  def dedupEvictionParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q313", Parts8) { h =>
+      val events = stagedEvents(s, dir)
       // the probe lands one batch AFTER the day>15 half: state cleanup
       // runs a batch BEHIND the watermark (batch N evicts with the
       // watermark batch N−1's data advanced), so the day≤10 entries
@@ -2385,33 +1917,28 @@ object EventStream {
       // micro-batch order is carried by the explicit mtimes
       stagingWave(Seq(
         () => {
-          val stage1 = tmp.resolve("stage1")
+          val stage1 = h.dir.resolve("stage1")
           events.filter(dayofmonth(col("ts")) <= 15)
             .coalesce(1).write.mode("overwrite").parquet(stage1.toString)
-          moveOnlyParquet(stage1, in.resolve("aa-half1.parquet"),
+          moveOnlyParquet(stage1, h.in.resolve("aa-half1.parquet"),
             mtimeMs = 1000000L)
         },
         () => {
-          val stage2 = tmp.resolve("stage2")
+          val stage2 = h.dir.resolve("stage2")
           events.filter(dayofmonth(col("ts")) > 15)
             .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
-          moveOnlyParquet(stage2, in.resolve("mm-half2.parquet"),
+          moveOnlyParquet(stage2, h.in.resolve("mm-half2.parquet"),
             mtimeMs = 1060000L)
         },
         () => {
-          val stage3 = tmp.resolve("stage3")
+          val stage3 = h.dir.resolve("stage3")
           replay.unionByName(replay)
             .coalesce(1).write.mode("overwrite").parquet(stage3.toString)
-          moveOnlyParquet(stage3, in.resolve("zz-replay.parquet"),
+          moveOnlyParquet(stage3, h.in.resolve("zz-replay.parquet"),
             mtimeMs = 1120000L)
         }))
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      q = toParquet(dedupStream(src), tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q313 dedup-eviction stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
+      h.await(h.sink(dedupStream(inBatches(h))))
+      h.output
         .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
           col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -2419,12 +1946,7 @@ object EventStream {
             .as("sum_value"))
         .orderBy("hour_start", "event_type")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q135 — oracle-checked LEFT-OUTER interval-join parity: q109 proved
     * the INNER stream-stream join; this proves the outer-join state
@@ -2446,61 +1968,17 @@ object EventStream {
     * read-back. Oracle = the batch LEFT JOIN with NULLS FIRST pinned on
     * both sides (Spark ASC is nulls-first, DuckDB's default is
     * nulls-last). */
-  def outerJoinParity(s: SparkSession, dir: String): DataFrame = {
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(noDataKey, "true")
-    try outerJoinParityStaged(s, dir)
-    finally noDataPrev match {
-      case Some(v) => s.conf.set(noDataKey, v)
-      case None    => s.conf.unset(noDataKey)
-    }
-  }
-
-  /** q135 body: staging, the streaming run, read-back (see
-    * [[outerJoinParity]], which owns the session-conf guard). */
-  private def outerJoinParityStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q135")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      // data write ∥ bounds agg (guide §2.6): only the sentinel APPEND
-      // must follow the overwrite of `in/`
-      var maxTs: java.sql.Timestamp = null
-      stagingWave(Seq(
-        () => { events.coalesce(1).write.mode("overwrite")
-          .parquet(in.toString); () },
-        () => { maxTs = events.agg(max("ts")).head().getTimestamp(0) }))
-      val far = new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L)
-      // one sentinel per side — users −1/−2 so they match nothing
-      Seq((-1L, far, -1L, "click", 0.0, "{}"),
-          (-2L, far, -2L, "error", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(in.toString)
-      val joined = correlateStreams(
-        fileSource(s, in.toString), fileSource(s, in.toString),
-        joinType = "left_outer")
-      q = toParquet(joined, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q135 outer-join stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
+  def outerJoinParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q135", Flush) { h =>
+      stageWithSideSentinels(h, stagedEvents(s, dir))
+      h.await(h.sink(correlateStreams(
+        fileSource(s, h.in.toString), fileSource(s, h.in.toString),
+        joinType = "left_outer")))
+      h.output
         .filter(col("click_id") >= 0)
         .orderBy(col("click_id"), col("error_id").asc_nulls_first)
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q143 — oracle-checked CHECKPOINT-RESTART parity: q85 proved one
     * continuous AvailableNow run equals the batch aggregate; this proves
@@ -2521,92 +1999,47 @@ object EventStream {
     * later than run 1's watermark, so nothing is (correctly or not)
     * dropped as late — late-data semantics are q85/q111's concern, not
     * the restart's. */
-  def incrementalRestartParity(s: SparkSession, dir: String): DataFrame = {
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    s.conf.set(noDataKey, "true")
-    try incrementalRestartStaged(s, dir)
-    finally noDataPrev match {
-      case Some(v) => s.conf.set(noDataKey, v)
-      case None    => s.conf.unset(noDataKey)
-    }
-  }
-
-  /** q143 body: two-run staging + the shared streaming plan (see
-    * [[incrementalRestartParity]], which owns the session-conf guard). */
-  private def incrementalRestartStaged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q143")
-    var q: StreamingQuery = null
-    // both runs maintain a state store per shuffle partition, and the
-    // restart doubles the per-store open/commit cost — size the stateful
-    // shuffle to the fixture like q109/q135 (production sizes this to
-    // key cardinality), restored in the finally
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+  def incrementalRestartParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q143", Flush) { h =>
+      val events = stagedEvents(s, dir)
       val mm = events.agg(min("ts"), max("ts")).head()
       val (minTs, maxTs) = (mm.getTimestamp(0), mm.getTimestamp(1))
       val cut = new java.sql.Timestamp(
         minTs.getTime + (maxTs.getTime - minTs.getTime) / 2)
       // both runs must build the IDENTICAL plan for checkpoint
       // compatibility — one definition, invoked twice
-      def run(): StreamingQuery = toParquet(
-        s.readStream.schema(eventSchema)
-          .option("maxFilesPerTrigger", 1).parquet(in.toString)
-          .withWatermark("ts", "2 hours")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
-              .as("sum_value"))
-          .select(col("window.start").as("hour_start"), col("event_type"),
-            col("n"), col("sum_value")),
-        tmp.resolve("out").toString, tmp.resolve("ckpt").toString)
+      def run(): StreamingQuery = h.sink(hourlyAgg(inBatches(h)))
       // ---- run 1: the earlier half only
-      val stage1 = tmp.resolve("stage1")
+      val stage1 = h.dir.resolve("stage1")
       events.filter(col("ts") <= cut)
         .coalesce(1).write.mode("overwrite").parquet(stage1.toString)
-      moveOnlyParquet(stage1, in.resolve("aa-half1.parquet"), mtimeMs = 1000000L)
-      q = run()
+      moveOnlyParquet(stage1, h.in.resolve("aa-half1.parquet"),
+        mtimeMs = 1000000L)
+      val q1 = run()
       // guide §2.6 (round-17): run 1 executes asynchronously — write the
       // later-half and sentinel files into their STAGING dirs while it
       // runs; the moves into `in/` still happen only after run 1
       // terminates, so "more data lands while no job is running" is
       // exactly as staged before.
-      val stage2 = tmp.resolve("stage2")
+      val stage2 = h.dir.resolve("stage2")
       events.filter(col("ts") > cut)
         .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
-      val stage3 = tmp.resolve("sentinel")
-      Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L),
-           -1L, "__watermark_sentinel__", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      val stage3 = h.dir.resolve("sentinel")
+      sentinel(s, maxTs, 7L, -1L)
         .coalesce(1).write.mode("overwrite").parquet(stage3.toString)
-      require(q.awaitTermination(300000),
-        "q143 run 1 did not terminate within 300 s")
-      q = null
+      h.await(q1, "run 1")
       // ---- more data lands while no job is running
-      moveOnlyParquet(stage2, in.resolve("mm-half2.parquet"), mtimeMs = 1060000L)
-      moveOnlyParquet(stage3, in.resolve("zz-sentinel.parquet"),
+      moveOnlyParquet(stage2, h.in.resolve("mm-half2.parquet"),
+        mtimeMs = 1060000L)
+      moveOnlyParquet(stage3, h.in.resolve("zz-sentinel.parquet"),
         mtimeMs = 1120000L)
       // ---- run 2: resumed from the same checkpoint
-      q = run()
-      require(q.awaitTermination(300000),
-        "q143 run 2 did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
+      h.await(run(), "run 2")
+      h.output
         .filter(col("event_type") =!= "__watermark_sentinel__")
         .localCheckpoint()
         .orderBy("hour_start", "event_type")
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q169 — STREAMING INCREMENTAL DEDUP: the tenth streaming surface, and
     * the one that carries the dedup family into the ingest loop — q153's
@@ -2627,24 +2060,20 @@ object EventStream {
     * q153's single-batch answer exactly, and the ORACLE IS q153's SQL —
     * hash-equality proves the streaming protocol loses/duplicates
     * nothing across micro-batch boundaries. */
-  def incrementalDedupStreamParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val D = graft.dedup.Dedup
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q169")
-    var q: StreamingQuery = null
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
+  def incrementalDedupStreamParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q169") { h =>
+      import s.implicits._
+      import org.apache.spark.sql.expressions.Window
+      val D = graft.dedup.Dedup
       val inc = D.stagedIncrement(s, dir).select("doc_id", "text")
         .localCheckpoint() // three concurrent slice writes read it
       // three independent staging writes — one wave (guide §2.6);
       // micro-batch order is carried by the explicit mtimes
       stagingWave((0 until 3).map(i => () => {
-        val st = tmp.resolve(s"stage$i")
+        val st = h.dir.resolve(s"stage$i")
         inc.filter(pmod(col("doc_id"), lit(3)) === i)
           .coalesce(1).write.mode("overwrite").parquet(st.toString)
-        moveOnlyParquet(st, in.resolve(f"b$i%02d.parquet"),
+        moveOnlyParquet(st, h.in.resolve(f"b$i%02d.parquet"),
           mtimeMs = 1000000L + i * 60000L)
       }))
       // the persisted corpus index: distinct content hashes, computed once
@@ -2659,8 +2088,8 @@ object EventStream {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("text",
           org.apache.spark.sql.types.StringType)))
-      q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+      h.await(h.track(s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(h.in.toString)
         .writeStream
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
           val wH = Window.partitionBy("h").orderBy("doc_id")
@@ -2688,20 +2117,14 @@ object EventStream {
             cls.filter(col("cls") === "new").select("h")).localCheckpoint()
           ()
         }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
+        .option("checkpointLocation", h.ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q169 streaming query did not terminate within 300 s")
+        .start()))
       Seq((counts.get(0).toInt, counts.get(1).toInt,
            counts.get(2).toInt, counts.get(3).toInt))
         .toDF("n_incoming", "n_dup_vs_existing", "n_new_contents",
           "n_within_batch_extra")
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q147 — streaming QUARANTINE DUAL-SINK: the ninth streaming surface,
     * and the one multi-sink pattern none of the others cover — a
@@ -2717,14 +2140,9 @@ object EventStream {
     * the batch routing of the same input — a lost row, a double-routed
     * row, or a row landing on both sides would each break it. Stateless
     * routing ⇒ no watermark, no sentinel staging needed. */
-  def quarantineDualSink(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q147")
-    var q: StreamingQuery = null
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+  def quarantineDualSink(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q147") { h =>
+      val events = stagedEvents(s, dir)
       val staged = events
         .unionAll(events.filter(col("event_id") % 10 === 0)
           .withColumn("value", -col("value") - 1.0))
@@ -2733,20 +2151,18 @@ object EventStream {
         .unionAll(events.filter(col("event_id") % 70 === 0)
           .withColumn("value", -col("value") - 1.0)
           .withColumn("event_type", lit("corrupt")))
-      staged.coalesce(1).write.mode("overwrite").parquet(in.toString)
-      val clean = tmp.resolve("clean").toString
-      val quar = tmp.resolve("quarantine").toString
-      q = fileSource(s, in.toString).writeStream
+      staged.coalesce(1).write.mode("overwrite").parquet(h.in.toString)
+      val clean = h.dir.resolve("clean").toString
+      val quar = h.dir.resolve("quarantine").toString
+      h.await(h.track(fileSource(s, h.in.toString).writeStream
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
                          batchId: Long) =>
           routeBatch(batch, batchId, clean, quar)
         }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
+        .option("checkpointLocation", h.ckpt)
         .outputMode(OutputMode.Append())
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000),
-        "q147 routing stream did not terminate within 300 s")
+        .start()))
       val sides =
         s.read.parquet(clean).drop("batch").withColumn("side", lit("clean"))
           .unionByName(s.read.parquet(quar).drop("batch")
@@ -2757,11 +2173,7 @@ object EventStream {
             .as("sum_value"))
         .orderBy("side", "reason_mask")
         .localCheckpoint()
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** One q147 micro-batch route — factored out (the [[mergeBatch]]
     * precedent) so replay idempotence is directly testable: a Spark
@@ -2809,39 +2221,21 @@ object EventStream {
     * concurrent-user cardinality). On a live deployment: swap the file
     * source for [[kafkaSource]] and pass an `idleTimeout` — trailing
     * sessions then flush on idle instead of staying in state. */
-  def sessionizeParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q130")
-    var q: StreamingQuery = null
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(partsKey, "8")
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
+  def sessionizeParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q130", Parts8) { h =>
+      import s.implicits._
       // ONE staged file → ONE micro-batch: every user's full event
       // sequence reaches the group function together, so sessions close
       // in-batch and no cross-batch mtime-ordering hazard exists
-      graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(in.toString)
-      val ds = fileSource(s, in.toString)
+      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
+        .parquet(h.in.toString)
+      val ds = fileSource(s, h.in.toString)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
       val sessions = sessionize(ds, gapMs = 7200000L, idleTimeout = None)
-      q = toParquet(sessions.toDF(), tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q130 sessionize stream did not terminate within 300 s")
-      s.read.parquet(tmp.resolve("out").toString)
-        .orderBy("user_id", "session_start")
-        .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
+      h.await(h.sink(sessions.toDF()))
+      h.output.orderBy("user_id", "session_start").localCheckpoint()
     }
-  }
 
   /** q234 — NATIVE session_window() parity, the fourteenth streaming
     * surface and the builtin twin of q130: the same 2-hour-gap
@@ -2878,44 +2272,11 @@ object EventStream {
     * by the watermark horizon; the aggregation shuffles on user_id with
     * partial merge per micro-batch — the same plan a 1000-executor
     * cluster runs; swap [[kafkaSource]] in and drop the staging. */
-  def sessionWindowParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val noDataPrev = s.conf.getOption(noDataKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsPrev = s.conf.get(partsKey)
-    s.conf.set(noDataKey, "true")
-    s.conf.set(partsKey, "8")
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q234")
-    var q: StreamingQuery = null
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val events = graft.sources.Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      // data write ∥ bounds agg + sentinel (guide §2.6) — the q85 wave
-      stagingWave(Seq(
-        () => {
-          val stage0 = tmp.resolve("stage0")
-          events.coalesce(1).write.mode("overwrite").parquet(stage0.toString)
-          moveOnlyParquet(stage0, in.resolve("aa-data.parquet"),
-            mtimeMs = 1000000L)
-        },
-        () => {
-          val maxTs = events.agg(max("ts")).head().getTimestamp(0)
-          val stage = tmp.resolve("sentinel")
-          Seq((-1L, new java.sql.Timestamp(maxTs.getTime + 7L * 86400000L),
-               -1L, "__watermark_sentinel__", 0.0, "{}"))
-            .toDF("event_id", "ts", "user_id", "event_type", "value",
-              "props")
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          moveOnlyParquet(stage, in.resolve("zz-sentinel.parquet"),
-            mtimeMs = 1060000L)
-        }))
+  def sessionWindowParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q234", Flush) { h =>
+      stageDataThenSentinel(h, stagedEvents(s, dir))
       val gap = "2 hours 1 microsecond"
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in.toString)
-      val sessions = src
+      val sessions = inBatches(h)
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), session_window(col("ts"), gap))
         .agg(count(lit(1)).as("n_events"),
@@ -2926,13 +2287,10 @@ object EventStream {
           (col("session_window.end") - expr(s"INTERVAL '$gap'"))
             .as("session_end"),
           col("n_events"), col("sum_value"))
-      q = toParquet(sessions, tmp.resolve("out").toString,
-        tmp.resolve("ckpt").toString)
-      require(q.awaitTermination(300000),
-        "q234 session_window stream did not terminate within 300 s")
+      h.await(h.sink(sessions))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("session_start")
-      s.read.parquet(tmp.resolve("out").toString)
+      h.output
         .filter(col("user_id") =!= -1L)
         .withColumn("session_idx",
           row_number().over(w).cast(IntegerType))
@@ -2940,16 +2298,7 @@ object EventStream {
           col("session_end"), col("n_events"), col("sum_value"))
         .orderBy("user_id", "session_idx")
         .localCheckpoint()
-    } finally {
-      s.conf.set(partsKey, partsPrev)
-      noDataPrev match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None    => s.conf.unset(noDataKey)
-      }
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
   /** q85's oracle is q21's (the streaming path must reproduce the batch
     * aggregation exactly); q107's is q88's (the streaming merge must
@@ -3440,7 +2789,6 @@ object EventStream {
     ()
   }
 
-  /** Parquet sink with checkpointing (S3's streaming twin). */
   /** q335 — CUSTOM-CONNECTOR STREAMING PARITY (31st surface): the
     * fixed-width DSv2 source ([[graft.sources.fixedwidth]]) read as a
     * STREAM through its own MicroBatchStream — offsets are positions in
@@ -3456,15 +2804,11 @@ object EventStream {
     *
     * Every staged slice is REQUIRED non-empty before the runs (the
     * q298 lesson: an empty increment makes the restart proof vacuous). */
-  def fixedWidthStreamParity(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q335")
-    var q: StreamingQuery = null
-    try {
-      val in = tmp.resolve("in")
-      java.nio.file.Files.createDirectories(in)
+  def fixedWidthStreamParity(s: SparkSession, dir: String): DataFrame =
+    staged(s, "q335") { h =>
       val li = graft.sources.Tables.load(s, dir, "lineitem")
       def stageSlice(rem: Int, name: String): Unit = {
-        val st = tmp.resolve(s"st$rem")
+        val st = h.dir.resolve(s"st$rem")
         val slice = li.filter(col("l_orderkey") % 3 === rem)
         require(slice.limit(1).count() == 1,
           s"q335 slice $rem is empty — restart proof would be vacuous")
@@ -3478,38 +2822,29 @@ object EventStream {
         val part = Option(st.toFile.listFiles).getOrElse(Array.empty)
           .find(_.getName.endsWith(".txt"))
           .getOrElse(sys.error(s"no text part under $st"))
-        java.nio.file.Files.move(part.toPath, in.resolve(name))
+        java.nio.file.Files.move(part.toPath, h.in.resolve(name))
       }
       val spec = "l_orderkey:0:12:long,l_suppkey:12:8:long," +
         "l_q4:20:12:long,l_returnflag:32:1:string"
-      val (out, ckpt) =
-        (tmp.resolve("out").toString, tmp.resolve("ckpt").toString)
-      def runOnce(): Unit = {
-        val src = s.readStream
+      def runOnce(run: String): Unit =
+        h.await(h.sink(s.readStream
           .format("graft.sources.fixedwidth.FixedWidthSource")
-          .option("spec", spec).load(in.toString)
-        q = toParquet(src, out, ckpt)
-        require(q.awaitTermination(300000),
-          "q335 streaming run did not terminate within 300 s")
-      }
+          .option("spec", spec).load(h.in.toString)), run)
       stageSlice(0, "aa-slice0.txt")
-      runOnce() // run 1: checkpoint ends after slice A
+      runOnce("run 1") // checkpoint ends after slice A
       stageSlice(1, "bb-slice1.txt")
       stageSlice(2, "cc-slice2.txt")
-      runOnce() // run 2: resumes — must admit exactly B+C
-      s.read.parquet(out)
+      runOnce("run 2") // resumes — must admit exactly B+C
+      h.output
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           sum(col("l_orderkey")).as("sum_okey"),
           sum(col("l_q4")).as("sum_q4"))
         .orderBy("l_returnflag")
         .localCheckpoint()
-    } finally {
-      if (q != null && q.isActive) q.stop()
-      rmTree(tmp)
     }
-  }
 
+  /** Parquet sink with checkpointing (S3's streaming twin). */
   def toParquet(df: DataFrame, outDir: String, checkpointDir: String,
                 trigger: org.apache.spark.sql.streaming.Trigger =
                   org.apache.spark.sql.streaming.Trigger.AvailableNow()): StreamingQuery =

@@ -14,5 +14,9 @@ class AuditSpec extends SparkSpec {
     assert(r.rows == expected)
     assert(r.jobs.nonEmpty)
     assert(r.lines.last.startsWith("""{"metric":"audit","name":"q05_group_count""""))
+    // bytes, not rounded MB: an sf0.001 scan is far below 0.05 MB
+    val inputBytes = """"input_bytes":(\d+)""".r
+      .findFirstMatchIn(r.lines.last).map(_.group(1).toLong)
+    assert(inputBytes.exists(_ > 0), r.lines.last)
   }
 }

@@ -576,6 +576,50 @@ class StreamingSpec extends SparkSpec {
     assert(first._1.toSet.intersect(first._2.toSet).isEmpty)
   }
 
+  test("staged harness: a body that throws after starting a query leaves " +
+      "no query, conf or scratch dir behind") {
+    val parts = "spark.sql.shuffle.partitions"
+    val unpinned = "spark.graft.test.unpinned"
+    assert(spark.conf.getOption(unpinned).isEmpty)
+    var dir: java.nio.file.Path = null
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val e = intercept[IllegalStateException] {
+      EventStream.staged(spark, "qlifecycle",
+          Map(parts -> "8", unpinned -> "x")) { h =>
+        dir = h.dir
+        assert(spark.conf.get(parts) == "8")
+        assert(spark.conf.get(unpinned) == "x")
+        // a rate stream under the default trigger never ends on its own
+        q = h.track(spark.readStream.format("rate").load().writeStream
+          .format("noop").option("checkpointLocation", h.ckpt).start())
+        assert(q.isActive)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(!q.isActive)
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.getOption(unpinned).isEmpty)
+    assert(spark.conf.get(parts) == "4")
+    assert(!java.nio.file.Files.exists(dir))
+  }
+
+  test("q85, q115 and q270 leave no active query, pinned conf or " +
+      "scratch dir behind") {
+    val prov = "spark.sql.streaming.stateStore.providerClass"
+    val provBefore = spark.conf.getOption(prov)
+    def harnessDirs(): Set[String] =
+      Option(graft.sources.Tables.scratchRoot.toFile.list())
+        .map(_.toSet).getOrElse(Set.empty).filter(_.startsWith("graft-q"))
+    val before = harnessDirs()
+    Seq("q85_stream_parity", "q115_stream_static_join", "q270_cm_stream")
+      .foreach(name => SparkEntry.queries(name)(spark, sfDir).count())
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.getOption(prov) == provBefore)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(harnessDirs() -- before == Set.empty[String])
+  }
+
   test("q143 restart parity equals the single-run streaming parity (q85)") {
     // two AvailableNow runs resuming one checkpoint must produce the
     // exact rows one continuous run produces — state restore, file-log
