@@ -1242,26 +1242,29 @@ object Dedup extends org.apache.spark.internal.Logging {
     // set sizes and intersections all derive from it
     val shs = shingleRows(corpus, cfg).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    shs.count() // materialize eagerly: three downstream branches read this
-    val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val pairs = bandPairsFrom(signaturesFrom(shs, cfg), cfg).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // two consumers; lazy fill lets concurrent stages race
-    val inter = pairs
-      .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(shs.as("sb"),
-        col("doc_b") === col("sb.doc_id") &&
-          col("sa.shingle") === col("sb.shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("ni"))
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "sz" -> "sza")), "doc_a")
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "sz" -> "szb")), "doc_b")
-      .withColumn("jaccard", round(
-        col("ni").cast(DoubleType) / (col("sza") + col("szb") - col("ni")), 6))
-      .filter(col("jaccard") >= cfg.jaccardThreshold)
-      .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
+    try {
+      shs.count() // materialize eagerly: three downstream branches read this
+      pairs.count() // two consumers; lazy fill lets concurrent stages race
+      val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+      val inter = pairs
+        .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
+        .join(shs.as("sb"),
+          col("doc_b") === col("sb.doc_id") &&
+            col("sa.shingle") === col("sb.shingle"))
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
+      pairs
+        .join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("ni"))
+        .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "sz" -> "sza")), "doc_a")
+        .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "sz" -> "szb")), "doc_b")
+        .withColumn("jaccard", round(
+          col("ni").cast(DoubleType) / (col("sza") + col("szb") - col("ni")), 6))
+        .filter(col("jaccard") >= cfg.jaccardThreshold)
+        .select("doc_a", "doc_b", "jaccard")
+        .orderBy("doc_a", "doc_b")
+        .localCheckpoint()
+    } finally { pairs.unpersist(); shs.unpersist(); () }
   }
 
   /** SimHash-32 fingerprint: per-token md5-derived bits, frequency-weighted
@@ -1588,34 +1591,37 @@ object Dedup extends org.apache.spark.internal.Logging {
     val shs = shingleRows(docs(s, dir).select("doc_id", "text"), cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     shs.count()
-    val pairs = bandPairsFrom(signaturesFrom(shs, cfg), cfg)
-    val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(shs.as("sb"), col("doc_b") === col("sb.doc_id") &&
-        col("sa.shingle") === col("sb.shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-    inter
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "sz" -> "sza")),
-        "doc_a")
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "sz" -> "szb")),
-        "doc_b")
-      .filter(round(col("ni").cast(DoubleType) /
-        (col("sza") + col("szb") - col("ni")), 6) >= cfg.jaccardThreshold)
-      .withColumn("spa", splitOf(col("doc_a")))
-      .withColumn("spb", splitOf(col("doc_b")))
-      .filter(col("spa") =!= col("spb"))
-      .withColumn("split_lo", least(col("spa"), col("spb")))
-      .withColumn("split_hi", greatest(col("spa"), col("spb")))
-      .groupBy("split_lo", "split_hi")
-      .agg(count(lit(1)).cast(IntegerType).as("n_pairs"),
-        countDistinct(when(col("spa") === col("split_lo"), col("doc_a"))
-          .otherwise(when(col("spb") === col("split_lo"), col("doc_b"))))
-          .cast(IntegerType).as("n_docs_lo"),
-        countDistinct(when(col("spa") === col("split_hi"), col("doc_a"))
-          .otherwise(when(col("spb") === col("split_hi"), col("doc_b"))))
-          .cast(IntegerType).as("n_docs_hi"))
-      .orderBy("split_lo", "split_hi")
+    try {
+      val pairs = bandPairsFrom(signaturesFrom(shs, cfg), cfg)
+      val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+      val inter = pairs
+        .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
+        .join(shs.as("sb"), col("doc_b") === col("sb.doc_id") &&
+          col("sa.shingle") === col("sb.shingle"))
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
+      inter
+        .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "sz" -> "sza")),
+          "doc_a")
+        .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "sz" -> "szb")),
+          "doc_b")
+        .filter(round(col("ni").cast(DoubleType) /
+          (col("sza") + col("szb") - col("ni")), 6) >= cfg.jaccardThreshold)
+        .withColumn("spa", splitOf(col("doc_a")))
+        .withColumn("spb", splitOf(col("doc_b")))
+        .filter(col("spa") =!= col("spb"))
+        .withColumn("split_lo", least(col("spa"), col("spb")))
+        .withColumn("split_hi", greatest(col("spa"), col("spb")))
+        .groupBy("split_lo", "split_hi")
+        .agg(count(lit(1)).cast(IntegerType).as("n_pairs"),
+          countDistinct(when(col("spa") === col("split_lo"), col("doc_a"))
+            .otherwise(when(col("spb") === col("split_lo"), col("doc_b"))))
+            .cast(IntegerType).as("n_docs_lo"),
+          countDistinct(when(col("spa") === col("split_hi"), col("doc_a"))
+            .otherwise(when(col("spb") === col("split_hi"), col("doc_b"))))
+            .cast(IntegerType).as("n_docs_hi"))
+        .orderBy("split_lo", "split_hi")
+        .localCheckpoint()
+    } finally { shs.unpersist(); () }
   }
 
   /** q180's export shard count — interpolated into the oracle. */
@@ -1638,8 +1644,7 @@ object Dedup extends org.apache.spark.internal.Logging {
                     shards: Int = CuratedShards,
                     qualityMin: Double = AdmissionQualityMin,
                     cfg: DedupConfig = DedupConfig.Default): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q180")
-    try {
+    Tables.scratchQuery("q180") { tmp =>
       // fan out BEFORE the checkpoint: a single-split checkpoint pins the
       // signature chain, the quality-score projection, and the shard-key
       // stamp to one task each; 32-way here also makes shingleRows' own
@@ -1673,8 +1678,7 @@ object Dedup extends org.apache.spark.internal.Logging {
           expr("bit_xor(CAST(conv(substring(md5(text), 1, 15), 16, 10) " +
             "AS BIGINT))").as("xor_hash"))
         .orderBy("shard")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q75: cross-source contamination — near-dup pairs whose members come

@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
   *    at 100 TB, a second scan of the input; SURVEY §1.3);
   *  - ALL median imputation values from ONE approxQuantile call (the
   *    reference runs one job per column, data_cleaning.py:67 → 7 sequential
-  *    scans; SURVEY §3 E1 note);
-  *  - all mean imputation values from ONE agg (nb cell 19 runs k jobs).
+  *    scans; SURVEY §3 E1 note).
   */
 object Cleaning {
 
@@ -22,10 +21,6 @@ object Cleaning {
     * (data_cleaning.py:34-46). */
   def selectPresent(df: DataFrame, wanted: Seq[String]): DataFrame =
     df.select(wanted.filter(df.columns.contains).map(col): _*)
-
-  /** P2: identifier-safe renames (data_cleaning.py:51-60). */
-  def renameAll(df: DataFrame, renames: Map[String, String]): DataFrame =
-    df.withColumnsRenamed(renames.filter { case (from, _) => df.columns.contains(from) })
 
   /** A4+P6: median imputation for numeric columns — ONE pass for all
     * medians via the multi-column approxQuantile overload, then one
@@ -37,18 +32,6 @@ object Cleaning {
     val medians = df.stat.approxQuantile(present.toArray, Array(0.5), relativeError)
       .map(_.headOption.getOrElse(0.0))
     present.zip(medians).foldLeft(df) { case (d, (c, m)) =>
-      d.withColumn(c,
-        when(col(c).isNull || isnan(col(c)), lit(m)).otherwise(col(c)))
-    }
-  }
-
-  /** A3+P6: mean imputation — all means in ONE aggregation job. */
-  def imputeMean(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val present = cols.filter(df.columns.contains)
-    if (present.isEmpty) return df
-    val means = df.select(present.map(c => avg(col(c)).as(c)): _*).first()
-    present.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      val m = if (means.isNullAt(i)) 0.0 else means.getDouble(i)
       d.withColumn(c,
         when(col(c).isNull || isnan(col(c)), lit(m)).otherwise(col(c)))
     }

@@ -49,14 +49,6 @@ object TextPrims {
   def seededMd5C(seed: Int, c: Column): Column = md5(concat(lit(s"$seed#"), c))
   def seededMd5S(seed: Int, e: String): String = s"md5('$seed#' || $e)"
 
-  /** MinHash signature element: lexicographic MIN of seeded md5s over the
-    * shingle set. MinHash only needs a uniform hash with a total order —
-    * hex-string order is one, and is identical in every engine. */
-  def minhashC(shingles: Column, seed: Int): Column =
-    array_min(transform(shingles, x => seededMd5C(seed, x)))
-  def minhashS(shingles: String, seed: Int): String =
-    s"list_min(list_transform($shingles, x -> ${seededMd5S(seed, "x")}))"
-
   /** First 8 hex chars of an md5 string folded to a non-negative Long in
     * [0, 2^32). Spark: conv(); DuckDB: explicit digit fold. */
   def hex32C(h: Column): Column =

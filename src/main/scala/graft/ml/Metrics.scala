@@ -60,18 +60,6 @@ object Metrics {
       .orderBy("cls")
   }
 
-  /** M13: the reference's published AUC semantics (random_forest.py:166-188)
-    * — binarize the label at >= threshold but evaluate against the RAW
-    * multiclass rawPrediction vector. Documented reference bug, reproduced
-    * for parity. */
-  def binaryAucReferenceSemantics(predictions: DataFrame, threshold: Double,
-                                  labelCol: String = "label"): Double =
-    new BinaryClassificationEvaluator()
-      .setLabelCol("bin_label").setRawPredictionCol("rawPrediction")
-      .setMetricName("areaUnderROC")
-      .evaluate(predictions.withColumn("bin_label",
-        (col(labelCol) >= threshold).cast(DoubleType)))
-
   /** M14: corrected one-vs-rest AUC — per-class AUC on P(class i) extracted
     * from the probability vector, mean over classes (nb cell 44). */
   def ovrAuc(predictions: DataFrame, numClasses: Int,

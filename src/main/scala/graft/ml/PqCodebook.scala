@@ -227,32 +227,23 @@ object PqCodebook {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pts.count()
     try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(Blocks)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try {
-        Await.result(Future.sequence((0 until Blocks).map { b =>
-          Future {
-            val sub = pts.select(col("vec_id"),
-              slice(col("e"), b * SubDim + 1, SubDim).as("e"))
-            val centers = LloydExact.centersFor(sub)
-            // block lives in the directory name only (partition column)
-            centers.select(col("cluster"), col("c"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(staging.resolve(s"codebooks/block=$b").toString)
-            LloydExact.assign(sub, centers)
-              .select(col("vec_id"), col("cluster").as("code"))
-              .write.mode("overwrite")
-              .parquet(staging.resolve(s"codes/block=$b").toString)
-            sub.filter(col("vec_id") < 10)
-              .select(col("vec_id").as("query_id"), col("e").as("qe"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(staging.resolve(s"queries/block=$b").toString)
-          }
-        }), Duration(10, "min"))
-      } finally { pool.shutdownNow(); () }
+      graft.sources.Tables.wave((0 until Blocks).map(b => () => {
+        val sub = pts.select(col("vec_id"),
+          slice(col("e"), b * SubDim + 1, SubDim).as("e"))
+        val centers = LloydExact.centersFor(sub)
+        // block lives in the directory name only (partition column)
+        centers.select(col("cluster"), col("c"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(staging.resolve(s"codebooks/block=$b").toString)
+        LloydExact.assign(sub, centers)
+          .select(col("vec_id"), col("cluster").as("code"))
+          .write.mode("overwrite")
+          .parquet(staging.resolve(s"codes/block=$b").toString)
+        sub.filter(col("vec_id") < 10)
+          .select(col("vec_id").as("query_id"), col("e").as("qe"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(staging.resolve(s"queries/block=$b").toString)
+      }))
       // exact ground truth — q211's baseline expressions, persisted as
       // the index's eval artifact (the ANN-benchmark ground-truth file)
       val q = pts.filter(col("vec_id") < 10)
@@ -487,28 +478,19 @@ object PqCodebook {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       res.count()
       try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(Blocks)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try {
-          Await.result(Future.sequence((0 until Blocks).map { b =>
-            Future {
-              val sub = res.select(col("vec_id"),
-                slice(col("r"), b * SubDim + 1, SubDim).as("e"))
-              val centers = LloydExact.centersFor(sub)
-              centers.select(col("cluster"), col("c")).coalesce(1)
-                .write.mode("overwrite")
-                .parquet(staging.resolve(s"codebooks/block=$b").toString)
-              LloydExact.assign(sub, centers)
-                .select(col("vec_id"), col("cluster").as("code"))
-                .join(res.select(col("vec_id"), col("coarse")), "vec_id")
-                .write.mode("overwrite")
-                .parquet(staging.resolve(s"codes/block=$b").toString)
-            }
-          }), Duration(10, "min"))
-        } finally { pool.shutdownNow(); () }
+        graft.sources.Tables.wave((0 until Blocks).map(b => () => {
+          val sub = res.select(col("vec_id"),
+            slice(col("r"), b * SubDim + 1, SubDim).as("e"))
+          val centers = LloydExact.centersFor(sub)
+          centers.select(col("cluster"), col("c")).coalesce(1)
+            .write.mode("overwrite")
+            .parquet(staging.resolve(s"codebooks/block=$b").toString)
+          LloydExact.assign(sub, centers)
+            .select(col("vec_id"), col("cluster").as("code"))
+            .join(res.select(col("vec_id"), col("coarse")), "vec_id")
+            .write.mode("overwrite")
+            .parquet(staging.resolve(s"codes/block=$b").toString)
+        }))
         pts.filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("e").as("qe"))
           .coalesce(1).write.mode("overwrite")

@@ -336,8 +336,7 @@ object Multimodal {
     * so hash-equality proves the file sink + binaryFile source pair is
     * byte-lossless. Staging is cleaned up after materialization. */
   def binaryFileSource(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q405")
-    try {
+    Tables.scratchQuery("q405") { tmp =>
       val base = tmp.toString
       fromDocuments(s, dir).filter(col("media_id") % 37 === 0)
         .select(col("media_id"), col("content"))
@@ -357,8 +356,7 @@ object Multimodal {
           col("length").as("n_bytes"),
           md5(col("content")).as("content_md5"))
         .orderBy("media_id")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q40 oracle: metadata extraction is SQL-expressible (md5 of utf-8 text

@@ -297,13 +297,11 @@ object Similarity {
     * storage forever; at 100 TB the index build is the expensive pass
     * and this query certifies it never needs re-running). */
   def annIvfPersisted(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q170")
-    try {
+    Tables.scratchQuery("q170") { tmp =>
       val path = tmp.resolve("ivf").toString
       ivfCells(s, dir).write.partitionBy("cluster").parquet(path)
-      // materialize off the staging dir before the finally deletes it
-      probeIvf(s.read.parquet(path)).localCheckpoint()
-    } finally Tables.rmTree(tmp)
+      probeIvf(s.read.parquet(path))
+    }
   }
 
   /** q262: TOMBSTONED IVF — the deletion path of a production vector
@@ -318,16 +316,15 @@ object Similarity {
     * survivors). The GDPR-shaped operation every 100 TB index needs:
     * delete cost is O(|tombstones|), not an index rebuild. */
   def annIvfTombstones(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q262")
-    try {
+    Tables.scratchQuery("q262") { tmp =>
       val path = tmp.resolve("ivf").toString
       ivfCells(s, dir).write.partitionBy("cluster").parquet(path)
       val idx = s.read.parquet(path)
       val tomb = idx
         .filter(col("vec_id") % 10 === 3 && col("vec_id") >= 10)
         .select(col("vec_id").as("neighbor_id"))
-      probeIvf(idx, Some(tomb)).localCheckpoint()
-    } finally Tables.rmTree(tmp)
+      probeIvf(idx, Some(tomb))
+    }
   }
 
   /** q265: IVF TOMBSTONE COMPACTION — the step q262 defers: when the
@@ -350,8 +347,7 @@ object Similarity {
     * unions two partitioned generations — the LSM-flavored layout
     * production vector stores actually run. */
   def annIvfCompacted(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q265")
-    try {
+    Tables.scratchQuery("q265") { tmp =>
       val gen0 = tmp.resolve("gen0").toString
       ivfCells(s, dir).write.partitionBy("cluster").parquet(gen0)
       val idx = s.read.parquet(gen0)
@@ -375,8 +371,8 @@ object Similarity {
           idx.filter(!col("cluster")
             .isin(affected.map(Integer.valueOf): _*)))
       }
-      probeIvf(compacted).localCheckpoint()
-    } finally Tables.rmTree(tmp)
+      probeIvf(compacted)
+    }
   }
 
   /** q171: SQ8-QUANTIZED ANN with exact re-rank — the memory-compression
@@ -1416,8 +1412,7 @@ object Similarity {
     * generations are never read. */
   def annIvfUpsert(s: SparkSession, dir: String): DataFrame = {
     val L = graft.ml.LloydExact
-    val tmp = graft.sources.Tables.scratchTempDir("graft-q277")
-    try {
+    Tables.scratchQuery("q277") { tmp =>
       val path = tmp.resolve("ivf").toString
       val pts = L.points(s, dir)
       val centers = L.centersFor(pts)
@@ -1429,8 +1424,8 @@ object Similarity {
       L.assign(adds, centers)
         .withColumn("nrm", sqrt(dotp(col("e"), col("e"))))
         .write.mode("append").partitionBy("cluster").parquet(path)
-      probeIvf(s.read.parquet(path)).localCheckpoint()
-    } finally Tables.rmTree(tmp)
+      probeIvf(s.read.parquet(path))
+    }
   }
 
   /** q298: STREAMING IVF UPSERT — the index-lifecycle capstone: q277's

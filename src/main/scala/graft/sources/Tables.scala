@@ -81,8 +81,9 @@ object Tables {
     * the shuffle dirs ([[scratchDir]]), so with it set, shuffle files
     * follow the variable while these dirs stay on `/dev/shm` whenever it
     * is writable (one scratch policy for both is ROADMAP item 3).
-    * Callers delete the dir when done. */
-  private[graft] def scratchTempDir(prefix: String): java.nio.file.Path = {
+    * Made only by [[withScratch]], which deletes the dir on every
+    * exit. */
+  private def scratchTempDir(prefix: String): java.nio.file.Path = {
     val root = scratchRoot
     java.nio.file.Files.createDirectories(root)
     java.nio.file.Files.createTempDirectory(root, prefix)
@@ -153,6 +154,37 @@ object Tables {
       v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 
+  /** Runs `body` on a fresh scratch dir `graft-<label>…` under
+    * [[scratchRoot]] and deletes the dir on every exit. Whatever `body`
+    * returns must not read the dir lazily: see [[scratchQuery]]. */
+  def withScratch[T](label: String)(body: java.nio.file.Path => T): T = {
+    val dir = scratchTempDir(s"graft-$label")
+    try body(dir) finally rmTree(dir)
+  }
+
+  /** [[withScratch]] for a query that writes into its dir and reads the
+    * data back: the result is materialized (localCheckpoint) before the
+    * dir is deleted. */
+  def scratchQuery(label: String)(body: java.nio.file.Path => DataFrame): DataFrame =
+    withScratch(label)(dir => body(dir).localCheckpoint())
+
+  /** Runs independent thunks as one concurrent wave of driver threads,
+    * one per thunk: Spark schedules concurrent jobs FIFO and back-fills
+    * freed slots, so N small jobs cost about the slowest one instead of
+    * their sum. Results come back in input order; a thunk's failure, or
+    * 10 min without completion, fails the wave, and the pool is shut
+    * down on every exit. */
+  def wave[T](work: Seq[() => T]): Seq[T] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
+    implicit val ec: ExecutionContext =
+      ExecutionContext.fromExecutorService(pool)
+    try Await.result(
+      Future.sequence(work.map(w => Future(w()))), Duration(10, "min"))
+    finally { pool.shutdownNow(); () }
+  }
+
   /** Fan a small/single-split input out to cluster parallelism before a
     * compute-dense narrow stage (shingling, hashing, vector math).
     *
@@ -214,11 +246,6 @@ object Tables {
           header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).schema(schema).csv(path)
 
-  /** CSV scan with inference, the reference's exact semantics
-    * (data_cleaning.py:29) — kept as an escape hatch for schema drift. */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   /** JSON-lines scan (counterpart of sink S4). */
   def json(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
@@ -229,8 +256,9 @@ object Tables {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 
-  /** Recursive local-dir delete — THE tree-delete helper (staging cleanup
-    * in q85 and the q102–q104 round-trips); closes the walk stream. */
+  /** Recursive local-dir delete — THE tree-delete helper ([[withScratch]]
+    * and the durable outputs that outlive a query); closes the walk
+    * stream. */
   private[graft] def rmTree(root: java.nio.file.Path): Unit = {
     val walk = java.nio.file.Files.walk(root)
     try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -339,15 +367,14 @@ object Sinks {
     * file-count contract (computed n, and n ≪ input fragments). */
   def compactRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tmp = Tables.scratchTempDir("graft-q132")
-    try {
+    Tables.scratchQuery("q132") { tmp =>
       val src = Tables.load(s, dir, "lineitem").select(PrunedCols.map(col): _*)
       val frag = tmp.resolve("frag").toString
       src.repartition(64).write.mode("overwrite").parquet(frag)
       val out = tmp.resolve("compact").toString
       compactParquet(s, frag, out, Seq("l_orderkey"), targetBytes = 32L << 20)
-      prunedAgg(s.read.parquet(out), flag = None).localCheckpoint()
-    } finally Tables.rmTree(tmp)
+      prunedAgg(s.read.schema(src.schema).parquet(out), flag = None)
+    }
   }
 
   /** The q102–q104 projection: every column participates in the verifying
@@ -383,7 +410,7 @@ object Sinks {
         // explicit schema, never inference (SURVEY §1.3) — same discipline
         // as the CSV/JSON leg
         s.read.option("rowTag", "line").schema(schema).format("xml").load(path)
-      case "parquet" => s.read.parquet(path)
+      case "parquet" => s.read.schema(schema).parquet(path)
       case other     => sys.error(s"unsupported round-trip format: $other")
     }
 
@@ -399,8 +426,7 @@ object Sinks {
   def formatRoundTrip(s: SparkSession, dir: String, format: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir(s"graft-rt-$format")
-    try {
+    Tables.scratchQuery(s"rt-$format") { tmp =>
       // fanOut before the render: a single-split scan would otherwise
       // serialize the whole text/columnar ENCODE (and the read-back
       // parse — one output file ⇒ one scan task) through one core. At
@@ -421,8 +447,7 @@ object Sinks {
           sum(col("l_extendedprice").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_price"))
         .orderBy("l_returnflag")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q105: PARTITION-PRUNED round-trip — write lineitem through
@@ -437,13 +462,12 @@ object Sinks {
     * of the input with zero row-level filtering work. */
   def partitionPrunedRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tmp = Tables.scratchTempDir("graft-q105")
-    try {
+    Tables.scratchQuery("q105") { tmp =>
       val src = Tables.load(s, dir, "lineitem").select(PrunedCols.map(col): _*)
       val path = tmp.resolve("data").toString
       parquetPartitioned(src, path, Seq("l_returnflag"))
-      prunedAgg(s.read.parquet(path)).localCheckpoint()
-    } finally Tables.rmTree(tmp)
+      prunedAgg(s.read.parquet(path))
+    }
   }
 
   /** q106: ROW-GROUP-SKIPPED round-trip — write lineitem through
@@ -458,16 +482,14 @@ object Sinks {
     * 100 TB. */
   def clusteredRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tmp = Tables.scratchTempDir("graft-q106")
-    try {
+    Tables.scratchQuery("q106") { tmp =>
       val src = Tables.load(s, dir, "lineitem").select(PrunedCols.map(col): _*)
       val path = tmp.resolve("data").toString
       parquetClustered(src, path, Seq("l_orderkey"), numFiles = 8)
-      prunedAgg(s.read.parquet(path)
+      prunedAgg(s.read.schema(src.schema).parquet(path)
           .filter(col("l_orderkey").between(1000L, 5000L)),
           flag = None)
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** Morton (Z-order) interleave of two non-negative 31-bit keys into one
@@ -552,13 +574,12 @@ object Sinks {
   def hilbertRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q323")
-    try {
+    Tables.scratchQuery("q323") { tmp =>
       val src = Tables.load(s, dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
       val path = tmp.resolve("data").toString
       parquetHilbert(src, path, "l_partkey", "l_suppkey", numFiles = 16)
-      s.read.parquet(path)
+      s.read.schema(src.schema).parquet(path)
         .filter(col("l_partkey").between(500L, 900L) &&
           col("l_suppkey").between(20L, 60L))
         .groupBy("l_suppkey")
@@ -570,8 +591,7 @@ object Sinks {
           sum(col("l_extendedprice").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_price"))
         .orderBy("l_suppkey")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q324: PARQUET SCHEMA EVOLUTION on read (`mergeSchema`) — the
@@ -599,8 +619,7 @@ object Sinks {
   def mergeSchemaRead(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q324")
-    try {
+    Tables.scratchQuery("q324") { tmp =>
       val path = tmp.resolve("docs").toString
       val base = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -615,8 +634,7 @@ object Sinks {
           sum(col("tok_est").isNotNull.cast(LongType)).as("n_v2"),
           sum(col("tok_est")).as("sum_tok_est"))
         .orderBy("source")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q333: MANIFEST-PRUNED SCAN — the Iceberg/Delta table-format
@@ -640,15 +658,14 @@ object Sinks {
   def manifestPrunedScan(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q333")
-    try {
+    Tables.scratchQuery("q333") { tmp =>
       val path = tmp.resolve("data").toString
-      Tables.load(s, dir, "lineitem")
+      val src = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-        .repartitionByRange(16, col("l_partkey"))
+      src.repartitionByRange(16, col("l_partkey"))
         .sortWithinPartitions("l_partkey")
         .write.mode("overwrite").parquet(path)
-      val manifest = s.read.parquet(path)
+      val manifest = s.read.schema(src.schema).parquet(path)
         .groupBy(input_file_name().as("file"))
         .agg(min("l_partkey").as("lo"), max("l_partkey").as("hi"))
       val (p1, p2) = (300L, 700L)
@@ -658,8 +675,8 @@ object Sinks {
       // a fully-pruned predicate (possible at tiny SF) is an EMPTY scan,
       // not an error — same contract as a table format's empty manifest hit
       val pruned =
-        if (keep.isEmpty) s.read.parquet(path).filter(lit(false))
-        else s.read.parquet(keep.toIndexedSeq: _*)
+        if (keep.isEmpty) s.read.schema(src.schema).parquet(path).filter(lit(false))
+        else s.read.schema(src.schema).parquet(keep.toIndexedSeq: _*)
       pruned
         .filter(col("l_partkey").between(p1, p2))
         .groupBy("l_suppkey")
@@ -668,8 +685,7 @@ object Sinks {
           sum(col("l_quantity").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_qty"))
         .orderBy("l_suppkey")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q347: DELETION-VECTOR MERGE-ON-READ — the Iceberg/Delta positional
@@ -692,22 +708,21 @@ object Sinks {
   def deletionVectorScan(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q347")
-    try {
+    Tables.scratchQuery("q347") { tmp =>
       val path = tmp.resolve("data").toString
       val dvPath = tmp.resolve("dv").toString
-      Tables.load(s, dir, "lineitem")
+      val src = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_quantity", "l_returnflag")
-        .repartition(8, col("l_orderkey"))
+      src.repartition(8, col("l_orderkey"))
         .write.mode("overwrite").parquet(path)
-      val withPos = s.read.parquet(path)
+      val withPos = s.read.schema(src.schema).parquet(path)
         .select(col("*"), col("_metadata.file_path").as("fp"),
           col("_metadata.row_index").as("pos"))
       // the delete job: writes ONLY the DV table, touches no data file
-      withPos.filter(pmod(col("l_orderkey"), lit(13L)) === 0)
+      val deletes = withPos.filter(pmod(col("l_orderkey"), lit(13L)) === 0)
         .select("fp", "pos")
-        .write.mode("overwrite").parquet(dvPath)
-      val dv = s.read.parquet(dvPath)
+      deletes.write.mode("overwrite").parquet(dvPath)
+      val dv = s.read.schema(deletes.schema).parquet(dvPath)
       withPos.join(broadcast(dv), Seq("fp", "pos"), "left_anti")
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
@@ -715,8 +730,7 @@ object Sinks {
           sum(col("l_quantity").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_qty"))
         .orderBy("l_returnflag")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q349: BLOOM-INDEX FILE PRUNING — the file-skipping lever for POINT
@@ -736,12 +750,11 @@ object Sinks {
   def bloomPrunedScan(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q349")
-    try {
+    Tables.scratchQuery("q349") { tmp =>
       val path = tmp.resolve("data").toString
-      Tables.load(s, dir, "lineitem")
+      val src = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_quantity")
-        .repartition(8, col("l_orderkey")) // hash layout: min/max useless
+      src.repartition(8, col("l_orderkey")) // hash layout: min/max useless
         .write.mode("overwrite").parquet(path)
       val probes = Seq(7L, 1007L, 2207L, 4007L, 5507L)
       val blooms = bloomIndex(s, path, "l_orderkey")
@@ -749,8 +762,8 @@ object Sinks {
         case (f, bf) if probes.exists(bf.mightContain) => f
       }.toSeq.sorted
       val pruned =
-        if (keep.isEmpty) s.read.parquet(path).filter(lit(false))
-        else s.read.parquet(keep: _*)
+        if (keep.isEmpty) s.read.schema(src.schema).parquet(path).filter(lit(false))
+        else s.read.schema(src.schema).parquet(keep: _*)
       pruned
         .filter(col("l_orderkey").isin(probes: _*))
         .groupBy("l_orderkey")
@@ -759,8 +772,7 @@ object Sinks {
           sum(col("l_quantity").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_qty"))
         .orderBy("l_orderkey")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** ONE-scan per-file Bloom build: (file → bloom over `key`). Driver
@@ -795,8 +807,7 @@ object Sinks {
   def fixedWidthRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q334")
-    try {
+    Tables.scratchQuery("q334") { tmp =>
       val path = tmp.resolve("fw").toString
       Tables.load(s, dir, "lineitem")
         .select(concat(
@@ -817,8 +828,7 @@ object Sinks {
           sum(col("l_orderkey")).as("sum_okey"),
           sum(col("l_q4")).as("sum_q4"))
         .orderBy("l_returnflag")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q339: FIXED-WIDTH DSv2 **WRITE** ROUND-TRIP — lineitem written
@@ -839,8 +849,7 @@ object Sinks {
   def fixedWidthWriteRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q339")
-    try {
+    Tables.scratchQuery("q339") { tmp =>
       val path = tmp.resolve("fw").toString
       val spec = "l_orderkey:0:12:long,l_suppkey:12:8:long," +
         "l_quantity:20:24:double,l_returnflag:44:1:string"
@@ -862,8 +871,7 @@ object Sinks {
           sum(col("l_quantity").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_qty"))
         .orderBy("l_returnflag")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q382: CROSS-FORMAT CONSISTENCY CERTIFICATE — the format-migration
@@ -883,8 +891,7 @@ object Sinks {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     import graft.functions.TextPrims.hex60C
-    val tmp = Tables.scratchTempDir("graft-q382")
-    try {
+    Tables.scratchQuery("q382") { tmp =>
       // fanOut for the same reason as formatRoundTrip: five sequential
       // single-task encode/parse legs otherwise ride one core each.
       val src = Tables.fanOut(Tables.load(s, dir, "orders"), "o_orderkey")
@@ -915,34 +922,24 @@ object Sinks {
       // the five write→read→fingerprint legs are independent pure
       // functions of `src` — run them in ONE wave (the q201 codebook
       // pattern) so the sink/scan jobs overlap instead of serializing;
-      // each leg materializes inside its future (write is an action,
+      // each leg materializes inside its thread (write is an action,
       // the 1-row fingerprint pins via localCheckpoint)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val legs = try {
-        Await.result(Future.sequence(
-          Seq("parquet", "orc", "csv", "json").map { f =>
-            Future {
-              val p = tmp.resolve(f).toString
-              rtWrite(src, f, p)
-              fp(rtRead(s, f, p, src.schema), f).localCheckpoint()
-            }
-          } :+ Future {
-            val p = tmp.resolve("fixedwidth").toString
-            src.write.format("graft.sources.fixedwidth.FixedWidthSource")
-              .option("spec", fwSpec).mode("overwrite").save(p)
-            fp(s.read.format("graft.sources.fixedwidth.FixedWidthSource")
-              .option("spec", fwSpec).load(p), "fixedwidth")
-              .localCheckpoint()
-          }), Duration(10, "min"))
-      } finally { pool.shutdownNow(); () }
+      val legs = Tables.wave(
+        Seq("parquet", "orc", "csv", "json").map(f => () => {
+          val p = tmp.resolve(f).toString
+          rtWrite(src, f, p)
+          fp(rtRead(s, f, p, src.schema), f).localCheckpoint()
+        }) :+ (() => {
+          val p = tmp.resolve("fixedwidth").toString
+          src.write.format("graft.sources.fixedwidth.FixedWidthSource")
+            .option("spec", fwSpec).mode("overwrite").save(p)
+          fp(s.read.format("graft.sources.fixedwidth.FixedWidthSource")
+            .option("spec", fwSpec).load(p), "fixedwidth")
+            .localCheckpoint()
+        }))
       legs.reduce(_ unionAll _)
         .orderBy("format")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** Z-ORDERED parquet layout: range-partition + sort on the Morton key
@@ -976,15 +973,14 @@ object Sinks {
   def zorderRoundTrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val tmp = Tables.scratchTempDir("graft-q137")
-    try {
+    Tables.scratchQuery("q137") { tmp =>
       val src = Tables.load(s, dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
       val path = tmp.resolve("data").toString
       parquetZOrdered(src, path, "l_partkey", "l_suppkey", numFiles = 16)
       // every projected column participates in the verifying hash
       // (q102's rule): keys via sums, measures via exact decimal sums
-      s.read.parquet(path)
+      s.read.schema(src.schema).parquet(path)
         .filter(col("l_partkey").between(100L, 400L) &&
           col("l_suppkey").between(10L, 40L))
         .groupBy("l_suppkey")
@@ -996,8 +992,7 @@ object Sinks {
           sum(col("l_extendedprice").cast(DecimalType(18, 4)))
             .cast(DoubleType).as("sum_price"))
         .orderBy("l_suppkey")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q139: deterministic HASH-SHARDED EXPORT — the "write the training
@@ -1021,8 +1016,7 @@ object Sinks {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     import graft.functions.TextPrims.hex60C
-    val tmp = Tables.scratchTempDir("graft-q139")
-    try {
+    Tables.scratchQuery("q139") { tmp =>
       val path = tmp.resolve("export").toString
       Tables.load(s, dir, "documents")
         .withColumn("shard",
@@ -1041,8 +1035,7 @@ object Sinks {
           expr("bit_xor(CAST(conv(substring(md5(text), 1, 15), 16, 10) " +
             "AS BIGINT))").as("xor_hash"))
         .orderBy("shard")
-        .localCheckpoint()
-    } finally Tables.rmTree(tmp)
+    }
   }
 
   /** q110: BUCKETED-JOIN round-trip — the third storage lever after

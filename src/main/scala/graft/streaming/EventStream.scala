@@ -423,7 +423,9 @@ object EventStream {
         col("n"), col("sum_value"))
 
   /** Move the single parquet part out of a one-file staged write, stamping
-    * a deterministic mtime (FileStreamSource batches oldest-mtime-first). */
+    * a deterministic mtime (FileStreamSource batches oldest-mtime-first),
+    * so staging writes can run as one [[graft.sources.Tables.wave]]
+    * without the micro-batch order depending on completion order. */
   private[graft] def moveOnlyParquet(stageDir: java.nio.file.Path,
                               dest: java.nio.file.Path, mtimeMs: Long): Unit = {
     val part = Option(stageDir.toFile.listFiles).getOrElse(Array.empty)
@@ -432,24 +434,6 @@ object EventStream {
     java.nio.file.Files.move(part.toPath, dest)
     java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-  }
-
-  /** Run independent STAGING jobs as one bounded concurrent wave (guide
-    * §2.6, round-17): Spark schedules concurrent jobs FIFO and
-    * back-fills freed slots, so N tiny coalesce(1) staging writes cost
-    * about the slowest one instead of their sum. Safe for write+move
-    * thunks too: [[moveOnlyParquet]] stamps EXPLICIT mtimes, so the
-    * file-source ordering never depends on wall-clock completion
-    * order. */
-  private def stagingWave(work: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try Await.result(
-      Future.sequence(work.map(w => Future(w()))), Duration(10, "min"))
-    finally { pool.shutdownNow(); () }
   }
 
   /** The stateful shuffle sized to the fixture: every shuffle partition
@@ -546,12 +530,13 @@ object EventStream {
   private[graft] def staged[T](s: SparkSession, label: String,
       confs: Map[String, String] = Map.empty)(body: Staged => T): T =
     graft.sources.Tables.withConfs(s, confs) {
-      val h = new Staged(s, label,
-        graft.sources.Tables.scratchTempDir(s"graft-$label"))
-      try {
-        java.nio.file.Files.createDirectories(h.in)
-        body(h)
-      } finally try h.stopActive() finally graft.sources.Tables.rmTree(h.dir)
+      graft.sources.Tables.withScratch(label) { dir =>
+        val h = new Staged(s, label, dir)
+        try {
+          java.nio.file.Files.createDirectories(h.in)
+          body(h)
+        } finally h.stopActive()
+      }
     }
 
   /** The events table with every streamed column, as the harnesses stage
@@ -615,7 +600,7 @@ object EventStream {
     * sentinel (guide §2.6): independent jobs, micro-batch order carried
     * by the explicit mtimes. */
   private def stageDataThenSentinel(h: Staged, events: DataFrame): Unit =
-    stagingWave(Seq(
+    graft.sources.Tables.wave(Seq(
       () => {
         val stage0 = h.dir.resolve("stage0")
         events.coalesce(1).write.mode("overwrite").parquet(stage0.toString)
@@ -639,7 +624,7 @@ object EventStream {
   private def stageWithSideSentinels(h: Staged, events: DataFrame): Unit = {
     import h.s.implicits._
     var maxTs: java.sql.Timestamp = null
-    stagingWave(Seq(
+    graft.sources.Tables.wave(Seq(
       () => { events.coalesce(1).write.mode("overwrite")
         .parquet(h.in.toString); () },
       () => { maxTs = events.agg(max("ts")).head().getTimestamp(0) }))
@@ -1377,7 +1362,7 @@ object EventStream {
           moveOnlyParquet(stage, h.in.resolve(s"$nm-sentinel.parquet"),
             1000000000000L + 120000L + i * 60000L)
         } }
-      stagingWave(sliceWork ++ sentinelWork)
+      graft.sources.Tables.wave(sliceWork ++ sentinelWork)
       val ds = inBatches(h)
         .withWatermark("ts", "2 hours")
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -1915,7 +1900,7 @@ object EventStream {
         .withColumn("ts", col("ts") + expr("INTERVAL 30 DAYS"))
       // three independent staging jobs — one wave (guide §2.6); the
       // micro-batch order is carried by the explicit mtimes
-      stagingWave(Seq(
+      graft.sources.Tables.wave(Seq(
         () => {
           val stage1 = h.dir.resolve("stage1")
           events.filter(dayofmonth(col("ts")) <= 15)
@@ -2069,7 +2054,7 @@ object EventStream {
         .localCheckpoint() // three concurrent slice writes read it
       // three independent staging writes — one wave (guide §2.6);
       // micro-batch order is carried by the explicit mtimes
-      stagingWave((0 until 3).map(i => () => {
+      graft.sources.Tables.wave((0 until 3).map(i => () => {
         val st = h.dir.resolve(s"stage$i")
         inc.filter(pmod(col("doc_id"), lit(3)) === i)
           .coalesce(1).write.mode("overwrite").parquet(st.toString)

@@ -131,15 +131,8 @@ object BpeTrain {
     // the input — run them as ONE wave (the q201 pattern): each loop is
     // a chain of small per-step jobs, so serial execution is scheduler-
     // bound, not compute-bound; results are identical either way
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val halves = try {
-      Await.result(Future.sequence(Seq(0, 1).map(r =>
-        Future(half(r).localCheckpoint()))), Duration(10, "min"))
-    } finally { pool.shutdownNow(); () }
+    val halves = Tables.wave(Seq(0, 1).map(r => () =>
+      half(r).localCheckpoint()))
     val a = halves(0).select(col("step"), col("lsym").as("lsym_a"),
       col("rsym").as("rsym_a"), col("pair_count").as("count_a"))
     val b = halves(1).select(col("step"), col("lsym").as("lsym_b"),

@@ -394,13 +394,11 @@ class AdvancedSpec extends SparkSpec {
     import spark.implicits._
     val two = Seq((0, 10L, 55.55), (0, 99L, 55.55), (0, 7L, 1.0))
       .toDF("c_nationkey", "c_custkey", "c_acctbal")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-argmax")
-    try {
-      two.write.mode("overwrite").parquet(s"$tmp/customer.parquet")
-      val r = Advanced.argExtremes(spark, tmp.toString).collect().head
-      assert(r.getAs[Long]("richest_cust") === 99L)
-      assert(r.getAs[Long]("poorest_cust") === 7L)
-    } finally graft.sources.Tables.rmTree(tmp)
+    val dir = tmp()
+    two.write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    val r = Advanced.argExtremes(spark, dir).collect().head
+    assert(r.getAs[Long]("richest_cust") === 99L)
+    assert(r.getAs[Long]("poorest_cust") === 7L)
   }
 
   test("q148 snapshot diff: cohort counts reconstruct the generation arithmetic") {

@@ -257,6 +257,15 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("q29 and q174 release their caches") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    Seq("q29_ngram_jaccard", "q174_split_text_leakage").foreach { name =>
+      SparkEntry.queries(name)(spark, sfDir).count()
+      assert(cache.isEmpty, s"$name left a cached plan")
+    }
+  }
+
   test("q162 admission composite: statuses partition, all gates exercised") {
     val rows = Dedup.incrementalAdmission(spark, sfDir).collect()
     assert(rows.nonEmpty)

@@ -1039,8 +1039,8 @@ class PlanSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(d.toPath)
     assert(d.isDirectory && d.canWrite, d.toString)
     // per-query scratch temp dirs are creatable and deletable
-    val t = graft.sources.Tables.scratchTempDir("graft-plan-spec")
-    assert(java.nio.file.Files.isDirectory(t))
-    java.nio.file.Files.delete(t)
+    val t = graft.sources.Tables.withScratch("plan-spec") { t =>
+      assert(java.nio.file.Files.isDirectory(t)); t }
+    assert(!java.nio.file.Files.exists(t))
   }
 }

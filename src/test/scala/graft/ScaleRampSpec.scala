@@ -12,18 +12,9 @@ import org.apache.spark.sql.functions._
 class ScaleRampSpec extends SparkSpec {
 
   private lazy val staged: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ramp-spec")
-    ScaleRamp.stage(spark, sfDir, dir.toString, factor = 10)
-    sys.addShutdownHook {
-      if (java.nio.file.Files.exists(dir)) {
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().forEachRemaining(p => {
-            java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
-    }
-    dir.toString
+    val dir = tmp()
+    ScaleRamp.stage(spark, sfDir, dir, factor = 10)
+    dir
   }
 
   test("x10 staging: counts, id uniqueness, planted density all preserved") {

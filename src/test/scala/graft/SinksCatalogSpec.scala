@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 
 class SinksCatalogSpec extends SparkSpec {
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-sinks").toString
-
   test("parquet/json/csv sinks round-trip (S3, S4, S6)") {
     val dir = tmp()
     val src = Tables.load(spark, sfDir, "orders")
@@ -700,5 +697,43 @@ class SinksCatalogSpec extends SparkSpec {
     assert(eTrim.getMessage.contains("whitespace"))
     w.abort()
     assert(new java.io.File(dir).listFiles().isEmpty)
+  }
+
+  test("withScratch: a body that throws leaves its dir gone") {
+    var dir: java.nio.file.Path = null
+    val e = intercept[IllegalStateException] {
+      Tables.withScratch("bracket") { d =>
+        dir = d
+        java.nio.file.Files.writeString(d.resolve("f.txt"), "x")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(dir != null && !java.nio.file.Files.exists(dir))
+  }
+
+  test("scratchQuery: the result stays readable after its dir is deleted") {
+    var dir: java.nio.file.Path = null
+    val df = Tables.scratchQuery("bracket") { d =>
+      dir = d
+      val p = d.resolve("data").toString
+      spark.range(100).toDF("id").write.parquet(p)
+      spark.read.parquet(p).filter(col("id") % 3 === 0)
+    }
+    assert(!java.nio.file.Files.exists(dir))
+    assert(df.count() === 34)
+    assert(df.agg(sum("id")).head().getLong(0) === (0L until 100L by 3).sum)
+  }
+
+  test("q132, q382, q170, q180 and q405 leave the scratch root as it was") {
+    def listing(): Set[String] =
+      Option(Tables.scratchRoot.toFile.list()).map(_.toSet)
+        .getOrElse(Set.empty)
+    val before = listing()
+    Seq("q132_compaction", "q382_format_certificate",
+        "q170_ann_ivf_persisted", "q180_curated_export",
+        "q405_binaryfile_source")
+      .foreach(name => SparkEntry.queries(name)(spark, sfDir).count())
+    assert(listing() === before)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM — Test/fork). */
@@ -12,4 +13,22 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The suite's scratch dir: made by [[graft.sources.Tables.withScratch]]
+    * around the whole run, so it is deleted after the last test. */
+  private var scratch: java.nio.file.Path = null
+  private var made = 0
+
+  /** A fresh empty dir inside the suite's scratch dir. */
+  protected def tmp(): String = {
+    require(scratch != null, "tmp() is only available while the suite runs")
+    made += 1
+    java.nio.file.Files.createDirectory(scratch.resolve(s"t$made")).toString
+  }
+
+  override def run(testName: Option[String], args: Args): Status =
+    graft.sources.Tables.withScratch(s"spec-$suiteName") { dir =>
+      scratch = dir
+      try super.run(testName, args) finally scratch = null
+    }
 }

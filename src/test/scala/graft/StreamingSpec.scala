@@ -27,7 +27,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tumblingCounts aggregates a file-sourced micro-batch like its batch twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tmp()
     // stage the sf0.001 events as the streamed input
     graft.sources.Tables.load(spark, sfDir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
@@ -59,7 +59,7 @@ class StreamingSpec extends SparkSpec {
     // re-running the same query against the same checkpoint must process
     // nothing new and append nothing — the recovery guarantee that makes
     // the sink safe to restart mid-backfill on a real cluster
-    val dir = java.nio.file.Files.createTempDirectory("graft-eo").toString
+    val dir = tmp()
     graft.sources.Tables.load(spark, sfDir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"), col("props"))
@@ -81,7 +81,7 @@ class StreamingSpec extends SparkSpec {
     // streaming twin of q88: two staged files → two micro-batches with
     // overlapping keys; the snapshot must hold exactly one row per key,
     // the later batch's (and within a batch, the later timestamp's)
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = tmp()
     import spark.implicits._
     def stage(i: Int, rows: Seq[Event]): Unit = {
       val tmpd = s"$dir/stage$i"
@@ -121,7 +121,7 @@ class StreamingSpec extends SparkSpec {
     // (last good generation) and converges. Prove it by reconstructing
     // each crash-window filesystem state and replaying mergeBatch.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-chaos").toString
+    val dir = tmp()
     val snap = s"$dir/snap"
     def read() = spark.read.parquet(snap).as[Event].collect()
       .map(e => (e.event_id, e.event_type, e.value)).sortBy(_._1).toSeq
@@ -172,7 +172,7 @@ class StreamingSpec extends SparkSpec {
     // must be EMITTED once the watermark passes them and their state rows
     // REMOVED — the property that keeps state bounded on an unbounded
     // stream. maxFilesPerTrigger=1 forces one batch per staged file.
-    val dir = java.nio.file.Files.createTempDirectory("graft-soak").toString
+    val dir = tmp()
     val events = graft.sources.Tables.load(spark, sfDir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"), col("props"))
@@ -551,7 +551,7 @@ class StreamingSpec extends SparkSpec {
   test("q147 routeBatch replay is idempotent: same batchId overwrites in place") {
     // a crash between sink writes re-delivers the batch with the same id;
     // routing it again must leave identical contents on BOTH sides
-    val dir = java.nio.file.Files.createTempDirectory("graft-route").toString
+    val dir = tmp()
     // deterministic, materialized batch: LIMIT without ORDER BY is not
     // stable across the several actions below, and the idempotence claim
     // needs the SAME rows on every evaluation
@@ -1015,75 +1015,67 @@ class StreamingSpec extends SparkSpec {
   test("q335 append-only enforcement: a committed file that vanishes or " +
       "shifts in the sorted listing fails replay LOUDLY, not silently") {
     import graft.sources.fixedwidth.FwOffset
-    val dir = java.nio.file.Files.createTempDirectory("fw_anchor").toFile
-    try {
-      def put(name: String): Unit =
-        java.nio.file.Files.writeString(
-          new java.io.File(dir, name).toPath, "0000000001\n")
-      put("part-0001.fw"); put("part-0002.fw")
-      val hc = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      val spec = graft.sources.fixedwidth.FixedWidthSource
-        .parseSpec("v:0:10:long")
-      val stream = new graft.sources.fixedwidth.FwMicroBatchStream(
-        spec, spec, Array.empty, dir.getAbsolutePath, hc)
-      val end0 = stream.latestOffset().asInstanceOf[FwOffset]
-      assert(end0.n === 2 && end0.last.exists(_.endsWith("part-0002.fw")))
-      // happy path: replay of (0, end0) plans both files
-      assert(stream.planInputPartitions(FwOffset(0, None), end0).length === 2)
-      // violation 1: a file lands sorting BEFORE the committed prefix
-      put("part-0000.fw")
-      val e1 = intercept[IllegalStateException] {
-        stream.planInputPartitions(end0, stream.latestOffset())
-      }
-      assert(e1.getMessage.contains("append-only"))
-      // violation 2: a committed file is deleted
-      assert(new java.io.File(dir, "part-0000.fw").delete())
-      assert(new java.io.File(dir, "part-0002.fw").delete())
-      val e2 = intercept[IllegalStateException] {
-        stream.planInputPartitions(FwOffset(0, None), end0)
-      }
-      assert(e2.getMessage.contains("append-only"))
-      // violation 3: a corrupt/hand-edited checkpoint (count 0 with a
-      // non-empty anchor — FwOffset.of never emits this) gets the
-      // contract message, not an IndexOutOfBoundsException
-      val e3 = intercept[IllegalStateException] {
-        stream.planInputPartitions(FwOffset(0, Some("x.fw")),
-          stream.latestOffset())
-      }
-      assert(e3.getMessage.contains("append-only"))
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete(); ()
+    val dir = new java.io.File(tmp())
+    def put(name: String): Unit =
+      java.nio.file.Files.writeString(
+        new java.io.File(dir, name).toPath, "0000000001\n")
+    put("part-0001.fw"); put("part-0002.fw")
+    val hc = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val spec = graft.sources.fixedwidth.FixedWidthSource
+      .parseSpec("v:0:10:long")
+    val stream = new graft.sources.fixedwidth.FwMicroBatchStream(
+      spec, spec, Array.empty, dir.getAbsolutePath, hc)
+    val end0 = stream.latestOffset().asInstanceOf[FwOffset]
+    assert(end0.n === 2 && end0.last.exists(_.endsWith("part-0002.fw")))
+    // happy path: replay of (0, end0) plans both files
+    assert(stream.planInputPartitions(FwOffset(0, None), end0).length === 2)
+    // violation 1: a file lands sorting BEFORE the committed prefix
+    put("part-0000.fw")
+    val e1 = intercept[IllegalStateException] {
+      stream.planInputPartitions(end0, stream.latestOffset())
     }
+    assert(e1.getMessage.contains("append-only"))
+    // violation 2: a committed file is deleted
+    assert(new java.io.File(dir, "part-0000.fw").delete())
+    assert(new java.io.File(dir, "part-0002.fw").delete())
+    val e2 = intercept[IllegalStateException] {
+      stream.planInputPartitions(FwOffset(0, None), end0)
+    }
+    assert(e2.getMessage.contains("append-only"))
+    // violation 3: a corrupt/hand-edited checkpoint (count 0 with a
+    // non-empty anchor — FwOffset.of never emits this) gets the
+    // contract message, not an IndexOutOfBoundsException
+    val e3 = intercept[IllegalStateException] {
+      stream.planInputPartitions(FwOffset(0, Some("x.fw")),
+        stream.latestOffset())
+    }
+    assert(e3.getMessage.contains("append-only"))
   }
 
   test("q334 connector rejects a user-supplied schema that contradicts " +
       "the spec instead of silently discarding it") {
-    val dir = java.nio.file.Files.createTempDirectory("fw_schema").toFile
-    try {
-      java.nio.file.Files.writeString(
-        new java.io.File(dir, "a.fw").toPath, "0000000001\n")
-      val e = intercept[IllegalArgumentException] {
-        spark.read.format("graft.sources.fixedwidth.FixedWidthSource")
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("wrong",
-              org.apache.spark.sql.types.StringType))))
-          .option("spec", "v:0:10:long")
-          .option("path", dir.getAbsolutePath)
-          .load().collect()
-      }
-      assert(e.getMessage.contains("spec-derived schema"))
-      // and the matching schema is accepted
-      val ok = spark.read.format("graft.sources.fixedwidth.FixedWidthSource")
+    val dir = new java.io.File(tmp())
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "a.fw").toPath, "0000000001\n")
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft.sources.fixedwidth.FixedWidthSource")
         .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType))))
+          org.apache.spark.sql.types.StructField("wrong",
+            org.apache.spark.sql.types.StringType))))
         .option("spec", "v:0:10:long")
         .option("path", dir.getAbsolutePath)
         .load().collect()
-      assert(ok.map(_.getLong(0)).toSeq === Seq(1L))
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete(); ()
     }
+    assert(e.getMessage.contains("spec-derived schema"))
+    // and the matching schema is accepted
+    val ok = spark.read.format("graft.sources.fixedwidth.FixedWidthSource")
+      .schema(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("v",
+          org.apache.spark.sql.types.LongType))))
+      .option("spec", "v:0:10:long")
+      .option("path", dir.getAbsolutePath)
+      .load().collect()
+    assert(ok.map(_.getLong(0)).toSeq === Seq(1L))
   }
 }
