@@ -1,7 +1,8 @@
 package graft.ml
 
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.evaluation.ClusteringEvaluator
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,100 +13,286 @@ import org.apache.spark.storage.StorageLevel
   * the reference's kmeans_clustering.py:97-225 / full_scale_pipeline.py
   * 196-230 re-expressed.
   *
-  * Scale notes: the input is persisted once across the k sequential fits
-  * (the elbow loop re-reads its input k times otherwise — SURVEY §7.4 risk
-  * 5); Lloyd iterations broadcast centers and aggregate partials, so cost is
-  * O(iters · rows · k) with no shuffle growth in k. Silhouette evaluation on
-  * the full set is O(rows · k); for very large inputs pass `evalFraction`
-  * to score on a seeded sub-sample (the notebook's nb-cell-48 trick).
+  * The final model ([[fit]]) is MLlib's. The elbow ([[elbow]]) trains every
+  * candidate k in lockstep: one Spark job per Lloyd round assigns each row
+  * to the nearest center of every still-moving k at once, so the sweep
+  * scans its input once per round instead of once per (k, round), and the
+  * silhouettes of all k are scored in two more jobs. Its init is seeded
+  * k-means++ over one bounded driver-side sample, not MLlib's k-means||,
+  * so a k's centers (and WSSSE) can differ from an MLlib fit's; MlSpec
+  * checks that the chosen k matches an MLlib sweep's.
   */
 object KMeansJob {
   final case class ElbowPoint(k: Int, wssse: Double, silhouette: Double)
 
+  /** MLlib's convergence threshold (`KMeans.tol`): a k stops once every one
+    * of its centers moved at most this far in a round. */
+  private val Tol = 1e-4
+  /** Lloyd iterations of the local refinement after k-means++ seeding
+    * (MLlib's LocalKMeans runs the same 30 over its k-means|| candidates). */
+  private val LocalIters = 30
+
+  /** The `row` solver is pinned: `auto` first runs a Summarizer job to
+    * choose between row and block, and picks row for these inputs anyway
+    * (MlSpec asserts identical centers and cost). */
   def fit(df: DataFrame, k: Int, featuresCol: String = "features",
           seed: Long = 42L, maxIter: Int = 30): KMeansModel =
     new KMeans()
-      .setK(k).setSeed(seed).setMaxIter(maxIter)
+      .setK(k).setSeed(seed).setMaxIter(maxIter).setSolver("row")
       .setFeaturesCol(featuresCol).setPredictionCol("cluster")
       .fit(df)
 
-  def silhouette(predictions: DataFrame, featuresCol: String = "features"): Double =
-    new ClusteringEvaluator()
-      .setMetricName("silhouette").setDistanceMeasure("squaredEuclidean")
-      .setFeaturesCol(featuresCol).setPredictionCol("cluster")
-      .evaluate(predictions)
-
-  /** M8: elbow sweep — WSSSE (model.summary.trainingCost) + silhouette per
-    * k; caches the input across fits (materialized eagerly so concurrent
-    * fits never race the lazy cache fill and recompute the subtree).
+  /** M8: elbow sweep — WSSSE and squared-Euclidean silhouette per k, in
+    * `kRange` order.
     *
-    * `parallel=true` runs the k fits as concurrent Spark jobs — right when
-    * the sweep input is a (sampled) frame far smaller than the cluster, so
-    * one fit can't saturate it and the sweep is scheduler-bound. Leave
-    * sequential when each fit already uses the whole cluster (the 100 TB
-    * full-data case). Results are identical either way: each fit is
-    * independently seeded and Future.sequence preserves k order.
+    * The input is cached and counted once. Init: one seeded sample of at
+    * most max(1000, 50·max k) rows (all rows when the input is smaller) is
+    * collected, and each k is seeded by k-means++ over it, then refined by
+    * Lloyd on the sample as MLlib's LocalKMeans does. Training: up to
+    * `maxIter` lockstep rounds, each one `mapPartitions` job that sums
+    * per-(k, cluster) features, counts and cost for every k still moving.
+    * A k stops when all its centers move ≤ 1e-4 (MLlib's `tol`); an empty
+    * cluster keeps its center; WSSSE is the cost of the last round's
+    * assignment (MLlib's `trainingCost` convention). Silhouette is
+    * `ClusteringEvaluator`'s squared-Euclidean formula, fused across k
+    * (see [[silhouettes]]); with `evalFraction` < 1 it is scored on one
+    * seeded sample of the input. Every partial is combined on the driver
+    * in partition order, so equal inputs give equal points.
     *
-    * Concurrency is bounded by a dedicated pool (`maxConcurrent` driver
-    * threads — each pending fit is just a blocked submitter thread, so a
-    * small bound suffices and a runaway kRange can't exhaust the global
-    * pool), and the whole sweep is bounded by `timeout` rather than
-    * awaiting forever on a hung job. On timeout the in-flight fits are
-    * actually KILLED, not abandoned: every fit runs under a sweep-scoped
-    * Spark job group (interruptOnCancel) that is cancelled before the
-    * timeout propagates, and the pool is shutdownNow'd so blocked
-    * submitter threads are interrupted — a hung job cannot keep consuming
-    * the cluster after the sweep gives up. */
+    * `parallel` is ignored: the lockstep rounds already run every k in one
+    * job. It stays for source compatibility with callers that pass it. */
   def elbow(df: DataFrame, kRange: Seq[Int], featuresCol: String = "features",
             seed: Long = 42L, maxIter: Int = 30,
-            evalFraction: Double = 1.0, parallel: Boolean = false,
-            maxConcurrent: Int = 4,
-            timeout: scala.concurrent.duration.Duration =
-              scala.concurrent.duration.Duration(30, "min")): Seq[ElbowPoint] = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    def point(k: Int): ElbowPoint = {
-      val model = fit(cached, k, featuresCol, seed, maxIter)
-      val preds = model.transform(cached)
-      val evalSet =
-        if (evalFraction >= 1.0) preds
-        else preds.sample(withReplacement = false, evalFraction, seed)
-      ElbowPoint(k, model.summary.trainingCost, silhouette(evalSet, featuresCol))
-    }
+            evalFraction: Double = 1.0,
+            parallel: Boolean = false): Seq[ElbowPoint] = {
+    require(kRange.nonEmpty && kRange.forall(_ > 1),
+      s"KMeansJob.elbow: every k must be > 1, got $kRange")
+    val cached = df.select(featuresCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (parallel) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        val sc = df.sparkSession.sparkContext
-        val group = s"graft-elbow-${java.util.UUID.randomUUID()}"
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(maxConcurrent, kRange.size)))
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        var done = false
-        try {
-          val r = Await.result(
-            Future.sequence(kRange.map(k => Future {
-              // setJobGroup is thread-local: stamp it inside the submitter
-              // thread so every Spark job this fit launches joins the group
-              sc.setJobGroup(group, s"elbow fit k=$k", interruptOnCancel = true)
-              try point(k) finally sc.clearJobGroup()
-            })),
-            timeout)
-          done = true
-          r
-        } finally {
-          // failure path (timeout OR a fit throwing first — Future.sequence
-          // fails fast while sibling fits are mid-job): shut the pool down
-          // FIRST so no queued fit can start after the group cancel and
-          // launch jobs that would never be cancelled, THEN cancel the
-          // group to kill the in-flight fits' Spark jobs
-          pool.shutdownNow()
-          if (!done) sc.cancelJobGroup(group)
-          ()
+      val n = cached.count()
+      require(n > 0, "KMeansJob.elbow: empty input")
+      val cap = math.max(1000, 50 * kRange.max)
+      val sample =
+        if (n <= cap) vectors(cached).collect()
+        else vectors(cached.sample(withReplacement = false,
+          cap.toDouble / n, seed)).collect().take(cap)
+      val ks = kRange.toArray
+      val centers = ks.map(k =>
+        kMeansPlusPlus(sample, k, new scala.util.Random(seed + k)))
+      val cost = new Array[Double](ks.length)
+      val data = vectors(cached)
+      var moving = ks.indices.toArray
+      var round = 0
+      while (moving.nonEmpty && round < maxIter) {
+        val cs = moving.map(centers)
+        val acc = pass(data, moving.map(ks), cs.head.head.length) { (a, x) =>
+          var i = 0
+          while (i < cs.length) {
+            val c = nearest(cs(i), x)
+            a.addPoint(i, c, x)
+            a.perK(i) += sqdist(cs(i)(c), x)
+            i += 1
+          }
         }
-      } else kRange.map(point)
+        moving = moving.zipWithIndex.filter { case (ki, i) =>
+          cost(ki) = acc.perK(i)
+          recenter(centers(ki), acc, i)
+        }.map(_._1)
+        round += 1
+      }
+      val evalSet =
+        if (evalFraction >= 1.0) cached
+        else cached.sample(withReplacement = false, evalFraction, seed)
+      val sil = silhouettes(evalSet, featuresCol, centers)
+      ks.indices.map(i => ElbowPoint(ks(i), cost(i), sil(i)))
     } finally { cached.unpersist(); () }
   }
+
+  /** `ClusteringEvaluator`'s squared-Euclidean silhouette of `featuresCol`
+    * for every center set at once, each row assigned to its nearest center
+    * (ties → smaller index). Pass 1 sums features, squared norms and counts
+    * per (center set, cluster); pass 2 scores each row against those sums
+    * and averages per center set. Two jobs, whatever the number of sets. */
+  private[graft] def silhouettes(df: DataFrame, featuresCol: String,
+                                 centerSets: Array[Array[Array[Double]]]): Array[Double] = {
+    val data = vectors(df.select(featuresCol))
+    val d = centerSets.head.head.length
+    val ks = centerSets.map(_.length)
+    val stats = pass(data, ks, d) { (a, x) =>
+      val sq = squaredNorm(x)
+      var i = 0
+      while (i < centerSets.length) {
+        val c = nearest(centerSets(i), x)
+        a.addPoint(i, c, x)
+        a.normSums(i)(c) += sq
+        i += 1
+      }
+    }
+    ks.indices.foreach { i =>
+      require(stats.counts(i).count(_ > 0) > 1,
+        s"silhouette needs more than one non-empty cluster (k = ${ks(i)})")
+    }
+    val scores = pass(data, ks, d) { (a, x) =>
+      val sq = squaredNorm(x)
+      var i = 0
+      while (i < centerSets.length) {
+        a.perK(i) += coefficient(stats, i, nearest(centerSets(i), x), x, sq)
+        i += 1
+      }
+    }
+    ks.indices.map(i => scores.perK(i) / stats.counts(i).sum.toDouble).toArray
+  }
+
+  /** One row's silhouette coefficient against set `i`'s cluster sums: the
+    * evaluator's `computeSilhouetteCoefficient` with unit weights. */
+  private def coefficient(s: Acc, i: Int, own: Int, x: Array[Double],
+                          sq: Double): Double = {
+    val counts = s.counts(i)
+    def avgDist(c: Int): Double = {
+      val w = counts(c).toDouble
+      var dot = 0.0
+      var j = 0
+      while (j < x.length) { dot += x(j) * s.sums(i)(c * x.length + j); j += 1 }
+      sq + s.normSums(i)(c) / w - 2 * dot / w
+    }
+    val w = counts(own).toDouble
+    if (w == 1.0) 0.0
+    else {
+      var neighbour = Double.MaxValue
+      var c = 0
+      while (c < counts.length) {
+        if (c != own && counts(c) > 0) neighbour = math.min(neighbour, avgDist(c))
+        c += 1
+      }
+      val current = avgDist(own) * w / (w - 1.0)
+      if (current < neighbour) 1 - current / neighbour
+      else if (current > neighbour) neighbour / current - 1
+      else 0.0
+    }
+  }
+
+  /** Per-(center set, cluster) partial sums of one pass over the rows:
+    * feature sums (k·d per set), squared-norm sums, counts, and one scalar
+    * per set. */
+  private final class Acc(ks: Array[Int], d: Int) extends Serializable {
+    val sums: Array[Array[Double]] = ks.map(k => new Array[Double](k * d))
+    val normSums: Array[Array[Double]] = ks.map(k => new Array[Double](k))
+    val counts: Array[Array[Long]] = ks.map(k => new Array[Long](k))
+    val perK: Array[Double] = new Array[Double](ks.length)
+
+    def addPoint(i: Int, c: Int, x: Array[Double]): Unit = {
+      val s = sums(i)
+      var j = 0
+      while (j < d) { s(c * d + j) += x(j); j += 1 }
+      counts(i)(c) += 1
+    }
+
+    def merge(o: Acc): Acc = {
+      def add(a: Array[Double], b: Array[Double]): Unit =
+        a.indices.foreach(j => a(j) += b(j))
+      ks.indices.foreach { i =>
+        add(sums(i), o.sums(i)); add(normSums(i), o.normSums(i))
+        counts(i).indices.foreach(c => counts(i)(c) += o.counts(i)(c))
+        perK(i) += o.perK(i)
+      }
+      this
+    }
+  }
+
+  /** One job: `add` folds every row into a per-partition [[Acc]]; the
+    * partials are merged on the driver in partition order, so the sums do
+    * not depend on task completion order. */
+  private def pass(data: RDD[Array[Double]], ks: Array[Int], d: Int)
+                  (add: (Acc, Array[Double]) => Unit): Acc =
+    data.mapPartitions { rows =>
+      val a = new Acc(ks, d)
+      rows.foreach(add(a, _))
+      Iterator.single(a)
+    }.collect().reduce(_ merge _)
+
+  /** Moves set `i`'s centers to their cluster means (an empty cluster keeps
+    * its center); true while some center moved more than [[Tol]]. */
+  private def recenter(cs: Array[Array[Double]], acc: Acc, i: Int): Boolean = {
+    var moved = false
+    cs.indices.foreach { c =>
+      val n = acc.counts(i)(c)
+      if (n > 0) {
+        val mean = Array.tabulate(cs(c).length)(j =>
+          acc.sums(i)(c * cs(c).length + j) / n)
+        if (sqdist(mean, cs(c)) > Tol * Tol) moved = true
+        cs(c) = mean
+      }
+    }
+    moved
+  }
+
+  /** Seeded k-means++ over `pts`, then up to [[LocalIters]] Lloyd rounds
+    * on them until no assignment changes; a cluster that empties is
+    * re-seeded at a random point (MLlib's `LocalKMeans.kMeansPlusPlus`
+    * with unit weights). */
+  private def kMeansPlusPlus(pts: Array[Array[Double]], k: Int,
+                             rand: scala.util.Random): Array[Array[Double]] = {
+    val centers = new Array[Array[Double]](k)
+    centers(0) = pts(rand.nextInt(pts.length))
+    val cost = pts.map(sqdist(_, centers(0)))
+    (1 until k).foreach { i =>
+      val r = rand.nextDouble() * cost.sum
+      var acc = 0.0
+      var j = 0
+      while (j < pts.length && acc < r) { acc += cost(j); j += 1 }
+      centers(i) = pts(math.max(j - 1, 0))
+      pts.indices.foreach(p => cost(p) = math.min(cost(p), sqdist(pts(p), centers(i))))
+    }
+    val d = pts.head.length
+    val assigned = Array.fill(pts.length)(-1)
+    var iter = 0
+    var changed = true
+    while (changed && iter < LocalIters) {
+      changed = false
+      val sums = Array.fill(k)(new Array[Double](d))
+      val counts = new Array[Int](k)
+      pts.indices.foreach { p =>
+        val c = nearest(centers, pts(p))
+        if (c != assigned(p)) { assigned(p) = c; changed = true }
+        (0 until d).foreach(j => sums(c)(j) += pts(p)(j))
+        counts(c) += 1
+      }
+      (0 until k).foreach { c =>
+        centers(c) =
+          if (counts(c) == 0) pts(rand.nextInt(pts.length))
+          else sums(c).map(_ / counts(c))
+      }
+      iter += 1
+    }
+    centers
+  }
+
+  private def vectors(df: DataFrame): RDD[Array[Double]] =
+    df.rdd.map(_.getAs[Vector](0).toArray)
+
+  /** Index of the center nearest to `x` (ties → smaller index). */
+  private def nearest(cs: Array[Array[Double]], x: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cs.length) {
+      val dd = sqdist(cs(c), x)
+      if (dd < bestD) { best = c; bestD = dd }
+      c += 1
+    }
+    best
+  }
+
+  private def sqdist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < a.length) { val t = a(j) - b(j); s += t * t; j += 1 }
+    s
+  }
+
+  /** The evaluator's squared norm, computed the way it computes it. */
+  private def squaredNorm(x: Array[Double]): Double =
+    math.pow(Vectors.norm(Vectors.dense(x), 2.0), 2.0)
 
   /** Best k = argmax silhouette (kmeans_clustering.py:135). */
   def bestK(points: Seq[ElbowPoint]): Int = points.maxBy(_.silhouette).k
@@ -157,14 +344,13 @@ object KMeansJob {
   }
 
   /** Elbow sweep as a query (rows-only check): k, WSSSE, silhouette.
-    * The sweep input is tiny relative to the cluster → parallel fits.
     *
     * Silhouette is scored on a seeded 25% evaluation sample — the
     * reference's own scalable pattern (kmeans_large_scale.py:27-54 caps
     * the input at SAMPLE_SIZE = 2M via a seeded sample_fraction rather
     * than touching the corpus): silhouette is
     * O(rows·k) per k and is pure EVALUATION, so sampling it changes cost,
-    * not the fitted models or their WSSSE. MlSpec band-asserts the
+    * not the trained centers or their WSSSE. MlSpec band-asserts the
     * sampled sweep selects the same k as the full-evaluation sweep. */
   def embeddingElbow(s: SparkSession, dir: String): DataFrame = {
     val spark = s
@@ -173,12 +359,6 @@ object KMeansJob {
       graft.sources.Tables.fanOut(
         graft.sources.Tables.load(s, dir, "embeddings"), "vec_id", 8)
         .sortWithinPartitions("vec_id"))
-    // maxConcurrent = |kRange| (bound structurally, not by eyeball): one
-    // wave of concurrent fits instead of 4+1 (the sweep input is far
-    // smaller than the cluster, so the fits are scheduler-bound, not
-    // resource-bound — exactly `parallel`'s case)
-    val ks = 2 to 6
-    elbow(feats, ks, maxIter = 20, evalFraction = 0.25, parallel = true,
-      maxConcurrent = ks.size).toDF()
+    elbow(feats, 2 to 6, maxIter = 20, evalFraction = 0.25).toDF()
   }
 }

@@ -48,7 +48,9 @@ object Knn {
     * reference sorts all |train| distances per test row, :147-149).
     * Distance ties break toward the smaller train id, so the selected
     * neighbor set is a deterministic function of the data — independent
-    * of broadcast/collect order. */
+    * of broadcast/collect order. The k winners come back sorted by
+    * (distance, train id); since that order is total, every j-prefix is
+    * exactly the top-j set. */
   private[graft] def topK(train: Array[(Vector, Int, Long)], q: Vector,
                           k: Int): (Array[Int], Array[Double]) = {
     val kk = math.min(k, train.length)
@@ -71,18 +73,22 @@ object Knn {
       }
       i += 1
     }
-    (labels, dists)
+    val order = (0 until kk).sortWith((a, b) =>
+      dists(a) < dists(b) || (dists(a) == dists(b) && ids(a) < ids(b)))
+    (order.map(labels).toArray, order.map(dists).toArray)
   }
 
-  /** Broadcast-kNN scoring: adds `prediction` to `test`.
+  /** Adds one IntegerType column per k to `test`, named `names(i)` for
+    * `ks(i)`: the vote over that row's k nearest train points. One
+    * broadcast and one top-max(ks) search per row serve every k, each k
+    * voting on its prefix of the sorted neighbors.
     *
     * @param train frame with (featuresCol, labelCol); must fit in a
     *              broadcast (sample upstream if not — R1 semantics)
     */
-  def predict(train: DataFrame, test: DataFrame, k: Int,
-              featuresCol: String = "features", labelCol: String = "label",
-              distanceWeighted: Boolean = false,
-              idCol: String = ""): DataFrame = {
+  private def votes(train: DataFrame, test: DataFrame, ks: Seq[Int],
+                    names: Seq[String], featuresCol: String, labelCol: String,
+                    distanceWeighted: Boolean, idCol: String): DataFrame = {
     val spark = train.sparkSession
     // tie-break ids: a real id column when the caller has one (makes the
     // result a pure function of the data), else collect order
@@ -101,32 +107,43 @@ object Knn {
     require(trainArr.nonEmpty,
       s"Knn.predict: train set is empty (filtered out upstream?)")
     val bc = spark.sparkContext.broadcast(trainArr)
-    val outSchema = StructType(test.schema.fields :+
-      StructField("prediction", IntegerType, nullable = false))
+    val outSchema = StructType(test.schema.fields ++
+      names.map(StructField(_, IntegerType, nullable = false)))
     val featIdx = test.schema.fieldIndex(featuresCol)
+    val maxK = ks.max
     val rows = test.rdd.mapPartitions { iter =>
       iter.map { row =>
-        val q = row.getAs[Vector](featIdx)
-        val (labels, dists) = topK(bc.value, q, k)
-        Row.fromSeq(row.toSeq :+ vote(labels, dists, distanceWeighted))
+        val (labels, dists) = topK(bc.value, row.getAs[Vector](featIdx), maxK)
+        Row.fromSeq(row.toSeq ++ ks.map(k =>
+          vote(labels.take(k), dists.take(k), distanceWeighted)))
       }
     }
     spark.createDataFrame(rows, outSchema)
   }
 
+  /** Broadcast-kNN scoring: adds `prediction` to `test` (see [[votes]]). */
+  def predict(train: DataFrame, test: DataFrame, k: Int,
+              featuresCol: String = "features", labelCol: String = "label",
+              distanceWeighted: Boolean = false,
+              idCol: String = ""): DataFrame =
+    votes(train, test, Seq(k), Seq("prediction"), featuresCol, labelCol,
+      distanceWeighted, idCol)
+
   /** Grid-search k (knn_classification.py:166-190): accuracy per candidate
-    * k on a held-out frame, argmax (ties → smaller k). */
+    * k on a held-out frame, argmax (ties → smaller k). One neighbor search
+    * at max(ks) and one aggregate give every k's accuracy, each equal to
+    * scoring [[predict]] with that k. */
   def findOptimalK(train: DataFrame, holdout: DataFrame, ks: Seq[Int],
                    featuresCol: String = "features",
                    labelCol: String = "label"): (Int, Map[Int, Double]) = {
-    val accs = ks.map { k =>
-      val preds = predict(train, holdout, k, featuresCol, labelCol)
-      val acc = preds.select(
-        avg((col("prediction") === col(labelCol).cast(IntegerType))
-          .cast(DoubleType)))
-        .first().getDouble(0)
-      k -> acc
-    }.toMap
+    val cands = ks.distinct
+    val names = cands.map(k => s"__pred_$k")
+    val row = votes(train, holdout, cands, names, featuresCol, labelCol,
+        distanceWeighted = false, idCol = "")
+      .select(names.map(n => avg((col(n) === col(labelCol).cast(IntegerType))
+        .cast(DoubleType))): _*)
+      .first()
+    val accs = cands.indices.map(i => cands(i) -> row.getDouble(i)).toMap
     (ks.maxBy(k => (accs(k), -k)), accs)
   }
 

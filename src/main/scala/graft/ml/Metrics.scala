@@ -13,14 +13,17 @@ import org.apache.spark.sql.types._
   */
 object Metrics {
 
-  /** M11: accuracy / weightedPrecision / weightedRecall / f1 — four
-    * evaluator passes as in random_forest.py:131-141. */
+  /** M11: accuracy / weightedPrecision / weightedRecall / f1 as in
+    * random_forest.py:131-141, read from ONE `MulticlassMetrics` (one job).
+    * The evaluator derives each of the four from that same object, so the
+    * values equal four `evaluate` calls bit for bit. */
   def multiclass(predictions: DataFrame, labelCol: String = "label",
                  predictionCol: String = "prediction"): Map[String, Double] = {
-    val ev = new MulticlassClassificationEvaluator()
+    val m = new MulticlassClassificationEvaluator()
       .setLabelCol(labelCol).setPredictionCol(predictionCol)
-    Seq("accuracy", "weightedPrecision", "weightedRecall", "f1")
-      .map(m => m -> ev.setMetricName(m).evaluate(predictions)).toMap
+      .getMetrics(predictions)
+    Map("accuracy" -> m.accuracy, "weightedPrecision" -> m.weightedPrecision,
+      "weightedRecall" -> m.weightedRecall, "f1" -> m.weightedFMeasure)
   }
 
   /** M12: confusion matrix as groupBy().pivot() with an explicit domain (no

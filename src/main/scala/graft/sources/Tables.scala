@@ -335,9 +335,11 @@ object Sinks {
     * shuffle (a plain `coalesce` would be cheaper but forfeits both the
     * clustering and the even output sizing its lazy partition merge
     * gives up). Returns the computed file count so callers (and the
-    * SinksCatalogSpec guard) can assert the layout contract. */
-  def compactParquet(s: SparkSession, inDir: String, outDir: String,
-                     sortCols: Seq[String], targetBytes: Long): Int = {
+    * SinksCatalogSpec guard) can assert the layout contract. `schema` is
+    * the writer's schema of `inDir`, so the read infers nothing. */
+  def compactParquet(s: SparkSession, inDir: String, schema: StructType,
+                     outDir: String, sortCols: Seq[String],
+                     targetBytes: Long): Int = {
     require(sortCols.nonEmpty, "compactParquet needs >=1 sort column")
     require(targetBytes > 0, "compactParquet needs targetBytes > 0")
     val in = new org.apache.hadoop.fs.Path(inDir)
@@ -354,7 +356,8 @@ object Sinks {
       s"no top-level .parquet files under $inDir — compactParquet " +
         "expects a flat layout; compact partitioned tables per-partition")
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    parquetClustered(s.read.parquet(inDir), outDir, sortCols, numFiles = n)
+    parquetClustered(s.read.schema(schema).parquet(inDir), outDir, sortCols,
+      numFiles = n)
     n
   }
 
@@ -372,7 +375,8 @@ object Sinks {
       val frag = tmp.resolve("frag").toString
       src.repartition(64).write.mode("overwrite").parquet(frag)
       val out = tmp.resolve("compact").toString
-      compactParquet(s, frag, out, Seq("l_orderkey"), targetBytes = 32L << 20)
+      compactParquet(s, frag, src.schema, out, Seq("l_orderkey"),
+        targetBytes = 32L << 20)
       prunedAgg(s.read.schema(src.schema).parquet(out), flag = None)
     }
   }
@@ -757,7 +761,7 @@ object Sinks {
       src.repartition(8, col("l_orderkey")) // hash layout: min/max useless
         .write.mode("overwrite").parquet(path)
       val probes = Seq(7L, 1007L, 2207L, 4007L, 5507L)
-      val blooms = bloomIndex(s, path, "l_orderkey")
+      val blooms = bloomIndex(s, path, src.schema, "l_orderkey")
       val keep = blooms.collect {
         case (f, bf) if probes.exists(bf.mightContain) => f
       }.toSeq.sorted
@@ -777,11 +781,13 @@ object Sinks {
 
   /** ONE-scan per-file Bloom build: (file → bloom over `key`). Driver
     * holds ≤ numFiles sketches (the manifest cardinality contract);
-    * expected-items is sized from the total count. */
-  private[graft] def bloomIndex(s: SparkSession, path: String, key: String)
+    * expected-items is sized from the total count. `schema` is the
+    * writer's schema of `path`, so the read infers nothing. */
+  private[graft] def bloomIndex(s: SparkSession, path: String,
+                                schema: StructType, key: String)
       : Map[String, org.apache.spark.util.sketch.BloomFilter] = {
     import org.apache.spark.sql.functions._
-    val kv = s.read.parquet(path)
+    val kv = s.read.schema(schema).parquet(path)
       .select(col("_metadata.file_path").as("fp"), col(key).as("k"))
     val perFileExpect = math.max(kv.count() / 4, 64L) // ≥ rows per file
     kv.select("fp", "k").rdd

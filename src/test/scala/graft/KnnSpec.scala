@@ -2,6 +2,7 @@ package graft
 
 import graft.ml.Knn
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.functions.avg
 import scala.util.Random
 
 class KnnSpec extends SparkSpec {
@@ -31,6 +32,51 @@ class KnnSpec extends SparkSpec {
     assert(la.toSeq === Seq(4))
     val (lb, _) = Knn.topK(a.reverse, Vectors.dense(5.0), 1)
     assert(lb.toSeq === Seq(4))
+  }
+
+  /** Integer-grid train points, each placed twice with two labels, and
+    * holdout points on the grid and midway between grid points: many
+    * exact distance ties, within and across duplicates. */
+  private def tieFixture = {
+    val rnd = new Random(3)
+    val train = for {
+      x <- 0 to 4; y <- 0 to 4; l <- Seq((x + y) % 3, (x * y) % 3)
+    } yield (l.toDouble, Vectors.dense(x.toDouble, y.toDouble))
+    val hold = for {
+      x <- 0 to 8 by 1; y <- 0 to 8 by 3
+    } yield (rnd.nextInt(3).toDouble, Vectors.dense(x / 2.0, y / 2.0))
+    (train, hold)
+  }
+
+  test("topK: neighbours sorted by (distance, id); each prefix is that k's topK") {
+    val (train, hold) = tieFixture
+    val arr = train.zipWithIndex.map { case ((l, v), i) => (v, l.toInt, i.toLong) }
+      .toArray
+    hold.foreach { case (_, q) =>
+      val (labels, dists) = Knn.topK(arr, q, 7)
+      assert(dists.toSeq === dists.sorted.toSeq)
+      (1 to 7).foreach { k =>
+        val (lk, dk) = Knn.topK(arr, q, k)
+        assert(lk.toSeq === labels.take(k).toSeq, s"q=$q k=$k")
+        assert(dk.toSeq === dists.take(k).toSeq, s"q=$q k=$k")
+      }
+    }
+  }
+
+  test("findOptimalK's accuracies equal per-k predict exactly under ties") {
+    import spark.implicits._
+    val (trainRows, holdRows) = tieFixture
+    val train = trainRows.toDF("label", "features")
+    val hold = holdRows.toDF("label", "features")
+    val ks = Seq(1, 3, 4, 7)
+    val (best, accs) = Knn.findOptimalK(train, hold, ks)
+    ks.foreach { k =>
+      val acc = Knn.predict(train, hold, k)
+        .select(avg(($"prediction" === $"label".cast("int")).cast("double")))
+        .first().getDouble(0)
+      assert(accs(k) === acc, s"k=$k")
+    }
+    assert(best === ks.maxBy(k => (accs(k), -k)))
   }
 
   test("broadcast kNN classifies separable blobs perfectly") {

@@ -1,7 +1,10 @@
 package graft
 
 import graft.ml._
+import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.evaluation.{ClusteringEvaluator, MulticlassClassificationEvaluator}
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -67,6 +70,79 @@ class MlSpec extends SparkSpec {
     }
   }
 
+  /** 4 seeded gaussian hotspots in 2-d (the pipebench geo frame's shape). */
+  private lazy val hotspots = {
+    val rnd = new Random(7)
+    val centers = Seq((0.0, 0.0), (4.0, 0.5), (0.5, 4.0), (4.5, 4.5))
+    val rows = for {
+      (cx, cy) <- centers
+      _ <- 0 until 150
+    } yield Tuple1(Vectors.dense(cx + rnd.nextGaussian() * 0.7,
+      cy + rnd.nextGaussian() * 0.7))
+    import spark.implicits._
+    rows.toDF("features")
+  }
+
+  /** The reference's sweep with MLlib's own parts: ml KMeans (seed 42) per
+    * k, scored by ClusteringEvaluator; argmax silhouette. */
+  private def mllibBestK(df: DataFrame, ks: Seq[Int], maxIter: Int): Int = {
+    val ev = new ClusteringEvaluator().setDistanceMeasure("squaredEuclidean")
+      .setPredictionCol("cluster")
+    ks.maxBy(k => ev.evaluate(new KMeans().setK(k).setSeed(42L)
+      .setMaxIter(maxIter).setPredictionCol("cluster").fit(df).transform(df)))
+  }
+
+  test("KMeans fit: the pinned row solver gives auto's centers and cost") {
+    // one partition, so MLlib's cost accumulator and center sums merge in
+    // one fixed order and any difference is the solver's
+    val one = blobs.coalesce(1)
+    (2 to 5).foreach { k =>
+      val row = KMeansJob.fit(one, k)
+      val auto = new KMeans().setK(k).setSeed(42L).setMaxIter(30)
+        .setPredictionCol("cluster").fit(one)
+      assert(auto.getSolver === "auto")
+      assert(row.clusterCenters.toSeq === auto.clusterCenters.toSeq, s"k=$k")
+      assert(row.summary.trainingCost === auto.summary.trainingCost, s"k=$k")
+    }
+  }
+
+  test("KMeans elbow: fused silhouettes equal ClusteringEvaluator's") {
+    val ev = new ClusteringEvaluator().setDistanceMeasure("squaredEuclidean")
+      .setPredictionCol("cluster")
+    val models = (2 to 5).map(k => KMeansJob.fit(blobs, k))
+    val centers = models.map(_.clusterCenters.map(_.toArray)).toArray
+    Seq(blobs, blobs.sample(withReplacement = false, 0.5, 42L)).foreach { df =>
+      val fused = KMeansJob.silhouettes(df, "features", centers)
+      models.zip(fused).foreach { case (m, f) =>
+        val e = ev.evaluate(m.transform(df))
+        assert(math.abs(f - e) <= 1e-12 * math.abs(e),
+          s"k=${m.getK}: fused $f vs evaluator $e")
+      }
+    }
+  }
+
+  test("KMeans elbow picks the k an MLlib sweep picks") {
+    assert(mllibBestK(blobs, 2 to 5, 20) === 3)
+    assert(KMeansJob.bestK(KMeansJob.elbow(blobs, 2 to 5, maxIter = 20)) === 3)
+    assert(KMeansJob.bestK(KMeansJob.elbow(blobs, 2 to 5, maxIter = 20,
+      evalFraction = 0.5)) === 3)
+    val ks = Seq(2, 3, 4, 6, 8)
+    assert(mllibBestK(hotspots, ks, 10) === 4)
+    assert(KMeansJob.bestK(KMeansJob.elbow(hotspots, ks, maxIter = 10)) === 4)
+  }
+
+  test("KMeans elbow: repeatable, and leaves nothing cached") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val a = KMeansJob.elbow(hotspots, Seq(2, 4, 6), maxIter = 10,
+      evalFraction = 0.5)
+    assert(cache.isEmpty, "elbow left a cached plan")
+    val b = KMeansJob.elbow(hotspots, Seq(2, 4, 6), maxIter = 10,
+      evalFraction = 0.5)
+    assert(a === b)
+    assert(cache.isEmpty, "elbow left a cached plan")
+  }
+
   test("KMeans clusterStats: one row per cluster with exact total count") {
     val model = KMeansJob.fit(blobs, 3)
     val stats = KMeansJob.clusterStats(model.transform(blobs), Seq("label")).collect()
@@ -86,6 +162,21 @@ class MlSpec extends SparkSpec {
     assert(ovr.forall(_._2 > 0.95), ovr.toString)
     val imp = RandomForestJob.featureImportances(spark, model, Seq("f0", "f1", "f2", "f3"))
     assert(imp.count() === 4)
+  }
+
+  test("Metrics.multiclass equals four evaluator calls bit for bit") {
+    import spark.implicits._
+    val rnd = new Random(5)
+    val preds = (0 until 500).map { _ =>
+      val l = rnd.nextInt(4)
+      (l.toDouble, (if (rnd.nextDouble() < 0.6) l else rnd.nextInt(4)).toDouble)
+    }.toDF("label", "prediction")
+    val ev = new MulticlassClassificationEvaluator()
+    val m = Metrics.multiclass(preds)
+    Seq("accuracy", "weightedPrecision", "weightedRecall", "f1").foreach { n =>
+      assert(m(n) === ev.setMetricName(n).evaluate(preds), n)
+    }
+    assert(m.size === 4)
   }
 
   test("Metrics.perClass and confusionMatrix agree on hand-built predictions") {

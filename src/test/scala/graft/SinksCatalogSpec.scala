@@ -390,8 +390,8 @@ class SinksCatalogSpec extends SparkSpec {
     // target sized to land on >1 file, so the computed-count path (not
     // just the floor-1 clamp) is what's being asserted
     val target = math.max(1L, fragBytes / 3)
-    val n = Sinks.compactParquet(spark, s"$dir/frag", s"$dir/out",
-      Seq("l_orderkey"), targetBytes = target)
+    val n = Sinks.compactParquet(spark, s"$dir/frag", src.schema,
+      s"$dir/out", Seq("l_orderkey"), targetBytes = target)
     assert(n === ((fragBytes + target - 1) / target).toInt && n > 1)
     assert(parquetFiles(s"$dir/out").size === n)
     assert(spark.read.parquet(s"$dir/out").count() === src.count())
@@ -540,11 +540,12 @@ class SinksCatalogSpec extends SparkSpec {
       "strict subset of files, and no file containing a probe is skipped") {
     import org.apache.spark.sql.functions._
     val dir = tmp() + "/bloomdata"
-    graft.sources.Tables.load(spark, sfDir, "lineitem")
+    val src = graft.sources.Tables.load(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_suppkey")
-      .repartition(8, col("l_orderkey"))
+    src.repartition(8, col("l_orderkey"))
       .write.mode("overwrite").parquet(dir)
-    val blooms = graft.sources.Sinks.bloomIndex(spark, dir, "l_orderkey")
+    val blooms = graft.sources.Sinks.bloomIndex(spark, dir, src.schema,
+      "l_orderkey")
     assert(blooms.size === 8)
     val probes = Seq(7L, 1007L)
     val keep = blooms.collect {
