@@ -32,6 +32,30 @@ import graft.sources.Tables
   * carries calib_ratios (every attempt) and quiet_certified, so a
   * best-of-N artifact taken on a loud host says so itself. */
 object Bench {
+  /** The host fingerprint fields of the total line, with the names
+    * pipebench prints: cpus and the resolved master, MemTotal in kB, the
+    * JDK and Spark versions, and the git SHA of the working directory.
+    * A value that cannot be read is null. */
+  private[graft] def host(spark: org.apache.spark.sql.SparkSession,
+                          cpus: Int): String = {
+    import scala.sys.process.{Process, ProcessLogger}
+    def str(v: Option[String]) = v.fold("null")("\"" + _ + "\"")
+    val memKb = scala.util.Try {
+      val src = scala.io.Source.fromFile("/proc/meminfo")
+      try src.getLines().collectFirst {
+        case l if l.startsWith("MemTotal:") => l.split("\\s+")(1) }
+      finally src.close()
+    }.toOption.flatten
+    val sha = scala.util.Try(Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(ProcessLogger(_ => ())).trim).toOption
+      .filter(_.matches("[0-9a-f]{40}"))
+    Seq("cpus" -> cpus.toString, "master" -> str(Some(s"local[$cpus]")),
+      "mem_total_kb" -> memKb.getOrElse("null"),
+      "jdk" -> str(Option(System.getProperty("java.runtime.version"))),
+      "spark" -> str(Some(spark.version)), "git_sha" -> str(sha))
+      .map { case (k, v) => s""""$k":$v""" }.mkString(",")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // contract: bench runs on every core; SPARK_GRAFT_CPUS only overrides
@@ -220,10 +244,7 @@ object Bench {
     val ratiosJson = passCalib
       .map(s => f"${ratioOf(s)}%.2f").mkString("[", ",", "]")
     val quietCertified = calibRatio > 0 && calibRatio <= QuietRatio
-    // cpus + the resolved master in the artifact itself (round-17
-    // verdict item 1): the scaling run's core count is no longer only
-    // in the driver's wrapper
-    val totalLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"suspect":$suspectJson,"reps":$reps,"calib_sec":$calibBest%.3f,"calib_ratio":$calibRatio%.2f,"calib_ratios":$ratiosJson,"quiet_certified":$quietCertified,"cpus":$cpus,"master":"local[$cpus]","scale_probe_sec":$scaleProbeSec%.3f,"sf":"$sfDir"}"""
+    val totalLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"suspect":$suspectJson,"reps":$reps,"calib_sec":$calibBest%.3f,"calib_ratio":$calibRatio%.2f,"calib_ratios":$ratiosJson,"quiet_certified":$quietCertified,${host(spark, cpus)},"scale_probe_sec":$scaleProbeSec%.3f,"sf":"$sfDir"}"""
     println(totalLine)
     // standalone artifact: the stdout capture that becomes BENCH_r{N}.json
     // truncates to a tail window, losing most per-query timings — writing

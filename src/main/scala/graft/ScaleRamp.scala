@@ -159,7 +159,7 @@ object ScaleRamp {
     }
 
     if (tables.contains("embeddings")) {
-    val emb = s.read.parquet(s"$baseDir/embeddings.parquet")
+    val emb = graft.sources.Tables.load(s, baseDir, "embeddings")
     val embCopies = (1 until factor).map { i =>
       val vid = col("vec_id") + i * CopyOffsetVec
       emb.select(vid.as("vec_id"),
@@ -184,7 +184,7 @@ object ScaleRamp {
     }
 
     if (tables.contains("lineitem")) {
-    val li = s.read.parquet(s"$baseDir/lineitem.parquet")
+    val li = graft.sources.Tables.load(s, baseDir, "lineitem")
     writeChunked(li, (1 until factor).map(_ => li),
       s"$outDir/lineitem.parquet")
     }

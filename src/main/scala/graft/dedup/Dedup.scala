@@ -1122,7 +1122,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * shingled (cost scales with the increment, not the batch), and the
     * budget window runs over ONE source-keyed shuffle with the
     * conditional-cumulative-sum trick (ineligible rows contribute 0), so
-    * admission needs no second pass.
+    * admission needs no second pass. The report is materialized
+    * (localCheckpoint) before both caches are released, so neither
+    * outlives the call.
     *
     * The fixture adds a fifth slice to the staged increment: token-
     * REVERSED copies of every 11th doc — the same token multiset (so the
@@ -1156,53 +1158,57 @@ object Dedup extends org.apache.spark.internal.Logging {
     val shs = shingleRows(
       d.select("doc_id", "text").unionByName(fresh.select("doc_id", "text")),
       cfg).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    shs.count() // eager fill: three concurrent consumers must not race
     val pairs = bandPairsFrom(signaturesFrom(shs, cfg), cfg)
       .filter(col("doc_a") < off && col("doc_b") >= off) // cross-side only
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(shs.as("sb"), col("doc_b") === col("sb.doc_id") &&
-        col("sa.shingle") === col("sb.shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-    val matched = pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("ni"))
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "sz" -> "sza")),
-        "doc_a")
-      .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "sz" -> "szb")),
-        "doc_b")
-      .filter(round(col("ni").cast(DoubleType) /
-        (col("sza") + col("szb") - col("ni")), 6) >= cfg.jaccardThreshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-    // STAGES 3+4 — q23 quality score inline, then the q136 greedy budget
-    // prefix per source over eligible rows only
-    val wB = Window.partitionBy("source").orderBy(col("qs").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val classified = exg
-      .join(matched.withColumn("nd", lit(1)), Seq("doc_id"), "left")
-      .withColumn("qs", graft.text.TextOps.qualityScoreC)
-      .withColumn("toks", bpeTokensC(col("text")).cast(LongType))
-      .withColumn("status0",
-        when(col("seen") === 1, "dup_corpus")
-          .when(col("rk") > 1, "dup_batch")
-          .when(col("nd") === 1, "near_dup")
-          .when(col("qs") < qualityMin, "low_quality"))
-      .withColumn("cum",
-        sum(when(col("status0").isNull, col("toks")).otherwise(0L)).over(wB))
-      .withColumn("status", coalesce(col("status0"),
-        when(col("cum") <= budgetTokens, "admitted").otherwise("over_budget")))
-    def n(st: String, as: String) =
-      sum(when(col("status") === st, 1).otherwise(0)).cast(IntegerType).as(as)
-    classified.groupBy("source").agg(
-      count(lit(1)).cast(IntegerType).as("n_incoming"),
-      n("dup_corpus", "n_dup_corpus"), n("dup_batch", "n_dup_batch"),
-      n("near_dup", "n_near_dup"), n("low_quality", "n_low_quality"),
-      n("over_budget", "n_over_budget"), n("admitted", "n_admitted"),
-      sum(when(col("status") === "admitted", col("toks")).otherwise(0L))
-        .as("admitted_tokens"))
-      .orderBy("source")
+    try {
+      shs.count() // eager fill: three concurrent consumers must not race
+      pairs.count()
+      val sizes = shs.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+      val inter = pairs
+        .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
+        .join(shs.as("sb"), col("doc_b") === col("sb.doc_id") &&
+          col("sa.shingle") === col("sb.shingle"))
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
+      val matched = pairs
+        .join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("ni"))
+        .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_a", "sz" -> "sza")),
+          "doc_a")
+        .join(sizes.withColumnsRenamed(Map("doc_id" -> "doc_b", "sz" -> "szb")),
+          "doc_b")
+        .filter(round(col("ni").cast(DoubleType) /
+          (col("sza") + col("szb") - col("ni")), 6) >= cfg.jaccardThreshold)
+        .select(col("doc_b").as("doc_id")).distinct()
+      // STAGES 3+4 — q23 quality score inline, then the q136 greedy budget
+      // prefix per source over eligible rows only
+      val wB = Window.partitionBy("source")
+        .orderBy(col("qs").desc, col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val classified = exg
+        .join(matched.withColumn("nd", lit(1)), Seq("doc_id"), "left")
+        .withColumn("qs", graft.text.TextOps.qualityScoreC)
+        .withColumn("toks", bpeTokensC(col("text")).cast(LongType))
+        .withColumn("status0",
+          when(col("seen") === 1, "dup_corpus")
+            .when(col("rk") > 1, "dup_batch")
+            .when(col("nd") === 1, "near_dup")
+            .when(col("qs") < qualityMin, "low_quality"))
+        .withColumn("cum",
+          sum(when(col("status0").isNull, col("toks")).otherwise(0L)).over(wB))
+        .withColumn("status", coalesce(col("status0"),
+          when(col("cum") <= budgetTokens, "admitted").otherwise("over_budget")))
+      def n(st: String, as: String) =
+        sum(when(col("status") === st, 1).otherwise(0)).cast(IntegerType).as(as)
+      classified.groupBy("source").agg(
+        count(lit(1)).cast(IntegerType).as("n_incoming"),
+        n("dup_corpus", "n_dup_corpus"), n("dup_batch", "n_dup_batch"),
+        n("near_dup", "n_near_dup"), n("low_quality", "n_low_quality"),
+        n("over_budget", "n_over_budget"), n("admitted", "n_admitted"),
+        sum(when(col("status") === "admitted", col("toks")).otherwise(0L))
+          .as("admitted_tokens"))
+        .orderBy("source")
+        .localCheckpoint()
+    } finally { pairs.unpersist(); shs.unpersist(); () }
   }
 
   /** Edit-distance (Levenshtein) verification of LSH candidates — the third

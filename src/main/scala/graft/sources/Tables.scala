@@ -10,7 +10,9 @@ import org.apache.spark.sql.types.StructType
   * Reference behavior: `spark.read...csv` with inferSchema
   * (data_cleaning.py:27-30); here we prefer explicit schemas (SURVEY §1.3 —
   * removes the extra inference pass over the file, which at 100 TB would be a
-  * full second scan of the input).
+  * full second scan of the input). Parquet TESTDATA tables get the same: their
+  * schema is inferred once per session and table version ([[parquetSchema]])
+  * and every [[load]] then reads with it, no inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -31,9 +33,15 @@ object Tables {
     *    inference (see [[sessionConfigs]]), and the loader additionally
     *    casts any NTZ column that still slips through (a session built
     *    without [[sessionConfigs]]) — unix_micros, watermarks and
-    *    stream-stream joins all require TimestampType. */
+    *    stream-stream joins all require TimestampType.
+    *
+    * The scan reads with the table's schema from [[parquetSchema]], so
+    * only the first load of a table version in a session runs the
+    * inference job. The `events.ts` branches still see the inferred
+    * physical type: the cached schema IS the inferred one. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
     if (name == "events" && df.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)
       df.withColumn("ts",
@@ -43,6 +51,52 @@ object Tables {
       df.withColumn("ts",
         df("ts").cast(org.apache.spark.sql.types.TimestampType))
     else df
+  }
+
+  /** What makes one inferred parquet schema reusable: the table path,
+    * its leaf files' (name, length, mtime), and the session's parquet-read
+    * confs that change inference (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*`; unset ones read as Spark's defaults). */
+  private final case class SchemaKey(path: String,
+                                     files: Seq[(String, Long, Long)],
+                                     confs: Seq[(String, String)])
+
+  /** Inferred schemas per session. Sessions are held weakly, so a stopped
+    * session is not pinned. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]]()
+
+  /** The schema `spark.read.parquet(path)` infers, resolved once per
+    * (session, path, leaf-file fingerprint, parquet-read confs): the
+    * reference declares each table once in its catalog
+    * (create_tables.hql), and every read here reuses the one inference
+    * job. Cannot serve a stale schema: rewriting the table changes its
+    * leaf files' names, lengths or mtimes, hence the key, and a session
+    * whose parquet confs differ infers for itself. The fingerprint is a
+    * driver-side listing, no job. Concurrent first loads (a
+    * [[wave]]) infer once: `computeIfAbsent` runs the job for one
+    * caller while the others wait for its result. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") }.sorted
+    val cache = schemas.synchronized {
+      schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    val key = SchemaKey(path, files.sorted.toSeq, confs)
+    // drop this table's older versions: a rewrite leaves no dead entry
+    cache.keySet.removeIf(k =>
+      k.path == path && k.confs == confs && k.files != key.files)
+    cache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
   }
 
   /** Shuffle scratch directory: SPARK_GRAFT_LOCAL_DIR when set, else a
@@ -252,7 +306,8 @@ object Tables {
 
   /** Register all TESTDATA tables as temp views so spark.sql works
     * (SURVEY §3 "SQL entry": mirrors the Hive catalog role of
-    * create_tables.hql without a metastore). */
+    * create_tables.hql without a metastore). Eager and cheap: with each
+    * table's schema resolved ([[parquetSchema]]), a view costs no job. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 

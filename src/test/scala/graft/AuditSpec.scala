@@ -19,4 +19,14 @@ class AuditSpec extends SparkSpec {
       .findFirstMatchIn(r.lines.last).map(_.group(1).toLong)
     assert(inputBytes.exists(_ > 0), r.lines.last)
   }
+
+  test("after the first resolution, q355 and q05 run no schema-inference job") {
+    for (q <- Seq("q355_filter_agg", "q05_group_count")) {
+      SparkEntry.queries(q)(spark, sfDir).count()
+      val r = Audit.audit(spark, sfDir, q)
+      assert(r.jobs.nonEmpty, q)
+      assert(!r.jobs.exists(_.site.startsWith("parquet at Tables.scala")),
+        r.lines.mkString("\n"))
+    }
+  }
 }

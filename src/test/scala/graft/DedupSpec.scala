@@ -266,6 +266,14 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("q162 releases its caches") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    assert(SparkEntry.queries("q162_incremental_admission")(spark, sfDir)
+      .count() > 0)
+    assert(cache.isEmpty, "q162 left a cached plan")
+  }
+
   test("q162 admission composite: statuses partition, all gates exercised") {
     val rows = Dedup.incrementalAdmission(spark, sfDir).collect()
     assert(rows.nonEmpty)
