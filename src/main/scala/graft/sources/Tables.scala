@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.StructType
   * (data_cleaning.py:27-30); here we prefer explicit schemas (SURVEY §1.3 —
   * removes the extra inference pass over the file, which at 100 TB would be a
   * full second scan of the input). Parquet TESTDATA tables get the same: their
-  * schema is inferred once per session and table version ([[parquetSchema]])
-  * and every [[load]] then reads with it, no inference job.
+  * schema is inferred once per table version and parquet-read confs
+  * ([[parquetSchema]]), and every [[load]] then reads with it, no inference
+  * job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -36,9 +37,9 @@ object Tables {
     *    stream-stream joins all require TimestampType.
     *
     * The scan reads with the table's schema from [[parquetSchema]], so
-    * only the first load of a table version in a session runs the
-    * inference job. The `events.ts` branches still see the inferred
-    * physical type: the cached schema IS the inferred one. */
+    * only the first load of a table version under given parquet-read
+    * confs runs the inference job. The `events.ts` branches still see the
+    * inferred physical type: the cached schema IS the inferred one. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
@@ -61,21 +62,21 @@ object Tables {
                                      files: Seq[(String, Long, Long)],
                                      confs: Seq[(String, String)])
 
-  /** Inferred schemas per session. Sessions are held weakly, so a stopped
-    * session is not pinned. */
-  private val schemas = new java.util.WeakHashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]]()
+  /** Inferred schemas. The key holds everything inference depends on, so
+    * an entry is valid for any session. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
 
   /** The schema `spark.read.parquet(path)` infers, resolved once per
-    * (session, path, leaf-file fingerprint, parquet-read confs): the
-    * reference declares each table once in its catalog
-    * (create_tables.hql), and every read here reuses the one inference
-    * job. Cannot serve a stale schema: rewriting the table changes its
-    * leaf files' names, lengths or mtimes, hence the key, and a session
-    * whose parquet confs differ infers for itself. The fingerprint is a
-    * driver-side listing, no job. Concurrent first loads (a
-    * [[wave]]) infer once: `computeIfAbsent` runs the job for one
-    * caller while the others wait for its result. */
+    * (path, leaf-file fingerprint, parquet-read confs): the reference
+    * declares each table once in its catalog (create_tables.hql), and
+    * every read here reuses the one inference job. Cannot serve a stale
+    * schema: rewriting the table changes its leaf files' names, lengths
+    * or mtimes, hence the key, and a session whose parquet confs differ
+    * infers for itself. The fingerprint is a driver-side listing, no
+    * job. Concurrent first loads (a [[wave]]) infer once:
+    * `computeIfAbsent` runs the job for one caller while the others wait
+    * for its result. */
   private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
     val p = new org.apache.hadoop.fs.Path(path)
     val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -88,15 +89,8 @@ object Tables {
     val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") ||
         k.startsWith("spark.sql.legacy.parquet.") }.sorted
-    val cache = schemas.synchronized {
-      schemas.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap())
-    }
-    val key = SchemaKey(path, files.sorted.toSeq, confs)
-    // drop this table's older versions: a rewrite leaves no dead entry
-    cache.keySet.removeIf(k =>
-      k.path == path && k.confs == confs && k.files != key.files)
-    cache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    schemas.computeIfAbsent(SchemaKey(path, files.sorted.toSeq, confs),
+      _ => spark.read.parquet(path).schema)
   }
 
   /** Shuffle scratch directory: SPARK_GRAFT_LOCAL_DIR when set, else a

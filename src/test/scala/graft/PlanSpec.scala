@@ -283,7 +283,7 @@ class PlanSpec extends SparkSpec {
     // verify sides read that cache. Every plan the build executes is
     // walked through AQE stages and into cached relations, so a
     // re-explode anywhere shows up as a second Generate with output rows.
-    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -295,10 +295,18 @@ class PlanSpec extends SparkSpec {
       case r: ReusedExchangeExec => nodes(r.child)
       case _ => p.children.flatMap(nodes)
     })
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    // what the report's own plan runs: the rendered plan inlines each
+    // cached relation's ORIGINAL plan (Generate, FileScan) even though
+    // execution reads the cache, so stop at cache boundaries
+    def live(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => p +: live(a.inputPlan)
+      case _: InMemoryTableScanExec => Seq(p)
+      case _ => p +: p.children.flatMap(live)
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
     val l = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        plans.add(qe.executedPlan); () }
+        plans.add(f -> qe.executedPlan); () }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.catalog.clearCache()
@@ -309,14 +317,26 @@ class PlanSpec extends SparkSpec {
       built
     } finally spark.listenerManager.unregister(l)
     assert(df.count() > 0)
+    val ran = plans.toArray(Array.empty[(String, SparkPlan)]).toSeq
     // one entry per physical explode that produced rows, keyed by its
     // row metric (one accumulator per operator instance)
-    val ran = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+    val explodes = ran.map(_._2).flatMap(nodes)
       .collect { case g: GenerateExec
         if g.generatorOutput.exists(_.name == "shingle") &&
           g.metrics("numOutputRows").value > 0 =>
         g.metrics("numOutputRows").id -> g.simpleString(200) }.toMap
-    assert(ran.size === 1, ran.values.mkString("\n"))
+    assert(explodes.size === 1, explodes.values.mkString("\n"))
+    // the report's materialization (its localCheckpoint) re-reads the
+    // cached (doc, shingle) frame and pairs (sizes + both verify sides +
+    // the pair base), and no raw re-scan of the documents table: every
+    // consumer reads the checkpointed/cached intermediates
+    val report = ran.collect { case ("localCheckpoint", p)
+      if p.output.map(_.name) == df.columns.toSeq => live(p) }
+    assert(report.size === 1, ran.map(_._1))
+    val kinds = report.head.map(_.getClass.getSimpleName).groupBy(identity)
+      .view.mapValues(_.size).toMap.toString
+    assert(report.head.count(_.isInstanceOf[InMemoryTableScanExec]) >= 3, kinds)
+    assert(!report.head.exists(_.isInstanceOf[FileSourceScanExec]), kinds)
   }
 
   test("q161 media dedup: partial agg below the digest-keyed exchange") {

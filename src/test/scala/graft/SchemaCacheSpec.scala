@@ -6,8 +6,8 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.graft.listenerBus
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
-/** `Tables.load` infers a table's parquet schema once per session, table
-  * version and parquet-read confs, and reads with it after that. */
+/** `Tables.load` infers a table's parquet schema once per table version and
+  * parquet-read confs, and reads with it after that. */
 class SchemaCacheSpec extends SparkSpec {
   /** `body`'s result and the Spark jobs it started, counted once the
     * listener bus has delivered every event. */
@@ -27,6 +27,15 @@ class SchemaCacheSpec extends SparkSpec {
     } finally sc.removeSparkListener(l)
   }
 
+  /** A new dir holding a copy of TESTDATA table `name`: a path no load has
+    * resolved yet, so its first load infers. */
+  private def freshCopy(name: String): String = {
+    val dir = tmp()
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$name.parquet"),
+      java.nio.file.Paths.get(s"$dir/$name.parquet"))
+    dir
+  }
+
   test("a table rewritten at the same path is re-resolved, never stale") {
     import spark.implicits._
     val dir = tmp()
@@ -42,9 +51,9 @@ class SchemaCacheSpec extends SparkSpec {
   }
 
   test("events.ts is TimestampType on a first and on a cached load") {
-    val s = spark.newSession()
-    val (first, missJobs) = jobsIn(s)(Tables.load(s, sfDir, "events"))
-    val (cached, hitJobs) = jobsIn(s)(Tables.load(s, sfDir, "events"))
+    val dir = freshCopy("events")
+    val (first, missJobs) = jobsIn(spark)(Tables.load(spark, dir, "events"))
+    val (cached, hitJobs) = jobsIn(spark)(Tables.load(spark, dir, "events"))
     assert(missJobs >= 1, "the first load infers")
     assert(hitJobs == 0, "the second load reads the resolved schema")
     Seq(first, cached).foreach(df =>
@@ -62,28 +71,29 @@ class SchemaCacheSpec extends SparkSpec {
   }
 
   test("concurrent first loads through Tables.wave infer once, one schema") {
-    val s = spark.newSession()
-    val (schemas, jobs) = jobsIn(s)(Tables.wave(Seq.fill(8)(() =>
-      Tables.load(s, sfDir, "lineitem").schema)))
+    val dir = freshCopy("lineitem")
+    val (schemas, jobs) = jobsIn(spark)(Tables.wave(Seq.fill(8)(() =>
+      Tables.load(spark, dir, "lineitem").schema)))
     assert(schemas.distinct.size == 1)
-    assert(schemas.head == spark.read.parquet(s"$sfDir/lineitem.parquet").schema)
+    assert(schemas.head == spark.read.parquet(s"$dir/lineitem.parquet").schema)
     assert(jobs == 1, "one inference job for eight concurrent loads")
   }
 
   test("a session whose parquet-read conf differs gets its own resolution") {
-    val path = s"$sfDir/events.parquet"
-    Tables.load(spark, sfDir, "events")
+    val dir = freshCopy("events")
+    val path = s"$dir/events.parquet"
+    Tables.load(spark, dir, "events")
     assert(Tables.parquetSchema(spark, path)("ts").dataType === TimestampType)
     val ntz = Map("spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")
     val (df, jobs) = jobsIn(spark)(Tables.withConfs(spark, ntz) {
       assert(Tables.parquetSchema(spark, path)("ts").dataType ===
         TimestampNTZType)
-      Tables.load(spark, sfDir, "events")
+      Tables.load(spark, dir, "events")
     })
     assert(jobs >= 1, "the changed conf infers for itself")
     assert(df.schema("ts").dataType === TimestampType, "the loader casts NTZ")
     // the default resolution is still cached beside it
-    val (_, back) = jobsIn(spark)(Tables.load(spark, sfDir, "events"))
+    val (_, back) = jobsIn(spark)(Tables.load(spark, dir, "events"))
     assert(back == 0)
   }
 }
