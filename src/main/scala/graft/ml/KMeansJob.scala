@@ -1,26 +1,32 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel, seededKMeans}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.random.BernoulliCellSampler
 
 /** K-Means clustering job (SURVEY.md §2.8 M7-M10): elbow sweep over k with
   * WSSSE + silhouette, best-k selection, final fit, and per-cluster stats —
   * the reference's kmeans_clustering.py:97-225 / full_scale_pipeline.py
   * 196-230 re-expressed.
   *
-  * The final model ([[fit]]) is MLlib's. The elbow ([[elbow]]) trains every
-  * candidate k in lockstep: one Spark job per Lloyd round assigns each row
-  * to the nearest center of every still-moving k at once, so the sweep
-  * scans its input once per round instead of once per (k, round), and the
-  * silhouettes of all k are scored in two more jobs. Its init is seeded
-  * k-means++ over one bounded driver-side sample, not MLlib's k-means||,
-  * so a k's centers (and WSSSE) can differ from an MLlib fit's; MlSpec
-  * checks that the chosen k matches an MLlib sweep's.
+  * The elbow ([[elbow]]) trains every candidate k in lockstep: one Spark
+  * job per Lloyd round assigns each row to the nearest center of every
+  * still-moving k at once, so the sweep scans its input once per round
+  * instead of once per (k, round), and the silhouettes of all k are scored
+  * in two more jobs. Its init is seeded k-means++ over one bounded
+  * driver-side sample, not MLlib's k-means||, so a k's centers (and WSSSE)
+  * can differ from an MLlib fit's; MlSpec checks that the chosen k matches
+  * an MLlib sweep's.
+  *
+  * The final model ([[fit]]) is trained by MLlib's Lloyd. After an elbow
+  * over the same `Dataset` object it starts from the elbow's centers for
+  * that k, so it is not what a plain MLlib fit (k-means|| init) would
+  * give; otherwise it is exactly that plain fit.
   */
 object KMeansJob {
   final case class ElbowPoint(k: Int, wssse: Double, silhouette: Double)
@@ -32,20 +38,41 @@ object KMeansJob {
     * (MLlib's LocalKMeans runs the same 30 over its k-means|| candidates). */
   private val LocalIters = 30
 
-  /** The `row` solver is pinned: `auto` first runs a Summarizer job to
-    * choose between row and block, and picks row for these inputs anyway
-    * (MlSpec asserts identical centers and cost). */
+  /** Each k's final centers from the last [[elbow]] over a frame, per
+    * features column. Keyed by the `Dataset` object itself (it keeps
+    * `Object`'s identity `equals`), weakly, so an entry lives as long as
+    * its frame and an equal plan in another object never matches. */
+  private val elbowCenters = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Map[(String, Int), Array[Array[Double]]]]())
+
+  /** Final K-Means model of `k` clusters. When [[elbow]] has trained this
+    * k on this very `df` object and column, MLlib's Lloyd starts from the
+    * elbow's centers (same `maxIter`, seed and tol) and no k-means|| init
+    * runs. Otherwise it is MLlib's fit with the `row` solver pinned:
+    * `auto` first runs a Summarizer job to choose between row and block,
+    * and picks row for these inputs anyway (MlSpec asserts identical
+    * centers and cost). */
   def fit(df: DataFrame, k: Int, featuresCol: String = "features",
-          seed: Long = 42L, maxIter: Int = 30): KMeansModel =
-    new KMeans()
+          seed: Long = 42L, maxIter: Int = 30): KMeansModel = {
+    val est = new KMeans()
       .setK(k).setSeed(seed).setMaxIter(maxIter).setSolver("row")
       .setFeaturesCol(featuresCol).setPredictionCol("cluster")
-      .fit(df)
+    elbowInit(df, featuresCol, k) match {
+      case Some(init) => seededKMeans.fit(est, df, init)
+      case None => est.fit(df)
+    }
+  }
+
+  /** The centers the last [[elbow]] over this `df` object left for `k`. */
+  private[graft] def elbowInit(df: DataFrame, featuresCol: String,
+                               k: Int): Option[Array[Array[Double]]] =
+    Option(elbowCenters.get(df)).flatMap(_.get((featuresCol, k)))
 
   /** M8: elbow sweep — WSSSE and squared-Euclidean silhouette per k, in
     * `kRange` order.
     *
-    * The input is cached and counted once. Init: one seeded sample of at
+    * The input's feature arrays are persisted and counted once (one
+    * job), and unpersisted on every exit. Init: one seeded sample of at
     * most max(1000, 50·max k) rows (all rows when the input is smaller) is
     * collected, and each k is seeded by k-means++ over it, then refined by
     * Lloyd on the sample as MLlib's LocalKMeans does. Training: up to
@@ -56,8 +83,10 @@ object KMeansJob {
     * assignment (MLlib's `trainingCost` convention). Silhouette is
     * `ClusteringEvaluator`'s squared-Euclidean formula, fused across k
     * (see [[silhouettes]]); with `evalFraction` < 1 it is scored on one
-    * seeded sample of the input. Every partial is combined on the driver
-    * in partition order, so equal inputs give equal points.
+    * seeded sample of the input. Both samples draw the rows
+    * `Dataset.sample` would. Every partial is combined on the driver in
+    * partition order, so equal inputs give equal points. Each k's final
+    * centers are kept for a later [[fit]] of that k on this `df`.
     *
     * `parallel` is ignored: the lockstep rounds already run every k in one
     * job. It stays for source compatibility with callers that pass it. */
@@ -67,20 +96,19 @@ object KMeansJob {
             parallel: Boolean = false): Seq[ElbowPoint] = {
     require(kRange.nonEmpty && kRange.forall(_ > 1),
       s"KMeansJob.elbow: every k must be > 1, got $kRange")
-    val cached = df.select(featuresCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val data = vectors(df.select(featuresCol))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = cached.count()
+      val n = data.count()
       require(n > 0, "KMeansJob.elbow: empty input")
       val cap = math.max(1000, 50 * kRange.max)
       val sample =
-        if (n <= cap) vectors(cached).collect()
-        else vectors(cached.sample(withReplacement = false,
-          cap.toDouble / n, seed)).collect().take(cap)
+        if (n <= cap) data.collect()
+        else bernoulli(data, cap.toDouble / n, seed).collect().take(cap)
       val ks = kRange.toArray
       val centers = ks.map(k =>
         kMeansPlusPlus(sample, k, new scala.util.Random(seed + k)))
       val cost = new Array[Double](ks.length)
-      val data = vectors(cached)
       var moving = ks.indices.toArray
       var round = 0
       while (moving.nonEmpty && round < maxIter) {
@@ -101,12 +129,24 @@ object KMeansJob {
         round += 1
       }
       val evalSet =
-        if (evalFraction >= 1.0) cached
-        else cached.sample(withReplacement = false, evalFraction, seed)
-      val sil = silhouettes(evalSet, featuresCol, centers)
+        if (evalFraction >= 1.0) data else bernoulli(data, evalFraction, seed)
+      val sil = silhouettes(evalSet, centers)
+      elbowCenters.merge(df,
+        ks.indices.map(i => (featuresCol, ks(i)) -> centers(i)).toMap, _ ++ _)
       ks.indices.map(i => ElbowPoint(ks(i), cost(i), sil(i)))
-    } finally { cached.unpersist(); () }
+    } finally { data.unpersist(); () }
   }
+
+  /** The rows `Dataset.sample(withReplacement = false, fraction, seed)`
+    * keeps of the same partitions: a Bernoulli cell [0, fraction) per row,
+    * seeded with `seed` + partition index. */
+  private def bernoulli(data: RDD[Array[Double]], fraction: Double,
+                        seed: Long): RDD[Array[Double]] =
+    data.mapPartitionsWithIndex { (i, rows) =>
+      val s = new BernoulliCellSampler[Array[Double]](0.0, fraction)
+      s.setSeed(seed + i)
+      s.sample(rows)
+    }
 
   /** `ClusteringEvaluator`'s squared-Euclidean silhouette of `featuresCol`
     * for every center set at once, each row assigned to its nearest center
@@ -114,8 +154,11 @@ object KMeansJob {
     * per (center set, cluster); pass 2 scores each row against those sums
     * and averages per center set. Two jobs, whatever the number of sets. */
   private[graft] def silhouettes(df: DataFrame, featuresCol: String,
-                                 centerSets: Array[Array[Array[Double]]]): Array[Double] = {
-    val data = vectors(df.select(featuresCol))
+                                 centerSets: Array[Array[Array[Double]]]): Array[Double] =
+    silhouettes(vectors(df.select(featuresCol)), centerSets)
+
+  private def silhouettes(data: RDD[Array[Double]],
+                          centerSets: Array[Array[Array[Double]]]): Array[Double] = {
     val d = centerSets.head.head.length
     val ks = centerSets.map(_.length)
     val stats = pass(data, ks, d) { (a, x) =>
@@ -298,15 +341,17 @@ object KMeansJob {
   def bestK(points: Seq[ElbowPoint]): Int = points.maxBy(_.silhouette).k
 
   /** A2: per-cluster stats — count + avg/stddev of given numeric columns
-    * (kmeans_clustering.py:198-225). One hash-agg shuffle on the
-    * low-cardinality cluster id. */
+    * (kmeans_clustering.py:198-225), ordered by cluster. One hash-agg
+    * shuffle on the low-cardinality cluster id; its k rows are sorted in
+    * one partition, so no range-partitioning sample job or second
+    * exchange runs. */
   def clusterStats(predictions: DataFrame, statCols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("count") +:
       statCols.flatMap(c => Seq(
         avg(col(c)).as(s"avg_$c"), stddev(col(c)).as(s"std_$c")))
     predictions.groupBy("cluster")
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy("cluster")
+      .coalesce(1).sortWithinPartitions("cluster")
   }
 
   /** M10: centroids as a DataFrame (cluster_centers Hive table shape,

@@ -64,14 +64,24 @@ class GoldenParitySpec extends SparkSpec {
   private def goldenJson(name: String): Row =
     spark.read.option("multiLine", true).json(s"$refOut/$name").head()
 
+  /** A test that reads the reference's outputs: canceled, naming the
+    * path, on a host without them (as `LiveSmokeSpec` gates on its live
+    * services), and run unchanged where they exist. */
+  private def goldenTest(name: String)(body: => Any): Unit =
+    test(name) {
+      assume(new java.io.File(refOut).isDirectory,
+        s"$refOut does not exist — the reference's golden outputs are absent")
+      body
+    }
+
   // ---------------------------------------------------------------- schema
 
-  test("golden: cleaned_data carries the canonical 20-col schema, in order") {
+  goldenTest("golden: cleaned_data carries the canonical 20-col schema, in order") {
     val actual = cleaned.schema.fields.map(f => f.name -> f.dataType).toSeq
     assert(actual === canonicalSchema)
   }
 
-  test("golden: committed sample row count and invariants hold") {
+  goldenTest("golden: committed sample row count and invariants hold") {
     // the committed artifact is immutable: exact count, not a band
     assert(cleaned.count() === 386716L)
     // cleaning invariants from full_scale_pipeline.py:69-88
@@ -89,7 +99,7 @@ class GoldenParitySpec extends SparkSpec {
 
   // -------------------------------------------------------- random forest
 
-  test("golden: RF at the matched 100-tree/depth-10 config lands in BASELINE bands") {
+  goldenTest("golden: RF at the matched 100-tree/depth-10 config lands in BASELINE bands") {
     val golden = goldenJson("random_forest_results_7m.json")
     val gm = golden.getStruct(golden.fieldIndex("metrics"))
     def g(m: String): Double = gm.getDouble(gm.fieldIndex(m))
@@ -128,7 +138,7 @@ class GoldenParitySpec extends SparkSpec {
     } finally { train.unpersist(); test.unpersist(); () }
   }
 
-  test("golden: RF at the 50-tree/depth-8 config (the committed sample's own run)") {
+  goldenTest("golden: RF at the 50-tree/depth-8 config (the committed sample's own run)") {
     // random_forest_results.json is the config the reference ACTUALLY ran
     // on the committed 386,716-row sample (complete_pipeline.py:126-130):
     // same data, 0.8/0.2 randomSplit seed 42, RF 50/8 seed 42 — the closest
@@ -173,7 +183,7 @@ class GoldenParitySpec extends SparkSpec {
 
   // -------------------------------------------------------------- k-means
 
-  test("golden: K-Means sweep + k=10 stats land in BASELINE bands") {
+  goldenTest("golden: K-Means sweep + k=10 stats land in BASELINE bands") {
     val golden = goldenJson("kmeans_results_7m.json")
     val goldenSil = golden.getDouble(golden.fieldIndex("silhouette_score"))
     val goldenRows = golden.getLong(golden.fieldIndex("data_size"))

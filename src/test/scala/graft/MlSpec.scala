@@ -3,6 +3,7 @@ package graft
 import graft.ml._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.{ClusteringEvaluator, MulticlassClassificationEvaluator}
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -134,13 +135,76 @@ class MlSpec extends SparkSpec {
   test("KMeans elbow: repeatable, and leaves nothing cached") {
     val cache = spark.sharedState.cacheManager
     spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
     val a = KMeansJob.elbow(hotspots, Seq(2, 4, 6), maxIter = 10,
       evalFraction = 0.5)
     assert(cache.isEmpty, "elbow left a cached plan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === rdds)
     val b = KMeansJob.elbow(hotspots, Seq(2, 4, 6), maxIter = 10,
       evalFraction = 0.5)
     assert(a === b)
     assert(cache.isEmpty, "elbow left a cached plan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === rdds)
+  }
+
+  test("KMeans fit after an elbow starts from its centers: one job per " +
+      "Lloyd round") {
+    val df = hotspots.select("features") // an object no other test sweeps
+    KMeansJob.elbow(df, Seq(2, 4, 6), maxIter = 10)
+    val init = KMeansJob.elbowInit(df, "features", 4).get
+    assert(init.length === 4)
+    // one round from `init`: each center becomes the mean of the rows
+    // nearest it, and the cost is theirs against `init`
+    val pts = df.collect().map(_.getAs[org.apache.spark.ml.linalg.Vector](0).toArray)
+    def nearest(x: Array[Double]): Int = init.indices.minBy(c =>
+      init(c).zip(x).map { case (a, b) => (a - b) * (a - b) }.sum)
+    val groups = pts.groupBy(nearest)
+    val (one, jobs1) = jobsIn(KMeansJob.fit(df, 4, maxIter = 1))
+    assert(jobs1 === 1, "one Lloyd round, no k-means|| init")
+    assert(one.summary.numIter === 1)
+    init.indices.foreach { c =>
+      val mean = groups(c).transpose.map(_.sum / groups(c).length)
+      one.clusterCenters(c).toArray.zip(mean).foreach { case (got, want) =>
+        assert(math.abs(got - want) <= 1e-9 * math.max(1.0, math.abs(want)),
+          s"center $c: $got vs $want")
+      }
+    }
+    val cost = pts.map(x => init(nearest(x)).zip(x)
+      .map { case (a, b) => (a - b) * (a - b) }.sum).sum
+    assert(math.abs(one.summary.trainingCost - cost) <= 1e-9 * cost)
+    val (model, jobs) = jobsIn(KMeansJob.fit(df, 4, maxIter = 10))
+    assert(model.summary.numIter >= 1 && model.summary.numIter <= 10)
+    assert(jobs === model.summary.numIter, "one job per Lloyd round")
+  }
+
+  test("KMeans fit on another object with an equal plan is MLlib's own fit") {
+    val swept = hotspots.coalesce(1)
+    val fresh = hotspots.coalesce(1)
+    assert(swept.queryExecution.logical.sameResult(fresh.queryExecution.logical))
+    KMeansJob.elbow(swept, Seq(2, 4, 6), maxIter = 10)
+    assert(KMeansJob.elbowInit(fresh, "features", 4).isEmpty)
+    val (model, jobs) = jobsIn(KMeansJob.fit(fresh, 4, maxIter = 10))
+    val plain = new KMeans().setK(4).setSeed(42L).setMaxIter(10)
+      .setPredictionCol("cluster").fit(fresh)
+    assert(model.clusterCenters.toSeq === plain.clusterCenters.toSeq)
+    assert(model.summary.trainingCost === plain.summary.trainingCost)
+    assert(jobs > model.summary.numIter, "k-means|| init runs its own jobs")
+  }
+
+  test("KMeans fit: trainingCost and numIter on the seeded and plain paths") {
+    val df = hotspots.select("features")
+    val plain = KMeansJob.fit(df, 4, maxIter = 10)
+    KMeansJob.elbow(df, Seq(4), maxIter = 10)
+    val seeded = KMeansJob.fit(df, 4, maxIter = 10)
+    Seq(plain, seeded).foreach { m =>
+      assert(m.hasSummary)
+      assert(m.summary.k === 4)
+      assert(m.summary.numIter >= 1 && m.summary.numIter <= 10)
+      assert(m.summary.trainingCost > 0.0)
+      assert(m.summary.predictions.columns.contains("cluster"))
+      assert(m.getFeaturesCol === "features" && m.getK === 4)
+    }
+    assert(seeded.summary.clusterSizes.sum === 600L)
   }
 
   test("KMeans clusterStats: one row per cluster with exact total count") {
@@ -149,6 +213,24 @@ class MlSpec extends SparkSpec {
     assert(stats.length === 3)
     assert(stats.map(_.getAs[Long]("count")).sum === 180L)
     assert(KMeansJob.centers(spark, model).count() === 3)
+  }
+
+  test("KMeans clusterStats on 4 partitions: the rows, in the order, of " +
+      "an orderBy, without its range exchange") {
+    val model = KMeansJob.fit(blobs.coalesce(1), 3)
+    val preds = model.transform(blobs.repartition(4))
+      .withColumn("x", vector_to_array(col("features"))(0))
+    assert(preds.rdd.getNumPartitions === 4)
+    val stats = KMeansJob.clusterStats(preds, Seq("label", "x"))
+    val aggs = count(lit(1)).as("count") +: Seq("label", "x").flatMap(c =>
+      Seq(avg(col(c)).as(s"avg_$c"), stddev(col(c)).as(s"std_$c")))
+    val ordered = preds.groupBy("cluster").agg(aggs.head, aggs.tail: _*)
+      .orderBy("cluster")
+    assert(stats.schema === ordered.schema)
+    assert(stats.collect().toSeq === ordered.collect().toSeq)
+    assert(stats.collect().map(_.getInt(0)).toSeq === Seq(0, 1, 2))
+    assert(!stats.queryExecution.executedPlan.toString
+      .toLowerCase.contains("rangepartitioning"))
   }
 
   test("RandomForest separates the blobs (accuracy > 0.95)") {

@@ -1,32 +1,12 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.graft.listenerBus
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** `Tables.load` infers a table's parquet schema once per table version and
   * parquet-read confs, and reads with it after that. */
 class SchemaCacheSpec extends SparkSpec {
-  /** `body`'s result and the Spark jobs it started, counted once the
-    * listener bus has delivered every event. */
-  private def jobsIn[T](s: SparkSession)(body: => T): (T, Int) = {
-    val sc = s.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        started.incrementAndGet(); () }
-    }
-    listenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      listenerBus.drain(sc)
-      (r, started.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   /** A new dir holding a copy of TESTDATA table `name`: a path no load has
     * resolved yet, so its first load infers. */
   private def freshCopy(name: String): String = {
@@ -52,8 +32,8 @@ class SchemaCacheSpec extends SparkSpec {
 
   test("events.ts is TimestampType on a first and on a cached load") {
     val dir = freshCopy("events")
-    val (first, missJobs) = jobsIn(spark)(Tables.load(spark, dir, "events"))
-    val (cached, hitJobs) = jobsIn(spark)(Tables.load(spark, dir, "events"))
+    val (first, missJobs) = jobsIn(Tables.load(spark, dir, "events"))
+    val (cached, hitJobs) = jobsIn(Tables.load(spark, dir, "events"))
     assert(missJobs >= 1, "the first load infers")
     assert(hitJobs == 0, "the second load reads the resolved schema")
     Seq(first, cached).foreach(df =>
@@ -65,14 +45,14 @@ class SchemaCacheSpec extends SparkSpec {
 
   test("a second registerAll in the same session starts no Spark job") {
     Tables.registerAll(spark, sfDir)
-    val (_, jobs) = jobsIn(spark)(Tables.registerAll(spark, sfDir))
+    val (_, jobs) = jobsIn(Tables.registerAll(spark, sfDir))
     assert(jobs == 0)
     assert(spark.table("orders").count() > 0)
   }
 
   test("concurrent first loads through Tables.wave infer once, one schema") {
     val dir = freshCopy("lineitem")
-    val (schemas, jobs) = jobsIn(spark)(Tables.wave(Seq.fill(8)(() =>
+    val (schemas, jobs) = jobsIn(Tables.wave(Seq.fill(8)(() =>
       Tables.load(spark, dir, "lineitem").schema)))
     assert(schemas.distinct.size == 1)
     assert(schemas.head == spark.read.parquet(s"$dir/lineitem.parquet").schema)
@@ -85,7 +65,7 @@ class SchemaCacheSpec extends SparkSpec {
     Tables.load(spark, dir, "events")
     assert(Tables.parquetSchema(spark, path)("ts").dataType === TimestampType)
     val ntz = Map("spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")
-    val (df, jobs) = jobsIn(spark)(Tables.withConfs(spark, ntz) {
+    val (df, jobs) = jobsIn(Tables.withConfs(spark, ntz) {
       assert(Tables.parquetSchema(spark, path)("ts").dataType ===
         TimestampNTZType)
       Tables.load(spark, dir, "events")
@@ -93,7 +73,7 @@ class SchemaCacheSpec extends SparkSpec {
     assert(jobs >= 1, "the changed conf infers for itself")
     assert(df.schema("ts").dataType === TimestampType, "the loader casts NTZ")
     // the default resolution is still cached beside it
-    val (_, back) = jobsIn(spark)(Tables.load(spark, dir, "events"))
+    val (_, back) = jobsIn(Tables.load(spark, dir, "events"))
     assert(back == 0)
   }
 }

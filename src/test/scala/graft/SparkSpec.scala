@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.listenerBus
 import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +26,24 @@ trait SparkSpec extends AnyFunSuite {
     require(scratch != null, "tmp() is only available while the suite runs")
     made += 1
     java.nio.file.Files.createDirectory(scratch.resolve(s"t$made")).toString
+  }
+
+  /** `body`'s result and the Spark jobs it started, counted once the
+    * listener bus has delivered every event. */
+  protected def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); () }
+    }
+    listenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      listenerBus.drain(sc)
+      (r, started.get)
+    } finally sc.removeSparkListener(l)
   }
 
   override def run(testName: Option[String], args: Args): Status =
