@@ -6,11 +6,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.listenerBus
 
 /** Where one registered query's time goes: one line per Spark job (wall
-  * seconds, task count, call site) to find the expensive pass inside a
-  * multi-job query, then one JSON line of stage sums — executor time vs
+  * seconds, task count, job description, call site) to find the expensive
+  * pass inside a multi-job query, then one JSON line of stage sums — executor time vs
   * wall, scan input, shuffle bytes — to tell scan-, shuffle- and
   * CPU-bound apart. Numbers come from the last of [[Reps]] runs, so the
   * first run absorbs cold-cache and codegen costs.
+  *
+  * Each run is labelled with [[Query.labelled]], so a job's description
+  * names the query that started it, build-time jobs included. Streaming
+  * micro-batch jobs keep Spark's own batch description (query id, run id
+  * and batch number), which the stream's thread sets for every batch.
   *
   * Usage: Audit <sfDir> <query>...
   * JSON: {"metric":"audit","name":…,"dir":…,"wall_sec":…,"executor_sec":…,
@@ -19,7 +24,8 @@ import org.apache.spark.sql.graft.listenerBus
 object Audit {
   val Reps = 2
 
-  final case class Job(id: Int, sec: Double, tasks: Int, site: String)
+  final case class Job(id: Int, sec: Double, tasks: Int, query: String,
+                       site: String)
 
   final case class Report(name: String, dir: String, wallSec: Double,
                           jobs: Seq[Job], executorSec: Double,
@@ -28,14 +34,22 @@ object Audit {
                           rows: Long) {
     def lines: Seq[String] =
       f"== $name wall=$wallSec%.2f s, ${jobs.size} jobs (last rep)" +:
-        jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%7.3f s  ${j.tasks}%5d tasks  ${j.site}") :+
+        jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%7.3f s  ${j.tasks}%5d tasks  ${j.query}: ${j.site}") :+
         f"  sum-of-jobs ${jobs.map(_.sec).sum}%.3f s (gaps = driver/stage-setup time)" :+
-        f"""{"metric":"audit","name":"$name","dir":"$dir","wall_sec":$wallSec%.3f,"executor_sec":$executorSec%.3f,"input_bytes":$inputBytes,"shuffle_write_bytes":$shuffleWriteBytes,"shuffle_read_bytes":$shuffleReadBytes,"stages":$stages,"tasks":$tasks,"rows":$rows}"""
+        Json.obj(Seq("metric" -> Json.str("audit"), "name" -> Json.str(name),
+          "dir" -> Json.str(dir), "wall_sec" -> f"$wallSec%.3f",
+          "executor_sec" -> f"$executorSec%.3f",
+          "input_bytes" -> inputBytes.toString,
+          "shuffle_write_bytes" -> shuffleWriteBytes.toString,
+          "shuffle_read_bytes" -> shuffleReadBytes.toString,
+          "stages" -> stages.toString, "tasks" -> tasks.toString,
+          "rows" -> rows.toString))
   }
 
   /** Job and stage counters of one run; read only after the bus drains. */
   private class Recorder extends SparkListener {
-    private val started = scala.collection.mutable.Map.empty[Int, (Long, Int, String)]
+    private val started =
+      scala.collection.mutable.Map.empty[Int, (Long, Int, String, String)]
     private val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
     private var input, shufW, shufR, runMs, stages, tasks = 0L
 
@@ -46,12 +60,16 @@ object Audit {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val site = e.stageInfos.lastOption.map(_.name.take(70)).getOrElse("?")
-      started(e.jobId) = (e.time, e.stageInfos.map(_.numTasks).sum, site)
+      val query = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .fold("-")(_.replaceAll("\\s+", " ").trim)
+      started(e.jobId) =
+        (e.time, e.stageInfos.map(_.numTasks).sum, query, site)
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      started.remove(e.jobId).foreach { case (t0, n, site) =>
-        jobs += Job(e.jobId, (e.time - t0) / 1e3, n, site) }
+      started.remove(e.jobId).foreach { case (t0, n, query, site) =>
+        jobs += Job(e.jobId, (e.time - t0) / 1e3, n, query, site) }
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -85,7 +103,8 @@ object Audit {
         listenerBus.drain(sc)
         rec.reset()
         val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, sfDir).count()
+        rows = Query.labelled(spark, name)(
+          SparkEntry.queries(name)(spark, sfDir).count())
         wall = (System.nanoTime() - t0) / 1e9
       }
       listenerBus.drain(sc)

@@ -39,7 +39,7 @@ object Bench {
   private[graft] def host(spark: org.apache.spark.sql.SparkSession,
                           cpus: Int): String = {
     import scala.sys.process.{Process, ProcessLogger}
-    def str(v: Option[String]) = v.fold("null")("\"" + _ + "\"")
+    def str(v: Option[String]) = v.fold("null")(Json.str)
     val memKb = scala.util.Try {
       val src = scala.io.Source.fromFile("/proc/meminfo")
       try src.getLines().collectFirst {
@@ -53,7 +53,7 @@ object Bench {
       "mem_total_kb" -> memKb.getOrElse("null"),
       "jdk" -> str(Option(System.getProperty("java.runtime.version"))),
       "spark" -> str(Some(spark.version)), "git_sha" -> str(sha))
-      .map { case (k, v) => s""""$k":$v""" }.mkString(",")
+      .map { case (k, v) => Json.field(k, v) }.mkString(",")
   }
 
   def main(args: Array[String]): Unit = {
@@ -71,8 +71,10 @@ object Bench {
     // measurement: record the sentinel -1 and list it under "failed"
     def runOne(name: String): Double = {
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9 }
+      try {
+        Query.labelled(spark, name)(SparkEntry.queries(name)(spark, sfDir).count())
+        (System.nanoTime() - t0) / 1e9
+      }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0 }
@@ -179,7 +181,7 @@ object Bench {
         // done; mark failures explicitly so replay consumers never sum
         // the sentinel
         val failedAttr = if (sec < 0) ""","failed":true""" else ""
-        println(s"""{"metric":"query","name":"$n","value":$sec,"unit":"sec","rep":$rep$failedAttr}""")
+        println(s"""{"metric":"query","name":${Json.str(n)},"value":$sec,"unit":"sec","rep":$rep$failedAttr}""")
         Console.out.flush()
       }
     }
@@ -215,7 +217,7 @@ object Bench {
         times(n) = sec :: times(n)
         extra += 1
         val failedAttr = if (sec < 0) ""","failed":true""" else ""
-        println(s"""{"metric":"query","name":"$n","value":$sec,"unit":"sec","rep":${reps + quietTries + extra},"extra":true$failedAttr}""")
+        println(s"""{"metric":"query","name":${Json.str(n)},"value":$sec,"unit":"sec","rep":${reps + quietTries + extra},"extra":true$failedAttr}""")
         Console.out.flush()
       }
     }
@@ -230,11 +232,10 @@ object Bench {
     val suspect = results.collect {
       case (n, v) if v >= 0 && floors.get(n).exists(f => v > 2 * f) => n
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val qs = Json.obj(results.map { case (k, v) => k -> v.toString })
     val total = results.map(_._2).filter(_ >= 0).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val suspectJson = suspect.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map(Json.str).mkString("[", ",", "]")
+    val suspectJson = suspect.map(Json.str).mkString("[", ",", "]")
     // headline calib = the BEST window any pass ran in (per-query minima
     // aggregate across passes, so the quietest pass is the one the
     // reported numbers effectively came from); calib_ratios keeps every
@@ -244,7 +245,7 @@ object Bench {
     val ratiosJson = passCalib
       .map(s => f"${ratioOf(s)}%.2f").mkString("[", ",", "]")
     val quietCertified = calibRatio > 0 && calibRatio <= QuietRatio
-    val totalLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"suspect":$suspectJson,"reps":$reps,"calib_sec":$calibBest%.3f,"calib_ratio":$calibRatio%.2f,"calib_ratios":$ratiosJson,"quiet_certified":$quietCertified,${host(spark, cpus)},"scale_probe_sec":$scaleProbeSec%.3f,"sf":"$sfDir"}"""
+    val totalLine = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"suspect":$suspectJson,"reps":$reps,"calib_sec":$calibBest%.3f,"calib_ratio":$calibRatio%.2f,"calib_ratios":$ratiosJson,"quiet_certified":$quietCertified,${host(spark, cpus)},"scale_probe_sec":$scaleProbeSec%.3f,"sf":${Json.str(sfDir)}}"""
     println(totalLine)
     // standalone artifact: the stdout capture that becomes BENCH_r{N}.json
     // truncates to a tail window, losing most per-query timings — writing

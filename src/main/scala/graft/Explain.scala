@@ -10,8 +10,9 @@ object Explain {
     val spark = graft.sources.Tables.session("graft-explain")
     args.drop(1).foreach { q =>
       println(s"===== $q =====")
-      println(SparkEntry.queries(q)(spark, sfDir).queryExecution
-        .explainString(FormattedMode))
+      // some builds run eager jobs: label them with the query too
+      println(Query.labelled(spark, q)(SparkEntry.queries(q)(spark, sfDir)
+        .queryExecution.explainString(FormattedMode)))
     }
     spark.stop()
   }

@@ -238,7 +238,7 @@ object ScaleRamp {
     }
     def runOne(q: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, dir).count()
+      Query.labelled(spark, q)(SparkEntry.queries(q)(spark, dir).count())
       (System.nanoTime() - t0) / 1e9
     }
     // warmup: absorb session/codegen one-time costs (Bench convention)

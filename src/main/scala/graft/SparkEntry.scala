@@ -1,1497 +1,52 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.analytics.Relational
+import graft.analytics.{Advanced, ExactQuantile, Relational}
+import graft.dedup.Dedup
+import graft.ml.{AlsFactor, GiniStump, KMeansJob, Knn, LloydExact, LogitGd,
+  PcaPower, PqCodebook, RandomForestJob}
+import graft.multimodal.Multimodal
+import graft.similarity.Similarity
+import graft.sources.Sinks
+import graft.sql.Catalog
+import graft.streaming.EventStream
+import graft.text.{BpeTrain, TextOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each `queries` entry is one operator from SURVEY.md §2 (or a
-  * beyond-reference LLM-pipeline operator), implemented in the graft library
-  * and verified against the matching `oracleSql` by the driver's DuckDB
-  * compare. Column names and types are aligned between both sides.
-  */
+/** The query registry. Each module declares its own queries, with their
+  * oracle SQL, in its `queries` list (see [[Query]]). This object only
+  * gathers them: `queries` for every runner and the pipebench harness,
+  * `oracleSql` for Verify's `oracle_sql.json`, which the DuckDB compare
+  * reads. Column names and types are aligned between both sides. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.multiAgg(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.2 projections / filters / scalar expressions
-    "q01_scan_project_filter" -> (Relational.scanProjectFilter _),
-    "q02_filter_range_set"    -> (Relational.filterRangeSet _),
-    "q03_conditional_impute"  -> (Relational.conditionalImpute _),
-    // §2.3 temporal scalar functions
-    "q04_temporal_features"   -> (Relational.temporalFeatures _),
-    // §2.4 aggregations
-    "q05_group_count"         -> (Relational.groupCount _),
-    "q06_multi_agg"           -> (Relational.multiAgg _),
-    "q07_global_means"        -> (Relational.globalMeans _),
-    "q08_medians"             -> (Relational.medians _),
-    "q09_null_census"         -> (Relational.nullCensus _),
-    "q10_describe_stats"      -> (Relational.describeStats _),
-    // joins / set ops (§2.5 — required by the generalized oracle)
-    "q11_join_revenue_nation" -> (Relational.joinRevenuePerNation _),
-    "q12_join_left_outer"     -> (Relational.joinLeftOuter _),
-    "q13_join_semi_anti"      -> (Relational.joinSemiAnti _),
-    "q14_union_distinct"      -> (Relational.unionDistinct _),
-    // §2.6 sorts / limits / windows
-    "q15_orderby_limit"       -> (Relational.orderByLimit _),
-    "q16_window_topk"         -> (Relational.windowTopKPerGroup _),
-    "q17_window_running_sum"  -> (Relational.windowRunningSum _),
-    "q18_window_lag"          -> (Relational.windowLag _),
-    // reshaping / semi-structured / event-time
-    "q19_pivot_matrix"        -> (Relational.pivotMatrix _),
-    "q20_json_extract"        -> (Relational.jsonExtract _),
-    "q21_tumbling_window"     -> (Relational.tumblingWindowAgg _),
-    // text analysis (training-data pipeline ops over `documents`)
-    "q22_token_stats"         -> (graft.text.TextOps.tokenStats _),
-    "q23_quality_score"       -> (graft.text.TextOps.qualityScore _),
-    "q24_lang_id"             -> (graft.text.TextOps.langId _),
-    "q25_fingerprint"         -> (graft.text.TextOps.fingerprint _),
-    // deduplication (exact, MinHash+LSH, Jaccard verify, SimHash)
-    "q26_dedup_exact"         -> (graft.dedup.Dedup.dedupExact _),
-    "q27_minhash_sig"         -> ((s, d) => graft.dedup.Dedup.minhashSignatures(s, d)),
-    "q28_lsh_band_pairs"      -> ((s, d) => graft.dedup.Dedup.lshCandidatePairs(s, d)),
-    "q29_ngram_jaccard"       -> ((s, d) => graft.dedup.Dedup.ngramJaccard(s, d)),
-    "q30_simhash"             -> (graft.dedup.Dedup.simhash _),
-    // similarity search over `embeddings` (brute-force, LSH-ANN, kNN)
-    "q31_cosine_topk"         -> ((s, d) => graft.similarity.Similarity.cosineTopK(s, d)),
-    "q32_ann_lsh"             -> ((s, d) => graft.similarity.Similarity.annLsh(s, d)),
-    "q33_knn_classify"        -> (graft.similarity.Similarity.knnClassify _),
-    "q34_embed_neardup"       -> (graft.similarity.Similarity.embedNearDup _),
-    "q35_knn_confusion"       -> (graft.similarity.Similarity.knnConfusion _),
-    // MLlib jobs (not SQL-expressible — rows-only driver check; metric
-    // bands asserted in ScalaTest specs)
-    "q36_kmeans_stats"        -> ((s, d) => graft.ml.KMeansJob.embeddingClusterStats(s, d)),
-    "q37_rf_metrics"          -> ((s, d) => graft.ml.RandomForestJob.embeddingRfMetrics(s, d)),
-    "q38_kmeans_elbow"        -> (graft.ml.KMeansJob.embeddingElbow _),
-    "q39_knn_broadcast"       -> ((s, d) => graft.ml.Knn.embeddingKnnConfusion(s, d)),
-    // multimodal binary-column plumbing
-    "q40_media_metadata"      -> (graft.multimodal.Multimodal.mediaMetadata _),
-    "q41_media_features"      -> ((s, d) => graft.multimodal.Multimodal
-      .extractFeatures(graft.multimodal.Multimodal.fromDocuments(s, d))
-      .toDF().select("media_id", "kind", "n_bytes", "top_bin").orderBy("media_id")),
-    // corpus-level analytics
-    "q42_corpus_stats"        -> (graft.text.TextOps.corpusStats _),
-    "q43_top_tokens"          -> (graft.text.TextOps.topTokens _),
-    "q44_embedding_stats"     -> (graft.similarity.Similarity.embeddingStats _),
-    "q45_knn_topk_agg"        -> (graft.similarity.Similarity.knnClassifyAgg _),
-    // advanced relational surface (beyond-reference warehouse shapes)
-    "q46_rollup"              -> (graft.analytics.Advanced.rollupAgg _),
-    "q47_cube"                -> (graft.analytics.Advanced.cubeAgg _),
-    "q48_asof_join"           -> (graft.analytics.Advanced.asofJoin _),
-    "q49_range_join"          -> (graft.analytics.Advanced.rangeJoinBucketed _),
-    "q50_sessionize_batch"    -> (graft.analytics.Advanced.sessionizeBatch _),
-    "q51_ntile_ranks"         -> (graft.analytics.Advanced.ntileRanks _),
-    "q52_string_funcs"        -> (graft.analytics.Advanced.stringFuncs _),
-    "q53_array_funcs"         -> (graft.analytics.Advanced.arrayFuncs _),
-    "q54_grouped_quantiles"   -> (graft.analytics.Advanced.groupedQuantiles _),
-    "q55_above_cust_avg"      -> (graft.analytics.Advanced.aboveCustomerAvg _),
-    "q56_first_last_window"   -> (graft.analytics.Advanced.firstLastWindow _),
-    // oracle-verified iterative ML + weighted-vote kNN
-    "q57_kmeans_lloyd"        -> (graft.ml.LloydExact.clusterQuery _),
-    "q58_knn_weighted"        -> (graft.similarity.Similarity.knnWeighted _),
-    // skew-mitigation + TPC-H-shaped analytics
-    "q59_salted_agg"          -> ((s, d) => graft.analytics.Advanced.saltedAgg(s, d)),
-    "q60_shipping_priority"   -> (graft.analytics.Advanced.shippingPriority _),
-    // IVF-ANN: coarse-quantizer inverted lists (the non-LSH scale path)
-    "q61_ann_ivf"             -> (graft.similarity.Similarity.annIvf _),
-    // dedup completion: fingerprint→pairs (SimHash path) and
-    // pairs→clusters (connected components)
-    "q62_simhash_pairs"       -> ((s, d) => graft.dedup.Dedup.simhashNearDupPairs(s, d)),
-    "q63_dedup_components"    -> ((s, d) => graft.dedup.Dedup.dedupComponents(s, d)),
-    "q64_tfidf_topk"          -> (graft.text.TextOps.tfidfTopTerms _),
-    // broadcast+mapPartitions kNN under a deterministic split — the
-    // oracle-checked twin of q39's randomSplit confusion matrix
-    "q65_knn_euclid"          -> ((s, d) => graft.ml.Knn.knnEuclidExact(s, d)),
-    // arbitrary grouping sets (the general form of rollup/cube)
-    "q66_grouping_sets"       -> (graft.analytics.Advanced.groupingSetsAgg _),
-    // corpus normalization + entity redaction (the PII-scrub shape)
-    "q67_normalize_scrub"     -> (graft.text.TextOps.normalizeScrub _),
-    // Levenshtein verify of LSH candidates (third verifier: chars)
-    "q68_edit_distance"       -> ((s, d) => graft.dedup.Dedup.editDistancePairs(s, d)),
-    // q16 semantics through the custom TopKPerKey physical operator
-    // (LogicalPlan + SparkStrategy + SparkPlan via SparkSessionExtensions)
-    "q69_topk_exec"           -> (Relational.topkExecPerGroup _),
-    // multimodal frame sampling (posexplode of payload blocks)
-    "q70_frame_sample"        -> ((s, d) =>
-      graft.multimodal.Multimodal.frameSampleQuery(s, d)),
-    // ANN quality evaluation: recall@k of IVF vs exact brute force
-    "q71_ann_recall"          -> (graft.similarity.Similarity.annRecall _),
-    // dedup output step: canonical selection + survivors per source
-    "q72_dedup_keep"          -> ((s, d) => graft.dedup.Dedup.dedupKeepSummary(s, d)),
-    // corpus curation: per-source median quality filter (C4-style)
-    "q73_quality_filter"      -> (graft.text.TextOps.qualityFilterSummary _),
-    // retrieval scoring: BM25 top-N docs per query term
-    "q74_bm25_topk"           -> (graft.text.TextOps.bm25TopDocs _),
-    // decontamination: near-dup pairs crossing source boundaries
-    "q75_contamination"       -> ((s, d) => graft.dedup.Dedup.crossSourceContamination(s, d)),
-    // ordered conversion funnel over the event stream
-    "q76_funnel"              -> (graft.analytics.Advanced.funnel _),
-    // deterministic hash-based stratified sampling (corpus mixing)
-    "q77_data_mixing"         -> (graft.text.TextOps.dataMixingSummary _),
-    // full outer join with unmatched rows on both sides
-    "q78_join_full_outer"     -> (Relational.joinFullOuter _),
-    // the SQL-text entry: one dialect-portable string on both engines
-    "q79_sql_parity"          -> (graft.sql.Catalog.sqlParity _),
-    // deterministic exact-gini depth-2 tree — the oracle-checked twin of
-    // q37's RNG-dependent RandomForest (as q57 is for q36's K-Means)
-    "q80_gini_stump"          -> (graft.ml.GiniStump.query _),
-    // A4's approximate half: HLL++ distinct count + quantile sketch in one
-    // pass — the actual 100 TB tool (exact twins: q08/q54). Approximate ⇒
-    // rows-only here; error bands asserted in RelationalSpec.
-    "q81_approx_stats"        -> (Relational.approxStats _),
-    // UNPIVOT/melt — the inverse of q19's pivot (one Expand pass)
-    "q82_unpivot"             -> (graft.analytics.Advanced.unpivotMetrics _),
-    // event-time sliding aggregate via a value-based RANGE window frame
-    "q83_range_frame"         -> (graft.analytics.Advanced.rollingRevenue30d _),
-    // row-level set ops: INTERSECT + EXCEPT (§2.5 completion)
-    "q84_intersect_except"    -> (Relational.intersectExcept _),
-    // q21's aggregation run INCREMENTALLY by Structured Streaming (file
-    // source → watermark → checkpointed sink → read back); hash-equal to
-    // the batch oracle proves streaming/batch parity
-    "q85_stream_parity"       -> (graft.streaming.EventStream.streamingParity _),
-    // several COUNT(DISTINCT) in one pass — the Expand + 2-level agg shape
-    "q86_multi_distinct"      -> ((s, d) => graft.analytics.Advanced.multiDistinctAgg(s, d)),
-    // skew-mitigation join: salted big side × replicated dim, oracle unsalted
-    "q87_salted_join"         -> ((s, d) => graft.analytics.Advanced.saltedJoin(s, d)),
-    // SCD-1 snapshot merge: base ∪ updates, updates win per key (MERGE core)
-    "q88_upsert_snapshot"     -> (graft.analytics.Advanced.upsertSnapshot _),
-    // fixed-width histogram: narrow map + low-cardinality hash agg
-    "q89_histogram"           -> ((s, d) => graft.analytics.Advanced.histogram(s, d)),
-    // incremental view maintenance: snapshot partials + delta partials merge
-    "q90_incremental_agg"     -> ((s, d) => graft.analytics.Advanced.incrementalAgg(s, d)),
-    // resample to an hourly spine + forward-fill gaps (feature-prep grid)
-    "q91_resample_fill"       -> (graft.analytics.Advanced.resampleFill _),
-    // trailing 7-day distinct users: dedup once + bounded spine range join
-    "q92_sliding_distinct"    -> (graft.analytics.Advanced.slidingDistinctUsers _),
-    // per-group moments + 3-sigma outlier counts from exact decimal sums
-    "q93_zscore_outliers"     -> (graft.analytics.Advanced.zscoreOutliers _),
-    // retention matrix: first-day cohorts × day offset, partitioning reused
-    "q94_cohort_retention"    -> (graft.analytics.Advanced.cohortRetention _),
-    // multiset set-ops: per-row multiplicities survive (one agg, no join)
-    "q95_intersect_except_all" -> (graft.analytics.Advanced.intersectExceptAll _),
-    // static-domain pivot with several aggregates per cell, one pass
-    "q96_pivot_multi_agg"     -> (graft.analytics.Advanced.pivotMultiAgg _),
-    // centered ROWS-frame smoothing over a total in-partition order
-    "q97_centered_ma"         -> (graft.analytics.Advanced.centeredMovingAvg _),
-    // group share of partition + grand total over the aggregated frame
-    "q98_percent_of_total"    -> (graft.analytics.Advanced.percentOfTotal _),
-    // deterministic group-content fingerprint (sorted list -> md5 scalar)
-    "q99_array_fingerprint"   -> (graft.analytics.Advanced.arrayAggFingerprint _),
-    // capstone: quality filter -> dedup -> summary as ONE composed query
-    "q100_pipeline_composite" -> (graft.text.TextOps.pipelineComposite _),
-    // LATERAL correlated join: one portable SQL string on both engines
-    "q101_lateral_top"        -> (graft.sql.Catalog.lateralTopPerCustomer _),
-    // format round-trips: write ORC/CSV/JSON, read back, aggregate — oracle is
-    // the direct parquet aggregate, so the sink+source pair is bit-lossless
-    "q102_orc_roundtrip"      -> ((s, d) => graft.sources.Sinks.formatRoundTrip(s, d, "orc")),
-    "q103_csv_roundtrip"      -> ((s, d) => graft.sources.Sinks.formatRoundTrip(s, d, "csv")),
-    "q104_json_roundtrip"     -> ((s, d) => graft.sources.Sinks.formatRoundTrip(s, d, "json")),
-    // storage levers made driver-visible: write through the partitioned /
-    // range-clustered layouts, read back pruned (PartitionFilters / pushed
-    // key-range row-group skipping — scan shapes guarded in
-    // SinksCatalogSpec), aggregate; oracle = the same filtered aggregate
-    // over the original flat parquet
-    "q105_partition_pruned"   -> (graft.sources.Sinks.partitionPrunedRoundTrip _),
-    "q106_clustered_skip"     -> (graft.sources.Sinks.clusteredRoundTrip _),
-    // q88's MERGE executed INCREMENTALLY by the streaming upsert sink
-    // (file source → foreachBatch write-then-swap merge → read back);
-    // hash-equal to q88's batch oracle proves streaming/batch merge parity
-    "q107_upsert_parity"      -> (graft.streaming.EventStream.upsertParity _),
-    // q80's recursion generalized to depth k: the oracle-checked tree
-    // family covering the reference's maxDepth semantics at tractable
-    // oracle depth (one SQL builder generates both depths' CTE chains)
-    "q108_gini_tree_d3"       -> ((s, d) => graft.ml.GiniStump.tree(s, d, 3)),
-    // the third streaming surface closed: the stream-stream interval join
-    // executed incrementally, hash-equal to the batch join oracle
-    "q109_interval_join_parity" -> (graft.streaming.EventStream.intervalJoinParity _),
-    // third storage lever: bucketed+sorted managed tables carry the join
-    // with zero Exchange (co-location); oracle = same join on flat parquet
-    "q110_bucketed_join"      -> (graft.sources.Sinks.bucketedJoinRoundTrip _),
-    // fourth stateful streaming surface: keyed dedup of injected
-    // re-deliveries restores the original corpus exactly (q85's oracle)
-    "q111_dedup_parity"       -> (graft.streaming.EventStream.dedupParity _),
-    // one-pass grouped Pearson corr + OLS fit from exact decimal moments
-    "q112_grouped_corr"       -> (graft.analytics.Advanced.groupedCorr _),
-    // percent_rank + cume_dist cohort distribution (rank-ratio doubles)
-    "q113_distribution_ranks" -> (graft.analytics.Advanced.distributionRanks _),
-    // skewness + excess kurtosis per group from exact integer power sums
-    "q114_grouped_moments"    -> (graft.analytics.Advanced.groupedMoments _),
-    // fifth streaming surface: per-micro-batch broadcast join against a
-    // static dimension (stateless, zero-shuffle), hash-equal to batch
-    "q115_stream_static_join" -> (graft.streaming.EventStream.streamStaticJoinParity _),
-    // SCD Type-2 history build: generations -> validity ranges via lead
-    "q116_scd2_history"       -> (graft.analytics.Advanced.scd2History _),
-    // Markov transition counts+probabilities over per-user event sequences
-    "q117_transition_matrix"  -> (graft.analytics.Advanced.transitionMatrix _),
-    // gaps-and-islands: consecutive-month activity streaks per customer
-    "q118_activity_streaks"   -> (graft.analytics.Advanced.activityStreaks _),
-    // bitwise + boolean aggregate family (BIT_AND/OR/XOR, BOOL_AND/OR)
-    "q119_bit_aggs"           -> (graft.analytics.Advanced.bitAggs _),
-    // deterministic arg-extremes via max_by/min_by on a packed unique key
-    "q120_arg_extremes"       -> (graft.analytics.Advanced.argExtremes _),
-    // rolling exact median over a ROWS frame, integer-cents determinism
-    "q121_rolling_median"     -> (graft.analytics.Advanced.rollingMedian _),
-    // correlated EXISTS/NOT EXISTS + scalar subquery, one portable string
-    "q122_exists_churn"       -> (graft.sql.Catalog.existsChurn _),
-    // extended calendar family: last_day/add_months/quarter/ISO week
-    "q123_date_funcs"         -> (graft.analytics.Advanced.dateFuncs _),
-    // ordered string_agg via collect_list -> array_sort -> array_join
-    "q124_string_agg"         -> (graft.analytics.Advanced.stringAgg _),
-    // exactly-reproducible stratified downsample (rank mod k per stratum)
-    "q125_stratified_take"    -> (graft.analytics.Advanced.stratifiedTake _),
-    // SCD2 consumption: point-in-time effective-dated dimension lookup
-    "q126_scd2_lookup"        -> (graft.analytics.Advanced.scd2PointLookup _),
-    // schema evolution: unionByName with null-filled missing columns
-    "q127_union_by_name"      -> (graft.analytics.Advanced.unionByNameEvolution _),
-    // full MERGE contract: update + delete verbs in one keyed window pass
-    "q128_merge_deletes"      -> (graft.analytics.Advanced.mergeWithDeletes _),
-    // publish-gate data-quality audit: uniqueness, orphans, domains
-    "q129_dq_audit"           -> (graft.analytics.Advanced.dqAudit _),
-    // sixth streaming surface: flatMapGroupsWithState sessionization,
-    // every closed session hash-equal to the batch gaps-and-islands build
-    "q130_sessionize_parity"  -> (graft.streaming.EventStream.sessionizeParity _),
-    // exact 13-gram benchmark decontamination across source boundaries
-    "q131_ngram_contamination" -> ((s, d) =>
-      graft.dedup.Dedup.ngramContamination(s, d)),
-    // fourth storage lever: bin-packed compaction of a fragmented layout
-    "q132_compaction"         -> (graft.sources.Sinks.compactRoundTrip _),
-    // Gopher-style duplicate-n-gram repetition quality signal per source
-    "q133_repetition_ratio"   -> ((s, d) =>
-      graft.text.TextOps.repetitionSummary(s, d)),
-    // event-time RANGE frame: trailing 30-min count+sum per user
-    "q134_trailing_range_window" -> (graft.analytics.Advanced.trailingRangeWindow _),
-    // per-source token-budget training-mix assembly (quality-ranked prefix)
-    "q136_token_budget_mix"   -> ((s, d) =>
-      graft.text.TextOps.tokenBudgetMix(s, d)),
-    // seventh streaming surface: LEFT OUTER stream-stream interval join —
-    // null emission = watermark-driven state eviction, hash-equal to batch
-    "q135_outer_join_parity"  -> (graft.streaming.EventStream.outerJoinParity _),
-    // fifth storage lever: Z-order (Morton) 2-D clustering round-trip
-    "q137_zorder_skip"        -> (graft.sources.Sinks.zorderRoundTrip _),
-    // terminal layout lever: stable hash-sharded corpus export with
-    // per-shard xor content checksums
-    "q139_sharded_export"     -> (graft.sources.Sinks.shardedExportRoundTrip(_, _)),
-    // cross-document boilerplate via per-source n-gram document frequency
-    "q138_boilerplate_df"     -> ((s, d) =>
-      graft.text.TextOps.boilerplateSummary(s, d)),
-    // temperature-scaled (n^0.5) training-mix source weights + targets
-    "q140_temperature_mix"    -> ((s, d) =>
-      graft.text.TextOps.temperatureMix(s, d)),
-    // embedding-side quality filter: per-label centroid-distance outliers
-    "q141_centroid_outliers"  -> ((s, d) =>
-      graft.similarity.Similarity.centroidOutliers(s, d)),
-    // graph centrality: 10-iteration weighted PageRank on the aggregated
-    // event-type transition graph, decimal-routed per iteration
-    "q142_transition_pagerank" -> ((s, d) =>
-      graft.analytics.Advanced.transitionPageRank(s, d)),
-    // eighth streaming surface: exactly-once across a job restart — two
-    // AvailableNow runs sharing one checkpoint equal the batch aggregate
-    "q143_incremental_restart" -> (graft.streaming.EventStream.incrementalRestartParity _),
-    // RNG-free length-proportional sampling: PPS systematic per source
-    "q144_pps_sample"         -> ((s, d) => graft.text.TextOps.ppsSample(s, d)),
-    // concat-and-chunk packing stats: fixed-size training windows
-    "q145_sequence_packing"   -> ((s, d) =>
-      graft.text.TextOps.sequencePacking(s, d)),
-    // row-level bad-records histogram: constraint bitmask routing
-    "q146_quarantine_routing" -> (graft.analytics.Advanced.quarantineRouting _),
-    // ninth streaming surface: foreachBatch DUAL-sink routing (clean /
-    // quarantine), replay-idempotent via per-batch overwrite
-    "q147_quarantine_dual_sink" -> (graft.streaming.EventStream.quarantineDualSink _),
-    // snapshot reconciliation: added/removed/changed diff of two
-    // materialized generations, per-column change counts
-    "q148_snapshot_diff"      -> (graft.analytics.Advanced.snapshotDiff _),
-    // frequent-itemset primitive: per-basket co-occurrence pair counts
-    "q149_copurchase_pairs"   -> ((s, d) =>
-      graft.analytics.Advanced.copurchasePairs(s, d)),
-    // per-source dataset card: volume, quality, embedding coverage, dups
-    "q150_dataset_card"       -> (graft.text.TextOps.datasetCard _),
-    // behavioral analytics: last-touch conversion attribution (24 h)
-    "q151_last_touch"         -> ((s, d) =>
-      graft.analytics.Advanced.lastTouchAttribution(s, d)),
-    // table profiling: per-column null + exact distinct census, one scan
-    // (approx = false: the oracle twin; approx HLL++ is the at-scale
-    // default, band-pinned against this in ColumnProfileSpec)
-    "q152_column_profile"     -> ((s, d) =>
-      graft.analytics.Advanced.columnProfile(s, d, approx = false)),
-    // daily-increment dedup: incoming batch vs persisted content index
-    "q153_incremental_dedup"  -> (graft.dedup.Dedup.incrementalDedup _),
-    // fuzzy increment: LSH index probe + best verified match per new doc
-    "q154_incremental_neardup" -> ((s, d) =>
-      graft.dedup.Dedup.incrementalNearDup(s, d)),
-    // equal-frequency discretization: per-flag ntile bins with boundaries
-    "q155_equifreq_bins"      -> ((s, d) =>
-      graft.analytics.Advanced.equifreqBins(s, d)),
-    // feature-selection profiling: all-pairs correlation matrix, one scan
-    "q156_corr_matrix"        -> (graft.analytics.Advanced.corrMatrix _),
-    // time-series co-movement: trailing 30-day rolling correlation
-    "q157_rolling_corr"       -> ((s, d) =>
-      graft.analytics.Advanced.rollingCorr(s, d)),
-    // exponential smoothing: 16-term EWMA of daily revenue, exact weights
-    "q158_ewma_daily"         -> ((s, d) =>
-      graft.analytics.Advanced.ewmaDaily(s, d)),
-    // product analytics: view→purchase conversion latency percentiles
-    "q159_conversion_latency" -> (graft.analytics.Advanced.conversionLatency _),
-    // reproducible 80/10/10 split manifest with leakage-audit stats
-    "q160_split_manifest"     -> ((s, d) =>
-      graft.text.TextOps.splitManifest(s, d)),
-    // daily-ingest composite: exact gate → LSH probe → quality → budget
-    "q162_incremental_admission" -> ((s, d) =>
-      graft.dedup.Dedup.incrementalAdmission(s, d)),
-    // multimodal dedup: exact payload hash-groupBy over the binary column
-    "q161_media_dedup_exact"  -> ((s, d) =>
-      graft.multimodal.Multimodal.mediaDedupExact(s, d)),
-    // multimodal near-dup: block fingerprints + integer Jaccard verify
-    "q163_media_neardup"      -> ((s, d) =>
-      graft.multimodal.Multimodal.mediaNearDup(s, d)),
-    // embedding-level decontamination: eval batch vs train split, LSH+verify
-    "q164_split_leakage"      -> ((s, d) =>
-      graft.similarity.Similarity.crossSplitLeakage(s, d)),
-    // Zipf head: vocab size needed for 50/90/95/99% token coverage
-    "q165_vocab_coverage"     -> ((s, d) =>
-      graft.text.TextOps.vocabCoverage(s, d)),
-    // coreset sampling: greedy max-min (k-center) diverse exemplar pick
-    "q166_diverse_select"     -> ((s, d) =>
-      graft.similarity.Similarity.diverseSelect(s, d)),
-    // tokenizer design: per-source BPE fertility + chars-per-token
-    "q167_tokenizer_fertility" -> ((s, d) =>
-      graft.text.TextOps.tokenizerFertility(s, d)),
-    // media dedup output: canonical keep per component, per-kind summary
-    "q168_media_keep"         -> ((s, d) =>
-      graft.multimodal.Multimodal.mediaKeepSummary(s, d)),
-    // tenth streaming surface: incremental dedup across micro-batches
-    "q169_incremental_dedup_stream" -> ((s, d) =>
-      graft.streaming.EventStream.incrementalDedupStreamParity(s, d)),
-    // vector-index storage lever: persisted IVF answers q61 identically
-    "q170_ann_ivf_persisted"  -> ((s, d) =>
-      graft.similarity.Similarity.annIvfPersisted(s, d)),
-    // memory-compressed ANN: int8 scalar quantization + exact re-rank
-    "q171_ann_sq8"            -> ((s, d) =>
-      graft.similarity.Similarity.annSq8(s, d)),
-    // production canonical rule: keep the highest-QUALITY dup, not min-id
-    "q172_quality_keep"       -> ((s, d) =>
-      graft.dedup.Dedup.qualityKeepSummary(s, d)),
-    // post-dedup accounting: surviving tokens per source + keep ratio
-    "q173_dedup_token_budget" -> ((s, d) =>
-      graft.dedup.Dedup.dedupTokenBudget(s, d)),
-    // train/heldout near-dup leakage: the MinHash complement of q131
-    "q174_split_text_leakage" -> ((s, d) =>
-      graft.dedup.Dedup.crossSplitTextLeakage(s, d)),
-    // split-quality audit in embedding space: pairwise centroid drift
-    "q175_split_centroid_drift" -> ((s, d) =>
-      graft.similarity.Similarity.splitCentroidDrift(s, d)),
-    // mix planning census: lang × quality tier × length bucket, one pass
-    "q176_stratification"     -> ((s, d) =>
-      graft.text.TextOps.stratificationMatrix(s, d)),
-    // ANN tuning curve: recall@k + candidate cost per LSH plane count
-    "q177_ann_tuning_sweep"   -> ((s, d) =>
-      graft.similarity.Similarity.annTuningSweep(s, d)),
-    // user-journey mining: top event-type paths per 2h-gap session
-    "q178_session_paths"      -> ((s, d) =>
-      graft.analytics.Advanced.sessionPaths(s, d)),
-    // behavioral model eval: Markov argmax fit on train users, held-out acc
-    "q179_markov_eval"        -> ((s, d) =>
-      graft.analytics.Advanced.markovEval(s, d)),
-    // ship-the-dataset: dedup+quality curation → sharded export → manifest
-    "q180_curated_export"     -> ((s, d) =>
-      graft.dedup.Dedup.curatedExport(s, d)),
-    // SemDeDup: spherical-quantizer cells + earliest-exemplar cosine prune
-    "q181_semdedup"           -> ((s, d) =>
-      graft.similarity.Similarity.semDedup(s, d)),
-    // context-window chunking: overlapping windows + per-chunk digest
-    "q182_chunk_docs"         -> ((s, d) =>
-      graft.text.TextOps.chunkDocs(s, d)),
-    // corpus-health diagnostic: log-log OLS over the frequency head
-    "q183_zipf_fit"           -> ((s, d) =>
-      graft.text.TextOps.zipfFit(s, d)),
-    // trained multinomial NB lang classifier, held-out confusion matrix
-    "q184_naive_bayes_lang"   -> ((s, d) =>
-      graft.text.TextOps.naiveBayesLang(s, d)),
-    // CCNet-style bigram-LM perplexity quality scoring of held-out docs
-    "q185_bigram_ppl"         -> ((s, d) =>
-      graft.text.TextOps.bigramPerplexity(s, d)),
-    // serving-side dynamic batching: length buckets + per-batch fill
-    "q186_length_batches"     -> ((s, d) =>
-      graft.text.TextOps.lengthBucketBatches(s, d)),
-    // paragraph-granularity dedup gate: cross-doc duplicated-chunk ratio
-    "q187_chunk_dup_ratio"    -> ((s, d) =>
-      graft.dedup.Dedup.chunkDupRatio(s, d)),
-    // per-doc first-occurrence shingle novelty — cross-corpus repetition
-    "q188_gram_novelty"       -> ((s, d) =>
-      graft.dedup.Dedup.gramNovelty(s, d)),
-    // source x source token-frequency cosine — mix-redundancy diagnostic
-    "q189_source_vocab_cosine" -> ((s, d) =>
-      graft.text.TextOps.sourceVocabCosine(s, d)),
-    // asymmetric containment dedup: quote/excerpt pairs Jaccard misses
-    "q190_containment_pairs"  -> ((s, d) =>
-      graft.dedup.Dedup.containmentPairs(s, d)),
-    // robust (median/MAD) outlier census — q93's masking-proof twin
-    "q191_mad_outliers"       -> ((s, d) =>
-      graft.analytics.Advanced.madOutliers(s, d)),
-    // per-lang JS divergence train vs heldout — split exchangeability
-    "q192_split_token_drift"  -> ((s, d) =>
-      graft.text.TextOps.splitTokenDrift(s, d)),
-    // DSIR: hashed-bigram importance weights vs the quality-target tier
-    "q193_dsir_weights"       -> ((s, d) =>
-      graft.text.TextOps.dsirWeights(s, d)),
-    // 11th streaming surface: unbounded-horizon per-key numeric state
-    "q194_ewma_stream"        -> ((s, d) =>
-      graft.streaming.EventStream.ewmaStreamParity(s, d)),
-    // Bloom-prefiltered index probe: broadcast bits gate the exact join
-    "q195_bloom_prefilter"    -> ((s, d) =>
-      graft.dedup.Dedup.bloomPrefilterDedup(s, d)),
-    // waterfill: equal-share token budget with capped-source redistribution
-    "q196_token_waterfill"    -> ((s, d) =>
-      graft.text.TextOps.tokenWaterfill(s, d)),
-    // Neyman: variance-optimal stratified sample sizing (pairs with q144)
-    "q197_neyman_alloc"       -> ((s, d) =>
-      graft.analytics.Advanced.neymanAllocation(s, d)),
-    // hour-of-day robust baseline: seasonal median/MAD anomaly census
-    "q198_seasonal_anomaly"   -> ((s, d) =>
-      graft.analytics.Advanced.seasonalAnomaly(s, d)),
-    // hybrid-search diagnostic: lexical vs dense top-k overlap per query
-    "q199_retrieval_agreement" -> ((s, d) =>
-      graft.similarity.Similarity.retrievalAgreement(s, d)),
-    // release gate: per-source go/no-go conjunction over the q150 card
-    "q200_release_gate"       -> ((s, d) =>
-      graft.text.TextOps.releaseGate(s, d)),
-    // product quantization: per-block Lloyd codebooks + reconstruction MSE
-    "q201_pq_codebook"        -> ((s, d) =>
-      graft.ml.PqCodebook.pqCodebooks(s, d)),
-    // Efraimidis-Spirakis: one-pass weighted sample WITHOUT replacement
-    "q202_es_weighted_sample" -> ((s, d) =>
-      graft.text.TextOps.esWeightedSample(s, d)),
-    // Welch unequal-variance t matrix — the A/B mean-difference screen
-    "q203_welch_pairs"        -> ((s, d) =>
-      graft.analytics.Advanced.welchPairs(s, d)),
-    // Benford first-digit audit — fabricated-amount anomaly screen
-    "q204_benford"            -> ((s, d) =>
-      graft.analytics.Advanced.benfordAudit(s, d)),
-    // PSI: reference-decile population-stability drift per event type
-    "q205_psi_drift"          -> ((s, d) =>
-      graft.analytics.Advanced.psiDrift(s, d)),
-    // Apriori-gated support/confidence/lift over co-purchase baskets
-    "q206_association_rules"  -> ((s, d) =>
-      graft.analytics.Advanced.associationRules(s, d)),
-    // per-source quality deciles vs global — quantile-normalization map
-    "q207_quantile_calibration" -> ((s, d) =>
-      graft.text.TextOps.quantileCalibration(s, d)),
-    // tie-corrected rank-sum test, one global ranking for all types
-    "q208_mann_whitney"       -> ((s, d) =>
-      graft.analytics.Advanced.mannWhitney(s, d)),
-    // max-ECDF-gap two-sample distribution-shape test
-    "q209_ks_two_sample"      -> ((s, d) =>
-      graft.analytics.Advanced.ksTwoSample(s, d)),
-    // per-source Gini of token mass — corpus concentration/diversity
-    "q210_gini_concentration" -> ((s, d) =>
-      graft.text.TextOps.giniConcentration(s, d)),
-    // PQ-ADC search: code-only scan + per-query LUT, recall vs exact
-    "q211_pq_adc_recall"      -> ((s, d) =>
-      graft.ml.PqCodebook.pqAdcRecall(s, d)),
-    // 12th streaming surface: broadcast boundaries + windowed histogram
-    "q212_stream_drift_hist"  -> ((s, d) =>
-      graft.streaming.EventStream.driftHistogramParity(s, d)),
-    // hash-skew pre-flight: bucket loads + heavy keys, engine-neutral
-    "q213_skew_audit"         -> ((s, d) =>
-      graft.analytics.Advanced.skewAudit(s, d)),
-    // stratified k-fold manifest: exact per-class balance, pure-id folds
-    "q214_stratified_kfold"   -> ((s, d) =>
-      graft.analytics.Advanced.stratifiedKfold(s, d)),
-    // scaling-law ladder: nested hash-threshold subsets 1/64..1
-    "q215_learning_ladder"    -> ((s, d) =>
-      graft.text.TextOps.learningCurveLadder(s, d)),
-    // PMI collocations: ln(N c(ab) / c(a)c(b)) phrase-mining candidates
-    "q216_pmi_collocations"   -> ((s, d) =>
-      graft.text.TextOps.pmiCollocations(s, d)),
-    // JL projection distortion: 64->16-dim distance-preservation audit
-    "q217_jl_distortion"      -> ((s, d) =>
-      graft.similarity.Similarity.jlDistortion(s, d)),
-    // cross-table FK orphan audit over every schema edge
-    "q218_fk_audit"           -> ((s, d) =>
-      graft.analytics.Advanced.fkAudit(s, d)),
-    // chunk-level lang votes: mixed-language / code-switching detection
-    "q219_code_switching"     -> ((s, d) =>
-      graft.text.TextOps.codeSwitching(s, d)),
-    // per-source Shannon entropy + KL vs corpus — info-theoretic mix view
-    "q220_source_entropy"     -> ((s, d) =>
-      graft.text.TextOps.sourceEntropy(s, d)),
-    // Church-Gale burstiness: VMR of per-doc counts, topical-token signal
-    "q221_token_burstiness"   -> ((s, d) =>
-      graft.text.TextOps.tokenBurstiness(s, d)),
-    // crawl-snapshot marginal value: per-slice new-gram fraction
-    "q222_crawl_novelty"      -> ((s, d) =>
-      graft.dedup.Dedup.crawlSliceNovelty(s, d)),
-    // scaler fit card: mean/std/median/IQR per column — the serving contract
-    "q223_scaler_fit"         -> ((s, d) =>
-      graft.analytics.Advanced.scalerFitCard(s, d)),
-    // 5%-trimmed robust mean per group, exact rank cuts
-    "q224_trimmed_mean"       -> ((s, d) =>
-      graft.analytics.Advanced.trimmedMean(s, d)),
-    // chunk quality by structural position — the truncation-policy test
-    "q225_position_quality"   -> ((s, d) =>
-      graft.text.TextOps.positionQuality(s, d)),
-    // dedup health: connected-component size histogram
-    "q226_dup_cluster_sizes"  -> ((s, d) =>
-      graft.dedup.Dedup.dupClusterSizes(s, d)),
-    // dedup health: candidate-graph degree histogram + boilerplate hubs
-    "q227_dup_graph_degrees"  -> ((s, d) =>
-      graft.dedup.Dedup.dupGraphDegrees(s, d)),
-    // is quality just length? per-source OLS of score on ln(tokens)
-    "q228_quality_length_ols" -> ((s, d) =>
-      graft.text.TextOps.qualityLengthOls(s, d)),
-    // chance-corrected lang-ID agreement — kappa, not raw accuracy
-    "q229_lang_kappa"         -> ((s, d) =>
-      graft.text.TextOps.langKappa(s, d)),
-    // reciprocal-rank fusion: the calibration-free hybrid-search combiner
-    "q230_rrf_fusion"         -> ((s, d) =>
-      graft.similarity.Similarity.rrfFusion(s, d)),
-    // nDCG@10: lexical ranking judged by dense graded relevance
-    "q231_ndcg_lexical"       -> ((s, d) =>
-      graft.similarity.Similarity.ndcgLexical(s, d)),
-    // LSH candidates graded against the planted near-dup truth set
-    "q232_lsh_planted_pr"     -> ((s, d) =>
-      graft.dedup.Dedup.lshPlantedPr(s, d)),
-    // q211's amortized twin: build-once persisted PQ index, probe-only
-    "q233_pq_adc_persisted"   -> ((s, d) =>
-      graft.ml.PqCodebook.pqAdcPersisted(s, d)),
-    // 14th streaming surface: native session_window vs the q50 batch oracle
-    "q234_session_window_stream" -> ((s, d) =>
-      graft.streaming.EventStream.sessionWindowParity(s, d)),
-    // IVFADC: coarse cell + PQ over residuals — the FAISS IVFx,PQy shape
-    "q235_ivfadc_recall"      -> ((s, d) =>
-      graft.ml.PqCodebook.ivfAdcRecall(s, d)),
-    // nprobe sweep: the IVF recall-vs-scan-cost frontier per probe width
-    "q236_ivf_nprobe_sweep"   -> ((s, d) =>
-      graft.similarity.Similarity.ivfNprobeSweep(s, d)),
-    // longest shared token span per cross-source pair (Lee et al. dedup)
-    "q237_shared_spans"       -> ((s, d) =>
-      graft.dedup.Dedup.sharedSpans(s, d)),
-    // strip accounting: union of >=30-token shared spans per source
-    "q238_span_strip_plan"    -> ((s, d) =>
-      graft.dedup.Dedup.spanStripPlan(s, d)),
-    // PII scan: per-source redaction pre-flight over 4 pattern families
-    "q239_pii_scan"           -> ((s, d) =>
-      graft.text.TextOps.piiScan(s, d)),
-    // PII redaction: tag rewrite + xor content checksums per source
-    "q240_pii_redact"         -> ((s, d) =>
-      graft.text.TextOps.piiRedact(s, d)),
-    // next-fit sequence packing: utilization per source at 2048 tokens
-    "q241_seq_packing"        -> ((s, d) =>
-      graft.text.TextOps.seqPacking(s, d)),
-    // the whole curation pipeline as one query: per-stage attrition
-    "q242_curation_funnel"    -> ((s, d) =>
-      graft.text.TextOps.curationFunnel(s, d)),
-    // q235's amortized twin: build-once persisted IVFADC, probe-only
-    "q243_ivfadc_persisted"   -> ((s, d) =>
-      graft.ml.PqCodebook.ivfAdcPersisted(s, d)),
-    // filter ablation: solo vs marginal cost per quality rule
-    "q244_filter_ablation"    -> ((s, d) =>
-      graft.text.TextOps.filterAblation(s, d)),
-    // top principal component by bit-exact power iteration
-    "q245_pca_power"          -> ((s, d) =>
-      graft.ml.PcaPower.pcaPower(s, d)),
-    // BPE tokenizer training: first 6 merge steps, relationally
-    "q246_bpe_merges"         -> ((s, d) =>
-      graft.text.BpeTrain.bpeMerges(s, d)),
-    // 15th streaming surface: stream-stream LEFT SEMI interval join
-    "q247_semi_join_parity"   -> ((s, d) =>
-      graft.streaming.EventStream.semiJoinParity(s, d)),
-    // second principal component by deflation, same bit-exact orbit
-    "q248_pca_deflate"        -> ((s, d) =>
-      graft.ml.PcaPower.pcaDeflate(s, d)),
-    // learned-merge compression per source: the q246 eval step
-    "q249_bpe_compression"    -> ((s, d) =>
-      graft.text.BpeTrain.bpeCompression(s, d)),
-    // leave-one-source-out corpus impact: totals-minus-source valuation
-    "q250_loo_source_impact"  -> ((s, d) =>
-      graft.text.TextOps.looSourceImpact(s, d)),
-    // all-pairs KS + Benjamini-Hochberg FDR at q=0.05
-    "q251_ks_fdr"             -> ((s, d) =>
-      graft.analytics.Advanced.ksFdr(s, d)),
-    // isotonic (PAV) calibration of quality vs is-English rate
-    "q252_isotonic_calibration" -> ((s, d) =>
-      graft.text.TextOps.isotonicCalibration(s, d)),
-    // 16th streaming surface: Spark 4 transformWithState + RocksDB
-    "q253_tws_parity"         -> ((s, d) =>
-      graft.streaming.EventStream.twsParity(s, d)),
-    // dup-graph triangle census: transitivity of the near-dup relation
-    "q254_dup_graph_triangles" -> ((s, d) =>
-      graft.dedup.Dedup.dupGraphTriangles(s, d)),
-    // binned Theil-Sen robust slope: q228 OLS's robust twin
-    "q255_theil_sen"          -> ((s, d) =>
-      graft.text.TextOps.theilSen(s, d)),
-    // q252's 100-TB twin: percentile-boundary bins, same PAV algebra
-    "q256_isotonic_boundary"  -> ((s, d) =>
-      graft.text.TextOps.isotonicBoundary(s, d)),
-    // count-min sketch heavy hitters: estimate-vs-exact calibration
-    "q257_count_min"          -> ((s, d) =>
-      graft.text.TextOps.countMinTokens(s, d)),
-    // PCA projection per label: 2-D separability in the dominant plane
-    "q258_pca_projection"     -> ((s, d) =>
-      graft.ml.PcaPower.pcaProjection(s, d)),
-    // from-scratch relational HyperLogLog: oracle-checkable sketch
-    "q259_hll_distinct"       -> ((s, d) =>
-      graft.text.TextOps.hllDistinct(s, d)),
-    // 17th streaming surface: incremental HLL in MapState registers
-    "q260_hll_stream"         -> ((s, d) =>
-      graft.streaming.EventStream.hllStreamParity(s, d)),
-    // 18th streaming surface: ListState bounded replay buffer
-    "q261_replay_buffer"      -> ((s, d) =>
-      graft.streaming.EventStream.replayParity(s, d)),
-    // tombstoned IVF: deletions excluded at probe time, no rebuild
-    "q262_ivf_tombstones"     -> ((s, d) =>
-      graft.similarity.Similarity.annIvfTombstones(s, d)),
-    // q251's 100-TB twin: KS on pooled percentile-boundary support
-    "q263_ks_fdr_binned"      -> ((s, d) =>
-      graft.analytics.Advanced.ksFdrBinned(s, d)),
-    // 19th streaming surface: event-time timers close trailing sessions
-    "q264_timer_sessions"     -> ((s, d) =>
-      graft.streaming.EventStream.timerSessionParity(s, d)),
-    // tombstone compaction: cell-local generational rewrite, q262 oracle
-    "q265_ivf_compacted"      -> ((s, d) =>
-      graft.similarity.Similarity.annIvfCompacted(s, d)),
-    // top-r PCA in ONE blocked orthogonal-iteration chain (r=4)
-    "q266_pca_block"          -> ((s, d) =>
-      graft.ml.PcaPower.pcaBlock(s, d)),
-    // learned quality/language filter: full-batch GD logistic regression
-    "q267_logit_gd"           -> ((s, d) =>
-      graft.ml.LogitGd.logitGd(s, d)),
-    // alpha-tempered source sampling weights (p_i ~ tokens^0.3)
-    "q268_alpha_mix"          -> ((s, d) =>
-      graft.text.TextOps.alphaMix(s, d)),
-    // hash-batched epoch shuffle manifest: no global sort anywhere
-    "q269_epoch_batches"      -> ((s, d) =>
-      graft.text.TextOps.epochBatches(s, d)),
-    // 20th streaming surface: additive count-min registers in MapState
-    "q270_cm_stream"          -> ((s, d) =>
-      graft.streaming.EventStream.cmStreamParity(s, d)),
-    // diversity-aware retrieval: greedy MMR over the relevance pool
-    "q271_mmr_rerank"         -> ((s, d) =>
-      graft.similarity.Similarity.mmrRerank(s, d)),
-    // LSH (bands, rows) sweep: observed recall vs the analytic S-curve
-    "q272_lsh_tuning"         -> ((s, d) =>
-      graft.dedup.Dedup.lshTuning(s, d)),
-    // Zipf made operational: corpus coverage per vocab budget
-    "q273_vocab_coverage"     -> ((s, d) =>
-      graft.text.TextOps.vocabBudgetCoverage(s, d)),
-    // pairwise 13-gram source overlap: the decontamination triage matrix
-    "q274_source_overlap"     -> ((s, d) =>
-      graft.dedup.Dedup.sourceOverlap(s, d)),
-    // contrastive-pair export: hardest negative/positive per query
-    "q275_hard_negatives"     -> ((s, d) =>
-      graft.similarity.Similarity.hardNegatives(s, d)),
-    // degenerate-text gate: period-1..3 token loop census per source
-    "q276_repetition_loops"   -> ((s, d) =>
-      graft.text.TextOps.repetitionLoops(s, d)),
-    // index INSERT path: cell-append under fixed centroids, no retrain
-    "q277_ivf_upsert"         -> ((s, d) =>
-      graft.similarity.Similarity.annIvfUpsert(s, d)),
-    // q145 at the three real context budgets + overall fill pct
-    "q279_packing_sweep"      -> ((s, d) =>
-      graft.text.TextOps.packingSweep(s, d)),
-    // hash-routed train/val/test with per-label share audit
-    "q280_stratified_split"   -> ((s, d) =>
-      graft.similarity.Similarity.stratifiedSplit(s, d)),
-    // decontamination certificate: strip q238's plan, re-detect, report
-    "q281_strip_verify"       -> ((s, d) =>
-      graft.dedup.Dedup.stripVerify(s, d)),
-    // word2vec-style unigram^0.75 negative-sampling alias table
-    "q282_noise_table"        -> ((s, d) =>
-      graft.text.TextOps.noiseTable(s, d)),
-    // C4 duplicate-sentence rule as a per-source census
-    "q283_sentence_dedup"     -> ((s, d) =>
-      graft.text.TextOps.sentenceDedup(s, d)),
-    // 21st streaming surface: token-bucket quota state, integer-exact
-    "q284_rate_limiter"       -> ((s, d) =>
-      graft.streaming.EventStream.rateLimiterParity(s, d)),
-    // MRL deployment eval: recall at each stored-prefix width
-    "q285_matryoshka_recall"  -> ((s, d) =>
-      graft.similarity.Similarity.matryoshkaRecall(s, d)),
-    // 64x compression eval: sign-bit vectors, Hamming top-k vs float
-    "q286_sign_hamming"       -> ((s, d) =>
-      graft.similarity.Similarity.signHammingSearch(s, d)),
-    // active learning: the docs nearest the 0.5 decision boundary
-    "q287_uncertainty_sample" -> ((s, d) =>
-      graft.ml.LogitGd.uncertaintySample(s, d)),
-    // consistent placement: rendezvous shards + the N->N+1 move census
-    "q288_rendezvous_shards"  -> ((s, d) =>
-      graft.text.TextOps.rendezvousShards(s, d)),
-    // tokenizer robustness: q246 merges retrained on each corpus half
-    "q289_bpe_stability"      -> ((s, d) =>
-      graft.text.BpeTrain.bpeStability(s, d)),
-    // pre-shuffle skew audit: top-key shares + normalized key entropy
-    "q290_key_skew_audit"     -> ((s, d) =>
-      graft.analytics.Advanced.keySkewAudit(s, d)),
-    // does duplication track quality? point-biserial per source
-    "q291_dup_quality_corr"   -> ((s, d) =>
-      graft.dedup.Dedup.dupQualityCorr(s, d)),
-    // embedding geometry QA: pair cosine, norm CV, center-norm ratio
-    "q293_anisotropy"         -> ((s, d) =>
-      graft.similarity.Similarity.anisotropyReport(s, d)),
-    // RAG ingestion plan: sliding-window chunk census in closed form
-    "q294_rag_chunking"       -> ((s, d) =>
-      graft.text.TextOps.ragChunking(s, d)),
-    // 22nd streaming surface: LEFT ANTI interval join — absence is
-    // watermark-certified eviction (completes the join family)
-    "q295_anti_join_parity"   -> ((s, d) =>
-      graft.streaming.EventStream.antiJoinParity(s, d)),
-    // label-noise census: cell-local leave-one-out 1-NN agreement
-    "q296_label_noise"        -> ((s, d) =>
-      graft.similarity.Similarity.labelNoiseCensus(s, d)),
-    // 23rd streaming surface: per-key state under TTL — a 5 s register
-    // deterministically evicts across the two-run gap, a 60 min one
-    // survives; the oracle encodes the same horizon
-    "q297_ttl_state"          -> ((s, d) =>
-      graft.streaming.EventStream.ttlStateParity(s, d)),
-    // 24th streaming surface: q277's IVF insert as the ingest loop —
-    // micro-batch appends into the persisted cell layout across a
-    // checkpointed restart, probe hash-equal to the batch oracle
-    "q298_ivf_upsert_stream"  -> ((s, d) =>
-      graft.similarity.Similarity.annIvfUpsertStream(s, d)),
-    // source-pair MinHash Jaccard (shard-merged signatures) vs exact,
-    // with absolute error — q274's sketch twin
-    "q299_source_minhash"     -> ((s, d) =>
-      graft.dedup.Dedup.sourceMinhashJaccard(s, d)),
-    // scatter-gather exact top-k: per-shard top-k merged into the
-    // global answer, hash-equal to q31's single-scan oracle
-    "q300_scatter_topk"       -> ((s, d) =>
-      graft.similarity.Similarity.scatterGatherTopK(s, d)),
-    // deterministic Poisson-bootstrap CI on per-source mean quality:
-    // one scan, B hash-weighted replicates, order-statistic interval
-    "q301_bootstrap_ci"       -> ((s, d) =>
-      graft.text.TextOps.bootstrapCi(s, d)),
-    // HLL set algebra: pairwise register max-merge union + inclusion-
-    // exclusion intersection estimate vs exact, with relative error
-    "q302_hll_intersect"      -> ((s, d) =>
-      graft.text.TextOps.hllIntersect(s, d)),
-    // pairwise binned 1-Wasserstein on per-source quality: q263's
-    // integral twin — total transport, not just the worst ECDF gap
-    "q303_w1_binned"          -> ((s, d) =>
-      graft.analytics.Advanced.w1Binned(s, d)),
-    // split-conformal coverage certificate on q267's classifier:
-    // distribution-free >=90% coverage, executed and measured
-    "q304_conformal"          -> ((s, d) =>
-      graft.ml.LogitGd.conformalCoverage(s, d)),
-    // filtered vector search: filter-then-rank vs rank-then-filter,
-    // with the post-filter recall loss measured per query
-    "q305_filtered_ann"       -> ((s, d) =>
-      graft.similarity.Similarity.annFiltered(s, d)),
-    // reliability table + ECE of the GD classifier's confidence —
-    // the calibration eval q267's accuracy/log-loss leave open
-    "q306_reliability_ece"    -> ((s, d) =>
-      graft.ml.LogitGd.reliabilityEce(s, d)),
-    // PCA whitening via the q266 block: anisotropy before vs after,
-    // plus explained ratio and the dominant-direction share
-    "q307_whitening"          -> ((s, d) =>
-      graft.ml.PcaPower.whitenReport(s, d)),
-    // 25th streaming surface: state SCHEMA EVOLUTION — run 2 resumes
-    // the checkpoint with a state schema that adds a nullable field
-    // (Avro encoding); no key loses history, the new metric starts at
-    // the upgrade
-    "q308_state_evolution"    -> ((s, d) =>
-      graft.streaming.EventStream.stateEvolutionParity(s, d)),
-    // 26th streaming surface: STATE-STORE READER — the q308 harness's
-    // RocksDB checkpoint read back as a batch DataFrame (statestore +
-    // state-metadata sources); the oracle recomputes the expected
-    // post-upgrade per-key state from raw events
-    "q309_state_reader"       -> ((s, d) =>
-      graft.streaming.EventStream.stateStoreRead(s, d)),
-    // hierarchical HLL rollup — q302's thousands-of-sources regime:
-    // source->group->global register max-merge, O(S·m) shuffle rows;
-    // the flat-computed oracle certifies merge associativity
-    "q310_hll_hierarchy"      -> ((s, d) =>
-      graft.text.TextOps.hllHierarchy(s, d)),
-    // filter-aware probe expansion — the third filtered-ANN strategy:
-    // widen nprobe until >= k matching candidates are covered (one
-    // cumulative window, no iteration); reports recall vs exact for
-    // home-cell-only and expanded side by side
-    "q311_filter_expand"      -> ((s, d) =>
-      graft.similarity.Similarity.annFilterExpand(s, d)),
-    // 27th streaming surface: STATE CHANGE FEED — the checkpoint's
-    // per-batch changelog read back as CDC rows (readChangeFeed over
-    // both eras of the q308 evolution harness)
-    "q312_state_change_feed"  -> ((s, d) =>
-      graft.streaming.EventStream.stateChangeFeed(s, d)),
-    // 28th streaming surface: DEDUP-STATE EVICTION visibility — a key
-    // whose within-watermark dedup state expired is admitted again
-    // (q111's bounded-state complement)
-    "q313_dedup_eviction"     -> ((s, d) =>
-      graft.streaming.EventStream.dedupEvictionParity(s, d)),
-    // multi-probe sign-LSH — the LSH family's nprobe analogue: home
-    // bucket vs home + 8 flip-1 buckets, exact-cosine re-rank, recall
-    // vs the float top-k for both strategies
-    "q314_multiprobe_lsh"     -> ((s, d) =>
-      graft.similarity.Similarity.multiProbeLsh(s, d)),
-    // CUBE + grouping_id — all margins and the grand total in one
-    // Expand+aggregate pass (the multi-level OLAP aggregate)
-    "q315_cube_agg"           -> ((s, d) =>
-      graft.analytics.Relational.cubeAgg(s, d)),
-    // Spark 4 VARIANT: parse_json once into the binary type, typed
-    // path extraction via variant_get, aggregate over the typed value
-    "q316_variant_extract"    -> ((s, d) =>
-      graft.analytics.Relational.variantExtract(s, d)),
-    // 29th streaming surface: STATE TIME TRAVEL — the checkpoint as of
-    // batch 0 (pre-upgrade V1 state), completing the reader triad
-    "q317_state_time_travel"  -> ((s, d) =>
-      graft.streaming.EventStream.stateTimeTravel(s, d)),
-    // exact set-similarity join by prefix filtering (AllPairs/PPJoin):
-    // every Jaccard >= t pair with zero misses, candidates from one
-    // rarest-token-prefix equi-join — the exact complement to q28 LSH
-    "q318_prefix_sim_join"    -> ((s, d) =>
-      graft.dedup.Dedup.prefixSimJoin(s, d)),
-    // 30th streaming surface: MapState READ-BACK — the q270 count-min
-    // matrix read from the checkpoint, every populated cell vs the
-    // relational rebuild (the reader extended to collection state)
-    "q319_cm_state_read"      -> ((s, d) =>
-      graft.streaming.EventStream.cmStateRead(s, d)),
-    // winnowing (MOSS): guaranteed-detection fingerprint selection —
-    // window-min of packed (hash,pos) keys, postings-capped match join
-    "q320_winnow_fingerprints" -> ((s, d) =>
-      graft.dedup.Dedup.winnowMatches(s, d)),
-    // the vocab ARTIFACT of q246's training: token inventory with corpus
-    // share + cumulative coverage + single-char residue, from the
-    // word-type state (no second corpus scan)
-    "q321_bpe_vocab"          -> ((s, d) =>
-      graft.text.BpeTrain.bpeVocab(s, d)),
-    // Dataset.observe: data-quality counters riding the production
-    // action's scan via CollectMetrics — zero extra jobs at 100 TB
-    "q322_observe_metrics"    -> ((s, d) =>
-      graft.analytics.Relational.observeMetrics(s, d)),
-    // Hilbert-clustered layout: q137's Z-order lever with the unit-step
-    // curve — tighter per-row-group boxes, same lossless round-trip
-    "q323_hilbert_skip"       -> (graft.sources.Sinks.hilbertRoundTrip _),
-    // parquet schema evolution on read: two vintages, one mergeSchema
-    // scan — old files surface the added column as NULL, no rewrite
-    "q324_merge_schema"       -> (graft.sources.Sinks.mergeSchemaRead _),
-    // 2-core of the dup candidate graph: peel pendant evidence, keep
-    // cycle-corroborated clusters — the auto-dedup safety cut
-    "q325_kcore"              -> ((s, d) =>
-      graft.dedup.Dedup.kcore(s, d)),
-    // CUPED: pre-period covariate adjustment — the experimentation
-    // platform's variance-reduction primitive, one event scan
-    "q326_cuped"              -> ((s, d) =>
-      graft.analytics.Advanced.cupedAdjust(s, d)),
-    // record linkage: LSH candidates scored by a native Jaro-Winkler
-    // Catalyst expression vs DuckDB's independent built-in
-    "q327_jw_linkage"         -> ((s, d) =>
-      graft.dedup.Dedup.jwLinkage(s, d)),
-    // rank-biased overlap: top-weighted similarity of two rankings —
-    // the chars-vs-tokens budget-proxy stability number
-    "q328_rbo_rankings"       -> ((s, d) =>
-      graft.similarity.Similarity.rboRankings(s, d)),
-    // sweep-line peak concurrency per day: netted deltas, day-clipped
-    // segments so every window stays partitioned
-    "q329_peak_concurrency"   -> ((s, d) =>
-      graft.analytics.Advanced.peakConcurrency(s, d)),
-    // token-weighted quality quantiles: the median TOKEN's quality vs
-    // the median DOC's — integer-threshold exact selection
-    "q330_weighted_quantiles" -> ((s, d) =>
-      graft.text.TextOps.weightedQuantiles(s, d)),
-    // energy distance between label clusters: the multivariate
-    // two-sample drift test for embedding space, sampled per group
-    "q331_energy_distance"    -> ((s, d) =>
-      graft.similarity.Similarity.energyDistance(s, d)),
-    // ALS matrix factorization, relationally: closed-form 2x2 ridge
-    // solves as groupBy aggregates, md5-seeded init — bit-exact twin
-    // of the MLlib flagship workload
-    "q332_als_factorize"      -> ((s, d) =>
-      graft.ml.AlsFactor.alsFactorize(s, d)),
-    // manifest-pruned scan: per-file stats table consulted at plan
-    // time — the Iceberg/Delta pruning mechanism from parts
-    "q333_manifest_prune"     -> (graft.sources.Sinks.manifestPrunedScan _),
-    // custom DataSource V2 connector: fixed-width reader with column
-    // pruning + filter pushdown, certified by round-trip hash
-    "q334_fixedwidth_dsv2"    -> (graft.sources.Sinks.fixedWidthRoundTrip _),
-    // 31st streaming surface: the custom connector's MicroBatchStream —
-    // checkpointed restart admits each file exactly once
-    "q335_fixedwidth_stream"  -> ((s, d) =>
-      graft.streaming.EventStream.fixedWidthStreamParity(s, d)),
-    // Spark 4 WITH RECURSIVE: the q63 oracle's transitive closure run
-    // natively — declarative recursion certified against the BSP loop
-    "q336_recursive_cte"      -> ((s, d) =>
-      graft.dedup.Dedup.recursiveComponents(s, d)),
-    // Spark 4 SQL UDFs, scalar + table function, both Catalyst-inlined:
-    // gap-filled histogram over a TVF spine with a declared token fn
-    "q337_sql_udf"            -> (graft.sql.Catalog.sqlUdfHistogram _),
-    // Spark 4 collations: case-insensitive grouping via UTF8_LCASE —
-    // the type carries the semantics, no lower() rewrite tax
-    "q338_collated_group"     -> ((s, d) =>
-      graft.analytics.Relational.collatedGroup(s, d)),
-    // DSv2 WRITE path: lineitem through the connector's SupportsWrite
-    // (temp files + rename-on-commit, truncate), read back + aggregated
-    "q339_fixedwidth_write"   -> (graft.sources.Sinks.fixedWidthWriteRoundTrip _),
-    // PageRank over the dup graph: relational iteration, exact-decimal
-    // per-step sums, oracle = the same walk unrolled in SQL
-    "q341_pagerank"           -> ((s, d) => graft.dedup.Dedup.pagerank(s, d)),
-    // exact distinct via Spark's bitmap aggregate family — mergeable
-    // partial state, oracle = COUNT(DISTINCT)
-    "q340_bitmap_distinct"    -> (graft.analytics.Advanced.bitmapDistinct _),
-    // autocorrelation of the hourly volume series, lags 1..3
-    "q342_acf_hourly"         -> ((s, d) =>
-      graft.analytics.Advanced.acfHourly(s, d)),
-    // Spearman rank correlation with textbook tie handling
-    "q344_spearman"           -> (graft.analytics.Advanced.spearmanCorr _),
-    // try_cast safe-parse ingestion audit over deterministic mess
-    "q345_try_cast"           -> (graft.analytics.Advanced.tryCastAudit _),
-    // ISO-SQL listagg WITHIN GROUP (Spark 4) vs DuckDB string_agg
-    "q346_listagg"            -> (graft.analytics.Advanced.listaggSuppliers _),
-    // deletion-vector merge-on-read: positional deletes applied by
-    // anti-join on (_metadata.file_path, row_index)
-    "q347_deletion_vectors"   -> (graft.sources.Sinks.deletionVectorScan _),
-    // ordered three-step conversion funnel with exact-micros latencies
-    "q348_event_funnel"       -> (graft.analytics.Advanced.eventFunnel _),
-    // per-file Bloom index pruning for point lookups on hash layouts
-    "q349_bloom_prune"        -> (graft.sources.Sinks.bloomPrunedScan _),
-    // Levenshtein-verified linkage on bounded normalized prefixes
-    "q350_edit_linkage"       -> ((s, d) =>
-      graft.dedup.Dedup.editDistanceLinkage(s, d)),
-    // runtime bloom-filter join pruning (InjectRuntimeFilter)
-    "q343_runtime_filter"     -> (graft.analytics.Advanced.runtimeFilterJoin _),
-    // LOCF gap fill over a dense calendar spine, per-day census
-    "q351_locf_gapfill"       -> (graft.analytics.Advanced.locfGapFill _),
-    // 25-row dimension as a map literal: no join operator in the plan
-    "q352_map_lookup"         -> (graft.analytics.Advanced.mapLookupDimension _),
-    // correlated scalar subqueries, division-free exact comparison
-    "q353_correlated_subq"    -> (graft.sql.Catalog.correlatedSubquery _),
-    // materialized-view delta merge vs from-scratch recompute
-    "q354_incremental_view"   -> (graft.analytics.Advanced.incrementalViewMaintenance _),
-    // ISO FILTER-clause conditional aggregates, one pass
-    "q355_filter_agg"         -> (graft.sql.Catalog.filterAgg _),
-    // 2-D skyline: collapse + strictly-greater prefix-min window
-    "q356_pareto_frontier"    -> (graft.analytics.Advanced.paretoFrontier _),
-    // exact heavy hitters: per-partition Misra-Gries + exact recount
-    "q357_heavy_hitters"      -> ((s, d) =>
-      graft.text.TextOps.heavyHitters(s, d)),
-    // GDPR crypto-shredding: per-user keys, erase = drop key row,
-    // audit via try_aes_decrypt; decrypted sums must match the oracle
-    "q358_crypto_shred"       -> (graft.analytics.Advanced.cryptoShred _),
-    // exact rolling 24h distinct users via mergeable hourly bitmaps
-    "q359_sliding_distinct"   -> (graft.analytics.Advanced.slidingDistinct _),
-    // TPC-H Q5: the 6-table star join, facts shuffle, dims broadcast
-    "q360_tpch_q5"            -> (graft.analytics.Advanced.tpchQ5 _),
-    // word2vec-style negative sampling: capped integer sampling table,
-    // seeded 60-bit draws, broadcast interval probe
-    "q361_negative_sampling"  -> ((s, d) =>
-      graft.text.TextOps.negativeSampling(s, d)),
-    // time-weighted average: piecewise-constant hold, exact decimal×us
-    "q362_twap"               -> (graft.analytics.Advanced.twapByUser _),
-    // SQL PIVOT clause (multi-agg, aliased values)
-    "q363_sql_pivot"          -> (graft.sql.Catalog.sqlPivot _),
-    // SQL UNPIVOT clause folded into a per-metric rollup
-    "q364_sql_unpivot"        -> (graft.sql.Catalog.sqlUnpivot _),
-    // order-independent result certificate: count + xor + modular sum
-    "q365_result_fingerprint" -> (graft.analytics.Advanced.resultFingerprint _),
-    // orphan-FK census across the star schema (null-safe anti joins)
-    "q366_referential_audit"  -> (graft.analytics.Advanced.referentialAudit _),
-    // in-plan calendar spine with integer calendar attributes
-    "q367_calendar_dim"       -> (graft.analytics.Advanced.calendarDim _),
-    // one-pass latest-record-per-key via max_by (vs rank-window oracle)
-    "q368_latest_per_key"     -> (graft.analytics.Advanced.latestPerUser _),
-    // unionByName allowMissingColumns: by-name alignment + null fill
-    "q369_schema_union"       -> (graft.analytics.Advanced.schemaEvolvingUnion _),
-    // null-safe equality join: NULL keys match, still an equi hash join
-    "q370_nullsafe_join"      -> (graft.analytics.Advanced.nullSafeJoin _),
-    // M8 elbow protocol (k sweep, WSSSE + silhouette, argmax best) made
-    // bit-exact over the deterministic Lloyd twin
-    "q371_elbow_exact"        -> (graft.ml.LloydExact.elbowExact _),
-    // TPC-H Q7: nation joined twice, post-join direction disjunction
-    "q372_tpch_q7"            -> (graft.analytics.Advanced.tpchQ7 _),
-    // TPC-H Q8: conditional-aggregate market share in one pass
-    "q373_tpch_q8"            -> (graft.analytics.Advanced.tpchQ8 _),
-    // TPC-H Q10: early-pruned fact-fact join, global top-20
-    "q374_tpch_q10"           -> (graft.analytics.Advanced.tpchQ10 _),
-    // TPC-H Q14: promo revenue share, one conditional-agg pass
-    "q375_tpch_q14"           -> (graft.analytics.Advanced.tpchQ14 _),
-    // TPC-H Q18: aggregate-HAVING-then-rejoin large-volume customers
-    "q376_tpch_q18"           -> (graft.analytics.Advanced.tpchQ18 _),
-    // TPC-H Q19: mixed-table OR-of-ANDs disjunctive predicate
-    "q377_tpch_q19"           -> (graft.analytics.Advanced.tpchQ19 _),
-    // native NFC normalization expression vs DuckDB's utf8proc builtin
-    "q378_nfc_census"         -> (graft.text.TextOps.nfcCensus _),
-    // Spark 4 VARIANT: render -> parse_json shred -> typed variant_get
-    "q379_variant_extract"    -> (graft.analytics.Advanced.variantExtract _),
-    // mergeable histogram-quantile sketch + exact interpolated twin
-    "q380_hist_quantiles"     -> ((s, d) =>
-      graft.analytics.Advanced.histQuantiles(s, d)),
-    // Count-Min inner-product join-size estimate vs exact self-join size
-    "q381_cm_join_size"       -> ((s, d) =>
-      graft.text.TextOps.cmJoinSize(s, d)),
-    // one projection through all five sinks -> five identical fingerprints
-    "q382_format_certificate" -> (graft.sources.Sinks.formatCertificate _),
-    // KMV bottom-k distinct sketch: per-source + merged-union estimates
-    "q383_kmv_distinct"       -> ((s, d) =>
-      graft.text.TextOps.kmvDistinct(s, d)),
-    // hash-deterministic bootstrap CI: 60 half-samples from one md5/row
-    "q384_bootstrap_ci"       -> ((s, d) =>
-      graft.analytics.Advanced.bootstrapCi(s, d)),
-    // robust stats: exact MAD, 3-MAD outlier census, winsorized mean
-    "q385_robust_stats"       -> (graft.analytics.Advanced.robustStats _),
-    // integer-exact CUSUM changepoint scan over daily volumes
-    "q386_cusum_changepoint"  -> (graft.analytics.Advanced.cusumChangepoint _),
-    // document-level co-occurrence PMI over a bounded top-df vocabulary
-    "q387_cooc_pmi"           -> ((s, d) =>
-      graft.text.TextOps.coocPmi(s, d)),
-    // Gini concentration + top-decile share, integer-exact rank moment
-    "q388_gini_concentration" -> (graft.analytics.Advanced.giniConcentration _),
-    // Heaps'-law vocab growth: first-slice occurrence + bounded cum frame
-    "q389_heaps_curve"        -> ((s, d) =>
-      graft.text.TextOps.heapsCurve(s, d)),
-    // TPC-H Q21: triple-correlated EXISTS/NOT-EXISTS decorrelated to
-    // one lineitem scan + two shrinking aggregates
-    "q390_tpch_q21"           -> (graft.analytics.Advanced.tpchQ21 _),
-    // TPC-H Q17: correlated scalar aggregate via one part-grain
-    // pre-aggregate join, integer-exact threshold
-    "q391_tpch_q17"           -> (graft.analytics.Advanced.tpchQ17 _),
-    // TPC-H Q4: EXISTS -> LEFT SEMI with mixed equi+non-equi condition
-    "q392_tpch_q4"            -> (graft.analytics.Advanced.tpchQ4 _),
-    // TPC-H Q13: left-join-then-histogram, zero-order customers kept
-    "q393_tpch_q13"           -> (graft.analytics.Advanced.tpchQ13 _),
-    // TPC-H Q16: NOT IN -> broadcast anti join + distinct census
-    "q394_tpch_q16"           -> (graft.analytics.Advanced.tpchQ16 _),
-    // TPC-H Q22: integer-exact scalar-average threshold + anti join
-    "q395_tpch_q22"           -> (graft.analytics.Advanced.tpchQ22 _),
-    // TPC-H Q2: correlated MIN-equality via shrinking agg join-back
-    "q396_tpch_q2"            -> (graft.analytics.Advanced.tpchQ2 _),
-    // TPC-H Q11: group-HAVING against a global scalar, exact fraction
-    "q397_tpch_q11"           -> (graft.analytics.Advanced.tpchQ11 _),
-    // TPC-H Q15: aggregate-of-aggregate argmax on exact decimals
-    "q398_tpch_q15"           -> (graft.analytics.Advanced.tpchQ15 _),
-    // TPC-H Q20: nested-aggregate EXISTS chain -> semi-join reduction
-    "q399_tpch_q20"           -> (graft.analytics.Advanced.tpchQ20 _),
-    // Spark 4 native XML (SPARK-44265) joins the round-trip family:
-    // write <line> rows, read back with the explicit schema, aggregate
-    "q400_xml_roundtrip"      -> ((s, d) => graft.sources.Sinks.formatRoundTrip(s, d, "xml")),
-    // exact quantiles with NO sort and NO row shuffle: iterative
-    // monotone-histogram selection, one scan per 256-way level
-    "q401_exact_quantiles"    -> (graft.analytics.ExactQuantile.exactQuantiles _),
-    // interpolated Kneser-Ney bigram perplexity: the CCNet-style
-    // LM-quality filter, all stats from one bigram-type frame
-    "q402_kn_perplexity"      -> ((s, d) =>
-      graft.text.TextOps.knPerplexity(s, d)),
-    // MAUVE-style pairwise Jensen-Shannon drift over shared Lloyd cells
-    "q403_js_drift"           -> (graft.similarity.Similarity.jsEmbeddingDrift _),
-    // Jelinek-Mercer deleted interpolation: 3 EM rounds for the mixture
-    // weight, each one hash-agg over a checkpointed scored frame
-    "q404_jm_interpolation"   -> ((s, d) =>
-      graft.text.TextOps.jmInterpolation(s, d)),
-    // binaryFile ingestion: executor-side blob export, glob-filtered
-    // (path, length, content) read-back, digest-verified lossless
-    "q405_binaryfile_source"  -> (graft.multimodal.Multimodal.binaryFileSource _),
-    // chi-square + G independence test over the dense lang*source grid,
-    // one corpus hash-agg then cell-grain algebra
-    "q406_chi2_independence"  -> (graft.analytics.Advanced.chiSquareIndependence _),
-  )
+  /** Every declared query, gathered once per JVM. */
+  private[graft] lazy val declared: Seq[Query] = distinct(Seq(
+    Relational.queries, Catalog.queries, Sinks.queries, Advanced.queries,
+    ExactQuantile.queries, TextOps.queries, BpeTrain.queries, Dedup.queries,
+    Similarity.queries, Multimodal.queries, EventStream.queries,
+    KMeansJob.queries, RandomForestJob.queries, Knn.queries,
+    LloydExact.queries, GiniStump.queries, PqCodebook.queries,
+    PcaPower.queries, LogitGd.queries, AlsFactor.queries).flatten)
 
-  /** DuckDB-equivalent ANSI SQL per query. Floating aggregates are routed
-    * through DECIMAL(18,4) sums on BOTH sides so results are bit-identical
-    * regardless of accumulation order (see Relational.dsum). */
-  def oracleSql: Map[String, String] = Map(
-    // q315: Spark's grouping_id bit order is first-listed = most
-    // significant; NULLS FIRST pinned (Spark ASC default vs DuckDB's
-    // nulls-last). SUM(INTEGER) is HUGEINT in DuckDB — cast at output.
-    "q315_cube_agg" ->
-      """SELECT CAST(2 * GROUPING(source) + GROUPING(lang) AS INTEGER)
-        |    AS gmask,
-        |  source, lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY CUBE (source, lang)
-        |ORDER BY gmask, source NULLS FIRST, lang NULLS FIRST""".stripMargin,
-    // q316: the oracle extracts the same typed path with DuckDB's JSON
-    // functions — values must agree, the engine-side encoding (VARIANT
-    // vs string re-parse) is the thing under test
-    // q338: DuckDB groups by lower() — identical values iff the
-    // collation is exactly case-insensitive equality
-    "q338_collated_group" ->
-      """SELECT lower(src2) AS source_ci, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(COUNT(DISTINCT src2) AS INTEGER) AS n_case_variants
-        |FROM (SELECT doc_id, n_chars,
-        |    CASE WHEN doc_id % 3 = 0 THEN upper(source) ELSE source END
-        |      AS src2
-        |  FROM documents)
-        |GROUP BY lower(src2) ORDER BY source_ci""".stripMargin,
-    // q347 oracle = the logical delete as a plain predicate over the
-    // original table: positional plumbing must reproduce it exactly
-    "q347_deletion_vectors" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_qty
-        |FROM lineitem WHERE l_orderkey % 13 <> 0
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // q349 oracle = the same point-IN aggregate over the original
-    // table: bloom pruning may cost a read, never a row
-    "q349_bloom_prune" ->
-      """SELECT l_orderkey, COUNT(*) AS n,
-        |  CAST(SUM(l_suppkey) AS BIGINT) AS sum_skey,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_qty
-        |FROM lineitem WHERE l_orderkey IN (7, 1007, 2207, 4007, 5507)
-        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    // q339 oracle = the same filtered aggregate over the ORIGINAL
-    // table: hash-equality certifies the connector's write path
-    // (formatting, staged temps, commit renames) + read path lossless
-    "q339_fixedwidth_write" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_qty
-        |FROM lineitem WHERE l_suppkey <= 60
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // q382 oracle = ONE fingerprint from the original parquet, expected
-    // identically for each of the five formats
-    "q382_format_certificate" -> {
-      val rowKey = "CAST(o_orderkey AS VARCHAR) || '|' || " +
-        "CAST(o_custkey AS VARCHAR) || '|' || " +
-        "CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR) " +
-        "|| '|' || o_orderpriority"
-      s"""WITH f AS (SELECT ${graft.functions.TextPrims.hex60S(
-            s"md5($rowKey)")} AS h FROM orders),
-         |g AS (SELECT COUNT(*) AS n_rows, bit_xor(h) AS xor_fp,
-         |    CAST(CAST(SUM(CAST(h % 1000000007 AS DECIMAL(38,0)))
-         |      AS HUGEINT) % 1000000007 AS BIGINT) AS sum_fp
-         |  FROM f)
-         |SELECT fmt AS format, n_rows, xor_fp, sum_fp
-         |FROM g CROSS JOIN (VALUES ('parquet'), ('orc'), ('csv'),
-         |  ('json'), ('fixedwidth')) v(fmt)
-         |ORDER BY format""".stripMargin
-    },
-    // q322: the oracle recomputes the observed counters directly; the
-    // engine side must deliver the identical values out of the
-    // CollectMetrics accumulator (DECIMAL-routed sum, exact count/range)
-    "q322_observe_metrics" ->
-      """SELECT COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_flag_r,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_qty,
-        |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key,
-        |  CAST(COUNT(DISTINCT l_returnflag) AS BIGINT) AS n_groups
-        |FROM lineitem WHERE l_quantity > 10""".stripMargin,
-    "q316_variant_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  MIN(CAST(json_extract_string(props, '$.k') AS INTEGER))
-        |    AS k_min,
-        |  MAX(CAST(json_extract_string(props, '$.k') AS INTEGER))
-        |    AS k_max,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |    AS BIGINT) AS k_sum
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q01_scan_project_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-        |  l_shipdate,
-        |  CAST(l_linenumber - 1 AS INTEGER) AS line_idx,
-        |  CAST(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q02_filter_range_set" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-        |FROM orders
-        |WHERE o_totalprice BETWEEN 1000.0 AND 50000.0
-        |  AND o_orderstatus IN ('F', 'O')
-        |ORDER BY o_orderkey""".stripMargin,
-    "q03_conditional_impute" ->
-      """WITH nulled AS (
-        |  SELECT event_id, user_id,
-        |    CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v_nulled,
-        |    CASE WHEN user_id % 7 = 0 THEN NULL ELSE event_type END AS ty_nulled
-        |  FROM events)
-        |SELECT event_id, user_id,
-        |  CASE WHEN v_nulled IS NULL OR isnan(v_nulled) THEN 0.0 ELSE v_nulled END AS v_imputed,
-        |  COALESCE(ty_nulled, 'Unknown') AS ty_nulled
-        |FROM nulled ORDER BY event_id""".stripMargin,
-    "q04_temporal_features" ->
-      """SELECT o_orderkey,
-        |  CAST(hour(o_orderdate) AS INTEGER) AS hour_of_day,
-        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS day_of_week,
-        |  CAST(month(o_orderdate) AS INTEGER) AS month_of_year,
-        |  CAST(year(o_orderdate) AS INTEGER) AS year_of_date
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q05_group_count" ->
-      """SELECT o_orderstatus, COUNT(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q06_multi_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_quantity) AS DOUBLE) AS avg_qty,
-        |  MIN(l_extendedprice) AS min_price,
-        |  MAX(l_extendedprice) AS max_price,
-        |  ROUND(SQRT((CAST(SUM(CAST(CAST(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,4)) AS DOUBLE) AS DECIMAL(18,4))) AS DOUBLE)
-        |    - CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) * CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*))
-        |    / (COUNT(*) - 1)), 4) AS std_price
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q07_global_means" ->
-      """SELECT
-        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_quantity) AS DOUBLE) AS mean_quantity,
-        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_extendedprice) AS DOUBLE) AS mean_extendedprice,
-        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_discount) AS DOUBLE) AS mean_discount,
-        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_tax) AS DOUBLE) AS mean_tax
-        |FROM lineitem""".stripMargin,
-    "q08_medians" ->
-      """SELECT
-        |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS median_totalprice,
-        |  ROUND(quantile_cont(o_totalprice, 0.25), 4) AS p25_totalprice,
-        |  ROUND(quantile_cont(o_totalprice, 0.75), 4) AS p75_totalprice
-        |FROM orders""".stripMargin,
-    "q09_null_census" ->
-      """WITH ev AS (
-        |  SELECT *, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v_nulled
-        |  FROM events)
-        |SELECT
-        |  COUNT(CASE WHEN event_id IS NULL THEN 1 END) AS nulls_event_id,
-        |  COUNT(CASE WHEN ts IS NULL THEN 1 END) AS nulls_ts,
-        |  COUNT(CASE WHEN user_id IS NULL THEN 1 END) AS nulls_user_id,
-        |  COUNT(CASE WHEN event_type IS NULL THEN 1 END) AS nulls_event_type,
-        |  COUNT(CASE WHEN value IS NULL THEN 1 END) AS nulls_value,
-        |  COUNT(CASE WHEN props IS NULL THEN 1 END) AS nulls_props,
-        |  COUNT(CASE WHEN v_nulled IS NULL THEN 1 END) AS nulls_v_nulled
-        |FROM ev""".stripMargin,
-    "q10_describe_stats" ->
-      """SELECT COUNT(*) AS n_rows,
-        |  CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / COUNT(c_acctbal) AS DOUBLE) AS mean_acctbal,
-        |  MIN(c_acctbal) AS min_acctbal,
-        |  MAX(c_acctbal) AS max_acctbal,
-        |  COUNT(DISTINCT c_mktsegment) AS n_segments
-        |FROM customer""".stripMargin,
-    "q11_join_revenue_nation" ->
-      """SELECT n.n_name AS nation, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM orders o
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |GROUP BY n.n_name ORDER BY nation""".stripMargin,
-    "q12_join_left_outer" ->
-      """SELECT c.c_custkey, c.c_name, COUNT(o.o_orderkey) AS n_orders
-        |FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        |GROUP BY c.c_custkey, c.c_name ORDER BY c.c_custkey""".stripMargin,
-    "q78_join_full_outer" ->
-      """WITH c AS (SELECT c_custkey FROM customer WHERE c_nationkey < 5),
-        |o AS (SELECT o_orderkey, o_custkey FROM orders
-        |  WHERE o_totalprice > 250000.0)
-        |SELECT CASE WHEN c.c_custkey IS NULL THEN 'order_only'
-        |    WHEN o.o_orderkey IS NULL THEN 'customer_only'
-        |    ELSE 'matched' END AS side,
-        |  CAST(count(*) AS INTEGER) AS n
-        |FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey
-        |GROUP BY 1 ORDER BY side""".stripMargin,
-    "q13_join_semi_anti" ->
-      """WITH big AS (SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 40000.0)
-        |SELECT c_custkey, 'has_big_order' AS bucket FROM customer
-        |  WHERE c_custkey IN (SELECT o_custkey FROM big)
-        |UNION ALL
-        |SELECT c_custkey, 'no_big_order' AS bucket FROM customer
-        |  WHERE c_custkey NOT IN (SELECT o_custkey FROM big)
-        |ORDER BY c_custkey""".stripMargin,
-    "q14_union_distinct" ->
-      """SELECT DISTINCT o_orderkey FROM (
-        |  SELECT o_orderkey FROM orders WHERE o_totalprice > 45000.0
-        |  UNION ALL
-        |  SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |ORDER BY o_orderkey""".stripMargin,
-    "q15_orderby_limit" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q84_intersect_except" ->
-      """SELECT o_custkey, 'both' AS tag FROM (
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |  INTERSECT
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-        |UNION ALL
-        |SELECT o_custkey, 'only_f' AS tag FROM (
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |  EXCEPT
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-        |ORDER BY tag, o_custkey""".stripMargin,
-    "q16_window_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS INTEGER) AS rk
-        |  FROM orders)
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "q69_topk_exec" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-        |  FROM orders)
-        |WHERE rk <= 3
-        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
-    "q17_window_running_sum" ->
-      """SELECT user_id, event_id,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q18_window_lag" ->
-      """SELECT user_id, event_id,
-        |  CAST(epoch_us(CAST(ts AS TIMESTAMP)) - epoch_us(CAST(LAG(ts, 1) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id) AS TIMESTAMP)) AS DOUBLE) / 1e6 AS gap_s
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q19_pivot_matrix" ->
-      """SELECT o_orderpriority,
-        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
-        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
-        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q20_json_extract" ->
-      """SELECT event_id, CAST(props->>'$.k' AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q21_tumbling_window" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-  ) ++ graft.streaming.EventStream.oracleSql ++
-    graft.text.TextOps.oracleSql ++ graft.dedup.Dedup.oracleSql ++
-    graft.similarity.Similarity.oracleSql ++ graft.multimodal.Multimodal.oracleSql ++
-    graft.analytics.Advanced.oracleSql ++
-    graft.analytics.ExactQuantile.oracleSql ++
-    graft.ml.LloydExact.oracleSql ++
-    graft.ml.GiniStump.oracleSql ++
-    graft.ml.Knn.oracleSql ++
-    graft.ml.PqCodebook.oracleSql ++
-    graft.ml.PcaPower.oracleSql ++
-    graft.ml.LogitGd.oracleSql ++
-    graft.text.BpeTrain.oracleSql ++
-    graft.ml.AlsFactor.oracleSql ++
-    Map("q79_sql_parity" -> graft.sql.Catalog.SqlParityText,
-      // q353/q355: the q79 pattern — ONE dialect-portable string is
-      // both the Spark query and its own oracle
-      "q353_correlated_subq" -> graft.sql.Catalog.CorrelatedSubqueryText,
-      "q355_filter_agg" -> graft.sql.Catalog.FilterAggText,
-      // q337: the UDFs inline to exactly this (DuckDB spells the token
-      // regex via the shared TextPrims constant)
-      "q337_sql_udf" -> {
-        import graft.functions.TextPrims.bpeTokensS
-        s"""SELECT CAST(s.b AS INTEGER) AS bucket,
-           |  CAST(COUNT(d.doc_id) AS BIGINT) AS n_docs,
-           |  CAST(COALESCE(SUM(${bpeTokensS("d.text")}), 0) AS BIGINT)
-           |    AS n_toks
-           |FROM (SELECT CAST(unnest(generate_series(0, 7)) AS INTEGER)
-           |    AS b) s
-           |LEFT JOIN documents d
-           |  ON least(CAST(d.n_chars // 256 AS INT), 7) = s.b
-           |GROUP BY s.b ORDER BY s.b""".stripMargin
-      },
-      "q101_lateral_top" -> graft.sql.Catalog.LateralTopSqlText,
-      "q122_exists_churn" -> graft.sql.Catalog.ExistsChurnSqlText) ++ {
-      // q102–q104 oracle = the direct aggregate over the ORIGINAL parquet:
-      // hash-equality proves each non-parquet sink+source round-trip lossless
-      val rtOracle =
-        """SELECT l_returnflag, COUNT(*) AS n,
-          |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-          |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-      Map("q102_orc_roundtrip" -> rtOracle, "q103_csv_roundtrip" -> rtOracle,
-        "q104_json_roundtrip" -> rtOracle, "q400_xml_roundtrip" -> rtOracle)
-    } ++ {
-      // q105/q106 oracle = the same filtered aggregate over the ORIGINAL
-      // flat parquet — hash-equality proves each pruned storage layout
-      // (Hive partition dirs / range-clustered row groups) lossless
-      // q106 has no flag filter, so l_returnflag joins the grouping key —
-      // every projected column participates in the hash either way
-      def prunedOracle(where: String, groupFlag: Boolean = false) = {
-        val keys = if (groupFlag) "l_returnflag, l_linestatus" else "l_linestatus"
-        s"""SELECT $keys, COUNT(*) AS n,
-           |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-           |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-           |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-           |FROM lineitem WHERE $where
-           |GROUP BY $keys ORDER BY $keys""".stripMargin
-      }
-      Map(
-        "q105_partition_pruned" -> prunedOracle("l_returnflag = 'R'"),
-        "q106_clustered_skip"   -> prunedOracle("l_orderkey BETWEEN 1000 AND 5000",
-          groupFlag = true),
-        // identity aggregate: the compaction rewrite must be lossless
-        "q132_compaction"       -> prunedOracle("1 = 1", groupFlag = true),
-        // q137 oracle = the same 2-D box aggregate over the ORIGINAL
-        // parquet — hash-equality proves the Z-order rewrite lossless
-        "q137_zorder_skip" ->
-          """SELECT l_suppkey, COUNT(*) AS n,
-            |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-            |  CAST(SUM(l_partkey) AS BIGINT) AS sum_pkey,
-            |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-            |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-            |FROM lineitem
-            |WHERE l_partkey BETWEEN 100 AND 400 AND l_suppkey BETWEEN 10 AND 40
-            |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
-        // q323 oracle = the same 2-D box aggregate over the ORIGINAL
-        // parquet — hash-equality proves the Hilbert rewrite lossless
-        "q323_hilbert_skip" ->
-          """SELECT l_suppkey, COUNT(*) AS n,
-            |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-            |  CAST(SUM(l_partkey) AS BIGINT) AS sum_pkey,
-            |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-            |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-            |FROM lineitem
-            |WHERE l_partkey BETWEEN 500 AND 900 AND l_suppkey BETWEEN 20 AND 60
-            |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
-        // q324 oracle = the vintage-split aggregate from the ORIGINAL
-        // table (generation membership is a pure function of doc_id)
-        "q324_merge_schema" ->
-          """SELECT source, COUNT(*) AS n,
-            |  CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
-            |    AS BIGINT) AS n_v2,
-            |  CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars // 5 END)
-            |    AS BIGINT) AS sum_tok_est
-            |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-        // q333 oracle = the same range aggregate over the ORIGINAL table:
-        // hash-equality proves the manifest prune lost no row
-        "q333_manifest_prune" ->
-          """SELECT l_suppkey, COUNT(*) AS n,
-            |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-            |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-            |FROM lineitem WHERE l_partkey BETWEEN 300 AND 700
-            |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
-        // q335 oracle = the whole-table aggregate: all three slices,
-        // each exactly once across the checkpointed restart
-        "q335_fixedwidth_stream" ->
-          """SELECT l_returnflag, COUNT(*) AS n,
-            |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-            |  CAST(SUM(CAST(round(l_quantity * 10000) AS BIGINT))
-            |    AS BIGINT) AS sum_q4
-            |FROM lineitem
-            |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-        // q334 oracle = the same filtered aggregate over the ORIGINAL
-        // table (quantity via the same x10^4 scaled-integer route)
-        "q334_fixedwidth_dsv2" ->
-          """SELECT l_returnflag, COUNT(*) AS n,
-            |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
-            |  CAST(SUM(CAST(round(l_quantity * 10000) AS BIGINT))
-            |    AS BIGINT) AS sum_q4
-            |FROM lineitem WHERE l_suppkey <= 50
-            |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-        // q139 oracle = the same per-shard rollup computed from the shard
-        // FUNCTION (not the written layout): hash-equality proves the
-        // partitioned export lossless shard by shard, checksums included
-        "q139_sharded_export" -> {
-          import graft.functions.TextPrims.hex60S
-          s"""WITH h AS (SELECT doc_id, n_chars, text,
-             |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 8 AS shard
-             |  FROM documents)
-             |SELECT CAST(shard AS INTEGER) AS shard,
-             |  CAST(COUNT(*) AS INTEGER) AS n_docs,
-             |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-             |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
-             |  bit_xor(${hex60S("md5(text)")}) AS xor_hash
-             |FROM h GROUP BY shard ORDER BY shard""".stripMargin
-        },
-        "q110_bucketed_join" ->
-          """SELECT c_mktsegment, COUNT(*) AS n,
-            |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
-            |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-            |FROM orders JOIN customer ON o_custkey = c_custkey
-            |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-    }
+  /** `qs`, after checking that no name is declared twice. */
+  private[graft] def distinct(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.build).toMap
+
+  /** DuckDB-equivalent ANSI SQL per oracle-checked query. Floating
+    * aggregates are routed through DECIMAL(18,4) sums on BOTH sides so
+    * results are bit-identical regardless of accumulation order (see
+    * Relational.dsum). */
+  lazy val oracleSql: Map[String, String] =
+    declared.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -1,5 +1,7 @@
 package graft.analytics
 
+import graft.Query
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -4309,992 +4311,752 @@ object Advanced {
             col("mindim").cast(DoubleType))), 6).as("cramers_v"))
   }
 
-  def oracleSql: Map[String, String] = Map(
-    // q406: same dense grid, same DECIMAL(38,0) product before the
-    // divide, same 9-dp contribution routing and closing algebra
-    "q406_chi2_independence" ->
-      """WITH cells AS (SELECT lang, source, COUNT(*) AS nij
-        |  FROM documents GROUP BY 1, 2),
-        |rt AS (SELECT lang, SUM(nij) AS ri FROM cells GROUP BY 1),
-        |ct AS (SELECT source, SUM(nij) AS cj FROM cells GROUP BY 1),
-        |tot AS (SELECT SUM(nij) AS n, COUNT(DISTINCT lang) AS nl,
-        |    COUNT(DISTINCT source) AS ns FROM cells),
-        |g AS (SELECT rt.lang, ct.source, rt.ri, ct.cj, c.nij,
-        |    tot.n, tot.nl, tot.ns,
-        |    CAST(CAST(rt.ri AS DECIMAL(38,0)) * CAST(ct.cj AS DECIMAL(38,0))
-        |      AS DOUBLE) / CAST(tot.n AS DOUBLE) AS e,
-        |    CAST(COALESCE(c.nij, 0) AS DOUBLE) AS nijd
-        |  FROM rt CROSS JOIN ct CROSS JOIN tot
-        |  LEFT JOIN cells c ON rt.lang = c.lang AND ct.source = c.source)
-        |SELECT CAST(MAX(n) AS BIGINT) AS n_docs,
-        |  CAST(MAX((nl - 1) * (ns - 1)) AS INTEGER) AS dof,
-        |  round(CAST(SUM(CAST(round((nijd - e) * (nijd - e) / e, 9)
-        |    AS DECIMAL(28,9))) AS DOUBLE), 6) AS chi2,
-        |  round(CAST(SUM(CAST(round(CASE WHEN nij IS NOT NULL
-        |      THEN 2.0 * nijd * ln(nijd / e) ELSE 0.0 END, 9)
-        |    AS DECIMAL(28,9))) AS DOUBLE), 6) AS g_stat,
-        |  round(sqrt(CAST(SUM(CAST(round((nijd - e) * (nijd - e) / e, 9)
-        |      AS DECIMAL(28,9))) AS DOUBLE)
-        |    / (CAST(MAX(n) AS DOUBLE) * CAST(MAX(LEAST(nl - 1, ns - 1))
-        |        AS DOUBLE))), 6) AS cramers_v
-        |FROM g""".stripMargin,
-    // q348: the identical three-step conditional-min chain in DuckDB
-    // (epoch_us route, integer gap sums, fixed-order closing division)
-    "q348_event_funnel" ->
-      """WITH ev AS (SELECT user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |v AS (SELECT user_id, min(us) AS t1 FROM ev
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (SELECT e.user_id, min(e.us) AS t2, max(v.t1) AS t1
-        |  FROM ev e JOIN v ON v.user_id = e.user_id
-        |  WHERE e.event_type = 'click' AND e.us > v.t1
-        |  GROUP BY e.user_id),
-        |p AS (SELECT e.user_id, min(e.us) AS t3, max(c.t2) AS t2
-        |  FROM ev e JOIN c ON c.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.us > c.t2
-        |  GROUP BY e.user_id),
-        |s1 AS (SELECT 1 AS step, 'view' AS event,
-        |    CAST(COUNT(*) AS INTEGER) AS n_users, CAST(0 AS BIGINT)
-        |    AS gap_us FROM v),
-        |s2 AS (SELECT 2, 'click_after_view', CAST(COUNT(*) AS INTEGER),
-        |    CAST(COALESCE(SUM(t2 - t1), 0) AS BIGINT) FROM c),
-        |s3 AS (SELECT 3, 'purchase_after_click',
-        |    CAST(COUNT(*) AS INTEGER),
-        |    CAST(COALESCE(SUM(t3 - t2), 0) AS BIGINT) FROM p),
-        |u AS (SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |  UNION ALL SELECT * FROM s3)
-        |SELECT step, event, n_users,
-        |  round(CAST(gap_us AS DOUBLE)
-        |    / CAST(greatest(n_users, 1) AS DOUBLE) / 1e6, 6)
-        |    AS avg_gap_sec
-        |FROM u ORDER BY step""".stripMargin,
-    // q360: TPC-H Q5 verbatim (date bounds as timestamps, 9-dp row
-    // rounding into DECIMAL(28,9) for the revenue sum)
-    "q360_tpch_q5" ->
-      """SELECT n_name, CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |  AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    // q372: TPC-H Q7 verbatim (nation aliased twice, post-join
-    // direction disjunction, ship-year grouping)
-    "q372_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS INTEGER) AS l_year,
-        |  CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
-        |FROM supplier
-        |JOIN lineitem ON s_suppkey = l_suppkey
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    // q373: TPC-H Q8 verbatim — CASE'd numerator over the same pass,
-    // exact decimal sums divided in double at the very end
-    "q373_tpch_q8" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |  CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  round(CAST(SUM(CASE WHEN n2.n_name = 'NATION_2'
-        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |        AS DECIMAL(28,9))
-        |      ELSE CAST(0 AS DECIMAL(28,9)) END) AS DOUBLE)
-        |    / CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |        AS DECIMAL(28,9))) AS DOUBLE), 9) AS mkt_share
-        |FROM part
-        |JOIN lineitem ON p_partkey = l_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN region ON n1.n_regionkey = r_regionkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |WHERE p_type = 'ECONOMY' AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1
-        |ORDER BY o_year""".stripMargin,
-    // q390: the GENUINELY CORRELATED Q21 form — DuckDB decorrelates
-    // its own way; agreement certifies the engine's one-pass
-    // aggregate rewrite, not just the arithmetic
-    "q390_tpch_q21" ->
-      """SELECT s_name, CAST(COUNT(*) AS INTEGER) AS numwait
-        |FROM supplier, lineitem l1, orders, nation
-        |WHERE s_suppkey = l1.l_suppkey
-        |  AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey
-        |      AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey
-        |      AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |  AND s_nationkey = n_nationkey
-        |  AND n_name = 'NATION_3'
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-    // q391: the correlated SCALAR-aggregate Q17 form, integer-exact —
-    // 5·qty·COUNT < SUM over ×10⁴-scaled quantities, every factor
-    // DECIMAL(38,0) before the product
-    "q391_tpch_q17" ->
-      """SELECT CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  round(CAST(SUM(CAST(l1.l_extendedprice AS DECIMAL(18,4)))
-        |    AS DOUBLE) / 7.0, 9) AS avg_yearly
-        |FROM lineitem l1 JOIN part ON l1.l_partkey = p_partkey
-        |WHERE p_brand = 'Brand#23' AND p_size <= 5
-        |  AND CAST(5 AS DECIMAL(38,0))
-        |      * CAST(CAST(round(l1.l_quantity * 10000) AS BIGINT)
-        |          AS DECIMAL(38,0))
-        |      * (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) FROM lineitem l2
-        |         WHERE l2.l_partkey = l1.l_partkey)
-        |    < (SELECT SUM(CAST(CAST(round(l2.l_quantity * 10000)
-        |          AS BIGINT) AS DECIMAL(38,0))) FROM lineitem l2
-        |       WHERE l2.l_partkey = l1.l_partkey)""".stripMargin,
-    // q392: correlated EXISTS form — DuckDB's own decorrelation vs the
-    // engine's LEFT SEMI with the mixed equi+lateness condition
-    "q392_tpch_q4" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS INTEGER) AS order_count
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // advanced relational surface (beyond-reference warehouse shapes)
+    Query("q46_rollup", rollupAgg _,
+      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
+        |  COALESCE(o_orderpriority, 'ALL') AS priority,
+        |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS INTEGER) AS lvl,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    // q393: Q13 verbatim — the exclusion predicate must live in the
-    // JOIN clause so zero-order customers survive
-    "q393_tpch_q13" ->
-      """WITH c_orders AS (
-        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '4-NOT SPECIFIED'
-        |  GROUP BY c_custkey)
-        |SELECT c_count, CAST(COUNT(*) AS INTEGER) AS custdist
-        |FROM c_orders GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    // q394: the NOT IN form the engine's anti join must equal
-    "q394_tpch_q16" ->
-      """SELECT p_brand, p_size,
-        |  CAST(COUNT(DISTINCT l_suppkey) AS INTEGER) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#45' AND p_type <> 'PROMO'
-        |  AND p_size <= 10
-        |  AND l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin,
-    // q395: scalar-average threshold integer-exact on both sides
-    // (bal_cents·n > sum_cents — no float average ever forms) +
-    // correlated NOT EXISTS
-    "q395_tpch_q22" ->
-      """WITH cust AS (
-        |  SELECT c_custkey,
-        |    CAST(c_nationkey % 5 AS INTEGER) AS cntrycode, c_acctbal,
-        |    CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
-        |  FROM customer WHERE c_nationkey % 5 IN (0, 1, 2)),
-        |a AS (SELECT CAST(SUM(CAST(bal_c AS DECIMAL(38,0)))
-        |    AS DECIMAL(38,0)) AS sum_c, COUNT(*) AS n_pos
-        |  FROM cust WHERE bal_c > 0)
-        |SELECT cntrycode, CAST(COUNT(*) AS INTEGER) AS numcust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS totacctbal
-        |FROM cust CROSS JOIN a
-        |WHERE CAST(bal_c AS DECIMAL(38,0)) * CAST(n_pos AS DECIMAL(38,0))
-        |    > sum_c
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey
-        |      AND o_orderpriority = '1-URGENT')
-        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin,
-    // q396: the genuinely correlated `= (SELECT MIN …)` Q2 form over
-    // the same lineitem-derived supply costs
-    "q396_tpch_q2" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS pk, l_suppkey AS sk,
-        |    MIN(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cost_c
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT s_acctbal, s_name, n_name, pk AS p_partkey, cost_c
-        |FROM ps
-        |JOIN supplier ON sk = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN part ON pk = p_partkey
-        |WHERE p_type = 'ECONOMY' AND p_size <= 15
-        |  AND cost_c = (SELECT MIN(ps2.cost_c) FROM ps ps2
-        |                WHERE ps2.pk = ps.pk)
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    // q397: HAVING against the global scalar, integer-exact fraction
-    "q397_tpch_q11" ->
-      """WITH v AS (
-        |  SELECT l_partkey AS pk,
-        |    SUM(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |          AS DECIMAL(38,0))
-        |      * CAST(CAST(round(l_quantity) AS BIGINT)
-        |          AS DECIMAL(38,0))) AS value_c
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name = 'NATION_5'
-        |  GROUP BY 1)
-        |SELECT pk AS p_partkey, CAST(value_c AS DOUBLE) AS value_cents
-        |FROM v
-        |WHERE CAST(value_c AS DECIMAL(38,0)) * 10000
-        |    > (SELECT CAST(SUM(value_c) AS DECIMAL(38,0)) FROM v)
-        |ORDER BY value_cents DESC, p_partkey""".stripMargin,
-    // q398: the view + scalar MAX Q15 form; exact-decimal equality
-    "q398_tpch_q15" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey AS sk,
-        |    SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |      AS DECIMAL(28,9))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE)
-        |  AS total_revenue
-        |FROM revenue JOIN supplier ON sk = s_suppkey
-        |WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-    // q399: nested-aggregate EXISTS chain; dominance = over 2x the
-    // fair share, with BOTH per-part aggregates correlated
-    "q399_tpch_q20" ->
-      """WITH sq AS (
-        |  SELECT l_partkey AS pk, l_suppkey AS sk,
-        |    SUM(CAST(round(l_quantity) AS BIGINT)) AS sq
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_name LIKE 'small%'
-        |  GROUP BY 1, 2)
-        |SELECT s_name, s_acctbal
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_7'
-        |  AND EXISTS (SELECT 1 FROM sq
-        |    WHERE sq.sk = s_suppkey
-        |      AND CAST(sq.sq AS DECIMAL(38,0)) *
-        |        (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) FROM sq s3
-        |         WHERE s3.pk = sq.pk) >
-        |        (SELECT CAST(SUM(s2.sq) AS DECIMAL(38,0)) FROM sq s2
-        |         WHERE s2.pk = sq.pk) * 2)
-        |ORDER BY s_name""".stripMargin,
-    // q374: TPC-H Q10 verbatim (quarter window, returnflag R, top 20
-    // by revenue with custkey tiebreak)
-    "q374_tpch_q10" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    // q375: TPC-H Q14 verbatim — one conditional aggregate pass
-    "q375_tpch_q14" ->
-      """SELECT CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  round(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |        AS DECIMAL(28,9))
-        |      ELSE CAST(0 AS DECIMAL(28,9)) END) AS DOUBLE)
-        |    / CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |        AS DECIMAL(28,9))) AS DOUBLE), 9) AS promo_revenue_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-        |  AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin,
-    // q376: TPC-H Q18 verbatim — aggregate-HAVING before any join
-    "q376_tpch_q18" ->
-      """WITH q AS (
-        |  SELECT l_orderkey,
-        |    SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty_d
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 250)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |  CAST(qty_d AS DOUBLE) AS total_qty
-        |FROM q
+        |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+        |ORDER BY lvl, status, priority""".stripMargin),
+    Query("q47_cube", cubeAgg _,
+      """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
+        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
+        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INTEGER) AS lvl,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        |FROM lineitem
+        |GROUP BY CUBE(l_returnflag, l_linestatus)
+        |ORDER BY lvl, returnflag, linestatus""".stripMargin),
+    Query("q48_asof_join", asofJoin _,
+      """WITH clicks AS (SELECT event_id, user_id, ts FROM events
+        |    WHERE event_type = 'click'),
+        |  errors AS (SELECT user_id, ts FROM events WHERE event_type = 'error')
+        |SELECT c.event_id, c.user_id,
+        |  CAST(epoch_us(CAST(c.ts AS TIMESTAMP))
+        |    - epoch_us(CAST(e.ts AS TIMESTAMP)) AS DOUBLE) / 1e6 AS asof_gap_s
+        |FROM clicks c ASOF LEFT JOIN errors e
+        |  ON c.user_id = e.user_id AND e.ts <= c.ts
+        |ORDER BY event_id""".stripMargin),
+    Query("q49_range_join", rangeJoinBucketed _,
+      """SELECT a.user_id AS user_id, a.event_id AS event_a, b.event_id AS event_b,
+        |  CAST(epoch_us(CAST(b.ts AS TIMESTAMP))
+        |    - epoch_us(CAST(a.ts AS TIMESTAMP)) AS DOUBLE) / 1e6 AS gap_s
+        |FROM events a JOIN events b
+        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
+        |  AND abs(epoch_us(CAST(a.ts AS TIMESTAMP))
+        |        - epoch_us(CAST(b.ts AS TIMESTAMP))) <= 3600000000
+        |ORDER BY user_id, event_a, event_b""".stripMargin),
+    Query("q50_sessionize_batch", sessionizeBatch _, sessionizeSql),
+    Query("q51_ntile_ranks", ntileRanks _,
+      """SELECT o_orderkey, o_totalprice,
+        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
+        |  round(percent_rank() OVER w, 6) AS pct_rank,
+        |  round(cume_dist() OVER w, 6) AS cume
+        |FROM orders
+        |WINDOW w AS (ORDER BY o_totalprice, o_orderkey)
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q52_string_funcs", stringFuncs _,
+      """SELECT c_custkey,
+        |  CAST(length(c_name) AS INTEGER) AS name_len,
+        |  upper(replace(c_name, 'Customer#', 'C-')) AS renamed,
+        |  right(c_name, 3) AS last3,
+        |  lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
+        |  split_part(c_name, '#', 2) AS num_part,
+        |  regexp_extract(c_name, '([0-9]+)', 1) AS digits,
+        |  concat_ws('|', c_mktsegment, c_name) AS tagged
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Query("q53_array_funcs", arrayFuncs _, {
+      val T = graft.functions.TextPrims.tokensS("text")
+      s"""SELECT doc_id,
+         |  CAST(len($T) AS INTEGER) AS n_tokens,
+         |  CAST(len(list_distinct($T)) AS INTEGER) AS n_distinct,
+         |  array_to_string(list_slice(list_sort(list_distinct($T)), 1, 3), ' ')
+         |    AS first3_sorted,
+         |  CAST(list_contains($T, 'the') AS INTEGER) AS has_the
+         |FROM documents ORDER BY doc_id""".stripMargin
+    }),
+    Query("q54_grouped_quantiles", groupedQuantiles _,
+      """SELECT o_orderstatus,
+        |  round(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
+        |  round(quantile_cont(o_totalprice, 0.25), 4) AS p25_price,
+        |  round(quantile_cont(o_totalprice, 0.75), 4) AS p75_price
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("q55_above_cust_avg", aboveCustomerAvg _,
+      """WITH avgs AS (
+        |  SELECT o_custkey AS ck,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+        |      / COUNT(o_totalprice) AS cust_avg
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT o_orderkey, o_custkey, o_totalprice, cust_avg
+        |FROM orders JOIN avgs ON o_custkey = ck
+        |WHERE o_totalprice > cust_avg
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q56_first_last_window", firstLastWindow _,
+      """SELECT o_custkey, first_order, last_order, n_orders FROM (
+        |  SELECT o_custkey,
+        |    first_value(o_orderkey) OVER wf AS first_order,
+        |    last_value(o_orderkey) OVER wf AS last_order,
+        |    COUNT(*) OVER wf AS n_orders,
+        |    ROW_NUMBER() OVER wo AS rn
+        |  FROM orders
+        |  WINDOW
+        |    wo AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+        |    wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
+        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin),
+    // skew-mitigation + TPC-H-shaped analytics
+    Query("q59_salted_agg", (s, d) => saltedAgg(s, d),
+      // oracle = the UNsalted direct aggregation: salting must be invisible
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q60_shipping_priority", shippingPriority _,
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
+        |    AS DOUBLE) AS revenue
+        |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY qty_d DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-    // q377: TPC-H Q19 verbatim — the mixed-table OR-of-ANDs disjunction
-    "q377_tpch_q19" ->
-      """SELECT CAST(COUNT(*) AS INTEGER) AS n_items,
-        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
-        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |    AND l_quantity BETWEEN 1 AND 11)
-        |  OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-        |    AND l_quantity BETWEEN 10 AND 20)
-        |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-        |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    // q388: same cents-integer revenue, same DECIMAL(38,0)
-    // cast-before-multiply rank moment, same floor(9n/10) decile cut
-    "q388_gini_concentration" ->
-      """WITH rev AS (SELECT o_custkey,
-        |    SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |  FROM orders GROUP BY 1),
-        |r AS (SELECT cents,
-        |    ROW_NUMBER() OVER (ORDER BY cents, o_custkey) AS i,
-        |    COUNT(*) OVER () AS nt
-        |  FROM rev),
-        |a AS (SELECT COUNT(*) AS n,
-        |    CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0))
-        |      AS tot,
-        |    CAST(SUM(CAST(i AS DECIMAL(38,0))
-        |      * CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS iwx,
-        |    CAST(SUM(CASE WHEN i > (nt * 9) // 10
-        |      THEN CAST(cents AS DECIMAL(38,0)) END) AS DECIMAL(38,0))
-        |      AS top_dec
-        |  FROM r)
-        |SELECT CAST(n AS INTEGER) AS n_customers,
-        |  round(2.0 * CAST(iwx AS DOUBLE)
-        |      / (CAST(n AS DOUBLE) * CAST(tot AS DOUBLE))
-        |    - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE), 9) AS gini,
-        |  round(CAST(top_dec AS DOUBLE) / CAST(tot AS DOUBLE), 9)
-        |    AS top_decile_share
-        |FROM a""".stripMargin,
-    // q386: same integer-scaled CUSUM (nd*cum - t*total — no fractional
-    // mean ever forms), same earlier-day tie-break
-    "q386_cusum_changepoint" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |    COUNT(*) AS x FROM events GROUP BY 1, 2),
-        |sc AS (SELECT event_type, day, x,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
-        |      AS t,
-        |    SUM(x) OVER (PARTITION BY event_type ORDER BY day) AS cum,
-        |    SUM(x) OVER (PARTITION BY event_type) AS total,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS nd
-        |  FROM daily),
-        |s2 AS (SELECT event_type, day,
-        |    CAST(nd * cum - t * total AS BIGINT) AS sc
-        |  FROM sc),
-        |pick AS (SELECT event_type, day AS change_day,
-        |    sc AS cusum_scaled FROM (SELECT *, ROW_NUMBER() OVER (
-        |      PARTITION BY event_type ORDER BY abs(sc) DESC, day) AS rn
-        |    FROM s2) WHERE rn = 1)
-        |SELECT d.event_type, MAX(change_day) AS change_day,
-        |  MAX(cusum_scaled) AS cusum_scaled,
-        |  CAST(COUNT(*) AS INTEGER) AS n_days,
-        |  round(CAST(SUM(CASE WHEN day <= change_day THEN x END)
-        |      AS DOUBLE)
-        |    / SUM(CASE WHEN day <= change_day THEN 1 ELSE 0 END), 6)
-        |    AS mean_before,
-        |  round(CAST(SUM(CASE WHEN day > change_day THEN x END)
-        |      AS DOUBLE)
-        |    / SUM(CASE WHEN day > change_day THEN 1 ELSE 0 END), 6)
-        |    AS mean_after
-        |FROM daily d JOIN pick USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
-    // q384: same one-md5-per-row bit-membership, same 60 conditional
-    // decimal sums, same bounded replica-mean percentile
-    "q384_bootstrap_ci" -> {
-      val b = 60
-      val h = graft.functions.TextPrims.hex60S(
-        "md5(CAST(o_orderkey AS VARCHAR))")
-      val sums = (0 until b).map(i =>
-        s"""CAST(SUM(CASE WHEN (h >> $i) & 1 = 1
-           |  THEN CAST(x AS DECIMAL(18,4)) END) AS DOUBLE) AS s$i,
-           |SUM(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE 0 END) AS c$i"""
-          .stripMargin).mkString(",\n")
-      val ms = (0 until b).map(i => s"s$i / c$i").mkString(", ")
-      s"""WITH base AS (SELECT o_orderstatus AS flag, o_totalprice AS x,
-         |    $h AS h FROM orders),
-         |w AS (SELECT flag, COUNT(*) AS n,
-         |    CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-         |      AS full_mean,
-         |$sums
-         |  FROM base GROUP BY flag),
-         |m AS (SELECT flag, n, full_mean, unnest([$ms]) AS m FROM w)
-         |SELECT flag, CAST(n AS INTEGER) AS n,
-         |  round(full_mean, 6) AS full_mean,
-         |  round(quantile_cont(m, 0.05), 6) AS boot_p05,
-         |  round(quantile_cont(m, 0.95), 6) AS boot_p95
-         |FROM m GROUP BY flag, n, full_mean ORDER BY flag""".stripMargin
-    },
-    // q385: same two-pass percentile chain (median -> MAD), same
-    // branch-free winsor clip, decimal-routed sums
-    "q385_robust_stats" ->
-      """WITH b AS (SELECT o_orderstatus AS flag, o_totalprice AS x
-        |  FROM orders),
-        |m AS (SELECT flag, quantile_cont(x, 0.5) AS med,
-        |    quantile_cont(x, 0.05) AS p05,
-        |    quantile_cont(x, 0.95) AS p95
-        |  FROM b GROUP BY flag),
-        |d AS (SELECT b.flag, x, med, p05, p95 FROM b JOIN m USING (flag)),
-        |md AS (SELECT flag, quantile_cont(abs(x - med), 0.5) AS mad
-        |  FROM d GROUP BY flag)
-        |SELECT d.flag, CAST(COUNT(*) AS INTEGER) AS n,
-        |  round(MAX(med), 6) AS median, round(MAX(mad), 6) AS mad,
-        |  CAST(SUM(CASE WHEN abs(x - med) > 3.0 * mad THEN 1 ELSE 0 END)
-        |    AS INTEGER) AS n_outlier,
-        |  round(CAST(SUM(CAST(greatest(least(x, p95), p05)
-        |      AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6) AS winsor_mean
-        |FROM d JOIN md ON d.flag = md.flag
-        |GROUP BY d.flag ORDER BY d.flag""".stripMargin,
-    // q379: the oracle computes DIRECTLY from columns — variant render/
-    // shred/extract must be lossless, so the two must agree
-    "q379_variant_extract" ->
-      """SELECT o_orderpriority AS seg,
-        |  CAST(COUNT(*) AS INTEGER) AS n,
-        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents,
-        |  CAST(SUM(o_orderkey % 97) AS BIGINT) AS sum_k97,
-        |  CAST(SUM(o_orderkey % 1009) AS BIGINT) AS id_fold,
-        |  CAST(SUM(0) AS INTEGER) AS n_phantom
-        |FROM orders GROUP BY 1 ORDER BY seg""".stripMargin,
-    // q380: identical bin/CDF/interpolation arithmetic; exact twin via
-    // quantile_cont (the q54-verified percentile mapping)
-    "q380_hist_quantiles" -> {
-      def estS(q: String, alias: String) =
-        s"""round(MAX(CASE WHEN cum0 < $q * n AND cum0 + c >= $q * n
-           |  THEN lo + (bin + ($q * n - cum0) / c) * w END), 6)
-           |  AS $alias""".stripMargin
-      s"""WITH li AS (SELECT l_returnflag AS flag, l_extendedprice AS x
-         |  FROM lineitem),
-         |b AS (SELECT min(x) AS lo, max(x) AS hi FROM li),
-         |binned AS (SELECT flag,
-         |    CAST(least(floor((x - lo) / ((hi - lo) / 64)), 63)
-         |      AS INTEGER) AS bin,
-         |    COUNT(*) AS c, MAX((hi - lo) / 64) AS w, MAX(lo) AS lo
-         |  FROM li CROSS JOIN b GROUP BY 1, 2),
-         |cdf AS (SELECT flag, bin, c, w, lo,
-         |    COALESCE(SUM(c) OVER (PARTITION BY flag ORDER BY bin
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS cum0,
-         |    SUM(c) OVER (PARTITION BY flag) AS n
-         |  FROM binned),
-         |sk AS (SELECT flag, MAX(n) AS n,
-         |    ${estS("0.5", "est_p50")},
-         |    ${estS("0.9", "est_p90")},
-         |    ${estS("0.99", "est_p99")}
-         |  FROM cdf GROUP BY flag),
-         |ex AS (SELECT flag,
-         |    round(quantile_cont(x, 0.5), 6) AS exact_p50,
-         |    round(quantile_cont(x, 0.9), 6) AS exact_p90,
-         |    round(quantile_cont(x, 0.99), 6) AS exact_p99
-         |  FROM li GROUP BY flag)
-         |SELECT sk.flag, CAST(n AS INTEGER) AS n,
-         |  est_p50, est_p90, est_p99, exact_p50, exact_p90, exact_p99
-         |FROM sk JOIN ex ON sk.flag = ex.flag
-         |ORDER BY sk.flag""".stripMargin
-    },
-    // q369: explicit NULL-padded UNION ALL mirror of unionByName
-    "q369_schema_union" ->
-      """WITH g1 AS (SELECT event_id, event_type,
-        |    CAST(NULL AS DECIMAL(18,4)) AS value,
-        |    CAST(NULL AS BIGINT) AS score, 1 AS gen
-        |  FROM events WHERE event_id % 2 = 0),
-        |g2 AS (SELECT event_id, event_type,
-        |    CAST(value AS DECIMAL(18,4)) AS value,
-        |    event_id % 100 AS score, 2 AS gen
-        |  FROM events WHERE event_id % 2 = 1),
-        |u AS (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
-        |SELECT gen, event_type, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN score IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_scored,
-        |  CAST(SUM(COALESCE(value, 0)) AS DOUBLE) AS sum_value
-        |FROM u GROUP BY gen, event_type
-        |ORDER BY gen, event_type""".stripMargin,
-    // q370: IS NOT DISTINCT FROM — the null bucket must MATCH
-    "q370_nullsafe_join" ->
-      """WITH a AS (SELECT NULLIF(o_orderkey % 97, 0) AS k, COUNT(*)
-        |    AS na FROM orders GROUP BY 1),
-        |b AS (SELECT NULLIF(l_orderkey % 97, 0) AS k, COUNT(*) AS nb
-        |  FROM lineitem GROUP BY 1)
-        |SELECT CASE WHEN a.k IS NULL THEN 'null-bucket'
-        |    ELSE 'valued' END AS bucket,
-        |  CAST(COUNT(*) AS INTEGER) AS n_keys,
-        |  CAST(SUM(na * nb) AS BIGINT) AS n_pairs
-        |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    // q366: per-edge left-join census (parent keys unique, so the
-    // join never multiplies); NULL keys counted apart from orphans
-    "q366_referential_audit" -> {
-      def edge(name: String, child: String, key: String,
-               parent: String, pkey: String) =
-        s"""SELECT '$name' AS edge, COUNT(*) AS n_child,
-           |  CAST(SUM(CASE WHEN c.$key IS NULL THEN 1 ELSE 0 END)
-           |    AS INTEGER) AS n_null_key,
-           |  CAST(SUM(CASE WHEN c.$key IS NOT NULL AND p.$pkey IS NULL
-           |    THEN 1 ELSE 0 END) AS INTEGER) AS n_orphan
-           |FROM $child c LEFT JOIN $parent p ON c.$key = p.$pkey""".stripMargin
-      Seq(
-        edge("lineitem->orders", "lineitem", "l_orderkey",
-          "orders", "o_orderkey"),
-        edge("orders->customer", "orders", "o_custkey",
-          "customer", "c_custkey"),
-        edge("customer->nation", "customer", "c_nationkey",
-          "nation", "n_nationkey"),
-        edge("supplier->nation", "supplier", "s_nationkey",
-          "nation", "n_nationkey"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY edge")
-    },
-    // q367: generate_series spine + part extracts (DuckDB dow is
-    // 0=Sunday — +1 aligns with Spark's 1=Sunday)
-    "q367_calendar_dim" ->
-      """WITH b AS (SELECT CAST(min(o_orderdate) AS DATE) AS lo,
-        |    CAST(max(o_orderdate) AS DATE) AS hi FROM orders),
-        |d AS (SELECT CAST(unnest(generate_series(
-        |    CAST(lo AS TIMESTAMP), CAST(hi AS TIMESTAMP),
-        |    INTERVAL 1 DAY)) AS DATE) AS day FROM b)
-        |SELECT day, CAST(dayofweek(day) + 1 AS INTEGER) AS dow,
-        |  CAST(month(day) AS INTEGER) AS month,
-        |  CAST(quarter(day) AS INTEGER) AS quarter,
-        |  CAST(weekofyear(day) AS INTEGER) AS iso_week,
-        |  CAST(day = last_day(day) AS INTEGER) AS is_month_end
-        |FROM d ORDER BY day""".stripMargin,
-    // q368: the rank-window detour as the oracle — the engine's
-    // one-pass max_by must equal it
-    "q368_latest_per_key" ->
-      """WITH e AS (SELECT user_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
-        |    event_type, value FROM events),
-        |r AS (SELECT user_id, event_type, value, us,
-        |    COUNT(*) OVER (PARTITION BY user_id) AS n_events,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY us DESC, event_id DESC) AS rk
-        |  FROM e)
-        |SELECT user_id, CAST(n_events AS INTEGER) AS n_events,
-        |  event_type AS last_type, value AS last_value, us AS last_us
-        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin,
-    // q362: identical lead pairing, DECIMAL(18,4)×BIGINT products,
-    // 9-dp close, decile rollup
-    "q362_twap" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |    CAST(value AS DECIMAL(18,4)) AS v FROM events),
-        |st AS (SELECT user_id, v,
-        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
-        |      - us AS dt
-        |  FROM e),
-        |pu AS (SELECT user_id,
-        |    round(CAST(SUM(v * dt) AS DOUBLE)
-        |      / CAST(SUM(dt) AS DOUBLE), 9) AS twa
-        |  FROM st WHERE dt IS NOT NULL GROUP BY user_id)
-        |SELECT user_id % 10 AS decile,
-        |  CAST(COUNT(*) AS INTEGER) AS n_users,
-        |  CAST(SUM(CAST(round(twa, 9) AS DECIMAL(28,9))) AS DOUBLE)
-        |    AS sum_twa
-        |FROM pu GROUP BY decile ORDER BY decile""".stripMargin,
-    // q363: FILTER-clause mirror of the PIVOT cells; counts wrapped in
-    // NULLIF (a pivot cell is >=1 or NULL, never 0)
-    "q363_sql_pivot" ->
-      """SELECT o_orderpriority,
-        |  NULLIF(COUNT(*) FILTER (WHERE o_orderstatus = 'F'), 0) AS f_n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-        |    FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS f_s,
-        |  NULLIF(COUNT(*) FILTER (WHERE o_orderstatus = 'O'), 0) AS o_n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-        |    FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS o_s,
-        |  NULLIF(COUNT(*) FILTER (WHERE o_orderstatus = 'P'), 0) AS p_n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-        |    FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS p_s
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    // q364: UNION ALL melt mirror of the UNPIVOT clause
-    "q364_sql_unpivot" ->
-      """WITH u AS (
-        |  SELECT 'l_quantity' AS metric, l_quantity AS val FROM lineitem
-        |  UNION ALL SELECT 'l_extendedprice', l_extendedprice
-        |    FROM lineitem
-        |  UNION ALL SELECT 'l_discount', l_discount FROM lineitem
-        |  UNION ALL SELECT 'l_tax', l_tax FROM lineitem)
-        |SELECT metric, CAST(COUNT(*) AS INTEGER) AS n,
-        |  CAST(SUM(CAST(val AS DECIMAL(18,4))) AS DOUBLE) AS sum_val
-        |FROM u GROUP BY metric ORDER BY metric""".stripMargin,
-    // q365: same integer-rendition row keys, same three reducers
-    "q365_result_fingerprint" -> {
-      val hS = graft.functions.TextPrims.hex60S(
-        "md5(CAST(l_orderkey AS VARCHAR) || '|' || " +
-          "CAST(l_linenumber AS VARCHAR) || '|' || " +
-          "CAST(CAST(round(l_quantity * 10000) AS BIGINT) AS VARCHAR) " +
-          "|| '|' || l_returnflag)")
-      s"""WITH h AS (SELECT $hS AS h FROM lineitem)
-         |SELECT COUNT(*) AS n_rows, bit_xor(h) AS xor_fp,
-         |  CAST(CAST(SUM(CAST(h % 1000000007 AS DECIMAL(38,0)))
-         |    AS HUGEINT) % 1000000007 AS BIGINT) AS sum_fp
-         |FROM h""".stripMargin
-    },
-    // q358: the erasure predicate in the clear — readable rows are
-    // exactly the non-shredded users', and their values sum identically
-    "q358_crypto_shred" ->
-      """SELECT event_type, CAST(COUNT(*) AS INTEGER) AS n,
-        |  CAST(SUM(CASE WHEN user_id % 7 <> 0 THEN 1 ELSE 0 END)
-        |    AS INTEGER) AS n_readable,
-        |  CAST(SUM(CAST(CASE WHEN user_id % 7 <> 0 THEN value
-        |    ELSE 0.0 END AS DECIMAL(18,4))) AS DOUBLE) AS sum_readable
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q359: brute-force per-window re-scan — the mergeable bitmap route
-    // must be EXACTLY this
-    "q359_sliding_distinct" ->
-      """WITH hrs AS (SELECT DISTINCT
-        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h FROM events),
-        |w AS (SELECT hrs.h, e.user_id FROM hrs JOIN events e
-        |  ON date_trunc('hour', CAST(e.ts AS TIMESTAMP)) <= hrs.h
-        | AND date_trunc('hour', CAST(e.ts AS TIMESTAMP))
-        |     > hrs.h - INTERVAL 24 HOURS)
-        |SELECT h AS hour, CAST(COUNT(DISTINCT user_id) AS BIGINT)
-        |    AS n_users
-        |FROM w GROUP BY h ORDER BY h""".stripMargin,
-    // q356: identical collapse + strictly-greater prefix-min skyline
-    "q356_pareto_frontier" ->
-      """WITH g AS (SELECT l_returnflag, l_quantity,
-        |    min(l_extendedprice) AS min_price, COUNT(*) AS n_at_qty
-        |  FROM lineitem GROUP BY 1, 2),
-        |w AS (SELECT *, min(min_price) OVER (PARTITION BY l_returnflag
-        |    ORDER BY l_quantity DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |    AS best_higher FROM g)
-        |SELECT l_returnflag, l_quantity, min_price,
-        |  CAST(n_at_qty AS INTEGER) AS n_at_qty
-        |FROM w WHERE best_higher IS NULL OR min_price < best_higher
-        |ORDER BY l_returnflag, l_quantity DESC""".stripMargin,
-    // q343: the honest join — the runtime bloom filter may only prune
-    // rows the join would drop anyway
-    "q343_runtime_filter" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderstatus = 'F' AND o_totalprice > 150000.0
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // q351: the identical spine + IGNORE-NULLS carry in DuckDB
-    "q351_locf_gapfill" ->
-      """WITH daily AS (SELECT user_id,
-        |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT min(day) AS lo, max(day) AS hi FROM daily),
-        |spine AS (SELECT u.user_id, d.day
-        |  FROM (SELECT DISTINCT user_id FROM daily) u
-        |  CROSS JOIN (SELECT CAST(unnest(generate_series(CAST(lo AS
-        |      TIMESTAMP), CAST(hi AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE)
-        |      AS day FROM b) d),
-        |f AS (SELECT s.user_id, s.day, daily.v,
-        |    last_value(daily.v IGNORE NULLS) OVER (
-        |      PARTITION BY s.user_id ORDER BY s.day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
-        |  FROM spine s LEFT JOIN daily
-        |    ON daily.user_id = s.user_id AND daily.day = s.day)
-        |SELECT day,
-        |  CAST(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS INTEGER)
-        |    AS n_observed,
-        |  CAST(SUM(CASE WHEN v IS NULL AND filled IS NOT NULL THEN 1
-        |    ELSE 0 END) AS INTEGER) AS n_carried,
-        |  CAST(SUM(CASE WHEN filled IS NULL THEN 1 ELSE 0 END) AS INTEGER)
-        |    AS n_empty,
-        |  CAST(SUM(CAST(COALESCE(filled, 0.0) AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS sum_filled
-        |FROM f GROUP BY day ORDER BY day""".stripMargin,
-    // q352: the honest join the map literal replaces (q79's rollup)
-    "q352_map_lookup" ->
-      """SELECT n_name,
-        |  CAST(count(*) AS INTEGER) AS n_cust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // q354: the from-scratch recompute the incremental merge must equal
-    "q354_incremental_view" ->
+        |WHERE c_mktsegment = 'BUILDING' AND o_orderstatus <> 'F'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    // arbitrary grouping sets (the general form of rollup/cube)
+    Query("q66_grouping_sets", groupingSetsAgg _,
+      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
+        |  COALESCE(o_orderpriority, 'ALL') AS priority,
+        |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS INTEGER) AS lvl,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+        |  (o_orderpriority), ())
+        |ORDER BY lvl, status, priority""".stripMargin),
+    // ordered conversion funnel over the event stream
+    Query("q76_funnel", funnel _,
+      """WITH ev AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
+        |    FROM events),
+        |tv AS (SELECT user_id, min(ts) AS tv FROM ev
+        |  WHERE event_type = 'view' GROUP BY user_id),
+        |tc AS (SELECT e.user_id, min(e.ts) AS tc FROM ev e
+        |  JOIN tv ON e.user_id = tv.user_id
+        |  WHERE e.event_type = 'click' AND e.ts > tv.tv GROUP BY e.user_id),
+        |tp AS (SELECT e.user_id, min(e.ts) AS tp FROM ev e
+        |  JOIN tc ON e.user_id = tc.user_id
+        |  WHERE e.event_type = 'purchase' AND e.ts > tc.tc GROUP BY e.user_id)
+        |SELECT 1 AS stage, 'view' AS step,
+        |  CAST(count(*) AS INTEGER) AS n_users FROM tv
+        |UNION ALL SELECT 2, 'click', CAST(count(*) AS INTEGER) FROM tc
+        |UNION ALL SELECT 3, 'purchase', CAST(count(*) AS INTEGER) FROM tp
+        |ORDER BY stage""".stripMargin),
+    // UNPIVOT/melt — the inverse of q19's pivot (one Expand pass)
+    // INCLUDE NULLS: Spark's Dataset.unpivot RETAINS rows whose value is
+    // NULL while DuckDB's UNPIVOT excludes them by default — the synthetic
+    // metric columns happen to be non-null, but the two sides must agree by
+    // construction, not by fixture luck.
+    Query("q82_unpivot", unpivotMetrics _,
+      """SELECT l_orderkey, l_linenumber, metric, value
+        |FROM (FROM lineitem) UNPIVOT INCLUDE NULLS (value FOR metric IN
+        |  (l_quantity, l_extendedprice, l_discount, l_tax))
+        |ORDER BY l_orderkey, l_linenumber, metric, value""".stripMargin),
+    // event-time sliding aggregate via a value-based RANGE window frame
+    Query("q83_range_frame", rollingRevenue30d _,
+      """SELECT o_orderkey, o_custkey,
+        |  CAST(COUNT(*) OVER w AS INTEGER) AS n_30d,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE)
+        |    AS rev_30d
+        |FROM (SELECT *,
+        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
+        |      AS d
+        |  FROM orders)
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY d
+        |  RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
+        |ORDER BY o_orderkey""".stripMargin),
+    // several COUNT(DISTINCT) in one pass — the Expand + 2-level agg shape
+    Query("q86_multi_distinct", (s, d) => multiDistinctAgg(s, d),
+      """SELECT l_returnflag,
+        |  COUNT(DISTINCT l_orderkey) AS n_orders,
+        |  COUNT(DISTINCT l_suppkey) AS n_suppliers,
+        |  COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // skew-mitigation join: salted big side × replicated dim, oracle unsalted
+    Query("q87_salted_join", (s, d) => saltedJoin(s, d),
+      // oracle = the UNsalted join: salting must be invisible in the result
       """SELECT o_orderstatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    // q340: the oracle is plain COUNT(DISTINCT) — the bitmap route must
-    // be EXACT, bucket plumbing and popcounts included
-    "q340_bitmap_distinct" ->
-      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT)
-        |    AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q342: identical hourly collapse, per-lag lead pairing, and
-    // fixed-order Pearson closing algebra on exact integer sums
-    "q342_acf_hourly" -> {
-      val lagSel = (1 to 3).map { k =>
-        s"""l$k AS (SELECT event_type, $k AS lag, x,
-           |  lead(x, $k) OVER (PARTITION BY event_type ORDER BY hour) AS y
-           |  FROM hourly)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH hourly AS (
-         |  SELECT event_type,
-         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
-         |    COUNT(*) AS x
-         |  FROM events GROUP BY 1, 2),
-         |$lagSel,
-         |u AS (SELECT * FROM l1 UNION ALL SELECT * FROM l2
-         |  UNION ALL SELECT * FROM l3),
-         |m AS (SELECT event_type, lag, COUNT(*) AS n,
-         |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-         |    CAST(SUM(x*y) AS DOUBLE) AS sxy,
-         |    CAST(SUM(x*x) AS DOUBLE) AS sxx,
-         |    CAST(SUM(y*y) AS DOUBLE) AS syy
-         |  FROM u WHERE y IS NOT NULL GROUP BY event_type, lag)
-         |SELECT event_type, lag, CAST(n AS INTEGER) AS n_pairs,
-         |  round((CAST(n AS DOUBLE) * sxy - sx * sy)
-         |    / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
-         |         * (CAST(n AS DOUBLE) * syy - sy * sy)), 9) AS acf
-         |FROM m ORDER BY event_type, lag""".stripMargin
-    },
-    // q344: identical doubled fractional ranks (2·min-rank + ties − 1,
-    // integer-exact), DECIMAL(38,0) moment sums, fixed-order closing
-    "q344_spearman" ->
-      """WITH r AS (
-        |  SELECT l_returnflag,
-        |    2*rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
-        |      + COUNT(*) OVER (PARTITION BY l_returnflag, l_quantity)
-        |      - 1 AS rx,
-        |    2*rank() OVER (PARTITION BY l_returnflag
-        |        ORDER BY l_extendedprice)
-        |      + COUNT(*) OVER (PARTITION BY l_returnflag, l_extendedprice)
-        |      - 1 AS ry
+        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
+        |    AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    // SCD-1 snapshot merge: base ∪ updates, updates win per key (MERGE core)
+    Query("q88_upsert_snapshot", upsertSnapshot _,
+      // updates (src=1) win over base (src=0) per key — DuckDB mirrors the
+      // same union + row_number merge
+      """WITH u AS (
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src FROM orders
+        |  UNION ALL
+        |  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice * 1.1, 1 AS src
+        |  FROM orders WHERE o_orderkey % 10 = 0),
+        |r AS (SELECT *, row_number() OVER
+        |        (PARTITION BY o_orderkey ORDER BY src DESC) AS rn FROM u)
+        |SELECT o_orderkey, o_orderstatus, o_totalprice
+        |FROM r WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
+    // fixed-width histogram: narrow map + low-cardinality hash agg
+    Query("q89_histogram", (s, d) => histogram(s, d),
+      """SELECT CAST(FLOOR(l_extendedprice / 5000.0) AS BIGINT) AS bin,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin),
+    // incremental view maintenance: snapshot partials + delta partials merge
+    Query("q90_incremental_agg", (s, d) => incrementalAgg(s, d),
+      // oracle = the FULL recompute: snapshot+delta merge must be invisible
+      """SELECT o_orderstatus, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    // resample to an hourly spine + forward-fill gaps (feature-prep grid)
+    Query("q91_resample_fill", resampleFill _,
+      """WITH hourly AS (
+        |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
+        |    COUNT(*) AS n,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |  FROM events GROUP BY 1),
+        |bounds AS (
+        |  SELECT CAST(date_trunc('hour', MIN(ts)) AS TIMESTAMP) AS lo,
+        |         CAST(date_trunc('hour', MAX(ts)) AS TIMESTAMP) AS hi
+        |  FROM events),
+        |spine AS (
+        |  SELECT UNNEST(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
+        |  FROM bounds)
+        |SELECT s.hour AS hour, COALESCE(h.n, 0) AS n,
+        |  COALESCE(h.sum_value, 0.0) AS sum_value,
+        |  LAST_VALUE(h.sum_value IGNORE NULLS) OVER
+        |    (ORDER BY s.hour ROWS UNBOUNDED PRECEDING) AS filled_sum
+        |FROM spine s LEFT JOIN hourly h ON s.hour = h.hour
+        |ORDER BY hour""".stripMargin),
+    // trailing 7-day distinct users: dedup once + bounded spine range join
+    Query("q92_sliding_distinct", slidingDistinctUsers _,
+      """WITH pairs AS (
+        |  SELECT DISTINCT CAST(ts AS DATE) AS pday, user_id FROM events),
+        |bounds AS (
+        |  SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi
+        |  FROM events),
+        |spine AS (
+        |  SELECT CAST(UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE)
+        |    AS day FROM bounds)
+        |SELECT s.day AS day, COUNT(DISTINCT p.user_id) AS active_users_7d
+        |FROM spine s JOIN pairs p ON p.pday BETWEEN s.day - 6 AND s.day
+        |GROUP BY s.day ORDER BY day""".stripMargin),
+    // per-group moments + 3-sigma outlier counts from exact decimal sums
+    Query("q93_zscore_outliers", zscoreOutliers _,
+      // moments from exact decimal sums, float math in the SAME expression
+      // tree as the Spark side — the 3-sigma boundary agrees exactly
+      """WITH stats AS (
+        |  SELECT event_type, COUNT(*) AS n,
+        |    SUM(CAST(value AS DECIMAL(18,4))) AS sx,
+        |    SUM(CAST(value * value AS DECIMAL(38,8))) AS sxx
+        |  FROM events GROUP BY event_type),
+        |m AS (
+        |  SELECT event_type, n,
+        |    CAST(sx AS DOUBLE) / n AS mean,
+        |    CASE WHEN n > 1 THEN
+        |      SQRT((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / n)
+        |        * (CAST(sx AS DOUBLE) / n) * n) / (n - 1))
+        |    END AS std
+        |  FROM stats),
+        |o AS (
+        |  SELECT e.event_type, COUNT(*) AS n_outliers
+        |  FROM events e JOIN m ON e.event_type = m.event_type
+        |  WHERE m.std > 0 AND ABS((e.value - m.mean) / m.std) > 3.0
+        |  GROUP BY e.event_type)
+        |SELECT m.event_type, m.n, m.mean, m.std,
+        |  COALESCE(o.n_outliers, 0) AS n_outliers
+        |FROM m LEFT JOIN o ON m.event_type = o.event_type
+        |ORDER BY m.event_type""".stripMargin),
+    // retention matrix: first-day cohorts × day offset, partitioning reused
+    Query("q94_cohort_retention", cohortRetention _,
+      """WITH e AS (
+        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+        |f AS (
+        |  SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id)
+        |SELECT f.cohort_day, e.day - f.cohort_day AS day_offset,
+        |  COUNT(DISTINCT e.user_id) AS n_users
+        |FROM e JOIN f ON e.user_id = f.user_id
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin),
+    // multiset set-ops: per-row multiplicities survive (one agg, no join)
+    Query("q95_intersect_except_all", intersectExceptAll _,
+      """WITH f AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
+        |     o AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'),
+        |     ia AS (SELECT o_custkey FROM f INTERSECT ALL SELECT o_custkey FROM o),
+        |     ea AS (SELECT o_custkey FROM f EXCEPT ALL SELECT o_custkey FROM o)
+        |SELECT 'both_all' AS tag, o_custkey, COUNT(*) AS n
+        |FROM ia GROUP BY o_custkey
+        |UNION ALL
+        |SELECT 'only_f_all' AS tag, o_custkey, COUNT(*) AS n
+        |FROM ea GROUP BY o_custkey
+        |ORDER BY tag, o_custkey""".stripMargin),
+    // static-domain pivot with several aggregates per cell, one pass
+    Query("q96_pivot_multi_agg", pivotMultiAgg _,
+      // the FILTER form IS the pivot plan: one conditional-agg pass
+      """SELECT o_orderpriority,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS F_n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+        |    FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS F_rev,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS O_n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+        |    FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS O_rev,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS P_n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+        |    FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS P_rev
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
+    // centered ROWS-frame smoothing over a total in-partition order
+    Query("q97_centered_ma", centeredMovingAvg _,
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE)
+        |    / (COUNT(*) OVER w) AS ma5
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
+        |             ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    // group share of partition + grand total over the aggregated frame
+    Query("q98_percent_of_total", percentOfTotal _,
+      // double division on both sides — decimal/decimal scale rules differ
+      """WITH g AS (
+        |  SELECT l_returnflag, l_linestatus,
+        |    SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT l_returnflag, l_linestatus, CAST(qty AS DOUBLE) AS qty,
+        |  CAST(qty AS DOUBLE)
+        |    / CAST(SUM(qty) OVER (PARTITION BY l_returnflag) AS DOUBLE)
+        |    AS pct_of_flag,
+        |  CAST(qty AS DOUBLE) / CAST(SUM(qty) OVER () AS DOUBLE)
+        |    AS pct_of_total
+        |FROM g ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    // deterministic group-content fingerprint (sorted list -> md5 scalar)
+    Query("q99_array_fingerprint", arrayAggFingerprint _,
+      """SELECT o_custkey,
+        |  md5(string_agg(CAST(o_orderkey AS VARCHAR), ','
+        |    ORDER BY o_orderkey)) AS orders_fp,
+        |  COUNT(*) AS n_orders
+        |FROM orders WHERE o_custkey < 100
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    // one-pass grouped Pearson corr + OLS fit from exact decimal moments
+    Query("q112_grouped_corr", groupedCorr _,
+      // same moment-sum → double → IEEE finish shape as the Spark side;
+      // decimal sums are exact so accumulation order cannot perturb them
+      """WITH b AS (SELECT l_returnflag,
+        |    CAST(l_quantity AS BIGINT) AS x,
+        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
         |  FROM lineitem),
         |m AS (SELECT l_returnflag, COUNT(*) AS n,
-        |    CAST(SUM(CAST(rx AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(ry AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(rx AS DECIMAL(38,0)) * CAST(ry AS DECIMAL(38,0)))
-        |      AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(rx AS DECIMAL(38,0)) * CAST(rx AS DECIMAL(38,0)))
-        |      AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(ry AS DECIMAL(38,0)) * CAST(ry AS DECIMAL(38,0)))
-        |      AS DOUBLE) AS syy
-        |  FROM r GROUP BY l_returnflag)
-        |SELECT l_returnflag, CAST(n AS INTEGER) AS n_rows,
-        |  round((CAST(n AS DOUBLE) * sxy - sx * sy)
-        |    / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
-        |     * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)), 9)
-        |    AS spearman_rho
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    // q345: the same deterministic mess through DuckDB's TRY_CAST —
-    // agreement certifies trim/empty/sentinel/exponent semantics. The
-    // engines' double→string renderings may differ in style, but both
-    // round-trip to the identical double, which is all the sum sees.
-    "q345_try_cast" ->
-      """WITH b AS (
-        |  SELECT o_orderkey % 5 AS cls,
-        |    CASE o_orderkey % 5
-        |      WHEN 0 THEN CAST(o_totalprice AS VARCHAR)
-        |      WHEN 1 THEN '  ' || CAST(o_totalprice AS VARCHAR) || '  '
-        |      WHEN 2 THEN 'N/A'
-        |      WHEN 3 THEN ''
-        |      ELSE CAST(o_orderkey % 97 AS VARCHAR) || 'e2'
-        |    END AS raw
-        |  FROM orders),
-        |p AS (SELECT cls, TRY_CAST(raw AS DOUBLE) AS v FROM b)
-        |SELECT CAST(cls AS INTEGER) AS cls,
-        |  CAST(COUNT(*) AS INTEGER) AS n,
-        |  CAST(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS INTEGER)
-        |    AS n_parsed,
-        |  CAST(SUM(CAST(COALESCE(v, 0.0) AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_parsed
-        |FROM p GROUP BY cls ORDER BY cls""".stripMargin,
-    // q346: DuckDB spells WITHIN GROUP as string_agg(… ORDER BY …);
-    // byte-identical rosters certify the ordered concatenation
-    "q346_listagg" ->
-      """SELECT n_name, CAST(COUNT(*) AS INTEGER) AS n_suppliers,
-        |  string_agg(s_name, ',' ORDER BY s_name) AS roster
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // q329: identical clip + netted-delta sweep in DuckDB (q50's session
-    // CTE prefix verbatim)
-    "q329_peak_concurrency" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |      OR epoch_us(CAST(ts AS TIMESTAMP))
-        |        - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) > 7200000000
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS session_idx
-        |  FROM g),
-        |sess AS (SELECT user_id, session_idx,
-        |    min(epoch_us(CAST(ts AS TIMESTAMP))) AS s_us,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP))) AS e_us
-        |  FROM s GROUP BY user_id, session_idx),
-        |segs AS (SELECT u AS day,
-        |    greatest(s_us, u * 86400000000) AS a,
-        |    least(e_us, (u + 1) * 86400000000 - 1) AS b
-        |  FROM sess, unnest(generate_series(s_us // 86400000000,
-        |    e_us // 86400000000)) AS t(u)),
-        |del AS (SELECT day, us, SUM(d) AS net FROM (
-        |    SELECT day, a AS us, 1 AS d FROM segs
-        |    UNION ALL SELECT day, b + 1, -1 FROM segs)
-        |  GROUP BY day, us),
-        |run AS (SELECT day, us, SUM(net) OVER (PARTITION BY day ORDER BY us
-        |    ROWS UNBOUNDED PRECEDING) AS conc FROM del),
-        |mx AS (SELECT day, us, conc,
-        |    MAX(conc) OVER (PARTITION BY day) AS m FROM run)
-        |SELECT DATE '1970-01-01' + CAST(day AS INTEGER) AS day_date,
-        |  CAST(MAX(conc) AS INTEGER) AS peak,
-        |  CAST(MIN(CASE WHEN conc = m THEN us END) AS BIGINT) AS peak_at_us
-        |FROM mx GROUP BY day ORDER BY day_date""".stripMargin,
-    // q326: identical moment routes + closing algebra in DuckDB
-    "q326_cuped" -> {
-      import graft.functions.TextPrims.hex60S
-      s"""WITH pu AS (SELECT user_id,
-         |    ${hex60S("md5(CAST(user_id AS VARCHAR))")} % 2 AS variant,
-         |    CAST(SUM(CAST(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-         |      THEN value ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) AS x,
-         |    CAST(SUM(CAST(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-         |      THEN value ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) AS y
-         |  FROM events GROUP BY user_id),
-         |pooled AS (SELECT COUNT(*) AS n,
-         |    CAST(SUM(CAST(round(x, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(round(y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS sxy,
-         |    CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS sxx,
-         |    CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS syy
-         |  FROM pu),
-         |pv AS (SELECT variant, COUNT(*) AS n_users,
-         |    CAST(SUM(CAST(round(x, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sxv,
-         |    CAST(SUM(CAST(round(y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS syv
-         |  FROM pu GROUP BY variant)
-         |SELECT pv.variant, pv.n_users,
-         |  round(pv.syv / pv.n_users, 6) AS mean_y_raw,
-         |  round(pv.syv / pv.n_users -
-         |    ((CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) /
-         |     (CAST(p.n AS DOUBLE) * p.sxx - p.sx * p.sx)) *
-         |    (pv.sxv / pv.n_users - p.sx / CAST(p.n AS DOUBLE)), 6)
-         |    AS mean_y_cuped,
-         |  round((CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) /
-         |    (CAST(p.n AS DOUBLE) * p.sxx - p.sx * p.sx), 6) AS theta,
-         |  round((CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) *
-         |    (CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) /
-         |    ((CAST(p.n AS DOUBLE) * p.sxx - p.sx * p.sx) *
-         |     (CAST(p.n AS DOUBLE) * p.syy - p.sy * p.sy)), 6)
-         |    AS var_reduction
-         |FROM pv CROSS JOIN pooled p
-         |ORDER BY pv.variant""".stripMargin
-    },
-    "q290_key_skew_audit" -> q290OracleS,
-    "q179_markov_eval" -> {
-      val bkt = graft.functions.TextPrims
-        .hex60S("md5(CAST(user_id AS VARCHAR))") + " % 100"
-      s"""WITH e AS (SELECT user_id, event_id, event_type,
-         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-         |    $bkt < 80 AS is_train
-         |  FROM events),
-         |p AS (SELECT *, lead(event_type) OVER (PARTITION BY user_id
-         |    ORDER BY us, event_id) AS next_type FROM e),
-         |tr AS (SELECT event_type AS cur, next_type, COUNT(*) AS n FROM p
-         |  WHERE next_type IS NOT NULL AND is_train GROUP BY 1, 2),
-         |m AS (SELECT cur, next_type AS pred FROM (
-         |    SELECT cur, next_type, ROW_NUMBER() OVER (PARTITION BY cur
-         |      ORDER BY n DESC, next_type) AS rk FROM tr) z WHERE rk = 1),
-         |ev AS (SELECT p.event_type, p.next_type, m.pred FROM p
-         |  LEFT JOIN m ON p.event_type = m.cur
-         |  WHERE p.next_type IS NOT NULL AND NOT p.is_train)
-         |SELECT event_type, CAST(COUNT(*) AS INTEGER) AS n_transitions,
-         |  CAST(SUM(CASE WHEN next_type = pred THEN 1 ELSE 0 END)
-         |    AS INTEGER) AS n_correct,
-         |  CAST(SUM(CASE WHEN next_type = pred THEN 1 ELSE 0 END)
-         |    AS DOUBLE) / COUNT(*) AS accuracy
-         |FROM ev GROUP BY event_type ORDER BY event_type""".stripMargin
-    },
-    "q178_session_paths" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |b AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |      OR us - lag(us) OVER w > 7200000000 THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM b),
-        |p AS (SELECT user_id, session_idx,
-        |    string_agg(event_type, '>' ORDER BY us, event_id) AS path
-        |  FROM s GROUP BY 1, 2)
-        |SELECT path, CAST(COUNT(*) AS INTEGER) AS n_sessions
-        |FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    "q159_conversion_latency" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |p AS (SELECT user_id,
-        |    MIN(CASE WHEN event_type = 'view' THEN us END) AS fv,
-        |    MIN(CASE WHEN event_type = 'purchase' THEN us END) AS fp
-        |  FROM e GROUP BY 1),
-        |d AS (SELECT CAST(fp - fv AS DOUBLE) / 1000000.0 AS delta_s
-        |  FROM p WHERE fv IS NOT NULL AND fp IS NOT NULL AND fp >= fv)
-        |SELECT CAST(COUNT(*) AS INTEGER) AS n_converting,
-        |  round(quantile_cont(delta_s, 0.5), 4) AS p50_s,
-        |  round(quantile_cont(delta_s, 0.9), 4) AS p90_s,
-        |  round(quantile_cont(delta_s, 0.99), 4) AS p99_s
-        |FROM d""".stripMargin,
-    "q158_ewma_daily" -> {
-      val terms = (0 until 16).map { k =>
-        s"CAST(lag(cents, $k) OVER w AS DOUBLE) * ${ewmaWeightLit(k)}"
-      }.mkString("\n    + ")
-      val denom = new java.math.BigDecimal(
-        (0 until 16).map(k => math.pow(0.5, k)).sum).toPlainString
-      s"""WITH d AS (SELECT CAST(l_shipdate AS DATE) AS day,
-         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
-         |      AS BIGINT) AS cents
-         |  FROM lineitem GROUP BY 1)
-         |SELECT day, round(($terms)
-         |    / CAST($denom AS DOUBLE) / 100.0, 6) AS ewma_revenue
-         |FROM d WINDOW w AS (ORDER BY day)
-         |ORDER BY day""".stripMargin
-    },
-    "q157_rolling_corr" ->
-      """WITH d AS (SELECT CAST(l_shipdate AS DATE) AS day,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS BIGINT) AS x,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-        |      AS y
-        |  FROM lineitem GROUP BY 1),
-        |m AS (SELECT day,
-        |    COUNT(*) OVER w AS n,
-        |    CAST(SUM(CAST(x AS DECIMAL(38,0))) OVER w AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(y AS DECIMAL(38,0))) OVER w AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(x AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-        |      OVER w AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0)))
-        |      OVER w AS DOUBLE) AS sxx,
+        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
+        |    CAST(SUM(x * y) AS DOUBLE) AS sxy,
+        |    CAST(SUM(x * x) AS DOUBLE) AS sxx,
+        |    -- DECIMAL(19,0) operands force the 128-bit multiply (Σy² tops
+        |    -- int64); scale 0 keeps the →double cast a single rounding
         |    CAST(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-        |      OVER w AS DOUBLE) AS syy
-        |  FROM d
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
-        |SELECT day, n,
-        |  round(CASE WHEN (CAST(n AS DOUBLE) * sxx - sx * sx) > 0
-        |      AND (CAST(n AS DOUBLE) * syy - sy * sy) > 0
-        |    THEN (CAST(n AS DOUBLE) * sxy - sx * sy)
-        |      / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
-        |        * (CAST(n AS DOUBLE) * syy - sy * sy)) END, 6) AS corr
-        |FROM m ORDER BY day""".stripMargin,
-    "q156_corr_matrix" -> {
+        |      AS DOUBLE) AS syy
+        |  FROM b GROUP BY l_returnflag),
+        |d AS (SELECT l_returnflag, n,
+        |    CAST(n AS DOUBLE) * sxy - sx * sy AS cov_n,
+        |    CAST(n AS DOUBLE) * sxx - sx * sx AS varx_n,
+        |    CAST(n AS DOUBLE) * syy - sy * sy AS vary_n, sx, sy
+        |  FROM m)
+        |SELECT l_returnflag, n,
+        |  CASE WHEN varx_n > 0 AND vary_n > 0
+        |    THEN cov_n / sqrt(varx_n * vary_n) ELSE NULL END AS corr_qty_price,
+        |  CASE WHEN varx_n > 0 THEN cov_n / varx_n / 100 ELSE NULL END AS slope,
+        |  CASE WHEN varx_n > 0
+        |    THEN (sy - (cov_n / varx_n) * sx) / CAST(n AS DOUBLE) / 100
+        |    ELSE NULL END AS intercept
+        |FROM d ORDER BY l_returnflag""".stripMargin),
+    // percent_rank + cume_dist cohort distribution (rank-ratio doubles)
+    Query("q113_distribution_ranks", distributionRanks _,
+      """SELECT o_orderkey,
+        |  CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS om,
+        |  percent_rank() OVER w AS pr,
+        |  cume_dist() OVER w AS cd
+        |FROM orders
+        |WINDOW w AS (PARTITION BY date_trunc('month', o_orderdate)
+        |             ORDER BY o_totalprice)
+        |ORDER BY o_orderkey""".stripMargin),
+    // skewness + excess kurtosis per group from exact integer power sums
+    Query("q114_grouped_moments", groupedMoments _,
+      // same exact-power-sum → double → IEEE-finish shape as the Spark
+      // side; HUGEINT carries the y³/y⁴ sums DuckDB's int64 can't
+      """WITH b AS (SELECT l_returnflag,
+        |    CAST(l_quantity AS BIGINT) AS x,
+        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+        |  FROM lineitem),
+        |m AS (SELECT l_returnflag, COUNT(*) AS n,
+        |    CAST(SUM(x) AS DOUBLE) AS sx,
+        |    CAST(SUM(x * x) AS DOUBLE) AS sxx,
+        |    CAST(SUM(x * x * x) AS DOUBLE) AS sx3,
+        |    CAST(SUM(x * x * x * x) AS DOUBLE) AS sx4,
+        |    CAST(SUM(y) AS DOUBLE) AS sy,
+        |    CAST(SUM(CAST(y AS HUGEINT) * y) AS DOUBLE) AS syy,
+        |    CAST(SUM(CAST(y AS HUGEINT) * y * y) AS DOUBLE) AS sy3,
+        |    CAST(SUM(CAST(y AS HUGEINT) * y * y * y) AS DOUBLE) AS sy4
+        |  FROM b GROUP BY l_returnflag),
+        |d AS (SELECT l_returnflag, n,
+        |    sx / CAST(n AS DOUBLE) AS muq, sxx / CAST(n AS DOUBLE) AS r2q,
+        |    sx3 / CAST(n AS DOUBLE) AS r3q, sx4 / CAST(n AS DOUBLE) AS r4q,
+        |    sy / CAST(n AS DOUBLE) AS mup, syy / CAST(n AS DOUBLE) AS r2p,
+        |    sy3 / CAST(n AS DOUBLE) AS r3p, sy4 / CAST(n AS DOUBLE) AS r4p
+        |  FROM m),
+        |c AS (SELECT l_returnflag, n, muq, mup,
+        |    r2q - muq * muq AS m2q,
+        |    r3q - 3 * muq * r2q + 2 * muq * muq * muq AS m3q,
+        |    r4q - 4 * muq * r3q + 6 * muq * muq * r2q
+        |      - 3 * muq * muq * muq * muq AS m4q,
+        |    r2p - mup * mup AS m2p,
+        |    r3p - 3 * mup * r2p + 2 * mup * mup * mup AS m3p,
+        |    r4p - 4 * mup * r3p + 6 * mup * mup * r2p
+        |      - 3 * mup * mup * mup * mup AS m4p
+        |  FROM d)
+        |SELECT l_returnflag, n, muq AS mean_qty, mup / 100 AS mean_price,
+        |  CASE WHEN m2q > 0 THEN m3q / (m2q * sqrt(m2q)) ELSE NULL END AS skew_qty,
+        |  CASE WHEN m2q > 0 THEN m4q / (m2q * m2q) - 3 ELSE NULL END AS kurt_qty,
+        |  CASE WHEN m2p > 0 THEN m3p / (m2p * sqrt(m2p)) ELSE NULL END AS skew_price,
+        |  CASE WHEN m2p > 0 THEN m4p / (m2p * m2p) - 3 ELSE NULL END AS kurt_price
+        |FROM c ORDER BY l_returnflag""".stripMargin),
+    // SCD Type-2 history build: generations -> validity ranges via lead
+    Query("q116_scd2_history", scd2History _,
+      """WITH gens AS (
+        |  SELECT o_orderkey, o_orderstatus, 0 AS version FROM orders
+        |  UNION ALL
+        |  SELECT o_orderkey, 'U' AS o_orderstatus, 1 AS version
+        |  FROM orders WHERE o_orderkey % 10 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, 'X' AS o_orderstatus, 2 AS version
+        |  FROM orders WHERE o_orderkey % 20 = 0)
+        |SELECT o_orderkey, o_orderstatus,
+        |  version AS valid_from,
+        |  lead(version) OVER (PARTITION BY o_orderkey ORDER BY version)
+        |    AS valid_to,
+        |  CAST(CASE WHEN lead(version) OVER
+        |      (PARTITION BY o_orderkey ORDER BY version) IS NULL
+        |    THEN 1 ELSE 0 END AS INTEGER) AS is_current
+        |FROM gens ORDER BY o_orderkey, valid_from""".stripMargin),
+    // Markov transition counts+probabilities over per-user event sequences
+    Query("q117_transition_matrix", transitionMatrix _,
+      """WITH pairs AS (
+        |  SELECT event_type AS src,
+        |    lead(event_type) OVER
+        |      (PARTITION BY user_id ORDER BY ts, event_id) AS dst
+        |  FROM events),
+        |counts AS (
+        |  SELECT src, dst, COUNT(*) AS n FROM pairs
+        |  WHERE dst IS NOT NULL GROUP BY src, dst)
+        |SELECT src, dst, n,
+        |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY src) AS DOUBLE)
+        |    AS p
+        |FROM counts ORDER BY src, dst""".stripMargin),
+    // gaps-and-islands: consecutive-month activity streaks per customer
+    Query("q118_activity_streaks", activityStreaks _,
+      """WITH months AS (
+        |  SELECT DISTINCT o_custkey,
+        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m
+        |  FROM orders),
+        |grps AS (
+        |  SELECT o_custkey,
+        |    m - row_number() OVER (PARTITION BY o_custkey ORDER BY m) AS grp
+        |  FROM months),
+        |streaks AS (
+        |  SELECT o_custkey, grp, COUNT(*) AS len
+        |  FROM grps GROUP BY o_custkey, grp)
+        |SELECT o_custkey, CAST(SUM(len) AS BIGINT) AS n_months,
+        |  COUNT(*) AS n_streaks, CAST(MAX(len) AS BIGINT) AS max_streak
+        |FROM streaks GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    // bitwise + boolean aggregate family (BIT_AND/OR/XOR, BOOL_AND/OR)
+    Query("q119_bit_aggs", bitAggs _,
+      """SELECT l_returnflag,
+        |  BIT_AND(l_partkey) AS pk_and,
+        |  BIT_OR(l_partkey) AS pk_or,
+        |  BIT_XOR(l_partkey) AS pk_xor,
+        |  CAST(BOOL_AND(l_quantity > 0) AS INTEGER) AS all_pos_qty,
+        |  CAST(BOOL_OR(l_discount > 0.05) AS INTEGER) AS any_deep_discount
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // deterministic arg-extremes via max_by/min_by on a packed unique key
+    Query("q120_arg_extremes", argExtremes _,
+      // packed ordering value = exact cents × 1e10 + custkey: unique and
+      // monotone in (balance, custkey) for custkey < 1e10, so arg-extreme
+      // ties cannot occur
+      """WITH c AS (
+        |  SELECT c_nationkey, c_custkey, c_acctbal,
+        |    CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT)
+        |      * 10000000000 + c_custkey AS pk
+        |  FROM customer)
+        |SELECT c_nationkey,
+        |  arg_max(c_custkey, pk) AS richest_cust, MAX(c_acctbal) AS max_bal,
+        |  arg_min(c_custkey, pk) AS poorest_cust, MIN(c_acctbal) AS min_bal
+        |FROM c GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+    // rolling exact median over a ROWS frame, integer-cents determinism
+    Query("q121_rolling_median", rollingMedian _,
+      // exact integer cents make every frame median (int or .5 midpoint)
+      // identically representable; quantile_cont == Spark percentile there
+      """SELECT o_custkey, o_orderkey,
+        |  quantile_cont(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+        |      AS BIGINT), 0.5) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) / 100 AS med5
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    // extended calendar family: last_day/add_months/quarter/ISO week
+    Query("q123_date_funcs", dateFuncs _,
+      """SELECT o_orderkey,
+        |  last_day(CAST(o_orderdate AS DATE)) AS eom,
+        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE)
+        |    AS plus3m,
+        |  CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP) AS qstart,
+        |  CAST(quarter(o_orderdate) AS INTEGER) AS qtr,
+        |  CAST(dayofyear(o_orderdate) AS INTEGER) AS doy,
+        |  CAST(weekofyear(o_orderdate) AS INTEGER) AS isoweek,
+        |  CAST(o_orderdate AS DATE) - DATE '1995-01-01' AS days_since
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    // ordered string_agg via collect_list -> array_sort -> array_join
+    Query("q124_string_agg", stringAgg _,
+      """SELECT s_nationkey, COUNT(*) AS n_suppliers,
+        |  string_agg(s_name, ',' ORDER BY s_name) AS roster
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    // exactly-reproducible stratified downsample (rank mod k per stratum)
+    Query("q125_stratified_take", stratifiedTake _,
+      """WITH r AS (
+        |  SELECT event_id, event_type,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY event_id)
+        |      AS rn
+        |  FROM events)
+        |SELECT event_id, event_type, rn FROM r
+        |WHERE rn % 10 = 1 ORDER BY event_type, rn""".stripMargin),
+    // SCD2 consumption: point-in-time effective-dated dimension lookup
+    Query("q126_scd2_lookup", scd2PointLookup _,
+      """WITH gens AS (
+        |  SELECT o_orderkey, o_orderstatus, 0 AS version FROM orders
+        |  UNION ALL
+        |  SELECT o_orderkey, 'U', 1 FROM orders WHERE o_orderkey % 10 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, 'X', 2 FROM orders WHERE o_orderkey % 20 = 0),
+        |hist AS (
+        |  SELECT o_orderkey, o_orderstatus, version AS valid_from,
+        |    lead(version) OVER (PARTITION BY o_orderkey ORDER BY version)
+        |      AS valid_to
+        |  FROM gens),
+        |probes AS (
+        |  SELECT l_orderkey, CAST(l_linenumber % 3 AS INTEGER) AS v,
+        |    l_quantity
+        |  FROM lineitem)
+        |SELECT h.o_orderstatus AS eff_status, p.v, COUNT(*) AS n,
+        |  CAST(SUM(CAST(p.l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        |FROM probes p JOIN hist h
+        |  ON p.l_orderkey = h.o_orderkey
+        |  AND h.valid_from <= p.v
+        |  AND (h.valid_to IS NULL OR h.valid_to > p.v)
+        |GROUP BY 1, 2 ORDER BY eff_status, v""".stripMargin),
+    // schema evolution: unionByName with null-filled missing columns
+    Query("q127_union_by_name", unionByNameEvolution _,
+      """WITH v1 AS (SELECT o_orderkey AS id, o_totalprice AS amount,
+        |    'order' AS src FROM orders),
+        |v2 AS (SELECT l_orderkey AS id, l_extendedprice AS amount,
+        |    l_discount AS disc, 'line' AS src FROM lineitem),
+        |u AS (SELECT * FROM v1 UNION ALL BY NAME SELECT * FROM v2)
+        |SELECT src, COUNT(*) AS n,
+        |  CAST(SUM(CAST(amount AS DECIMAL(18,4))) AS DOUBLE) AS sum_amount,
+        |  COUNT(disc) AS n_disc
+        |FROM u GROUP BY src ORDER BY src""".stripMargin),
+    // full MERGE contract: update + delete verbs in one keyed window pass
+    Query("q128_merge_deletes", mergeWithDeletes _,
+      """WITH changes AS (
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src
+        |  FROM orders
+        |  UNION ALL
+        |  SELECT o_orderkey, 'U', o_totalprice * 1.1, 1
+        |  FROM orders WHERE o_orderkey % 10 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, 'D', o_totalprice, 2
+        |  FROM orders WHERE o_orderkey % 50 = 0),
+        |r AS (SELECT *, row_number() OVER
+        |        (PARTITION BY o_orderkey ORDER BY src DESC) AS rn
+        |      FROM changes)
+        |SELECT o_orderkey, o_orderstatus, o_totalprice
+        |FROM r WHERE rn = 1 AND o_orderstatus <> 'D'
+        |ORDER BY o_orderkey""".stripMargin),
+    // publish-gate data-quality audit: uniqueness, orphans, domains
+    Query("q129_dq_audit", dqAudit _,
+      """SELECT
+        |  (SELECT COUNT(*) FROM orders) AS n_orders,
+        |  (SELECT COUNT(*) FROM (
+        |     SELECT o_orderkey FROM orders
+        |     GROUP BY o_orderkey HAVING COUNT(*) > 1)) AS dup_orderkeys,
+        |  (SELECT COUNT(*) FROM lineitem l
+        |   WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |                     WHERE o.o_orderkey = l.l_orderkey))
+        |    AS orphan_lineitems,
+        |  (SELECT CAST(SUM(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END)
+        |     AS BIGINT) FROM lineitem) AS nonpos_qty,
+        |  (SELECT CAST(SUM(CASE WHEN l_discount < 0 OR l_discount > 0.2
+        |     THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem) AS discount_oob,
+        |  (SELECT CAST(SUM(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0
+        |     END) AS BIGINT) FROM lineitem) AS null_price""".stripMargin),
+    // event-time RANGE frame: trailing 30-min count+sum per user
+    Query("q134_trailing_range_window", trailingRangeWindow _,
+      """SELECT user_id, event_id,
+        |  epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+        |  COUNT(*) OVER w AS n_30m,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_30m
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id
+        |  ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
+        |  RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, us, event_id""".stripMargin),
+    // graph centrality: 10-iteration weighted PageRank on the aggregated
+    // event-type transition graph, decimal-routed per iteration
+    Query("q142_transition_pagerank", (s, d) => transitionPageRank(s, d), {
+      // the oracle unrolls the ten fixed iterations as CTEs r0..r10, each
+      // contribution sum DECIMAL-routed exactly like the Spark side; the
+      // damping constants are spelled as the SAME double expressions
+      // ((1.0 - 0.85) etc.) so both engines fold identical IEEE values
+      val base =
+        """WITH tr AS (SELECT user_id, event_type,
+          |    lead(event_type) OVER
+          |      (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+          |  FROM events),
+          |e AS (SELECT event_type AS src, next_type AS dst, COUNT(*) AS w
+          |  FROM tr WHERE next_type IS NOT NULL GROUP BY 1, 2),
+          |o AS (SELECT src, SUM(w) AS outw FROM e GROUP BY 1),
+          |n0 AS (SELECT DISTINCT node FROM
+          |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+          |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_nodes FROM n0),
+          |n AS (SELECT node, n_nodes FROM n0 CROSS JOIN nn),
+          |r0 AS (SELECT node, n_nodes,
+          |  CAST(1.0 AS DOUBLE) / n_nodes AS rank FROM n)""".stripMargin
+      val iterations = (1 to 10).map { i =>
+        s"""c$i AS (SELECT e.dst AS node,
+           |    CAST(SUM(CAST(r.rank * e.w / o.outw AS DECIMAL(38,15)))
+           |      AS DOUBLE) AS sumc
+           |  FROM e JOIN o USING (src) JOIN r${i - 1} r ON r.node = e.src
+           |  GROUP BY 1),
+           |r$i AS (SELECT n.node, n.n_nodes,
+           |    (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n.n_nodes
+           |      + CAST(0.85 AS DOUBLE)
+           |        * COALESCE(c$i.sumc, CAST(0.0 AS DOUBLE)) AS rank
+           |  FROM n LEFT JOIN c$i ON n.node = c$i.node)""".stripMargin
+      }
+      (base +: iterations).mkString(",\n") +
+        "\nSELECT node, round(rank, 6) AS rank FROM r10 ORDER BY node"
+    }),
+    // row-level bad-records histogram: constraint bitmask routing
+    Query("q146_quarantine_routing", quarantineRouting _,
+      """WITH li AS (
+        |  SELECT l_orderkey, l_quantity, l_discount, l_tax, l_extendedprice
+        |  FROM lineitem
+        |  UNION ALL SELECT l_orderkey, -l_quantity, l_discount, l_tax,
+        |    l_extendedprice FROM lineitem WHERE l_orderkey % 500 = 0
+        |  UNION ALL SELECT l_orderkey, l_quantity, 0.5, l_tax,
+        |    l_extendedprice FROM lineitem WHERE l_orderkey % 700 = 0
+        |  UNION ALL SELECT l_orderkey, l_quantity, l_discount, 0.9,
+        |    l_extendedprice FROM lineitem WHERE l_orderkey % 900 = 0
+        |  UNION ALL SELECT l_orderkey, l_quantity, l_discount, l_tax,
+        |    -1.0 FROM lineitem WHERE l_orderkey % 1100 = 0
+        |  UNION ALL SELECT l_orderkey, -l_quantity, 0.5, l_tax,
+        |    l_extendedprice FROM lineitem WHERE l_orderkey % 1300 = 0),
+        |m AS (SELECT l_orderkey,
+        |    (CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END)
+        |    + (CASE WHEN l_discount < 0 OR l_discount > 0.2 THEN 2 ELSE 0 END)
+        |    + (CASE WHEN l_tax < 0 OR l_tax > 0.08 THEN 4 ELSE 0 END)
+        |    + (CASE WHEN l_extendedprice IS NULL OR l_extendedprice <= 0
+        |        THEN 8 ELSE 0 END) AS reason_mask
+        |  FROM li)
+        |SELECT reason_mask, COUNT(*) AS n_rows,
+        |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
+        |FROM m GROUP BY reason_mask ORDER BY reason_mask""".stripMargin),
+    // snapshot reconciliation: added/removed/changed diff of two
+    // materialized generations, per-column change counts
+    Query("q148_snapshot_diff", snapshotDiff _,
+      s"""WITH v1 AS (SELECT o_orderkey AS k, o_orderstatus AS st,
+        |    o_totalprice AS price FROM orders),
+        |v2 AS (SELECT k,
+        |    CASE WHEN k % 13 = 0 THEN 'U' ELSE st END AS st,
+        |    CASE WHEN k % 10 = 0 THEN price * 1.1 ELSE price END AS price
+        |  FROM v1 WHERE k % 17 <> 0
+        |  UNION ALL
+        |  SELECT k + $ReKeyOffset, st, price FROM v1 WHERE k % 23 = 0),
+        |j AS (SELECT COALESCE(v1.k, v2.k) AS k, v1.st AS st1, v2.st AS st2,
+        |    v1.price AS p1, v2.price AS p2
+        |  FROM v1 FULL OUTER JOIN v2 ON v1.k = v2.k),
+        |c AS (SELECT k, st1, st2, p1, p2,
+        |    CASE WHEN st1 IS NULL THEN 'added'
+        |      WHEN st2 IS NULL THEN 'removed'
+        |      WHEN st1 <> st2 OR p1 <> p2 THEN 'changed'
+        |      ELSE 'unchanged' END AS change_type
+        |  FROM j)
+        |SELECT change_type, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN change_type = 'changed' AND st1 <> st2
+        |    THEN 1 ELSE 0 END) AS INTEGER) AS n_status_changes,
+        |  CAST(SUM(CASE WHEN change_type = 'changed' AND p1 <> p2
+        |    THEN 1 ELSE 0 END) AS INTEGER) AS n_price_changes,
+        |  MIN(k) AS min_key, MAX(k) AS max_key
+        |FROM c GROUP BY change_type ORDER BY change_type""".stripMargin),
+    // frequent-itemset primitive: per-basket co-occurrence pair counts
+    Query("q149_copurchase_pairs", (s, d) => copurchasePairs(s, d),
+      """WITH items AS (SELECT DISTINCT l_orderkey AS okey,
+        |    l_partkey AS part FROM lineitem)
+        |SELECT a.part AS part_a, b.part AS part_b, COUNT(*) AS n_baskets
+        |FROM items a JOIN items b
+        |  ON a.okey = b.okey AND a.part < b.part
+        |GROUP BY 1, 2
+        |ORDER BY n_baskets DESC, part_a, part_b LIMIT 20""".stripMargin),
+    // behavioral analytics: last-touch conversion attribution (24 h)
+    Query("q151_last_touch", (s, d) => lastTouchAttribution(s, d),
+      """WITH ev AS (SELECT user_id, event_id, event_type,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        |t AS (SELECT *,
+        |    last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
+        |      IGNORE NULLS) OVER w AS touch_type,
+        |    last_value(CASE WHEN event_type <> 'purchase' THEN us END
+        |      IGNORE NULLS) OVER w AS touch_us
+        |  FROM ev
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+        |p AS (SELECT CASE WHEN touch_us IS NOT NULL
+        |      AND us - touch_us <= 86400000000 THEN touch_type
+        |    ELSE 'none' END AS credit
+        |  FROM t WHERE event_type = 'purchase')
+        |SELECT credit, COUNT(*) AS n_purchases
+        |FROM p GROUP BY credit ORDER BY credit""".stripMargin),
+    // table profiling: per-column null + exact distinct census, one scan
+    // (approx = false: the oracle twin; approx HLL++ is the at-scale
+    // default, band-pinned against this in ColumnProfileSpec)
+    Query("q152_column_profile", (s, d) => columnProfile(s, d, approx = false), {
+      val aggExprs = ProfileCols.map(c =>
+        s"""SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS null_$c,
+           |    COUNT(DISTINCT $c) AS dist_$c""".stripMargin).mkString(",\n    ")
+      val unions = ProfileCols.map(c =>
+        s"SELECT '$c' AS column_name, n_rows, " +
+          s"CAST(null_$c AS BIGINT) AS n_null, " +
+          s"CAST(dist_$c AS BIGINT) AS n_distinct FROM a")
+        .mkString("\n  UNION ALL ")
+      s"""WITH a AS (SELECT COUNT(*) AS n_rows,
+         |    $aggExprs
+         |  FROM lineitem)
+         |SELECT column_name, n_rows, n_null, n_distinct FROM (
+         |  $unions)
+         |ORDER BY column_name""".stripMargin
+    }),
+    // equal-frequency discretization: per-flag ntile bins with boundaries
+    Query("q155_equifreq_bins", (s, d) => equifreqBins(s, d),
+      """WITH b AS (SELECT l_returnflag, l_extendedprice,
+        |    CAST(NTILE(8) OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_extendedprice, l_orderkey, l_linenumber)
+        |      AS INTEGER) AS bin
+        |  FROM lineitem)
+        |SELECT l_returnflag, bin, COUNT(*) AS n,
+        |  MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
+        |FROM b GROUP BY 1, 2 ORDER BY l_returnflag, bin""".stripMargin),
+    // feature-selection profiling: all-pairs correlation matrix, one scan
+    Query("q156_corr_matrix", corrMatrix _, {
       // generated from the SAME CorrCols/pair list as the Spark side.
       // Scale-0 decimal sums dodge the ÷10^s decimal→double hazard:
       // DuckDB's HUGEINT sum and Spark's DECIMAL(38,0) sum both convert
@@ -5334,542 +5096,274 @@ object Advanced {
          |SELECT col_a, col_b, n, corr FROM (
          |  $pairSelects)
          |ORDER BY col_a, col_b""".stripMargin
-    },
-    "q155_equifreq_bins" ->
-      """WITH b AS (SELECT l_returnflag, l_extendedprice,
-        |    CAST(NTILE(8) OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice, l_orderkey, l_linenumber)
-        |      AS INTEGER) AS bin
-        |  FROM lineitem)
-        |SELECT l_returnflag, bin, COUNT(*) AS n,
-        |  MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
-        |FROM b GROUP BY 1, 2 ORDER BY l_returnflag, bin""".stripMargin,
-    "q152_column_profile" -> {
-      val aggExprs = ProfileCols.map(c =>
-        s"""SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS null_$c,
-           |    COUNT(DISTINCT $c) AS dist_$c""".stripMargin).mkString(",\n    ")
-      val unions = ProfileCols.map(c =>
-        s"SELECT '$c' AS column_name, n_rows, " +
-          s"CAST(null_$c AS BIGINT) AS n_null, " +
-          s"CAST(dist_$c AS BIGINT) AS n_distinct FROM a")
-        .mkString("\n  UNION ALL ")
-      s"""WITH a AS (SELECT COUNT(*) AS n_rows,
-         |    $aggExprs
-         |  FROM lineitem)
-         |SELECT column_name, n_rows, n_null, n_distinct FROM (
-         |  $unions)
-         |ORDER BY column_name""".stripMargin
-    },
-    "q151_last_touch" ->
-      """WITH ev AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
-        |t AS (SELECT *,
-        |    last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-        |      IGNORE NULLS) OVER w AS touch_type,
-        |    last_value(CASE WHEN event_type <> 'purchase' THEN us END
-        |      IGNORE NULLS) OVER w AS touch_us
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |p AS (SELECT CASE WHEN touch_us IS NOT NULL
-        |      AND us - touch_us <= 86400000000 THEN touch_type
-        |    ELSE 'none' END AS credit
-        |  FROM t WHERE event_type = 'purchase')
-        |SELECT credit, COUNT(*) AS n_purchases
-        |FROM p GROUP BY credit ORDER BY credit""".stripMargin,
-    "q148_snapshot_diff" ->
-      s"""WITH v1 AS (SELECT o_orderkey AS k, o_orderstatus AS st,
-        |    o_totalprice AS price FROM orders),
-        |v2 AS (SELECT k,
-        |    CASE WHEN k % 13 = 0 THEN 'U' ELSE st END AS st,
-        |    CASE WHEN k % 10 = 0 THEN price * 1.1 ELSE price END AS price
-        |  FROM v1 WHERE k % 17 <> 0
-        |  UNION ALL
-        |  SELECT k + $ReKeyOffset, st, price FROM v1 WHERE k % 23 = 0),
-        |j AS (SELECT COALESCE(v1.k, v2.k) AS k, v1.st AS st1, v2.st AS st2,
-        |    v1.price AS p1, v2.price AS p2
-        |  FROM v1 FULL OUTER JOIN v2 ON v1.k = v2.k),
-        |c AS (SELECT k, st1, st2, p1, p2,
-        |    CASE WHEN st1 IS NULL THEN 'added'
-        |      WHEN st2 IS NULL THEN 'removed'
-        |      WHEN st1 <> st2 OR p1 <> p2 THEN 'changed'
-        |      ELSE 'unchanged' END AS change_type
-        |  FROM j)
-        |SELECT change_type, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN change_type = 'changed' AND st1 <> st2
-        |    THEN 1 ELSE 0 END) AS INTEGER) AS n_status_changes,
-        |  CAST(SUM(CASE WHEN change_type = 'changed' AND p1 <> p2
-        |    THEN 1 ELSE 0 END) AS INTEGER) AS n_price_changes,
-        |  MIN(k) AS min_key, MAX(k) AS max_key
-        |FROM c GROUP BY change_type ORDER BY change_type""".stripMargin,
-    "q149_copurchase_pairs" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS okey,
-        |    l_partkey AS part FROM lineitem)
-        |SELECT a.part AS part_a, b.part AS part_b, COUNT(*) AS n_baskets
-        |FROM items a JOIN items b
-        |  ON a.okey = b.okey AND a.part < b.part
-        |GROUP BY 1, 2
-        |ORDER BY n_baskets DESC, part_a, part_b LIMIT 20""".stripMargin,
-    "q146_quarantine_routing" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_quantity, l_discount, l_tax, l_extendedprice
-        |  FROM lineitem
-        |  UNION ALL SELECT l_orderkey, -l_quantity, l_discount, l_tax,
-        |    l_extendedprice FROM lineitem WHERE l_orderkey % 500 = 0
-        |  UNION ALL SELECT l_orderkey, l_quantity, 0.5, l_tax,
-        |    l_extendedprice FROM lineitem WHERE l_orderkey % 700 = 0
-        |  UNION ALL SELECT l_orderkey, l_quantity, l_discount, 0.9,
-        |    l_extendedprice FROM lineitem WHERE l_orderkey % 900 = 0
-        |  UNION ALL SELECT l_orderkey, l_quantity, l_discount, l_tax,
-        |    -1.0 FROM lineitem WHERE l_orderkey % 1100 = 0
-        |  UNION ALL SELECT l_orderkey, -l_quantity, 0.5, l_tax,
-        |    l_extendedprice FROM lineitem WHERE l_orderkey % 1300 = 0),
-        |m AS (SELECT l_orderkey,
-        |    (CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN l_discount < 0 OR l_discount > 0.2 THEN 2 ELSE 0 END)
-        |    + (CASE WHEN l_tax < 0 OR l_tax > 0.08 THEN 4 ELSE 0 END)
-        |    + (CASE WHEN l_extendedprice IS NULL OR l_extendedprice <= 0
-        |        THEN 8 ELSE 0 END) AS reason_mask
-        |  FROM li)
-        |SELECT reason_mask, COUNT(*) AS n_rows,
-        |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
-        |FROM m GROUP BY reason_mask ORDER BY reason_mask""".stripMargin,
-    "q116_scd2_history" ->
-      """WITH gens AS (
-        |  SELECT o_orderkey, o_orderstatus, 0 AS version FROM orders
-        |  UNION ALL
-        |  SELECT o_orderkey, 'U' AS o_orderstatus, 1 AS version
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'X' AS o_orderstatus, 2 AS version
-        |  FROM orders WHERE o_orderkey % 20 = 0)
-        |SELECT o_orderkey, o_orderstatus,
-        |  version AS valid_from,
-        |  lead(version) OVER (PARTITION BY o_orderkey ORDER BY version)
-        |    AS valid_to,
-        |  CAST(CASE WHEN lead(version) OVER
-        |      (PARTITION BY o_orderkey ORDER BY version) IS NULL
-        |    THEN 1 ELSE 0 END AS INTEGER) AS is_current
-        |FROM gens ORDER BY o_orderkey, valid_from""".stripMargin,
-    "q142_transition_pagerank" -> {
-      // the oracle unrolls the ten fixed iterations as CTEs r0..r10, each
-      // contribution sum DECIMAL-routed exactly like the Spark side; the
-      // damping constants are spelled as the SAME double expressions
-      // ((1.0 - 0.85) etc.) so both engines fold identical IEEE values
-      val base =
-        """WITH tr AS (SELECT user_id, event_type,
-          |    lead(event_type) OVER
-          |      (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-          |  FROM events),
-          |e AS (SELECT event_type AS src, next_type AS dst, COUNT(*) AS w
-          |  FROM tr WHERE next_type IS NOT NULL GROUP BY 1, 2),
-          |o AS (SELECT src, SUM(w) AS outw FROM e GROUP BY 1),
-          |n0 AS (SELECT DISTINCT node FROM
-          |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-          |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_nodes FROM n0),
-          |n AS (SELECT node, n_nodes FROM n0 CROSS JOIN nn),
-          |r0 AS (SELECT node, n_nodes,
-          |  CAST(1.0 AS DOUBLE) / n_nodes AS rank FROM n)""".stripMargin
-      val iterations = (1 to 10).map { i =>
-        s"""c$i AS (SELECT e.dst AS node,
-           |    CAST(SUM(CAST(r.rank * e.w / o.outw AS DECIMAL(38,15)))
-           |      AS DOUBLE) AS sumc
-           |  FROM e JOIN o USING (src) JOIN r${i - 1} r ON r.node = e.src
-           |  GROUP BY 1),
-           |r$i AS (SELECT n.node, n.n_nodes,
-           |    (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n.n_nodes
-           |      + CAST(0.85 AS DOUBLE)
-           |        * COALESCE(c$i.sumc, CAST(0.0 AS DOUBLE)) AS rank
-           |  FROM n LEFT JOIN c$i ON n.node = c$i.node)""".stripMargin
-      }
-      (base +: iterations).mkString(",\n") +
-        "\nSELECT node, round(rank, 6) AS rank FROM r10 ORDER BY node"
-    },
-    "q117_transition_matrix" ->
-      """WITH pairs AS (
-        |  SELECT event_type AS src,
-        |    lead(event_type) OVER
-        |      (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |counts AS (
-        |  SELECT src, dst, COUNT(*) AS n FROM pairs
-        |  WHERE dst IS NOT NULL GROUP BY src, dst)
-        |SELECT src, dst, n,
-        |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY src) AS DOUBLE)
-        |    AS p
-        |FROM counts ORDER BY src, dst""".stripMargin,
-    "q118_activity_streaks" ->
-      """WITH months AS (
-        |  SELECT DISTINCT o_custkey,
-        |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m
-        |  FROM orders),
-        |grps AS (
-        |  SELECT o_custkey,
-        |    m - row_number() OVER (PARTITION BY o_custkey ORDER BY m) AS grp
-        |  FROM months),
-        |streaks AS (
-        |  SELECT o_custkey, grp, COUNT(*) AS len
-        |  FROM grps GROUP BY o_custkey, grp)
-        |SELECT o_custkey, CAST(SUM(len) AS BIGINT) AS n_months,
-        |  COUNT(*) AS n_streaks, CAST(MAX(len) AS BIGINT) AS max_streak
-        |FROM streaks GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "q119_bit_aggs" ->
-      """SELECT l_returnflag,
-        |  BIT_AND(l_partkey) AS pk_and,
-        |  BIT_OR(l_partkey) AS pk_or,
-        |  BIT_XOR(l_partkey) AS pk_xor,
-        |  CAST(BOOL_AND(l_quantity > 0) AS INTEGER) AS all_pos_qty,
-        |  CAST(BOOL_OR(l_discount > 0.05) AS INTEGER) AS any_deep_discount
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q128_merge_deletes" ->
-      """WITH changes AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT o_orderkey, 'U', o_totalprice * 1.1, 1
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'D', o_totalprice, 2
-        |  FROM orders WHERE o_orderkey % 50 = 0),
-        |r AS (SELECT *, row_number() OVER
-        |        (PARTITION BY o_orderkey ORDER BY src DESC) AS rn
-        |      FROM changes)
-        |SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM r WHERE rn = 1 AND o_orderstatus <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q129_dq_audit" ->
-      """SELECT
-        |  (SELECT COUNT(*) FROM orders) AS n_orders,
-        |  (SELECT COUNT(*) FROM (
-        |     SELECT o_orderkey FROM orders
-        |     GROUP BY o_orderkey HAVING COUNT(*) > 1)) AS dup_orderkeys,
-        |  (SELECT COUNT(*) FROM lineitem l
-        |   WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |                     WHERE o.o_orderkey = l.l_orderkey))
-        |    AS orphan_lineitems,
-        |  (SELECT CAST(SUM(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END)
-        |     AS BIGINT) FROM lineitem) AS nonpos_qty,
-        |  (SELECT CAST(SUM(CASE WHEN l_discount < 0 OR l_discount > 0.2
-        |     THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem) AS discount_oob,
-        |  (SELECT CAST(SUM(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0
-        |     END) AS BIGINT) FROM lineitem) AS null_price""".stripMargin,
-    "q126_scd2_lookup" ->
-      """WITH gens AS (
-        |  SELECT o_orderkey, o_orderstatus, 0 AS version FROM orders
-        |  UNION ALL
-        |  SELECT o_orderkey, 'U', 1 FROM orders WHERE o_orderkey % 10 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'X', 2 FROM orders WHERE o_orderkey % 20 = 0),
-        |hist AS (
-        |  SELECT o_orderkey, o_orderstatus, version AS valid_from,
-        |    lead(version) OVER (PARTITION BY o_orderkey ORDER BY version)
-        |      AS valid_to
-        |  FROM gens),
-        |probes AS (
-        |  SELECT l_orderkey, CAST(l_linenumber % 3 AS INTEGER) AS v,
-        |    l_quantity
-        |  FROM lineitem)
-        |SELECT h.o_orderstatus AS eff_status, p.v, COUNT(*) AS n,
-        |  CAST(SUM(CAST(p.l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        |FROM probes p JOIN hist h
-        |  ON p.l_orderkey = h.o_orderkey
-        |  AND h.valid_from <= p.v
-        |  AND (h.valid_to IS NULL OR h.valid_to > p.v)
-        |GROUP BY 1, 2 ORDER BY eff_status, v""".stripMargin,
-    "q127_union_by_name" ->
-      """WITH v1 AS (SELECT o_orderkey AS id, o_totalprice AS amount,
-        |    'order' AS src FROM orders),
-        |v2 AS (SELECT l_orderkey AS id, l_extendedprice AS amount,
-        |    l_discount AS disc, 'line' AS src FROM lineitem),
-        |u AS (SELECT * FROM v1 UNION ALL BY NAME SELECT * FROM v2)
-        |SELECT src, COUNT(*) AS n,
-        |  CAST(SUM(CAST(amount AS DECIMAL(18,4))) AS DOUBLE) AS sum_amount,
-        |  COUNT(disc) AS n_disc
-        |FROM u GROUP BY src ORDER BY src""".stripMargin,
-    "q124_string_agg" ->
-      """SELECT s_nationkey, COUNT(*) AS n_suppliers,
-        |  string_agg(s_name, ',' ORDER BY s_name) AS roster
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q125_stratified_take" ->
-      """WITH r AS (
-        |  SELECT event_id, event_type,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY event_id)
-        |      AS rn
-        |  FROM events)
-        |SELECT event_id, event_type, rn FROM r
-        |WHERE rn % 10 = 1 ORDER BY event_type, rn""".stripMargin,
-    "q121_rolling_median" ->
-      // exact integer cents make every frame median (int or .5 midpoint)
-      // identically representable; quantile_cont == Spark percentile there
-      """SELECT o_custkey, o_orderkey,
-        |  quantile_cont(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-        |      AS BIGINT), 0.5) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) / 100 AS med5
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q134_trailing_range_window" ->
-      """SELECT user_id, event_id,
-        |  epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |  COUNT(*) OVER w AS n_30m,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sum_30m
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |  ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
-        |  RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, us, event_id""".stripMargin,
-    "q123_date_funcs" ->
-      """SELECT o_orderkey,
-        |  last_day(CAST(o_orderdate AS DATE)) AS eom,
-        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE)
-        |    AS plus3m,
-        |  CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP) AS qstart,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS qtr,
-        |  CAST(dayofyear(o_orderdate) AS INTEGER) AS doy,
-        |  CAST(weekofyear(o_orderdate) AS INTEGER) AS isoweek,
-        |  CAST(o_orderdate AS DATE) - DATE '1995-01-01' AS days_since
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q120_arg_extremes" ->
-      // packed ordering value = exact cents × 1e10 + custkey: unique and
-      // monotone in (balance, custkey) for custkey < 1e10, so arg-extreme
-      // ties cannot occur
-      """WITH c AS (
-        |  SELECT c_nationkey, c_custkey, c_acctbal,
-        |    CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |      * 10000000000 + c_custkey AS pk
-        |  FROM customer)
-        |SELECT c_nationkey,
-        |  arg_max(c_custkey, pk) AS richest_cust, MAX(c_acctbal) AS max_bal,
-        |  arg_min(c_custkey, pk) AS poorest_cust, MIN(c_acctbal) AS min_bal
-        |FROM c GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "q112_grouped_corr" ->
-      // same moment-sum → double → IEEE finish shape as the Spark side;
-      // decimal sums are exact so accumulation order cannot perturb them
-      """WITH b AS (SELECT l_returnflag,
-        |    CAST(l_quantity AS BIGINT) AS x,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-        |  FROM lineitem),
-        |m AS (SELECT l_returnflag, COUNT(*) AS n,
-        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-        |    CAST(SUM(x * y) AS DOUBLE) AS sxy,
-        |    CAST(SUM(x * x) AS DOUBLE) AS sxx,
-        |    -- DECIMAL(19,0) operands force the 128-bit multiply (Σy² tops
-        |    -- int64); scale 0 keeps the →double cast a single rounding
+    }),
+    // time-series co-movement: trailing 30-day rolling correlation
+    Query("q157_rolling_corr", (s, d) => rollingCorr(s, d),
+      """WITH d AS (SELECT CAST(l_shipdate AS DATE) AS day,
+        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS BIGINT) AS x,
+        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT)
+        |      AS y
+        |  FROM lineitem GROUP BY 1),
+        |m AS (SELECT day,
+        |    COUNT(*) OVER w AS n,
+        |    CAST(SUM(CAST(x AS DECIMAL(38,0))) OVER w AS DOUBLE) AS sx,
+        |    CAST(SUM(CAST(y AS DECIMAL(38,0))) OVER w AS DOUBLE) AS sy,
+        |    CAST(SUM(CAST(x AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
+        |      OVER w AS DOUBLE) AS sxy,
+        |    CAST(SUM(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0)))
+        |      OVER w AS DOUBLE) AS sxx,
         |    CAST(SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0)))
-        |      AS DOUBLE) AS syy
-        |  FROM b GROUP BY l_returnflag),
-        |d AS (SELECT l_returnflag, n,
-        |    CAST(n AS DOUBLE) * sxy - sx * sy AS cov_n,
-        |    CAST(n AS DOUBLE) * sxx - sx * sx AS varx_n,
-        |    CAST(n AS DOUBLE) * syy - sy * sy AS vary_n, sx, sy
-        |  FROM m)
-        |SELECT l_returnflag, n,
-        |  CASE WHEN varx_n > 0 AND vary_n > 0
-        |    THEN cov_n / sqrt(varx_n * vary_n) ELSE NULL END AS corr_qty_price,
-        |  CASE WHEN varx_n > 0 THEN cov_n / varx_n / 100 ELSE NULL END AS slope,
-        |  CASE WHEN varx_n > 0
-        |    THEN (sy - (cov_n / varx_n) * sx) / CAST(n AS DOUBLE) / 100
-        |    ELSE NULL END AS intercept
-        |FROM d ORDER BY l_returnflag""".stripMargin,
-    "q114_grouped_moments" ->
-      // same exact-power-sum → double → IEEE-finish shape as the Spark
-      // side; HUGEINT carries the y³/y⁴ sums DuckDB's int64 can't
-      """WITH b AS (SELECT l_returnflag,
-        |    CAST(l_quantity AS BIGINT) AS x,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-        |  FROM lineitem),
-        |m AS (SELECT l_returnflag, COUNT(*) AS n,
-        |    CAST(SUM(x) AS DOUBLE) AS sx,
-        |    CAST(SUM(x * x) AS DOUBLE) AS sxx,
-        |    CAST(SUM(x * x * x) AS DOUBLE) AS sx3,
-        |    CAST(SUM(x * x * x * x) AS DOUBLE) AS sx4,
-        |    CAST(SUM(y) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(y AS HUGEINT) * y) AS DOUBLE) AS syy,
-        |    CAST(SUM(CAST(y AS HUGEINT) * y * y) AS DOUBLE) AS sy3,
-        |    CAST(SUM(CAST(y AS HUGEINT) * y * y * y) AS DOUBLE) AS sy4
-        |  FROM b GROUP BY l_returnflag),
-        |d AS (SELECT l_returnflag, n,
-        |    sx / CAST(n AS DOUBLE) AS muq, sxx / CAST(n AS DOUBLE) AS r2q,
-        |    sx3 / CAST(n AS DOUBLE) AS r3q, sx4 / CAST(n AS DOUBLE) AS r4q,
-        |    sy / CAST(n AS DOUBLE) AS mup, syy / CAST(n AS DOUBLE) AS r2p,
-        |    sy3 / CAST(n AS DOUBLE) AS r3p, sy4 / CAST(n AS DOUBLE) AS r4p
-        |  FROM m),
-        |c AS (SELECT l_returnflag, n, muq, mup,
-        |    r2q - muq * muq AS m2q,
-        |    r3q - 3 * muq * r2q + 2 * muq * muq * muq AS m3q,
-        |    r4q - 4 * muq * r3q + 6 * muq * muq * r2q
-        |      - 3 * muq * muq * muq * muq AS m4q,
-        |    r2p - mup * mup AS m2p,
-        |    r3p - 3 * mup * r2p + 2 * mup * mup * mup AS m3p,
-        |    r4p - 4 * mup * r3p + 6 * mup * mup * r2p
-        |      - 3 * mup * mup * mup * mup AS m4p
-        |  FROM d)
-        |SELECT l_returnflag, n, muq AS mean_qty, mup / 100 AS mean_price,
-        |  CASE WHEN m2q > 0 THEN m3q / (m2q * sqrt(m2q)) ELSE NULL END AS skew_qty,
-        |  CASE WHEN m2q > 0 THEN m4q / (m2q * m2q) - 3 ELSE NULL END AS kurt_qty,
-        |  CASE WHEN m2p > 0 THEN m3p / (m2p * sqrt(m2p)) ELSE NULL END AS skew_price,
-        |  CASE WHEN m2p > 0 THEN m4p / (m2p * m2p) - 3 ELSE NULL END AS kurt_price
-        |FROM c ORDER BY l_returnflag""".stripMargin,
-    "q113_distribution_ranks" ->
-      """SELECT o_orderkey,
-        |  CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS om,
-        |  percent_rank() OVER w AS pr,
-        |  cume_dist() OVER w AS cd
-        |FROM orders
-        |WINDOW w AS (PARTITION BY date_trunc('month', o_orderdate)
-        |             ORDER BY o_totalprice)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q88_upsert_snapshot" ->
-      // updates (src=1) win over base (src=0) per key — DuckDB mirrors the
-      // same union + row_number merge
-      """WITH u AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src FROM orders
-        |  UNION ALL
-        |  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice * 1.1, 1 AS src
-        |  FROM orders WHERE o_orderkey % 10 = 0),
-        |r AS (SELECT *, row_number() OVER
-        |        (PARTITION BY o_orderkey ORDER BY src DESC) AS rn FROM u)
-        |SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM r WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-    "q89_histogram" ->
-      """SELECT CAST(FLOOR(l_extendedprice / 5000.0) AS BIGINT) AS bin,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q90_incremental_agg" ->
-      // oracle = the FULL recompute: snapshot+delta merge must be invisible
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q91_resample_fill" ->
-      """WITH hourly AS (
-        |  SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    COUNT(*) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |  FROM events GROUP BY 1),
-        |bounds AS (
-        |  SELECT CAST(date_trunc('hour', MIN(ts)) AS TIMESTAMP) AS lo,
-        |         CAST(date_trunc('hour', MAX(ts)) AS TIMESTAMP) AS hi
-        |  FROM events),
-        |spine AS (
-        |  SELECT UNNEST(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour
-        |  FROM bounds)
-        |SELECT s.hour AS hour, COALESCE(h.n, 0) AS n,
-        |  COALESCE(h.sum_value, 0.0) AS sum_value,
-        |  LAST_VALUE(h.sum_value IGNORE NULLS) OVER
-        |    (ORDER BY s.hour ROWS UNBOUNDED PRECEDING) AS filled_sum
-        |FROM spine s LEFT JOIN hourly h ON s.hour = h.hour
-        |ORDER BY hour""".stripMargin,
-    "q92_sliding_distinct" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS pday, user_id FROM events),
-        |bounds AS (
-        |  SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi
-        |  FROM events),
-        |spine AS (
-        |  SELECT CAST(UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE)
-        |    AS day FROM bounds)
-        |SELECT s.day AS day, COUNT(DISTINCT p.user_id) AS active_users_7d
-        |FROM spine s JOIN pairs p ON p.pday BETWEEN s.day - 6 AND s.day
-        |GROUP BY s.day ORDER BY day""".stripMargin,
-    "q223_scaler_fit" -> {
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      cols.map { c =>
-        s"""SELECT '$c' AS "column", CAST(COUNT(*) AS INTEGER) AS n,
-           |  CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE) / COUNT(*)
-           |    / 1000000.0 AS mean,
-           |  SQRT((CAST(SUM(CAST(vq AS DECIMAL(38,0)) * vq) AS DOUBLE)
-           |    - (CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE)
-           |        / COUNT(*))
-           |      * (CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE)
-           |        / COUNT(*)) * COUNT(*))
-           |    / (COUNT(*) - 1)) / 1000000.0 AS std,
-           |  quantile_cont(vq, 0.5) / 1000000.0 AS median,
-           |  (quantile_cont(vq, 0.75) - quantile_cont(vq, 0.25))
-           |    / 1000000.0 AS iqr
-           |FROM (SELECT CAST(CAST($c AS DECIMAL(18,6)) * 1000000
-           |  AS BIGINT) AS vq FROM lineitem)""".stripMargin
-      }.mkString("\nUNION ALL\n") + "\nORDER BY \"column\""
-    },
-    "q224_trimmed_mean" ->
-      """WITH e AS (SELECT event_type, event_id,
+        |      OVER w AS DOUBLE) AS syy
+        |  FROM d
+        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
+        |SELECT day, n,
+        |  round(CASE WHEN (CAST(n AS DOUBLE) * sxx - sx * sx) > 0
+        |      AND (CAST(n AS DOUBLE) * syy - sy * sy) > 0
+        |    THEN (CAST(n AS DOUBLE) * sxy - sx * sy)
+        |      / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
+        |        * (CAST(n AS DOUBLE) * syy - sy * sy)) END, 6) AS corr
+        |FROM m ORDER BY day""".stripMargin),
+    // exponential smoothing: 16-term EWMA of daily revenue, exact weights
+    Query("q158_ewma_daily", (s, d) => ewmaDaily(s, d), {
+      val terms = (0 until 16).map { k =>
+        s"CAST(lag(cents, $k) OVER w AS DOUBLE) * ${ewmaWeightLit(k)}"
+      }.mkString("\n    + ")
+      val denom = new java.math.BigDecimal(
+        (0 until 16).map(k => math.pow(0.5, k)).sum).toPlainString
+      s"""WITH d AS (SELECT CAST(l_shipdate AS DATE) AS day,
+         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
+         |      AS BIGINT) AS cents
+         |  FROM lineitem GROUP BY 1)
+         |SELECT day, round(($terms)
+         |    / CAST($denom AS DOUBLE) / 100.0, 6) AS ewma_revenue
+         |FROM d WINDOW w AS (ORDER BY day)
+         |ORDER BY day""".stripMargin
+    }),
+    // product analytics: view→purchase conversion latency percentiles
+    Query("q159_conversion_latency", conversionLatency _,
+      """WITH e AS (SELECT user_id, event_type,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        |p AS (SELECT user_id,
+        |    MIN(CASE WHEN event_type = 'view' THEN us END) AS fv,
+        |    MIN(CASE WHEN event_type = 'purchase' THEN us END) AS fp
+        |  FROM e GROUP BY 1),
+        |d AS (SELECT CAST(fp - fv AS DOUBLE) / 1000000.0 AS delta_s
+        |  FROM p WHERE fv IS NOT NULL AND fp IS NOT NULL AND fp >= fv)
+        |SELECT CAST(COUNT(*) AS INTEGER) AS n_converting,
+        |  round(quantile_cont(delta_s, 0.5), 4) AS p50_s,
+        |  round(quantile_cont(delta_s, 0.9), 4) AS p90_s,
+        |  round(quantile_cont(delta_s, 0.99), 4) AS p99_s
+        |FROM d""".stripMargin),
+    // user-journey mining: top event-type paths per 2h-gap session
+    Query("q178_session_paths", (s, d) => sessionPaths(s, d),
+      """WITH e AS (SELECT user_id, event_id, event_type,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        |b AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
+        |      OR us - lag(us) OVER w > 7200000000 THEN 1 ELSE 0 END AS brk
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        |s AS (SELECT *, SUM(brk) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+        |  FROM b),
+        |p AS (SELECT user_id, session_idx,
+        |    string_agg(event_type, '>' ORDER BY us, event_id) AS path
+        |  FROM s GROUP BY 1, 2)
+        |SELECT path, CAST(COUNT(*) AS INTEGER) AS n_sessions
+        |FROM p GROUP BY path
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
+    // behavioral model eval: Markov argmax fit on train users, held-out acc
+    Query("q179_markov_eval", (s, d) => markovEval(s, d), {
+      val bkt = graft.functions.TextPrims
+        .hex60S("md5(CAST(user_id AS VARCHAR))") + " % 100"
+      s"""WITH e AS (SELECT user_id, event_id, event_type,
+         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+         |    $bkt < 80 AS is_train
+         |  FROM events),
+         |p AS (SELECT *, lead(event_type) OVER (PARTITION BY user_id
+         |    ORDER BY us, event_id) AS next_type FROM e),
+         |tr AS (SELECT event_type AS cur, next_type, COUNT(*) AS n FROM p
+         |  WHERE next_type IS NOT NULL AND is_train GROUP BY 1, 2),
+         |m AS (SELECT cur, next_type AS pred FROM (
+         |    SELECT cur, next_type, ROW_NUMBER() OVER (PARTITION BY cur
+         |      ORDER BY n DESC, next_type) AS rk FROM tr) z WHERE rk = 1),
+         |ev AS (SELECT p.event_type, p.next_type, m.pred FROM p
+         |  LEFT JOIN m ON p.event_type = m.cur
+         |  WHERE p.next_type IS NOT NULL AND NOT p.is_train)
+         |SELECT event_type, CAST(COUNT(*) AS INTEGER) AS n_transitions,
+         |  CAST(SUM(CASE WHEN next_type = pred THEN 1 ELSE 0 END)
+         |    AS INTEGER) AS n_correct,
+         |  CAST(SUM(CASE WHEN next_type = pred THEN 1 ELSE 0 END)
+         |    AS DOUBLE) / COUNT(*) AS accuracy
+         |FROM ev GROUP BY event_type ORDER BY event_type""".stripMargin
+    }),
+    // robust (median/MAD) outlier census — q93's masking-proof twin
+    Query("q191_mad_outliers", (s, d) => madOutliers(s, d),
+      // integer micro-units make every quantile_cont midpoint exactly
+      // representable == Spark percentile; outputs never re-rounded
+      """WITH e AS (SELECT event_type,
         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
         |  FROM events),
-        |r AS (SELECT event_type, vq,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY vq, event_id) AS rk,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM e),
-        |kept AS (SELECT event_type, vq FROM r
-        |  WHERE rk > CAST(FLOOR(n * 0.05) AS BIGINT)
-        |    AND rk <= n - CAST(FLOOR(n * 0.05) AS BIGINT))
-        |SELECT event_type, CAST(COUNT(*) AS INTEGER) AS n_kept,
-        |  CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE) / COUNT(*)
-        |    / 1000000.0 AS trimmed_mean,
-        |  MIN(vq) / 1000000.0 AS kept_min,
-        |  MAX(vq) / 1000000.0 AS kept_max
-        |FROM kept GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q218_fk_audit" -> {
-      val edges = Seq(
-        ("orders.o_custkey->customer", "orders", "o_custkey",
-          "customer", "c_custkey"),
-        ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-          "orders", "o_orderkey"),
-        ("lineitem.l_partkey->part", "lineitem", "l_partkey",
-          "part", "p_partkey"),
-        ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
-          "supplier", "s_suppkey"),
-        ("customer.c_nationkey->nation", "customer", "c_nationkey",
-          "nation", "n_nationkey"),
-        ("supplier.s_nationkey->nation", "supplier", "s_nationkey",
-          "nation", "n_nationkey"),
-        ("nation.n_regionkey->region", "nation", "n_regionkey",
-          "region", "r_regionkey"))
-      edges.map { case (name, child, ck, parent, pk) =>
-        s"""SELECT '$name' AS edge,
-           |  (SELECT COUNT(*) FROM $child) AS n_child,
-           |  CAST((SELECT COUNT(DISTINCT $ck) FROM $child) AS INTEGER)
-           |    AS n_keys,
-           |  CAST((SELECT COUNT(*) FROM $child WHERE $ck IS NULL)
-           |    AS INTEGER) AS n_null_keys,
-           |  CAST((SELECT COUNT(*) FROM $child c
-           |    WHERE c.$ck IS NOT NULL AND NOT EXISTS
-           |      (SELECT 1 FROM $parent p WHERE p.$pk = c.$ck))
-           |    AS INTEGER) AS n_orphans""".stripMargin
-      }.mkString("\nUNION ALL\n") + "\nORDER BY edge"
-    },
-    "q214_stratified_kfold" -> {
-      val h = graft.functions.TextPrims
-        .hex60S("md5(CAST(vec_id AS VARCHAR))")
-      s"""WITH r AS (SELECT label, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY label
-         |      ORDER BY $h, vec_id) AS rn
-         |  FROM embeddings)
-         |SELECT label, CAST((rn - 1) % 5 AS INTEGER) AS fold,
-         |  CAST(COUNT(*) AS INTEGER) AS n
-         |FROM r GROUP BY label, (rn - 1) % 5
-         |ORDER BY label, fold""".stripMargin
-    },
-    "q213_skew_audit" -> {
-      val bkt = graft.functions.TextPrims
-        .hex60S("md5(CAST(k AS VARCHAR))") + " % 32"
-      s"""WITH keyed AS (SELECT o_custkey AS k, COUNT(*) AS cnt
-         |  FROM orders GROUP BY o_custkey),
-         |kb AS (SELECT k, cnt, CAST($bkt AS INTEGER) AS bucket FROM keyed),
-         |rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY bucket
-         |    ORDER BY cnt DESC, k) AS rk FROM kb),
-         |b AS (SELECT bucket, SUM(cnt) AS n_rows, COUNT(*) AS n_keys,
-         |    MAX(CASE WHEN rk = 1 THEN k END) AS top_key,
-         |    MAX(CASE WHEN rk = 1 THEN cnt END) AS top_key_n
-         |  FROM rk GROUP BY bucket),
-         |tot AS (SELECT SUM(n_rows) AS total FROM b)
-         |SELECT bucket, CAST(n_rows AS BIGINT) AS n_rows,
-         |  CAST(n_keys AS INTEGER) AS n_keys,
-         |  round(CAST(n_rows AS DOUBLE) * 32 / CAST(total AS DOUBLE), 6)
-         |    AS load_ratio,
-         |  top_key, CAST(top_key_n AS BIGINT) AS top_key_n
-         |FROM b, tot ORDER BY bucket""".stripMargin
-    },
-    "q208_mann_whitney" ->
+        |med AS (SELECT event_type, quantile_cont(vq, 0.5) AS med
+        |  FROM e GROUP BY event_type),
+        |dev AS (SELECT e.event_type, ABS(CAST(vq AS DOUBLE) - med.med) AS ad
+        |  FROM e JOIN med ON e.event_type = med.event_type),
+        |mad AS (SELECT event_type, COUNT(*) AS n,
+        |    quantile_cont(ad, 0.5) AS madv
+        |  FROM dev GROUP BY event_type),
+        |o AS (SELECT dev.event_type, COUNT(*) AS n_outliers
+        |  FROM dev JOIN mad ON dev.event_type = mad.event_type
+        |  WHERE ad > 3.0 * mad.madv GROUP BY dev.event_type)
+        |SELECT med.event_type, CAST(mad.n AS INTEGER) AS n,
+        |  med.med / 1000000.0 AS median,
+        |  mad.madv / 1000000.0 AS mad,
+        |  CAST(COALESCE(o.n_outliers, 0) AS INTEGER) AS n_outliers,
+        |  CAST(COALESCE(o.n_outliers, 0) AS DOUBLE) / mad.n AS outlier_ratio
+        |FROM med JOIN mad ON med.event_type = mad.event_type
+        |LEFT JOIN o ON med.event_type = o.event_type
+        |ORDER BY med.event_type""".stripMargin),
+    // Neyman: variance-optimal stratified sample sizing (pairs with q144)
+    Query("q197_neyman_alloc", (s, d) => neymanAllocation(s, d),
+      // identical moment chain to q93; N·S rounds to 6dp before the
+      // decimal total so the share denominator is exact on both engines
+      """WITH stats AS (
+        |  SELECT event_type, COUNT(*) AS n,
+        |    SUM(CAST(value AS DECIMAL(18,4))) AS sx,
+        |    SUM(CAST(value * value AS DECIMAL(38,8))) AS sxx
+        |  FROM events GROUP BY event_type),
+        |m AS (
+        |  SELECT event_type, n,
+        |    CASE WHEN n > 1 THEN
+        |      SQRT((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / n)
+        |        * (CAST(sx AS DOUBLE) / n) * n) / (n - 1))
+        |    END AS std
+        |  FROM stats),
+        |ns AS (SELECT event_type, n, std,
+        |    round(CAST(n AS DOUBLE) * std, 6) AS nsr FROM m),
+        |tot AS (SELECT SUM(CAST(nsr AS DECIMAL(28,6))) AS tns FROM ns)
+        |SELECT event_type, n, std,
+        |  nsr / CAST(tns AS DOUBLE) AS share,
+        |  CAST(FLOOR(nsr / CAST(tns AS DOUBLE) * 1000) AS BIGINT)
+        |    AS n_alloc
+        |FROM ns, tot ORDER BY event_type""".stripMargin),
+    // hour-of-day robust baseline: seasonal median/MAD anomaly census
+    Query("q198_seasonal_anomaly", (s, d) => seasonalAnomaly(s, d),
+      // q191's chain keyed by (event_type, hour-of-day)
+      """WITH e AS (SELECT event_type,
+        |    CAST(EXTRACT(hour FROM ts) AS INTEGER) AS hod,
+        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
+        |  FROM events),
+        |med AS (SELECT event_type, hod, quantile_cont(vq, 0.5) AS med
+        |  FROM e GROUP BY event_type, hod),
+        |dev AS (SELECT e.event_type, e.hod,
+        |    ABS(CAST(vq AS DOUBLE) - med.med) AS ad
+        |  FROM e JOIN med ON e.event_type = med.event_type
+        |    AND e.hod = med.hod),
+        |mad AS (SELECT event_type, hod, COUNT(*) AS n,
+        |    quantile_cont(ad, 0.5) AS madv
+        |  FROM dev GROUP BY event_type, hod),
+        |o AS (SELECT dev.event_type, dev.hod, COUNT(*) AS n_outliers
+        |  FROM dev JOIN mad ON dev.event_type = mad.event_type
+        |    AND dev.hod = mad.hod
+        |  WHERE ad > 3.0 * mad.madv GROUP BY dev.event_type, dev.hod)
+        |SELECT med.event_type, med.hod, CAST(mad.n AS INTEGER) AS n,
+        |  med.med / 1000000.0 AS median,
+        |  mad.madv / 1000000.0 AS mad,
+        |  CAST(COALESCE(o.n_outliers, 0) AS INTEGER) AS n_outliers,
+        |  CAST(COALESCE(o.n_outliers, 0) AS DOUBLE) / mad.n
+        |    AS outlier_ratio
+        |FROM med
+        |JOIN mad ON med.event_type = mad.event_type AND med.hod = mad.hod
+        |LEFT JOIN o ON med.event_type = o.event_type AND med.hod = o.hod
+        |ORDER BY med.event_type, med.hod""".stripMargin),
+    // Welch unequal-variance t matrix — the A/B mean-difference screen
+    Query("q203_welch_pairs", (s, d) => welchPairs(s, d),
+      // q93's moment chain; the t/df algebra uses the same association
+      // order as the Spark expressions so every double is identical
+      """WITH stats AS (
+        |  SELECT event_type, COUNT(*) AS n,
+        |    SUM(CAST(value AS DECIMAL(18,4))) AS sx,
+        |    SUM(CAST(value * value AS DECIMAL(38,8))) AS sxx
+        |  FROM events GROUP BY event_type),
+        |m AS (
+        |  SELECT event_type, n,
+        |    CAST(sx AS DOUBLE) / n AS mean,
+        |    CASE WHEN n > 1 THEN
+        |      (CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / n)
+        |        * (CAST(sx AS DOUBLE) / n) * n) / (n - 1)
+        |    END AS vr
+        |  FROM stats)
+        |SELECT a.event_type AS type_a, b.event_type AS type_b,
+        |  CAST(a.n AS INTEGER) AS n_a, CAST(b.n AS INTEGER) AS n_b,
+        |  (a.mean - b.mean) / sqrt(a.vr / a.n + b.vr / b.n) AS t_stat,
+        |  (a.vr / a.n + b.vr / b.n) * (a.vr / a.n + b.vr / b.n) /
+        |    ((a.vr / a.n) * (a.vr / a.n) / (a.n - 1)
+        |      + (b.vr / b.n) * (b.vr / b.n) / (b.n - 1)) AS df
+        |FROM m a JOIN m b ON a.event_type < b.event_type
+        |ORDER BY type_a, type_b""".stripMargin),
+    // Benford first-digit audit — fabricated-amount anomaly screen
+    Query("q204_benford", (s, d) => benfordAudit(s, d), {
+      val vals = BenfordP.map { case (d, p) => s"($d, $p)" }.mkString(", ")
+      s"""WITH obs AS (SELECT CAST(substr(CAST(CAST(o_totalprice
+         |      AS DECIMAL(18,2)) AS VARCHAR), 1, 1) AS INTEGER) AS digit,
+         |    COUNT(*) AS n_obs
+         |  FROM orders GROUP BY 1),
+         |expv AS (SELECT * FROM (VALUES $vals) v(digit, p)),
+         |tot AS (SELECT SUM(n_obs) AS n FROM obs),
+         |j AS (SELECT obs.digit, obs.n_obs, n * p AS n_exp
+         |  FROM obs JOIN expv ON obs.digit = expv.digit, tot)
+         |SELECT digit, n_obs, round(n_exp, 6) AS n_exp,
+         |  round((n_obs - n_exp) * (n_obs - n_exp) / n_exp, 6) AS chi2_term
+         |FROM j ORDER BY digit""".stripMargin
+    }),
+    // PSI: reference-decile population-stability drift per event type
+    Query("q205_psi_drift", (s, d) => psiDrift(s, d), {
+      val qs = (1 until 10).map(i => i.toDouble / 10)
+      s"""WITH e AS (SELECT event_type,
+         |    CASE WHEN EXTRACT(day FROM ts) <= 15 THEN 1 ELSE 0 END AS ref,
+         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
+         |  FROM events),
+         |bnd AS (SELECT event_type,
+         |    quantile_cont(vq, [${qs.mkString(", ")}]) AS bnd
+         |  FROM e WHERE ref = 1 GROUP BY event_type),
+         |binned AS (SELECT e.event_type,
+         |    CAST(len(list_filter(bnd.bnd,
+         |      b -> CAST(vq AS DOUBLE) > b)) + 1 AS INTEGER) AS bin,
+         |    SUM(ref) AS n_ref, SUM(1 - ref) AS n_cmp
+         |  FROM e JOIN bnd ON e.event_type = bnd.event_type
+         |  GROUP BY 1, 2),
+         |tot AS (SELECT event_type, SUM(n_ref) AS tr, SUM(n_cmp) AS tc
+         |  FROM binned GROUP BY event_type),
+         |pq AS (SELECT binned.event_type, bin, n_ref, n_cmp,
+         |    (n_ref + 0.5) / (tr + 5.0) AS p,
+         |    (n_cmp + 0.5) / (tc + 5.0) AS q
+         |  FROM binned JOIN tot ON binned.event_type = tot.event_type)
+         |SELECT event_type, bin,
+         |  CAST(n_ref AS INTEGER) AS n_ref, CAST(n_cmp AS INTEGER) AS n_cmp,
+         |  round((p - q) * round(ln(p / q), 6), 9) AS psi_term
+         |FROM pq ORDER BY event_type, bin""".stripMargin
+    }),
+    // Apriori-gated support/confidence/lift over co-purchase baskets
+    Query("q206_association_rules", (s, d) => associationRules(s, d),
+      """WITH items AS (SELECT DISTINCT l_orderkey AS okey,
+        |    l_partkey AS part FROM lineitem),
+        |nb AS (SELECT CAST(COUNT(DISTINCT okey) AS DOUBLE) AS nd FROM items),
+        |supp AS (SELECT part, COUNT(*) AS cnt FROM items GROUP BY part),
+        |pairs AS (SELECT a.part AS part_a, b.part AS part_b,
+        |    COUNT(*) AS n_ab
+        |  FROM items a JOIN items b
+        |    ON a.okey = b.okey AND a.part < b.part
+        |  GROUP BY 1, 2 HAVING COUNT(*) >= 3)
+        |SELECT part_a, part_b, CAST(n_ab AS INTEGER) AS n_ab,
+        |  CAST(n_ab AS DOUBLE) / nd AS support,
+        |  CAST(n_ab AS DOUBLE) / sa.cnt AS conf_a_b,
+        |  CAST(n_ab AS DOUBLE) * nd /
+        |    CAST(sa.cnt * sb.cnt AS DOUBLE) AS lift
+        |FROM pairs
+        |JOIN supp sa ON pairs.part_a = sa.part
+        |JOIN supp sb ON pairs.part_b = sb.part, nb
+        |ORDER BY part_a, part_b""".stripMargin),
+    // tie-corrected rank-sum test, one global ranking for all types
+    Query("q208_mann_whitney", (s, d) => mannWhitney(s, d),
       """WITH e AS (SELECT event_type,
         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
         |  FROM events),
@@ -5902,8 +5396,138 @@ object Advanced {
         |  (rad - nad * (nad + 1) / 2 - nad * nbd / 2) /
         |    sqrt(nad * nbd / 12 *
         |      ((ntd + 1) - tsd / (ntd * (ntd - 1)))) AS z
-        |FROM f ORDER BY event_type""".stripMargin,
-    "q251_ks_fdr" ->
+        |FROM f ORDER BY event_type""".stripMargin),
+    // max-ECDF-gap two-sample distribution-shape test
+    Query("q209_ks_two_sample", (s, d) => ksTwoSample(s, d),
+      """WITH e AS (SELECT event_type,
+        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
+        |  FROM events WHERE event_type IN ('click', 'error')),
+        |pv AS (SELECT vq,
+        |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
+        |    SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS cb
+        |  FROM e GROUP BY vq),
+        |cum AS (SELECT vq,
+        |    SUM(ca) OVER (ORDER BY vq
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
+        |    SUM(cb) OVER (ORDER BY vq
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb
+        |  FROM pv),
+        |tot AS (SELECT MAX(cuma) AS na, MAX(cumb) AS nb FROM cum),
+        |g AS (SELECT vq, na, nb,
+        |    ABS(CAST(cuma AS DOUBLE) / na - CAST(cumb AS DOUBLE) / nb)
+        |      AS gap
+        |  FROM cum, tot),
+        |top AS (SELECT * FROM g ORDER BY gap DESC, vq LIMIT 1)
+        |SELECT CAST(na AS INTEGER) AS n_a, CAST(nb AS INTEGER) AS n_b,
+        |  gap AS d_stat, vq / 1000000.0 AS at_value,
+        |  sqrt(CAST(na AS DOUBLE) * nb / CAST(na + nb AS DOUBLE)) * gap
+        |    AS scaled_d
+        |FROM top""".stripMargin),
+    // hash-skew pre-flight: bucket loads + heavy keys, engine-neutral
+    Query("q213_skew_audit", (s, d) => skewAudit(s, d), {
+      val bkt = graft.functions.TextPrims
+        .hex60S("md5(CAST(k AS VARCHAR))") + " % 32"
+      s"""WITH keyed AS (SELECT o_custkey AS k, COUNT(*) AS cnt
+         |  FROM orders GROUP BY o_custkey),
+         |kb AS (SELECT k, cnt, CAST($bkt AS INTEGER) AS bucket FROM keyed),
+         |rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY bucket
+         |    ORDER BY cnt DESC, k) AS rk FROM kb),
+         |b AS (SELECT bucket, SUM(cnt) AS n_rows, COUNT(*) AS n_keys,
+         |    MAX(CASE WHEN rk = 1 THEN k END) AS top_key,
+         |    MAX(CASE WHEN rk = 1 THEN cnt END) AS top_key_n
+         |  FROM rk GROUP BY bucket),
+         |tot AS (SELECT SUM(n_rows) AS total FROM b)
+         |SELECT bucket, CAST(n_rows AS BIGINT) AS n_rows,
+         |  CAST(n_keys AS INTEGER) AS n_keys,
+         |  round(CAST(n_rows AS DOUBLE) * 32 / CAST(total AS DOUBLE), 6)
+         |    AS load_ratio,
+         |  top_key, CAST(top_key_n AS BIGINT) AS top_key_n
+         |FROM b, tot ORDER BY bucket""".stripMargin
+    }),
+    // stratified k-fold manifest: exact per-class balance, pure-id folds
+    Query("q214_stratified_kfold", (s, d) => stratifiedKfold(s, d), {
+      val h = graft.functions.TextPrims
+        .hex60S("md5(CAST(vec_id AS VARCHAR))")
+      s"""WITH r AS (SELECT label, vec_id,
+         |    ROW_NUMBER() OVER (PARTITION BY label
+         |      ORDER BY $h, vec_id) AS rn
+         |  FROM embeddings)
+         |SELECT label, CAST((rn - 1) % 5 AS INTEGER) AS fold,
+         |  CAST(COUNT(*) AS INTEGER) AS n
+         |FROM r GROUP BY label, (rn - 1) % 5
+         |ORDER BY label, fold""".stripMargin
+    }),
+    // cross-table FK orphan audit over every schema edge
+    Query("q218_fk_audit", (s, d) => fkAudit(s, d), {
+      val edges = Seq(
+        ("orders.o_custkey->customer", "orders", "o_custkey",
+          "customer", "c_custkey"),
+        ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
+          "orders", "o_orderkey"),
+        ("lineitem.l_partkey->part", "lineitem", "l_partkey",
+          "part", "p_partkey"),
+        ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
+          "supplier", "s_suppkey"),
+        ("customer.c_nationkey->nation", "customer", "c_nationkey",
+          "nation", "n_nationkey"),
+        ("supplier.s_nationkey->nation", "supplier", "s_nationkey",
+          "nation", "n_nationkey"),
+        ("nation.n_regionkey->region", "nation", "n_regionkey",
+          "region", "r_regionkey"))
+      edges.map { case (name, child, ck, parent, pk) =>
+        s"""SELECT '$name' AS edge,
+           |  (SELECT COUNT(*) FROM $child) AS n_child,
+           |  CAST((SELECT COUNT(DISTINCT $ck) FROM $child) AS INTEGER)
+           |    AS n_keys,
+           |  CAST((SELECT COUNT(*) FROM $child WHERE $ck IS NULL)
+           |    AS INTEGER) AS n_null_keys,
+           |  CAST((SELECT COUNT(*) FROM $child c
+           |    WHERE c.$ck IS NOT NULL AND NOT EXISTS
+           |      (SELECT 1 FROM $parent p WHERE p.$pk = c.$ck))
+           |    AS INTEGER) AS n_orphans""".stripMargin
+      }.mkString("\nUNION ALL\n") + "\nORDER BY edge"
+    }),
+    // scaler fit card: mean/std/median/IQR per column — the serving contract
+    Query("q223_scaler_fit", (s, d) => scalerFitCard(s, d), {
+      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      cols.map { c =>
+        s"""SELECT '$c' AS "column", CAST(COUNT(*) AS INTEGER) AS n,
+           |  CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE) / COUNT(*)
+           |    / 1000000.0 AS mean,
+           |  SQRT((CAST(SUM(CAST(vq AS DECIMAL(38,0)) * vq) AS DOUBLE)
+           |    - (CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE)
+           |        / COUNT(*))
+           |      * (CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE)
+           |        / COUNT(*)) * COUNT(*))
+           |    / (COUNT(*) - 1)) / 1000000.0 AS std,
+           |  quantile_cont(vq, 0.5) / 1000000.0 AS median,
+           |  (quantile_cont(vq, 0.75) - quantile_cont(vq, 0.25))
+           |    / 1000000.0 AS iqr
+           |FROM (SELECT CAST(CAST($c AS DECIMAL(18,6)) * 1000000
+           |  AS BIGINT) AS vq FROM lineitem)""".stripMargin
+      }.mkString("\nUNION ALL\n") + "\nORDER BY \"column\""
+    }),
+    // 5%-trimmed robust mean per group, exact rank cuts
+    Query("q224_trimmed_mean", (s, d) => trimmedMean(s, d),
+      """WITH e AS (SELECT event_type, event_id,
+        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
+        |  FROM events),
+        |r AS (SELECT event_type, vq,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY vq, event_id) AS rk,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM e),
+        |kept AS (SELECT event_type, vq FROM r
+        |  WHERE rk > CAST(FLOOR(n * 0.05) AS BIGINT)
+        |    AND rk <= n - CAST(FLOOR(n * 0.05) AS BIGINT))
+        |SELECT event_type, CAST(COUNT(*) AS INTEGER) AS n_kept,
+        |  CAST(SUM(CAST(vq AS DECIMAL(38,0))) AS DOUBLE) / COUNT(*)
+        |    / 1000000.0 AS trimmed_mean,
+        |  MIN(vq) / 1000000.0 AS kept_min,
+        |  MAX(vq) / 1000000.0 AS kept_max
+        |FROM kept GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // all-pairs KS + Benjamini-Hochberg FDR at q=0.05
+    Query("q251_ks_fdr", (s, d) => ksFdr(s, d),
       s"""WITH e AS (SELECT event_type,
          |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
          |  FROM events),
@@ -5927,10 +5551,53 @@ object Advanced {
          |    a.ntot AS na, b.ntot AS nb, MAX(ABS(a.fv - b.fv)) AS d
          |  FROM f a JOIN f b ON a.vq = b.vq AND a.event_type < b.event_type
          |  GROUP BY 1, 2, 3, 4),
-         |$ksTailSql""".stripMargin,
+         |$ksTailSql""".stripMargin),
+    // q251's 100-TB twin: KS on pooled percentile-boundary support
+    Query("q263_ks_fdr_binned", (s, d) => ksFdrBinned(s, d), {
+      val bins = 16
+      val qs = (1 until bins).map(i => i.toDouble / bins)
+      s"""WITH e AS (SELECT event_type,
+         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
+         |  FROM events),
+         |pv AS (SELECT event_type, vq, COUNT(*) AS n
+         |  FROM e GROUP BY event_type, vq),
+         |bnd AS (SELECT quantile_cont(vq, [${qs.mkString(", ")}]) AS bnd
+         |  FROM e),
+         |binned AS (SELECT event_type,
+         |    CAST(len(list_filter(bnd.bnd,
+         |      b -> CAST(vq AS DOUBLE) > b)) AS INTEGER) AS bin,
+         |    CAST(SUM(n) AS BIGINT) AS n
+         |  FROM pv CROSS JOIN bnd GROUP BY 1, 2),
+         |types AS (SELECT event_type, CAST(SUM(n) AS BIGINT) AS ntot
+         |  FROM pv GROUP BY event_type),
+         |ids AS (SELECT unnest(generate_series(0, ${bins - 1})) AS bin),
+         |grid AS (SELECT t.event_type, t.ntot, i.bin,
+         |    COALESCE(b.n, 0) AS n
+         |  FROM types t CROSS JOIN ids i
+         |  LEFT JOIN binned b
+         |    ON b.event_type = t.event_type AND b.bin = i.bin),
+         |cum AS (SELECT event_type, ntot, bin,
+         |    SUM(n) OVER (PARTITION BY event_type ORDER BY bin
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
+         |  FROM grid),
+         |f AS (SELECT event_type, ntot, bin + 1 AS bix,
+         |    CAST(c AS DOUBLE) / ntot AS fv
+         |  FROM cum WHERE bin <= ${bins - 2}),
+         |d AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+         |    a.ntot AS na, b.ntot AS nb, MAX(ABS(a.fv - b.fv)) AS d
+         |  FROM f a JOIN f b
+         |    ON a.bix = b.bix AND a.event_type < b.event_type
+         |  GROUP BY 1, 2, 3, 4),
+         |$ksTailSql""".stripMargin
+    }),
+    // pre-shuffle skew audit: top-key shares + normalized key entropy
+    Query("q290_key_skew_audit", (s, d) => keySkewAudit(s, d),
+      q290OracleS),
+    // pairwise binned 1-Wasserstein on per-source quality: q263's
+    // integral twin — total transport, not just the worst ECDF gap
     // q303: q263's grid machinery on (source, quality); gaps round to
     // 9 dp at the row and sum as DECIMAL(18,9) — order-independent
-    "q303_w1_binned" -> {
+    Query("q303_w1_binned", (s, d) => w1Binned(s, d), {
       val bins = 16
       val qs = (1 until bins).map(i => i.toDouble / bins)
       val qexpr = graft.text.TextOps.qualityScoreExprS
@@ -5974,415 +5641,928 @@ object Advanced {
          |  ON a.bix = b.bix AND a.source < b.source
          |GROUP BY 1, 2, 3, 4
          |ORDER BY src_a, src_b""".stripMargin
-    },
-    "q263_ks_fdr_binned" -> {
-      val bins = 16
-      val qs = (1 until bins).map(i => i.toDouble / bins)
-      s"""WITH e AS (SELECT event_type,
-         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
-         |  FROM events),
-         |pv AS (SELECT event_type, vq, COUNT(*) AS n
-         |  FROM e GROUP BY event_type, vq),
-         |bnd AS (SELECT quantile_cont(vq, [${qs.mkString(", ")}]) AS bnd
-         |  FROM e),
-         |binned AS (SELECT event_type,
-         |    CAST(len(list_filter(bnd.bnd,
-         |      b -> CAST(vq AS DOUBLE) > b)) AS INTEGER) AS bin,
-         |    CAST(SUM(n) AS BIGINT) AS n
-         |  FROM pv CROSS JOIN bnd GROUP BY 1, 2),
-         |types AS (SELECT event_type, CAST(SUM(n) AS BIGINT) AS ntot
-         |  FROM pv GROUP BY event_type),
-         |ids AS (SELECT unnest(generate_series(0, ${bins - 1})) AS bin),
-         |grid AS (SELECT t.event_type, t.ntot, i.bin,
-         |    COALESCE(b.n, 0) AS n
-         |  FROM types t CROSS JOIN ids i
-         |  LEFT JOIN binned b
-         |    ON b.event_type = t.event_type AND b.bin = i.bin),
-         |cum AS (SELECT event_type, ntot, bin,
-         |    SUM(n) OVER (PARTITION BY event_type ORDER BY bin
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-         |  FROM grid),
-         |f AS (SELECT event_type, ntot, bin + 1 AS bix,
-         |    CAST(c AS DOUBLE) / ntot AS fv
-         |  FROM cum WHERE bin <= ${bins - 2}),
-         |d AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-         |    a.ntot AS na, b.ntot AS nb, MAX(ABS(a.fv - b.fv)) AS d
-         |  FROM f a JOIN f b
-         |    ON a.bix = b.bix AND a.event_type < b.event_type
-         |  GROUP BY 1, 2, 3, 4),
-         |$ksTailSql""".stripMargin
-    },
-    "q209_ks_two_sample" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
-        |  FROM events WHERE event_type IN ('click', 'error')),
-        |pv AS (SELECT vq,
-        |    SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |    SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS cb
-        |  FROM e GROUP BY vq),
-        |cum AS (SELECT vq,
-        |    SUM(ca) OVER (ORDER BY vq
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
-        |    SUM(cb) OVER (ORDER BY vq
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb
-        |  FROM pv),
-        |tot AS (SELECT MAX(cuma) AS na, MAX(cumb) AS nb FROM cum),
-        |g AS (SELECT vq, na, nb,
-        |    ABS(CAST(cuma AS DOUBLE) / na - CAST(cumb AS DOUBLE) / nb)
-        |      AS gap
-        |  FROM cum, tot),
-        |top AS (SELECT * FROM g ORDER BY gap DESC, vq LIMIT 1)
-        |SELECT CAST(na AS INTEGER) AS n_a, CAST(nb AS INTEGER) AS n_b,
-        |  gap AS d_stat, vq / 1000000.0 AS at_value,
-        |  sqrt(CAST(na AS DOUBLE) * nb / CAST(na + nb AS DOUBLE)) * gap
-        |    AS scaled_d
-        |FROM top""".stripMargin,
-    "q206_association_rules" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS okey,
-        |    l_partkey AS part FROM lineitem),
-        |nb AS (SELECT CAST(COUNT(DISTINCT okey) AS DOUBLE) AS nd FROM items),
-        |supp AS (SELECT part, COUNT(*) AS cnt FROM items GROUP BY part),
-        |pairs AS (SELECT a.part AS part_a, b.part AS part_b,
-        |    COUNT(*) AS n_ab
-        |  FROM items a JOIN items b
-        |    ON a.okey = b.okey AND a.part < b.part
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-        |SELECT part_a, part_b, CAST(n_ab AS INTEGER) AS n_ab,
-        |  CAST(n_ab AS DOUBLE) / nd AS support,
-        |  CAST(n_ab AS DOUBLE) / sa.cnt AS conf_a_b,
-        |  CAST(n_ab AS DOUBLE) * nd /
-        |    CAST(sa.cnt * sb.cnt AS DOUBLE) AS lift
-        |FROM pairs
-        |JOIN supp sa ON pairs.part_a = sa.part
-        |JOIN supp sb ON pairs.part_b = sb.part, nb
-        |ORDER BY part_a, part_b""".stripMargin,
-    "q205_psi_drift" -> {
-      val qs = (1 until 10).map(i => i.toDouble / 10)
-      s"""WITH e AS (SELECT event_type,
-         |    CASE WHEN EXTRACT(day FROM ts) <= 15 THEN 1 ELSE 0 END AS ref,
-         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
-         |  FROM events),
-         |bnd AS (SELECT event_type,
-         |    quantile_cont(vq, [${qs.mkString(", ")}]) AS bnd
-         |  FROM e WHERE ref = 1 GROUP BY event_type),
-         |binned AS (SELECT e.event_type,
-         |    CAST(len(list_filter(bnd.bnd,
-         |      b -> CAST(vq AS DOUBLE) > b)) + 1 AS INTEGER) AS bin,
-         |    SUM(ref) AS n_ref, SUM(1 - ref) AS n_cmp
-         |  FROM e JOIN bnd ON e.event_type = bnd.event_type
-         |  GROUP BY 1, 2),
-         |tot AS (SELECT event_type, SUM(n_ref) AS tr, SUM(n_cmp) AS tc
-         |  FROM binned GROUP BY event_type),
-         |pq AS (SELECT binned.event_type, bin, n_ref, n_cmp,
-         |    (n_ref + 0.5) / (tr + 5.0) AS p,
-         |    (n_cmp + 0.5) / (tc + 5.0) AS q
-         |  FROM binned JOIN tot ON binned.event_type = tot.event_type)
-         |SELECT event_type, bin,
-         |  CAST(n_ref AS INTEGER) AS n_ref, CAST(n_cmp AS INTEGER) AS n_cmp,
-         |  round((p - q) * round(ln(p / q), 6), 9) AS psi_term
-         |FROM pq ORDER BY event_type, bin""".stripMargin
-    },
-    "q203_welch_pairs" ->
-      // q93's moment chain; the t/df algebra uses the same association
-      // order as the Spark expressions so every double is identical
-      """WITH stats AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    SUM(CAST(value AS DECIMAL(18,4))) AS sx,
-        |    SUM(CAST(value * value AS DECIMAL(38,8))) AS sxx
-        |  FROM events GROUP BY event_type),
-        |m AS (
-        |  SELECT event_type, n,
-        |    CAST(sx AS DOUBLE) / n AS mean,
-        |    CASE WHEN n > 1 THEN
-        |      (CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / n)
-        |        * (CAST(sx AS DOUBLE) / n) * n) / (n - 1)
-        |    END AS vr
-        |  FROM stats)
-        |SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |  CAST(a.n AS INTEGER) AS n_a, CAST(b.n AS INTEGER) AS n_b,
-        |  (a.mean - b.mean) / sqrt(a.vr / a.n + b.vr / b.n) AS t_stat,
-        |  (a.vr / a.n + b.vr / b.n) * (a.vr / a.n + b.vr / b.n) /
-        |    ((a.vr / a.n) * (a.vr / a.n) / (a.n - 1)
-        |      + (b.vr / b.n) * (b.vr / b.n) / (b.n - 1)) AS df
-        |FROM m a JOIN m b ON a.event_type < b.event_type
-        |ORDER BY type_a, type_b""".stripMargin,
-    "q204_benford" -> {
-      val vals = BenfordP.map { case (d, p) => s"($d, $p)" }.mkString(", ")
-      s"""WITH obs AS (SELECT CAST(substr(CAST(CAST(o_totalprice
-         |      AS DECIMAL(18,2)) AS VARCHAR), 1, 1) AS INTEGER) AS digit,
-         |    COUNT(*) AS n_obs
-         |  FROM orders GROUP BY 1),
-         |expv AS (SELECT * FROM (VALUES $vals) v(digit, p)),
-         |tot AS (SELECT SUM(n_obs) AS n FROM obs),
-         |j AS (SELECT obs.digit, obs.n_obs, n * p AS n_exp
-         |  FROM obs JOIN expv ON obs.digit = expv.digit, tot)
-         |SELECT digit, n_obs, round(n_exp, 6) AS n_exp,
-         |  round((n_obs - n_exp) * (n_obs - n_exp) / n_exp, 6) AS chi2_term
-         |FROM j ORDER BY digit""".stripMargin
-    },
-    "q198_seasonal_anomaly" ->
-      // q191's chain keyed by (event_type, hour-of-day)
-      """WITH e AS (SELECT event_type,
-        |    CAST(EXTRACT(hour FROM ts) AS INTEGER) AS hod,
-        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
-        |  FROM events),
-        |med AS (SELECT event_type, hod, quantile_cont(vq, 0.5) AS med
-        |  FROM e GROUP BY event_type, hod),
-        |dev AS (SELECT e.event_type, e.hod,
-        |    ABS(CAST(vq AS DOUBLE) - med.med) AS ad
-        |  FROM e JOIN med ON e.event_type = med.event_type
-        |    AND e.hod = med.hod),
-        |mad AS (SELECT event_type, hod, COUNT(*) AS n,
-        |    quantile_cont(ad, 0.5) AS madv
-        |  FROM dev GROUP BY event_type, hod),
-        |o AS (SELECT dev.event_type, dev.hod, COUNT(*) AS n_outliers
-        |  FROM dev JOIN mad ON dev.event_type = mad.event_type
-        |    AND dev.hod = mad.hod
-        |  WHERE ad > 3.0 * mad.madv GROUP BY dev.event_type, dev.hod)
-        |SELECT med.event_type, med.hod, CAST(mad.n AS INTEGER) AS n,
-        |  med.med / 1000000.0 AS median,
-        |  mad.madv / 1000000.0 AS mad,
-        |  CAST(COALESCE(o.n_outliers, 0) AS INTEGER) AS n_outliers,
-        |  CAST(COALESCE(o.n_outliers, 0) AS DOUBLE) / mad.n
-        |    AS outlier_ratio
-        |FROM med
-        |JOIN mad ON med.event_type = mad.event_type AND med.hod = mad.hod
-        |LEFT JOIN o ON med.event_type = o.event_type AND med.hod = o.hod
-        |ORDER BY med.event_type, med.hod""".stripMargin,
-    "q197_neyman_alloc" ->
-      // identical moment chain to q93; N·S rounds to 6dp before the
-      // decimal total so the share denominator is exact on both engines
-      """WITH stats AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    SUM(CAST(value AS DECIMAL(18,4))) AS sx,
-        |    SUM(CAST(value * value AS DECIMAL(38,8))) AS sxx
-        |  FROM events GROUP BY event_type),
-        |m AS (
-        |  SELECT event_type, n,
-        |    CASE WHEN n > 1 THEN
-        |      SQRT((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / n)
-        |        * (CAST(sx AS DOUBLE) / n) * n) / (n - 1))
-        |    END AS std
-        |  FROM stats),
-        |ns AS (SELECT event_type, n, std,
-        |    round(CAST(n AS DOUBLE) * std, 6) AS nsr FROM m),
-        |tot AS (SELECT SUM(CAST(nsr AS DECIMAL(28,6))) AS tns FROM ns)
-        |SELECT event_type, n, std,
-        |  nsr / CAST(tns AS DOUBLE) AS share,
-        |  CAST(FLOOR(nsr / CAST(tns AS DOUBLE) * 1000) AS BIGINT)
-        |    AS n_alloc
-        |FROM ns, tot ORDER BY event_type""".stripMargin,
-    "q191_mad_outliers" ->
-      // integer micro-units make every quantile_cont midpoint exactly
-      // representable == Spark percentile; outputs never re-rounded
-      """WITH e AS (SELECT event_type,
-        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
-        |  FROM events),
-        |med AS (SELECT event_type, quantile_cont(vq, 0.5) AS med
-        |  FROM e GROUP BY event_type),
-        |dev AS (SELECT e.event_type, ABS(CAST(vq AS DOUBLE) - med.med) AS ad
-        |  FROM e JOIN med ON e.event_type = med.event_type),
-        |mad AS (SELECT event_type, COUNT(*) AS n,
-        |    quantile_cont(ad, 0.5) AS madv
-        |  FROM dev GROUP BY event_type),
-        |o AS (SELECT dev.event_type, COUNT(*) AS n_outliers
-        |  FROM dev JOIN mad ON dev.event_type = mad.event_type
-        |  WHERE ad > 3.0 * mad.madv GROUP BY dev.event_type)
-        |SELECT med.event_type, CAST(mad.n AS INTEGER) AS n,
-        |  med.med / 1000000.0 AS median,
-        |  mad.madv / 1000000.0 AS mad,
-        |  CAST(COALESCE(o.n_outliers, 0) AS INTEGER) AS n_outliers,
-        |  CAST(COALESCE(o.n_outliers, 0) AS DOUBLE) / mad.n AS outlier_ratio
-        |FROM med JOIN mad ON med.event_type = mad.event_type
-        |LEFT JOIN o ON med.event_type = o.event_type
-        |ORDER BY med.event_type""".stripMargin,
-    "q93_zscore_outliers" ->
-      // moments from exact decimal sums, float math in the SAME expression
-      // tree as the Spark side — the 3-sigma boundary agrees exactly
-      """WITH stats AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    SUM(CAST(value AS DECIMAL(18,4))) AS sx,
-        |    SUM(CAST(value * value AS DECIMAL(38,8))) AS sxx
-        |  FROM events GROUP BY event_type),
-        |m AS (
-        |  SELECT event_type, n,
-        |    CAST(sx AS DOUBLE) / n AS mean,
-        |    CASE WHEN n > 1 THEN
-        |      SQRT((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / n)
-        |        * (CAST(sx AS DOUBLE) / n) * n) / (n - 1))
-        |    END AS std
-        |  FROM stats),
-        |o AS (
-        |  SELECT e.event_type, COUNT(*) AS n_outliers
-        |  FROM events e JOIN m ON e.event_type = m.event_type
-        |  WHERE m.std > 0 AND ABS((e.value - m.mean) / m.std) > 3.0
-        |  GROUP BY e.event_type)
-        |SELECT m.event_type, m.n, m.mean, m.std,
-        |  COALESCE(o.n_outliers, 0) AS n_outliers
-        |FROM m LEFT JOIN o ON m.event_type = o.event_type
-        |ORDER BY m.event_type""".stripMargin,
-    "q94_cohort_retention" ->
-      """WITH e AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |f AS (
-        |  SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id)
-        |SELECT f.cohort_day, e.day - f.cohort_day AS day_offset,
-        |  COUNT(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN f ON e.user_id = f.user_id
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-    "q95_intersect_except_all" ->
-      """WITH f AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-        |     o AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'),
-        |     ia AS (SELECT o_custkey FROM f INTERSECT ALL SELECT o_custkey FROM o),
-        |     ea AS (SELECT o_custkey FROM f EXCEPT ALL SELECT o_custkey FROM o)
-        |SELECT 'both_all' AS tag, o_custkey, COUNT(*) AS n
-        |FROM ia GROUP BY o_custkey
-        |UNION ALL
-        |SELECT 'only_f_all' AS tag, o_custkey, COUNT(*) AS n
-        |FROM ea GROUP BY o_custkey
-        |ORDER BY tag, o_custkey""".stripMargin,
-    "q96_pivot_multi_agg" ->
-      // the FILTER form IS the pivot plan: one conditional-agg pass
-      """SELECT o_orderpriority,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS F_n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-        |    FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS F_rev,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS O_n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-        |    FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS O_rev,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS P_n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-        |    FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS P_rev
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q97_centered_ma" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE)
-        |    / (COUNT(*) OVER w) AS ma5
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
-        |             ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q98_percent_of_total" ->
-      // double division on both sides — decimal/decimal scale rules differ
+    }),
+    // CUPED: pre-period covariate adjustment — the experimentation
+    // platform's variance-reduction primitive, one event scan
+    // q326: identical moment routes + closing algebra in DuckDB
+    Query("q326_cuped", (s, d) => cupedAdjust(s, d), {
+      import graft.functions.TextPrims.hex60S
+      s"""WITH pu AS (SELECT user_id,
+         |    ${hex60S("md5(CAST(user_id AS VARCHAR))")} % 2 AS variant,
+         |    CAST(SUM(CAST(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
+         |      THEN value ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) AS x,
+         |    CAST(SUM(CAST(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
+         |      THEN value ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) AS y
+         |  FROM events GROUP BY user_id),
+         |pooled AS (SELECT COUNT(*) AS n,
+         |    CAST(SUM(CAST(round(x, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sx,
+         |    CAST(SUM(CAST(round(y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sy,
+         |    CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS sxy,
+         |    CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS sxx,
+         |    CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS syy
+         |  FROM pu),
+         |pv AS (SELECT variant, COUNT(*) AS n_users,
+         |    CAST(SUM(CAST(round(x, 9) AS DECIMAL(28,9))) AS DOUBLE) AS sxv,
+         |    CAST(SUM(CAST(round(y, 9) AS DECIMAL(28,9))) AS DOUBLE) AS syv
+         |  FROM pu GROUP BY variant)
+         |SELECT pv.variant, pv.n_users,
+         |  round(pv.syv / pv.n_users, 6) AS mean_y_raw,
+         |  round(pv.syv / pv.n_users -
+         |    ((CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) /
+         |     (CAST(p.n AS DOUBLE) * p.sxx - p.sx * p.sx)) *
+         |    (pv.sxv / pv.n_users - p.sx / CAST(p.n AS DOUBLE)), 6)
+         |    AS mean_y_cuped,
+         |  round((CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) /
+         |    (CAST(p.n AS DOUBLE) * p.sxx - p.sx * p.sx), 6) AS theta,
+         |  round((CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) *
+         |    (CAST(p.n AS DOUBLE) * p.sxy - p.sx * p.sy) /
+         |    ((CAST(p.n AS DOUBLE) * p.sxx - p.sx * p.sx) *
+         |     (CAST(p.n AS DOUBLE) * p.syy - p.sy * p.sy)), 6)
+         |    AS var_reduction
+         |FROM pv CROSS JOIN pooled p
+         |ORDER BY pv.variant""".stripMargin
+    }),
+    // sweep-line peak concurrency per day: netted deltas, day-clipped
+    // segments so every window stays partitioned
+    // q329: identical clip + netted-delta sweep in DuckDB (q50's session
+    // CTE prefix verbatim)
+    Query("q329_peak_concurrency", (s, d) => peakConcurrency(s, d),
       """WITH g AS (
-        |  SELECT l_returnflag, l_linestatus,
-        |    SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT l_returnflag, l_linestatus, CAST(qty AS DOUBLE) AS qty,
-        |  CAST(qty AS DOUBLE)
-        |    / CAST(SUM(qty) OVER (PARTITION BY l_returnflag) AS DOUBLE)
-        |    AS pct_of_flag,
-        |  CAST(qty AS DOUBLE) / CAST(SUM(qty) OVER () AS DOUBLE)
-        |    AS pct_of_total
-        |FROM g ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q99_array_fingerprint" ->
-      """SELECT o_custkey,
-        |  md5(string_agg(CAST(o_orderkey AS VARCHAR), ','
-        |    ORDER BY o_orderkey)) AS orders_fp,
-        |  COUNT(*) AS n_orders
-        |FROM orders WHERE o_custkey < 100
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "q86_multi_distinct" ->
-      """SELECT l_returnflag,
-        |  COUNT(DISTINCT l_orderkey) AS n_orders,
-        |  COUNT(DISTINCT l_suppkey) AS n_suppliers,
-        |  COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q87_salted_join" ->
-      // oracle = the UNsalted join: salting must be invisible in the result
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    // INCLUDE NULLS: Spark's Dataset.unpivot RETAINS rows whose value is
-    // NULL while DuckDB's UNPIVOT excludes them by default — the synthetic
-    // metric columns happen to be non-null, but the two sides must agree by
-    // construction, not by fixture luck.
-    "q82_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, value
-        |FROM (FROM lineitem) UNPIVOT INCLUDE NULLS (value FOR metric IN
-        |  (l_quantity, l_extendedprice, l_discount, l_tax))
-        |ORDER BY l_orderkey, l_linenumber, metric, value""".stripMargin,
-    "q83_range_frame" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(COUNT(*) OVER w AS INTEGER) AS n_30d,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE)
-        |    AS rev_30d
-        |FROM (SELECT *,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS d
-        |  FROM orders)
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY d
-        |  RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q46_rollup" ->
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-        |  COALESCE(o_orderpriority, 'ALL') AS priority,
-        |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS INTEGER) AS lvl,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM orders
-        |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY lvl, status, priority""".stripMargin,
-    "q47_cube" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
-        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INTEGER) AS lvl,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY lvl, returnflag, linestatus""".stripMargin,
-    "q66_grouping_sets" ->
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-        |  COALESCE(o_orderpriority, 'ALL') AS priority,
-        |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS INTEGER) AS lvl,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-        |  (o_orderpriority), ())
-        |ORDER BY lvl, status, priority""".stripMargin,
-    "q76_funnel" ->
-      """WITH ev AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |    FROM events),
-        |tv AS (SELECT user_id, min(ts) AS tv FROM ev
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |      OR epoch_us(CAST(ts AS TIMESTAMP))
+        |        - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) > 7200000000
+        |      THEN 1 ELSE 0 END AS brk
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |s AS (
+        |  SELECT user_id, ts,
+        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS session_idx
+        |  FROM g),
+        |sess AS (SELECT user_id, session_idx,
+        |    min(epoch_us(CAST(ts AS TIMESTAMP))) AS s_us,
+        |    max(epoch_us(CAST(ts AS TIMESTAMP))) AS e_us
+        |  FROM s GROUP BY user_id, session_idx),
+        |segs AS (SELECT u AS day,
+        |    greatest(s_us, u * 86400000000) AS a,
+        |    least(e_us, (u + 1) * 86400000000 - 1) AS b
+        |  FROM sess, unnest(generate_series(s_us // 86400000000,
+        |    e_us // 86400000000)) AS t(u)),
+        |del AS (SELECT day, us, SUM(d) AS net FROM (
+        |    SELECT day, a AS us, 1 AS d FROM segs
+        |    UNION ALL SELECT day, b + 1, -1 FROM segs)
+        |  GROUP BY day, us),
+        |run AS (SELECT day, us, SUM(net) OVER (PARTITION BY day ORDER BY us
+        |    ROWS UNBOUNDED PRECEDING) AS conc FROM del),
+        |mx AS (SELECT day, us, conc,
+        |    MAX(conc) OVER (PARTITION BY day) AS m FROM run)
+        |SELECT DATE '1970-01-01' + CAST(day AS INTEGER) AS day_date,
+        |  CAST(MAX(conc) AS INTEGER) AS peak,
+        |  CAST(MIN(CASE WHEN conc = m THEN us END) AS BIGINT) AS peak_at_us
+        |FROM mx GROUP BY day ORDER BY day_date""".stripMargin),
+    // exact distinct via Spark's bitmap aggregate family — mergeable
+    // partial state, oracle = COUNT(DISTINCT)
+    // q340: the oracle is plain COUNT(DISTINCT) — the bitmap route must
+    // be EXACT, bucket plumbing and popcounts included
+    Query("q340_bitmap_distinct", bitmapDistinct _,
+      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT)
+        |    AS n_users
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // autocorrelation of the hourly volume series, lags 1..3
+    // q342: identical hourly collapse, per-lag lead pairing, and
+    // fixed-order Pearson closing algebra on exact integer sums
+    Query("q342_acf_hourly", (s, d) => acfHourly(s, d), {
+      val lagSel = (1 to 3).map { k =>
+        s"""l$k AS (SELECT event_type, $k AS lag, x,
+           |  lead(x, $k) OVER (PARTITION BY event_type ORDER BY hour) AS y
+           |  FROM hourly)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH hourly AS (
+         |  SELECT event_type,
+         |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
+         |    COUNT(*) AS x
+         |  FROM events GROUP BY 1, 2),
+         |$lagSel,
+         |u AS (SELECT * FROM l1 UNION ALL SELECT * FROM l2
+         |  UNION ALL SELECT * FROM l3),
+         |m AS (SELECT event_type, lag, COUNT(*) AS n,
+         |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
+         |    CAST(SUM(x*y) AS DOUBLE) AS sxy,
+         |    CAST(SUM(x*x) AS DOUBLE) AS sxx,
+         |    CAST(SUM(y*y) AS DOUBLE) AS syy
+         |  FROM u WHERE y IS NOT NULL GROUP BY event_type, lag)
+         |SELECT event_type, lag, CAST(n AS INTEGER) AS n_pairs,
+         |  round((CAST(n AS DOUBLE) * sxy - sx * sy)
+         |    / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
+         |         * (CAST(n AS DOUBLE) * syy - sy * sy)), 9) AS acf
+         |FROM m ORDER BY event_type, lag""".stripMargin
+    }),
+    // Spearman rank correlation with textbook tie handling
+    // q344: identical doubled fractional ranks (2·min-rank + ties − 1,
+    // integer-exact), DECIMAL(38,0) moment sums, fixed-order closing
+    Query("q344_spearman", spearmanCorr _,
+      """WITH r AS (
+        |  SELECT l_returnflag,
+        |    2*rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
+        |      + COUNT(*) OVER (PARTITION BY l_returnflag, l_quantity)
+        |      - 1 AS rx,
+        |    2*rank() OVER (PARTITION BY l_returnflag
+        |        ORDER BY l_extendedprice)
+        |      + COUNT(*) OVER (PARTITION BY l_returnflag, l_extendedprice)
+        |      - 1 AS ry
+        |  FROM lineitem),
+        |m AS (SELECT l_returnflag, COUNT(*) AS n,
+        |    CAST(SUM(CAST(rx AS DECIMAL(38,0))) AS DOUBLE) AS sx,
+        |    CAST(SUM(CAST(ry AS DECIMAL(38,0))) AS DOUBLE) AS sy,
+        |    CAST(SUM(CAST(rx AS DECIMAL(38,0)) * CAST(ry AS DECIMAL(38,0)))
+        |      AS DOUBLE) AS sxy,
+        |    CAST(SUM(CAST(rx AS DECIMAL(38,0)) * CAST(rx AS DECIMAL(38,0)))
+        |      AS DOUBLE) AS sxx,
+        |    CAST(SUM(CAST(ry AS DECIMAL(38,0)) * CAST(ry AS DECIMAL(38,0)))
+        |      AS DOUBLE) AS syy
+        |  FROM r GROUP BY l_returnflag)
+        |SELECT l_returnflag, CAST(n AS INTEGER) AS n_rows,
+        |  round((CAST(n AS DOUBLE) * sxy - sx * sy)
+        |    / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
+        |     * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)), 9)
+        |    AS spearman_rho
+        |FROM m ORDER BY l_returnflag""".stripMargin),
+    // try_cast safe-parse ingestion audit over deterministic mess
+    // q345: the same deterministic mess through DuckDB's TRY_CAST —
+    // agreement certifies trim/empty/sentinel/exponent semantics. The
+    // engines' double→string renderings may differ in style, but both
+    // round-trip to the identical double, which is all the sum sees.
+    Query("q345_try_cast", tryCastAudit _,
+      """WITH b AS (
+        |  SELECT o_orderkey % 5 AS cls,
+        |    CASE o_orderkey % 5
+        |      WHEN 0 THEN CAST(o_totalprice AS VARCHAR)
+        |      WHEN 1 THEN '  ' || CAST(o_totalprice AS VARCHAR) || '  '
+        |      WHEN 2 THEN 'N/A'
+        |      WHEN 3 THEN ''
+        |      ELSE CAST(o_orderkey % 97 AS VARCHAR) || 'e2'
+        |    END AS raw
+        |  FROM orders),
+        |p AS (SELECT cls, TRY_CAST(raw AS DOUBLE) AS v FROM b)
+        |SELECT CAST(cls AS INTEGER) AS cls,
+        |  CAST(COUNT(*) AS INTEGER) AS n,
+        |  CAST(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS INTEGER)
+        |    AS n_parsed,
+        |  CAST(SUM(CAST(COALESCE(v, 0.0) AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_parsed
+        |FROM p GROUP BY cls ORDER BY cls""".stripMargin),
+    // ISO-SQL listagg WITHIN GROUP (Spark 4) vs DuckDB string_agg
+    // q346: DuckDB spells WITHIN GROUP as string_agg(… ORDER BY …);
+    // byte-identical rosters certify the ordered concatenation
+    Query("q346_listagg", listaggSuppliers _,
+      """SELECT n_name, CAST(COUNT(*) AS INTEGER) AS n_suppliers,
+        |  string_agg(s_name, ',' ORDER BY s_name) AS roster
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    // ordered three-step conversion funnel with exact-micros latencies
+    // q348: the identical three-step conditional-min chain in DuckDB
+    // (epoch_us route, integer gap sums, fixed-order closing division)
+    Query("q348_event_funnel", eventFunnel _,
+      """WITH ev AS (SELECT user_id, event_type,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
+        |v AS (SELECT user_id, min(us) AS t1 FROM ev
         |  WHERE event_type = 'view' GROUP BY user_id),
-        |tc AS (SELECT e.user_id, min(e.ts) AS tc FROM ev e
-        |  JOIN tv ON e.user_id = tv.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > tv.tv GROUP BY e.user_id),
-        |tp AS (SELECT e.user_id, min(e.ts) AS tp FROM ev e
-        |  JOIN tc ON e.user_id = tc.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > tc.tc GROUP BY e.user_id)
-        |SELECT 1 AS stage, 'view' AS step,
-        |  CAST(count(*) AS INTEGER) AS n_users FROM tv
-        |UNION ALL SELECT 2, 'click', CAST(count(*) AS INTEGER) FROM tc
-        |UNION ALL SELECT 3, 'purchase', CAST(count(*) AS INTEGER) FROM tp
-        |ORDER BY stage""".stripMargin,
-    "q48_asof_join" ->
-      """WITH clicks AS (SELECT event_id, user_id, ts FROM events
-        |    WHERE event_type = 'click'),
-        |  errors AS (SELECT user_id, ts FROM events WHERE event_type = 'error')
-        |SELECT c.event_id, c.user_id,
-        |  CAST(epoch_us(CAST(c.ts AS TIMESTAMP))
-        |    - epoch_us(CAST(e.ts AS TIMESTAMP)) AS DOUBLE) / 1e6 AS asof_gap_s
-        |FROM clicks c ASOF LEFT JOIN errors e
-        |  ON c.user_id = e.user_id AND e.ts <= c.ts
-        |ORDER BY event_id""".stripMargin,
-    "q49_range_join" ->
-      """SELECT a.user_id AS user_id, a.event_id AS event_a, b.event_id AS event_b,
-        |  CAST(epoch_us(CAST(b.ts AS TIMESTAMP))
-        |    - epoch_us(CAST(a.ts AS TIMESTAMP)) AS DOUBLE) / 1e6 AS gap_s
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        |  AND abs(epoch_us(CAST(a.ts AS TIMESTAMP))
-        |        - epoch_us(CAST(b.ts AS TIMESTAMP))) <= 3600000000
-        |ORDER BY user_id, event_a, event_b""".stripMargin,
-    "q50_sessionize_batch" ->
-      """WITH g AS (
+        |c AS (SELECT e.user_id, min(e.us) AS t2, max(v.t1) AS t1
+        |  FROM ev e JOIN v ON v.user_id = e.user_id
+        |  WHERE e.event_type = 'click' AND e.us > v.t1
+        |  GROUP BY e.user_id),
+        |p AS (SELECT e.user_id, min(e.us) AS t3, max(c.t2) AS t2
+        |  FROM ev e JOIN c ON c.user_id = e.user_id
+        |  WHERE e.event_type = 'purchase' AND e.us > c.t2
+        |  GROUP BY e.user_id),
+        |s1 AS (SELECT 1 AS step, 'view' AS event,
+        |    CAST(COUNT(*) AS INTEGER) AS n_users, CAST(0 AS BIGINT)
+        |    AS gap_us FROM v),
+        |s2 AS (SELECT 2, 'click_after_view', CAST(COUNT(*) AS INTEGER),
+        |    CAST(COALESCE(SUM(t2 - t1), 0) AS BIGINT) FROM c),
+        |s3 AS (SELECT 3, 'purchase_after_click',
+        |    CAST(COUNT(*) AS INTEGER),
+        |    CAST(COALESCE(SUM(t3 - t2), 0) AS BIGINT) FROM p),
+        |u AS (SELECT * FROM s1 UNION ALL SELECT * FROM s2
+        |  UNION ALL SELECT * FROM s3)
+        |SELECT step, event, n_users,
+        |  round(CAST(gap_us AS DOUBLE)
+        |    / CAST(greatest(n_users, 1) AS DOUBLE) / 1e6, 6)
+        |    AS avg_gap_sec
+        |FROM u ORDER BY step""".stripMargin),
+    // runtime bloom-filter join pruning (InjectRuntimeFilter)
+    // q343: the honest join — the runtime bloom filter may only prune
+    // rows the join would drop anyway
+    Query("q343_runtime_filter", runtimeFilterJoin _,
+      """SELECT o_orderpriority, COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_price,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderstatus = 'F' AND o_totalprice > 150000.0
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // LOCF gap fill over a dense calendar spine, per-day census
+    // q351: the identical spine + IGNORE-NULLS carry in DuckDB
+    Query("q351_locf_gapfill", locfGapFill _,
+      """WITH daily AS (SELECT user_id,
+        |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS v
+        |  FROM events GROUP BY 1, 2),
+        |b AS (SELECT min(day) AS lo, max(day) AS hi FROM daily),
+        |spine AS (SELECT u.user_id, d.day
+        |  FROM (SELECT DISTINCT user_id FROM daily) u
+        |  CROSS JOIN (SELECT CAST(unnest(generate_series(CAST(lo AS
+        |      TIMESTAMP), CAST(hi AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE)
+        |      AS day FROM b) d),
+        |f AS (SELECT s.user_id, s.day, daily.v,
+        |    last_value(daily.v IGNORE NULLS) OVER (
+        |      PARTITION BY s.user_id ORDER BY s.day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
+        |  FROM spine s LEFT JOIN daily
+        |    ON daily.user_id = s.user_id AND daily.day = s.day)
+        |SELECT day,
+        |  CAST(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS INTEGER)
+        |    AS n_observed,
+        |  CAST(SUM(CASE WHEN v IS NULL AND filled IS NOT NULL THEN 1
+        |    ELSE 0 END) AS INTEGER) AS n_carried,
+        |  CAST(SUM(CASE WHEN filled IS NULL THEN 1 ELSE 0 END) AS INTEGER)
+        |    AS n_empty,
+        |  CAST(SUM(CAST(COALESCE(filled, 0.0) AS DECIMAL(18,4)))
+        |    AS DOUBLE) AS sum_filled
+        |FROM f GROUP BY day ORDER BY day""".stripMargin),
+    // 25-row dimension as a map literal: no join operator in the plan
+    // q352: the honest join the map literal replaces (q79's rollup)
+    Query("q352_map_lookup", mapLookupDimension _,
+      """SELECT n_name,
+        |  CAST(count(*) AS INTEGER) AS n_cust,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_acctbal
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    // materialized-view delta merge vs from-scratch recompute
+    // q354: the from-scratch recompute the incremental merge must equal
+    Query("q354_incremental_view", incrementalViewMaintenance _,
+      """SELECT o_orderstatus, COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_price
+        |FROM orders GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""".stripMargin),
+    // 2-D skyline: collapse + strictly-greater prefix-min window
+    // q356: identical collapse + strictly-greater prefix-min skyline
+    Query("q356_pareto_frontier", paretoFrontier _,
+      """WITH g AS (SELECT l_returnflag, l_quantity,
+        |    min(l_extendedprice) AS min_price, COUNT(*) AS n_at_qty
+        |  FROM lineitem GROUP BY 1, 2),
+        |w AS (SELECT *, min(min_price) OVER (PARTITION BY l_returnflag
+        |    ORDER BY l_quantity DESC
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |    AS best_higher FROM g)
+        |SELECT l_returnflag, l_quantity, min_price,
+        |  CAST(n_at_qty AS INTEGER) AS n_at_qty
+        |FROM w WHERE best_higher IS NULL OR min_price < best_higher
+        |ORDER BY l_returnflag, l_quantity DESC""".stripMargin),
+    // GDPR crypto-shredding: per-user keys, erase = drop key row,
+    // audit via try_aes_decrypt; decrypted sums must match the oracle
+    // q358: the erasure predicate in the clear — readable rows are
+    // exactly the non-shredded users', and their values sum identically
+    Query("q358_crypto_shred", cryptoShred _,
+      """SELECT event_type, CAST(COUNT(*) AS INTEGER) AS n,
+        |  CAST(SUM(CASE WHEN user_id % 7 <> 0 THEN 1 ELSE 0 END)
+        |    AS INTEGER) AS n_readable,
+        |  CAST(SUM(CAST(CASE WHEN user_id % 7 <> 0 THEN value
+        |    ELSE 0.0 END AS DECIMAL(18,4))) AS DOUBLE) AS sum_readable
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // exact rolling 24h distinct users via mergeable hourly bitmaps
+    // q359: brute-force per-window re-scan — the mergeable bitmap route
+    // must be EXACTLY this
+    Query("q359_sliding_distinct", slidingDistinct _,
+      """WITH hrs AS (SELECT DISTINCT
+        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h FROM events),
+        |w AS (SELECT hrs.h, e.user_id FROM hrs JOIN events e
+        |  ON date_trunc('hour', CAST(e.ts AS TIMESTAMP)) <= hrs.h
+        | AND date_trunc('hour', CAST(e.ts AS TIMESTAMP))
+        |     > hrs.h - INTERVAL 24 HOURS)
+        |SELECT h AS hour, CAST(COUNT(DISTINCT user_id) AS BIGINT)
+        |    AS n_users
+        |FROM w GROUP BY h ORDER BY h""".stripMargin),
+    // TPC-H Q5: the 6-table star join, facts shuffle, dims broadcast
+    // q360: TPC-H Q5 verbatim (date bounds as timestamps, 9-dp row
+    // rounding into DECIMAL(28,9) for the revenue sum)
+    Query("q360_tpch_q5", tpchQ5 _,
+      """SELECT n_name, CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |  AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY n_name
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    // time-weighted average: piecewise-constant hold, exact decimal×us
+    // q362: identical lead pairing, DECIMAL(18,4)×BIGINT products,
+    // 9-dp close, decile rollup
+    Query("q362_twap", twapByUser _,
+      """WITH e AS (SELECT user_id, event_id,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+        |    CAST(value AS DECIMAL(18,4)) AS v FROM events),
+        |st AS (SELECT user_id, v,
+        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
+        |      - us AS dt
+        |  FROM e),
+        |pu AS (SELECT user_id,
+        |    round(CAST(SUM(v * dt) AS DOUBLE)
+        |      / CAST(SUM(dt) AS DOUBLE), 9) AS twa
+        |  FROM st WHERE dt IS NOT NULL GROUP BY user_id)
+        |SELECT user_id % 10 AS decile,
+        |  CAST(COUNT(*) AS INTEGER) AS n_users,
+        |  CAST(SUM(CAST(round(twa, 9) AS DECIMAL(28,9))) AS DOUBLE)
+        |    AS sum_twa
+        |FROM pu GROUP BY decile ORDER BY decile""".stripMargin),
+    // order-independent result certificate: count + xor + modular sum
+    // q365: same integer-rendition row keys, same three reducers
+    Query("q365_result_fingerprint", resultFingerprint _, {
+      val hS = graft.functions.TextPrims.hex60S(
+        "md5(CAST(l_orderkey AS VARCHAR) || '|' || " +
+          "CAST(l_linenumber AS VARCHAR) || '|' || " +
+          "CAST(CAST(round(l_quantity * 10000) AS BIGINT) AS VARCHAR) " +
+          "|| '|' || l_returnflag)")
+      s"""WITH h AS (SELECT $hS AS h FROM lineitem)
+         |SELECT COUNT(*) AS n_rows, bit_xor(h) AS xor_fp,
+         |  CAST(CAST(SUM(CAST(h % 1000000007 AS DECIMAL(38,0)))
+         |    AS HUGEINT) % 1000000007 AS BIGINT) AS sum_fp
+         |FROM h""".stripMargin
+    }),
+    // orphan-FK census across the star schema (null-safe anti joins)
+    // q366: per-edge left-join census (parent keys unique, so the
+    // join never multiplies); NULL keys counted apart from orphans
+    Query("q366_referential_audit", referentialAudit _, {
+      def edge(name: String, child: String, key: String,
+               parent: String, pkey: String) =
+        s"""SELECT '$name' AS edge, COUNT(*) AS n_child,
+           |  CAST(SUM(CASE WHEN c.$key IS NULL THEN 1 ELSE 0 END)
+           |    AS INTEGER) AS n_null_key,
+           |  CAST(SUM(CASE WHEN c.$key IS NOT NULL AND p.$pkey IS NULL
+           |    THEN 1 ELSE 0 END) AS INTEGER) AS n_orphan
+           |FROM $child c LEFT JOIN $parent p ON c.$key = p.$pkey""".stripMargin
+      Seq(
+        edge("lineitem->orders", "lineitem", "l_orderkey",
+          "orders", "o_orderkey"),
+        edge("orders->customer", "orders", "o_custkey",
+          "customer", "c_custkey"),
+        edge("customer->nation", "customer", "c_nationkey",
+          "nation", "n_nationkey"),
+        edge("supplier->nation", "supplier", "s_nationkey",
+          "nation", "n_nationkey"))
+        .mkString("", "\nUNION ALL\n", "\nORDER BY edge")
+    }),
+    // in-plan calendar spine with integer calendar attributes
+    // q367: generate_series spine + part extracts (DuckDB dow is
+    // 0=Sunday — +1 aligns with Spark's 1=Sunday)
+    Query("q367_calendar_dim", calendarDim _,
+      """WITH b AS (SELECT CAST(min(o_orderdate) AS DATE) AS lo,
+        |    CAST(max(o_orderdate) AS DATE) AS hi FROM orders),
+        |d AS (SELECT CAST(unnest(generate_series(
+        |    CAST(lo AS TIMESTAMP), CAST(hi AS TIMESTAMP),
+        |    INTERVAL 1 DAY)) AS DATE) AS day FROM b)
+        |SELECT day, CAST(dayofweek(day) + 1 AS INTEGER) AS dow,
+        |  CAST(month(day) AS INTEGER) AS month,
+        |  CAST(quarter(day) AS INTEGER) AS quarter,
+        |  CAST(weekofyear(day) AS INTEGER) AS iso_week,
+        |  CAST(day = last_day(day) AS INTEGER) AS is_month_end
+        |FROM d ORDER BY day""".stripMargin),
+    // one-pass latest-record-per-key via max_by (vs rank-window oracle)
+    // q368: the rank-window detour as the oracle — the engine's
+    // one-pass max_by must equal it
+    Query("q368_latest_per_key", latestPerUser _,
+      """WITH e AS (SELECT user_id,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id,
+        |    event_type, value FROM events),
+        |r AS (SELECT user_id, event_type, value, us,
+        |    COUNT(*) OVER (PARTITION BY user_id) AS n_events,
+        |    row_number() OVER (PARTITION BY user_id
+        |      ORDER BY us DESC, event_id DESC) AS rk
+        |  FROM e)
+        |SELECT user_id, CAST(n_events AS INTEGER) AS n_events,
+        |  event_type AS last_type, value AS last_value, us AS last_us
+        |FROM r WHERE rk = 1 ORDER BY user_id""".stripMargin),
+    // unionByName allowMissingColumns: by-name alignment + null fill
+    // q369: explicit NULL-padded UNION ALL mirror of unionByName
+    Query("q369_schema_union", schemaEvolvingUnion _,
+      """WITH g1 AS (SELECT event_id, event_type,
+        |    CAST(NULL AS DECIMAL(18,4)) AS value,
+        |    CAST(NULL AS BIGINT) AS score, 1 AS gen
+        |  FROM events WHERE event_id % 2 = 0),
+        |g2 AS (SELECT event_id, event_type,
+        |    CAST(value AS DECIMAL(18,4)) AS value,
+        |    event_id % 100 AS score, 2 AS gen
+        |  FROM events WHERE event_id % 2 = 1),
+        |u AS (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
+        |SELECT gen, event_type, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN score IS NOT NULL THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_scored,
+        |  CAST(SUM(COALESCE(value, 0)) AS DOUBLE) AS sum_value
+        |FROM u GROUP BY gen, event_type
+        |ORDER BY gen, event_type""".stripMargin),
+    // null-safe equality join: NULL keys match, still an equi hash join
+    // q370: IS NOT DISTINCT FROM — the null bucket must MATCH
+    Query("q370_nullsafe_join", nullSafeJoin _,
+      """WITH a AS (SELECT NULLIF(o_orderkey % 97, 0) AS k, COUNT(*)
+        |    AS na FROM orders GROUP BY 1),
+        |b AS (SELECT NULLIF(l_orderkey % 97, 0) AS k, COUNT(*) AS nb
+        |  FROM lineitem GROUP BY 1)
+        |SELECT CASE WHEN a.k IS NULL THEN 'null-bucket'
+        |    ELSE 'valued' END AS bucket,
+        |  CAST(COUNT(*) AS INTEGER) AS n_keys,
+        |  CAST(SUM(na * nb) AS BIGINT) AS n_pairs
+        |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
+        |GROUP BY bucket ORDER BY bucket""".stripMargin),
+    // TPC-H Q7: nation joined twice, post-join direction disjunction
+    // q372: TPC-H Q7 verbatim (nation aliased twice, post-join
+    // direction disjunction, ship-year grouping)
+    Query("q372_tpch_q7", tpchQ7 _,
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |  CAST(year(l_shipdate) AS INTEGER) AS l_year,
+        |  CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
+        |FROM supplier
+        |JOIN lineitem ON s_suppkey = l_suppkey
+        |JOIN orders ON o_orderkey = l_orderkey
+        |JOIN customer ON c_custkey = o_custkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01'
+        |GROUP BY 1, 2, 3
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+    // TPC-H Q8: conditional-aggregate market share in one pass
+    // q373: TPC-H Q8 verbatim — CASE'd numerator over the same pass,
+    // exact decimal sums divided in double at the very end
+    Query("q373_tpch_q8", tpchQ8 _,
+      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
+        |  CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  round(CAST(SUM(CASE WHEN n2.n_name = 'NATION_2'
+        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |        AS DECIMAL(28,9))
+        |      ELSE CAST(0 AS DECIMAL(28,9)) END) AS DOUBLE)
+        |    / CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |        AS DECIMAL(28,9))) AS DOUBLE), 9) AS mkt_share
+        |FROM part
+        |JOIN lineitem ON p_partkey = l_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        |JOIN region ON n1.n_regionkey = r_regionkey
+        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        |WHERE p_type = 'ECONOMY' AND r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |GROUP BY 1
+        |ORDER BY o_year""".stripMargin),
+    // TPC-H Q10: early-pruned fact-fact join, global top-20
+    // q374: TPC-H Q10 verbatim (quarter window, returnflag R, top 20
+    // by revenue with custkey tiebreak)
+    Query("q374_tpch_q10", tpchQ10 _,
+      """SELECT c_custkey, c_name, n_name,
+        |  CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01'
+        |GROUP BY 1, 2, 3
+        |ORDER BY revenue DESC, c_custkey
+        |LIMIT 20""".stripMargin),
+    // TPC-H Q14: promo revenue share, one conditional-agg pass
+    // q375: TPC-H Q14 verbatim — one conditional aggregate pass
+    Query("q375_tpch_q14", tpchQ14 _,
+      """SELECT CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  round(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
+        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |        AS DECIMAL(28,9))
+        |      ELSE CAST(0 AS DECIMAL(28,9)) END) AS DOUBLE)
+        |    / CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |        AS DECIMAL(28,9))) AS DOUBLE), 9) AS promo_revenue_pct
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-09-01'
+        |  AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin),
+    // TPC-H Q18: aggregate-HAVING-then-rejoin large-volume customers
+    // q376: TPC-H Q18 verbatim — aggregate-HAVING before any join
+    Query("q376_tpch_q18", tpchQ18 _,
+      """WITH q AS (
+        |  SELECT l_orderkey,
+        |    SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty_d
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 250)
+        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+        |  CAST(qty_d AS DOUBLE) AS total_qty
+        |FROM q
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY qty_d DESC, o_orderkey
+        |LIMIT 20""".stripMargin),
+    // TPC-H Q19: mixed-table OR-of-ANDs disjunctive predicate
+    // q377: TPC-H Q19 verbatim — the mixed-table OR-of-ANDs disjunction
+    Query("q377_tpch_q19", tpchQ19 _,
+      """SELECT CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  CAST(SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |    AS DECIMAL(28,9))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+        |    AND l_quantity BETWEEN 1 AND 11)
+        |  OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+        |    AND l_quantity BETWEEN 10 AND 20)
+        |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
+        |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
+    // Spark 4 VARIANT: render -> parse_json shred -> typed variant_get
+    // q379: the oracle computes DIRECTLY from columns — variant render/
+    // shred/extract must be lossless, so the two must agree
+    Query("q379_variant_extract", variantExtract _,
+      """SELECT o_orderpriority AS seg,
+        |  CAST(COUNT(*) AS INTEGER) AS n,
+        |  CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS sum_cents,
+        |  CAST(SUM(o_orderkey % 97) AS BIGINT) AS sum_k97,
+        |  CAST(SUM(o_orderkey % 1009) AS BIGINT) AS id_fold,
+        |  CAST(SUM(0) AS INTEGER) AS n_phantom
+        |FROM orders GROUP BY 1 ORDER BY seg""".stripMargin),
+    // mergeable histogram-quantile sketch + exact interpolated twin
+    // q380: identical bin/CDF/interpolation arithmetic; exact twin via
+    // quantile_cont (the q54-verified percentile mapping)
+    Query("q380_hist_quantiles", (s, d) => histQuantiles(s, d), {
+      def estS(q: String, alias: String) =
+        s"""round(MAX(CASE WHEN cum0 < $q * n AND cum0 + c >= $q * n
+           |  THEN lo + (bin + ($q * n - cum0) / c) * w END), 6)
+           |  AS $alias""".stripMargin
+      s"""WITH li AS (SELECT l_returnflag AS flag, l_extendedprice AS x
+         |  FROM lineitem),
+         |b AS (SELECT min(x) AS lo, max(x) AS hi FROM li),
+         |binned AS (SELECT flag,
+         |    CAST(least(floor((x - lo) / ((hi - lo) / 64)), 63)
+         |      AS INTEGER) AS bin,
+         |    COUNT(*) AS c, MAX((hi - lo) / 64) AS w, MAX(lo) AS lo
+         |  FROM li CROSS JOIN b GROUP BY 1, 2),
+         |cdf AS (SELECT flag, bin, c, w, lo,
+         |    COALESCE(SUM(c) OVER (PARTITION BY flag ORDER BY bin
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS cum0,
+         |    SUM(c) OVER (PARTITION BY flag) AS n
+         |  FROM binned),
+         |sk AS (SELECT flag, MAX(n) AS n,
+         |    ${estS("0.5", "est_p50")},
+         |    ${estS("0.9", "est_p90")},
+         |    ${estS("0.99", "est_p99")}
+         |  FROM cdf GROUP BY flag),
+         |ex AS (SELECT flag,
+         |    round(quantile_cont(x, 0.5), 6) AS exact_p50,
+         |    round(quantile_cont(x, 0.9), 6) AS exact_p90,
+         |    round(quantile_cont(x, 0.99), 6) AS exact_p99
+         |  FROM li GROUP BY flag)
+         |SELECT sk.flag, CAST(n AS INTEGER) AS n,
+         |  est_p50, est_p90, est_p99, exact_p50, exact_p90, exact_p99
+         |FROM sk JOIN ex ON sk.flag = ex.flag
+         |ORDER BY sk.flag""".stripMargin
+    }),
+    // hash-deterministic bootstrap CI: 60 half-samples from one md5/row
+    // q384: same one-md5-per-row bit-membership, same 60 conditional
+    // decimal sums, same bounded replica-mean percentile
+    Query("q384_bootstrap_ci", (s, d) => bootstrapCi(s, d), {
+      val b = 60
+      val h = graft.functions.TextPrims.hex60S(
+        "md5(CAST(o_orderkey AS VARCHAR))")
+      val sums = (0 until b).map(i =>
+        s"""CAST(SUM(CASE WHEN (h >> $i) & 1 = 1
+           |  THEN CAST(x AS DECIMAL(18,4)) END) AS DOUBLE) AS s$i,
+           |SUM(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE 0 END) AS c$i"""
+          .stripMargin).mkString(",\n")
+      val ms = (0 until b).map(i => s"s$i / c$i").mkString(", ")
+      s"""WITH base AS (SELECT o_orderstatus AS flag, o_totalprice AS x,
+         |    $h AS h FROM orders),
+         |w AS (SELECT flag, COUNT(*) AS n,
+         |    CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
+         |      AS full_mean,
+         |$sums
+         |  FROM base GROUP BY flag),
+         |m AS (SELECT flag, n, full_mean, unnest([$ms]) AS m FROM w)
+         |SELECT flag, CAST(n AS INTEGER) AS n,
+         |  round(full_mean, 6) AS full_mean,
+         |  round(quantile_cont(m, 0.05), 6) AS boot_p05,
+         |  round(quantile_cont(m, 0.95), 6) AS boot_p95
+         |FROM m GROUP BY flag, n, full_mean ORDER BY flag""".stripMargin
+    }),
+    // robust stats: exact MAD, 3-MAD outlier census, winsorized mean
+    // q385: same two-pass percentile chain (median -> MAD), same
+    // branch-free winsor clip, decimal-routed sums
+    Query("q385_robust_stats", robustStats _,
+      """WITH b AS (SELECT o_orderstatus AS flag, o_totalprice AS x
+        |  FROM orders),
+        |m AS (SELECT flag, quantile_cont(x, 0.5) AS med,
+        |    quantile_cont(x, 0.05) AS p05,
+        |    quantile_cont(x, 0.95) AS p95
+        |  FROM b GROUP BY flag),
+        |d AS (SELECT b.flag, x, med, p05, p95 FROM b JOIN m USING (flag)),
+        |md AS (SELECT flag, quantile_cont(abs(x - med), 0.5) AS mad
+        |  FROM d GROUP BY flag)
+        |SELECT d.flag, CAST(COUNT(*) AS INTEGER) AS n,
+        |  round(MAX(med), 6) AS median, round(MAX(mad), 6) AS mad,
+        |  CAST(SUM(CASE WHEN abs(x - med) > 3.0 * mad THEN 1 ELSE 0 END)
+        |    AS INTEGER) AS n_outlier,
+        |  round(CAST(SUM(CAST(greatest(least(x, p95), p05)
+        |      AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 6) AS winsor_mean
+        |FROM d JOIN md ON d.flag = md.flag
+        |GROUP BY d.flag ORDER BY d.flag""".stripMargin),
+    // integer-exact CUSUM changepoint scan over daily volumes
+    // q386: same integer-scaled CUSUM (nd*cum - t*total — no fractional
+    // mean ever forms), same earlier-day tie-break
+    Query("q386_cusum_changepoint", cusumChangepoint _,
+      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+        |    COUNT(*) AS x FROM events GROUP BY 1, 2),
+        |sc AS (SELECT event_type, day, x,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
+        |      AS t,
+        |    SUM(x) OVER (PARTITION BY event_type ORDER BY day) AS cum,
+        |    SUM(x) OVER (PARTITION BY event_type) AS total,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS nd
+        |  FROM daily),
+        |s2 AS (SELECT event_type, day,
+        |    CAST(nd * cum - t * total AS BIGINT) AS sc
+        |  FROM sc),
+        |pick AS (SELECT event_type, day AS change_day,
+        |    sc AS cusum_scaled FROM (SELECT *, ROW_NUMBER() OVER (
+        |      PARTITION BY event_type ORDER BY abs(sc) DESC, day) AS rn
+        |    FROM s2) WHERE rn = 1)
+        |SELECT d.event_type, MAX(change_day) AS change_day,
+        |  MAX(cusum_scaled) AS cusum_scaled,
+        |  CAST(COUNT(*) AS INTEGER) AS n_days,
+        |  round(CAST(SUM(CASE WHEN day <= change_day THEN x END)
+        |      AS DOUBLE)
+        |    / SUM(CASE WHEN day <= change_day THEN 1 ELSE 0 END), 6)
+        |    AS mean_before,
+        |  round(CAST(SUM(CASE WHEN day > change_day THEN x END)
+        |      AS DOUBLE)
+        |    / SUM(CASE WHEN day > change_day THEN 1 ELSE 0 END), 6)
+        |    AS mean_after
+        |FROM daily d JOIN pick USING (event_type)
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin),
+    // Gini concentration + top-decile share, integer-exact rank moment
+    // q388: same cents-integer revenue, same DECIMAL(38,0)
+    // cast-before-multiply rank moment, same floor(9n/10) decile cut
+    Query("q388_gini_concentration", giniConcentration _,
+      """WITH rev AS (SELECT o_custkey,
+        |    SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+        |  FROM orders GROUP BY 1),
+        |r AS (SELECT cents,
+        |    ROW_NUMBER() OVER (ORDER BY cents, o_custkey) AS i,
+        |    COUNT(*) OVER () AS nt
+        |  FROM rev),
+        |a AS (SELECT COUNT(*) AS n,
+        |    CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0))
+        |      AS tot,
+        |    CAST(SUM(CAST(i AS DECIMAL(38,0))
+        |      * CAST(cents AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS iwx,
+        |    CAST(SUM(CASE WHEN i > (nt * 9) // 10
+        |      THEN CAST(cents AS DECIMAL(38,0)) END) AS DECIMAL(38,0))
+        |      AS top_dec
+        |  FROM r)
+        |SELECT CAST(n AS INTEGER) AS n_customers,
+        |  round(2.0 * CAST(iwx AS DOUBLE)
+        |      / (CAST(n AS DOUBLE) * CAST(tot AS DOUBLE))
+        |    - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE), 9) AS gini,
+        |  round(CAST(top_dec AS DOUBLE) / CAST(tot AS DOUBLE), 9)
+        |    AS top_decile_share
+        |FROM a""".stripMargin),
+    // TPC-H Q21: triple-correlated EXISTS/NOT-EXISTS decorrelated to
+    // one lineitem scan + two shrinking aggregates
+    // q390: the GENUINELY CORRELATED Q21 form — DuckDB decorrelates
+    // its own way; agreement certifies the engine's one-pass
+    // aggregate rewrite, not just the arithmetic
+    Query("q390_tpch_q21", tpchQ21 _,
+      """SELECT s_name, CAST(COUNT(*) AS INTEGER) AS numwait
+        |FROM supplier, lineitem l1, orders, nation
+        |WHERE s_suppkey = l1.l_suppkey
+        |  AND o_orderkey = l1.l_orderkey
+        |  AND o_orderstatus = 'F'
+        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |    WHERE l2.l_orderkey = l1.l_orderkey
+        |      AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |    WHERE l3.l_orderkey = l1.l_orderkey
+        |      AND l3.l_suppkey <> l1.l_suppkey
+        |      AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
+        |  AND s_nationkey = n_nationkey
+        |  AND n_name = 'NATION_3'
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name
+        |LIMIT 100""".stripMargin),
+    // TPC-H Q17: correlated scalar aggregate via one part-grain
+    // pre-aggregate join, integer-exact threshold
+    // q391: the correlated SCALAR-aggregate Q17 form, integer-exact —
+    // 5·qty·COUNT < SUM over ×10⁴-scaled quantities, every factor
+    // DECIMAL(38,0) before the product
+    Query("q391_tpch_q17", tpchQ17 _,
+      """SELECT CAST(COUNT(*) AS INTEGER) AS n_items,
+        |  round(CAST(SUM(CAST(l1.l_extendedprice AS DECIMAL(18,4)))
+        |    AS DOUBLE) / 7.0, 9) AS avg_yearly
+        |FROM lineitem l1 JOIN part ON l1.l_partkey = p_partkey
+        |WHERE p_brand = 'Brand#23' AND p_size <= 5
+        |  AND CAST(5 AS DECIMAL(38,0))
+        |      * CAST(CAST(round(l1.l_quantity * 10000) AS BIGINT)
+        |          AS DECIMAL(38,0))
+        |      * (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) FROM lineitem l2
+        |         WHERE l2.l_partkey = l1.l_partkey)
+        |    < (SELECT SUM(CAST(CAST(round(l2.l_quantity * 10000)
+        |          AS BIGINT) AS DECIMAL(38,0))) FROM lineitem l2
+        |       WHERE l2.l_partkey = l1.l_partkey)""".stripMargin),
+    // TPC-H Q4: EXISTS -> LEFT SEMI with mixed equi+non-equi condition
+    // q392: correlated EXISTS form — DuckDB's own decorrelation vs the
+    // engine's LEFT SEMI with the mixed equi+lateness condition
+    Query("q392_tpch_q4", tpchQ4 _,
+      """SELECT o_orderpriority, CAST(COUNT(*) AS INTEGER) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |    WHERE l_orderkey = o_orderkey
+        |      AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
+    // TPC-H Q13: left-join-then-histogram, zero-order customers kept
+    // q393: Q13 verbatim — the exclusion predicate must live in the
+    // JOIN clause so zero-order customers survive
+    Query("q393_tpch_q13", tpchQ13 _,
+      """WITH c_orders AS (
+        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders
+        |    ON c_custkey = o_custkey
+        |    AND o_orderpriority <> '4-NOT SPECIFIED'
+        |  GROUP BY c_custkey)
+        |SELECT c_count, CAST(COUNT(*) AS INTEGER) AS custdist
+        |FROM c_orders GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    // TPC-H Q16: NOT IN -> broadcast anti join + distinct census
+    // q394: the NOT IN form the engine's anti join must equal
+    Query("q394_tpch_q16", tpchQ16 _,
+      """SELECT p_brand, p_size,
+        |  CAST(COUNT(DISTINCT l_suppkey) AS INTEGER) AS supplier_cnt
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand <> 'Brand#45' AND p_type <> 'PROMO'
+        |  AND p_size <= 10
+        |  AND l_suppkey NOT IN
+        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_size
+        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin),
+    // TPC-H Q22: integer-exact scalar-average threshold + anti join
+    // q395: scalar-average threshold integer-exact on both sides
+    // (bal_cents·n > sum_cents — no float average ever forms) +
+    // correlated NOT EXISTS
+    Query("q395_tpch_q22", tpchQ22 _,
+      """WITH cust AS (
+        |  SELECT c_custkey,
+        |    CAST(c_nationkey % 5 AS INTEGER) AS cntrycode, c_acctbal,
+        |    CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
+        |  FROM customer WHERE c_nationkey % 5 IN (0, 1, 2)),
+        |a AS (SELECT CAST(SUM(CAST(bal_c AS DECIMAL(38,0)))
+        |    AS DECIMAL(38,0)) AS sum_c, COUNT(*) AS n_pos
+        |  FROM cust WHERE bal_c > 0)
+        |SELECT cntrycode, CAST(COUNT(*) AS INTEGER) AS numcust,
+        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS totacctbal
+        |FROM cust CROSS JOIN a
+        |WHERE CAST(bal_c AS DECIMAL(38,0)) * CAST(n_pos AS DECIMAL(38,0))
+        |    > sum_c
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |    WHERE o_custkey = c_custkey
+        |      AND o_orderpriority = '1-URGENT')
+        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin),
+    // TPC-H Q2: correlated MIN-equality via shrinking agg join-back
+    // q396: the genuinely correlated `= (SELECT MIN …)` Q2 form over
+    // the same lineitem-derived supply costs
+    Query("q396_tpch_q2", tpchQ2 _,
+      """WITH ps AS (
+        |  SELECT l_partkey AS pk, l_suppkey AS sk,
+        |    MIN(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cost_c
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_acctbal, s_name, n_name, pk AS p_partkey, cost_c
+        |FROM ps
+        |JOIN supplier ON sk = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN part ON pk = p_partkey
+        |WHERE p_type = 'ECONOMY' AND p_size <= 15
+        |  AND cost_c = (SELECT MIN(ps2.cost_c) FROM ps ps2
+        |                WHERE ps2.pk = ps.pk)
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+        |LIMIT 100""".stripMargin),
+    // TPC-H Q11: group-HAVING against a global scalar, exact fraction
+    // q397: HAVING against the global scalar, integer-exact fraction
+    Query("q397_tpch_q11", tpchQ11 _,
+      """WITH v AS (
+        |  SELECT l_partkey AS pk,
+        |    SUM(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+        |          AS DECIMAL(38,0))
+        |      * CAST(CAST(round(l_quantity) AS BIGINT)
+        |          AS DECIMAL(38,0))) AS value_c
+        |  FROM lineitem
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE n_name = 'NATION_5'
+        |  GROUP BY 1)
+        |SELECT pk AS p_partkey, CAST(value_c AS DOUBLE) AS value_cents
+        |FROM v
+        |WHERE CAST(value_c AS DECIMAL(38,0)) * 10000
+        |    > (SELECT CAST(SUM(value_c) AS DECIMAL(38,0)) FROM v)
+        |ORDER BY value_cents DESC, p_partkey""".stripMargin),
+    // TPC-H Q15: aggregate-of-aggregate argmax on exact decimals
+    // q398: the view + scalar MAX Q15 form; exact-decimal equality
+    Query("q398_tpch_q15", tpchQ15 _,
+      """WITH revenue AS (
+        |  SELECT l_suppkey AS sk,
+        |    SUM(CAST(round(l_extendedprice * (1.0 - l_discount), 9)
+        |      AS DECIMAL(28,9))) AS total_rev
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY 1)
+        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE)
+        |  AS total_revenue
+        |FROM revenue JOIN supplier ON sk = s_suppkey
+        |WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
+        |ORDER BY s_suppkey""".stripMargin),
+    // TPC-H Q20: nested-aggregate EXISTS chain -> semi-join reduction
+    // q399: nested-aggregate EXISTS chain; dominance = over 2x the
+    // fair share, with BOTH per-part aggregates correlated
+    Query("q399_tpch_q20", tpchQ20 _,
+      """WITH sq AS (
+        |  SELECT l_partkey AS pk, l_suppkey AS sk,
+        |    SUM(CAST(round(l_quantity) AS BIGINT)) AS sq
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_name LIKE 'small%'
+        |  GROUP BY 1, 2)
+        |SELECT s_name, s_acctbal
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |WHERE n_name = 'NATION_7'
+        |  AND EXISTS (SELECT 1 FROM sq
+        |    WHERE sq.sk = s_suppkey
+        |      AND CAST(sq.sq AS DECIMAL(38,0)) *
+        |        (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) FROM sq s3
+        |         WHERE s3.pk = sq.pk) >
+        |        (SELECT CAST(SUM(s2.sq) AS DECIMAL(38,0)) FROM sq s2
+        |         WHERE s2.pk = sq.pk) * 2)
+        |ORDER BY s_name""".stripMargin),
+    // chi-square + G independence test over the dense lang*source grid,
+    // one corpus hash-agg then cell-grain algebra
+    // q406: same dense grid, same DECIMAL(38,0) product before the
+    // divide, same 9-dp contribution routing and closing algebra
+    Query("q406_chi2_independence", chiSquareIndependence _,
+      """WITH cells AS (SELECT lang, source, COUNT(*) AS nij
+        |  FROM documents GROUP BY 1, 2),
+        |rt AS (SELECT lang, SUM(nij) AS ri FROM cells GROUP BY 1),
+        |ct AS (SELECT source, SUM(nij) AS cj FROM cells GROUP BY 1),
+        |tot AS (SELECT SUM(nij) AS n, COUNT(DISTINCT lang) AS nl,
+        |    COUNT(DISTINCT source) AS ns FROM cells),
+        |g AS (SELECT rt.lang, ct.source, rt.ri, ct.cj, c.nij,
+        |    tot.n, tot.nl, tot.ns,
+        |    CAST(CAST(rt.ri AS DECIMAL(38,0)) * CAST(ct.cj AS DECIMAL(38,0))
+        |      AS DOUBLE) / CAST(tot.n AS DOUBLE) AS e,
+        |    CAST(COALESCE(c.nij, 0) AS DOUBLE) AS nijd
+        |  FROM rt CROSS JOIN ct CROSS JOIN tot
+        |  LEFT JOIN cells c ON rt.lang = c.lang AND ct.source = c.source)
+        |SELECT CAST(MAX(n) AS BIGINT) AS n_docs,
+        |  CAST(MAX((nl - 1) * (ns - 1)) AS INTEGER) AS dof,
+        |  round(CAST(SUM(CAST(round((nijd - e) * (nijd - e) / e, 9)
+        |    AS DECIMAL(28,9))) AS DOUBLE), 6) AS chi2,
+        |  round(CAST(SUM(CAST(round(CASE WHEN nij IS NOT NULL
+        |      THEN 2.0 * nijd * ln(nijd / e) ELSE 0.0 END, 9)
+        |    AS DECIMAL(28,9))) AS DOUBLE), 6) AS g_stat,
+        |  round(sqrt(CAST(SUM(CAST(round((nijd - e) * (nijd - e) / e, 9)
+        |      AS DECIMAL(28,9))) AS DOUBLE)
+        |    / (CAST(MAX(n) AS DOUBLE) * CAST(MAX(LEAST(nl - 1, ns - 1))
+        |        AS DOUBLE))), 6) AS cramers_v
+        |FROM g""".stripMargin),
+  )
+
+  /** q50's oracle, which q234's and q264's streaming twins share. */
+  lazy val sessionizeSql: String =
+    """WITH g AS (
         |  SELECT user_id, ts, event_id, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
         |      OR epoch_us(CAST(ts AS TIMESTAMP))
@@ -6402,78 +6582,5 @@ object Advanced {
         |  COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM s GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-    "q51_ntile_ranks" ->
-      """SELECT o_orderkey, o_totalprice,
-        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-        |  round(percent_rank() OVER w, 6) AS pct_rank,
-        |  round(cume_dist() OVER w, 6) AS cume
-        |FROM orders
-        |WINDOW w AS (ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q52_string_funcs" ->
-      """SELECT c_custkey,
-        |  CAST(length(c_name) AS INTEGER) AS name_len,
-        |  upper(replace(c_name, 'Customer#', 'C-')) AS renamed,
-        |  right(c_name, 3) AS last3,
-        |  lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
-        |  split_part(c_name, '#', 2) AS num_part,
-        |  regexp_extract(c_name, '([0-9]+)', 1) AS digits,
-        |  concat_ws('|', c_mktsegment, c_name) AS tagged
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q53_array_funcs" -> {
-      val T = graft.functions.TextPrims.tokensS("text")
-      s"""SELECT doc_id,
-         |  CAST(len($T) AS INTEGER) AS n_tokens,
-         |  CAST(len(list_distinct($T)) AS INTEGER) AS n_distinct,
-         |  array_to_string(list_slice(list_sort(list_distinct($T)), 1, 3), ' ')
-         |    AS first3_sorted,
-         |  CAST(list_contains($T, 'the') AS INTEGER) AS has_the
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q54_grouped_quantiles" ->
-      """SELECT o_orderstatus,
-        |  round(quantile_cont(o_totalprice, 0.5), 4) AS median_price,
-        |  round(quantile_cont(o_totalprice, 0.25), 4) AS p25_price,
-        |  round(quantile_cont(o_totalprice, 0.75), 4) AS p75_price
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q55_above_cust_avg" ->
-      """WITH avgs AS (
-        |  SELECT o_custkey AS ck,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-        |      / COUNT(o_totalprice) AS cust_avg
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT o_orderkey, o_custkey, o_totalprice, cust_avg
-        |FROM orders JOIN avgs ON o_custkey = ck
-        |WHERE o_totalprice > cust_avg
-        |ORDER BY o_orderkey""".stripMargin,
-    "q59_salted_agg" ->
-      // oracle = the UNsalted direct aggregation: salting must be invisible
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q60_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING' AND o_orderstatus <> 'F'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q56_first_last_window" ->
-      """SELECT o_custkey, first_order, last_order, n_orders FROM (
-        |  SELECT o_custkey,
-        |    first_value(o_orderkey) OVER wf AS first_order,
-        |    last_value(o_orderkey) OVER wf AS last_order,
-        |    COUNT(*) OVER wf AS n_orders,
-        |    ROW_NUMBER() OVER wo AS rn
-        |  FROM orders
-        |  WINDOW
-        |    wo AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-        |    wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-  )
+        |ORDER BY user_id, session_idx""".stripMargin
 }

@@ -1,5 +1,7 @@
 package graft.analytics
 
+import graft.Query
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -228,12 +230,15 @@ object ExactQuantile {
     s.createDataset(out).toDF("f", "ptile", "value")
   }
 
-  /** Oracle: the sort-based selection this operator refuses to run at
-    * scale — row_number per flag, pick rank ceil(q·n). DECIMAL literals
-    * keep ceil(q·n) integer-exact on both engines (0.9/0.99 are not
+  /** The registry queries this module declares (see [[graft.Query]]).
+    * q401's oracle is the sort-based selection this operator refuses to
+    * run at scale — row_number per flag, pick rank ceil(q·n). DECIMAL
+    * literals keep ceil(q·n) integer-exact on both engines (0.9/0.99 are not
     * binary-representable; the engine side uses BigDecimal CEILING). */
-  val oracleSql: Map[String, String] = Map(
-    "q401_exact_quantiles" ->
+  def queries: Seq[Query] = Seq(
+    // exact quantiles with NO sort and NO row shuffle: iterative
+    // monotone-histogram selection, one scan per 256-way level
+    Query("q401_exact_quantiles", exactQuantiles _,
       """WITH s AS (
         |  SELECT l_returnflag, l_extendedprice AS x,
         |    row_number() OVER (PARTITION BY l_returnflag
@@ -245,5 +250,6 @@ object ExactQuantile {
         |  ('p75', 0.75), ('p90', 0.90), ('p99', 0.99))
         |SELECT l_returnflag, ptile, x AS value
         |FROM s JOIN q ON rn = CAST(CEIL(f * n) AS BIGINT)
-        |ORDER BY l_returnflag, ptile""".stripMargin)
+        |ORDER BY l_returnflag, ptile""".stripMargin),
+  )
 }

@@ -1,5 +1,7 @@
 package graft.analytics
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -463,4 +465,246 @@ object Relational {
       groups.length.toLong))
       .toDF("n", "n_flag_r", "sum_qty", "min_key", "max_key", "n_groups")
   }
+
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // §2.2 projections / filters / scalar expressions
+    Query("q01_scan_project_filter", scanProjectFilter _,
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
+        |  l_shipdate,
+        |  CAST(l_linenumber - 1 AS INTEGER) AS line_idx,
+        |  CAST(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q02_filter_range_set", filterRangeSet _,
+      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
+        |FROM orders
+        |WHERE o_totalprice BETWEEN 1000.0 AND 50000.0
+        |  AND o_orderstatus IN ('F', 'O')
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q03_conditional_impute", conditionalImpute _,
+      """WITH nulled AS (
+        |  SELECT event_id, user_id,
+        |    CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v_nulled,
+        |    CASE WHEN user_id % 7 = 0 THEN NULL ELSE event_type END AS ty_nulled
+        |  FROM events)
+        |SELECT event_id, user_id,
+        |  CASE WHEN v_nulled IS NULL OR isnan(v_nulled) THEN 0.0 ELSE v_nulled END AS v_imputed,
+        |  COALESCE(ty_nulled, 'Unknown') AS ty_nulled
+        |FROM nulled ORDER BY event_id""".stripMargin),
+    // §2.3 temporal scalar functions
+    Query("q04_temporal_features", temporalFeatures _,
+      """SELECT o_orderkey,
+        |  CAST(hour(o_orderdate) AS INTEGER) AS hour_of_day,
+        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS day_of_week,
+        |  CAST(month(o_orderdate) AS INTEGER) AS month_of_year,
+        |  CAST(year(o_orderdate) AS INTEGER) AS year_of_date
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    // §2.4 aggregations
+    Query("q05_group_count", groupCount _,
+      """SELECT o_orderstatus, COUNT(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("q06_multi_agg", multiAgg _,
+      """SELECT l_returnflag, l_linestatus,
+        |  COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
+        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_quantity) AS DOUBLE) AS avg_qty,
+        |  MIN(l_extendedprice) AS min_price,
+        |  MAX(l_extendedprice) AS max_price,
+        |  ROUND(SQRT((CAST(SUM(CAST(CAST(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,4)) AS DOUBLE) AS DECIMAL(18,4))) AS DOUBLE)
+        |    - CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) * CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*))
+        |    / (COUNT(*) - 1)), 4) AS std_price
+        |FROM lineitem
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q07_global_means", globalMeans _,
+      """SELECT
+        |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_quantity) AS DOUBLE) AS mean_quantity,
+        |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_extendedprice) AS DOUBLE) AS mean_extendedprice,
+        |  CAST(CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_discount) AS DOUBLE) AS mean_discount,
+        |  CAST(CAST(SUM(CAST(l_tax AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_tax) AS DOUBLE) AS mean_tax
+        |FROM lineitem""".stripMargin),
+    Query("q08_medians", medians _,
+      """SELECT
+        |  ROUND(quantile_cont(o_totalprice, 0.5), 4) AS median_totalprice,
+        |  ROUND(quantile_cont(o_totalprice, 0.25), 4) AS p25_totalprice,
+        |  ROUND(quantile_cont(o_totalprice, 0.75), 4) AS p75_totalprice
+        |FROM orders""".stripMargin),
+    Query("q09_null_census", nullCensus _,
+      """WITH ev AS (
+        |  SELECT *, CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v_nulled
+        |  FROM events)
+        |SELECT
+        |  COUNT(CASE WHEN event_id IS NULL THEN 1 END) AS nulls_event_id,
+        |  COUNT(CASE WHEN ts IS NULL THEN 1 END) AS nulls_ts,
+        |  COUNT(CASE WHEN user_id IS NULL THEN 1 END) AS nulls_user_id,
+        |  COUNT(CASE WHEN event_type IS NULL THEN 1 END) AS nulls_event_type,
+        |  COUNT(CASE WHEN value IS NULL THEN 1 END) AS nulls_value,
+        |  COUNT(CASE WHEN props IS NULL THEN 1 END) AS nulls_props,
+        |  COUNT(CASE WHEN v_nulled IS NULL THEN 1 END) AS nulls_v_nulled
+        |FROM ev""".stripMargin),
+    Query("q10_describe_stats", describeStats _,
+      """SELECT COUNT(*) AS n_rows,
+        |  CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / COUNT(c_acctbal) AS DOUBLE) AS mean_acctbal,
+        |  MIN(c_acctbal) AS min_acctbal,
+        |  MAX(c_acctbal) AS max_acctbal,
+        |  COUNT(DISTINCT c_mktsegment) AS n_segments
+        |FROM customer""".stripMargin),
+    // joins / set ops (§2.5 — required by the generalized oracle)
+    Query("q11_join_revenue_nation", joinRevenuePerNation _,
+      """SELECT n.n_name AS nation, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM orders o
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |GROUP BY n.n_name ORDER BY nation""".stripMargin),
+    Query("q12_join_left_outer", joinLeftOuter _,
+      """SELECT c.c_custkey, c.c_name, COUNT(o.o_orderkey) AS n_orders
+        |FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+        |GROUP BY c.c_custkey, c.c_name ORDER BY c.c_custkey""".stripMargin),
+    Query("q13_join_semi_anti", joinSemiAnti _,
+      """WITH big AS (SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 40000.0)
+        |SELECT c_custkey, 'has_big_order' AS bucket FROM customer
+        |  WHERE c_custkey IN (SELECT o_custkey FROM big)
+        |UNION ALL
+        |SELECT c_custkey, 'no_big_order' AS bucket FROM customer
+        |  WHERE c_custkey NOT IN (SELECT o_custkey FROM big)
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q14_union_distinct", unionDistinct _,
+      """SELECT DISTINCT o_orderkey FROM (
+        |  SELECT o_orderkey FROM orders WHERE o_totalprice > 45000.0
+        |  UNION ALL
+        |  SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
+        |ORDER BY o_orderkey""".stripMargin),
+    // §2.6 sorts / limits / windows
+    Query("q15_orderby_limit", orderByLimit _,
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Query("q16_window_topk", windowTopKPerGroup _,
+      """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS INTEGER) AS rk
+        |  FROM orders)
+        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin),
+    Query("q17_window_running_sum", windowRunningSum _,
+      """SELECT user_id, event_id,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (
+        |    PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    Query("q18_window_lag", windowLag _,
+      """SELECT user_id, event_id,
+        |  CAST(epoch_us(CAST(ts AS TIMESTAMP)) - epoch_us(CAST(LAG(ts, 1) OVER (
+        |    PARTITION BY user_id ORDER BY ts, event_id) AS TIMESTAMP)) AS DOUBLE) / 1e6 AS gap_s
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    // reshaping / semi-structured / event-time
+    Query("q19_pivot_matrix", pivotMatrix _,
+      """SELECT o_orderpriority,
+        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
+        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
+        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q20_json_extract", jsonExtract _,
+      """SELECT event_id, CAST(props->>'$.k' AS INTEGER) AS k
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q21_tumbling_window", tumblingWindowAgg _,
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin),
+    // q16 semantics through the custom TopKPerKey physical operator
+    // (LogicalPlan + SparkStrategy + SparkPlan via SparkSessionExtensions)
+    Query("q69_topk_exec", topkExecPerGroup _,
+      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
+        |  FROM orders)
+        |WHERE rk <= 3
+        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin),
+    // full outer join with unmatched rows on both sides
+    Query("q78_join_full_outer", joinFullOuter _,
+      """WITH c AS (SELECT c_custkey FROM customer WHERE c_nationkey < 5),
+        |o AS (SELECT o_orderkey, o_custkey FROM orders
+        |  WHERE o_totalprice > 250000.0)
+        |SELECT CASE WHEN c.c_custkey IS NULL THEN 'order_only'
+        |    WHEN o.o_orderkey IS NULL THEN 'customer_only'
+        |    ELSE 'matched' END AS side,
+        |  CAST(count(*) AS INTEGER) AS n
+        |FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey
+        |GROUP BY 1 ORDER BY side""".stripMargin),
+    // A4's approximate half: HLL++ distinct count + quantile sketch in one
+    // pass — the actual 100 TB tool (exact twins: q08/q54). Approximate ⇒
+    // rows-only here; error bands asserted in RelationalSpec.
+    Query.rowsOnly("q81_approx_stats", approxStats _),
+    // row-level set ops: INTERSECT + EXCEPT (§2.5 completion)
+    Query("q84_intersect_except", intersectExcept _,
+      """SELECT o_custkey, 'both' AS tag FROM (
+        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+        |  INTERSECT
+        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
+        |UNION ALL
+        |SELECT o_custkey, 'only_f' AS tag FROM (
+        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
+        |  EXCEPT
+        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
+        |ORDER BY tag, o_custkey""".stripMargin),
+    // CUBE + grouping_id — all margins and the grand total in one
+    // Expand+aggregate pass (the multi-level OLAP aggregate)
+    // q315: Spark's grouping_id bit order is first-listed = most
+    // significant; NULLS FIRST pinned (Spark ASC default vs DuckDB's
+    // nulls-last). SUM(INTEGER) is HUGEINT in DuckDB — cast at output.
+    Query("q315_cube_agg", (s, d) => cubeAgg(s, d),
+      """SELECT CAST(2 * GROUPING(source) + GROUPING(lang) AS INTEGER)
+        |    AS gmask,
+        |  source, lang, COUNT(*) AS n_docs,
+        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+        |FROM documents GROUP BY CUBE (source, lang)
+        |ORDER BY gmask, source NULLS FIRST, lang NULLS FIRST""".stripMargin),
+    // Spark 4 VARIANT: parse_json once into the binary type, typed
+    // path extraction via variant_get, aggregate over the typed value
+    Query("q316_variant_extract", (s, d) => variantExtract(s, d),
+      """SELECT event_type, COUNT(*) AS n,
+        |  MIN(CAST(json_extract_string(props, '$.k') AS INTEGER))
+        |    AS k_min,
+        |  MAX(CAST(json_extract_string(props, '$.k') AS INTEGER))
+        |    AS k_max,
+        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
+        |    AS BIGINT) AS k_sum
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // Dataset.observe: data-quality counters riding the production
+    // action's scan via CollectMetrics — zero extra jobs at 100 TB
+    // q322: the oracle recomputes the observed counters directly; the
+    // engine side must deliver the identical values out of the
+    // CollectMetrics accumulator (DECIMAL-routed sum, exact count/range)
+    Query("q322_observe_metrics", (s, d) => observeMetrics(s, d),
+      """SELECT COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_flag_r,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_qty,
+        |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key,
+        |  CAST(COUNT(DISTINCT l_returnflag) AS BIGINT) AS n_groups
+        |FROM lineitem WHERE l_quantity > 10""".stripMargin),
+    // Spark 4 collations: case-insensitive grouping via UTF8_LCASE —
+    // the type carries the semantics, no lower() rewrite tax
+    // q316: the oracle extracts the same typed path with DuckDB's JSON
+    // functions — values must agree, the engine-side encoding (VARIANT
+    // vs string re-parse) is the thing under test
+    // q338: DuckDB groups by lower() — identical values iff the
+    // collation is exactly case-insensitive equality
+    Query("q338_collated_group", (s, d) => collatedGroup(s, d),
+      """SELECT lower(src2) AS source_ci, COUNT(*) AS n_docs,
+        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+        |  CAST(COUNT(DISTINCT src2) AS INTEGER) AS n_case_variants
+        |FROM (SELECT doc_id, n_chars,
+        |    CASE WHEN doc_id % 3 = 0 THEN upper(source) ELSE source END
+        |      AS src2
+        |  FROM documents)
+        |GROUP BY lower(src2) ORDER BY source_ci""".stripMargin),
+  )
 }

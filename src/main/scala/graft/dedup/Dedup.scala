@@ -1,5 +1,7 @@
 package graft.dedup
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -2484,473 +2486,168 @@ object Dedup extends org.apache.spark.internal.Logging {
        |    AS residual_frac""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
-    // q320: the identical winnowing selection in DuckDB — 1-based list
-    // positions (vs Spark's 0-based posexplode) shift every packed key by
-    // one, which changes no window minimum; valid starts are i ≤ m−w+1
-    "q320_winnow_fingerprints" -> {
-      val (n, w, maxPostings, minShared) = (4, 4, 8, 3)
-      s"""WITH c AS ($nearDupCorpusS),
-         |g AS (SELECT doc_id, ${shinglesS(tokensS("text"), n)} AS gs FROM c),
-         |sh AS (SELECT doc_id, CAST(u['pos'] AS BIGINT) AS pos,
-         |    CAST(u['sh'] AS VARCHAR) AS sh
-         |  FROM (SELECT doc_id, unnest(list_transform(
-         |      generate_series(1, len(gs)), i -> {'pos': i, 'sh': gs[i]})) AS u
-         |    FROM g)),
-         |keyed AS (SELECT doc_id, pos,
-         |    ${hex32S(seededMd5S(320, "sh"))} * 16777216
-         |      + (16777215 - pos) AS key,
-         |    COUNT(*) OVER (PARTITION BY doc_id) AS m
-         |  FROM sh),
-         |wk AS (SELECT doc_id, pos, m,
-         |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS wkey
-         |  FROM keyed),
-         |fp AS (SELECT DISTINCT doc_id, wkey // 16777216 AS fph
-         |  FROM wk WHERE pos <= greatest(m - $w + 1, 1)),
-         |docn AS (SELECT doc_id, COUNT(*) AS n_fp FROM fp GROUP BY doc_id),
-         |rare AS (SELECT fph FROM fp GROUP BY fph
-         |  HAVING COUNT(*) <= $maxPostings),
-         |ff AS (SELECT f.doc_id, f.fph FROM fp f JOIN rare r
-         |  ON f.fph = r.fph),
-         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    COUNT(*) AS n_shared
-         |  FROM ff a JOIN ff b ON a.fph = b.fph AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id HAVING COUNT(*) >= $minShared)
-         |SELECT p.doc_a, p.doc_b, p.n_shared, x.n_fp AS n_fp_a,
-         |  y.n_fp AS n_fp_b,
-         |  round(CAST(p.n_shared AS DOUBLE) / least(x.n_fp, y.n_fp), 6)
-         |    AS overlap
-         |FROM pairs p JOIN docn x ON x.doc_id = p.doc_a
-         |JOIN docn y ON y.doc_id = p.doc_b
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // deduplication (exact, MinHash+LSH, Jaccard verify, SimHash)
+    Query("q26_dedup_exact", dedupExact _,
+      s"""WITH corpus AS ($dupCorpusS)
+         |SELECT min(doc_id) AS canonical_id,
+         |  CAST(count(*) AS INTEGER) AS n_copies
+         |FROM (SELECT doc_id, ${normHashS("text")} AS h
+         |      FROM corpus)
+         |GROUP BY h ORDER BY canonical_id""".stripMargin),
+    Query("q27_minhash_sig", (s, d) => minhashSignatures(s, d), {
+      val cols = (0 until NumHashes).map(i => s"sig$i").mkString(", ")
+      s"""${sigSelectS("SELECT doc_id, text FROM documents")}
+         |SELECT doc_id, $cols FROM sig ORDER BY doc_id""".stripMargin
+    }),
+    Query("q28_lsh_band_pairs", (s, d) => lshCandidatePairs(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS)
+         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id
+         |ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q29_ngram_jaccard", (s, d) => ngramJaccard(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id)
+         |SELECT doc_a, doc_b,
+         |  round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
+         |FROM pairs
+         |JOIN shs sa ON pairs.doc_a = sa.doc_id
+         |JOIN shs sb ON pairs.doc_b = sb.doc_id
+         |WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
+         |    len(list_distinct(list_concat(sa.sh, sb.sh))), 6) >= $JaccardThreshold
+         |ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q30_simhash", simhash _,
+      s"""WITH ${simhashCtesS("SELECT doc_id, text FROM documents")}
+         |SELECT doc_id, simhash FROM s ORDER BY doc_id""".stripMargin),
+    // dedup completion: fingerprint→pairs (SimHash path) and
+    // pairs→clusters (connected components)
+    Query("q62_simhash_pairs", (s, d) => simhashNearDupPairs(s, d), {
+      val idxs = (0 until SimhashBlocks).mkString(", ")
+      s"""WITH ${simhashCtesS(nearDupCorpusS)},
+         |blk AS (SELECT doc_id, simhash, unnest([$idxs]) AS bi FROM s),
+         |blv AS (SELECT doc_id, simhash, bi,
+         |    (simhash >> (bi * 8)) & 255 AS bv FROM blk)
+         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hd
+         |FROM blv a JOIN blv b ON a.bi = b.bi AND a.bv = b.bv
+         |  AND a.doc_id < b.doc_id
+         |  AND bit_count(xor(a.simhash, b.simhash)) <= $HammingThreshold
          |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    // q318: the identical blocked prefix-filter algorithm in DuckDB —
-    // the canonical (global df, tok) ordering via list(... ORDER BY),
-    // the prefix slice, the (source, token) candidate equi-join, and
-    // the exact Jaccard verify
-    "q318_prefix_sim_join" -> {
-      s"""WITH c AS (SELECT doc_id, text, source FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + $VariantIdOffset,
-         |    CASE WHEN len(t) > 1
-         |      THEN array_to_string(list_slice(t, 1, len(t) - 1), ' ')
-         |      ELSE text END,
-         |    source
-         |  FROM (SELECT doc_id, text, source, ${tokensS("text")} AS t
-         |    FROM documents)
-         |  WHERE doc_id % 20 = 0),
-         |tk AS MATERIALIZED (SELECT doc_id, source, unnest(
-         |    list_distinct(${tokensS("text")})) AS tok FROM c),
-         |dfc AS (SELECT tok, COUNT(*) AS df FROM tk GROUP BY tok),
-         |arrs AS MATERIALIZED (SELECT t.doc_id, t.source,
-         |    list(t.tok ORDER BY d.df, t.tok) AS ts
-         |  FROM tk t JOIN dfc d ON t.tok = d.tok
-         |  GROUP BY t.doc_id, t.source),
-         |sz AS MATERIALIZED (SELECT doc_id, source, ts, len(ts) AS n,
-         |    len(ts) - CAST(ceil(0.9 * len(ts)) AS INTEGER) + 1 AS p
-         |  FROM arrs),
-         |pre AS (SELECT doc_id, source, n,
-         |    unnest(list_slice(ts, 1, p)) AS tok
-         |  FROM sz),
-         |cand AS (SELECT DISTINCT a.source, a.doc_id AS doc_a,
-         |    b.doc_id AS doc_b
-         |  FROM pre a JOIN pre b ON a.source = b.source
-         |    AND a.tok = b.tok AND a.doc_id < b.doc_id
-         |    AND greatest(a.n, b.n) * 0.9 <= least(a.n, b.n)),
-         |v AS (SELECT c.source, c.doc_a, c.doc_b,
-         |    len(list_intersect(x.ts, y.ts)) AS inter,
-         |    x.n AS na, y.n AS nb
-         |  FROM cand c JOIN sz x ON x.doc_id = c.doc_a
-         |  JOIN sz y ON y.doc_id = c.doc_b)
-         |SELECT source, doc_a, doc_b, CAST(inter AS BIGINT) AS n_common,
-         |  round(CAST(inter AS DOUBLE) / (na + nb - inter), 6)
-         |    AS jaccard
-         |FROM v
-         |WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.9
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "q291_dup_quality_corr" -> q291OracleS,
-    "q281_strip_verify" -> q281OracleS,
-    "q272_lsh_tuning" -> q272OracleS,
-    "q274_source_overlap" -> {
-      val t = tokensS("text")
-      s"""WITH d AS (SELECT source,
-         |    list_distinct(${shinglesS("t", 13)}) AS sh
-         |  FROM (SELECT source, $t AS t FROM documents)),
-         |sg AS MATERIALIZED (SELECT DISTINCT source, md5(s) AS h
-         |  FROM (SELECT source, unnest(sh) AS s FROM d)),
-         |sizes AS (SELECT source, COUNT(*) AS sz FROM sg GROUP BY source),
-         |nh AS MATERIALIZED (SELECT sg.source, sg.h FROM sg JOIN (
-         |    SELECT h, COUNT(*) AS ns FROM sg GROUP BY h) hh
-         |  ON sg.h = hh.h WHERE hh.ns <= 8 AND hh.ns > 1),
-         |sh AS (SELECT a.source AS src_a, b.source AS src_b,
-         |    COUNT(*) AS n_shared
-         |  FROM nh a JOIN nh b ON a.h = b.h AND a.source < b.source
-         |  GROUP BY a.source, b.source)
-         |SELECT src_a, src_b, n_shared,
-         |  round(CAST(n_shared AS DOUBLE) /
-         |    CAST(least(za.sz, zb.sz) AS DOUBLE), 6) AS overlap
-         |FROM sh JOIN sizes za ON za.source = sh.src_a
-         |  JOIN sizes zb ON zb.source = sh.src_b
-         |ORDER BY src_a, src_b""".stripMargin
-    },
-    // q299: single-level mins here vs the Spark side's shard-merged
-    // mins — hash-equality is the merge certificate
-    "q299_source_minhash" -> {
-      val t = tokensS("text")
-      val k = SrcMinhashK
-      val sigCols = (0 until k)
-        .map(i => s"min(${permS("h", i)}) AS sig$i").mkString(",\n    ")
-      val matchSum = (0 until k)
-        .map(i => s"(CASE WHEN a.sig$i = b.sig$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH d AS (SELECT source,
-         |    list_distinct(${shinglesS("t", 3)}) AS sh
-         |  FROM (SELECT source, $t AS t FROM documents)),
-         |sg AS MATERIALIZED (SELECT DISTINCT source,
-         |    ${hex60S("md5(s)")} AS h
-         |  FROM (SELECT source, unnest(sh) AS s FROM d)),
-         |sig AS (SELECT source,
-         |    $sigCols
-         |  FROM sg GROUP BY source),
-         |sizes AS (SELECT source, COUNT(*) AS sz FROM sg GROUP BY source),
-         |iv AS (SELECT x.source AS src_a, y.source AS src_b,
-         |    COUNT(*) AS ni
-         |  FROM sg x JOIN sg y ON x.h = y.h AND x.source < y.source
-         |  GROUP BY 1, 2),
-         |p AS (SELECT a.source AS src_a, b.source AS src_b,
-         |    CAST($matchSum AS BIGINT) AS n_match
-         |  FROM sig a JOIN sig b ON a.source < b.source),
-         |m AS (SELECT p.src_a, p.src_b,
-         |    CAST(COALESCE(iv.ni, 0) AS BIGINT) AS n_inter,
-         |    CAST(za.sz + zb.sz - COALESCE(iv.ni, 0) AS BIGINT)
-         |      AS n_union,
-         |    p.n_match
-         |  FROM p LEFT JOIN iv
-         |    ON iv.src_a = p.src_a AND iv.src_b = p.src_b
-         |  JOIN sizes za ON za.source = p.src_a
-         |  JOIN sizes zb ON zb.source = p.src_b)
-         |SELECT src_a, src_b, n_inter, n_union, n_match,
-         |  round(CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE), 6)
-         |    AS jaccard_exact,
-         |  CAST(n_match AS DOUBLE) / $k.0 AS jaccard_est,
-         |  round(abs(CAST(n_match AS DOUBLE) / $k.0 -
-         |    CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE)), 6)
-         |    AS abs_err
-         |FROM m ORDER BY src_a, src_b""".stripMargin
-    },
-    "q232_lsh_planted_pr" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |truth AS (SELECT doc_id AS doc_a,
-         |    doc_id + $VariantIdOffset AS doc_b
-         |  FROM documents WHERE doc_id % 20 = 0),
-         |hit AS (SELECT COUNT(*) AS n_hit FROM pairs
-         |  JOIN truth ON pairs.doc_a = truth.doc_a
-         |    AND pairs.doc_b = truth.doc_b),
-         |nc AS (SELECT COUNT(*) AS n_cand FROM pairs),
-         |nt AS (SELECT COUNT(*) AS n_truth FROM truth)
-         |SELECT CAST(n_cand AS INTEGER) AS n_cand,
-         |  CAST(n_truth AS INTEGER) AS n_truth,
-         |  CAST(n_hit AS INTEGER) AS n_hit,
-         |  round(CASE WHEN n_cand > 0
-         |    THEN CAST(n_hit AS DOUBLE) / n_cand END, 6)
-         |    AS precision_planted,
-         |  round(CAST(n_hit AS DOUBLE) / n_truth, 6) AS recall,
-         |  round(CASE WHEN n_cand > 0 AND
-         |      CAST(n_hit AS DOUBLE) / n_cand
-         |        + CAST(n_hit AS DOUBLE) / n_truth > 0
-         |    THEN 2.0 * (CAST(n_hit AS DOUBLE) / n_cand)
-         |      * (CAST(n_hit AS DOUBLE) / n_truth) /
-         |      (CAST(n_hit AS DOUBLE) / n_cand
-         |        + CAST(n_hit AS DOUBLE) / n_truth) END, 6) AS f1_planted
-         |FROM nc, nt, hit""".stripMargin,
-    "q226_dup_cluster_sizes" ->
-      s"""$compChainS
-         |SELECT CAST(sz AS INTEGER) AS cluster_size,
-         |  CAST(COUNT(*) AS INTEGER) AS n_clusters
-         |FROM (SELECT comp.comp, COUNT(*) AS sz FROM comp GROUP BY comp.comp)
-         |GROUP BY sz ORDER BY cluster_size""".stripMargin,
-    // q327: DuckDB's NATIVE jaro_winkler_similarity over the same
-    // candidate pairs — an independent implementation of the published
-    // definition, agreeing to 6 dp (flag applied to the rounded score
-    // on both sides)
-    "q327_jw_linkage" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |c AS (SELECT doc_id, substr(lower(trim(text)), 1, 80) AS k
-         |  FROM corpus),
-         |j AS (SELECT p.doc_a, p.doc_b,
-         |    round(jaro_winkler_similarity(ca.k, cb.k), 6) AS jw
-         |  FROM pairs p JOIN c ca ON ca.doc_id = p.doc_a
-         |  JOIN c cb ON cb.doc_id = p.doc_b)
-         |SELECT doc_a, doc_b, jw,
-         |  CAST(jw >= 0.9 AS INTEGER) AS link
-         |FROM j ORDER BY doc_a, doc_b""".stripMargin,
-    // q350: same candidate pairs, same 64-char normalized prefixes,
-    // DuckDB's levenshtein — integer-exact comparator parity
-    "q350_edit_linkage" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |c AS (SELECT doc_id, substr(lower(trim(text)), 1, 64) AS k
-         |  FROM corpus)
-         |SELECT p.doc_a, p.doc_b,
-         |  CAST(levenshtein(ca.k, cb.k) AS INTEGER) AS dist,
-         |  CAST(levenshtein(ca.k, cb.k) <= 24 AS INTEGER) AS link
-         |FROM pairs p JOIN c ca ON ca.doc_id = p.doc_a
-         |JOIN c cb ON cb.doc_id = p.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    // q336: THE SAME recursive SQL as the Spark side (q63's oracle text)
-    "q336_recursive_cte" ->
+    }),
+    Query("q63_dedup_components", (s, d) => dedupComponents(s, d),
       s"""${sigSelectS(nearDupCorpusS).replaceFirst("WITH ", "WITH RECURSIVE ")},
          |bk AS ($bandUnnestS),
          |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
          |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
          |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |reach(id, r, lvl) AS (
-         |  SELECT doc_id, doc_id, 0 FROM corpus
-         |  UNION ALL
-         |  SELECT e.dst, reach.r, reach.lvl + 1
-         |  FROM reach JOIN edges e ON e.src = reach.id
-         |  WHERE reach.lvl < $RecursionDepth AND reach.r < e.dst)
+         |reach(id, r) AS (
+         |  SELECT doc_id, doc_id FROM corpus
+         |  UNION
+         |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
          |SELECT id AS doc_id, min(r) AS comp FROM reach
-         |GROUP BY id ORDER BY doc_id""".stripMargin,
-    // q325: the identical peel unrolled KcoreRounds times (idempotent
-    // once the fixpoint is reached — the Spark side proves convergence
-    // within the bound or fails loudly)
-    "q325_kcore" -> {
-      // MATERIALIZED per round: each e_i is read three times by round
-      // i+1 — inlining would re-expand the corpus scan 3^rounds times
-      val rounds = (1 to KcoreRounds).map { i =>
-        s"""d$i AS (SELECT id, COUNT(*) AS d FROM (
-           |    SELECT doc_a AS id FROM e${i - 1}
-           |    UNION ALL SELECT doc_b FROM e${i - 1}) GROUP BY id),
-           |a$i AS (SELECT id FROM d$i WHERE d >= $KcoreK),
-           |e$i AS MATERIALIZED (SELECT e.doc_a, e.doc_b FROM e${i - 1} e
-           |  JOIN a$i x ON e.doc_a = x.id
-           |  JOIN a$i y ON e.doc_b = y.id)""".stripMargin
-      }.mkString(",\n")
+         |GROUP BY id ORDER BY doc_id""".stripMargin),
+    // Levenshtein verify of LSH candidates (third verifier: chars)
+    Query("q68_edit_distance", (s, d) => editDistancePairs(s, d),
       s"""${sigSelectS(nearDupCorpusS)},
          |bk AS ($bandUnnestS),
-         |e0 AS MATERIALIZED (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |$rounds
-         |SELECT id AS doc_id, CAST(COUNT(*) AS INTEGER) AS core_deg
-         |FROM (SELECT doc_a AS id FROM e$KcoreRounds
-         |  UNION ALL SELECT doc_b FROM e$KcoreRounds)
-         |GROUP BY id ORDER BY doc_id""".stripMargin
-    },
-    // q341: the identical walk unrolled PagerankIters times; every
-    // double op mirrors the Spark side (literal 0.15/0.85, double
-    // division, round-12, DECIMAL(28,12) sum) — see [[pagerank]]
-    "q341_pagerank" -> {
-      val steps = (1 to PagerankIters).map { i =>
-        s"""p$i AS MATERIALIZED (
-           |  SELECT d.id, d.deg,
-           |    round(CAST($PagerankTeleport AS DOUBLE) / (SELECT n FROM nn)
-           |      + CAST($PagerankDamping AS DOUBLE) *
-           |        CAST(SUM(CAST(round(p.pr / CAST(p.deg AS DOUBLE), 12)
-           |          AS DECIMAL(28,12))) AS DOUBLE), 12) AS pr
-           |  FROM edges e JOIN p${i - 1} p ON p.id = e.src
-           |    JOIN deg d ON d.id = e.dst
-           |  GROUP BY d.id, d.deg)""".stripMargin
-      }.mkString(",\n")
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id)
+         |SELECT doc_a, doc_b,
+         |  CAST(levenshtein(ca.text, cb.text) AS INTEGER) AS edit_dist,
+         |  CAST(greatest(length(ca.text), length(cb.text)) AS INTEGER)
+         |    AS max_len
+         |FROM pairs
+         |JOIN corpus ca ON pairs.doc_a = ca.doc_id
+         |JOIN corpus cb ON pairs.doc_b = cb.doc_id
+         |ORDER BY doc_a, doc_b""".stripMargin),
+    // dedup output step: canonical selection + survivors per source
+    Query("q72_dedup_keep", (s, d) => dedupKeepSummary(s, d),
+      s"""$compChainS
+         |SELECT d.source,
+         |  CAST(count(*) AS INTEGER) AS n_docs,
+         |  CAST(sum(CASE WHEN c.doc_id = c.comp THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_kept,
+         |  CAST(count(*) - sum(CASE WHEN c.doc_id = c.comp THEN 1 ELSE 0 END)
+         |    AS INTEGER) AS n_dropped
+         |FROM comp c JOIN documents d ON c.doc_id % $VariantIdOffset = d.doc_id
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    // decontamination: near-dup pairs crossing source boundaries
+    Query("q75_contamination", (s, d) => crossSourceContamination(s, d),
       s"""${sigSelectS(nearDupCorpusS)},
          |bk AS ($bandUnnestS),
          |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |deg AS MATERIALIZED (SELECT src AS id, COUNT(*) AS deg
-         |  FROM edges GROUP BY src),
-         |nn AS (SELECT COUNT(*) AS n FROM deg),
-         |p0 AS MATERIALIZED (SELECT id, deg,
-         |  round(CAST(1.0 AS DOUBLE) / (SELECT n FROM nn), 12) AS pr
-         |  FROM deg),
-         |$steps
-         |SELECT id AS doc_id, round(pr, 9) AS pr
-         |FROM p$PagerankIters ORDER BY doc_id""".stripMargin
-    },
-    "q254_dup_graph_triangles" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |deg AS (SELECT id, COUNT(*) AS d FROM
-         |  (SELECT doc_a AS id FROM pairs
-         |   UNION ALL SELECT doc_b FROM pairs) GROUP BY id),
-         |ds AS (SELECT CAST(COUNT(*) AS INTEGER) AS n_nodes,
-         |    CAST(SUM(d * (d - 1)) / 2 AS BIGINT) AS n_wedges FROM deg),
-         |ne AS (SELECT COUNT(*) AS n_edges FROM pairs),
-         |tri AS (SELECT COUNT(*) AS n_triangles FROM (
-         |  SELECT e1.doc_a AS a, e2.doc_b AS c
-         |  FROM pairs e1 JOIN pairs e2 ON e1.doc_b = e2.doc_a) p
-         |  WHERE EXISTS (SELECT 1 FROM pairs e3
-         |    WHERE e3.doc_a = p.a AND e3.doc_b = p.c))
-         |SELECT n_nodes, n_edges, n_wedges, n_triangles,
-         |  CASE WHEN n_wedges > 0
-         |    THEN 3.0 * n_triangles / n_wedges END AS transitivity
-         |FROM ds CROSS JOIN ne CROSS JOIN tri""".stripMargin,
-    "q227_dup_graph_degrees" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |deg AS (SELECT id, COUNT(*) AS degree FROM
-         |  (SELECT doc_a AS id FROM pairs
-         |   UNION ALL SELECT doc_b FROM pairs) GROUP BY id),
-         |hist AS (SELECT 'hist' AS kind, CAST(degree AS BIGINT) AS k,
-         |    CAST(COUNT(*) AS BIGINT) AS v
-         |  FROM deg GROUP BY degree),
-         |hubs AS (SELECT 'hub' AS kind, id AS k,
-         |    CAST(degree AS BIGINT) AS v
-         |  FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY degree DESC, id)
-         |      AS rk FROM deg)
-         |  WHERE rk <= 5)
-         |SELECT * FROM hist UNION ALL SELECT * FROM hubs
-         |ORDER BY kind, k""".stripMargin,
-    "q222_crawl_novelty" -> {
-      val t = tokensS("text")
-      s"""WITH sliced AS (SELECT doc_id, text,
-         |    NTILE(4) OVER (ORDER BY doc_id) AS slice
+         |x AS (SELECT sa.source AS source_a, sb.source AS source_b
+         |  FROM pairs
+         |  JOIN documents sa ON pairs.doc_a % $VariantIdOffset = sa.doc_id
+         |  JOIN documents sb ON pairs.doc_b % $VariantIdOffset = sb.doc_id
+         |  WHERE sa.source <> sb.source)
+         |SELECT least(source_a, source_b) AS src_lo,
+         |  greatest(source_a, source_b) AS src_hi,
+         |  CAST(count(*) AS INTEGER) AS n_pairs
+         |FROM x GROUP BY 1, 2 ORDER BY src_lo, src_hi""".stripMargin),
+    // exact 13-gram benchmark decontamination across source boundaries
+    Query("q131_ngram_contamination", (s, d) => ngramContamination(s, d),
+      s"""WITH tok AS (SELECT doc_id, source, ${tokensS("text")} AS t
          |  FROM documents),
-         |g AS (SELECT doc_id, slice,
-         |    unnest(list_distinct(${shinglesS(t, ShingleN)})) AS sh
-         |  FROM sliced),
-         |fs AS (SELECT sh, MIN(slice) AS fs FROM g GROUP BY sh)
-         |SELECT CAST(g.slice AS INTEGER) AS slice,
-         |  CAST(COUNT(DISTINCT g.doc_id) AS INTEGER) AS n_docs,
-         |  COUNT(*) AS n_grams,
-         |  CAST(SUM(CASE WHEN fs.fs = g.slice THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_new,
-         |  round(CAST(SUM(CASE WHEN fs.fs = g.slice THEN 1 ELSE 0 END)
-         |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS pct_new
-         |FROM g JOIN fs ON g.sh = fs.sh
-         |GROUP BY g.slice ORDER BY g.slice""".stripMargin
-    },
-    "q195_bloom_prefilter" -> {
-      def posList(h: String) = (0 until 4)
-        .map(j => s"${hex60S(s"md5('$j#' || $h)")} % 65536")
-        .mkString("[", ", ", "]")
-      s"""WITH inc AS ($stagedIncrementS),
-         |idx AS (SELECT DISTINCT ${normHashS("text")} AS h FROM documents),
-         |ih AS (SELECT doc_id, ${normHashS("text")} AS h FROM inc),
-         |bits AS (SELECT DISTINCT pos FROM
-         |  (SELECT unnest(${posList("h")}) AS pos FROM idx)),
-         |probe AS (SELECT DISTINCT doc_id, pos FROM
-         |  (SELECT doc_id, unnest(${posList("h")}) AS pos FROM ih)),
-         |pm AS (SELECT probe.doc_id,
-         |    CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END AS hit
-         |  FROM probe LEFT JOIN bits ON probe.pos = bits.pos),
-         |cd AS (SELECT doc_id, COUNT(*) AS np, SUM(hit) AS nh
-         |  FROM pm GROUP BY doc_id),
-         |cand AS (SELECT doc_id FROM cd WHERE np = nh),
-         |td AS (SELECT COUNT(*) AS n FROM ih
-         |  WHERE doc_id IN (SELECT doc_id FROM cand)
-         |    AND h IN (SELECT h FROM idx))
-         |SELECT
-         |  CAST((SELECT COUNT(*) FROM ih) AS INTEGER) AS n_incoming,
-         |  CAST((SELECT COUNT(*) FROM cand) AS INTEGER) AS n_candidates,
-         |  CAST((SELECT n FROM td) AS INTEGER) AS n_true_dup,
-         |  CAST((SELECT COUNT(*) FROM cand) - (SELECT n FROM td)
-         |    AS INTEGER) AS n_false_pos,
-         |  round(CAST((SELECT COUNT(*) FROM cand) - (SELECT n FROM td)
-         |      AS DOUBLE) /
-         |    CAST((SELECT COUNT(*) FROM ih) - (SELECT n FROM td)
-         |      AS DOUBLE), 6) AS fp_rate""".stripMargin
-    },
-    "q190_containment_pairs" -> {
-      // single-signature banding: band b's key is md5('b|sig_b')
-      val bands = (0 until NumHashes)
-        .map(b => s"md5('$b' || '|' || CAST(sig$b AS VARCHAR))")
-        .mkString(", ")
-      s"""${sigSelectS(containedCorpusS)},
-         |bk AS (SELECT doc_id, unnest([$bands]) AS bk FROM sig),
+         |g AS (SELECT DISTINCT doc_id, source, md5(x) AS h
+         |  FROM tok, unnest(${shinglesS("t", 13)}) AS u(x)),
+         |s AS (SELECT DISTINCT h, source FROM g),
+         |hits AS (SELECT DISTINCT gg.doc_id, gg.source AS src_doc,
+         |    ss.source AS src_other
+         |  FROM g gg JOIN s ss
+         |    ON gg.h = ss.h AND gg.source <> ss.source),
+         |dc AS (SELECT least(src_doc, src_other) AS src_lo,
+         |    greatest(src_doc, src_other) AS src_hi,
+         |    CAST(COUNT(DISTINCT CASE WHEN src_doc = least(src_doc, src_other)
+         |      THEN doc_id END) AS INTEGER) AS n_docs_lo,
+         |    CAST(COUNT(DISTINCT CASE WHEN src_doc = greatest(src_doc, src_other)
+         |      THEN doc_id END) AS INTEGER) AS n_docs_hi
+         |  FROM hits GROUP BY 1, 2),
+         |gc AS (SELECT a.source AS src_lo, b.source AS src_hi,
+         |    CAST(COUNT(DISTINCT a.h) AS INTEGER) AS n_shared_grams
+         |  FROM s a JOIN s b ON a.h = b.h AND a.source < b.source
+         |  GROUP BY 1, 2)
+         |SELECT dc.src_lo AS src_lo, dc.src_hi AS src_hi,
+         |  n_docs_lo, n_docs_hi, n_shared_grams
+         |FROM dc JOIN gc ON dc.src_lo = gc.src_lo AND dc.src_hi = gc.src_hi
+         |ORDER BY dc.src_lo, dc.src_hi""".stripMargin),
+    // daily-increment dedup: incoming batch vs persisted content index
+    Query("q153_incremental_dedup", incrementalDedup _, incrementalDedupSql),
+    // fuzzy increment: LSH index probe + best verified match per new doc
+    Query("q154_incremental_neardup", (s, d) => incrementalNearDup(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
          |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |i AS (SELECT doc_a, doc_b,
-         |    len(list_intersect(sa.sh, sb.sh)) AS ni,
-         |    len(sa.sh) AS sza, len(sb.sh) AS szb
+         |ver AS (SELECT doc_a, doc_b,
+         |    round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
          |  FROM pairs
          |  JOIN shs sa ON pairs.doc_a = sa.doc_id
-         |  JOIN shs sb ON pairs.doc_b = sb.doc_id)
-         |SELECT doc_a, doc_b,
-         |  CAST(sza AS INTEGER) AS sz_a, CAST(szb AS INTEGER) AS sz_b,
-         |  round(CAST(ni AS DOUBLE) / least(sza, szb), 6) AS containment,
-         |  round(CAST(ni AS DOUBLE) / (sza + szb - ni), 6) AS jaccard
-         |FROM i WHERE CAST(ni AS DOUBLE) / least(sza, szb) >= 0.9
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "q188_gram_novelty" -> {
-      val t = tokensS("text")
-      s"""WITH shs AS (SELECT doc_id,
-         |    unnest(list_distinct(${shinglesS(t, ShingleN)})) AS sh
-         |  FROM documents),
-         |fo AS (SELECT sh, min(doc_id) AS fd FROM shs GROUP BY sh),
-         |nv AS (SELECT fd, COUNT(*) AS n_novel FROM fo GROUP BY fd),
-         |sz AS (SELECT doc_id, COUNT(*) AS n_shingles FROM shs
-         |  GROUP BY doc_id)
-         |SELECT sz.doc_id, CAST(sz.n_shingles AS INTEGER) AS n_shingles,
-         |  CAST(COALESCE(nv.n_novel, 0) AS INTEGER) AS n_novel,
-         |  round(CAST(COALESCE(nv.n_novel, 0) AS DOUBLE) /
-         |    CAST(sz.n_shingles AS DOUBLE), 6) AS novelty
-         |FROM sz LEFT JOIN nv ON sz.doc_id = nv.fd
-         |ORDER BY sz.doc_id""".stripMargin
-    },
-    "q187_chunk_dup_ratio" ->
-      """WITH c AS (SELECT doc_id,
-        |    md5(substr(text, CAST(s AS INTEGER), 200)) AS h
-        |  FROM (SELECT doc_id, text,
-        |      unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
-        |    FROM documents)),
-        |dup AS (SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd
-        |    FROM c GROUP BY h) WHERE nd >= 2),
-        |f AS (SELECT doc_id, COUNT(*) AS n_dup FROM c
-        |  WHERE h IN (SELECT h FROM dup) GROUP BY doc_id),
-        |t AS (SELECT doc_id, COUNT(*) AS n_chunks FROM c GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(t.n_chunks AS INTEGER) AS n_chunks,
-        |  CAST(COALESCE(f.n_dup, 0) AS INTEGER) AS n_dup,
-        |  round(CAST(COALESCE(f.n_dup, 0) AS DOUBLE) /
-        |    CAST(t.n_chunks AS DOUBLE), 6) AS dup_ratio,
-        |  CAST(CAST(COALESCE(f.n_dup, 0) AS DOUBLE) /
-        |    CAST(t.n_chunks AS DOUBLE) < 0.5 AS INTEGER) AS keep
-        |FROM t LEFT JOIN f ON t.doc_id = f.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-    "q153_incremental_dedup" ->
-      s"""WITH inc AS ($stagedIncrementS),
-         |idx AS (SELECT DISTINCT ${normHashS("text")} AS h FROM documents),
-         |ih AS (SELECT doc_id, ${normHashS("text")} AS h FROM inc),
-         |fresh AS (SELECT h, COUNT(*) AS c FROM ih
-         |  WHERE h NOT IN (SELECT h FROM idx) GROUP BY h)
-         |SELECT
-         |  (SELECT CAST(COUNT(*) AS INTEGER) FROM ih) AS n_incoming,
-         |  (SELECT CAST(COUNT(*) AS INTEGER) FROM ih
-         |     WHERE h IN (SELECT h FROM idx)) AS n_dup_vs_existing,
-         |  (SELECT CAST(COUNT(*) AS INTEGER) FROM fresh) AS n_new_contents,
-         |  (SELECT CAST(COALESCE(SUM(c - 1), 0) AS INTEGER) FROM fresh)
-         |    AS n_within_batch_extra""".stripMargin,
-    "q26_dedup_exact" ->
-      s"""WITH corpus AS ($dupCorpusS)
-         |SELECT min(doc_id) AS canonical_id,
-         |  CAST(count(*) AS INTEGER) AS n_copies
-         |FROM (SELECT doc_id, ${normHashS("text")} AS h
-         |      FROM corpus)
-         |GROUP BY h ORDER BY canonical_id""".stripMargin,
-    "q27_minhash_sig" -> {
-      val cols = (0 until NumHashes).map(i => s"sig$i").mkString(", ")
-      s"""${sigSelectS("SELECT doc_id, text FROM documents")}
-         |SELECT doc_id, $cols FROM sig ORDER BY doc_id""".stripMargin
-    },
-    "q162_incremental_admission" -> {
+         |  JOIN shs sb ON pairs.doc_b = sb.doc_id
+         |  WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
+         |      len(list_distinct(list_concat(sa.sh, sb.sh))), 6)
+         |    >= $JaccardThreshold),
+         |cr AS (SELECT doc_b AS inc_doc, doc_a AS match_doc, jaccard
+         |  FROM ver WHERE doc_a < $VariantIdOffset
+         |    AND doc_b >= $VariantIdOffset),
+         |r AS (SELECT inc_doc, match_doc, jaccard,
+         |    ROW_NUMBER() OVER (PARTITION BY inc_doc
+         |      ORDER BY jaccard DESC, match_doc) AS rk,
+         |    CAST(COUNT(*) OVER (PARTITION BY inc_doc) AS INTEGER)
+         |      AS n_matches
+         |  FROM cr)
+         |SELECT inc_doc, match_doc, jaccard, n_matches
+         |FROM r WHERE rk = 1 ORDER BY inc_doc""".stripMargin),
+    // daily-ingest composite: exact gate → LSH probe → quality → budget
+    Query("q162_incremental_admission", (s, d) => incrementalAdmission(s, d), {
       val t = tokensS("text")
       val T = graft.text.TextOps
       val sigChain = sigSelectS(
@@ -3021,130 +2718,49 @@ object Dedup extends org.apache.spark.internal.Logging {
          |  CAST(SUM(CASE WHEN status = 'admitted' THEN toks ELSE 0 END)
          |    AS BIGINT) AS admitted_tokens
          |FROM f GROUP BY source ORDER BY source""".stripMargin
-    },
-    "q154_incremental_neardup" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |ver AS (SELECT doc_a, doc_b,
-         |    round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
-         |  FROM pairs
-         |  JOIN shs sa ON pairs.doc_a = sa.doc_id
-         |  JOIN shs sb ON pairs.doc_b = sb.doc_id
-         |  WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(sa.sh, sb.sh))), 6)
-         |    >= $JaccardThreshold),
-         |cr AS (SELECT doc_b AS inc_doc, doc_a AS match_doc, jaccard
-         |  FROM ver WHERE doc_a < $VariantIdOffset
-         |    AND doc_b >= $VariantIdOffset),
-         |r AS (SELECT inc_doc, match_doc, jaccard,
-         |    ROW_NUMBER() OVER (PARTITION BY inc_doc
-         |      ORDER BY jaccard DESC, match_doc) AS rk,
-         |    CAST(COUNT(*) OVER (PARTITION BY inc_doc) AS INTEGER)
-         |      AS n_matches
-         |  FROM cr)
-         |SELECT inc_doc, match_doc, jaccard, n_matches
-         |FROM r WHERE rk = 1 ORDER BY inc_doc""".stripMargin,
-    "q28_lsh_band_pairs" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS)
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "q29_ngram_jaccard" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b,
-         |  round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
-         |FROM pairs
-         |JOIN shs sa ON pairs.doc_a = sa.doc_id
-         |JOIN shs sb ON pairs.doc_b = sb.doc_id
-         |WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-         |    len(list_distinct(list_concat(sa.sh, sb.sh))), 6) >= $JaccardThreshold
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "q30_simhash" ->
-      s"""WITH ${simhashCtesS("SELECT doc_id, text FROM documents")}
-         |SELECT doc_id, simhash FROM s ORDER BY doc_id""".stripMargin,
-    "q62_simhash_pairs" -> {
-      val idxs = (0 until SimhashBlocks).mkString(", ")
-      s"""WITH ${simhashCtesS(nearDupCorpusS)},
-         |blk AS (SELECT doc_id, simhash, unnest([$idxs]) AS bi FROM s),
-         |blv AS (SELECT doc_id, simhash, bi,
-         |    (simhash >> (bi * 8)) & 255 AS bv FROM blk)
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hd
-         |FROM blv a JOIN blv b ON a.bi = b.bi AND a.bv = b.bv
-         |  AND a.doc_id < b.doc_id
-         |  AND bit_count(xor(a.simhash, b.simhash)) <= $HammingThreshold
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-    "q68_edit_distance" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b,
-         |  CAST(levenshtein(ca.text, cb.text) AS INTEGER) AS edit_dist,
-         |  CAST(greatest(length(ca.text), length(cb.text)) AS INTEGER)
-         |    AS max_len
-         |FROM pairs
-         |JOIN corpus ca ON pairs.doc_a = ca.doc_id
-         |JOIN corpus cb ON pairs.doc_b = cb.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin,
-    "q63_dedup_components" ->
-      s"""${sigSelectS(nearDupCorpusS).replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM corpus
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
-         |SELECT id AS doc_id, min(r) AS comp FROM reach
-         |GROUP BY id ORDER BY doc_id""".stripMargin,
-    "q75_contamination" ->
-      s"""${sigSelectS(nearDupCorpusS)},
-         |bk AS ($bandUnnestS),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-         |x AS (SELECT sa.source AS source_a, sb.source AS source_b
-         |  FROM pairs
-         |  JOIN documents sa ON pairs.doc_a % $VariantIdOffset = sa.doc_id
-         |  JOIN documents sb ON pairs.doc_b % $VariantIdOffset = sb.doc_id
-         |  WHERE sa.source <> sb.source)
-         |SELECT least(source_a, source_b) AS src_lo,
-         |  greatest(source_a, source_b) AS src_hi,
-         |  CAST(count(*) AS INTEGER) AS n_pairs
-         |FROM x GROUP BY 1, 2 ORDER BY src_lo, src_hi""".stripMargin,
-    "q180_curated_export" -> {
+    }),
+    // production canonical rule: keep the highest-QUALITY dup, not min-id
+    Query("q172_quality_keep", (s, d) => qualityKeepSummary(s, d), {
       val T = graft.text.TextOps
-      s"""${compChainFor("SELECT doc_id, source, text FROM documents")},
+      s"""$compChainS,
          |m0 AS (SELECT doc_id, text, ${tokensS("text")} AS t FROM corpus),
          |m AS (SELECT doc_id, ${T.qualityMeasureColsS}
          |  FROM m0),
          |sc AS (SELECT doc_id, ${T.qualityScoreExprS} AS qs FROM m),
-         |kept AS (SELECT m0.doc_id, m0.text FROM m0
-         |  JOIN comp ON m0.doc_id = comp.doc_id
-         |  JOIN sc ON m0.doc_id = sc.doc_id
-         |  WHERE comp.comp = m0.doc_id AND sc.qs >= $AdmissionQualityMin),
-         |sh AS (SELECT doc_id, text,
-         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % $CuratedShards
-         |      AS shard,
-         |    CAST(${bpeTokensS("text")} AS BIGINT) AS toks FROM kept)
-         |SELECT CAST(shard AS INTEGER) AS shard,
-         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS total_tokens,
-         |  bit_xor(${hex60S("md5(text)")}) AS xor_hash
-         |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
-    },
-    "q174_split_text_leakage" -> {
+         |j AS (SELECT c.doc_id, c.comp, sc.qs FROM comp c JOIN sc USING (doc_id)),
+         |p AS (SELECT j.*, ROW_NUMBER() OVER (PARTITION BY comp
+         |      ORDER BY qs DESC, doc_id) AS rk,
+         |    MIN(doc_id) OVER (PARTITION BY comp) AS min_id FROM j)
+         |SELECT d.source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS INTEGER) AS n_kept,
+         |  CAST(SUM(CASE WHEN rk = 1 AND p.doc_id <> min_id THEN 1 ELSE 0 END)
+         |    AS INTEGER) AS n_quality_picks,
+         |  CAST(SUM(CASE WHEN rk = 1
+         |      THEN CAST(CAST(qs AS DECIMAL(18,6)) * 1000000 AS BIGINT)
+         |      ELSE 0 END) AS DOUBLE)
+         |    / NULLIF(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END), 0)
+         |    / 1000000.0 AS mean_kept_quality
+         |FROM p JOIN documents d ON p.doc_id % $VariantIdOffset = d.doc_id
+         |GROUP BY d.source ORDER BY d.source""".stripMargin
+    }),
+    // post-dedup accounting: surviving tokens per source + keep ratio
+    Query("q173_dedup_token_budget", (s, d) => dedupTokenBudget(s, d),
+      s"""$compChainS,
+         |tk AS (SELECT doc_id,
+         |    CAST(${bpeTokensS("text")} AS BIGINT) AS toks FROM corpus),
+         |j AS (SELECT c.doc_id, c.comp, tk.toks FROM comp c JOIN tk USING (doc_id))
+         |SELECT d.source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS raw_tokens,
+         |  CAST(SUM(CASE WHEN j.doc_id = comp THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_kept,
+         |  CAST(SUM(CASE WHEN j.doc_id = comp THEN toks ELSE 0 END) AS BIGINT)
+         |    AS kept_tokens,
+         |  CAST(SUM(CASE WHEN j.doc_id = comp THEN toks ELSE 0 END) AS DOUBLE)
+         |    / NULLIF(SUM(toks), 0) AS token_keep_ratio
+         |FROM j JOIN documents d ON j.doc_id % $VariantIdOffset = d.doc_id
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    // train/heldout near-dup leakage: the MinHash complement of q131
+    Query("q174_split_text_leakage", (s, d) => crossSplitTextLeakage(s, d), {
       val splitS = (e: String) =>
         s"""CASE WHEN ${hex60S(s"md5(CAST($e AS VARCHAR))")} % 100 < 80
            | THEN 'train'
@@ -3172,81 +2788,198 @@ object Dedup extends org.apache.spark.internal.Logging {
          |  CAST(COUNT(DISTINCT CASE WHEN spa = split_hi THEN doc_a
          |    WHEN spb = split_hi THEN doc_b END) AS INTEGER) AS n_docs_hi
          |FROM x GROUP BY 1, 2 ORDER BY split_lo, split_hi""".stripMargin
-    },
-    "q172_quality_keep" -> {
+    }),
+    // ship-the-dataset: dedup+quality curation → sharded export → manifest
+    Query("q180_curated_export", (s, d) => curatedExport(s, d), {
       val T = graft.text.TextOps
-      s"""$compChainS,
+      s"""${compChainFor("SELECT doc_id, source, text FROM documents")},
          |m0 AS (SELECT doc_id, text, ${tokensS("text")} AS t FROM corpus),
          |m AS (SELECT doc_id, ${T.qualityMeasureColsS}
          |  FROM m0),
          |sc AS (SELECT doc_id, ${T.qualityScoreExprS} AS qs FROM m),
-         |j AS (SELECT c.doc_id, c.comp, sc.qs FROM comp c JOIN sc USING (doc_id)),
-         |p AS (SELECT j.*, ROW_NUMBER() OVER (PARTITION BY comp
-         |      ORDER BY qs DESC, doc_id) AS rk,
-         |    MIN(doc_id) OVER (PARTITION BY comp) AS min_id FROM j)
-         |SELECT d.source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS INTEGER) AS n_kept,
-         |  CAST(SUM(CASE WHEN rk = 1 AND p.doc_id <> min_id THEN 1 ELSE 0 END)
-         |    AS INTEGER) AS n_quality_picks,
-         |  CAST(SUM(CASE WHEN rk = 1
-         |      THEN CAST(CAST(qs AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-         |      ELSE 0 END) AS DOUBLE)
-         |    / NULLIF(SUM(CASE WHEN rk = 1 THEN 1 ELSE 0 END), 0)
-         |    / 1000000.0 AS mean_kept_quality
-         |FROM p JOIN documents d ON p.doc_id % $VariantIdOffset = d.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin
-    },
-    "q173_dedup_token_budget" ->
-      s"""$compChainS,
-         |tk AS (SELECT doc_id,
-         |    CAST(${bpeTokensS("text")} AS BIGINT) AS toks FROM corpus),
-         |j AS (SELECT c.doc_id, c.comp, tk.toks FROM comp c JOIN tk USING (doc_id))
-         |SELECT d.source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS raw_tokens,
-         |  CAST(SUM(CASE WHEN j.doc_id = comp THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_kept,
-         |  CAST(SUM(CASE WHEN j.doc_id = comp THEN toks ELSE 0 END) AS BIGINT)
-         |    AS kept_tokens,
-         |  CAST(SUM(CASE WHEN j.doc_id = comp THEN toks ELSE 0 END) AS DOUBLE)
-         |    / NULLIF(SUM(toks), 0) AS token_keep_ratio
-         |FROM j JOIN documents d ON j.doc_id % $VariantIdOffset = d.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "q72_dedup_keep" ->
-      s"""$compChainS
-         |SELECT d.source,
-         |  CAST(count(*) AS INTEGER) AS n_docs,
-         |  CAST(sum(CASE WHEN c.doc_id = c.comp THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_kept,
-         |  CAST(count(*) - sum(CASE WHEN c.doc_id = c.comp THEN 1 ELSE 0 END)
-         |    AS INTEGER) AS n_dropped
-         |FROM comp c JOIN documents d ON c.doc_id % $VariantIdOffset = d.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "q131_ngram_contamination" ->
-      s"""WITH tok AS (SELECT doc_id, source, ${tokensS("text")} AS t
+         |kept AS (SELECT m0.doc_id, m0.text FROM m0
+         |  JOIN comp ON m0.doc_id = comp.doc_id
+         |  JOIN sc ON m0.doc_id = sc.doc_id
+         |  WHERE comp.comp = m0.doc_id AND sc.qs >= $AdmissionQualityMin),
+         |sh AS (SELECT doc_id, text,
+         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % $CuratedShards
+         |      AS shard,
+         |    CAST(${bpeTokensS("text")} AS BIGINT) AS toks FROM kept)
+         |SELECT CAST(shard AS INTEGER) AS shard,
+         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS total_tokens,
+         |  bit_xor(${hex60S("md5(text)")}) AS xor_hash
+         |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
+    }),
+    // paragraph-granularity dedup gate: cross-doc duplicated-chunk ratio
+    Query("q187_chunk_dup_ratio", (s, d) => chunkDupRatio(s, d),
+      """WITH c AS (SELECT doc_id,
+        |    md5(substr(text, CAST(s AS INTEGER), 200)) AS h
+        |  FROM (SELECT doc_id, text,
+        |      unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
+        |    FROM documents)),
+        |dup AS (SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd
+        |    FROM c GROUP BY h) WHERE nd >= 2),
+        |f AS (SELECT doc_id, COUNT(*) AS n_dup FROM c
+        |  WHERE h IN (SELECT h FROM dup) GROUP BY doc_id),
+        |t AS (SELECT doc_id, COUNT(*) AS n_chunks FROM c GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(t.n_chunks AS INTEGER) AS n_chunks,
+        |  CAST(COALESCE(f.n_dup, 0) AS INTEGER) AS n_dup,
+        |  round(CAST(COALESCE(f.n_dup, 0) AS DOUBLE) /
+        |    CAST(t.n_chunks AS DOUBLE), 6) AS dup_ratio,
+        |  CAST(CAST(COALESCE(f.n_dup, 0) AS DOUBLE) /
+        |    CAST(t.n_chunks AS DOUBLE) < 0.5 AS INTEGER) AS keep
+        |FROM t LEFT JOIN f ON t.doc_id = f.doc_id
+        |ORDER BY t.doc_id""".stripMargin),
+    // per-doc first-occurrence shingle novelty — cross-corpus repetition
+    Query("q188_gram_novelty", (s, d) => gramNovelty(s, d), {
+      val t = tokensS("text")
+      s"""WITH shs AS (SELECT doc_id,
+         |    unnest(list_distinct(${shinglesS(t, ShingleN)})) AS sh
          |  FROM documents),
-         |g AS (SELECT DISTINCT doc_id, source, md5(x) AS h
-         |  FROM tok, unnest(${shinglesS("t", 13)}) AS u(x)),
-         |s AS (SELECT DISTINCT h, source FROM g),
-         |hits AS (SELECT DISTINCT gg.doc_id, gg.source AS src_doc,
-         |    ss.source AS src_other
-         |  FROM g gg JOIN s ss
-         |    ON gg.h = ss.h AND gg.source <> ss.source),
-         |dc AS (SELECT least(src_doc, src_other) AS src_lo,
-         |    greatest(src_doc, src_other) AS src_hi,
-         |    CAST(COUNT(DISTINCT CASE WHEN src_doc = least(src_doc, src_other)
-         |      THEN doc_id END) AS INTEGER) AS n_docs_lo,
-         |    CAST(COUNT(DISTINCT CASE WHEN src_doc = greatest(src_doc, src_other)
-         |      THEN doc_id END) AS INTEGER) AS n_docs_hi
-         |  FROM hits GROUP BY 1, 2),
-         |gc AS (SELECT a.source AS src_lo, b.source AS src_hi,
-         |    CAST(COUNT(DISTINCT a.h) AS INTEGER) AS n_shared_grams
-         |  FROM s a JOIN s b ON a.h = b.h AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT dc.src_lo AS src_lo, dc.src_hi AS src_hi,
-         |  n_docs_lo, n_docs_hi, n_shared_grams
-         |FROM dc JOIN gc ON dc.src_lo = gc.src_lo AND dc.src_hi = gc.src_hi
-         |ORDER BY dc.src_lo, dc.src_hi""".stripMargin,
-    "q237_shared_spans" ->
+         |fo AS (SELECT sh, min(doc_id) AS fd FROM shs GROUP BY sh),
+         |nv AS (SELECT fd, COUNT(*) AS n_novel FROM fo GROUP BY fd),
+         |sz AS (SELECT doc_id, COUNT(*) AS n_shingles FROM shs
+         |  GROUP BY doc_id)
+         |SELECT sz.doc_id, CAST(sz.n_shingles AS INTEGER) AS n_shingles,
+         |  CAST(COALESCE(nv.n_novel, 0) AS INTEGER) AS n_novel,
+         |  round(CAST(COALESCE(nv.n_novel, 0) AS DOUBLE) /
+         |    CAST(sz.n_shingles AS DOUBLE), 6) AS novelty
+         |FROM sz LEFT JOIN nv ON sz.doc_id = nv.fd
+         |ORDER BY sz.doc_id""".stripMargin
+    }),
+    // asymmetric containment dedup: quote/excerpt pairs Jaccard misses
+    Query("q190_containment_pairs", (s, d) => containmentPairs(s, d), {
+      // single-signature banding: band b's key is md5('b|sig_b')
+      val bands = (0 until NumHashes)
+        .map(b => s"md5('$b' || '|' || CAST(sig$b AS VARCHAR))")
+        .mkString(", ")
+      s"""${sigSelectS(containedCorpusS)},
+         |bk AS (SELECT doc_id, unnest([$bands]) AS bk FROM sig),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |i AS (SELECT doc_a, doc_b,
+         |    len(list_intersect(sa.sh, sb.sh)) AS ni,
+         |    len(sa.sh) AS sza, len(sb.sh) AS szb
+         |  FROM pairs
+         |  JOIN shs sa ON pairs.doc_a = sa.doc_id
+         |  JOIN shs sb ON pairs.doc_b = sb.doc_id)
+         |SELECT doc_a, doc_b,
+         |  CAST(sza AS INTEGER) AS sz_a, CAST(szb AS INTEGER) AS sz_b,
+         |  round(CAST(ni AS DOUBLE) / least(sza, szb), 6) AS containment,
+         |  round(CAST(ni AS DOUBLE) / (sza + szb - ni), 6) AS jaccard
+         |FROM i WHERE CAST(ni AS DOUBLE) / least(sza, szb) >= 0.9
+         |ORDER BY doc_a, doc_b""".stripMargin
+    }),
+    // Bloom-prefiltered index probe: broadcast bits gate the exact join
+    Query("q195_bloom_prefilter", (s, d) => bloomPrefilterDedup(s, d), {
+      def posList(h: String) = (0 until 4)
+        .map(j => s"${hex60S(s"md5('$j#' || $h)")} % 65536")
+        .mkString("[", ", ", "]")
+      s"""WITH inc AS ($stagedIncrementS),
+         |idx AS (SELECT DISTINCT ${normHashS("text")} AS h FROM documents),
+         |ih AS (SELECT doc_id, ${normHashS("text")} AS h FROM inc),
+         |bits AS (SELECT DISTINCT pos FROM
+         |  (SELECT unnest(${posList("h")}) AS pos FROM idx)),
+         |probe AS (SELECT DISTINCT doc_id, pos FROM
+         |  (SELECT doc_id, unnest(${posList("h")}) AS pos FROM ih)),
+         |pm AS (SELECT probe.doc_id,
+         |    CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END AS hit
+         |  FROM probe LEFT JOIN bits ON probe.pos = bits.pos),
+         |cd AS (SELECT doc_id, COUNT(*) AS np, SUM(hit) AS nh
+         |  FROM pm GROUP BY doc_id),
+         |cand AS (SELECT doc_id FROM cd WHERE np = nh),
+         |td AS (SELECT COUNT(*) AS n FROM ih
+         |  WHERE doc_id IN (SELECT doc_id FROM cand)
+         |    AND h IN (SELECT h FROM idx))
+         |SELECT
+         |  CAST((SELECT COUNT(*) FROM ih) AS INTEGER) AS n_incoming,
+         |  CAST((SELECT COUNT(*) FROM cand) AS INTEGER) AS n_candidates,
+         |  CAST((SELECT n FROM td) AS INTEGER) AS n_true_dup,
+         |  CAST((SELECT COUNT(*) FROM cand) - (SELECT n FROM td)
+         |    AS INTEGER) AS n_false_pos,
+         |  round(CAST((SELECT COUNT(*) FROM cand) - (SELECT n FROM td)
+         |      AS DOUBLE) /
+         |    CAST((SELECT COUNT(*) FROM ih) - (SELECT n FROM td)
+         |      AS DOUBLE), 6) AS fp_rate""".stripMargin
+    }),
+    // crawl-snapshot marginal value: per-slice new-gram fraction
+    Query("q222_crawl_novelty", (s, d) => crawlSliceNovelty(s, d), {
+      val t = tokensS("text")
+      s"""WITH sliced AS (SELECT doc_id, text,
+         |    NTILE(4) OVER (ORDER BY doc_id) AS slice
+         |  FROM documents),
+         |g AS (SELECT doc_id, slice,
+         |    unnest(list_distinct(${shinglesS(t, ShingleN)})) AS sh
+         |  FROM sliced),
+         |fs AS (SELECT sh, MIN(slice) AS fs FROM g GROUP BY sh)
+         |SELECT CAST(g.slice AS INTEGER) AS slice,
+         |  CAST(COUNT(DISTINCT g.doc_id) AS INTEGER) AS n_docs,
+         |  COUNT(*) AS n_grams,
+         |  CAST(SUM(CASE WHEN fs.fs = g.slice THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS n_new,
+         |  round(CAST(SUM(CASE WHEN fs.fs = g.slice THEN 1 ELSE 0 END)
+         |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS pct_new
+         |FROM g JOIN fs ON g.sh = fs.sh
+         |GROUP BY g.slice ORDER BY g.slice""".stripMargin
+    }),
+    // dedup health: connected-component size histogram
+    Query("q226_dup_cluster_sizes", (s, d) => dupClusterSizes(s, d),
+      s"""$compChainS
+         |SELECT CAST(sz AS INTEGER) AS cluster_size,
+         |  CAST(COUNT(*) AS INTEGER) AS n_clusters
+         |FROM (SELECT comp.comp, COUNT(*) AS sz FROM comp GROUP BY comp.comp)
+         |GROUP BY sz ORDER BY cluster_size""".stripMargin),
+    // dedup health: candidate-graph degree histogram + boilerplate hubs
+    Query("q227_dup_graph_degrees", (s, d) => dupGraphDegrees(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |deg AS (SELECT id, COUNT(*) AS degree FROM
+         |  (SELECT doc_a AS id FROM pairs
+         |   UNION ALL SELECT doc_b FROM pairs) GROUP BY id),
+         |hist AS (SELECT 'hist' AS kind, CAST(degree AS BIGINT) AS k,
+         |    CAST(COUNT(*) AS BIGINT) AS v
+         |  FROM deg GROUP BY degree),
+         |hubs AS (SELECT 'hub' AS kind, id AS k,
+         |    CAST(degree AS BIGINT) AS v
+         |  FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY degree DESC, id)
+         |      AS rk FROM deg)
+         |  WHERE rk <= 5)
+         |SELECT * FROM hist UNION ALL SELECT * FROM hubs
+         |ORDER BY kind, k""".stripMargin),
+    // LSH candidates graded against the planted near-dup truth set
+    Query("q232_lsh_planted_pr", (s, d) => lshPlantedPr(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |truth AS (SELECT doc_id AS doc_a,
+         |    doc_id + $VariantIdOffset AS doc_b
+         |  FROM documents WHERE doc_id % 20 = 0),
+         |hit AS (SELECT COUNT(*) AS n_hit FROM pairs
+         |  JOIN truth ON pairs.doc_a = truth.doc_a
+         |    AND pairs.doc_b = truth.doc_b),
+         |nc AS (SELECT COUNT(*) AS n_cand FROM pairs),
+         |nt AS (SELECT COUNT(*) AS n_truth FROM truth)
+         |SELECT CAST(n_cand AS INTEGER) AS n_cand,
+         |  CAST(n_truth AS INTEGER) AS n_truth,
+         |  CAST(n_hit AS INTEGER) AS n_hit,
+         |  round(CASE WHEN n_cand > 0
+         |    THEN CAST(n_hit AS DOUBLE) / n_cand END, 6)
+         |    AS precision_planted,
+         |  round(CAST(n_hit AS DOUBLE) / n_truth, 6) AS recall,
+         |  round(CASE WHEN n_cand > 0 AND
+         |      CAST(n_hit AS DOUBLE) / n_cand
+         |        + CAST(n_hit AS DOUBLE) / n_truth > 0
+         |    THEN 2.0 * (CAST(n_hit AS DOUBLE) / n_cand)
+         |      * (CAST(n_hit AS DOUBLE) / n_truth) /
+         |      (CAST(n_hit AS DOUBLE) / n_cand
+         |        + CAST(n_hit AS DOUBLE) / n_truth) END, 6) AS f1_planted
+         |FROM nc, nt, hit""".stripMargin),
+    // longest shared token span per cross-source pair (Lee et al. dedup)
+    Query("q237_shared_spans", (s, d) => sharedSpans(s, d),
       s"""WITH tok AS (SELECT doc_id, source,
          |    ${shinglesS(tokensS("text"), 13)} AS sh
          |  FROM documents),
@@ -3275,8 +3008,9 @@ object Dedup extends org.apache.spark.internal.Logging {
          |FROM (SELECT *, ROW_NUMBER() OVER (
          |    ORDER BY span_tokens DESC, doc_a, doc_b) AS rk FROM best)
          |WHERE rk <= 20
-         |ORDER BY span_tokens DESC, doc_a, doc_b""".stripMargin,
-    "q238_span_strip_plan" ->
+         |ORDER BY span_tokens DESC, doc_a, doc_b""".stripMargin),
+    // strip accounting: union of >=30-token shared spans per source
+    Query("q238_span_strip_plan", (s, d) => spanStripPlan(s, d),
       s"""WITH tok AS (SELECT doc_id, source,
          |    ${shinglesS(tokensS("text"), 13)} AS sh
          |  FROM documents),
@@ -3316,8 +3050,326 @@ object Dedup extends org.apache.spark.internal.Logging {
          |    THEN CAST(COALESCE(n_tokens_flagged, 0) AS DOUBLE)
          |      / n_tokens_total END, 6) AS flagged_frac
          |FROM tot LEFT JOIN fagg ON tot.source = fagg.source
-         |ORDER BY tot.source""".stripMargin,
+         |ORDER BY tot.source""".stripMargin),
+    // dup-graph triangle census: transitivity of the near-dup relation
+    Query("q254_dup_graph_triangles", (s, d) => dupGraphTriangles(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |deg AS (SELECT id, COUNT(*) AS d FROM
+         |  (SELECT doc_a AS id FROM pairs
+         |   UNION ALL SELECT doc_b FROM pairs) GROUP BY id),
+         |ds AS (SELECT CAST(COUNT(*) AS INTEGER) AS n_nodes,
+         |    CAST(SUM(d * (d - 1)) / 2 AS BIGINT) AS n_wedges FROM deg),
+         |ne AS (SELECT COUNT(*) AS n_edges FROM pairs),
+         |tri AS (SELECT COUNT(*) AS n_triangles FROM (
+         |  SELECT e1.doc_a AS a, e2.doc_b AS c
+         |  FROM pairs e1 JOIN pairs e2 ON e1.doc_b = e2.doc_a) p
+         |  WHERE EXISTS (SELECT 1 FROM pairs e3
+         |    WHERE e3.doc_a = p.a AND e3.doc_b = p.c))
+         |SELECT n_nodes, n_edges, n_wedges, n_triangles,
+         |  CASE WHEN n_wedges > 0
+         |    THEN 3.0 * n_triangles / n_wedges END AS transitivity
+         |FROM ds CROSS JOIN ne CROSS JOIN tri""".stripMargin),
+    // LSH (bands, rows) sweep: observed recall vs the analytic S-curve
+    Query("q272_lsh_tuning", (s, d) => lshTuning(s, d), q272OracleS),
+    // pairwise 13-gram source overlap: the decontamination triage matrix
+    Query("q274_source_overlap", (s, d) => sourceOverlap(s, d), {
+      val t = tokensS("text")
+      s"""WITH d AS (SELECT source,
+         |    list_distinct(${shinglesS("t", 13)}) AS sh
+         |  FROM (SELECT source, $t AS t FROM documents)),
+         |sg AS MATERIALIZED (SELECT DISTINCT source, md5(s) AS h
+         |  FROM (SELECT source, unnest(sh) AS s FROM d)),
+         |sizes AS (SELECT source, COUNT(*) AS sz FROM sg GROUP BY source),
+         |nh AS MATERIALIZED (SELECT sg.source, sg.h FROM sg JOIN (
+         |    SELECT h, COUNT(*) AS ns FROM sg GROUP BY h) hh
+         |  ON sg.h = hh.h WHERE hh.ns <= 8 AND hh.ns > 1),
+         |sh AS (SELECT a.source AS src_a, b.source AS src_b,
+         |    COUNT(*) AS n_shared
+         |  FROM nh a JOIN nh b ON a.h = b.h AND a.source < b.source
+         |  GROUP BY a.source, b.source)
+         |SELECT src_a, src_b, n_shared,
+         |  round(CAST(n_shared AS DOUBLE) /
+         |    CAST(least(za.sz, zb.sz) AS DOUBLE), 6) AS overlap
+         |FROM sh JOIN sizes za ON za.source = sh.src_a
+         |  JOIN sizes zb ON zb.source = sh.src_b
+         |ORDER BY src_a, src_b""".stripMargin
+    }),
+    // decontamination certificate: strip q238's plan, re-detect, report
+    Query("q281_strip_verify", (s, d) => stripVerify(s, d), q281OracleS),
+    // does duplication track quality? point-biserial per source
+    Query("q291_dup_quality_corr", (s, d) => dupQualityCorr(s, d),
+      q291OracleS),
+    // source-pair MinHash Jaccard (shard-merged signatures) vs exact,
+    // with absolute error — q274's sketch twin
+    // q299: single-level mins here vs the Spark side's shard-merged
+    // mins — hash-equality is the merge certificate
+    Query("q299_source_minhash", (s, d) => sourceMinhashJaccard(s, d), {
+      val t = tokensS("text")
+      val k = SrcMinhashK
+      val sigCols = (0 until k)
+        .map(i => s"min(${permS("h", i)}) AS sig$i").mkString(",\n    ")
+      val matchSum = (0 until k)
+        .map(i => s"(CASE WHEN a.sig$i = b.sig$i THEN 1 ELSE 0 END)")
+        .mkString(" + ")
+      s"""WITH d AS (SELECT source,
+         |    list_distinct(${shinglesS("t", 3)}) AS sh
+         |  FROM (SELECT source, $t AS t FROM documents)),
+         |sg AS MATERIALIZED (SELECT DISTINCT source,
+         |    ${hex60S("md5(s)")} AS h
+         |  FROM (SELECT source, unnest(sh) AS s FROM d)),
+         |sig AS (SELECT source,
+         |    $sigCols
+         |  FROM sg GROUP BY source),
+         |sizes AS (SELECT source, COUNT(*) AS sz FROM sg GROUP BY source),
+         |iv AS (SELECT x.source AS src_a, y.source AS src_b,
+         |    COUNT(*) AS ni
+         |  FROM sg x JOIN sg y ON x.h = y.h AND x.source < y.source
+         |  GROUP BY 1, 2),
+         |p AS (SELECT a.source AS src_a, b.source AS src_b,
+         |    CAST($matchSum AS BIGINT) AS n_match
+         |  FROM sig a JOIN sig b ON a.source < b.source),
+         |m AS (SELECT p.src_a, p.src_b,
+         |    CAST(COALESCE(iv.ni, 0) AS BIGINT) AS n_inter,
+         |    CAST(za.sz + zb.sz - COALESCE(iv.ni, 0) AS BIGINT)
+         |      AS n_union,
+         |    p.n_match
+         |  FROM p LEFT JOIN iv
+         |    ON iv.src_a = p.src_a AND iv.src_b = p.src_b
+         |  JOIN sizes za ON za.source = p.src_a
+         |  JOIN sizes zb ON zb.source = p.src_b)
+         |SELECT src_a, src_b, n_inter, n_union, n_match,
+         |  round(CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE), 6)
+         |    AS jaccard_exact,
+         |  CAST(n_match AS DOUBLE) / $k.0 AS jaccard_est,
+         |  round(abs(CAST(n_match AS DOUBLE) / $k.0 -
+         |    CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE)), 6)
+         |    AS abs_err
+         |FROM m ORDER BY src_a, src_b""".stripMargin
+    }),
+    // exact set-similarity join by prefix filtering (AllPairs/PPJoin):
+    // every Jaccard >= t pair with zero misses, candidates from one
+    // rarest-token-prefix equi-join — the exact complement to q28 LSH
+    // q318: the identical blocked prefix-filter algorithm in DuckDB —
+    // the canonical (global df, tok) ordering via list(... ORDER BY),
+    // the prefix slice, the (source, token) candidate equi-join, and
+    // the exact Jaccard verify
+    Query("q318_prefix_sim_join", (s, d) => prefixSimJoin(s, d), {
+      s"""WITH c AS (SELECT doc_id, text, source FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + $VariantIdOffset,
+         |    CASE WHEN len(t) > 1
+         |      THEN array_to_string(list_slice(t, 1, len(t) - 1), ' ')
+         |      ELSE text END,
+         |    source
+         |  FROM (SELECT doc_id, text, source, ${tokensS("text")} AS t
+         |    FROM documents)
+         |  WHERE doc_id % 20 = 0),
+         |tk AS MATERIALIZED (SELECT doc_id, source, unnest(
+         |    list_distinct(${tokensS("text")})) AS tok FROM c),
+         |dfc AS (SELECT tok, COUNT(*) AS df FROM tk GROUP BY tok),
+         |arrs AS MATERIALIZED (SELECT t.doc_id, t.source,
+         |    list(t.tok ORDER BY d.df, t.tok) AS ts
+         |  FROM tk t JOIN dfc d ON t.tok = d.tok
+         |  GROUP BY t.doc_id, t.source),
+         |sz AS MATERIALIZED (SELECT doc_id, source, ts, len(ts) AS n,
+         |    len(ts) - CAST(ceil(0.9 * len(ts)) AS INTEGER) + 1 AS p
+         |  FROM arrs),
+         |pre AS (SELECT doc_id, source, n,
+         |    unnest(list_slice(ts, 1, p)) AS tok
+         |  FROM sz),
+         |cand AS (SELECT DISTINCT a.source, a.doc_id AS doc_a,
+         |    b.doc_id AS doc_b
+         |  FROM pre a JOIN pre b ON a.source = b.source
+         |    AND a.tok = b.tok AND a.doc_id < b.doc_id
+         |    AND greatest(a.n, b.n) * 0.9 <= least(a.n, b.n)),
+         |v AS (SELECT c.source, c.doc_a, c.doc_b,
+         |    len(list_intersect(x.ts, y.ts)) AS inter,
+         |    x.n AS na, y.n AS nb
+         |  FROM cand c JOIN sz x ON x.doc_id = c.doc_a
+         |  JOIN sz y ON y.doc_id = c.doc_b)
+         |SELECT source, doc_a, doc_b, CAST(inter AS BIGINT) AS n_common,
+         |  round(CAST(inter AS DOUBLE) / (na + nb - inter), 6)
+         |    AS jaccard
+         |FROM v
+         |WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.9
+         |ORDER BY doc_a, doc_b""".stripMargin
+    }),
+    // winnowing (MOSS): guaranteed-detection fingerprint selection —
+    // window-min of packed (hash,pos) keys, postings-capped match join
+    // q320: the identical winnowing selection in DuckDB — 1-based list
+    // positions (vs Spark's 0-based posexplode) shift every packed key by
+    // one, which changes no window minimum; valid starts are i ≤ m−w+1
+    Query("q320_winnow_fingerprints", (s, d) => winnowMatches(s, d), {
+      val (n, w, maxPostings, minShared) = (4, 4, 8, 3)
+      s"""WITH c AS ($nearDupCorpusS),
+         |g AS (SELECT doc_id, ${shinglesS(tokensS("text"), n)} AS gs FROM c),
+         |sh AS (SELECT doc_id, CAST(u['pos'] AS BIGINT) AS pos,
+         |    CAST(u['sh'] AS VARCHAR) AS sh
+         |  FROM (SELECT doc_id, unnest(list_transform(
+         |      generate_series(1, len(gs)), i -> {'pos': i, 'sh': gs[i]})) AS u
+         |    FROM g)),
+         |keyed AS (SELECT doc_id, pos,
+         |    ${hex32S(seededMd5S(320, "sh"))} * 16777216
+         |      + (16777215 - pos) AS key,
+         |    COUNT(*) OVER (PARTITION BY doc_id) AS m
+         |  FROM sh),
+         |wk AS (SELECT doc_id, pos, m,
+         |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
+         |      ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS wkey
+         |  FROM keyed),
+         |fp AS (SELECT DISTINCT doc_id, wkey // 16777216 AS fph
+         |  FROM wk WHERE pos <= greatest(m - $w + 1, 1)),
+         |docn AS (SELECT doc_id, COUNT(*) AS n_fp FROM fp GROUP BY doc_id),
+         |rare AS (SELECT fph FROM fp GROUP BY fph
+         |  HAVING COUNT(*) <= $maxPostings),
+         |ff AS (SELECT f.doc_id, f.fph FROM fp f JOIN rare r
+         |  ON f.fph = r.fph),
+         |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |    COUNT(*) AS n_shared
+         |  FROM ff a JOIN ff b ON a.fph = b.fph AND a.doc_id < b.doc_id
+         |  GROUP BY a.doc_id, b.doc_id HAVING COUNT(*) >= $minShared)
+         |SELECT p.doc_a, p.doc_b, p.n_shared, x.n_fp AS n_fp_a,
+         |  y.n_fp AS n_fp_b,
+         |  round(CAST(p.n_shared AS DOUBLE) / least(x.n_fp, y.n_fp), 6)
+         |    AS overlap
+         |FROM pairs p JOIN docn x ON x.doc_id = p.doc_a
+         |JOIN docn y ON y.doc_id = p.doc_b
+         |ORDER BY doc_a, doc_b""".stripMargin
+    }),
+    // 2-core of the dup candidate graph: peel pendant evidence, keep
+    // cycle-corroborated clusters — the auto-dedup safety cut
+    // q325: the identical peel unrolled KcoreRounds times (idempotent
+    // once the fixpoint is reached — the Spark side proves convergence
+    // within the bound or fails loudly)
+    Query("q325_kcore", (s, d) => kcore(s, d), {
+      // MATERIALIZED per round: each e_i is read three times by round
+      // i+1 — inlining would re-expand the corpus scan 3^rounds times
+      val rounds = (1 to KcoreRounds).map { i =>
+        s"""d$i AS (SELECT id, COUNT(*) AS d FROM (
+           |    SELECT doc_a AS id FROM e${i - 1}
+           |    UNION ALL SELECT doc_b FROM e${i - 1}) GROUP BY id),
+           |a$i AS (SELECT id FROM d$i WHERE d >= $KcoreK),
+           |e$i AS MATERIALIZED (SELECT e.doc_a, e.doc_b FROM e${i - 1} e
+           |  JOIN a$i x ON e.doc_a = x.id
+           |  JOIN a$i y ON e.doc_b = y.id)""".stripMargin
+      }.mkString(",\n")
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |e0 AS MATERIALIZED (
+         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |$rounds
+         |SELECT id AS doc_id, CAST(COUNT(*) AS INTEGER) AS core_deg
+         |FROM (SELECT doc_a AS id FROM e$KcoreRounds
+         |  UNION ALL SELECT doc_b FROM e$KcoreRounds)
+         |GROUP BY id ORDER BY doc_id""".stripMargin
+    }),
+    // record linkage: LSH candidates scored by a native Jaro-Winkler
+    // Catalyst expression vs DuckDB's independent built-in
+    // q327: DuckDB's NATIVE jaro_winkler_similarity over the same
+    // candidate pairs — an independent implementation of the published
+    // definition, agreeing to 6 dp (flag applied to the rounded score
+    // on both sides)
+    Query("q327_jw_linkage", (s, d) => jwLinkage(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |c AS (SELECT doc_id, substr(lower(trim(text)), 1, 80) AS k
+         |  FROM corpus),
+         |j AS (SELECT p.doc_a, p.doc_b,
+         |    round(jaro_winkler_similarity(ca.k, cb.k), 6) AS jw
+         |  FROM pairs p JOIN c ca ON ca.doc_id = p.doc_a
+         |  JOIN c cb ON cb.doc_id = p.doc_b)
+         |SELECT doc_a, doc_b, jw,
+         |  CAST(jw >= 0.9 AS INTEGER) AS link
+         |FROM j ORDER BY doc_a, doc_b""".stripMargin),
+    // Spark 4 WITH RECURSIVE: the q63 oracle's transitive closure run
+    // natively — declarative recursion certified against the BSP loop
+    // q336: THE SAME recursive SQL as the Spark side (q63's oracle text)
+    Query("q336_recursive_cte", (s, d) => recursiveComponents(s, d),
+      s"""${sigSelectS(nearDupCorpusS).replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |reach(id, r, lvl) AS (
+         |  SELECT doc_id, doc_id, 0 FROM corpus
+         |  UNION ALL
+         |  SELECT e.dst, reach.r, reach.lvl + 1
+         |  FROM reach JOIN edges e ON e.src = reach.id
+         |  WHERE reach.lvl < $RecursionDepth AND reach.r < e.dst)
+         |SELECT id AS doc_id, min(r) AS comp FROM reach
+         |GROUP BY id ORDER BY doc_id""".stripMargin),
+    // PageRank over the dup graph: relational iteration, exact-decimal
+    // per-step sums, oracle = the same walk unrolled in SQL
+    // q341: the identical walk unrolled PagerankIters times; every
+    // double op mirrors the Spark side (literal 0.15/0.85, double
+    // division, round-12, DECIMAL(28,12) sum) — see [[pagerank]]
+    Query("q341_pagerank", (s, d) => pagerank(s, d), {
+      val steps = (1 to PagerankIters).map { i =>
+        s"""p$i AS MATERIALIZED (
+           |  SELECT d.id, d.deg,
+           |    round(CAST($PagerankTeleport AS DOUBLE) / (SELECT n FROM nn)
+           |      + CAST($PagerankDamping AS DOUBLE) *
+           |        CAST(SUM(CAST(round(p.pr / CAST(p.deg AS DOUBLE), 12)
+           |          AS DECIMAL(28,12))) AS DOUBLE), 12) AS pr
+           |  FROM edges e JOIN p${i - 1} p ON p.id = e.src
+           |    JOIN deg d ON d.id = e.dst
+           |  GROUP BY d.id, d.deg)""".stripMargin
+      }.mkString(",\n")
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
+         |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |deg AS MATERIALIZED (SELECT src AS id, COUNT(*) AS deg
+         |  FROM edges GROUP BY src),
+         |nn AS (SELECT COUNT(*) AS n FROM deg),
+         |p0 AS MATERIALIZED (SELECT id, deg,
+         |  round(CAST(1.0 AS DOUBLE) / (SELECT n FROM nn), 12) AS pr
+         |  FROM deg),
+         |$steps
+         |SELECT id AS doc_id, round(pr, 9) AS pr
+         |FROM p$PagerankIters ORDER BY doc_id""".stripMargin
+    }),
+    // Levenshtein-verified linkage on bounded normalized prefixes
+    // q350: same candidate pairs, same 64-char normalized prefixes,
+    // DuckDB's levenshtein — integer-exact comparator parity
+    Query("q350_edit_linkage", (s, d) => editDistanceLinkage(s, d),
+      s"""${sigSelectS(nearDupCorpusS)},
+         |bk AS ($bandUnnestS),
+         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+         |c AS (SELECT doc_id, substr(lower(trim(text)), 1, 64) AS k
+         |  FROM corpus)
+         |SELECT p.doc_a, p.doc_b,
+         |  CAST(levenshtein(ca.k, cb.k) AS INTEGER) AS dist,
+         |  CAST(levenshtein(ca.k, cb.k) <= 24 AS INTEGER) AS link
+         |FROM pairs p JOIN c ca ON ca.doc_id = p.doc_a
+         |JOIN c cb ON cb.doc_id = p.doc_b
+         |ORDER BY doc_a, doc_b""".stripMargin),
   )
+
+  /** q153's oracle, which q169's streaming twin shares. */
+  lazy val incrementalDedupSql: String =
+    s"""WITH inc AS ($stagedIncrementS),
+         |idx AS (SELECT DISTINCT ${normHashS("text")} AS h FROM documents),
+         |ih AS (SELECT doc_id, ${normHashS("text")} AS h FROM inc),
+         |fresh AS (SELECT h, COUNT(*) AS c FROM ih
+         |  WHERE h NOT IN (SELECT h FROM idx) GROUP BY h)
+         |SELECT
+         |  (SELECT CAST(COUNT(*) AS INTEGER) FROM ih) AS n_incoming,
+         |  (SELECT CAST(COUNT(*) AS INTEGER) FROM ih
+         |     WHERE h IN (SELECT h FROM idx)) AS n_dup_vs_existing,
+         |  (SELECT CAST(COUNT(*) AS INTEGER) FROM fresh) AS n_new_contents,
+         |  (SELECT CAST(COALESCE(SUM(c - 1), 0) AS INTEGER) FROM fresh)
+         |    AS n_within_batch_extra""".stripMargin
 
   /** DuckDB CTE chain ending in `s AS (SELECT doc_id, simhash)` — the
     * 32-bit SimHash of `corpus`, bit-identical to [[simhashOf]]. */

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -111,8 +113,12 @@ object AlsFactor {
       s"(((saa + $Lambda) * $num2 - sab * $num1) / $det)")
   }
 
-  def oracleSql: Map[String, String] = Map(
-    "q332_als_factorize" -> {
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // ALS matrix factorization, relationally: closed-form 2x2 ridge
+    // solves as groupBy aggregates, md5-seeded init — bit-exact twin
+    // of the MLlib flagship workload
+    Query("q332_als_factorize", (s, d) => alsFactorize(s, d), {
       val (uaS, ubS) = solveS("sra", "srb")
       val (vaS, vbS) = solveS("sra", "srb")
       def uStep(i: Int): String = {
@@ -165,5 +171,6 @@ object AlsFactor {
          |$steps
          |$arms
          |ORDER BY step, side""".stripMargin
-    })
+    }),
+  )
 }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -535,7 +537,14 @@ object GiniStump {
     sb.toString
   }
 
-  def oracleSql: Map[String, String] = Map(
-    "q80_gini_stump" -> treeSql(2),
-    "q108_gini_tree_d3" -> treeSql(3))
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // deterministic exact-gini depth-2 tree — the oracle-checked twin of
+    // q37's RNG-dependent RandomForest (as q57 is for q36's K-Means)
+    Query("q80_gini_stump", query _, treeSql(2)),
+    // q80's recursion generalized to depth k: the oracle-checked tree
+    // family covering the reference's maxDepth semantics at tractable
+    // oracle depth (one SQL builder generates both depths' CTE chains)
+    Query("q108_gini_tree_d3", (s, d) => tree(s, d, 3), treeSql(3)),
+  )
 }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel, seededKMeans}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.rdd.RDD
@@ -406,4 +408,12 @@ object KMeansJob {
         .sortWithinPartitions("vec_id"))
     elbow(feats, 2 to 6, maxIter = 20, evalFraction = 0.25).toDF()
   }
+
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // MLlib jobs (not SQL-expressible — rows-only driver check; metric
+    // bands asserted in ScalaTest specs)
+    Query.rowsOnly("q36_kmeans_stats", (s, d) => embeddingClusterStats(s, d)),
+    Query.rowsOnly("q38_kmeans_elbow", embeddingElbow _),
+  )
 }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -177,12 +179,16 @@ object Knn {
       .orderBy("query_id")
   }
 
-  /** DuckDB twin of [[knnEuclidExact]]: brute-force squared-L2 with the
-    * same ascending-index left-fold accumulation as Vectors.sqdist, rank
-    * by (dist, train id), majority vote with ties toward the smaller
-    * label. */
-  def oracleSql: Map[String, String] = Map(
-    "q65_knn_euclid" ->
+  /** The registry queries this module declares (see [[graft.Query]]).
+    * q65's oracle is the DuckDB twin of [[knnEuclidExact]]: brute-force
+    * squared-L2 with the same ascending-index left-fold accumulation as
+    * Vectors.sqdist, rank by (dist, train id), majority vote with ties
+    * toward the smaller label. */
+  def queries: Seq[Query] = Seq(
+    Query.rowsOnly("q39_knn_broadcast", (s, d) => embeddingKnnConfusion(s, d)),
+    // broadcast+mapPartitions kNN under a deterministic split — the
+    // oracle-checked twin of q39's randomSplit confusion matrix
+    Query("q65_knn_euclid", (s, d) => knnEuclidExact(s, d),
       """WITH e AS (SELECT vec_id, label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |  FROM embeddings),
@@ -209,5 +215,6 @@ object Knn {
         |SELECT query_id, CAST(n_label AS INTEGER) AS pred_label,
         |  CAST(CASE WHEN n_label = true_label THEN 1 ELSE 0 END AS INTEGER)
         |    AS correct
-        |FROM win WHERE vr = 1 ORDER BY query_id""".stripMargin)
+        |FROM win WHERE vr = 1 ORDER BY query_id""".stripMargin),
+  )
 }

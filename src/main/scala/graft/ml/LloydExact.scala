@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -327,24 +329,29 @@ object LloydExact {
        |    WHERE rn <= 2 GROUP BY vec_id))""".stripMargin
   }
 
-  def oracleSql: Map[String, String] =
-    Map("q57_kmeans_lloyd" ->
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // oracle-verified iterative ML + weighted-vote kNN
+    Query("q57_kmeans_lloyd", clusterQuery _,
       s"""WITH $lloydCtesS
          |SELECT a.cluster, COUNT(*) AS n,
          |  round(sqrt(${dotS("c.c", "c.c")}), 6) AS center_norm
          |FROM afinal a JOIN c$Iters c ON a.cluster = c.cluster
-         |GROUP BY a.cluster, c.c ORDER BY a.cluster""".stripMargin,
-      "q371_elbow_exact" -> {
-        val chains = ElbowKs.map(k =>
-          lloydCtesFor(srcES, s"k$k", k) + ",\n" + elbowMetricS(k))
-          .mkString(",\n")
-        val union = ElbowKs.map(k => s"SELECT * FROM k${k}m")
-          .mkString("\nUNION ALL\n")
-        s"""WITH $chains,
-           |u AS ($union)
-           |SELECT CAST(k AS INTEGER) AS k, wssse, silhouette,
-           |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY silhouette DESC, k)
-           |    = 1 THEN 1 ELSE 0 END AS INTEGER) AS is_best
-           |FROM u ORDER BY k""".stripMargin
-      })
+         |GROUP BY a.cluster, c.c ORDER BY a.cluster""".stripMargin),
+    // M8 elbow protocol (k sweep, WSSSE + silhouette, argmax best) made
+    // bit-exact over the deterministic Lloyd twin
+    Query("q371_elbow_exact", elbowExact _, {
+      val chains = ElbowKs.map(k =>
+        lloydCtesFor(srcES, s"k$k", k) + ",\n" + elbowMetricS(k))
+        .mkString(",\n")
+      val union = ElbowKs.map(k => s"SELECT * FROM k${k}m")
+        .mkString("\nUNION ALL\n")
+      s"""WITH $chains,
+         |u AS ($union)
+         |SELECT CAST(k AS INTEGER) AS k, wssse, silhouette,
+         |  CAST(CASE WHEN ROW_NUMBER() OVER (ORDER BY silhouette DESC, k)
+         |    = 1 THEN 1 ELSE 0 END AS INTEGER) AS is_best
+         |FROM u ORDER BY k""".stripMargin
+    }),
+  )
 }

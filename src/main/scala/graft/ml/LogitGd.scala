@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -341,53 +343,47 @@ object LogitGd {
     s"""lf AS MATERIALIZED ${lfBodyS("TRUE")},
        |$chainCtesS""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    // q306: same GD chain, then the adaptive (equal-mass) reliability
-    // binning — boundaries are quantiles of the confidence micro-units
-    "q306_reliability_ece" -> {
-      val qs = (1 until EceBins).map(i => i.toDouble / EceBins)
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // learned quality/language filter: full-batch GD logistic regression
+    Query("q267_logit_gd", (s, d) => logitGd(s, d),
       s"""WITH $gdCtes,
          |fin AS (SELECT y,
          |    round(1.0 / (1.0 + exp(-round(${dotS("w", "x")}, 6))), 6)
          |      AS p
          |  FROM lf, lw$Steps),
-         |m AS (SELECT
-         |    CASE WHEN (p >= 0.5) = (y = 1) THEN CAST(1 AS BIGINT)
-         |      ELSE CAST(0 AS BIGINT) END AS hit,
-         |    CAST(CAST(GREATEST(p, 1.0 - p) AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS cmu
-         |  FROM fin),
-         |bnd AS (SELECT quantile_cont(cmu, [${qs.mkString(", ")}])
-         |    AS bnd
-         |  FROM m),
-         |b AS (SELECT CAST(len(list_filter(bnd.bnd,
-         |      bb -> CAST(cmu AS DOUBLE) > bb)) AS INTEGER) AS bin,
-         |    hit, cmu
-         |  FROM m CROSS JOIN bnd),
-         |g AS (SELECT bin, COUNT(*) AS n, SUM(hit) AS nh, SUM(cmu) AS sc
-         |  FROM b GROUP BY bin),
-         |r AS (SELECT bin, CAST(n AS BIGINT) AS n,
-         |    CAST(nh AS BIGINT) AS n_correct,
-         |    CAST(nh AS DOUBLE) / CAST(n AS DOUBLE) AS acc0,
-         |    CAST(sc AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0
-         |      AS mconf0
-         |  FROM g),
-         |r2 AS (SELECT bin, n, n_correct,
-         |    round(mconf0, 6) AS mean_conf, round(acc0, 6) AS acc,
-         |    round(abs(acc0 - mconf0), 9) AS gap0
-         |  FROM r),
-         |e AS (SELECT CAST(SUM(CAST(gap0 * CAST(n AS DOUBLE)
-         |      AS DECIMAL(28,9))) AS DOUBLE) /
-         |    CAST(SUM(n) AS DOUBLE) AS ece
-         |  FROM r2)
-         |SELECT r2.bin, r2.n, r2.n_correct, r2.mean_conf, r2.acc,
-         |  round(r2.gap0, 6) AS gap, round(e.ece, 6) AS ece
-         |FROM r2, e ORDER BY r2.bin""".stripMargin
-    },
+         |met AS (SELECT
+         |    CAST(SUM(CASE WHEN (p >= 0.5) = (y = 1) THEN 1 ELSE 0 END)
+         |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS acc,
+         |    CAST(SUM(CAST(round(-(y * ln(least(greatest(p, 0.000001),
+         |        0.999999)) + (1 - y) * ln(1.0 - least(greatest(p,
+         |        0.000001), 0.999999))), 6) AS DECIMAL(28,6)))
+         |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS llm,
+         |    CAST(COUNT(*) AS INTEGER) AS n
+         |  FROM fin)
+         |SELECT ${(1 to NumFeatures).map(j =>
+            s"round(w[$j], 9) AS w${j - 1}").mkString(",\n  ")},
+         |  round(acc, 6) AS accuracy,
+         |  round(llm, 6) AS log_loss,
+         |  n
+         |FROM lw$Steps, met""".stripMargin),
+    // active learning: the docs nearest the 0.5 decision boundary
+    Query("q287_uncertainty_sample", (s, d) => uncertaintySample(s, d),
+      s"""WITH $gdCtes,
+         |fin AS (SELECT doc_id, y,
+         |    round(1.0 / (1.0 + exp(-round(${dotS("w", "x")}, 6))), 6)
+         |      AS p
+         |  FROM lf, lw$Steps)
+         |SELECT doc_id, y, round(p, 6) AS p_en,
+         |  round(abs(p - 0.5), 6) AS uncertainty
+         |FROM fin
+         |ORDER BY abs(p - 0.5), doc_id LIMIT $UncK""".stripMargin),
+    // split-conformal coverage certificate on q267's classifier:
+    // distribution-free >=90% coverage, executed and measured
     // q304: the same GD chain trained on the hash-split train half,
     // exact order-statistic q-hat on the calibration quarter, coverage
     // and set size measured on the test quarter
-    "q304_conformal" -> {
+    Query("q304_conformal", (s, d) => conformalCoverage(s, d), {
       val part = graft.functions.TextPrims.hex60S(
         "md5('cf#' || CAST(doc_id AS VARCHAR))") + " % 4"
       val oneMinusAlpha = 1.0 - ConformalAlpha
@@ -431,36 +427,50 @@ object LogitGd {
          |  round(tst.coverage, 6) AS coverage,
          |  round(tst.setsz, 6) AS avg_set_size
          |FROM cts, tst""".stripMargin
-    },
-    "q267_logit_gd" ->
+    }),
+    // reliability table + ECE of the GD classifier's confidence —
+    // the calibration eval q267's accuracy/log-loss leave open
+    // q306: same GD chain, then the adaptive (equal-mass) reliability
+    // binning — boundaries are quantiles of the confidence micro-units
+    Query("q306_reliability_ece", (s, d) => reliabilityEce(s, d), {
+      val qs = (1 until EceBins).map(i => i.toDouble / EceBins)
       s"""WITH $gdCtes,
          |fin AS (SELECT y,
          |    round(1.0 / (1.0 + exp(-round(${dotS("w", "x")}, 6))), 6)
          |      AS p
          |  FROM lf, lw$Steps),
-         |met AS (SELECT
-         |    CAST(SUM(CASE WHEN (p >= 0.5) = (y = 1) THEN 1 ELSE 0 END)
-         |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS acc,
-         |    CAST(SUM(CAST(round(-(y * ln(least(greatest(p, 0.000001),
-         |        0.999999)) + (1 - y) * ln(1.0 - least(greatest(p,
-         |        0.000001), 0.999999))), 6) AS DECIMAL(28,6)))
-         |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS llm,
-         |    CAST(COUNT(*) AS INTEGER) AS n
-         |  FROM fin)
-         |SELECT ${(1 to NumFeatures).map(j =>
-            s"round(w[$j], 9) AS w${j - 1}").mkString(",\n  ")},
-         |  round(acc, 6) AS accuracy,
-         |  round(llm, 6) AS log_loss,
-         |  n
-         |FROM lw$Steps, met""".stripMargin,
-    "q287_uncertainty_sample" ->
-      s"""WITH $gdCtes,
-         |fin AS (SELECT doc_id, y,
-         |    round(1.0 / (1.0 + exp(-round(${dotS("w", "x")}, 6))), 6)
-         |      AS p
-         |  FROM lf, lw$Steps)
-         |SELECT doc_id, y, round(p, 6) AS p_en,
-         |  round(abs(p - 0.5), 6) AS uncertainty
-         |FROM fin
-         |ORDER BY abs(p - 0.5), doc_id LIMIT $UncK""".stripMargin)
+         |m AS (SELECT
+         |    CASE WHEN (p >= 0.5) = (y = 1) THEN CAST(1 AS BIGINT)
+         |      ELSE CAST(0 AS BIGINT) END AS hit,
+         |    CAST(CAST(GREATEST(p, 1.0 - p) AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS cmu
+         |  FROM fin),
+         |bnd AS (SELECT quantile_cont(cmu, [${qs.mkString(", ")}])
+         |    AS bnd
+         |  FROM m),
+         |b AS (SELECT CAST(len(list_filter(bnd.bnd,
+         |      bb -> CAST(cmu AS DOUBLE) > bb)) AS INTEGER) AS bin,
+         |    hit, cmu
+         |  FROM m CROSS JOIN bnd),
+         |g AS (SELECT bin, COUNT(*) AS n, SUM(hit) AS nh, SUM(cmu) AS sc
+         |  FROM b GROUP BY bin),
+         |r AS (SELECT bin, CAST(n AS BIGINT) AS n,
+         |    CAST(nh AS BIGINT) AS n_correct,
+         |    CAST(nh AS DOUBLE) / CAST(n AS DOUBLE) AS acc0,
+         |    CAST(sc AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0
+         |      AS mconf0
+         |  FROM g),
+         |r2 AS (SELECT bin, n, n_correct,
+         |    round(mconf0, 6) AS mean_conf, round(acc0, 6) AS acc,
+         |    round(abs(acc0 - mconf0), 9) AS gap0
+         |  FROM r),
+         |e AS (SELECT CAST(SUM(CAST(gap0 * CAST(n AS DOUBLE)
+         |      AS DECIMAL(28,9))) AS DOUBLE) /
+         |    CAST(SUM(n) AS DOUBLE) AS ece
+         |  FROM r2)
+         |SELECT r2.bin, r2.n, r2.n_correct, r2.mean_conf, r2.acc,
+         |  round(r2.gap0, 6) AS gap, round(e.ece, 6) AS ece
+         |FROM r2, e ORDER BY r2.bin""".stripMargin
+    }),
+  )
 }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -581,10 +583,116 @@ object PcaPower {
        |$steps""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // top principal component by bit-exact power iteration
+    Query("q245_pca_power", (s, d) => pcaPower(s, d),
+      s"""WITH $baseCtes,
+         |${iterChain("", "crows")},
+         |vd AS (SELECT u['dim'] AS dim, u['l'] AS loading FROM (
+         |  SELECT unnest(list_transform(generate_series(1, $Dim),
+         |    i -> {'dim': i - 1, 'l': v[i]})) AS u FROM v$Iters))
+         |SELECT CAST(vd.dim AS INTEGER) AS dim,
+         |  round(mu.mu, 6) AS mu_dim,
+         |  round(d.cov, 6) AS var_dim,
+         |  round(vd.loading, 6) AS loading,
+         |  round(v$Iters.nrm, 6) AS lambda1,
+         |  round(v$Iters.nrm / tr.tr, 6) AS explained
+         |FROM vd
+         |JOIN mu ON mu.pos = vd.dim
+         |JOIN cov d ON d.j = vd.dim AND d.k = vd.dim
+         |CROSS JOIN v$Iters CROSS JOIN tr
+         |ORDER BY dim""".stripMargin),
+    // second principal component by deflation, same bit-exact orbit
+    Query("q248_pca_deflate", (s, d) => pcaDeflate(s, d),
+      s"""WITH $baseCtes,
+         |${iterChain("", "crows")},
+         |cov2 AS MATERIALIZED (SELECT c.j, c.k,
+         |    c.cov - v.nrm * v.v[c.j + 1] * v.v[c.k + 1] AS cov
+         |  FROM cov c CROSS JOIN v$Iters v),
+         |crows2 AS MATERIALIZED (SELECT j, list(cov ORDER BY k) AS crow
+         |  FROM cov2 GROUP BY j),
+         |${iterChain("b", "crows2")},
+         |vd AS (SELECT u['dim'] AS dim, u['l1'] AS l1, u['l2'] AS l2
+         |  FROM (SELECT unnest(list_transform(generate_series(1, $Dim),
+         |    i -> {'dim': i - 1, 'l1': a.v[i], 'l2': b.v[i]})) AS u
+         |  FROM v$Iters a CROSS JOIN bv$Iters b))
+         |SELECT CAST(vd.dim AS INTEGER) AS dim,
+         |  round(vd.l1, 6) AS loading1,
+         |  round(vd.l2, 6) AS loading2,
+         |  round(a.nrm, 6) AS lambda1,
+         |  round(b.nrm, 6) AS lambda2,
+         |  round((a.nrm + b.nrm) / tr.tr, 6) AS cum_explained,
+         |  round(${dotS("a.v", "b.v")}, 6) AS ortho_dot
+         |FROM vd CROSS JOIN v$Iters a CROSS JOIN bv$Iters b CROSS JOIN tr
+         |ORDER BY dim""".stripMargin),
+    // PCA projection per label: 2-D separability in the dominant plane
+    Query("q258_pca_projection", (s, d) => pcaProjection(s, d), {
+      def mS(c: String) =
+        s"CAST(SUM($c) AS DOUBLE) / COUNT(*) / 1000000.0"
+      def vS(c: String) = {
+        val raw = s"CAST(SUM($c) AS DOUBLE) / COUNT(*)"
+        s"(CAST(SUM($c * $c) AS DOUBLE) / COUNT(*) - ($raw) * ($raw)) " +
+          "/ 1.0e12"
+      }
+      s"""WITH $baseCtes,
+         |${iterChain("", "crows")},
+         |cov2 AS MATERIALIZED (SELECT c.j, c.k,
+         |    c.cov - v.nrm * v.v[c.j + 1] * v.v[c.k + 1] AS cov
+         |  FROM cov c CROSS JOIN v$Iters v),
+         |crows2 AS MATERIALIZED (SELECT j, list(cov ORDER BY k) AS crow
+         |  FROM cov2 GROUP BY j),
+         |${iterChain("b", "crows2")},
+         |cvec AS (SELECT vec_id, list(cv ORDER BY j) AS c
+         |  FROM cx GROUP BY vec_id),
+         |proj AS (SELECT emb.label,
+         |    CAST(CAST(${dotS("cvec.c", "a.v")} AS DECIMAL(18,6))
+         |      * 1000000 AS BIGINT) AS pc1,
+         |    CAST(CAST(${dotS("cvec.c", "b.v")} AS DECIMAL(18,6))
+         |      * 1000000 AS BIGINT) AS pc2
+         |  FROM cvec JOIN embeddings emb ON cvec.vec_id = emb.vec_id
+         |  CROSS JOIN v$Iters a CROSS JOIN bv$Iters b)
+         |SELECT CAST(label AS INTEGER) AS label,
+         |  CAST(COUNT(*) AS INTEGER) AS n,
+         |  ${mS("pc1")} AS mean_pc1,
+         |  ${mS("pc2")} AS mean_pc2,
+         |  ${vS("pc1")} AS var_pc1,
+         |  ${vS("pc2")} AS var_pc2
+         |FROM proj GROUP BY label ORDER BY label""".stripMargin
+    }),
+    // top-r PCA in ONE blocked orthogonal-iteration chain (r=4)
+    Query("q266_pca_block", (s, d) => pcaBlock(s, d), {
+      val last = s"mq$Iters"
+      val pairs = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
+      val omax = pairs.map { case (a, b) =>
+        s"abs(${dotS(s"q$a", s"q$b")})" }.mkString("greatest(", ", ", ")")
+      s"""WITH $baseCtes,
+         |$blockChain,
+         |vd AS (SELECT u['dim'] AS dim, u['l1'] AS l1, u['l2'] AS l2,
+         |    u['l3'] AS l3, u['l4'] AS l4
+         |  FROM (SELECT unnest(list_transform(generate_series(1, $Dim),
+         |    i -> {'dim': i - 1, 'l1': q1[i], 'l2': q2[i], 'l3': q3[i],
+         |      'l4': q4[i]})) AS u FROM $last)),
+         |od AS (SELECT $omax AS omax FROM $last)
+         |SELECT CAST(vd.dim AS INTEGER) AS dim,
+         |  round(vd.l1, 6) AS loading1,
+         |  round(vd.l2, 6) AS loading2,
+         |  round(vd.l3, 6) AS loading3,
+         |  round(vd.l4, 6) AS loading4,
+         |  round(b.n1, 6) AS lambda1,
+         |  round(b.n2, 6) AS lambda2,
+         |  round(b.n3, 6) AS lambda3,
+         |  round(b.n4, 6) AS lambda4,
+         |  round((b.n1 + b.n2 + b.n3 + b.n4) / tr.tr, 6) AS cum_explained,
+         |  round(od.omax, 6) AS ortho_max
+         |FROM vd CROSS JOIN $last b CROSS JOIN od CROSS JOIN tr
+         |ORDER BY dim""".stripMargin
+    }),
+    // PCA whitening via the q266 block: anisotropy before vs after,
+    // plus explained ratio and the dominant-direction share
     // q307: the q266 chain + the whitening transform + the q293-style
     // offset-pair cosine means in both geometries
-    "q307_whitening" -> {
+    Query("q307_whitening", (s, d) => whitenReport(s, d), {
       val last = s"mq$Iters"
       val mqs = (1 to BlockR).map(j =>
         s"${dotS("mua", s"q$j")} AS mq$j").mkString(",\n    ")
@@ -623,104 +731,6 @@ object PcaPower {
          |  round((n1 + n2 + n3 + n4) / tr.tr, 6) AS explained_r4,
          |  round(n1 / (n1 + n2 + n3 + n4), 6) AS lam1_share
          |FROM pa, $last, tr""".stripMargin
-    },
-    "q266_pca_block" -> {
-      val last = s"mq$Iters"
-      val pairs = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
-      val omax = pairs.map { case (a, b) =>
-        s"abs(${dotS(s"q$a", s"q$b")})" }.mkString("greatest(", ", ", ")")
-      s"""WITH $baseCtes,
-         |$blockChain,
-         |vd AS (SELECT u['dim'] AS dim, u['l1'] AS l1, u['l2'] AS l2,
-         |    u['l3'] AS l3, u['l4'] AS l4
-         |  FROM (SELECT unnest(list_transform(generate_series(1, $Dim),
-         |    i -> {'dim': i - 1, 'l1': q1[i], 'l2': q2[i], 'l3': q3[i],
-         |      'l4': q4[i]})) AS u FROM $last)),
-         |od AS (SELECT $omax AS omax FROM $last)
-         |SELECT CAST(vd.dim AS INTEGER) AS dim,
-         |  round(vd.l1, 6) AS loading1,
-         |  round(vd.l2, 6) AS loading2,
-         |  round(vd.l3, 6) AS loading3,
-         |  round(vd.l4, 6) AS loading4,
-         |  round(b.n1, 6) AS lambda1,
-         |  round(b.n2, 6) AS lambda2,
-         |  round(b.n3, 6) AS lambda3,
-         |  round(b.n4, 6) AS lambda4,
-         |  round((b.n1 + b.n2 + b.n3 + b.n4) / tr.tr, 6) AS cum_explained,
-         |  round(od.omax, 6) AS ortho_max
-         |FROM vd CROSS JOIN $last b CROSS JOIN od CROSS JOIN tr
-         |ORDER BY dim""".stripMargin
-    },
-    "q245_pca_power" ->
-      s"""WITH $baseCtes,
-         |${iterChain("", "crows")},
-         |vd AS (SELECT u['dim'] AS dim, u['l'] AS loading FROM (
-         |  SELECT unnest(list_transform(generate_series(1, $Dim),
-         |    i -> {'dim': i - 1, 'l': v[i]})) AS u FROM v$Iters))
-         |SELECT CAST(vd.dim AS INTEGER) AS dim,
-         |  round(mu.mu, 6) AS mu_dim,
-         |  round(d.cov, 6) AS var_dim,
-         |  round(vd.loading, 6) AS loading,
-         |  round(v$Iters.nrm, 6) AS lambda1,
-         |  round(v$Iters.nrm / tr.tr, 6) AS explained
-         |FROM vd
-         |JOIN mu ON mu.pos = vd.dim
-         |JOIN cov d ON d.j = vd.dim AND d.k = vd.dim
-         |CROSS JOIN v$Iters CROSS JOIN tr
-         |ORDER BY dim""".stripMargin,
-    "q258_pca_projection" -> {
-      def mS(c: String) =
-        s"CAST(SUM($c) AS DOUBLE) / COUNT(*) / 1000000.0"
-      def vS(c: String) = {
-        val raw = s"CAST(SUM($c) AS DOUBLE) / COUNT(*)"
-        s"(CAST(SUM($c * $c) AS DOUBLE) / COUNT(*) - ($raw) * ($raw)) " +
-          "/ 1.0e12"
-      }
-      s"""WITH $baseCtes,
-         |${iterChain("", "crows")},
-         |cov2 AS MATERIALIZED (SELECT c.j, c.k,
-         |    c.cov - v.nrm * v.v[c.j + 1] * v.v[c.k + 1] AS cov
-         |  FROM cov c CROSS JOIN v$Iters v),
-         |crows2 AS MATERIALIZED (SELECT j, list(cov ORDER BY k) AS crow
-         |  FROM cov2 GROUP BY j),
-         |${iterChain("b", "crows2")},
-         |cvec AS (SELECT vec_id, list(cv ORDER BY j) AS c
-         |  FROM cx GROUP BY vec_id),
-         |proj AS (SELECT emb.label,
-         |    CAST(CAST(${dotS("cvec.c", "a.v")} AS DECIMAL(18,6))
-         |      * 1000000 AS BIGINT) AS pc1,
-         |    CAST(CAST(${dotS("cvec.c", "b.v")} AS DECIMAL(18,6))
-         |      * 1000000 AS BIGINT) AS pc2
-         |  FROM cvec JOIN embeddings emb ON cvec.vec_id = emb.vec_id
-         |  CROSS JOIN v$Iters a CROSS JOIN bv$Iters b)
-         |SELECT CAST(label AS INTEGER) AS label,
-         |  CAST(COUNT(*) AS INTEGER) AS n,
-         |  ${mS("pc1")} AS mean_pc1,
-         |  ${mS("pc2")} AS mean_pc2,
-         |  ${vS("pc1")} AS var_pc1,
-         |  ${vS("pc2")} AS var_pc2
-         |FROM proj GROUP BY label ORDER BY label""".stripMargin
-    },
-    "q248_pca_deflate" ->
-      s"""WITH $baseCtes,
-         |${iterChain("", "crows")},
-         |cov2 AS MATERIALIZED (SELECT c.j, c.k,
-         |    c.cov - v.nrm * v.v[c.j + 1] * v.v[c.k + 1] AS cov
-         |  FROM cov c CROSS JOIN v$Iters v),
-         |crows2 AS MATERIALIZED (SELECT j, list(cov ORDER BY k) AS crow
-         |  FROM cov2 GROUP BY j),
-         |${iterChain("b", "crows2")},
-         |vd AS (SELECT u['dim'] AS dim, u['l1'] AS l1, u['l2'] AS l2
-         |  FROM (SELECT unnest(list_transform(generate_series(1, $Dim),
-         |    i -> {'dim': i - 1, 'l1': a.v[i], 'l2': b.v[i]})) AS u
-         |  FROM v$Iters a CROSS JOIN bv$Iters b))
-         |SELECT CAST(vd.dim AS INTEGER) AS dim,
-         |  round(vd.l1, 6) AS loading1,
-         |  round(vd.l2, 6) AS loading2,
-         |  round(a.nrm, 6) AS lambda1,
-         |  round(b.nrm, 6) AS lambda2,
-         |  round((a.nrm + b.nrm) / tr.tr, 6) AS cum_explained,
-         |  round(${dotS("a.v", "b.v")}, 6) AS ortho_dot
-         |FROM vd CROSS JOIN v$Iters a CROSS JOIN bv$Iters b CROSS JOIN tr
-         |ORDER BY dim""".stripMargin)
+    }),
+  )
 }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -559,7 +561,8 @@ object PqCodebook {
       .orderBy("query_id")
   }
 
-  def oracleSql: Map[String, String] = {
+  /** The DuckDB text shared by the PQ oracles, built on first use. */
+  private object PqSql {
     import LloydExact.{dotS, Iters}
     val blockCtes = (0 until Blocks).map { b =>
       LloydExact.lloydCtesFor(
@@ -625,24 +628,35 @@ object PqCodebook {
            |LEFT JOIN common ON q.query_id = common.query_id
            |ORDER BY q.query_id""".stripMargin
     }
-    Map(
-      "q201_pq_codebook" ->
-        s"""WITH e0 AS (SELECT vec_id,
-           |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           |  FROM embeddings),
-           |$blockCtes
-           |$blockSelects
-           |ORDER BY block, cluster""".stripMargin,
-      "q211_pq_adc_recall" -> adcRecallSql,
-      // q233's oracle IS q211's: the persisted index must answer the
-      // identical recall question — hash-equality proves the round-trip
-      "q233_pq_adc_persisted" -> adcRecallSql,
-      "q235_ivfadc_recall" -> ivfAdcSql,
-      // q243's oracle IS q235's: the persisted combined index must
-      // answer the identical recall question — hash-equality proves
-      // the round trip lossless
-      "q243_ivfadc_persisted" -> ivfAdcSql)
   }
+
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // product quantization: per-block Lloyd codebooks + reconstruction MSE
+    Query("q201_pq_codebook", (s, d) => pqCodebooks(s, d),
+      s"""WITH e0 AS (SELECT vec_id,
+         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  FROM embeddings),
+         |${PqSql.blockCtes}
+         |${PqSql.blockSelects}
+         |ORDER BY block, cluster""".stripMargin),
+    // PQ-ADC search: code-only scan + per-query LUT, recall vs exact
+    Query("q211_pq_adc_recall", (s, d) => pqAdcRecall(s, d),
+      PqSql.adcRecallSql),
+    // q211's amortized twin: build-once persisted PQ index, probe-only
+    // q233's oracle IS q211's: the persisted index must answer the
+    // identical recall question — hash-equality proves the round-trip
+    Query("q233_pq_adc_persisted", (s, d) => pqAdcPersisted(s, d),
+      PqSql.adcRecallSql),
+    // IVFADC: coarse cell + PQ over residuals — the FAISS IVFx,PQy shape
+    Query("q235_ivfadc_recall", (s, d) => ivfAdcRecall(s, d), ivfAdcSql),
+    // q235's amortized twin: build-once persisted IVFADC, probe-only
+    // q243's oracle IS q235's: the persisted combined index must
+    // answer the identical recall question — hash-equality proves
+    // the round trip lossless
+    Query("q243_ivfadc_persisted", (s, d) => ivfAdcPersisted(s, d),
+      ivfAdcSql),
+  )
 
   private lazy val ivfAdcSql: String = {
     import LloydExact.{dotS, Iters}

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.Query
+
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,4 +68,9 @@ object RandomForestJob {
         .toDF("accuracy", "weighted_precision", "weighted_recall", "f1")
     } finally { train.unpersist(); test.unpersist(); () }
   }
+
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    Query.rowsOnly("q37_rf_metrics", (s, d) => embeddingRfMetrics(s, d)),
+  )
 }

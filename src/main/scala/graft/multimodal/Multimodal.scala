@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -359,62 +361,26 @@ object Multimodal {
     }
   }
 
-  /** q40 oracle: metadata extraction is SQL-expressible (md5 of utf-8 text
-    * bytes = md5 of the blob). */
-  def oracleSql: Map[String, String] = Map(
-    // q405: digests of the original rows; octet_length(encode(text)) =
-    // the UTF-8 byte count binaryFile reports as `length`
-    "q405_binaryfile_source" ->
+  /** The registry queries this module declares (see [[graft.Query]]).
+    * q40's oracle: metadata extraction is SQL-expressible (md5 of utf-8
+    * text bytes = md5 of the blob). */
+  def queries: Seq[Query] = Seq(
+    // multimodal binary-column plumbing
+    Query("q40_media_metadata", mediaMetadata _,
       """SELECT doc_id AS media_id,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS content_md5
-        |FROM documents WHERE doc_id % 37 = 0
-        |ORDER BY media_id""".stripMargin,
-    "q161_media_dedup_exact" ->
-      s"""WITH m AS (SELECT doc_id AS media_id, text FROM documents
-         |  UNION ALL SELECT doc_id + $MediaVariantOffset, text
-         |  FROM documents WHERE doc_id % 10 = 0)
-         |SELECT min(media_id) AS canonical_id,
-         |  CAST(count(*) AS INTEGER) AS n_copies
-         |FROM (SELECT media_id, md5(text) AS h FROM m)
-         |GROUP BY h ORDER BY canonical_id""".stripMargin,
-    "q163_media_neardup" ->
-      s"""WITH $mediaPairCtesS
-         |SELECT media_a, media_b, n_shared, n_union FROM mp
-         |ORDER BY media_a, media_b""".stripMargin,
-    "q168_media_keep" ->
-      s"""WITH RECURSIVE $mediaPairCtesS,
-         |edges AS (SELECT media_a AS src, media_b AS dst FROM mp
-         |  UNION ALL SELECT media_b, media_a FROM mp),
-         |reach(id, r) AS (
-         |  SELECT media_id, media_id FROM m
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
-         |comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id)
-         |SELECT CASE CAST(id % $MediaVariantOffset % 3 AS INTEGER)
-         |    WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         |  CAST(COUNT(*) AS INTEGER) AS n_media,
-         |  CAST(SUM(CASE WHEN id = comp THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_kept,
-         |  CAST(COUNT(*) - SUM(CASE WHEN id = comp THEN 1 ELSE 0 END)
-         |    AS INTEGER) AS n_dropped
-         |FROM comp GROUP BY kind ORDER BY kind""".stripMargin,
-    "q70_frame_sample" ->
-      s"""WITH v AS (SELECT doc_id AS media_id, text FROM documents
-        |    WHERE doc_id % 3 = 2),
-        |f AS (SELECT media_id, text,
-        |    unnest(range(0, greatest(CAST(ceil(length(text) / 256.0) AS BIGINT), 1),
-        |      $FrameStride)) AS frame_idx
-        |  FROM v)
-        |SELECT media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-        |  md5(substr(text, CAST(frame_idx * 256 + 1 AS INTEGER), 256)) AS frame_md5,
-        |  CAST(length(substr(text, CAST(frame_idx * 256 + 1 AS INTEGER), 256))
-        |    AS INTEGER) AS frame_len
-        |FROM f ORDER BY media_id, frame_idx""".stripMargin,
+        |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
+        |    WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+        |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
+        |  md5(text) AS content_md5,
+        |  CAST(n_chars % 64 + 16 AS INTEGER) AS width,
+        |  CAST(n_chars % 48 + 12 AS INTEGER) AS height
+        |FROM documents ORDER BY media_id""".stripMargin),
     // q41: the stub features' integer projection (dominant high-nibble bin)
     // is SQL-expressible because documents are printable ASCII: per-char
     // code >> 4 == per-utf8-byte nibble.
-    "q41_media_features" ->
+    Query("q41_media_features", (s, d) => graft.multimodal.Multimodal
+      .extractFeatures(fromDocuments(s, d))
+      .toDF().select("media_id", "kind", "n_bytes", "top_bin").orderBy("media_id"),
       """WITH chars AS (
         |  SELECT doc_id, unnest(list_transform(
         |    generate_series(1, length(text)),
@@ -430,15 +396,61 @@ object Multimodal {
         |  CAST(octet_length(CAST(d.text AS BLOB)) AS BIGINT) AS n_bytes,
         |  CAST(COALESCE(t.bin, 0) AS INTEGER) AS top_bin
         |FROM documents d LEFT JOIN top t ON d.doc_id = t.doc_id AND t.rn = 1
-        |ORDER BY media_id""".stripMargin,
-    "q40_media_metadata" ->
+        |ORDER BY media_id""".stripMargin),
+    // multimodal frame sampling (posexplode of payload blocks)
+    Query("q70_frame_sample", (s, d) => frameSampleQuery(s, d),
+      s"""WITH v AS (SELECT doc_id AS media_id, text FROM documents
+        |    WHERE doc_id % 3 = 2),
+        |f AS (SELECT media_id, text,
+        |    unnest(range(0, greatest(CAST(ceil(length(text) / 256.0) AS BIGINT), 1),
+        |      $FrameStride)) AS frame_idx
+        |  FROM v)
+        |SELECT media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
+        |  md5(substr(text, CAST(frame_idx * 256 + 1 AS INTEGER), 256)) AS frame_md5,
+        |  CAST(length(substr(text, CAST(frame_idx * 256 + 1 AS INTEGER), 256))
+        |    AS INTEGER) AS frame_len
+        |FROM f ORDER BY media_id, frame_idx""".stripMargin),
+    // multimodal dedup: exact payload hash-groupBy over the binary column
+    Query("q161_media_dedup_exact", (s, d) => mediaDedupExact(s, d),
+      s"""WITH m AS (SELECT doc_id AS media_id, text FROM documents
+         |  UNION ALL SELECT doc_id + $MediaVariantOffset, text
+         |  FROM documents WHERE doc_id % 10 = 0)
+         |SELECT min(media_id) AS canonical_id,
+         |  CAST(count(*) AS INTEGER) AS n_copies
+         |FROM (SELECT media_id, md5(text) AS h FROM m)
+         |GROUP BY h ORDER BY canonical_id""".stripMargin),
+    // multimodal near-dup: block fingerprints + integer Jaccard verify
+    Query("q163_media_neardup", (s, d) => mediaNearDup(s, d),
+      s"""WITH $mediaPairCtesS
+         |SELECT media_a, media_b, n_shared, n_union FROM mp
+         |ORDER BY media_a, media_b""".stripMargin),
+    // media dedup output: canonical keep per component, per-kind summary
+    Query("q168_media_keep", (s, d) => mediaKeepSummary(s, d),
+      s"""WITH RECURSIVE $mediaPairCtesS,
+         |edges AS (SELECT media_a AS src, media_b AS dst FROM mp
+         |  UNION ALL SELECT media_b, media_a FROM mp),
+         |reach(id, r) AS (
+         |  SELECT media_id, media_id FROM m
+         |  UNION
+         |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+         |comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id)
+         |SELECT CASE CAST(id % $MediaVariantOffset % 3 AS INTEGER)
+         |    WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
+         |  CAST(COUNT(*) AS INTEGER) AS n_media,
+         |  CAST(SUM(CASE WHEN id = comp THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_kept,
+         |  CAST(COUNT(*) - SUM(CASE WHEN id = comp THEN 1 ELSE 0 END)
+         |    AS INTEGER) AS n_dropped
+         |FROM comp GROUP BY kind ORDER BY kind""".stripMargin),
+    // binaryFile ingestion: executor-side blob export, glob-filtered
+    // (path, length, content) read-back, digest-verified lossless
+    // q405: digests of the original rows; octet_length(encode(text)) =
+    // the UTF-8 byte count binaryFile reports as `length`
+    Query("q405_binaryfile_source", binaryFileSource _,
       """SELECT doc_id AS media_id,
-        |  CASE CAST(doc_id % 3 AS INTEGER) WHEN 0 THEN 'image'
-        |    WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS content_md5,
-        |  CAST(n_chars % 64 + 16 AS INTEGER) AS width,
-        |  CAST(n_chars % 48 + 12 AS INTEGER) AS height
-        |FROM documents ORDER BY media_id""".stripMargin,
+        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |  md5(text) AS content_md5
+        |FROM documents WHERE doc_id % 37 = 0
+        |ORDER BY media_id""".stripMargin),
   )
 }

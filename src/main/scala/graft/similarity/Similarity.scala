@@ -1,5 +1,7 @@
 package graft.similarity
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2566,100 +2568,610 @@ object Similarity {
       .orderBy("label_a", "label_b")
   }
 
-  def oracleSql: Map[String, String] = Map(
-    // q403: same Lloyd cells (shared CTE chain), same smoothed shares,
-    // same contribution shape and 9-dp decimal routing
-    "q403_js_drift" -> {
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // similarity search over `embeddings` (brute-force, LSH-ANN, kNN)
+    Query("q31_cosine_topk", (s, d) => cosineTopK(s, d), q31TopkOracleS),
+    Query("q32_ann_lsh", (s, d) => annLsh(s, d),
+      s"""WITH e0 AS ($embS), $planesCte,
+         |e AS (SELECT vec_id, e, nrm, ${bucketS("e")} AS bkt FROM e0, pl),
+         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, bkt
+         |  FROM e WHERE vec_id < 10),
+         |c AS (SELECT q.query_id, n.vec_id AS neighbor_id,
+         |    ${simS(s"${dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
+         |  FROM q JOIN e n USING (bkt) WHERE n.vec_id <> q.query_id),
+         |r AS (SELECT query_id, neighbor_id, sim,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rk
+         |  FROM c)
+         |SELECT query_id, neighbor_id, rk, round(sim, 6) AS cosine
+         |FROM r WHERE rk <= $K ORDER BY query_id, rk""".stripMargin),
+    Query("q33_knn_classify", knnClassify _, knnOracleSql),
+    Query("q34_embed_neardup", embedNearDup _,
+      s"""WITH e0 AS (SELECT vec_id,
+         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  FROM embeddings),
+         |corpus AS (SELECT vec_id, e FROM e0
+         |  UNION ALL
+         |  SELECT vec_id + $VariantVecOffset, list_transform(e, x -> x * 2.0)
+         |  FROM e0 WHERE vec_id % 25 = 0),
+         |$planesCte,
+         |cb AS (SELECT vec_id, e, sqrt(${dotS("e", "e")}) AS nrm,
+         |    ${bucketS("e")} AS bkt FROM corpus, pl),
+         |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+         |    round(${simS(s"${dotS("a.e", "b.e")}", "a.nrm", "b.nrm")}, 6) AS cosine
+         |  FROM cb a JOIN cb b ON a.bkt = b.bkt AND a.vec_id < b.vec_id)
+         |SELECT vec_a, vec_b, cosine FROM p
+         |WHERE cosine >= 0.9999 ORDER BY vec_a, vec_b""".stripMargin),
+    Query("q35_knn_confusion", knnConfusion _, {
+      val pcols = (0 until 10).map(i =>
+        s"CAST(count(CASE WHEN n_label = $i THEN 1 END) AS INTEGER) AS p$i")
+        .mkString(", ")
+      s"""WITH e AS ($embS),
+         |test AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn,
+         |    label AS true_label
+         |  FROM e WHERE vec_id % 7 = 0),
+         |train AS (SELECT vec_id AS neighbor_id, e AS ne, nrm AS nn,
+         |    label AS n_label
+         |  FROM e WHERE vec_id % 7 <> 0),
+         |c AS (SELECT query_id, true_label, neighbor_id, n_label,
+         |    ${simS(s"${dotS("qe", "ne")}", "qn", "nn")} AS sim
+         |  FROM test CROSS JOIN train),
+         |nb AS (SELECT query_id, true_label, n_label,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY sim DESC, neighbor_id) AS rk
+         |  FROM c),
+         |votes AS (SELECT query_id, true_label, n_label, count(*) AS votes
+         |  FROM nb WHERE rk <= $K GROUP BY query_id, true_label, n_label),
+         |win AS (SELECT query_id, n_label, true_label,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY votes DESC, n_label) AS vr
+         |  FROM votes)
+         |SELECT CAST(true_label AS INTEGER) AS true_label, $pcols
+         |FROM win WHERE vr = 1
+         |GROUP BY true_label ORDER BY true_label""".stripMargin
+    }),
+    Query("q44_embedding_stats", embeddingStats _,
+      s"""WITH e AS ($embS)
+         |SELECT label, count(*) AS n,
+         |  round(CAST(sum(CAST(nrm AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
+         |    AS mean_norm
+         |FROM e GROUP BY label ORDER BY label""".stripMargin),
+    // q45 = q33 semantics via the top-k aggregator; same oracle
+    Query("q45_knn_topk_agg", knnClassifyAgg _, knnOracleSql),
+    Query("q58_knn_weighted", knnWeighted _,
+      s"""WITH e AS ($embS),
+         |test AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn,
+         |    label AS true_label
+         |  FROM e WHERE vec_id % 7 = 0),
+         |train AS (SELECT vec_id AS neighbor_id, e AS ne, nrm AS nn,
+         |    label AS n_label
+         |  FROM e WHERE vec_id % 7 <> 0),
+         |c AS (SELECT query_id, true_label, neighbor_id, n_label,
+         |    ${simS(s"${dotS("qe", "ne")}", "qn", "nn")} AS sim
+         |  FROM test CROSS JOIN train),
+         |nb AS (SELECT query_id, true_label, n_label, sim,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY sim DESC, neighbor_id) AS rk
+         |  FROM c),
+         |votes AS (SELECT query_id, true_label, n_label,
+         |    CAST(SUM(CAST(1.0 / (1.0 - sim + 1e-9) AS DECIMAL(28,9)))
+         |      AS DOUBLE) AS wsum
+         |  FROM nb WHERE rk <= $K GROUP BY query_id, true_label, n_label),
+         |win AS (SELECT query_id, n_label, true_label,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY wsum DESC, n_label) AS vr
+         |  FROM votes)
+         |SELECT query_id AS vec_id, CAST(n_label AS INTEGER) AS pred_label,
+         |  CAST(n_label = true_label AS INTEGER) AS correct
+         |FROM win WHERE vr = 1 ORDER BY vec_id""".stripMargin),
+    // IVF-ANN: coarse-quantizer inverted lists (the non-LSH scale path)
+    Query("q61_ann_ivf", annIvf _, q61OracleS),
+    // ANN quality evaluation: recall@k of IVF vs exact brute force
+    Query("q71_ann_recall", annRecall _, {
       val L = graft.ml.LloydExact
       s"""WITH ${L.lloydCtesS},
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |h AS (SELECT l.label, a.cluster, COUNT(*) AS n
-         |  FROM afinal a JOIN lab l USING (vec_id) GROUP BY 1, 2),
-         |labs AS (SELECT DISTINCT label FROM lab),
-         |grid AS (SELECT label, CAST(c AS INTEGER) AS cluster
-         |  FROM labs CROSS JOIN (SELECT unnest(range(0, ${L.K})) AS c)),
-         |tot AS (SELECT label, CAST(SUM(n) AS BIGINT) AS nt
-         |  FROM h GROUP BY 1),
-         |sh AS (SELECT g.label, g.cluster, t.nt,
-         |    (CAST(COALESCE(h.n, 0) AS DOUBLE) + 0.5)
-         |      / (CAST(t.nt AS DOUBLE) + ${L.K / 2.0}) AS p
-         |  FROM grid g
-         |  LEFT JOIN h ON g.label = h.label AND g.cluster = h.cluster
-         |  JOIN tot t ON g.label = t.label)
-         |SELECT a.label AS label_a, b.label AS label_b,
-         |  MAX(a.nt) AS n_a, MAX(b.nt) AS n_b,
-         |  round(CAST(SUM(CAST(round(0.5 *
-         |      (a.p * ln(a.p / ((a.p + b.p) / 2.0))
-         |       + b.p * ln(b.p / ((a.p + b.p) / 2.0))), 9)
-         |    AS DECIMAL(28,9))) AS DOUBLE), 6) AS js_nats
-         |FROM sh a JOIN sh b ON a.cluster = b.cluster
-         |  AND a.label < b.label
-         |GROUP BY 1, 2 ORDER BY label_a, label_b""".stripMargin
-    },
-    // q331: identical sampled V-statistic in DuckDB (same distance
-    // route, same 9-dp row rounding, same closing algebra)
-    "q331_energy_distance" -> {
-      val perLabel = 64
-      val dAB = s"round(sqrt(greatest(${dotS("a.e", "a.e")} - " +
-        s"2.0 * ${dotS("a.e", "b.e")} + ${dotS("b.e", "b.e")}, 0.0)), 9)"
-      s"""WITH e0 AS ($embS),
-         |sm AS MATERIALIZED (SELECT label, vec_id, e FROM (
-         |    SELECT label, vec_id, e,
-         |      ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id)
-         |        AS rk
-         |    FROM e0) WHERE rk <= $perLabel),
-         |w AS MATERIALIZED (SELECT a.label, COUNT(*) AS nn,
-         |    SUM(CAST($dAB AS DECIMAL(28,9))) AS sd
-         |  FROM sm a JOIN sm b ON a.label = b.label GROUP BY a.label),
-         |wm AS (SELECT label, CAST(sqrt(CAST(nn AS DOUBLE)) AS BIGINT)
-         |      AS n,
-         |    CAST(sd AS DOUBLE) / nn AS wmean FROM w),
-         |c AS (SELECT a.label AS label_a, b.label AS label_b,
-         |    COUNT(*) AS nm, SUM(CAST($dAB AS DECIMAL(28,9))) AS sd
-         |  FROM sm a JOIN sm b ON a.label < b.label
-         |  GROUP BY a.label, b.label)
-         |SELECT c.label_a, c.label_b, x.n AS n_a, y.n AS n_b,
-         |  round(CAST(c.sd AS DOUBLE) / c.nm, 6) AS cross_mean,
-         |  round(2.0 * (CAST(c.sd AS DOUBLE) / c.nm) - x.wmean - y.wmean,
-         |    6) AS energy
-         |FROM c JOIN wm x ON x.label = c.label_a
-         |JOIN wm y ON y.label = c.label_b
-         |ORDER BY c.label_a, c.label_b""".stripMargin
-    },
-    // q328: identical prefix-overlap cumulative + shared 12-dp weight
-    // literals; (1−p) is inlined as the JVM's computed double so both
-    // engines scale by the exact same value
-    "q328_rbo_rankings" -> {
-      val (p, depth) = (0.9, 50)
-      val wl = "[" + rboWeights(p, depth).mkString(", ") + "]"
-      val oneMinusP = (1.0 - p).toString
-      s"""WITH docs AS (SELECT doc_id, n_chars,
-         |    ${TextPrims.bpeTokensS("text")} AS toks FROM documents),
-         |ra AS (SELECT doc_id, ra FROM (SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS ra
-         |  FROM docs) WHERE ra <= $depth),
-         |rb AS (SELECT doc_id, rb FROM (SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY toks DESC, doc_id) AS rb
-         |  FROM docs) WHERE rb <= $depth),
-         |j AS (SELECT greatest(ra.ra, rb.rb) AS md
-         |  FROM ra JOIN rb USING (doc_id)),
-         |dd AS (SELECT unnest(generate_series(1, $depth)) AS d),
-         |xd AS (SELECT dd.d, COUNT(j.md) AS x
-         |  FROM dd LEFT JOIN j ON j.md <= dd.d GROUP BY dd.d),
-         |terms AS (SELECT d, x,
-         |    round(CAST(x AS DOUBLE) / d * ($wl)[d], 9) AS term FROM xd),
-         |r AS (SELECT d, x,
-         |    round($oneMinusP * CAST(SUM(CAST(term AS DECIMAL(28,9)))
-         |      OVER (ORDER BY d ROWS UNBOUNDED PRECEDING) AS DOUBLE), 6)
-         |      AS rbo
-         |  FROM terms)
-         |SELECT CAST(d AS INTEGER) AS d, x AS overlap, rbo FROM r
-         |WHERE d IN (1, 5, 10, 25, 50) ORDER BY d""".stripMargin
-    },
-    "q271_mmr_rerank" -> mmrOracleS,
-    "q275_hard_negatives" -> hardNegOracleS,
-    "q277_ivf_upsert" -> q277OracleS,
-    "q305_filtered_ann" -> {
+         |cells AS (SELECT vec_id, e, cluster,
+         |    sqrt(${L.dotS("e", "e")}) AS nrm FROM afinal),
+         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, cluster
+         |  FROM cells WHERE vec_id < 10),
+         |bfc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
+         |    ${simS(s"${L.dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
+         |  FROM q CROSS JOIN cells n WHERE n.vec_id <> q.query_id),
+         |bf AS (SELECT query_id, neighbor_id FROM (
+         |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
+         |      PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
+         |    FROM bfc) WHERE rk <= $K),
+         |ivfc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
+         |    ${simS(s"${L.dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
+         |  FROM q JOIN cells n USING (cluster) WHERE n.vec_id <> q.query_id),
+         |ivf AS (SELECT query_id, neighbor_id FROM (
+         |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
+         |      PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
+         |    FROM ivfc) WHERE rk <= $K)
+         |SELECT bf.query_id,
+         |  CAST(count(ivf.neighbor_id) AS INTEGER) AS n_hits,
+         |  CAST(count(ivf.neighbor_id) AS DOUBLE) / $K AS recall
+         |FROM bf LEFT JOIN ivf ON bf.query_id = ivf.query_id
+         |  AND bf.neighbor_id = ivf.neighbor_id
+         |GROUP BY bf.query_id ORDER BY bf.query_id""".stripMargin
+    }),
+    // embedding-side quality filter: per-label centroid-distance outliers
+    Query("q141_centroid_outliers", (s, d) => centroidOutliers(s, d),
+      s"""WITH d AS (SELECT vec_id, label, g.i - 1 AS dim,
+         |    CAST(embedding[g.i] AS DOUBLE) AS xd
+         |  FROM embeddings CROSS JOIN generate_series(1, $Dim) AS g(i)),
+         |c AS (SELECT label, dim,
+         |    CAST(SUM(CAST(CAST(xd AS DECIMAL(18,9)) * 1000000000 AS BIGINT))
+         |      AS DOUBLE) / COUNT(*) / 1000000000.0 AS mu
+         |  FROM d GROUP BY 1, 2),
+         |s2 AS (SELECT vec_id, d.label,
+         |    SUM(CAST((xd - mu) * (xd - mu) AS DECIMAL(38,12))) AS d2
+         |  FROM d JOIN c ON d.label = c.label AND d.dim = c.dim
+         |  GROUP BY 1, 2),
+         |r AS (SELECT label, vec_id, d2,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY label
+         |      ORDER BY d2 DESC, vec_id) AS INTEGER) AS rk
+         |  FROM s2)
+         |SELECT label, rk, vec_id, round(sqrt(CAST(d2 AS DOUBLE)), 6) AS dist
+         |FROM r WHERE rk <= 5 ORDER BY label, rk""".stripMargin),
+    // embedding-level decontamination: eval batch vs train split, LSH+verify
+    Query("q164_split_leakage", (s, d) => crossSplitLeakage(s, d),
+      s"""WITH e0 AS (SELECT vec_id,
+         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  FROM embeddings),
+         |$planesCte,
+         |tr AS (SELECT vec_id AS train_id, e AS te,
+         |    sqrt(${dotS("e", "e")}) AS tn, ${bucketS("e")} AS bkt
+         |  FROM e0, pl
+         |  WHERE ${TextPrims.hex60S("md5(CAST(vec_id AS VARCHAR))")} % 100 < 80),
+         |ev0 AS (SELECT vec_id + $VariantVecOffset AS eval_id,
+         |    list_transform(e, x -> x * 1.5) AS e FROM e0 WHERE vec_id % 25 = 0
+         |  UNION ALL SELECT vec_id + ${2 * VariantVecOffset},
+         |    list_reverse(e) FROM e0 WHERE vec_id % 17 = 0),
+         |ev AS (SELECT eval_id, e AS ee, sqrt(${dotS("e", "e")}) AS en,
+         |    ${bucketS("e")} AS bkt FROM ev0, pl),
+         |m AS (SELECT eval_id, train_id,
+         |    round(${simS(s"${dotS("ee", "te")}", "en", "tn")}, 6) AS cosine
+         |  FROM ev JOIN tr USING (bkt)
+         |  WHERE round(${simS(s"${dotS("ee", "te")}", "en", "tn")}, 6)
+         |    >= 0.999),
+         |r AS (SELECT eval_id, train_id, cosine,
+         |    ROW_NUMBER() OVER (PARTITION BY eval_id
+         |      ORDER BY cosine DESC, train_id) AS rk,
+         |    CAST(COUNT(*) OVER (PARTITION BY eval_id) AS INTEGER)
+         |      AS n_matches
+         |  FROM m)
+         |SELECT eval_id, train_id, cosine, n_matches
+         |FROM r WHERE rk = 1 ORDER BY eval_id""".stripMargin),
+    // coreset sampling: greedy max-min (k-center) diverse exemplar pick
+    Query("q166_diverse_select", (s, d) => diverseSelect(s, d), {
+      // the k greedy rounds unroll as CTEs (the q142 fixed-iteration
+      // pattern): each pick cross-joins the previous 1-row picks, computes
+      // the min cosine-distance to the selected set with the SAME double
+      // expression as the Spark side, and takes the (dm DESC, vec_id)
+      // argmax
+      val K = 8
+      def cosD(b: String) =
+        s"1 - ${dotS("n.e", s"$b.e")} / (n.nrm * $b.nrm)"
+      val base =
+        s"""WITH c AS (SELECT vec_id,
+           |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+           |  FROM embeddings),
+           |n AS (SELECT vec_id, e, sqrt(${dotS("e", "e")}) AS nrm FROM c),
+           |p1 AS (SELECT vec_id, e, nrm, CAST(NULL AS DOUBLE) AS dm
+           |  FROM n ORDER BY vec_id LIMIT 1)""".stripMargin
+      val rounds = (2 to K).map { i =>
+        val dists = (1 until i).map(j => cosD(s"p$j"))
+        val dm = if (dists.size == 1) dists.head
+          else s"LEAST(${dists.mkString(", ")})"
+        val crossJ = (1 until i).map(j => s"CROSS JOIN p$j").mkString(" ")
+        s"""p$i AS (SELECT n.vec_id, n.e, n.nrm, $dm AS dm
+           |  FROM n $crossJ
+           |  ORDER BY dm DESC, n.vec_id LIMIT 1)""".stripMargin
+      }
+      val sel = (1 to K).map(i =>
+        s"SELECT $i AS rank, vec_id, round(dm, 6) AS dist FROM p$i")
+        .mkString("\nUNION ALL ")
+      (base +: rounds).mkString(",\n") + "\n" + sel + "\nORDER BY rank"
+    }),
+    // vector-index storage lever: persisted IVF answers q61 identically
+    // q170's oracle IS q61's: the persisted index must answer the same
+    // queries identically — the round trip is the thing under test
+    Query("q170_ann_ivf_persisted", (s, d) => annIvfPersisted(s, d),
+      q61OracleS),
+    // memory-compressed ANN: int8 scalar quantization + exact re-rank
+    Query("q171_ann_sq8", (s, d) => annSq8(s, d),
+      s"""WITH e0 AS (SELECT vec_id,
+         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  FROM embeddings),
+         |n0 AS (SELECT vec_id, e, sqrt(${dotS("e", "e")}) AS nrm FROM e0),
+         |am AS (SELECT MAX(list_max(list_transform(e, x -> abs(x)))) AS a
+         |  FROM e0),
+         |qz AS (SELECT vec_id, list_transform(e, x ->
+         |    greatest(least(round(x * 127.0 / a, 0), 127.0), -127.0)) AS q
+         |  FROM e0, am),
+         |qn AS (SELECT vec_id, q, sqrt(${dotS("q", "q")}) AS qn FROM qz),
+         |pr AS (SELECT vec_id AS query_id, q AS pq, qn AS pn FROM qn
+         |  WHERE vec_id < 10),
+         |ap AS (SELECT pr.query_id, c.vec_id AS neighbor_id,
+         |    ${dotS("pr.pq", "c.q")} / (pr.pn * c.qn) AS approx
+         |  FROM qn c CROSS JOIN pr WHERE c.vec_id <> pr.query_id),
+         |tr AS (SELECT query_id, neighbor_id, approx,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY approx DESC, neighbor_id) AS rr FROM ap),
+         |cd AS (SELECT query_id, neighbor_id, approx FROM tr
+         |  WHERE rr <= $Sq8TopR),
+         |rr2 AS (SELECT cd.query_id, cd.neighbor_id, cd.approx,
+         |    ${simS(s"${dotS("a.e", "b.e")}", "a.nrm", "b.nrm")} AS cosine
+         |  FROM cd JOIN n0 a ON cd.query_id = a.vec_id
+         |    JOIN n0 b ON cd.neighbor_id = b.vec_id),
+         |r AS (SELECT query_id, neighbor_id, approx, cosine,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY cosine DESC, neighbor_id) AS rk FROM rr2)
+         |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS rk,
+         |  round(cosine, 6) AS cosine, round(approx, 6) AS approx_sim
+         |FROM r WHERE rk <= $K ORDER BY query_id, rk""".stripMargin),
+    // split-quality audit in embedding space: pairwise centroid drift
+    Query("q175_split_centroid_drift", (s, d) => splitCentroidDrift(s, d), {
+      val splitS =
+        s"""CASE WHEN ${TextPrims.hex60S("md5(CAST(vec_id AS VARCHAR))")}
+           | % 100 < 80 THEN 'train'
+           | WHEN ${TextPrims.hex60S("md5(CAST(vec_id AS VARCHAR))")}
+           | % 100 < 90 THEN 'val' ELSE 'test' END"""
+          .stripMargin.replace("\n", "")
+      s"""WITH base AS (SELECT vec_id, $splitS AS split, embedding
+         |  FROM embeddings),
+         |d AS (SELECT split, g.i - 1 AS dim,
+         |    CAST(embedding[g.i] AS DOUBLE) AS xd
+         |  FROM base CROSS JOIN generate_series(1, $Dim) AS g(i)),
+         |c AS (SELECT split, dim,
+         |    CAST(SUM(CAST(CAST(xd AS DECIMAL(18,9)) * 1000000000 AS BIGINT))
+         |      AS DOUBLE) / COUNT(*) / 1000000000.0 AS mu
+         |  FROM d GROUP BY 1, 2),
+         |n AS (SELECT split, CAST(COUNT(*) AS INTEGER) AS n FROM base
+         |  GROUP BY 1),
+         |p AS (SELECT a.split AS split_a, b.split AS split_b,
+         |    SUM(CAST((a.mu - b.mu) * (a.mu - b.mu) AS DECIMAL(38,12))) AS d2
+         |  FROM c a JOIN c b ON a.dim = b.dim AND a.split < b.split
+         |  GROUP BY 1, 2)
+         |SELECT split_a, split_b, na.n AS n_a, nb.n AS n_b,
+         |  round(sqrt(CAST(d2 AS DOUBLE)), 6) AS centroid_dist
+         |FROM p JOIN n na ON split_a = na.split JOIN n nb ON split_b = nb.split
+         |ORDER BY split_a, split_b""".stripMargin
+    }),
+    // ANN tuning curve: recall@k + candidate cost per LSH plane count
+    Query("q177_ann_tuning_sweep", (s, d) => annTuningSweep(s, d), {
+      def planeSFor(cfg: SimConfig, p: Int): String =
+        "[" + planesFor(cfg)(p).map(_.toString).mkString(", ") + "]"
+      val bfCte =
+        s"""bq AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn FROM e
+           |  WHERE vec_id < 10),
+           |bc AS (SELECT bq.query_id, n.vec_id AS neighbor_id,
+           |    ${simS(s"${dotS("bq.qe", "n.e")}", "bq.qn", "n.nrm")} AS sim
+           |  FROM bq CROSS JOIN e n WHERE n.vec_id <> bq.query_id),
+           |bfr AS (SELECT query_id, neighbor_id FROM (
+           |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
+           |      PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
+           |    FROM bc) z WHERE rk <= $K)""".stripMargin
+      val blocks = TuningPlaneCounts.map { pc =>
+        val cfg = SimConfig(numPlanes = pc)
+        val t = s"p$pc"
+        val planeCols = (0 until pc)
+          .map(i => s"${planeSFor(cfg, i)} AS ${t}pl$i").mkString(", ")
+        val bkt = (0 until pc).map(i =>
+          s"(CASE WHEN ${dotS("e", s"${t}pl$i")} >= 0 THEN '1' ELSE '0' END)")
+          .mkString(" || ")
+        s"""${t}pl AS (SELECT $planeCols),
+           |${t}e AS (SELECT vec_id, e, nrm, $bkt AS bkt FROM e, ${t}pl),
+           |${t}q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, bkt
+           |  FROM ${t}e WHERE vec_id < 10),
+           |${t}cand AS (SELECT q.query_id, q.qe, q.qn,
+           |    n.vec_id AS neighbor_id, n.e AS ne, n.nrm AS nn
+           |  FROM ${t}q q JOIN ${t}e n USING (bkt)
+           |  WHERE n.vec_id <> q.query_id),
+           |${t}cc AS (SELECT query_id, COUNT(*) AS n_candidates
+           |  FROM ${t}cand GROUP BY 1),
+           |${t}top AS (SELECT query_id, neighbor_id FROM (
+           |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
+           |      PARTITION BY query_id ORDER BY
+           |        ${simS(s"${dotS("qe", "ne")}", "qn", "nn")} DESC,
+           |        neighbor_id) AS rk
+           |    FROM ${t}cand) z WHERE rk <= $K),
+           |${t}hits AS (SELECT b.query_id, COUNT(*) AS n_hits FROM bfr b
+           |  JOIN ${t}top tt ON b.query_id = tt.query_id
+           |    AND b.neighbor_id = tt.neighbor_id
+           |  GROUP BY 1),
+           |${t}res AS (SELECT $pc AS num_planes, q.query_id,
+           |    CAST(COALESCE(cc.n_candidates, 0) AS INTEGER) AS n_candidates,
+           |    CAST(COALESCE(h.n_hits, 0) AS INTEGER) AS n_hits,
+           |    CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / $K AS recall
+           |  FROM (SELECT DISTINCT query_id FROM ${t}q) q
+           |  LEFT JOIN ${t}cc cc USING (query_id)
+           |  LEFT JOIN ${t}hits h USING (query_id))""".stripMargin
+      }
+      val sel = TuningPlaneCounts.map(pc => s"SELECT * FROM p${pc}res")
+        .mkString("\nUNION ALL ")
+      (s"WITH e AS ($embS)" +: bfCte +: blocks).mkString(",\n") + "\n" + sel +
+        "\nORDER BY num_planes, query_id"
+    }),
+    // SemDeDup: spherical-quantizer cells + earliest-exemplar cosine prune
+    Query("q181_semdedup", (s, d) => semDedup(s, d), {
+      val L = graft.ml.LloydExact
+      val off = VariantVecOffset
+      s"""WITH ${L.lloydCtesS},
+         |aug AS (SELECT vec_id, e FROM e
+         |  UNION ALL SELECT vec_id + $off,
+         |    list_transform(e, x -> x * 2.0) FROM e WHERE vec_id % 10 = 0
+         |  UNION ALL SELECT vec_id + ${2L * off},
+         |    list_transform(e, x -> x * 0.5) FROM e WHERE vec_id % 15 = 0),
+         |an AS (SELECT vec_id, e, sqrt(${L.dotS("e", "e")}) AS nrm
+         |  FROM aug),
+         |cn AS (SELECT cluster, c, sqrt(${L.dotS("c", "c")}) AS cnrm
+         |  FROM c${L.Iters}),
+         |cells AS (SELECT vec_id, e, nrm, cluster FROM (
+         |  SELECT a.vec_id, a.e, a.nrm, c.cluster,
+         |    ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
+         |      ${L.dotS("a.e", "c.c")} / (a.nrm * c.cnrm) DESC,
+         |      c.cluster) AS rn
+         |  FROM an a CROSS JOIN cn c) WHERE rn = 1),
+         |p AS (SELECT b.vec_id, b.cluster, a.vec_id AS kept_id,
+         |    round(${L.dotS("a.e", "b.e")} / (a.nrm * b.nrm), 6) AS cosine
+         |  FROM cells a JOIN cells b
+         |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
+         |r AS (SELECT vec_id, cluster, kept_id, cosine,
+         |    ROW_NUMBER() OVER (PARTITION BY vec_id
+         |      ORDER BY cosine DESC, kept_id) AS rk
+         |  FROM p WHERE cosine >= 0.999)
+         |SELECT vec_id, cluster, kept_id, cosine
+         |FROM r WHERE rk = 1 ORDER BY vec_id""".stripMargin
+    }),
+    // hybrid-search diagnostic: lexical vs dense top-k overlap per query
+    Query("q199_retrieval_agreement", (s, d) => retrievalAgreement(s, d),
+      s"""WITH e AS ($embS),
+         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn FROM e
+         |  WHERE vec_id < 10),
+         |c AS (SELECT q.query_id, n.vec_id AS neighbor_id,
+         |    ${simS(s"${dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
+         |  FROM q CROSS JOIN e n WHERE n.vec_id <> q.query_id),
+         |dense AS (SELECT query_id, neighbor_id FROM (
+         |  SELECT query_id, neighbor_id,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY sim DESC, neighbor_id) AS rk FROM c)
+         |  WHERE rk <= 10),
+         |ts AS (SELECT doc_id,
+         |    list_distinct(${TextPrims.tokensS("text")}) AS ts
+         |  FROM documents),
+         |qs AS (SELECT doc_id AS query_id, ts AS qts FROM ts
+         |  WHERE doc_id < 10),
+         |lx AS (SELECT qs.query_id, t.doc_id AS neighbor_id,
+         |    round(CAST(len(list_intersect(qs.qts, t.ts)) AS DOUBLE) /
+         |      (len(qs.qts) + len(t.ts) - len(list_intersect(qs.qts, t.ts))),
+         |      6) AS jac
+         |  FROM qs JOIN ts t ON t.doc_id <> qs.query_id
+         |  WHERE len(list_intersect(qs.qts, t.ts)) >= 1),
+         |lex AS (SELECT query_id, neighbor_id FROM (
+         |  SELECT query_id, neighbor_id,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY jac DESC, neighbor_id) AS rk FROM lx)
+         |  WHERE rk <= 10),
+         |common AS (SELECT lex.query_id, COUNT(*) AS nc FROM lex
+         |  JOIN dense ON lex.query_id = dense.query_id
+         |    AND lex.neighbor_id = dense.neighbor_id
+         |  GROUP BY lex.query_id)
+         |SELECT q.query_id, CAST(COALESCE(nc, 0) AS INTEGER) AS n_common,
+         |  round(CAST(COALESCE(nc, 0) AS DOUBLE) / 10, 6) AS overlap_at_k
+         |FROM (SELECT DISTINCT query_id FROM dense) q
+         |LEFT JOIN common ON q.query_id = common.query_id
+         |ORDER BY q.query_id""".stripMargin),
+    // JL projection distortion: 64->16-dim distance-preservation audit
+    Query("q217_jl_distortion", (s, d) => jlDistortion(s, d), {
+      val ps16 = planesFor(SimConfig(numPlanes = 16))
+      val plCte = "pl AS (SELECT " + (0 until 16).map(p =>
+        "[" + ps16(p).map(_.toString).mkString(", ") + s"] AS pl$p")
+        .mkString(", ") + ")"
+      val sc = math.sqrt(3.0 / 16)
+      val peList = "[" + (0 until 16).map(p =>
+        s"${dotS("e0.e", s"pl$p")} * $sc").mkString(", ") + "]"
+      def d2(a: String, b: String) =
+        s"${dotS(a, a)} - 2 * ${dotS(a, b)} + ${dotS(b, b)}"
+      s"""WITH e0 AS ($embS), $plCte,
+         |pe AS (SELECT vec_id, e, $peList AS pe FROM e0, pl),
+         |q AS (SELECT vec_id AS query_id, e AS qe, pe AS qpe FROM pe
+         |  WHERE vec_id < 10),
+         |pairs AS (SELECT q.query_id,
+         |    ${d2("q.qe", "n.e")} AS td,
+         |    ${d2("q.qpe", "n.pe")} AS pd
+         |  FROM q CROSS JOIN pe n WHERE n.vec_id <> q.query_id),
+         |r AS (SELECT query_id, ABS(pd / td - 1.0) AS rel FROM pairs
+         |  WHERE td <> 0)
+         |SELECT query_id, CAST(COUNT(*) AS INTEGER) AS n_pairs,
+         |  round(CAST(SUM(CAST(round(rel, 6) AS DECIMAL(18,6)))
+         |    AS DOUBLE) / COUNT(*), 6) AS mean_distortion,
+         |  MAX(round(rel, 6)) AS max_distortion
+         |FROM r GROUP BY query_id ORDER BY query_id""".stripMargin
+    }),
+    // reciprocal-rank fusion: the calibration-free hybrid-search combiner
+    Query("q230_rrf_fusion", (s, d) => rrfFusion(s, d),
+      s"""WITH e AS ($embS),
+         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn FROM e
+         |  WHERE vec_id < 10),
+         |c AS (SELECT q.query_id, n.vec_id AS neighbor_id,
+         |    ${simS(s"${dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
+         |  FROM q CROSS JOIN e n WHERE n.vec_id <> q.query_id),
+         |dense AS (SELECT query_id, neighbor_id, rk FROM (
+         |  SELECT query_id, neighbor_id,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY sim DESC, neighbor_id) AS rk FROM c)
+         |  WHERE rk <= 10),
+         |ts AS (SELECT doc_id,
+         |    list_distinct(${TextPrims.tokensS("text")}) AS ts
+         |  FROM documents),
+         |qs AS (SELECT doc_id AS query_id, ts AS qts FROM ts
+         |  WHERE doc_id < 10),
+         |lx AS (SELECT qs.query_id, t.doc_id AS neighbor_id,
+         |    round(CAST(len(list_intersect(qs.qts, t.ts)) AS DOUBLE) /
+         |      (len(qs.qts) + len(t.ts) - len(list_intersect(qs.qts, t.ts))),
+         |      6) AS jac
+         |  FROM qs JOIN ts t ON t.doc_id <> qs.query_id
+         |  WHERE len(list_intersect(qs.qts, t.ts)) >= 1),
+         |lex AS (SELECT query_id, neighbor_id, rk FROM (
+         |  SELECT query_id, neighbor_id,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY jac DESC, neighbor_id) AS rk FROM lx)
+         |  WHERE rk <= 10),
+         |u AS (SELECT query_id, neighbor_id,
+         |    CAST(round(1.0 / (60 + rk), 12) AS DECIMAL(28,12)) AS cb
+         |  FROM dense
+         |  UNION ALL SELECT query_id, neighbor_id,
+         |    CAST(round(1.0 / (60 + rk), 12) AS DECIMAL(28,12))
+         |  FROM lex),
+         |f AS (SELECT query_id, neighbor_id, SUM(cb) AS rrfd,
+         |    COUNT(*) AS n_systems
+         |  FROM u GROUP BY query_id, neighbor_id),
+         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+         |    ORDER BY CAST(rrfd AS DOUBLE) DESC, neighbor_id) AS frk
+         |  FROM f)
+         |SELECT query_id, neighbor_id, CAST(frk AS INTEGER) AS rk,
+         |  CAST(n_systems AS INTEGER) AS n_systems,
+         |  round(CAST(rrfd AS DOUBLE), 12) AS rrf_score
+         |FROM r WHERE frk <= 5 ORDER BY query_id, rk""".stripMargin),
+    // nDCG@10: lexical ranking judged by dense graded relevance
+    Query("q231_ndcg_lexical", (s, d) => ndcgLexical(s, d), {
+      val wl = "[" + ndcgWeights(10).mkString(", ") + "]"
+      s"""WITH e AS ($embS),
+         |ts AS (SELECT doc_id,
+         |    list_distinct(${TextPrims.tokensS("text")}) AS ts
+         |  FROM documents),
+         |qs AS (SELECT doc_id AS query_id, ts AS qts FROM ts
+         |  WHERE doc_id < 10),
+         |lx AS (SELECT qs.query_id, t.doc_id AS neighbor_id,
+         |    round(CAST(len(list_intersect(qs.qts, t.ts)) AS DOUBLE) /
+         |      (len(qs.qts) + len(t.ts) - len(list_intersect(qs.qts, t.ts))),
+         |      6) AS jac
+         |  FROM qs JOIN ts t ON t.doc_id <> qs.query_id
+         |  WHERE len(list_intersect(qs.qts, t.ts)) >= 1),
+         |lex AS (SELECT query_id, neighbor_id, rk FROM (
+         |  SELECT query_id, neighbor_id,
+         |    ROW_NUMBER() OVER (PARTITION BY query_id
+         |      ORDER BY jac DESC, neighbor_id) AS rk FROM lx)
+         |  WHERE rk <= 10),
+         |g AS (SELECT lex.query_id, lex.neighbor_id, lex.rk,
+         |    greatest(round(${simS(s"${dotS("q.e", "n.e")}",
+           "q.nrm", "n.nrm")}, 6), 0.0) AS rel
+         |  FROM lex
+         |  JOIN e n ON lex.neighbor_id = n.vec_id
+         |  JOIN e q ON lex.query_id = q.vec_id),
+         |i AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+         |    ORDER BY rel DESC, neighbor_id) AS irk FROM g),
+         |a AS (SELECT query_id, COUNT(*) AS n,
+         |    SUM(CAST(round(rel * ($wl)[rk], 12) AS DECIMAL(28,12)))
+         |      AS dcg,
+         |    SUM(CAST(round(rel * ($wl)[irk], 12) AS DECIMAL(28,12)))
+         |      AS idcg
+         |  FROM i GROUP BY query_id)
+         |SELECT query_id, CAST(n AS INTEGER) AS n,
+         |  round(CAST(dcg AS DOUBLE), 6) AS dcg,
+         |  round(CAST(idcg AS DOUBLE), 6) AS idcg,
+         |  CASE WHEN idcg > 0 THEN
+         |    round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6)
+         |  END AS ndcg
+         |FROM a ORDER BY query_id""".stripMargin
+    }),
+    // nprobe sweep: the IVF recall-vs-scan-cost frontier per probe width
+    Query("q236_ivf_nprobe_sweep", (s, d) => ivfNprobeSweep(s, d), {
+      import graft.ml.LloydExact.{Iters, K => LK}
+      val chain = graft.ml.LloydExact.lloydCtesFor(
+        """SELECT vec_id,
+          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+          |  FROM embeddings""".stripMargin, "g")
+      val ws = (1 to LK).mkString(", ")
+      s"""WITH $chain,
+         |qc AS (SELECT query_id, cluster, cell_rank FROM (
+         |  SELECT q.vec_id AS query_id, c.cluster,
+         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+         |      ${dotS("c.c", "c.c")} - 2 * ${dotS("q.e", "c.c")},
+         |      c.cluster) AS cell_rank
+         |  FROM (SELECT vec_id, e FROM ge WHERE vec_id < 10) q
+         |  CROSS JOIN gc$Iters c)),
+         |cand AS (SELECT qc.query_id, a.vec_id, qc.cell_rank,
+         |    ${dotS("q.e", "q.e")} - 2 * ${dotS("q.e", "a.e")}
+         |      + ${dotS("a.e", "a.e")} AS ed
+         |  FROM gafinal a JOIN qc ON a.cluster = qc.cluster
+         |  JOIN ge q ON q.vec_id = qc.query_id
+         |  WHERE a.vec_id <> qc.query_id),
+         |truth AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id ORDER BY ed, vec_id) AS rk FROM cand)
+         |  WHERE rk <= 10),
+         |sweep AS (SELECT query_id, vec_id, cell_rank, ed, nprobe
+         |  FROM cand CROSS JOIN (SELECT unnest([$ws]) AS nprobe) w
+         |  WHERE cell_rank <= nprobe),
+         |topw AS (SELECT query_id, nprobe, vec_id FROM (
+         |  SELECT query_id, nprobe, vec_id, ROW_NUMBER() OVER (
+         |    PARTITION BY query_id, nprobe ORDER BY ed, vec_id) AS rk
+         |  FROM sweep) WHERE rk <= 10),
+         |sc AS (SELECT query_id, nprobe, COUNT(*) AS n_scanned
+         |  FROM sweep GROUP BY query_id, nprobe),
+         |hits AS (SELECT t.query_id, t.nprobe, COUNT(*) AS nh
+         |  FROM topw t JOIN truth ON t.query_id = truth.query_id
+         |    AND t.vec_id = truth.vec_id
+         |  GROUP BY t.query_id, t.nprobe)
+         |SELECT sc.query_id, CAST(sc.nprobe AS INTEGER) AS nprobe,
+         |  CAST(sc.n_scanned AS INTEGER) AS n_scanned,
+         |  round(CAST(COALESCE(nh, 0) AS DOUBLE) / 10, 6) AS recall_at_k
+         |FROM sc LEFT JOIN hits
+         |  ON sc.query_id = hits.query_id AND sc.nprobe = hits.nprobe
+         |ORDER BY sc.query_id, sc.nprobe""".stripMargin
+    }),
+    // tombstoned IVF: deletions excluded at probe time, no rebuild
+    Query("q262_ivf_tombstones", (s, d) => annIvfTombstones(s, d),
+      ivfOracleS("NOT (n.vec_id % 10 = 3 AND n.vec_id >= 10)")),
+    // tombstone compaction: cell-local generational rewrite, q262 oracle
+    // q265's oracle IS q262's: a lossless compaction answers the probe
+    // exactly as the tombstone-filtered index did
+    Query("q265_ivf_compacted", (s, d) => annIvfCompacted(s, d),
+      ivfOracleS("NOT (n.vec_id % 10 = 3 AND n.vec_id >= 10)")),
+    // diversity-aware retrieval: greedy MMR over the relevance pool
+    Query("q271_mmr_rerank", (s, d) => mmrRerank(s, d), mmrOracleS),
+    // contrastive-pair export: hardest negative/positive per query
+    Query("q275_hard_negatives", (s, d) => hardNegatives(s, d),
+      hardNegOracleS),
+    // index INSERT path: cell-append under fixed centroids, no retrain
+    Query("q277_ivf_upsert", (s, d) => annIvfUpsert(s, d), q277OracleS),
+    // hash-routed train/val/test with per-label share audit
+    Query("q280_stratified_split", (s, d) => stratifiedSplit(s, d),
+      q280OracleS),
+    // MRL deployment eval: recall at each stored-prefix width
+    Query("q285_matryoshka_recall", (s, d) => matryoshkaRecall(s, d),
+      q285OracleS),
+    // 64x compression eval: sign-bit vectors, Hamming top-k vs float
+    Query("q286_sign_hamming", (s, d) => signHammingSearch(s, d),
+      q286OracleS),
+    // embedding geometry QA: pair cosine, norm CV, center-norm ratio
+    Query("q293_anisotropy", (s, d) => anisotropyReport(s, d),
+      q293OracleS),
+    // label-noise census: cell-local leave-one-out 1-NN agreement
+    Query("q296_label_noise", (s, d) => labelNoiseCensus(s, d),
+      q296OracleS),
+    // 24th streaming surface: q277's IVF insert as the ingest loop —
+    // micro-batch appends into the persisted cell layout across a
+    // checkpointed restart, probe hash-equal to the batch oracle
+    // q298's oracle IS q277's, verbatim: the streamed increments must
+    // land on the batch upsert's answer regardless of micro-batch
+    // splits or the job restart between them
+    Query("q298_ivf_upsert_stream", (s, d) => annIvfUpsertStream(s, d),
+      q277OracleS),
+    // scatter-gather exact top-k: per-shard top-k merged into the
+    // global answer, hash-equal to q31's single-scan oracle
+    // q300's oracle IS q31's verbatim: the scatter-gather lemma says
+    // the shard-local cut never loses a global winner — hash-equality
+    // executes that proof
+    Query("q300_scatter_topk", (s, d) => scatterGatherTopK(s, d),
+      q31TopkOracleS),
+    // filtered vector search: filter-then-rank vs rank-then-filter,
+    // with the post-filter recall loss measured per query
+    Query("q305_filtered_ann", (s, d) => annFiltered(s, d), {
       val L = graft.ml.LloydExact
       s"""WITH ${L.lloydCtesS},
          |cells AS MATERIALIZED (SELECT a.vec_id, a.e, a.cluster,
@@ -2706,11 +3218,15 @@ object Similarity {
          |LEFT JOIN ns ON ns.query_id = q.query_id
          |LEFT JOIN nc ON nc.query_id = q.query_id
          |ORDER BY q.query_id""".stripMargin
-    },
+    }),
+    // filter-aware probe expansion — the third filtered-ANN strategy:
+    // widen nprobe until >= k matching candidates are covered (one
+    // cumulative window, no iteration); reports recall vs exact for
+    // home-cell-only and expanded side by side
     // q311: the expansion rule (shortest cell_rank prefix covering
     // >= k matching candidates) recomputed flat — per-cell match
     // counts, one cumulative window, then the three strategies' top-k
-    "q311_filter_expand" -> {
+    Query("q311_filter_expand", (s, d) => annFilterExpand(s, d), {
       val L = graft.ml.LloydExact
       val h9 = TextPrims.hex60S(
         TextPrims.seededMd5S(9, "CAST(vec_id AS VARCHAR)"))
@@ -2792,565 +3308,106 @@ object Similarity {
          |LEFT JOIN he ON he.query_id = q.query_id
          |LEFT JOIN hh ON hh.query_id = q.query_id
          |ORDER BY q.query_id""".stripMargin
-    },
-    // q298's oracle IS q277's, verbatim: the streamed increments must
-    // land on the batch upsert's answer regardless of micro-batch
-    // splits or the job restart between them
-    "q298_ivf_upsert_stream" -> q277OracleS,
-    "q280_stratified_split" -> q280OracleS,
-    "q285_matryoshka_recall" -> q285OracleS,
-    "q293_anisotropy" -> q293OracleS,
-    "q296_label_noise" -> q296OracleS,
-    "q286_sign_hamming" -> q286OracleS,
-    "q314_multiprobe_lsh" -> q314OracleS,
-    "q231_ndcg_lexical" -> {
-      val wl = "[" + ndcgWeights(10).mkString(", ") + "]"
-      s"""WITH e AS ($embS),
-         |ts AS (SELECT doc_id,
-         |    list_distinct(${TextPrims.tokensS("text")}) AS ts
-         |  FROM documents),
-         |qs AS (SELECT doc_id AS query_id, ts AS qts FROM ts
-         |  WHERE doc_id < 10),
-         |lx AS (SELECT qs.query_id, t.doc_id AS neighbor_id,
-         |    round(CAST(len(list_intersect(qs.qts, t.ts)) AS DOUBLE) /
-         |      (len(qs.qts) + len(t.ts) - len(list_intersect(qs.qts, t.ts))),
-         |      6) AS jac
-         |  FROM qs JOIN ts t ON t.doc_id <> qs.query_id
-         |  WHERE len(list_intersect(qs.qts, t.ts)) >= 1),
-         |lex AS (SELECT query_id, neighbor_id, rk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY jac DESC, neighbor_id) AS rk FROM lx)
-         |  WHERE rk <= 10),
-         |g AS (SELECT lex.query_id, lex.neighbor_id, lex.rk,
-         |    greatest(round(${simS(s"${dotS("q.e", "n.e")}",
-           "q.nrm", "n.nrm")}, 6), 0.0) AS rel
-         |  FROM lex
-         |  JOIN e n ON lex.neighbor_id = n.vec_id
-         |  JOIN e q ON lex.query_id = q.vec_id),
-         |i AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |    ORDER BY rel DESC, neighbor_id) AS irk FROM g),
-         |a AS (SELECT query_id, COUNT(*) AS n,
-         |    SUM(CAST(round(rel * ($wl)[rk], 12) AS DECIMAL(28,12)))
-         |      AS dcg,
-         |    SUM(CAST(round(rel * ($wl)[irk], 12) AS DECIMAL(28,12)))
-         |      AS idcg
-         |  FROM i GROUP BY query_id)
-         |SELECT query_id, CAST(n AS INTEGER) AS n,
-         |  round(CAST(dcg AS DOUBLE), 6) AS dcg,
-         |  round(CAST(idcg AS DOUBLE), 6) AS idcg,
-         |  CASE WHEN idcg > 0 THEN
-         |    round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6)
-         |  END AS ndcg
-         |FROM a ORDER BY query_id""".stripMargin
-    },
-    "q230_rrf_fusion" ->
-      s"""WITH e AS ($embS),
-         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn FROM e
-         |  WHERE vec_id < 10),
-         |c AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-         |    ${simS(s"${dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
-         |  FROM q CROSS JOIN e n WHERE n.vec_id <> q.query_id),
-         |dense AS (SELECT query_id, neighbor_id, rk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rk FROM c)
-         |  WHERE rk <= 10),
-         |ts AS (SELECT doc_id,
-         |    list_distinct(${TextPrims.tokensS("text")}) AS ts
-         |  FROM documents),
-         |qs AS (SELECT doc_id AS query_id, ts AS qts FROM ts
-         |  WHERE doc_id < 10),
-         |lx AS (SELECT qs.query_id, t.doc_id AS neighbor_id,
-         |    round(CAST(len(list_intersect(qs.qts, t.ts)) AS DOUBLE) /
-         |      (len(qs.qts) + len(t.ts) - len(list_intersect(qs.qts, t.ts))),
-         |      6) AS jac
-         |  FROM qs JOIN ts t ON t.doc_id <> qs.query_id
-         |  WHERE len(list_intersect(qs.qts, t.ts)) >= 1),
-         |lex AS (SELECT query_id, neighbor_id, rk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY jac DESC, neighbor_id) AS rk FROM lx)
-         |  WHERE rk <= 10),
-         |u AS (SELECT query_id, neighbor_id,
-         |    CAST(round(1.0 / (60 + rk), 12) AS DECIMAL(28,12)) AS cb
-         |  FROM dense
-         |  UNION ALL SELECT query_id, neighbor_id,
-         |    CAST(round(1.0 / (60 + rk), 12) AS DECIMAL(28,12))
-         |  FROM lex),
-         |f AS (SELECT query_id, neighbor_id, SUM(cb) AS rrfd,
-         |    COUNT(*) AS n_systems
-         |  FROM u GROUP BY query_id, neighbor_id),
-         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |    ORDER BY CAST(rrfd AS DOUBLE) DESC, neighbor_id) AS frk
-         |  FROM f)
-         |SELECT query_id, neighbor_id, CAST(frk AS INTEGER) AS rk,
-         |  CAST(n_systems AS INTEGER) AS n_systems,
-         |  round(CAST(rrfd AS DOUBLE), 12) AS rrf_score
-         |FROM r WHERE frk <= 5 ORDER BY query_id, rk""".stripMargin,
-    "q217_jl_distortion" -> {
-      val ps16 = planesFor(SimConfig(numPlanes = 16))
-      val plCte = "pl AS (SELECT " + (0 until 16).map(p =>
-        "[" + ps16(p).map(_.toString).mkString(", ") + s"] AS pl$p")
-        .mkString(", ") + ")"
-      val sc = math.sqrt(3.0 / 16)
-      val peList = "[" + (0 until 16).map(p =>
-        s"${dotS("e0.e", s"pl$p")} * $sc").mkString(", ") + "]"
-      def d2(a: String, b: String) =
-        s"${dotS(a, a)} - 2 * ${dotS(a, b)} + ${dotS(b, b)}"
-      s"""WITH e0 AS ($embS), $plCte,
-         |pe AS (SELECT vec_id, e, $peList AS pe FROM e0, pl),
-         |q AS (SELECT vec_id AS query_id, e AS qe, pe AS qpe FROM pe
-         |  WHERE vec_id < 10),
-         |pairs AS (SELECT q.query_id,
-         |    ${d2("q.qe", "n.e")} AS td,
-         |    ${d2("q.qpe", "n.pe")} AS pd
-         |  FROM q CROSS JOIN pe n WHERE n.vec_id <> q.query_id),
-         |r AS (SELECT query_id, ABS(pd / td - 1.0) AS rel FROM pairs
-         |  WHERE td <> 0)
-         |SELECT query_id, CAST(COUNT(*) AS INTEGER) AS n_pairs,
-         |  round(CAST(SUM(CAST(round(rel, 6) AS DECIMAL(18,6)))
-         |    AS DOUBLE) / COUNT(*), 6) AS mean_distortion,
-         |  MAX(round(rel, 6)) AS max_distortion
-         |FROM r GROUP BY query_id ORDER BY query_id""".stripMargin
-    },
-    "q199_retrieval_agreement" ->
-      s"""WITH e AS ($embS),
-         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn FROM e
-         |  WHERE vec_id < 10),
-         |c AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-         |    ${simS(s"${dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
-         |  FROM q CROSS JOIN e n WHERE n.vec_id <> q.query_id),
-         |dense AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rk FROM c)
-         |  WHERE rk <= 10),
-         |ts AS (SELECT doc_id,
-         |    list_distinct(${TextPrims.tokensS("text")}) AS ts
-         |  FROM documents),
-         |qs AS (SELECT doc_id AS query_id, ts AS qts FROM ts
-         |  WHERE doc_id < 10),
-         |lx AS (SELECT qs.query_id, t.doc_id AS neighbor_id,
-         |    round(CAST(len(list_intersect(qs.qts, t.ts)) AS DOUBLE) /
-         |      (len(qs.qts) + len(t.ts) - len(list_intersect(qs.qts, t.ts))),
-         |      6) AS jac
-         |  FROM qs JOIN ts t ON t.doc_id <> qs.query_id
-         |  WHERE len(list_intersect(qs.qts, t.ts)) >= 1),
-         |lex AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY jac DESC, neighbor_id) AS rk FROM lx)
-         |  WHERE rk <= 10),
-         |common AS (SELECT lex.query_id, COUNT(*) AS nc FROM lex
-         |  JOIN dense ON lex.query_id = dense.query_id
-         |    AND lex.neighbor_id = dense.neighbor_id
-         |  GROUP BY lex.query_id)
-         |SELECT q.query_id, CAST(COALESCE(nc, 0) AS INTEGER) AS n_common,
-         |  round(CAST(COALESCE(nc, 0) AS DOUBLE) / 10, 6) AS overlap_at_k
-         |FROM (SELECT DISTINCT query_id FROM dense) q
-         |LEFT JOIN common ON q.query_id = common.query_id
-         |ORDER BY q.query_id""".stripMargin,
-    "q31_cosine_topk" -> q31TopkOracleS,
-    // q300's oracle IS q31's verbatim: the scatter-gather lemma says
-    // the shard-local cut never loses a global winner — hash-equality
-    // executes that proof
-    "q300_scatter_topk" -> q31TopkOracleS,
-    "q32_ann_lsh" ->
-      s"""WITH e0 AS ($embS), $planesCte,
-         |e AS (SELECT vec_id, e, nrm, ${bucketS("e")} AS bkt FROM e0, pl),
-         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, bkt
-         |  FROM e WHERE vec_id < 10),
-         |c AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-         |    ${simS(s"${dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
-         |  FROM q JOIN e n USING (bkt) WHERE n.vec_id <> q.query_id),
-         |r AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rk
-         |  FROM c)
-         |SELECT query_id, neighbor_id, rk, round(sim, 6) AS cosine
-         |FROM r WHERE rk <= $K ORDER BY query_id, rk""".stripMargin,
-    "q33_knn_classify" -> knnOracleSql,
-    "q35_knn_confusion" -> {
-      val pcols = (0 until 10).map(i =>
-        s"CAST(count(CASE WHEN n_label = $i THEN 1 END) AS INTEGER) AS p$i")
-        .mkString(", ")
-      s"""WITH e AS ($embS),
-         |test AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn,
-         |    label AS true_label
-         |  FROM e WHERE vec_id % 7 = 0),
-         |train AS (SELECT vec_id AS neighbor_id, e AS ne, nrm AS nn,
-         |    label AS n_label
-         |  FROM e WHERE vec_id % 7 <> 0),
-         |c AS (SELECT query_id, true_label, neighbor_id, n_label,
-         |    ${simS(s"${dotS("qe", "ne")}", "qn", "nn")} AS sim
-         |  FROM test CROSS JOIN train),
-         |nb AS (SELECT query_id, true_label, n_label,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rk
-         |  FROM c),
-         |votes AS (SELECT query_id, true_label, n_label, count(*) AS votes
-         |  FROM nb WHERE rk <= $K GROUP BY query_id, true_label, n_label),
-         |win AS (SELECT query_id, n_label, true_label,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY votes DESC, n_label) AS vr
-         |  FROM votes)
-         |SELECT CAST(true_label AS INTEGER) AS true_label, $pcols
-         |FROM win WHERE vr = 1
-         |GROUP BY true_label ORDER BY true_label""".stripMargin
-    },
-    "q34_embed_neardup" ->
-      s"""WITH e0 AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
-         |corpus AS (SELECT vec_id, e FROM e0
-         |  UNION ALL
-         |  SELECT vec_id + $VariantVecOffset, list_transform(e, x -> x * 2.0)
-         |  FROM e0 WHERE vec_id % 25 = 0),
-         |$planesCte,
-         |cb AS (SELECT vec_id, e, sqrt(${dotS("e", "e")}) AS nrm,
-         |    ${bucketS("e")} AS bkt FROM corpus, pl),
-         |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |    round(${simS(s"${dotS("a.e", "b.e")}", "a.nrm", "b.nrm")}, 6) AS cosine
-         |  FROM cb a JOIN cb b ON a.bkt = b.bkt AND a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, cosine FROM p
-         |WHERE cosine >= 0.9999 ORDER BY vec_a, vec_b""".stripMargin,
-    "q177_ann_tuning_sweep" -> {
-      def planeSFor(cfg: SimConfig, p: Int): String =
-        "[" + planesFor(cfg)(p).map(_.toString).mkString(", ") + "]"
-      val bfCte =
-        s"""bq AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn FROM e
-           |  WHERE vec_id < 10),
-           |bc AS (SELECT bq.query_id, n.vec_id AS neighbor_id,
-           |    ${simS(s"${dotS("bq.qe", "n.e")}", "bq.qn", "n.nrm")} AS sim
-           |  FROM bq CROSS JOIN e n WHERE n.vec_id <> bq.query_id),
-           |bfr AS (SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-           |      PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-           |    FROM bc) z WHERE rk <= $K)""".stripMargin
-      val blocks = TuningPlaneCounts.map { pc =>
-        val cfg = SimConfig(numPlanes = pc)
-        val t = s"p$pc"
-        val planeCols = (0 until pc)
-          .map(i => s"${planeSFor(cfg, i)} AS ${t}pl$i").mkString(", ")
-        val bkt = (0 until pc).map(i =>
-          s"(CASE WHEN ${dotS("e", s"${t}pl$i")} >= 0 THEN '1' ELSE '0' END)")
-          .mkString(" || ")
-        s"""${t}pl AS (SELECT $planeCols),
-           |${t}e AS (SELECT vec_id, e, nrm, $bkt AS bkt FROM e, ${t}pl),
-           |${t}q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, bkt
-           |  FROM ${t}e WHERE vec_id < 10),
-           |${t}cand AS (SELECT q.query_id, q.qe, q.qn,
-           |    n.vec_id AS neighbor_id, n.e AS ne, n.nrm AS nn
-           |  FROM ${t}q q JOIN ${t}e n USING (bkt)
-           |  WHERE n.vec_id <> q.query_id),
-           |${t}cc AS (SELECT query_id, COUNT(*) AS n_candidates
-           |  FROM ${t}cand GROUP BY 1),
-           |${t}top AS (SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-           |      PARTITION BY query_id ORDER BY
-           |        ${simS(s"${dotS("qe", "ne")}", "qn", "nn")} DESC,
-           |        neighbor_id) AS rk
-           |    FROM ${t}cand) z WHERE rk <= $K),
-           |${t}hits AS (SELECT b.query_id, COUNT(*) AS n_hits FROM bfr b
-           |  JOIN ${t}top tt ON b.query_id = tt.query_id
-           |    AND b.neighbor_id = tt.neighbor_id
-           |  GROUP BY 1),
-           |${t}res AS (SELECT $pc AS num_planes, q.query_id,
-           |    CAST(COALESCE(cc.n_candidates, 0) AS INTEGER) AS n_candidates,
-           |    CAST(COALESCE(h.n_hits, 0) AS INTEGER) AS n_hits,
-           |    CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / $K AS recall
-           |  FROM (SELECT DISTINCT query_id FROM ${t}q) q
-           |  LEFT JOIN ${t}cc cc USING (query_id)
-           |  LEFT JOIN ${t}hits h USING (query_id))""".stripMargin
-      }
-      val sel = TuningPlaneCounts.map(pc => s"SELECT * FROM p${pc}res")
-        .mkString("\nUNION ALL ")
-      (s"WITH e AS ($embS)" +: bfCte +: blocks).mkString(",\n") + "\n" + sel +
-        "\nORDER BY num_planes, query_id"
-    },
-    "q166_diverse_select" -> {
-      // the k greedy rounds unroll as CTEs (the q142 fixed-iteration
-      // pattern): each pick cross-joins the previous 1-row picks, computes
-      // the min cosine-distance to the selected set with the SAME double
-      // expression as the Spark side, and takes the (dm DESC, vec_id)
-      // argmax
-      val K = 8
-      def cosD(b: String) =
-        s"1 - ${dotS("n.e", s"$b.e")} / (n.nrm * $b.nrm)"
-      val base =
-        s"""WITH c AS (SELECT vec_id,
-           |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           |  FROM embeddings),
-           |n AS (SELECT vec_id, e, sqrt(${dotS("e", "e")}) AS nrm FROM c),
-           |p1 AS (SELECT vec_id, e, nrm, CAST(NULL AS DOUBLE) AS dm
-           |  FROM n ORDER BY vec_id LIMIT 1)""".stripMargin
-      val rounds = (2 to K).map { i =>
-        val dists = (1 until i).map(j => cosD(s"p$j"))
-        val dm = if (dists.size == 1) dists.head
-          else s"LEAST(${dists.mkString(", ")})"
-        val crossJ = (1 until i).map(j => s"CROSS JOIN p$j").mkString(" ")
-        s"""p$i AS (SELECT n.vec_id, n.e, n.nrm, $dm AS dm
-           |  FROM n $crossJ
-           |  ORDER BY dm DESC, n.vec_id LIMIT 1)""".stripMargin
-      }
-      val sel = (1 to K).map(i =>
-        s"SELECT $i AS rank, vec_id, round(dm, 6) AS dist FROM p$i")
-        .mkString("\nUNION ALL ")
-      (base +: rounds).mkString(",\n") + "\n" + sel + "\nORDER BY rank"
-    },
-    "q164_split_leakage" ->
-      s"""WITH e0 AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
-         |$planesCte,
-         |tr AS (SELECT vec_id AS train_id, e AS te,
-         |    sqrt(${dotS("e", "e")}) AS tn, ${bucketS("e")} AS bkt
-         |  FROM e0, pl
-         |  WHERE ${TextPrims.hex60S("md5(CAST(vec_id AS VARCHAR))")} % 100 < 80),
-         |ev0 AS (SELECT vec_id + $VariantVecOffset AS eval_id,
-         |    list_transform(e, x -> x * 1.5) AS e FROM e0 WHERE vec_id % 25 = 0
-         |  UNION ALL SELECT vec_id + ${2 * VariantVecOffset},
-         |    list_reverse(e) FROM e0 WHERE vec_id % 17 = 0),
-         |ev AS (SELECT eval_id, e AS ee, sqrt(${dotS("e", "e")}) AS en,
-         |    ${bucketS("e")} AS bkt FROM ev0, pl),
-         |m AS (SELECT eval_id, train_id,
-         |    round(${simS(s"${dotS("ee", "te")}", "en", "tn")}, 6) AS cosine
-         |  FROM ev JOIN tr USING (bkt)
-         |  WHERE round(${simS(s"${dotS("ee", "te")}", "en", "tn")}, 6)
-         |    >= 0.999),
-         |r AS (SELECT eval_id, train_id, cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY eval_id
-         |      ORDER BY cosine DESC, train_id) AS rk,
-         |    CAST(COUNT(*) OVER (PARTITION BY eval_id) AS INTEGER)
-         |      AS n_matches
-         |  FROM m)
-         |SELECT eval_id, train_id, cosine, n_matches
-         |FROM r WHERE rk = 1 ORDER BY eval_id""".stripMargin,
-    "q175_split_centroid_drift" -> {
-      val splitS =
-        s"""CASE WHEN ${TextPrims.hex60S("md5(CAST(vec_id AS VARCHAR))")}
-           | % 100 < 80 THEN 'train'
-           | WHEN ${TextPrims.hex60S("md5(CAST(vec_id AS VARCHAR))")}
-           | % 100 < 90 THEN 'val' ELSE 'test' END"""
-          .stripMargin.replace("\n", "")
-      s"""WITH base AS (SELECT vec_id, $splitS AS split, embedding
-         |  FROM embeddings),
-         |d AS (SELECT split, g.i - 1 AS dim,
-         |    CAST(embedding[g.i] AS DOUBLE) AS xd
-         |  FROM base CROSS JOIN generate_series(1, $Dim) AS g(i)),
-         |c AS (SELECT split, dim,
-         |    CAST(SUM(CAST(CAST(xd AS DECIMAL(18,9)) * 1000000000 AS BIGINT))
-         |      AS DOUBLE) / COUNT(*) / 1000000000.0 AS mu
-         |  FROM d GROUP BY 1, 2),
-         |n AS (SELECT split, CAST(COUNT(*) AS INTEGER) AS n FROM base
-         |  GROUP BY 1),
-         |p AS (SELECT a.split AS split_a, b.split AS split_b,
-         |    SUM(CAST((a.mu - b.mu) * (a.mu - b.mu) AS DECIMAL(38,12))) AS d2
-         |  FROM c a JOIN c b ON a.dim = b.dim AND a.split < b.split
-         |  GROUP BY 1, 2)
-         |SELECT split_a, split_b, na.n AS n_a, nb.n AS n_b,
-         |  round(sqrt(CAST(d2 AS DOUBLE)), 6) AS centroid_dist
-         |FROM p JOIN n na ON split_a = na.split JOIN n nb ON split_b = nb.split
-         |ORDER BY split_a, split_b""".stripMargin
-    },
-    "q141_centroid_outliers" ->
-      s"""WITH d AS (SELECT vec_id, label, g.i - 1 AS dim,
-         |    CAST(embedding[g.i] AS DOUBLE) AS xd
-         |  FROM embeddings CROSS JOIN generate_series(1, $Dim) AS g(i)),
-         |c AS (SELECT label, dim,
-         |    CAST(SUM(CAST(CAST(xd AS DECIMAL(18,9)) * 1000000000 AS BIGINT))
-         |      AS DOUBLE) / COUNT(*) / 1000000000.0 AS mu
-         |  FROM d GROUP BY 1, 2),
-         |s2 AS (SELECT vec_id, d.label,
-         |    SUM(CAST((xd - mu) * (xd - mu) AS DECIMAL(38,12))) AS d2
-         |  FROM d JOIN c ON d.label = c.label AND d.dim = c.dim
-         |  GROUP BY 1, 2),
-         |r AS (SELECT label, vec_id, d2,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY label
-         |      ORDER BY d2 DESC, vec_id) AS INTEGER) AS rk
-         |  FROM s2)
-         |SELECT label, rk, vec_id, round(sqrt(CAST(d2 AS DOUBLE)), 6) AS dist
-         |FROM r WHERE rk <= 5 ORDER BY label, rk""".stripMargin,
-    "q44_embedding_stats" ->
-      s"""WITH e AS ($embS)
-         |SELECT label, count(*) AS n,
-         |  round(CAST(sum(CAST(nrm AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
-         |    AS mean_norm
-         |FROM e GROUP BY label ORDER BY label""".stripMargin,
-  ) ++ Map(
-    // q45 = q33 semantics via the top-k aggregator; same oracle
-    "q45_knn_topk_agg" -> knnOracleSql,
-    "q61_ann_ivf" -> q61OracleS,
-    // q170's oracle IS q61's: the persisted index must answer the same
-    // queries identically — the round trip is the thing under test
-    "q170_ann_ivf_persisted" -> q61OracleS,
-    "q262_ivf_tombstones" ->
-      ivfOracleS("NOT (n.vec_id % 10 = 3 AND n.vec_id >= 10)"),
-    // q265's oracle IS q262's: a lossless compaction answers the probe
-    // exactly as the tombstone-filtered index did
-    "q265_ivf_compacted" ->
-      ivfOracleS("NOT (n.vec_id % 10 = 3 AND n.vec_id >= 10)"),
-    "q236_ivf_nprobe_sweep" -> {
-      import graft.ml.LloydExact.{Iters, K => LK}
-      val chain = graft.ml.LloydExact.lloydCtesFor(
-        """SELECT vec_id,
-          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          |  FROM embeddings""".stripMargin, "g")
-      val ws = (1 to LK).mkString(", ")
-      s"""WITH $chain,
-         |qc AS (SELECT query_id, cluster, cell_rank FROM (
-         |  SELECT q.vec_id AS query_id, c.cluster,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-         |      ${dotS("c.c", "c.c")} - 2 * ${dotS("q.e", "c.c")},
-         |      c.cluster) AS cell_rank
-         |  FROM (SELECT vec_id, e FROM ge WHERE vec_id < 10) q
-         |  CROSS JOIN gc$Iters c)),
-         |cand AS (SELECT qc.query_id, a.vec_id, qc.cell_rank,
-         |    ${dotS("q.e", "q.e")} - 2 * ${dotS("q.e", "a.e")}
-         |      + ${dotS("a.e", "a.e")} AS ed
-         |  FROM gafinal a JOIN qc ON a.cluster = qc.cluster
-         |  JOIN ge q ON q.vec_id = qc.query_id
-         |  WHERE a.vec_id <> qc.query_id),
-         |truth AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id ORDER BY ed, vec_id) AS rk FROM cand)
-         |  WHERE rk <= 10),
-         |sweep AS (SELECT query_id, vec_id, cell_rank, ed, nprobe
-         |  FROM cand CROSS JOIN (SELECT unnest([$ws]) AS nprobe) w
-         |  WHERE cell_rank <= nprobe),
-         |topw AS (SELECT query_id, nprobe, vec_id FROM (
-         |  SELECT query_id, nprobe, vec_id, ROW_NUMBER() OVER (
-         |    PARTITION BY query_id, nprobe ORDER BY ed, vec_id) AS rk
-         |  FROM sweep) WHERE rk <= 10),
-         |sc AS (SELECT query_id, nprobe, COUNT(*) AS n_scanned
-         |  FROM sweep GROUP BY query_id, nprobe),
-         |hits AS (SELECT t.query_id, t.nprobe, COUNT(*) AS nh
-         |  FROM topw t JOIN truth ON t.query_id = truth.query_id
-         |    AND t.vec_id = truth.vec_id
-         |  GROUP BY t.query_id, t.nprobe)
-         |SELECT sc.query_id, CAST(sc.nprobe AS INTEGER) AS nprobe,
-         |  CAST(sc.n_scanned AS INTEGER) AS n_scanned,
-         |  round(CAST(COALESCE(nh, 0) AS DOUBLE) / 10, 6) AS recall_at_k
-         |FROM sc LEFT JOIN hits
-         |  ON sc.query_id = hits.query_id AND sc.nprobe = hits.nprobe
-         |ORDER BY sc.query_id, sc.nprobe""".stripMargin
-    },
-    "q171_ann_sq8" ->
-      s"""WITH e0 AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
-         |n0 AS (SELECT vec_id, e, sqrt(${dotS("e", "e")}) AS nrm FROM e0),
-         |am AS (SELECT MAX(list_max(list_transform(e, x -> abs(x)))) AS a
-         |  FROM e0),
-         |qz AS (SELECT vec_id, list_transform(e, x ->
-         |    greatest(least(round(x * 127.0 / a, 0), 127.0), -127.0)) AS q
-         |  FROM e0, am),
-         |qn AS (SELECT vec_id, q, sqrt(${dotS("q", "q")}) AS qn FROM qz),
-         |pr AS (SELECT vec_id AS query_id, q AS pq, qn AS pn FROM qn
-         |  WHERE vec_id < 10),
-         |ap AS (SELECT pr.query_id, c.vec_id AS neighbor_id,
-         |    ${dotS("pr.pq", "c.q")} / (pr.pn * c.qn) AS approx
-         |  FROM qn c CROSS JOIN pr WHERE c.vec_id <> pr.query_id),
-         |tr AS (SELECT query_id, neighbor_id, approx,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY approx DESC, neighbor_id) AS rr FROM ap),
-         |cd AS (SELECT query_id, neighbor_id, approx FROM tr
-         |  WHERE rr <= $Sq8TopR),
-         |rr2 AS (SELECT cd.query_id, cd.neighbor_id, cd.approx,
-         |    ${simS(s"${dotS("a.e", "b.e")}", "a.nrm", "b.nrm")} AS cosine
-         |  FROM cd JOIN n0 a ON cd.query_id = a.vec_id
-         |    JOIN n0 b ON cd.neighbor_id = b.vec_id),
-         |r AS (SELECT query_id, neighbor_id, approx, cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rk FROM rr2)
-         |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS rk,
-         |  round(cosine, 6) AS cosine, round(approx, 6) AS approx_sim
-         |FROM r WHERE rk <= $K ORDER BY query_id, rk""".stripMargin,
-    "q181_semdedup" -> {
-      val L = graft.ml.LloydExact
-      val off = VariantVecOffset
-      s"""WITH ${L.lloydCtesS},
-         |aug AS (SELECT vec_id, e FROM e
-         |  UNION ALL SELECT vec_id + $off,
-         |    list_transform(e, x -> x * 2.0) FROM e WHERE vec_id % 10 = 0
-         |  UNION ALL SELECT vec_id + ${2L * off},
-         |    list_transform(e, x -> x * 0.5) FROM e WHERE vec_id % 15 = 0),
-         |an AS (SELECT vec_id, e, sqrt(${L.dotS("e", "e")}) AS nrm
-         |  FROM aug),
-         |cn AS (SELECT cluster, c, sqrt(${L.dotS("c", "c")}) AS cnrm
-         |  FROM c${L.Iters}),
-         |cells AS (SELECT vec_id, e, nrm, cluster FROM (
-         |  SELECT a.vec_id, a.e, a.nrm, c.cluster,
-         |    ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-         |      ${L.dotS("a.e", "c.c")} / (a.nrm * c.cnrm) DESC,
-         |      c.cluster) AS rn
-         |  FROM an a CROSS JOIN cn c) WHERE rn = 1),
-         |p AS (SELECT b.vec_id, b.cluster, a.vec_id AS kept_id,
-         |    round(${L.dotS("a.e", "b.e")} / (a.nrm * b.nrm), 6) AS cosine
-         |  FROM cells a JOIN cells b
-         |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
-         |r AS (SELECT vec_id, cluster, kept_id, cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY cosine DESC, kept_id) AS rk
-         |  FROM p WHERE cosine >= 0.999)
-         |SELECT vec_id, cluster, kept_id, cosine
-         |FROM r WHERE rk = 1 ORDER BY vec_id""".stripMargin
-    },
-    "q71_ann_recall" -> {
+    }),
+    // multi-probe sign-LSH — the LSH family's nprobe analogue: home
+    // bucket vs home + 8 flip-1 buckets, exact-cosine re-rank, recall
+    // vs the float top-k for both strategies
+    Query("q314_multiprobe_lsh", (s, d) => multiProbeLsh(s, d),
+      q314OracleS),
+    // rank-biased overlap: top-weighted similarity of two rankings —
+    // the chars-vs-tokens budget-proxy stability number
+    // q328: identical prefix-overlap cumulative + shared 12-dp weight
+    // literals; (1−p) is inlined as the JVM's computed double so both
+    // engines scale by the exact same value
+    Query("q328_rbo_rankings", (s, d) => rboRankings(s, d), {
+      val (p, depth) = (0.9, 50)
+      val wl = "[" + rboWeights(p, depth).mkString(", ") + "]"
+      val oneMinusP = (1.0 - p).toString
+      s"""WITH docs AS (SELECT doc_id, n_chars,
+         |    ${TextPrims.bpeTokensS("text")} AS toks FROM documents),
+         |ra AS (SELECT doc_id, ra FROM (SELECT doc_id,
+         |    ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS ra
+         |  FROM docs) WHERE ra <= $depth),
+         |rb AS (SELECT doc_id, rb FROM (SELECT doc_id,
+         |    ROW_NUMBER() OVER (ORDER BY toks DESC, doc_id) AS rb
+         |  FROM docs) WHERE rb <= $depth),
+         |j AS (SELECT greatest(ra.ra, rb.rb) AS md
+         |  FROM ra JOIN rb USING (doc_id)),
+         |dd AS (SELECT unnest(generate_series(1, $depth)) AS d),
+         |xd AS (SELECT dd.d, COUNT(j.md) AS x
+         |  FROM dd LEFT JOIN j ON j.md <= dd.d GROUP BY dd.d),
+         |terms AS (SELECT d, x,
+         |    round(CAST(x AS DOUBLE) / d * ($wl)[d], 9) AS term FROM xd),
+         |r AS (SELECT d, x,
+         |    round($oneMinusP * CAST(SUM(CAST(term AS DECIMAL(28,9)))
+         |      OVER (ORDER BY d ROWS UNBOUNDED PRECEDING) AS DOUBLE), 6)
+         |      AS rbo
+         |  FROM terms)
+         |SELECT CAST(d AS INTEGER) AS d, x AS overlap, rbo FROM r
+         |WHERE d IN (1, 5, 10, 25, 50) ORDER BY d""".stripMargin
+    }),
+    // energy distance between label clusters: the multivariate
+    // two-sample drift test for embedding space, sampled per group
+    // q331: identical sampled V-statistic in DuckDB (same distance
+    // route, same 9-dp row rounding, same closing algebra)
+    Query("q331_energy_distance", (s, d) => energyDistance(s, d), {
+      val perLabel = 64
+      val dAB = s"round(sqrt(greatest(${dotS("a.e", "a.e")} - " +
+        s"2.0 * ${dotS("a.e", "b.e")} + ${dotS("b.e", "b.e")}, 0.0)), 9)"
+      s"""WITH e0 AS ($embS),
+         |sm AS MATERIALIZED (SELECT label, vec_id, e FROM (
+         |    SELECT label, vec_id, e,
+         |      ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id)
+         |        AS rk
+         |    FROM e0) WHERE rk <= $perLabel),
+         |w AS MATERIALIZED (SELECT a.label, COUNT(*) AS nn,
+         |    SUM(CAST($dAB AS DECIMAL(28,9))) AS sd
+         |  FROM sm a JOIN sm b ON a.label = b.label GROUP BY a.label),
+         |wm AS (SELECT label, CAST(sqrt(CAST(nn AS DOUBLE)) AS BIGINT)
+         |      AS n,
+         |    CAST(sd AS DOUBLE) / nn AS wmean FROM w),
+         |c AS (SELECT a.label AS label_a, b.label AS label_b,
+         |    COUNT(*) AS nm, SUM(CAST($dAB AS DECIMAL(28,9))) AS sd
+         |  FROM sm a JOIN sm b ON a.label < b.label
+         |  GROUP BY a.label, b.label)
+         |SELECT c.label_a, c.label_b, x.n AS n_a, y.n AS n_b,
+         |  round(CAST(c.sd AS DOUBLE) / c.nm, 6) AS cross_mean,
+         |  round(2.0 * (CAST(c.sd AS DOUBLE) / c.nm) - x.wmean - y.wmean,
+         |    6) AS energy
+         |FROM c JOIN wm x ON x.label = c.label_a
+         |JOIN wm y ON y.label = c.label_b
+         |ORDER BY c.label_a, c.label_b""".stripMargin
+    }),
+    // MAUVE-style pairwise Jensen-Shannon drift over shared Lloyd cells
+    // q403: same Lloyd cells (shared CTE chain), same smoothed shares,
+    // same contribution shape and 9-dp decimal routing
+    Query("q403_js_drift", jsEmbeddingDrift _, {
       val L = graft.ml.LloydExact
       s"""WITH ${L.lloydCtesS},
-         |cells AS (SELECT vec_id, e, cluster,
-         |    sqrt(${L.dotS("e", "e")}) AS nrm FROM afinal),
-         |q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, cluster
-         |  FROM cells WHERE vec_id < 10),
-         |bfc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-         |    ${simS(s"${L.dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
-         |  FROM q CROSS JOIN cells n WHERE n.vec_id <> q.query_id),
-         |bf AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-         |      PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-         |    FROM bfc) WHERE rk <= $K),
-         |ivfc AS (SELECT q.query_id, n.vec_id AS neighbor_id,
-         |    ${simS(s"${L.dotS("q.qe", "n.e")}", "q.qn", "n.nrm")} AS sim
-         |  FROM q JOIN cells n USING (cluster) WHERE n.vec_id <> q.query_id),
-         |ivf AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-         |      PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-         |    FROM ivfc) WHERE rk <= $K)
-         |SELECT bf.query_id,
-         |  CAST(count(ivf.neighbor_id) AS INTEGER) AS n_hits,
-         |  CAST(count(ivf.neighbor_id) AS DOUBLE) / $K AS recall
-         |FROM bf LEFT JOIN ivf ON bf.query_id = ivf.query_id
-         |  AND bf.neighbor_id = ivf.neighbor_id
-         |GROUP BY bf.query_id ORDER BY bf.query_id""".stripMargin
-    },
-    "q58_knn_weighted" ->
-      s"""WITH e AS ($embS),
-         |test AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn,
-         |    label AS true_label
-         |  FROM e WHERE vec_id % 7 = 0),
-         |train AS (SELECT vec_id AS neighbor_id, e AS ne, nrm AS nn,
-         |    label AS n_label
-         |  FROM e WHERE vec_id % 7 <> 0),
-         |c AS (SELECT query_id, true_label, neighbor_id, n_label,
-         |    ${simS(s"${dotS("qe", "ne")}", "qn", "nn")} AS sim
-         |  FROM test CROSS JOIN train),
-         |nb AS (SELECT query_id, true_label, n_label, sim,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rk
-         |  FROM c),
-         |votes AS (SELECT query_id, true_label, n_label,
-         |    CAST(SUM(CAST(1.0 / (1.0 - sim + 1e-9) AS DECIMAL(28,9)))
-         |      AS DOUBLE) AS wsum
-         |  FROM nb WHERE rk <= $K GROUP BY query_id, true_label, n_label),
-         |win AS (SELECT query_id, n_label, true_label,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY wsum DESC, n_label) AS vr
-         |  FROM votes)
-         |SELECT query_id AS vec_id, CAST(n_label AS INTEGER) AS pred_label,
-         |  CAST(n_label = true_label AS INTEGER) AS correct
-         |FROM win WHERE vr = 1 ORDER BY vec_id""".stripMargin
+         |lab AS (SELECT vec_id, label FROM embeddings),
+         |h AS (SELECT l.label, a.cluster, COUNT(*) AS n
+         |  FROM afinal a JOIN lab l USING (vec_id) GROUP BY 1, 2),
+         |labs AS (SELECT DISTINCT label FROM lab),
+         |grid AS (SELECT label, CAST(c AS INTEGER) AS cluster
+         |  FROM labs CROSS JOIN (SELECT unnest(range(0, ${L.K})) AS c)),
+         |tot AS (SELECT label, CAST(SUM(n) AS BIGINT) AS nt
+         |  FROM h GROUP BY 1),
+         |sh AS (SELECT g.label, g.cluster, t.nt,
+         |    (CAST(COALESCE(h.n, 0) AS DOUBLE) + 0.5)
+         |      / (CAST(t.nt AS DOUBLE) + ${L.K / 2.0}) AS p
+         |  FROM grid g
+         |  LEFT JOIN h ON g.label = h.label AND g.cluster = h.cluster
+         |  JOIN tot t ON g.label = t.label)
+         |SELECT a.label AS label_a, b.label AS label_b,
+         |  MAX(a.nt) AS n_a, MAX(b.nt) AS n_b,
+         |  round(CAST(SUM(CAST(round(0.5 *
+         |      (a.p * ln(a.p / ((a.p + b.p) / 2.0))
+         |       + b.p * ln(b.p / ((a.p + b.p) / 2.0))), 9)
+         |    AS DECIMAL(28,9))) AS DOUBLE), 6) AS js_nats
+         |FROM sh a JOIN sh b ON a.cluster = b.cluster
+         |  AND a.label < b.label
+         |GROUP BY 1, 2 ORDER BY label_a, label_b""".stripMargin
+    }),
   )
 
   private lazy val knnOracleSql: String =

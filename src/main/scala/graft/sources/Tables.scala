@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.Query
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, lit, struct}
 import org.apache.spark.sql.types.StructType
@@ -1265,4 +1267,192 @@ object Sinks {
         lit(v).as(m) }: _*).as("metrics"),
       struct(lit(k).as("k"),
         lit("euclidean").as("distance_metric")).as("parameters"))
+
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // format round-trips: write ORC/CSV/JSON, read back, aggregate — oracle is
+    // the direct parquet aggregate, so the sink+source pair is bit-lossless
+    Query("q102_orc_roundtrip", (s, d) => formatRoundTrip(s, d, "orc"),
+      rtOracle),
+    Query("q103_csv_roundtrip", (s, d) => formatRoundTrip(s, d, "csv"),
+      rtOracle),
+    Query("q104_json_roundtrip", (s, d) => formatRoundTrip(s, d, "json"),
+      rtOracle),
+    // storage levers made driver-visible: write through the partitioned /
+    // range-clustered layouts, read back pruned (PartitionFilters / pushed
+    // key-range row-group skipping — scan shapes guarded in
+    // SinksCatalogSpec), aggregate; oracle = the same filtered aggregate
+    // over the original flat parquet
+    Query("q105_partition_pruned", partitionPrunedRoundTrip _,
+      prunedOracle("l_returnflag = 'R'")),
+    Query("q106_clustered_skip", clusteredRoundTrip _,
+      prunedOracle("l_orderkey BETWEEN 1000 AND 5000", groupFlag = true)),
+    // third storage lever: bucketed+sorted managed tables carry the join
+    // with zero Exchange (co-location); oracle = same join on flat parquet
+    Query("q110_bucketed_join", bucketedJoinRoundTrip _,
+      """SELECT c_mktsegment, COUNT(*) AS n,
+        |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    // fourth storage lever: bin-packed compaction of a fragmented layout
+    // identity aggregate: the compaction rewrite must be lossless
+    Query("q132_compaction", compactRoundTrip _,
+      prunedOracle("1 = 1", groupFlag = true)),
+    // fifth storage lever: Z-order (Morton) 2-D clustering round-trip
+    // q137 oracle = the same 2-D box aggregate over the ORIGINAL
+    // parquet — hash-equality proves the Z-order rewrite lossless
+    Query("q137_zorder_skip", zorderRoundTrip _,
+      """SELECT l_suppkey, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(l_partkey) AS BIGINT) AS sum_pkey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        |FROM lineitem
+        |WHERE l_partkey BETWEEN 100 AND 400 AND l_suppkey BETWEEN 10 AND 40
+        |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin),
+    // terminal layout lever: stable hash-sharded corpus export with
+    // per-shard xor content checksums
+    // q139 oracle = the same per-shard rollup computed from the shard
+    // FUNCTION (not the written layout): hash-equality proves the
+    // partitioned export lossless shard by shard, checksums included
+    Query("q139_sharded_export", shardedExportRoundTrip(_, _), {
+      import graft.functions.TextPrims.hex60S
+      s"""WITH h AS (SELECT doc_id, n_chars, text,
+         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 8 AS shard
+         |  FROM documents)
+         |SELECT CAST(shard AS INTEGER) AS shard,
+         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
+         |  bit_xor(${hex60S("md5(text)")}) AS xor_hash
+         |FROM h GROUP BY shard ORDER BY shard""".stripMargin
+    }),
+    // Hilbert-clustered layout: q137's Z-order lever with the unit-step
+    // curve — tighter per-row-group boxes, same lossless round-trip
+    // q323 oracle = the same 2-D box aggregate over the ORIGINAL
+    // parquet — hash-equality proves the Hilbert rewrite lossless
+    Query("q323_hilbert_skip", hilbertRoundTrip _,
+      """SELECT l_suppkey, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(l_partkey) AS BIGINT) AS sum_pkey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        |FROM lineitem
+        |WHERE l_partkey BETWEEN 500 AND 900 AND l_suppkey BETWEEN 20 AND 60
+        |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin),
+    // parquet schema evolution on read: two vintages, one mergeSchema
+    // scan — old files surface the added column as NULL, no rewrite
+    // q324 oracle = the vintage-split aggregate from the ORIGINAL
+    // table (generation membership is a pure function of doc_id)
+    Query("q324_merge_schema", mergeSchemaRead _,
+      """SELECT source, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_v2,
+        |  CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN n_chars // 5 END)
+        |    AS BIGINT) AS sum_tok_est
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    // manifest-pruned scan: per-file stats table consulted at plan
+    // time — the Iceberg/Delta pruning mechanism from parts
+    // q333 oracle = the same range aggregate over the ORIGINAL table:
+    // hash-equality proves the manifest prune lost no row
+    Query("q333_manifest_prune", manifestPrunedScan _,
+      """SELECT l_suppkey, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        |FROM lineitem WHERE l_partkey BETWEEN 300 AND 700
+        |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin),
+    // custom DataSource V2 connector: fixed-width reader with column
+    // pruning + filter pushdown, certified by round-trip hash
+    // q334 oracle = the same filtered aggregate over the ORIGINAL
+    // table (quantity via the same x10^4 scaled-integer route)
+    Query("q334_fixedwidth_dsv2", fixedWidthRoundTrip _,
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(CAST(round(l_quantity * 10000) AS BIGINT))
+        |    AS BIGINT) AS sum_q4
+        |FROM lineitem WHERE l_suppkey <= 50
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // DSv2 WRITE path: lineitem through the connector's SupportsWrite
+    // (temp files + rename-on-commit, truncate), read back + aggregated
+    // q339 oracle = the same filtered aggregate over the ORIGINAL
+    // table: hash-equality certifies the connector's write path
+    // (formatting, staged temps, commit renames) + read path lossless
+    Query("q339_fixedwidth_write", fixedWidthWriteRoundTrip _,
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_qty
+        |FROM lineitem WHERE l_suppkey <= 60
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // deletion-vector merge-on-read: positional deletes applied by
+    // anti-join on (_metadata.file_path, row_index)
+    // q347 oracle = the logical delete as a plain predicate over the
+    // original table: positional plumbing must reproduce it exactly
+    Query("q347_deletion_vectors", deletionVectorScan _,
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_qty
+        |FROM lineitem WHERE l_orderkey % 13 <> 0
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // per-file Bloom index pruning for point lookups on hash layouts
+    // q349 oracle = the same point-IN aggregate over the original
+    // table: bloom pruning may cost a read, never a row
+    Query("q349_bloom_prune", bloomPrunedScan _,
+      """SELECT l_orderkey, COUNT(*) AS n,
+        |  CAST(SUM(l_suppkey) AS BIGINT) AS sum_skey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_qty
+        |FROM lineitem WHERE l_orderkey IN (7, 1007, 2207, 4007, 5507)
+        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin),
+    // one projection through all five sinks -> five identical fingerprints
+    // q382 oracle = ONE fingerprint from the original parquet, expected
+    // identically for each of the five formats
+    Query("q382_format_certificate", formatCertificate _, {
+      val rowKey = "CAST(o_orderkey AS VARCHAR) || '|' || " +
+        "CAST(o_custkey AS VARCHAR) || '|' || " +
+        "CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR) " +
+        "|| '|' || o_orderpriority"
+      s"""WITH f AS (SELECT ${graft.functions.TextPrims.hex60S(
+            s"md5($rowKey)")} AS h FROM orders),
+         |g AS (SELECT COUNT(*) AS n_rows, bit_xor(h) AS xor_fp,
+         |    CAST(CAST(SUM(CAST(h % 1000000007 AS DECIMAL(38,0)))
+         |      AS HUGEINT) % 1000000007 AS BIGINT) AS sum_fp
+         |  FROM f)
+         |SELECT fmt AS format, n_rows, xor_fp, sum_fp
+         |FROM g CROSS JOIN (VALUES ('parquet'), ('orc'), ('csv'),
+         |  ('json'), ('fixedwidth')) v(fmt)
+         |ORDER BY format""".stripMargin
+    }),
+    // Spark 4 native XML (SPARK-44265) joins the round-trip family:
+    // write <line> rows, read back with the explicit schema, aggregate
+    Query("q400_xml_roundtrip", (s, d) => formatRoundTrip(s, d, "xml"),
+      rtOracle),
+  )
+
+  /** q102–q104 and q400 oracle = the direct aggregate over the ORIGINAL
+    * parquet: hash-equality proves each non-parquet sink+source round-trip
+    * lossless. */
+  private lazy val rtOracle =
+    """SELECT l_returnflag, COUNT(*) AS n,
+      |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
+      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
+
+  /** q105/q106/q132 oracle = the same filtered aggregate over the ORIGINAL
+    * flat parquet: hash-equality proves each pruned storage layout (Hive
+    * partition dirs / range-clustered row groups) lossless. q106 has no
+    * flag filter, so l_returnflag joins the grouping key — every projected
+    * column participates in the hash either way. */
+  private def prunedOracle(where: String, groupFlag: Boolean = false) = {
+    val keys = if (groupFlag) "l_returnflag, l_linestatus" else "l_linestatus"
+    s"""SELECT $keys, COUNT(*) AS n,
+       |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
+       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+       |FROM lineitem WHERE $where
+       |GROUP BY $keys ORDER BY $keys""".stripMargin
+  }
 }

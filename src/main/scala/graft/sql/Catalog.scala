@@ -1,5 +1,7 @@
 package graft.sql
 
+import graft.Query
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -230,4 +232,64 @@ object Catalog {
         |  ON least(CAST(d.n_chars div 256 AS INT), 7) = s.b
         |GROUP BY s.b ORDER BY bucket""".stripMargin)
   }
+
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // the SQL-text entry: one dialect-portable string on both engines
+    Query("q79_sql_parity", sqlParity _, SqlParityText),
+    // LATERAL correlated join: one portable SQL string on both engines
+    Query("q101_lateral_top", lateralTopPerCustomer _, LateralTopSqlText),
+    // correlated EXISTS/NOT EXISTS + scalar subquery, one portable string
+    Query("q122_exists_churn", existsChurn _, ExistsChurnSqlText),
+    // Spark 4 SQL UDFs, scalar + table function, both Catalyst-inlined:
+    // gap-filled histogram over a TVF spine with a declared token fn
+    // q337: the UDFs inline to exactly this (DuckDB spells the token
+    // regex via the shared TextPrims constant)
+    Query("q337_sql_udf", sqlUdfHistogram _, {
+      import graft.functions.TextPrims.bpeTokensS
+      s"""SELECT CAST(s.b AS INTEGER) AS bucket,
+         |  CAST(COUNT(d.doc_id) AS BIGINT) AS n_docs,
+         |  CAST(COALESCE(SUM(${bpeTokensS("d.text")}), 0) AS BIGINT)
+         |    AS n_toks
+         |FROM (SELECT CAST(unnest(generate_series(0, 7)) AS INTEGER)
+         |    AS b) s
+         |LEFT JOIN documents d
+         |  ON least(CAST(d.n_chars // 256 AS INT), 7) = s.b
+         |GROUP BY s.b ORDER BY s.b""".stripMargin
+    }),
+    // correlated scalar subqueries, division-free exact comparison
+    // q353/q355: the q79 pattern — ONE dialect-portable string is
+    // both the Spark query and its own oracle
+    Query("q353_correlated_subq", correlatedSubquery _, CorrelatedSubqueryText),
+    // ISO FILTER-clause conditional aggregates, one pass
+    Query("q355_filter_agg", filterAgg _, FilterAggText),
+    // SQL PIVOT clause (multi-agg, aliased values)
+    // q363: FILTER-clause mirror of the PIVOT cells; counts wrapped in
+    // NULLIF (a pivot cell is >=1 or NULL, never 0)
+    Query("q363_sql_pivot", sqlPivot _,
+      """SELECT o_orderpriority,
+        |  NULLIF(COUNT(*) FILTER (WHERE o_orderstatus = 'F'), 0) AS f_n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+        |    FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS f_s,
+        |  NULLIF(COUNT(*) FILTER (WHERE o_orderstatus = 'O'), 0) AS o_n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+        |    FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS o_s,
+        |  NULLIF(COUNT(*) FILTER (WHERE o_orderstatus = 'P'), 0) AS p_n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
+        |    FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS p_s
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
+    // SQL UNPIVOT clause folded into a per-metric rollup
+    // q364: UNION ALL melt mirror of the UNPIVOT clause
+    Query("q364_sql_unpivot", sqlUnpivot _,
+      """WITH u AS (
+        |  SELECT 'l_quantity' AS metric, l_quantity AS val FROM lineitem
+        |  UNION ALL SELECT 'l_extendedprice', l_extendedprice
+        |    FROM lineitem
+        |  UNION ALL SELECT 'l_discount', l_discount FROM lineitem
+        |  UNION ALL SELECT 'l_tax', l_tax FROM lineitem)
+        |SELECT metric, CAST(COUNT(*) AS INTEGER) AS n,
+        |  CAST(SUM(CAST(val AS DECIMAL(18,4))) AS DOUBLE) AS sum_val
+        |FROM u GROUP BY metric ORDER BY metric""".stripMargin),
+  )
 }

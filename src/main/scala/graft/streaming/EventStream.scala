@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -2285,7 +2287,8 @@ object EventStream {
         .localCheckpoint()
     }
 
-  /** q85's oracle is q21's (the streaming path must reproduce the batch
+  /** The registry queries this module declares (see [[graft.Query]]).
+    * q85's oracle is q21's (the streaming path must reproduce the batch
     * aggregation exactly); q107's is q88's (the streaming merge must
     * reproduce the batch MERGE exactly); q109's is the batch interval
     * join (the streaming join must reproduce it exactly); q111's is
@@ -2295,64 +2298,106 @@ object EventStream {
     * it exactly); q130's is q50's batch sessionization minus each
     * user's trailing (open) session (the streaming sessionizer must
     * reproduce every closed session exactly). */
-  val oracleSql: Map[String, String] = Map(
-    // q169's oracle IS q153's: the streaming increment protocol must land
-    // on the single-batch answer regardless of micro-batch splits
-    "q169_incremental_dedup_stream" ->
-      graft.dedup.Dedup.oracleSql("q153_incremental_dedup"),
-    // q234's oracle IS q50's, unmodified: the builtin session_window
-    // stream must reproduce the batch gaps-and-islands sessionization
-    // exactly, trailing sessions included
-    "q234_session_window_stream" ->
-      graft.analytics.Advanced.oracleSql("q50_sessionize_batch"),
-    // q264's oracle IS q50's too: the timer-closed session set must
-    // reproduce the batch gaps-and-islands build exactly — trailing
-    // sessions exist in the stream output only because timers fired
-    "q264_timer_sessions" ->
-      graft.analytics.Advanced.oracleSql("q50_sessionize_batch"),
-    "q212_stream_drift_hist" -> {
-      val qs = (1 until 10).map(i => i.toDouble / 10)
-      s"""WITH e AS (SELECT event_type, ts,
-         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
-         |  FROM events),
-         |bnd AS (SELECT event_type,
-         |    quantile_cont(vq, [${qs.mkString(", ")}]) AS bnd
-         |  FROM e WHERE EXTRACT(day FROM ts) <= 15 GROUP BY event_type)
-         |SELECT CAST(to_timestamp(floor(epoch(CAST(e.ts AS TIMESTAMP))
-         |    / 21600) * 21600) AS TIMESTAMP) AS window_start,
-         |  e.event_type AS event_type,
-         |  CAST(len(list_filter(bnd.bnd,
-         |    b -> CAST(vq AS DOUBLE) > b)) + 1 AS INTEGER) AS bin,
-         |  COUNT(*) AS n
-         |FROM e JOIN bnd ON e.event_type = bnd.event_type
-         |GROUP BY 1, 2, 3
-         |ORDER BY window_start, event_type, bin""".stripMargin
-    },
-    "q194_ewma_stream" ->
-      // the identical recursion, evaluated batch-side: 0.5·v + 0.5·e is
-      // the same fixed IEEE expression the state fold runs
-      """WITH RECURSIVE seq AS (
-        |  SELECT user_id, event_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS rk
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, event_id, rk, CAST(1 AS BIGINT) AS n,
-        |    value AS ewma
-        |  FROM seq WHERE rk = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.event_id, s.rk, r.n + 1,
-        |    0.5 * s.value + 0.5 * r.ewma
-        |  FROM r JOIN seq s
-        |    ON s.user_id = r.user_id AND s.rk = r.rk + 1)
-        |SELECT user_id, event_id, n, ewma
-        |FROM r ORDER BY user_id, n""".stripMargin,
-    "q85_stream_parity" ->
+  def queries: Seq[Query] = Seq(
+    // q21's aggregation run INCREMENTALLY by Structured Streaming (file
+    // source → watermark → checkpointed sink → read back); hash-equal to
+    // the batch oracle proves streaming/batch parity
+    Query("q85_stream_parity", streamingParity _,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "q147_quarantine_dual_sink" ->
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin),
+    // q88's MERGE executed INCREMENTALLY by the streaming upsert sink
+    // (file source → foreachBatch write-then-swap merge → read back);
+    // hash-equal to q88's batch oracle proves streaming/batch merge parity
+    Query("q107_upsert_parity", upsertParity _,
+      """WITH u AS (
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src FROM orders
+        |  UNION ALL
+        |  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice * 1.1, 1 AS src
+        |  FROM orders WHERE o_orderkey % 10 = 0),
+        |r AS (SELECT *, row_number() OVER
+        |        (PARTITION BY o_orderkey ORDER BY src DESC) AS rn FROM u)
+        |SELECT o_orderkey, o_orderstatus, o_totalprice
+        |FROM r WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
+    // the third streaming surface closed: the stream-stream interval join
+    // executed incrementally, hash-equal to the batch join oracle
+    Query("q109_interval_join_parity", intervalJoinParity _,
+      """SELECT c.event_id AS click_id, c.user_id,
+        |  CAST(c.ts AS TIMESTAMP) AS click_ts,
+        |  e.event_id AS error_id, CAST(e.ts AS TIMESTAMP) AS error_ts
+        |FROM events c JOIN events e
+        |  ON c.event_type = 'click' AND e.event_type = 'error'
+        |  AND c.user_id = e.user_id
+        |  AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE
+        |ORDER BY click_id, error_id""".stripMargin),
+    // fourth stateful streaming surface: keyed dedup of injected
+    // re-deliveries restores the original corpus exactly (q85's oracle)
+    Query("q111_dedup_parity", dedupParity _,
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin),
+    // fifth streaming surface: per-micro-batch broadcast join against a
+    // static dimension (stateless, zero-shuffle), hash-equal to batch
+    Query("q115_stream_static_join", streamStaticJoinParity _,
+      """SELECT c.c_nationkey AS nation, COUNT(*) AS n,
+        |  COUNT(DISTINCT e.user_id) AS users,
+        |  CAST(SUM(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY 1 ORDER BY nation""".stripMargin),
+    // sixth streaming surface: flatMapGroupsWithState sessionization,
+    // every closed session hash-equal to the batch gaps-and-islands build
+    Query("q130_sessionize_parity", sessionizeParity _,
+      """WITH g AS (
+        |  SELECT user_id, ts, event_id, value,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |      OR epoch_us(CAST(ts AS TIMESTAMP))
+        |        - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) > 7200000000
+        |      THEN 1 ELSE 0 END AS brk
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |s AS (
+        |  SELECT user_id, ts, value,
+        |    CAST(SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
+        |      AS session_idx
+        |  FROM g),
+        |agg AS (
+        |  SELECT user_id, session_idx,
+        |    CAST(min(ts) AS TIMESTAMP) AS session_start,
+        |    CAST(max(ts) AS TIMESTAMP) AS session_end,
+        |    COUNT(*) AS n_events,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |  FROM s GROUP BY user_id, session_idx)
+        |SELECT user_id, session_start, session_end, n_events, sum_value
+        |FROM agg
+        |WHERE session_idx < (SELECT max(a2.session_idx) FROM agg a2
+        |                     WHERE a2.user_id = agg.user_id)
+        |ORDER BY user_id, session_start""".stripMargin),
+    // seventh streaming surface: LEFT OUTER stream-stream interval join —
+    // null emission = watermark-driven state eviction, hash-equal to batch
+    Query("q135_outer_join_parity", outerJoinParity _,
+      """SELECT c.event_id AS click_id, c.user_id,
+        |  CAST(c.ts AS TIMESTAMP) AS click_ts,
+        |  e.event_id AS error_id, CAST(e.ts AS TIMESTAMP) AS error_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'click') c
+        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
+        |  ON c.user_id = e.user_id
+        |  AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE
+        |ORDER BY click_id, error_id NULLS FIRST""".stripMargin),
+    // eighth streaming surface: exactly-once across a job restart — two
+    // AvailableNow runs sharing one checkpoint equal the batch aggregate
+    // q143's oracle is q85's batch aggregate verbatim: the restart must
+    // change NOTHING about the computed result
+    Query("q143_incremental_restart", incrementalRestartParity _,
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin),
+    // ninth streaming surface: foreachBatch DUAL-sink routing (clean /
+    // quarantine), replay-idempotent via per-batch overwrite
+    Query("q147_quarantine_dual_sink", quarantineDualSink _,
       """WITH staged AS (
         |  SELECT event_id, event_type, value FROM events
         |  UNION ALL SELECT event_id, event_type, -value - 1.0 FROM events
@@ -2371,34 +2416,108 @@ object EventStream {
         |    AS side,
         |  reason_mask, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM m GROUP BY 1, 2 ORDER BY side, reason_mask""".stripMargin,
-    // q143's oracle is q85's batch aggregate verbatim: the restart must
-    // change NOTHING about the computed result
-    "q143_incremental_restart" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "q107_upsert_parity" ->
-      """WITH u AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src FROM orders
+        |FROM m GROUP BY 1, 2 ORDER BY side, reason_mask""".stripMargin),
+    // tenth streaming surface: incremental dedup across micro-batches
+    // q169's oracle IS q153's: the streaming increment protocol must land
+    // on the single-batch answer regardless of micro-batch splits
+    Query("q169_incremental_dedup_stream", (s, d) =>
+      incrementalDedupStreamParity(s, d),
+      graft.dedup.Dedup.incrementalDedupSql),
+    // 11th streaming surface: unbounded-horizon per-key numeric state
+    Query("q194_ewma_stream", (s, d) => ewmaStreamParity(s, d),
+      // the identical recursion, evaluated batch-side: 0.5·v + 0.5·e is
+      // the same fixed IEEE expression the state fold runs
+      """WITH RECURSIVE seq AS (
+        |  SELECT user_id, event_id, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS rk
+        |  FROM events),
+        |r AS (
+        |  SELECT user_id, event_id, rk, CAST(1 AS BIGINT) AS n,
+        |    value AS ewma
+        |  FROM seq WHERE rk = 1
         |  UNION ALL
-        |  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice * 1.1, 1 AS src
-        |  FROM orders WHERE o_orderkey % 10 = 0),
-        |r AS (SELECT *, row_number() OVER
-        |        (PARTITION BY o_orderkey ORDER BY src DESC) AS rn FROM u)
-        |SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM r WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-    "q109_interval_join_parity" ->
+        |  SELECT s.user_id, s.event_id, s.rk, r.n + 1,
+        |    0.5 * s.value + 0.5 * r.ewma
+        |  FROM r JOIN seq s
+        |    ON s.user_id = r.user_id AND s.rk = r.rk + 1)
+        |SELECT user_id, event_id, n, ewma
+        |FROM r ORDER BY user_id, n""".stripMargin),
+    // 12th streaming surface: broadcast boundaries + windowed histogram
+    Query("q212_stream_drift_hist", (s, d) => driftHistogramParity(s, d), {
+      val qs = (1 until 10).map(i => i.toDouble / 10)
+      s"""WITH e AS (SELECT event_type, ts,
+         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vq
+         |  FROM events),
+         |bnd AS (SELECT event_type,
+         |    quantile_cont(vq, [${qs.mkString(", ")}]) AS bnd
+         |  FROM e WHERE EXTRACT(day FROM ts) <= 15 GROUP BY event_type)
+         |SELECT CAST(to_timestamp(floor(epoch(CAST(e.ts AS TIMESTAMP))
+         |    / 21600) * 21600) AS TIMESTAMP) AS window_start,
+         |  e.event_type AS event_type,
+         |  CAST(len(list_filter(bnd.bnd,
+         |    b -> CAST(vq AS DOUBLE) > b)) + 1 AS INTEGER) AS bin,
+         |  COUNT(*) AS n
+         |FROM e JOIN bnd ON e.event_type = bnd.event_type
+         |GROUP BY 1, 2, 3
+         |ORDER BY window_start, event_type, bin""".stripMargin
+    }),
+    // 14th streaming surface: native session_window vs the q50 batch oracle
+    // q234's oracle IS q50's, unmodified: the builtin session_window
+    // stream must reproduce the batch gaps-and-islands sessionization
+    // exactly, trailing sessions included
+    Query("q234_session_window_stream", (s, d) => sessionWindowParity(s, d),
+      graft.analytics.Advanced.sessionizeSql),
+    // 15th streaming surface: stream-stream LEFT SEMI interval join
+    Query("q247_semi_join_parity", (s, d) => semiJoinParity(s, d),
       """SELECT c.event_id AS click_id, c.user_id,
-        |  CAST(c.ts AS TIMESTAMP) AS click_ts,
-        |  e.event_id AS error_id, CAST(e.ts AS TIMESTAMP) AS error_ts
-        |FROM events c JOIN events e
-        |  ON c.event_type = 'click' AND e.event_type = 'error'
-        |  AND c.user_id = e.user_id
-        |  AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, error_id""".stripMargin,
-    "q261_replay_buffer" ->
+        |  CAST(c.ts AS TIMESTAMP) AS click_ts
+        |FROM events c
+        |WHERE c.event_type = 'click' AND EXISTS (
+        |  SELECT 1 FROM events e
+        |  WHERE e.event_type = 'error' AND e.user_id = c.user_id
+        |    AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE)
+        |ORDER BY click_id""".stripMargin),
+    // 16th streaming surface: Spark 4 transformWithState + RocksDB
+    Query("q253_tws_parity", (s, d) => twsParity(s, d),
+      """SELECT user_id, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
+        |  MAX(value) AS max_value
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // 17th streaming surface: incremental HLL in MapState registers
+    Query("q260_hll_stream", (s, d) => hllStreamParity(s, d), {
+      val h = graft.functions.TextPrims.hex60S("md5('0#' || uid)")
+      s"""WITH u AS (SELECT DISTINCT event_type,
+         |    CAST(user_id AS VARCHAR) AS uid FROM events),
+         |hh AS (SELECT event_type, $h AS h FROM u),
+         |rr AS (SELECT event_type, h % 1024 AS idx, h // 1024 AS z
+         |  FROM hh),
+         |rk AS (SELECT event_type, idx,
+         |    CASE WHEN z = 0 THEN 50 ELSE 51 - length(bin(z)) END AS rank
+         |  FROM rr),
+         |regs AS (SELECT event_type, idx, MAX(rank) AS mx
+         |  FROM rk GROUP BY event_type, idx),
+         |sums AS (SELECT event_type, COUNT(*) AS n_filled,
+         |    CAST(SUM(CAST(1 AS BIGINT) << (50 - mx)) AS BIGINT)
+         |      AS isum_filled
+         |  FROM regs GROUP BY event_type),
+         |fl AS (SELECT event_type, n_filled, 1024 - n_filled AS v0,
+         |    isum_filled + (1024 - n_filled) *
+         |      (CAST(1 AS BIGINT) << 50) AS isum
+         |  FROM sums),
+         |est AS (SELECT event_type, n_filled, v0,
+         |    ${graft.text.TextOps.HllAlphaM2} *
+         |      CAST(CAST(1 AS BIGINT) << 50 AS DOUBLE)
+         |      / CAST(isum AS DOUBLE) AS raw
+         |  FROM fl)
+         |SELECT event_type, CAST(n_filled AS INTEGER) AS n_filled,
+         |  round(CASE WHEN raw <= ${2.5 * 1024} AND v0 > 0
+         |    THEN 1024.0 * round(ln(1024.0 / CAST(v0 AS DOUBLE)), 6)
+         |    ELSE raw END, 6) AS hll_est
+         |FROM est ORDER BY event_type""".stripMargin
+    }),
+    // 18th streaming surface: ListState bounded replay buffer
+    Query("q261_replay_buffer", (s, d) => replayParity(s, d),
       """WITH r AS (SELECT user_id, event_id,
         |    ROW_NUMBER() OVER (PARTITION BY user_id
         |      ORDER BY ts DESC, event_id DESC) AS rn
@@ -2407,8 +2526,39 @@ object EventStream {
         |  CAST(COUNT(*) AS INTEGER) AS n_buf,
         |  string_agg(CAST(event_id AS VARCHAR), ',' ORDER BY rn) AS last5
         |FROM r WHERE rn <= 5
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q284_rate_limiter" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // 19th streaming surface: event-time timers close trailing sessions
+    // q264's oracle IS q50's too: the timer-closed session set must
+    // reproduce the batch gaps-and-islands build exactly — trailing
+    // sessions exist in the stream output only because timers fired
+    Query("q264_timer_sessions", (s, d) => timerSessionParity(s, d),
+      graft.analytics.Advanced.sessionizeSql),
+    // 20th streaming surface: additive count-min registers in MapState
+    Query("q270_cm_stream", (s, d) => cmStreamParity(s, d), {
+      val planes = (0 until CmD).map { j =>
+        val b = graft.functions.TextPrims.hex60S(s"md5('$j#' || uid)")
+        s"""SELECT event_type, user_id, c, $j AS j, $b % $CmW AS bucket
+           |  FROM cnt""".stripMargin
+      }.mkString("\n  UNION ALL\n  ")
+      s"""WITH cnt AS (SELECT event_type, user_id,
+         |    CAST(user_id AS VARCHAR) AS uid, COUNT(*) AS c
+         |  FROM events GROUP BY event_type, user_id),
+         |pl AS MATERIALIZED (
+         |  $planes),
+         |sk AS (SELECT event_type, j, bucket,
+         |    CAST(SUM(c) AS BIGINT) AS counter
+         |  FROM pl GROUP BY event_type, j, bucket)
+         |SELECT p.event_type, p.user_id,
+         |  CAST(MAX(p.c) AS BIGINT) AS n_exact,
+         |  CAST(MIN(s.counter) AS BIGINT) AS n_est
+         |FROM pl p JOIN sk s ON p.event_type = s.event_type
+         |  AND p.j = s.j AND p.bucket = s.bucket
+         |WHERE p.user_id % 97 = 0
+         |GROUP BY p.event_type, p.user_id
+         |ORDER BY p.event_type, p.user_id""".stripMargin
+    }),
+    // 21st streaming surface: token-bucket quota state, integer-exact
+    Query("q284_rate_limiter", (s, d) => rateLimiterParity(s, d),
       s"""WITH RECURSIVE seq AS (
          |  SELECT user_id, event_id,
          |    CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ms,
@@ -2439,104 +2589,70 @@ object EventStream {
          |SELECT r.user_id, r.rk AS n_seen, r.adm AS n_admitted,
          |  r.rej AS n_rejected, r.tok AS tokens_left
          |FROM r JOIN fin ON r.user_id = fin.user_id AND r.rk = fin.mx
-         |ORDER BY r.user_id""".stripMargin,
-    "q270_cm_stream" -> {
-      val planes = (0 until CmD).map { j =>
-        val b = graft.functions.TextPrims.hex60S(s"md5('$j#' || uid)")
-        s"""SELECT event_type, user_id, c, $j AS j, $b % $CmW AS bucket
-           |  FROM cnt""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      s"""WITH cnt AS (SELECT event_type, user_id,
-         |    CAST(user_id AS VARCHAR) AS uid, COUNT(*) AS c
-         |  FROM events GROUP BY event_type, user_id),
-         |pl AS MATERIALIZED (
-         |  $planes),
-         |sk AS (SELECT event_type, j, bucket,
-         |    CAST(SUM(c) AS BIGINT) AS counter
-         |  FROM pl GROUP BY event_type, j, bucket)
-         |SELECT p.event_type, p.user_id,
-         |  CAST(MAX(p.c) AS BIGINT) AS n_exact,
-         |  CAST(MIN(s.counter) AS BIGINT) AS n_est
-         |FROM pl p JOIN sk s ON p.event_type = s.event_type
-         |  AND p.j = s.j AND p.bucket = s.bucket
-         |WHERE p.user_id % 97 = 0
-         |GROUP BY p.event_type, p.user_id
-         |ORDER BY p.event_type, p.user_id""".stripMargin
-    },
-    // q319: the q270 sketch matrix rebuilt relationally, one row per
-    // populated (j, bucket) cell — cell = j*w + bucket, q270's flat
-    // MapState key spelling
-    "q319_cm_state_read" -> {
-      val planes = (0 until CmD).map { j =>
-        val b = graft.functions.TextPrims.hex60S(s"md5('$j#' || uid)")
-        s"""SELECT event_type, c, $j AS j, $b % $CmW AS bucket
-           |  FROM cnt""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      s"""WITH cnt AS (SELECT event_type, user_id,
-         |    CAST(user_id AS VARCHAR) AS uid, COUNT(*) AS c
-         |  FROM events GROUP BY event_type, user_id),
-         |pl AS (
-         |  $planes),
-         |sk AS (SELECT event_type, j, bucket,
-         |    CAST(SUM(c) AS BIGINT) AS counter
-         |  FROM pl GROUP BY event_type, j, bucket)
-         |SELECT event_type,
-         |  CAST(j * $CmW + bucket AS BIGINT) AS cell, counter
-         |FROM sk ORDER BY event_type, cell""".stripMargin
-    },
-    "q260_hll_stream" -> {
-      val h = graft.functions.TextPrims.hex60S("md5('0#' || uid)")
-      s"""WITH u AS (SELECT DISTINCT event_type,
-         |    CAST(user_id AS VARCHAR) AS uid FROM events),
-         |hh AS (SELECT event_type, $h AS h FROM u),
-         |rr AS (SELECT event_type, h % 1024 AS idx, h // 1024 AS z
-         |  FROM hh),
-         |rk AS (SELECT event_type, idx,
-         |    CASE WHEN z = 0 THEN 50 ELSE 51 - length(bin(z)) END AS rank
-         |  FROM rr),
-         |regs AS (SELECT event_type, idx, MAX(rank) AS mx
-         |  FROM rk GROUP BY event_type, idx),
-         |sums AS (SELECT event_type, COUNT(*) AS n_filled,
-         |    CAST(SUM(CAST(1 AS BIGINT) << (50 - mx)) AS BIGINT)
-         |      AS isum_filled
-         |  FROM regs GROUP BY event_type),
-         |fl AS (SELECT event_type, n_filled, 1024 - n_filled AS v0,
-         |    isum_filled + (1024 - n_filled) *
-         |      (CAST(1 AS BIGINT) << 50) AS isum
-         |  FROM sums),
-         |est AS (SELECT event_type, n_filled, v0,
-         |    ${graft.text.TextOps.HllAlphaM2} *
-         |      CAST(CAST(1 AS BIGINT) << 50 AS DOUBLE)
-         |      / CAST(isum AS DOUBLE) AS raw
-         |  FROM fl)
-         |SELECT event_type, CAST(n_filled AS INTEGER) AS n_filled,
-         |  round(CASE WHEN raw <= ${2.5 * 1024} AND v0 > 0
-         |    THEN 1024.0 * round(ln(1024.0 / CAST(v0 AS DOUBLE)), 6)
-         |    ELSE raw END, 6) AS hll_est
-         |FROM est ORDER BY event_type""".stripMargin
-    },
-    "q253_tws_parity" ->
-      """SELECT user_id, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
-        |  MAX(value) AS max_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+         |ORDER BY r.user_id""".stripMargin),
+    // 22nd streaming surface: LEFT ANTI interval join — absence is
+    // watermark-certified eviction (completes the join family)
+    Query("q295_anti_join_parity", (s, d) => antiJoinParity(s, d),
+      """SELECT c.event_id AS click_id, c.user_id,
+        |  CAST(c.ts AS TIMESTAMP) AS click_ts
+        |FROM events c
+        |WHERE c.event_type = 'click' AND NOT EXISTS (
+        |  SELECT 1 FROM events e
+        |  WHERE e.event_type = 'error' AND e.user_id = c.user_id
+        |    AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE)
+        |ORDER BY click_id""".stripMargin),
+    // 23rd streaming surface: per-key state under TTL — a 5 s register
+    // deterministically evicts across the two-run gap, a 60 min one
+    // survives; the oracle encodes the same horizon
+    // q297's oracle encodes the TTL horizon: the day≤15 / day>15 halves
+    // are the two batches, the durable register is the cumulative fold
+    // (windowed DECIMAL sums, exact), the ephemeral register restarts
+    // per half because the harness gap exceeds its TTL
+    Query("q297_ttl_state", (s, d) => ttlStateParity(s, d),
+      """WITH e AS (SELECT user_id,
+        |    CASE WHEN EXTRACT(day FROM ts) <= 15 THEN 1 ELSE 2 END
+        |      AS slice,
+        |    CAST(value AS DECIMAL(18,4)) AS v
+        |  FROM events),
+        |g AS (SELECT user_id, slice, COUNT(*) AS nb, SUM(v) AS sb
+        |  FROM e GROUP BY user_id, slice)
+        |SELECT user_id,
+        |  CAST(ROW_NUMBER() OVER w AS INTEGER) AS appear_idx,
+        |  CAST(CASE WHEN ROW_NUMBER() OVER w > 1 THEN 1 ELSE 0 END
+        |    AS INTEGER) AS warm_durable,
+        |  CAST(SUM(nb) OVER w AS BIGINT) AS n_total,
+        |  CAST(SUM(sb) OVER w AS DOUBLE) AS sum_total,
+        |  CAST(nb AS BIGINT) AS n_since_evict,
+        |  CAST(sb AS DOUBLE) AS sum_since_evict
+        |FROM g
+        |WINDOW w AS (PARTITION BY user_id ORDER BY slice
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, appear_idx""".stripMargin),
+    // 25th streaming surface: state SCHEMA EVOLUTION — run 2 resumes
+    // the checkpoint with a state schema that adds a nullable field
+    // (Avro encoding); no key loses history, the new metric starts at
+    // the upgrade
     // q308's oracle encodes the upgrade semantics: totals over the
     // whole table, the added metric over the post-upgrade half only,
     // NULL for keys the upgraded job never saw
-    "q308_state_evolution" ->
+    Query("q308_state_evolution", (s, d) => stateEvolutionParity(s, d),
       """SELECT user_id, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
         |    AS sum_value,
         |  MAX(CASE WHEN EXTRACT(day FROM ts) > 15 THEN value END)
         |    AS max_v_since_upgrade
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // 26th streaming surface: STATE-STORE READER — the q308 harness's
+    // RocksDB checkpoint read back as a batch DataFrame (statestore +
+    // state-metadata sources); the oracle recomputes the expected
+    // post-upgrade per-key state from raw events
     // q309's oracle is q308's post-upgrade state recomputed from raw
     // events PLUS the harness topology pinned as literals: 8 state
     // shards (the conf the checkpoint recorded) and final batch id 1
     // (run 1 commits batch 0, run 2 batch 1) — read back through the
     // state-metadata source, so a phantom batch or a repartitioned
     // store breaks the hash
-    "q309_state_reader" ->
+    Query("q309_state_reader", (s, d) => stateStoreRead(s, d),
       """SELECT user_id, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
         |    AS sum_value,
@@ -2544,22 +2660,16 @@ object EventStream {
         |    AS max_v_since_upgrade,
         |  CAST(8 AS INTEGER) AS n_state_shards,
         |  CAST(1 AS BIGINT) AS last_batch
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q317's oracle is the V1-era state recomputed from raw events:
-    // day<=15 totals only (the value struct is the V1 shape — the
-    // evolved field doesn't exist at batch 0; the spec asserts that)
-    "q317_state_time_travel" ->
-      """SELECT user_id, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-        |    AS sum_value
-        |FROM events WHERE EXTRACT(day FROM ts) <= 15
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // 27th streaming surface: STATE CHANGE FEED — the checkpoint's
+    // per-batch changelog read back as CDC rows (readChangeFeed over
+    // both eras of the q308 evolution harness)
     // q312's oracle is the changelog recomputed from raw events: batch
     // 0 = V1 state per first-half user (evolved max field null), batch
     // 1 = post-upgrade state per second-half user (cumulative totals,
     // max since upgrade); every change is an update, keys the batch
     // never touched emit nothing
-    "q312_state_change_feed" ->
+    Query("q312_state_change_feed", (s, d) => stateChangeFeed(s, d),
       """WITH h1 AS (SELECT user_id, COUNT(*) AS n,
         |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
         |      AS sum_value
@@ -2583,36 +2693,15 @@ object EventStream {
         |  SELECT CAST(1 AS BIGINT), 'update', t.user_id, t.n,
         |    t.sum_value, h2.mx
         |  FROM tot t JOIN h2 ON h2.user_id = t.user_id)
-        |ORDER BY user_id, batch_id""".stripMargin,
-    // q297's oracle encodes the TTL horizon: the day≤15 / day>15 halves
-    // are the two batches, the durable register is the cumulative fold
-    // (windowed DECIMAL sums, exact), the ephemeral register restarts
-    // per half because the harness gap exceeds its TTL
-    "q297_ttl_state" ->
-      """WITH e AS (SELECT user_id,
-        |    CASE WHEN EXTRACT(day FROM ts) <= 15 THEN 1 ELSE 2 END
-        |      AS slice,
-        |    CAST(value AS DECIMAL(18,4)) AS v
-        |  FROM events),
-        |g AS (SELECT user_id, slice, COUNT(*) AS nb, SUM(v) AS sb
-        |  FROM e GROUP BY user_id, slice)
-        |SELECT user_id,
-        |  CAST(ROW_NUMBER() OVER w AS INTEGER) AS appear_idx,
-        |  CAST(CASE WHEN ROW_NUMBER() OVER w > 1 THEN 1 ELSE 0 END
-        |    AS INTEGER) AS warm_durable,
-        |  CAST(SUM(nb) OVER w AS BIGINT) AS n_total,
-        |  CAST(SUM(sb) OVER w AS DOUBLE) AS sum_total,
-        |  CAST(nb AS BIGINT) AS n_since_evict,
-        |  CAST(sb AS DOUBLE) AS sum_since_evict
-        |FROM g
-        |WINDOW w AS (PARTITION BY user_id ORDER BY slice
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, appear_idx""".stripMargin,
+        |ORDER BY user_id, batch_id""".stripMargin),
+    // 28th streaming surface: DEDUP-STATE EVICTION visibility — a key
+    // whose within-watermark dedup state expired is admitted again
+    // (q111's bounded-state complement)
     // q313's oracle: every probe key (day<=10, id % 10 == 0,
     // re-delivered twice at +30 days) counts exactly ONCE at its
     // shifted hour — stale dedup state makes it vanish, a broken
     // re-created entry double-counts it
-    "q313_dedup_eviction" ->
+    Query("q313_dedup_eviction", (s, d) => dedupEvictionParity(s, d),
       """WITH replay AS (SELECT ts + INTERVAL 30 DAY AS ts, event_type,
         |    value
         |  FROM events
@@ -2624,72 +2713,54 @@ object EventStream {
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
         |    AS sum_value
         |FROM allr GROUP BY 1, 2
-        |ORDER BY hour_start, event_type""".stripMargin,
-    "q295_anti_join_parity" ->
-      """SELECT c.event_id AS click_id, c.user_id,
-        |  CAST(c.ts AS TIMESTAMP) AS click_ts
-        |FROM events c
-        |WHERE c.event_type = 'click' AND NOT EXISTS (
-        |  SELECT 1 FROM events e
-        |  WHERE e.event_type = 'error' AND e.user_id = c.user_id
-        |    AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE)
-        |ORDER BY click_id""".stripMargin,
-    "q247_semi_join_parity" ->
-      """SELECT c.event_id AS click_id, c.user_id,
-        |  CAST(c.ts AS TIMESTAMP) AS click_ts
-        |FROM events c
-        |WHERE c.event_type = 'click' AND EXISTS (
-        |  SELECT 1 FROM events e
-        |  WHERE e.event_type = 'error' AND e.user_id = c.user_id
-        |    AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE)
-        |ORDER BY click_id""".stripMargin,
-    "q111_dedup_parity" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "q115_stream_static_join" ->
-      """SELECT c.c_nationkey AS nation, COUNT(*) AS n,
-        |  COUNT(DISTINCT e.user_id) AS users,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1 ORDER BY nation""".stripMargin,
-    "q135_outer_join_parity" ->
-      """SELECT c.event_id AS click_id, c.user_id,
-        |  CAST(c.ts AS TIMESTAMP) AS click_ts,
-        |  e.event_id AS error_id, CAST(e.ts AS TIMESTAMP) AS error_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'click') c
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
-        |  ON c.user_id = e.user_id
-        |  AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, error_id NULLS FIRST""".stripMargin,
-    "q130_sessionize_parity" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |      OR epoch_us(CAST(ts AS TIMESTAMP))
-        |        - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) > 7200000000
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
-        |      AS session_idx
-        |  FROM g),
-        |agg AS (
-        |  SELECT user_id, session_idx,
-        |    CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |    CAST(max(ts) AS TIMESTAMP) AS session_end,
-        |    COUNT(*) AS n_events,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |  FROM s GROUP BY user_id, session_idx)
-        |SELECT user_id, session_start, session_end, n_events, sum_value
-        |FROM agg
-        |WHERE session_idx < (SELECT max(a2.session_idx) FROM agg a2
-        |                     WHERE a2.user_id = agg.user_id)
-        |ORDER BY user_id, session_start""".stripMargin)
+        |ORDER BY hour_start, event_type""".stripMargin),
+    // 29th streaming surface: STATE TIME TRAVEL — the checkpoint as of
+    // batch 0 (pre-upgrade V1 state), completing the reader triad
+    // q317's oracle is the V1-era state recomputed from raw events:
+    // day<=15 totals only (the value struct is the V1 shape — the
+    // evolved field doesn't exist at batch 0; the spec asserts that)
+    Query("q317_state_time_travel", (s, d) => stateTimeTravel(s, d),
+      """SELECT user_id, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS sum_value
+        |FROM events WHERE EXTRACT(day FROM ts) <= 15
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // 30th streaming surface: MapState READ-BACK — the q270 count-min
+    // matrix read from the checkpoint, every populated cell vs the
+    // relational rebuild (the reader extended to collection state)
+    // q319: the q270 sketch matrix rebuilt relationally, one row per
+    // populated (j, bucket) cell — cell = j*w + bucket, q270's flat
+    // MapState key spelling
+    Query("q319_cm_state_read", (s, d) => cmStateRead(s, d), {
+      val planes = (0 until CmD).map { j =>
+        val b = graft.functions.TextPrims.hex60S(s"md5('$j#' || uid)")
+        s"""SELECT event_type, c, $j AS j, $b % $CmW AS bucket
+           |  FROM cnt""".stripMargin
+      }.mkString("\n  UNION ALL\n  ")
+      s"""WITH cnt AS (SELECT event_type, user_id,
+         |    CAST(user_id AS VARCHAR) AS uid, COUNT(*) AS c
+         |  FROM events GROUP BY event_type, user_id),
+         |pl AS (
+         |  $planes),
+         |sk AS (SELECT event_type, j, bucket,
+         |    CAST(SUM(c) AS BIGINT) AS counter
+         |  FROM pl GROUP BY event_type, j, bucket)
+         |SELECT event_type,
+         |  CAST(j * $CmW + bucket AS BIGINT) AS cell, counter
+         |FROM sk ORDER BY event_type, cell""".stripMargin
+    }),
+    // 31st streaming surface: the custom connector's MicroBatchStream —
+    // checkpointed restart admits each file exactly once
+    // q335 oracle = the whole-table aggregate: all three slices,
+    // each exactly once across the checkpointed restart
+    Query("q335_fixedwidth_stream", (s, d) => fixedWidthStreamParity(s, d),
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey,
+        |  CAST(SUM(CAST(round(l_quantity * 10000) AS BIGINT))
+        |    AS BIGINT) AS sum_q4
+        |FROM lineitem
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+  )
 
   /** UPSERT sink — streaming twin of `Advanced.upsertSnapshot`: each
     * micro-batch is merged into a keyed parquet snapshot with

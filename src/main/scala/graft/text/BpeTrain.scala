@@ -1,5 +1,7 @@
 package graft.text
 
+import graft.Query
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -279,8 +281,36 @@ object BpeTrain {
   /** The shared corpus + merge-chain CTE prefix (w, t0, step CTEs). */
   private def chainCtes: String = chainCtesFor("", "TRUE")
 
-  def oracleSql: Map[String, String] = Map(
-    "q289_bpe_stability" -> {
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // BPE tokenizer training: first 6 merge steps, relationally
+    Query("q246_bpe_merges", (s, d) => bpeMerges(s, d), {
+      val arms = (1 to Merges).map(i => s"SELECT * FROM s$i")
+        .mkString("\nUNION ALL\n")
+      s"""WITH $chainCtes
+         |$arms
+         |ORDER BY step""".stripMargin
+    }),
+    // learned-merge compression per source: the q246 eval step
+    Query("q249_bpe_compression", (s, d) => bpeCompression(s, d),
+      s"""WITH $chainCtes,
+         |sl AS (SELECT word, CAST(COUNT(*) AS INTEGER) AS sym_len
+         |  FROM t$Merges GROUP BY word),
+         |wc AS (SELECT source, word, COUNT(*) AS cnt FROM (
+         |    SELECT source, unnest($T) AS word FROM documents)
+         |  WHERE length(word) > 0 GROUP BY source, word)
+         |SELECT wc.source,
+         |  CAST(SUM(wc.cnt) AS BIGINT) AS n_words,
+         |  CAST(SUM(wc.cnt * sl.sym_len) AS BIGINT) AS n_syms,
+         |  CAST(SUM(wc.cnt * length(wc.word)) AS BIGINT) AS n_chars,
+         |  round(CAST(SUM(wc.cnt * length(wc.word)) AS DOUBLE) /
+         |    SUM(wc.cnt * sl.sym_len), 6) AS chars_per_sym,
+         |  round(CAST(SUM(wc.cnt * sl.sym_len) AS DOUBLE) /
+         |    SUM(wc.cnt), 6) AS syms_per_word
+         |FROM wc JOIN sl ON wc.word = sl.word
+         |GROUP BY wc.source ORDER BY wc.source""".stripMargin),
+    // tokenizer robustness: q246 merges retrained on each corpus half
+    Query("q289_bpe_stability", (s, d) => bpeStability(s, d), {
       def arms(pre: String) =
         (1 to Merges).map(i => s"SELECT * FROM $pre" + s"s$i")
           .mkString("\nUNION ALL\n")
@@ -297,15 +327,11 @@ object BpeTrain {
          |    THEN 1 ELSE 0 END AS INTEGER) AS agree
          |FROM aa JOIN bb ON aa.step = bb.step
          |ORDER BY aa.step""".stripMargin
-    },
-    "q246_bpe_merges" -> {
-      val arms = (1 to Merges).map(i => s"SELECT * FROM s$i")
-        .mkString("\nUNION ALL\n")
-      s"""WITH $chainCtes
-         |$arms
-         |ORDER BY step""".stripMargin
-    },
-    "q321_bpe_vocab" ->
+    }),
+    // the vocab ARTIFACT of q246's training: token inventory with corpus
+    // share + cumulative coverage + single-char residue, from the
+    // word-type state (no second corpus scan)
+    Query("q321_bpe_vocab", (s, d) => bpeVocab(s, d),
       s"""WITH $chainCtes,
          |v AS (SELECT sym, CAST(SUM(freq) AS BIGINT) AS cnt
          |  FROM t$Merges GROUP BY sym),
@@ -321,22 +347,6 @@ object BpeTrain {
          |  round(CAST(r.cum AS DOUBLE) / tt.tot, 6) AS cum_share,
          |  CAST(length(r.sym) = 1 AS INTEGER) AS single_char
          |FROM r CROSS JOIN tt WHERE r.rnk <= 50
-         |ORDER BY r.rnk""".stripMargin,
-    "q249_bpe_compression" ->
-      s"""WITH $chainCtes,
-         |sl AS (SELECT word, CAST(COUNT(*) AS INTEGER) AS sym_len
-         |  FROM t$Merges GROUP BY word),
-         |wc AS (SELECT source, word, COUNT(*) AS cnt FROM (
-         |    SELECT source, unnest($T) AS word FROM documents)
-         |  WHERE length(word) > 0 GROUP BY source, word)
-         |SELECT wc.source,
-         |  CAST(SUM(wc.cnt) AS BIGINT) AS n_words,
-         |  CAST(SUM(wc.cnt * sl.sym_len) AS BIGINT) AS n_syms,
-         |  CAST(SUM(wc.cnt * length(wc.word)) AS BIGINT) AS n_chars,
-         |  round(CAST(SUM(wc.cnt * length(wc.word)) AS DOUBLE) /
-         |    SUM(wc.cnt * sl.sym_len), 6) AS chars_per_sym,
-         |  round(CAST(SUM(wc.cnt * sl.sym_len) AS DOUBLE) /
-         |    SUM(wc.cnt), 6) AS syms_per_word
-         |FROM wc JOIN sl ON wc.word = sl.word
-         |GROUP BY wc.source ORDER BY wc.source""".stripMargin)
+         |ORDER BY r.rnk""".stripMargin),
+  )
 }

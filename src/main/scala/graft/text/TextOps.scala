@@ -1,5 +1,7 @@
 package graft.text
 
+import graft.Query
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -3596,19 +3598,500 @@ object TextOps {
       .orderBy("iter")
   }
 
-  def oracleSql: Map[String, String] = Map(
-    // q404: identical scored frame (bigram/unigram MLEs), identical EM
-    // update with lambda pinned to 9 dp between rounds
-    "q404_jm_interpolation" -> {
-      val emRound = (src: String) =>
-        s"""SELECT
-           |  round(CAST(SUM(CAST(round(
-           |      (l.lam * p2) / (l.lam * p2 + (1.0 - l.lam) * p1), 9)
-           |    AS DECIMAL(28,9))) AS DOUBLE) / COUNT(*), 9) AS lam,
-           |  round(CAST(SUM(CAST(round(
-           |      ln(l.lam * p2 + (1.0 - l.lam) * p1), 6)
-           |    AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS ll
-           |FROM sc CROSS JOIN $src l""".stripMargin
+  /** The registry queries this module declares (see [[graft.Query]]). */
+  def queries: Seq[Query] = Seq(
+    // text analysis (training-data pipeline ops over `documents`)
+    Query("q22_token_stats", tokenStats _,
+      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents)
+         |SELECT doc_id,
+         |  CAST(len(t) AS INTEGER) AS n_ws_tokens,
+         |  CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe')) AS INTEGER) AS n_bpe_tokens,
+         |  CAST(length(text) AS INTEGER) AS n_chars_m,
+         |  round(CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 6) AS ttr
+         |FROM d ORDER BY doc_id""".stripMargin),
+    Query("q23_quality_score", qualityScore _,
+      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d)
+         |SELECT doc_id,
+         |  round(chars / NULLIF(words, 0), 6) AS avg_token_len,
+         |  round(punct / NULLIF(chars, 0), 6) AS punct_ratio,
+         |  round(stops / NULLIF(words, 0), 6) AS stopword_ratio,
+         |  $QualityScoreS AS quality_score
+         |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q24_lang_id", langId _,
+      s"""WITH d AS (SELECT doc_id, lang, $T AS t FROM documents),
+         |sc AS (SELECT doc_id, lang,
+         |    $langScoresS
+         |  FROM d),
+         |p AS (SELECT doc_id, lang, $langPredS AS pred_lang FROM sc)
+         |SELECT doc_id, pred_lang,
+         |  CAST(pred_lang = lang AS INTEGER) AS agrees
+         |FROM p ORDER BY doc_id""".stripMargin),
+    Query("q25_fingerprint", fingerprint _,
+      s"""WITH d AS (SELECT doc_id, $T AS t FROM documents)
+         |SELECT doc_id,
+         |  list_reduce(
+         |    list_concat([CAST(0 AS BIGINT)],
+         |      list_transform(t, x -> ${hex32S("md5(x)")})),
+         |    (acc, v) -> (acc * 31 + v) % 1000000007) AS fingerprint
+         |FROM d ORDER BY doc_id""".stripMargin),
+    // corpus-level analytics
+    Query("q42_corpus_stats", corpusStats _,
+      s"""WITH d AS (SELECT doc_id, lang, source, n_chars, text, $T AS t
+         |  FROM documents),
+         |m AS (SELECT lang, source, n_chars,
+         |    round(least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) * 0.4
+         |      + (CAST(${countInSetS("t", Stopwords)} AS DOUBLE)
+         |         / CAST(len(t) AS DOUBLE)) * 0.4
+         |      + (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
+         |         / CAST(length(text) AS DOUBLE)) * 0.2, 6) AS q
+         |  FROM d)
+         |SELECT lang, source, count(*) AS n_docs,
+         |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
+         |  CAST(sum(CAST(q AS DECIMAL(18,6))) AS DOUBLE) / count(*)
+         |    AS mean_quality
+         |FROM m GROUP BY lang, source ORDER BY lang, source""".stripMargin),
+    Query("q43_top_tokens", topTokens _,
+      s"""SELECT token, count(*) AS n
+         |FROM (SELECT unnest($T) AS token FROM documents)
+         |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin),
+    Query("q64_tfidf_topk", tfidfTopTerms _,
+      s"""WITH tok AS (SELECT doc_id, unnest($T) AS token FROM documents),
+         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
+         |dfc AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
+         |n AS (SELECT count(*) AS n FROM documents),
+         |r AS (SELECT doc_id, token, tf, df,
+         |    ROW_NUMBER() OVER (PARTITION BY doc_id
+         |      ORDER BY tf DESC, df ASC, token ASC) AS rk
+         |  FROM tf JOIN dfc USING (token))
+         |SELECT doc_id, token, CAST(tf AS BIGINT) AS tf,
+         |  CAST(df AS BIGINT) AS df,
+         |  round(tf * ln(CAST(n.n AS DOUBLE) / df), 6) AS tfidf,
+         |  CAST(rk AS INTEGER) AS rk
+         |FROM r, n WHERE rk <= $TfidfTopK ORDER BY doc_id, rk""".stripMargin),
+    // corpus normalization + entity redaction (the PII-scrub shape)
+    Query("q67_normalize_scrub", normalizeScrub _,
+      s"""WITH sc AS (SELECT doc_id,
+         |    CAST(len(regexp_extract_all(text, '$EntRe')) AS INTEGER) AS n_ent,
+         |    CAST(len(regexp_extract_all(text, '$StopRe')) AS INTEGER) AS n_stop,
+         |    trim(regexp_replace(regexp_replace(
+         |      regexp_replace(text, '$EntRe', '<ENT>', 'g'),
+         |      '$StopRe', ' ', 'g'), '\\s+', ' ', 'g')) AS norm
+         |  FROM documents)
+         |SELECT doc_id, n_ent, n_stop,
+         |  CAST(length(norm) AS BIGINT) AS norm_len, md5(norm) AS norm_md5
+         |FROM sc ORDER BY doc_id""".stripMargin),
+    // corpus curation: per-source median quality filter (C4-style)
+    Query("q73_quality_filter", qualityFilterSummary _,
+      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d),
+         |sc AS (SELECT doc_id,
+         |    $QualityScoreS AS quality_score
+         |  FROM m),
+         |p AS (SELECT doc.source, sc.doc_id,
+         |    PERCENT_RANK() OVER (PARTITION BY doc.source
+         |      ORDER BY sc.quality_score, sc.doc_id) AS pr
+         |  FROM sc JOIN documents doc ON sc.doc_id = doc.doc_id)
+         |SELECT source, CAST(count(*) AS INTEGER) AS n_docs,
+         |  CAST(sum(CASE WHEN pr >= 0.5 THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_kept_above_median
+         |FROM p GROUP BY source ORDER BY source""".stripMargin),
+    // retrieval scoring: BM25 top-N docs per query term
+    Query("q74_bm25_topk", bm25TopDocs _, {
+      val terms = Bm25Terms.map(t => s"'$t'").mkString(", ")
+      s"""WITH tok AS (SELECT doc_id, unnest($T) AS token FROM documents),
+         |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
+         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+         |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
+         |  WHERE token IN ($terms) GROUP BY doc_id, token),
+         |dfc AS (SELECT token, CAST(count(*) AS DOUBLE) AS df
+         |  FROM tf GROUP BY token),
+         |sc AS (SELECT tf.token, tf.doc_id,
+         |    ln((n - df + 0.5) / (df + 0.5) + 1.0)
+         |      * ((CAST(tf.tf AS DOUBLE) * ${Bm25K1 + 1.0})
+         |        / (CAST(tf.tf AS DOUBLE) + $Bm25K1 * (${1.0 - Bm25B}
+         |          + $Bm25B * CAST(dl.dl AS DOUBLE) / avgdl))) AS score
+         |  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
+         |  JOIN dfc ON tf.token = dfc.token, stats),
+         |r AS (SELECT token, doc_id, round(score, 6) AS bm25,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY token
+         |      ORDER BY round(score, 6) DESC, doc_id) AS INTEGER) AS rk
+         |  FROM sc)
+         |SELECT token, doc_id, rk, bm25 FROM r
+         |WHERE rk <= $Bm25TopN ORDER BY token, rk""".stripMargin
+    }),
+    // deterministic hash-based stratified sampling (corpus mixing)
+    Query("q77_data_mixing", dataMixingSummary _,
+      s"""WITH h AS (SELECT source,
+         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 AS bucket
+         |  FROM documents)
+         |SELECT source, CAST(count(*) AS INTEGER) AS n_docs,
+         |  CAST(sum(CASE WHEN bucket <
+         |      (CASE WHEN source < 'src_10' THEN 70 ELSE 30 END)
+         |    THEN 1 ELSE 0 END) AS INTEGER) AS n_sampled
+         |FROM h GROUP BY source ORDER BY source""".stripMargin),
+    // capstone: quality filter -> dedup -> summary as ONE composed query
+    Query("q100_pipeline_composite", pipelineComposite _,
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, source, text,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d),
+         |q AS (SELECT doc_id, source, text,
+         |    $QualityScoreS AS quality_score
+         |  FROM m),
+         |k AS (SELECT *, percent_rank() OVER
+         |        (PARTITION BY source ORDER BY quality_score, doc_id) AS pr
+         |  FROM q),
+         |kept AS (SELECT * FROM k WHERE pr >= 0.5),
+         |canon AS (SELECT source,
+         |    ${graft.dedup.Dedup.normHashS("text")} AS h,
+         |    COUNT(*) AS copies
+         |  FROM kept GROUP BY source, h)
+         |SELECT source, COUNT(*) AS n_canonical,
+         |  CAST(SUM(copies) AS BIGINT) AS n_kept,
+         |  CAST(SUM(copies) AS BIGINT) - COUNT(*) AS n_dup_copies
+         |FROM canon GROUP BY source ORDER BY source""".stripMargin),
+    // Gopher-style duplicate-n-gram repetition quality signal per source
+    Query("q133_repetition_ratio", (s, d) => repetitionSummary(s, d),
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |g AS (SELECT doc_id, source, x AS sh
+         |  FROM d, unnest(${shinglesS("t", 3)}) AS u(x)),
+         |pd AS (SELECT doc_id, source, COUNT(*) AS n_grams,
+         |    COUNT(DISTINCT sh) AS n_distinct
+         |  FROM g GROUP BY 1, 2)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(n_grams) AS BIGINT) AS total_grams,
+         |  CAST(SUM(n_distinct) AS BIGINT) AS distinct_grams,
+         |  round(1.0 - CAST(SUM(n_distinct) AS DOUBLE)
+         |    / CAST(SUM(n_grams) AS DOUBLE), 6) AS micro_rep_ratio,
+         |  CAST(SUM(CASE WHEN 1.0 - CAST(n_distinct AS DOUBLE)
+         |      / CAST(n_grams AS DOUBLE) >= 0.2
+         |    THEN 1 ELSE 0 END) AS INTEGER) AS n_repetitive
+         |FROM pd GROUP BY source ORDER BY source""".stripMargin),
+    // per-source token-budget training-mix assembly (quality-ranked prefix)
+    Query("q136_token_budget_mix", (s, d) => tokenBudgetMix(s, d),
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, source,
+         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
+         |      AS BIGINT) AS toks,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d),
+         |q AS (SELECT doc_id, source, toks, $QualityScoreS AS q FROM m),
+         |c AS (SELECT doc_id, source, toks,
+         |    SUM(toks) OVER (PARTITION BY source ORDER BY q DESC, doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_toks
+         |  FROM q)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS total_tokens,
+         |  CAST(SUM(CASE WHEN cum_toks <= 2000 THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_kept,
+         |  CAST(SUM(CASE WHEN cum_toks <= 2000 THEN toks ELSE 0 END) AS BIGINT)
+         |    AS kept_tokens
+         |FROM c GROUP BY source ORDER BY source""".stripMargin),
+    // cross-document boilerplate via per-source n-gram document frequency
+    Query("q138_boilerplate_df", (s, d) => boilerplateSummary(s, d),
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |g AS (SELECT doc_id, source, x AS sh
+         |  FROM d, unnest(${shinglesS("t", 2)}) AS u(x)),
+         |sc AS (SELECT source, COUNT(*) AS n_docs_src
+         |  FROM documents GROUP BY 1),
+         |df AS (SELECT source, sh, COUNT(DISTINCT doc_id) AS df
+         |  FROM g GROUP BY 1, 2),
+         |b AS (SELECT df.source, df.sh FROM df JOIN sc USING (source)
+         |  WHERE df.df * 100 >= sc.n_docs_src * 50),
+         |pd AS (SELECT g.doc_id, g.source, COUNT(*) AS total_pos,
+         |    SUM(CASE WHEN b.sh IS NOT NULL THEN 1 ELSE 0 END) AS boiler_pos
+         |  FROM g LEFT JOIN b ON g.source = b.source AND g.sh = b.sh
+         |  GROUP BY 1, 2),
+         |nb AS (SELECT source, CAST(COUNT(*) AS INTEGER) AS n_boiler_grams
+         |  FROM b GROUP BY 1)
+         |SELECT pd.source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(total_pos) AS BIGINT) AS total_positions,
+         |  CAST(SUM(boiler_pos) AS BIGINT) AS boiler_positions,
+         |  round(CAST(SUM(boiler_pos) AS DOUBLE)
+         |    / CAST(SUM(total_pos) AS DOUBLE), 6) AS micro_boiler_ratio,
+         |  CAST(SUM(CASE WHEN boiler_pos * 2 > total_pos THEN 1 ELSE 0 END)
+         |    AS INTEGER) AS n_docs_flagged,
+         |  COALESCE(ANY_VALUE(nb.n_boiler_grams), 0) AS n_boiler_grams
+         |FROM pd LEFT JOIN nb ON pd.source = nb.source
+         |GROUP BY pd.source ORDER BY pd.source""".stripMargin),
+    // temperature-scaled (n^0.5) training-mix source weights + targets
+    Query("q140_temperature_mix", (s, d) => temperatureMix(s, d),
+      """WITH s AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY 1),
+        |w AS (SELECT source, n, sqrt(CAST(n AS DOUBLE)) AS wt FROM s),
+        |q AS (SELECT source, n, wt,
+        |    CAST(FLOOR(wt * 1000000.0) AS BIGINT) AS wtq FROM w),
+        |t AS (SELECT source, n, wt, wtq,
+        |    SUM(wtq) OVER () AS totq FROM q)
+        |SELECT source, CAST(n AS INTEGER) AS n_docs,
+        |  round(wt, 6) AS weight,
+        |  round(CAST(wtq AS DOUBLE) / CAST(totq AS DOUBLE), 6) AS share,
+        |  CAST(FLOOR(5000.0 * (CAST(wtq AS DOUBLE) / CAST(totq AS DOUBLE)))
+        |    AS BIGINT) AS n_target
+        |FROM t ORDER BY source""".stripMargin),
+    // RNG-free length-proportional sampling: PPS systematic per source
+    Query("q144_pps_sample", (s, d) => ppsSample(s, d),
+      s"""WITH m AS (SELECT doc_id, source,
+         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
+         |      AS BIGINT) AS toks
+         |  FROM documents),
+         |f AS (SELECT * FROM m WHERE toks > 0),
+         |c AS (SELECT doc_id, source, toks,
+         |    SUM(toks) OVER (PARTITION BY source ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         |    SUM(toks) OVER (PARTITION BY source) AS t_src
+         |  FROM f),
+         |h AS (SELECT *, (cum * 10 + t_src - 1) // t_src
+         |    - ((cum - toks) * 10 + t_src - 1) // t_src AS hits FROM c)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS total_toks,
+         |  CAST(SUM(hits) AS BIGINT) AS n_draws,
+         |  CAST(SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_docs_sampled,
+         |  CAST(MAX(hits) AS BIGINT) AS max_hits
+         |FROM h GROUP BY source ORDER BY source""".stripMargin),
+    // concat-and-chunk packing stats: fixed-size training windows
+    Query("q145_sequence_packing", (s, d) => sequencePacking(s, d),
+      s"""WITH m AS (SELECT doc_id, source,
+         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
+         |      AS BIGINT) AS toks
+         |  FROM documents),
+         |f AS (SELECT * FROM m WHERE toks > 0),
+         |c AS (SELECT doc_id, source, toks,
+         |    SUM(toks) OVER (PARTITION BY source ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         |  FROM f),
+         |x AS (SELECT *, CASE WHEN (cum - toks) // 512 <> (cum - 1) // 512
+         |    THEN 1 ELSE 0 END AS crosses FROM c)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS total_toks,
+         |  CAST((SUM(toks) + 511) // 512 AS BIGINT) AS n_bins,
+         |  CAST(SUM(crosses) AS INTEGER) AS n_boundary_docs,
+         |  CAST(((SUM(toks) - 1) % 512 + 1) * 100 // 512 AS INTEGER)
+         |    AS last_bin_fill_pct
+         |FROM x GROUP BY source ORDER BY source""".stripMargin),
+    // per-source dataset card: volume, quality, embedding coverage, dups
+    Query("q150_dataset_card", datasetCard _,
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, source, text,
+         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
+         |      AS BIGINT) AS toks,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d),
+         |q AS (SELECT doc_id, source, text, toks, $QualityScoreS AS qs FROM m),
+         |e AS (SELECT source, COUNT(*) AS n_embedded FROM q
+         |  WHERE doc_id IN (SELECT vec_id FROM embeddings) GROUP BY 1),
+         |du AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_dup_docs FROM
+         |  (SELECT source, md5(text) AS h, COUNT(*) AS cnt FROM q
+         |   GROUP BY 1, 2) g
+         |  WHERE cnt > 1 GROUP BY 1),
+         |base AS (SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |    CAST(SUM(toks) AS BIGINT) AS total_tokens,
+         |    $meanQualityS AS mean_quality
+         |  FROM q GROUP BY 1)
+         |SELECT base.source, n_docs, total_tokens, mean_quality,
+         |  CAST(COALESCE(e.n_embedded, 0) AS BIGINT) AS n_embedded,
+         |  CAST(COALESCE(du.n_dup_docs, 0) AS BIGINT) AS n_dup_docs
+         |FROM base LEFT JOIN e ON base.source = e.source
+         |LEFT JOIN du ON base.source = du.source
+         |ORDER BY base.source""".stripMargin),
+    // reproducible 80/10/10 split manifest with leakage-audit stats
+    Query("q160_split_manifest", (s, d) => splitManifest(s, d),
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t,
+         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 AS bucket
+         |  FROM documents),
+         |m AS (SELECT doc_id, source, text, bucket,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
+         |      AS BIGINT) AS toks,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d),
+         |q AS (SELECT source,
+         |    CASE WHEN bucket < 80 THEN 'train'
+         |      WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
+         |    toks, $QualityScoreS AS qs
+         |  FROM m)
+         |SELECT source, split, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS total_tokens,
+         |  $meanQualityS AS mean_quality
+         |FROM q GROUP BY 1, 2 ORDER BY source, split""".stripMargin),
+    // Zipf head: vocab size needed for 50/90/95/99% token coverage
+    Query("q165_vocab_coverage", (s, d) => vocabCoverage(s, d), {
+      val vCols = CoverageTargets.map(t =>
+        s"CAST(MIN(CASE WHEN cum * 100 >= $t * total THEN rk END) AS INTEGER) AS v$t")
+        .mkString(",\n         |  ")
+      s"""WITH tok AS (SELECT unnest($T) AS token FROM documents),
+         |c AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY 1),
+         |t AS (SELECT CAST(SUM(n) AS BIGINT) AS total,
+         |    CAST(COUNT(*) AS INTEGER) AS vocab FROM c),
+         |w AS (SELECT n,
+         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) AS rk,
+         |    SUM(n) OVER (ORDER BY n DESC, token
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         |  FROM c)
+         |SELECT CAST(total AS BIGINT) AS total_tokens, vocab AS vocab_size,
+         |  $vCols
+         |FROM w, t GROUP BY total, vocab""".stripMargin
+    }),
+    // tokenizer design: per-source BPE fertility + chars-per-token
+    Query("q167_tokenizer_fertility", (s, d) => tokenizerFertility(s, d),
+      s"""WITH m AS (SELECT source,
+         |    CAST(len($T) AS BIGINT) AS words,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")} AS BIGINT)
+         |      AS bpe,
+         |    CAST(length(text) AS BIGINT) AS chars
+         |  FROM documents)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(words) AS BIGINT) AS total_words,
+         |  CAST(SUM(bpe) AS BIGINT) AS total_bpe,
+         |  CAST(SUM(chars) AS BIGINT) AS total_chars,
+         |  CAST(SUM(bpe) AS DOUBLE) / NULLIF(SUM(words), 0) AS fertility,
+         |  CAST(SUM(chars) AS DOUBLE) / NULLIF(SUM(bpe), 0) AS chars_per_token
+         |FROM m GROUP BY source ORDER BY source""".stripMargin),
+    // mix planning census: lang × quality tier × length bucket, one pass
+    Query("q176_stratification", (s, d) => stratificationMatrix(s, d), {
+      val scores = LangMarkers.map { case (l, ms) =>
+        s"${countInSetS("t", ms)} AS s_$l" }.mkString(",\n    ")
+      val pred = LangMarkers.map(_._1).foldRight("'und'") { case (l, e) =>
+        val beats = LangMarkers.map(_._1).filter(_ != l)
+          .map(o => s"s_$l >= s_$o").mkString(" AND ")
+        s"CASE WHEN s_$l > 0 AND $beats THEN '$l' ELSE $e END"
+      }
+      val (qLo, qHi) = StratQualityEdges
+      val (lLo, lHi) = StratLengthEdges
+      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents),
+         |sc AS (SELECT doc_id, text, t,
+         |    $scores,
+         |    $qualityMeasureColsS
+         |  FROM d),
+         |q AS (SELECT $pred AS pred_lang, $QualityScoreS AS qs,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")} AS BIGINT)
+         |      AS toks,
+         |    length(text) AS len FROM sc),
+         |c AS (SELECT pred_lang,
+         |    CASE WHEN qs >= $qHi THEN 'high'
+         |      WHEN qs >= $qLo THEN 'mid' ELSE 'low' END AS tier,
+         |    CASE WHEN len < $lLo THEN 'short'
+         |      WHEN len < $lHi THEN 'medium' ELSE 'long' END AS len_bucket,
+         |    toks FROM q)
+         |SELECT pred_lang, tier, len_bucket,
+         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(toks) AS BIGINT) AS total_tokens
+         |FROM c GROUP BY 1, 2, 3
+         |ORDER BY pred_lang, tier, len_bucket""".stripMargin
+    }),
+    // context-window chunking: overlapping windows + per-chunk digest
+    Query("q182_chunk_docs", (s, d) => chunkDocs(s, d),
+      """WITH c AS (SELECT doc_id, text,
+        |    unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST((s - 1) / 150 AS INTEGER) AS chunk_idx,
+        |  CAST(s AS INTEGER) AS start,
+        |  CAST(length(substr(text, CAST(s AS INTEGER), 200)) AS INTEGER)
+        |    AS chunk_chars,
+        |  md5(substr(text, CAST(s AS INTEGER), 200)) AS chunk_md5
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    // corpus-health diagnostic: log-log OLS over the frequency head
+    Query("q183_zipf_fit", (s, d) => zipfFit(s, d),
+      s"""WITH f AS (SELECT t, count(*) AS f
+         |  FROM (SELECT unnest($T) AS t FROM documents) GROUP BY t),
+         |rk AS (SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, t) AS r
+         |  FROM f),
+         |xy AS (SELECT round(ln(r), 6) AS x, round(ln(f), 6) AS y
+         |  FROM rk WHERE r <= 100),
+         |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+         |    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
+         |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
+         |    CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS sxy,
+         |    CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS sxx,
+         |    CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS syy
+         |  FROM xy),
+         |sl AS (SELECT n, sx, sy, sxy, sxx, syy,
+         |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM m),
+         |ab AS (SELECT n, sy, sxy, syy, b, (sy - b * sx) / n AS a FROM sl)
+         |SELECT CAST(n AS INTEGER) AS n_terms, round(b, 6) AS slope,
+         |  round(a, 6) AS intercept,
+         |  round(1.0 - (syy - a * sy - b * sxy) / (syy - sy * sy / n), 6)
+         |    AS r2
+         |FROM ab""".stripMargin),
+    // trained multinomial NB lang classifier, held-out confusion matrix
+    Query("q184_naive_bayes_lang", (s, d) => naiveBayesLang(s, d),
+      s"""WITH d AS (SELECT doc_id, lang, text,
+         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
+         |      AS is_train
+         |  FROM documents),
+         |tok AS (SELECT doc_id, lang, is_train, unnest($T) AS t FROM d),
+         |tt AS (SELECT * FROM tok WHERE is_train),
+         |vocab AS (SELECT DISTINCT t FROM tt),
+         |vs AS (SELECT COUNT(*) AS v FROM vocab),
+         |tot AS (SELECT lang, COUNT(*) AS tot FROM tt GROUP BY lang),
+         |ntr AS (SELECT COUNT(*) AS ntr FROM d WHERE is_train),
+         |cls0 AS (SELECT lang, COUNT(*) AS nd FROM d WHERE is_train
+         |  GROUP BY lang),
+         |cls AS (SELECT c.lang AS cls,
+         |    CAST(round(ln(CAST(c.nd AS DOUBLE) / CAST(n.ntr AS DOUBLE)),
+         |      6) AS DECIMAL(18,6)) AS prior,
+         |    CAST(round(ln(CAST(1 AS DOUBLE) /
+         |      CAST(t.tot + v.v AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lp0
+         |  FROM cls0 c JOIN tot t ON c.lang = t.lang
+         |  CROSS JOIN ntr n CROSS JOIN vs v),
+         |lp AS (SELECT ct.lang AS cls, ct.t,
+         |    CAST(round(ln(CAST(ct.cnt + 1 AS DOUBLE) /
+         |      CAST(t.tot + v.v AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lp
+         |  FROM (SELECT lang, t, COUNT(*) AS cnt FROM tt
+         |    GROUP BY lang, t) ct
+         |  JOIN tot t ON ct.lang = t.lang CROSS JOIN vs v),
+         |tcv AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok
+         |  WHERE NOT is_train AND t IN (SELECT t FROM vocab)
+         |  GROUP BY doc_id, t),
+         |niv AS (SELECT doc_id, SUM(cnt) AS n_iv FROM tcv GROUP BY doc_id),
+         |seen AS (SELECT tcv.doc_id, lp.cls, SUM(tcv.cnt * lp.lp) AS slp,
+         |    SUM(tcv.cnt) AS seen_cnt
+         |  FROM tcv JOIN lp ON tcv.t = lp.t GROUP BY 1, 2),
+         |sc AS (SELECT td.doc_id, td.true_lang, c.cls,
+         |    c.prior + COALESCE(s.slp, CAST(0 AS DECIMAL(18,6)))
+         |      + (COALESCE(n.n_iv, 0) - COALESCE(s.seen_cnt, 0)) * c.lp0
+         |      AS score
+         |  FROM (SELECT doc_id, lang AS true_lang FROM d
+         |    WHERE NOT is_train) td
+         |  CROSS JOIN cls c
+         |  LEFT JOIN niv n ON td.doc_id = n.doc_id
+         |  LEFT JOIN seen s ON td.doc_id = s.doc_id AND c.cls = s.cls),
+         |pr AS (SELECT doc_id, true_lang, cls,
+         |    ROW_NUMBER() OVER (PARTITION BY doc_id
+         |      ORDER BY score DESC, cls) AS rn
+         |  FROM sc)
+         |SELECT true_lang, cls AS pred_lang, COUNT(*) AS n
+         |FROM pr WHERE rn = 1 GROUP BY 1, 2
+         |ORDER BY true_lang, pred_lang""".stripMargin),
+    // CCNet-style bigram-LM perplexity quality scoring of held-out docs
+    Query("q185_bigram_ppl", (s, d) => bigramPerplexity(s, d),
       s"""WITH d AS (SELECT doc_id, source, $T AS t,
          |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
          |      AS is_train
@@ -3622,294 +4105,977 @@ object TextOps {
          |tr AS (SELECT * FROM b0 WHERE is_train),
          |vocab AS (SELECT DISTINCT cur AS w FROM tr),
          |vs AS (SELECT COUNT(*) + 1 AS v FROM vocab),
-         |ns AS (SELECT COUNT(*) AS n FROM tr),
-         |c2 AS (SELECT prev, cur, COUNT(*) AS c2 FROM tr
-         |  GROUP BY prev, cur),
          |c1 AS (SELECT prev, COUNT(*) AS c1 FROM tr GROUP BY prev),
-         |uni AS (SELECT cur, COUNT(*) AS cw FROM tr GROUP BY cur),
-         |te AS (SELECT
-         |    CASE WHEN prev = '<s>' OR prev IN (SELECT w FROM vocab)
-         |      THEN prev ELSE '<unk>' END AS p,
-         |    CASE WHEN cur IN (SELECT w FROM vocab)
-         |      THEN cur ELSE '<unk>' END AS c
-         |  FROM b0 WHERE NOT is_train),
-         |sc AS (SELECT
-         |    CASE WHEN c1.c1 IS NOT NULL THEN
-         |      CAST(COALESCE(c2.c2, 0) AS DOUBLE) / CAST(c1.c1 AS DOUBLE)
-         |    ELSE 0.0 END AS p2,
-         |    CAST(COALESCE(uni.cw, 0) + 1 AS DOUBLE)
-         |      / CAST(ns.n + vs.v AS DOUBLE) AS p1
-         |  FROM te CROSS JOIN vs CROSS JOIN ns
-         |  LEFT JOIN c2 ON te.p = c2.prev AND te.c = c2.cur
-         |  LEFT JOIN c1 ON te.p = c1.prev
-         |  LEFT JOIN uni ON te.c = uni.cur),
-         |lam0 AS (SELECT CAST(0.5 AS DOUBLE) AS lam),
-         |i1 AS (${emRound("lam0")}),
-         |i2 AS (${emRound("i1")}),
-         |i3 AS (${emRound("i2")})
-         |SELECT CAST(1 AS INTEGER) AS iter, lam AS lambda, ll AS avg_ll
-         |  FROM i1
-         |UNION ALL SELECT 2, lam, ll FROM i2
-         |UNION ALL SELECT 3, lam, ll FROM i3
-         |ORDER BY iter""".stripMargin
-    },
-    // q402: interpolated Kneser-Ney, association pinned to the engine's
-    // double expression shape; D=0.75 exact in binary
-    "q402_kn_perplexity" ->
-      s"""WITH d AS (SELECT doc_id, source, $T AS t,
-         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
-         |      AS is_train
-         |  FROM documents),
-         |b0 AS (SELECT doc_id, source, is_train,
-         |    CASE WHEN i = 1 THEN '<s>' ELSE t[CAST(i - 1 AS INTEGER)] END
-         |      AS prev,
-         |    t[CAST(i AS INTEGER)] AS cur
-         |  FROM (SELECT doc_id, source, is_train, t,
-         |      unnest(range(1, len(t) + 1)) AS i FROM d)),
-         |tr AS (SELECT * FROM b0 WHERE is_train),
-         |vocab AS (SELECT DISTINCT cur AS w FROM tr),
-         |vs AS (SELECT COUNT(*) + 1 AS v FROM vocab),
          |c2 AS (SELECT prev, cur, COUNT(*) AS c2 FROM tr
          |  GROUP BY prev, cur),
-         |c1 AS (SELECT prev, SUM(c2) AS c1, COUNT(*) AS n1f FROM c2
-         |  GROUP BY prev),
-         |n1r AS (SELECT cur, COUNT(*) AS n1r FROM c2 GROUP BY cur),
-         |n1a AS (SELECT COUNT(*) AS n1all FROM c2),
          |te AS (SELECT doc_id, source,
          |    CASE WHEN prev = '<s>' OR prev IN (SELECT w FROM vocab)
          |      THEN prev ELSE '<unk>' END AS p,
          |    CASE WHEN cur IN (SELECT w FROM vocab)
          |      THEN cur ELSE '<unk>' END AS c
          |  FROM b0 WHERE NOT is_train),
-         |sc AS (SELECT doc_id, source, c2.c2 AS cb, c1.c1 AS c1v,
-         |    c1.n1f AS n1f, n1r.n1r AS n1rv, vs.v AS v,
-         |    n1a.n1all AS n1all
-         |  FROM te CROSS JOIN vs CROSS JOIN n1a
-         |  LEFT JOIN c2 ON te.p = c2.prev AND te.c = c2.cur
-         |  LEFT JOIN c1 ON te.p = c1.prev
-         |  LEFT JOIN n1r ON te.c = n1r.cur),
-         |lp AS (SELECT doc_id, source, cb,
-         |    CAST(round(ln(CASE WHEN c1v IS NOT NULL THEN
-         |        (GREATEST(CAST(COALESCE(cb, 0) AS DOUBLE) - 0.75, 0.0)
-         |          + 0.75 * CAST(n1f AS DOUBLE)
-         |            * (CAST(COALESCE(n1rv, 0) + 1 AS DOUBLE)
-         |               / CAST(n1all + v AS DOUBLE)))
-         |          / CAST(c1v AS DOUBLE)
-         |      ELSE CAST(COALESCE(n1rv, 0) + 1 AS DOUBLE)
-         |           / CAST(n1all + v AS DOUBLE) END), 6)
+         |lp AS (SELECT doc_id, source,
+         |    CAST(round(ln(CAST(COALESCE(c2.c2, 0) + 1 AS DOUBLE) /
+         |      CAST(COALESCE(c1.c1, 0) + vs.v AS DOUBLE)), 6)
          |      AS DECIMAL(18,6)) AS lp
-         |  FROM sc)
+         |  FROM te CROSS JOIN vs
+         |  LEFT JOIN c2 ON te.p = c2.prev AND te.c = c2.cur
+         |  LEFT JOIN c1 ON te.p = c1.prev)
          |SELECT doc_id, source, COUNT(*) AS n_bigrams,
-         |  CAST(SUM(CASE WHEN cb IS NULL THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_backoff,
-         |  round(exp(-CAST(SUM(lp) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)),
-         |    6) AS ppl
-         |FROM lp GROUP BY doc_id, source ORDER BY doc_id""".stripMargin,
-    // q389: NTILE over the unique doc_id (DuckDB semantics == the
-    // engine's two-pass ntileByKey), min-slice first occurrence, same
-    // bounded cumulative frame
-    "q389_heaps_curve" -> {
-      val t = tokensS("text")
-      s"""WITH sl AS (SELECT doc_id,
-         |    NTILE($HeapsSlices) OVER (ORDER BY doc_id) AS slice
-         |  FROM documents),
-         |toks AS (SELECT d.doc_id, sl.slice, tok FROM
-         |    (SELECT doc_id, unnest($t) AS tok FROM documents) d
-         |  JOIN sl ON d.doc_id = sl.doc_id
-         |  WHERE length(tok) > 0),
-         |ps AS (SELECT slice, COUNT(DISTINCT doc_id) AS nd,
-         |    COUNT(*) AS ntok FROM toks GROUP BY slice),
-         |nv AS (SELECT fs AS slice, COUNT(*) AS nv FROM
-         |    (SELECT tok, MIN(slice) AS fs FROM toks GROUP BY tok)
-         |  GROUP BY fs)
-         |SELECT CAST(ps.slice AS INTEGER) AS slice,
-         |  CAST(SUM(nd) OVER (ORDER BY ps.slice) AS INTEGER) AS cum_docs,
-         |  CAST(SUM(ntok) OVER (ORDER BY ps.slice) AS BIGINT)
-         |    AS cum_tokens,
-         |  CAST(SUM(COALESCE(nv.nv, 0)) OVER (ORDER BY ps.slice)
-         |    AS BIGINT) AS cum_vocab,
-         |  round(CAST(SUM(COALESCE(nv.nv, 0)) OVER (ORDER BY ps.slice)
-         |      AS DOUBLE)
-         |    / CAST(SUM(ntok) OVER (ORDER BY ps.slice) AS DOUBLE), 9)
-         |    AS type_token_ratio
-         |FROM ps LEFT JOIN nv ON ps.slice = nv.slice
-         |ORDER BY ps.slice""".stripMargin
-    },
-    // q387: same presence counts, same bounded top-df vocabulary, same
-    // ln-round-6 PMI shape
-    "q387_cooc_pmi" -> {
-      val t = tokensS("text")
-      s"""WITH pres AS (SELECT DISTINCT doc_id, tok FROM
-         |    (SELECT doc_id, unnest($t) AS tok FROM documents)
-         |  WHERE length(tok) > 0),
-         |top AS (SELECT tok, COUNT(*) AS df FROM pres GROUP BY tok
-         |  ORDER BY df DESC, tok LIMIT $CoocVocab),
-         |kept AS (SELECT doc_id, p.tok FROM pres p JOIN top USING (tok)),
-         |nn AS (SELECT COUNT(*) AS n FROM documents),
-         |pairs AS (SELECT a.tok AS tok_a, b.tok AS tok_b,
-         |    COUNT(*) AS c_ab
-         |  FROM kept a JOIN kept b ON a.doc_id = b.doc_id
-         |    AND a.tok < b.tok
+         |  round(exp(-CAST(SUM(lp) AS DOUBLE) / COUNT(*)), 6) AS ppl
+         |FROM lp GROUP BY doc_id, source ORDER BY doc_id""".stripMargin),
+    // serving-side dynamic batching: length buckets + per-batch fill
+    Query("q186_length_batches", (s, d) => lengthBucketBatches(s, d),
+      s"""WITH d AS (SELECT doc_id, len($T) AS nt FROM documents),
+         |b AS (SELECT doc_id, nt,
+         |    CAST(CASE WHEN nt <= 16 THEN 16 WHEN nt <= 32 THEN 32
+         |      WHEN nt <= 64 THEN 64 WHEN nt <= 128 THEN 128
+         |      WHEN nt <= 256 THEN 256 ELSE 512 END AS INTEGER)
+         |      AS bucket_cap
+         |  FROM d),
+         |r AS (SELECT bucket_cap, nt,
+         |    CAST((ROW_NUMBER() OVER (PARTITION BY bucket_cap
+         |      ORDER BY doc_id) - 1) // 8 AS INTEGER) AS batch_idx
+         |  FROM b)
+         |SELECT bucket_cap, batch_idx,
+         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(MAX(nt) AS INTEGER) AS batch_max,
+         |  CAST(SUM(nt) AS BIGINT) AS sum_tokens,
+         |  round(CAST(SUM(nt) AS DOUBLE) /
+         |    CAST(COUNT(*) * MAX(nt) AS DOUBLE), 6) AS fill_pct
+         |FROM r GROUP BY bucket_cap, batch_idx
+         |ORDER BY bucket_cap, batch_idx""".stripMargin),
+    // source x source token-frequency cosine — mix-redundancy diagnostic
+    Query("q189_source_vocab_cosine", (s, d) => sourceVocabCosine(s, d),
+      s"""WITH tok AS (SELECT source, unnest($T) AS t FROM documents),
+         |tf AS (SELECT source, t, COUNT(*) AS c FROM tok
+         |  GROUP BY source, t),
+         |norms AS (SELECT source, SUM(c * c) AS n2 FROM tf GROUP BY source),
+         |dots AS (SELECT a.source AS src_a, b.source AS src_b,
+         |    SUM(a.c * b.c) AS dot
+         |  FROM tf a JOIN tf b ON a.t = b.t AND a.source < b.source
          |  GROUP BY 1, 2)
-         |SELECT tok_a, tok_b, CAST(c_ab AS INTEGER) AS n_docs_both,
-         |  round(ln(CAST(n AS DOUBLE) * c_ab
-         |    / (CAST(ta.df AS DOUBLE) * CAST(tb.df AS DOUBLE))), 6)
-         |    AS pmi
-         |FROM pairs
-         |JOIN top ta ON ta.tok = tok_a
-         |JOIN top tb ON tb.tok = tok_b
-         |CROSS JOIN nn
-         |ORDER BY pmi DESC, tok_a, tok_b LIMIT 20""".stripMargin
-    },
-    // q383: same shingles, same 60-bit hashes, same k-smallest windows
-    // (the oracle pays the sort the engine's top-k rewrite avoids)
-    "q383_kmv_distinct" -> {
-      val k = 128
-      val t = tokensS("text")
-      s"""WITH d AS (SELECT source, $t AS t FROM documents
-         |  WHERE source IN ('src1', 'src2')),
-         |sh AS (SELECT DISTINCT source, s FROM
-         |  (SELECT source, unnest(${shinglesS("t", 3)}) AS s FROM d)),
-         |hs AS (SELECT source, ${hex60S("md5(s)")} AS h FROM sh),
-         |sk AS (SELECT source, h FROM (SELECT source, h,
-         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn
-         |  FROM hs) WHERE rn <= $k),
-         |mg AS (SELECT 'union' AS scope, h FROM (SELECT h,
-         |    ROW_NUMBER() OVER (ORDER BY h) AS rn
-         |  FROM (SELECT DISTINCT h FROM sk)) WHERE rn <= $k),
-         |alls AS (SELECT source AS scope, h FROM sk
-         |  UNION ALL SELECT scope, h FROM mg),
-         |kth AS (SELECT scope, COUNT(*) AS n_sk, MAX(h) AS kth_hash
-         |  FROM alls GROUP BY scope),
-         |ex AS (SELECT source AS scope, COUNT(DISTINCT h) AS n_exact
-         |    FROM hs GROUP BY source
-         |  UNION ALL SELECT 'union', COUNT(DISTINCT h) FROM hs),
-         |es AS (SELECT scope, n_exact, kth_hash,
-         |    CASE WHEN n_sk < $k THEN CAST(n_sk AS DOUBLE)
-         |      ELSE ${k - 1}.0 * 1152921504606846976.0
-         |        / CAST(kth_hash AS DOUBLE) END AS e
-         |  FROM kth JOIN ex USING (scope))
-         |SELECT scope, n_exact, kth_hash, round(e, 6) AS est,
-         |  round((e - CAST(n_exact AS DOUBLE))
-         |    / CAST(n_exact AS DOUBLE), 6) AS rel_err
-         |FROM es ORDER BY scope""".stripMargin
-    },
-    // q381: same seeded buckets, same integer counters, squares cast
-    // to DECIMAL(38,0) before the multiply on both engines
-    "q381_cm_join_size" -> {
-      val (d, w) = (4, 1024)
-      val bucketRows = (0 until d).map(j =>
-        s"SELECT $j AS j, (${hex60S(seededMd5S(j, "k"))}) % $w AS b, c FROM kc")
-        .mkString("\nUNION ALL\n")
-      s"""WITH kc AS (SELECT CAST(user_id AS VARCHAR) AS k,
-         |    COUNT(*) AS c FROM events GROUP BY 1),
-         |ex AS (SELECT CAST(SUM(CAST(c AS DECIMAL(38,0))
-         |    * CAST(c AS DECIMAL(38,0))) AS BIGINT) AS exact_j
-         |  FROM kc),
-         |jb AS ($bucketRows),
-         |sk AS (SELECT j, b, SUM(c) AS counter FROM jb GROUP BY j, b),
-         |ip AS (SELECT j, SUM(CAST(counter AS DECIMAL(38,0))
-         |    * CAST(counter AS DECIMAL(38,0))) AS ip FROM sk GROUP BY j),
-         |es AS (SELECT CAST(MIN(ip) AS BIGINT) AS est_j FROM ip)
-         |SELECT exact_j, est_j,
-         |  est_j - exact_j AS overcount,
-         |  round(CAST(est_j - exact_j AS DOUBLE)
-         |    / CAST(exact_j AS DOUBLE), 9) AS rel_err
-         |FROM es CROSS JOIN ex""".stripMargin
-    },
-    // q378: DuckDB's utf8proc NFC vs the JDK Normalizer — same planted
-    // suffixes, same census, fingerprint over the normalized bytes
-    "q378_nfc_census" -> {
-      s"""WITH d AS (SELECT lang,
-         |    text || CASE CAST(doc_id % 4 AS INTEGER)
-         |      WHEN 1 THEN 'e' || chr(769)
-         |      WHEN 2 THEN chr(8491)
-         |      WHEN 3 THEN 'A' || chr(778) || chr(64257)
-         |      ELSE '' END AS dtext
+         |SELECT src_a, src_b,
+         |  round(CAST(dot AS DOUBLE) /
+         |    (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))),
+         |    6) AS cosine
+         |FROM dots
+         |JOIN norms na ON dots.src_a = na.source
+         |JOIN norms nb ON dots.src_b = nb.source
+         |ORDER BY src_a, src_b""".stripMargin),
+    // per-lang JS divergence train vs heldout — split exchangeability
+    Query("q192_split_token_drift", (s, d) => splitTokenDrift(s, d),
+      s"""WITH tok AS (SELECT lang,
+         |    CASE WHEN ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
+         |      THEN 1 ELSE 0 END AS tr,
+         |    unnest($T) AS t
          |  FROM documents),
-         |n AS (SELECT lang, dtext, nfc_normalize(dtext) AS norm FROM d),
-         |h AS (SELECT lang, dtext, norm, ${hex60S("md5(norm)")} AS h
-         |  FROM n)
-         |SELECT lang, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(CASE WHEN norm <> dtext THEN 1 ELSE 0 END)
-         |    AS INTEGER) AS n_changed,
-         |  CAST(SUM(length(dtext) - length(norm)) AS BIGINT)
-         |    AS delta_chars,
-         |  bit_xor(h) AS xor_fp
-         |FROM h GROUP BY lang ORDER BY lang""".stripMargin
-    },
-    // q361: identical integer sampling table + 60-bit md5 draws
-    "q361_negative_sampling" ->
-      s"""WITH toks AS (SELECT unnest(${tokensS("text")}) AS tok
-         |  FROM documents),
-         |counts AS (SELECT tok, COUNT(*) AS w FROM toks GROUP BY tok),
-         |top AS (SELECT tok, w FROM counts
-         |  ORDER BY w DESC, tok LIMIT $NsVocab),
-         |cum AS (SELECT tok, w, COALESCE(SUM(w) OVER (ORDER BY tok
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |    AS lo FROM top),
-         |tot AS (SELECT SUM(w) AS t FROM top),
-         |spine AS (SELECT unnest(generate_series(0, ${NsSamples - 1}))
-         |    AS si),
-         |-- the draw column must not be named i: hex60S expands to a
-         |-- list_transform whose lambda variable is i and would shadow it
-         |draws AS (SELECT
-         |    ${hex60S("md5('ns#' || CAST(si AS VARCHAR))")}
-         |      % (SELECT t FROM tot) AS u FROM spine),
-         |hit AS (SELECT c.tok, c.w FROM draws d JOIN cum c
-         |  ON d.u >= c.lo AND d.u < c.lo + c.w)
-         |SELECT tok, CAST(COUNT(*) AS INTEGER) AS n_drawn, MAX(w) AS w,
-         |  round(CAST(MAX(w) AS DOUBLE)
-         |    / CAST((SELECT t FROM tot) AS DOUBLE) * $NsSamples, 6)
-         |    AS expected
-         |FROM hit GROUP BY tok
-         |ORDER BY n_drawn DESC, tok""".stripMargin,
-    // q357: the brute-force groupBy + HAVING the two-pass sketch route
-    // must reproduce exactly
-    "q357_heavy_hitters" ->
-      s"""WITH toks AS (SELECT unnest(${tokensS("text")}) AS tok
-         |  FROM documents),
-         |nn AS (SELECT COUNT(*) AS n FROM toks)
-         |SELECT tok, COUNT(*) AS cnt,
-         |  round(CAST(COUNT(*) AS DOUBLE)
-         |    / CAST((SELECT n FROM nn) AS DOUBLE), 9) AS frac
-         |FROM toks GROUP BY tok
-         |HAVING COUNT(*) * $HhK > (SELECT n FROM nn)
-         |ORDER BY cnt DESC, tok""".stripMargin,
-    // q330: identical integer-threshold weighted quantiles in DuckDB
-    "q330_weighted_quantiles" ->
-      s"""WITH m0 AS (SELECT doc_id, source, text, ${tokensS("text")} AS t
-         |  FROM documents),
-         |m AS (SELECT doc_id, source, text,
+         |cnt AS (SELECT lang, t, SUM(tr) AS ct, SUM(1 - tr) AS ch
+         |  FROM tok GROUP BY lang, t),
+         |tot AS (SELECT lang, SUM(ct) AS tt, SUM(ch) AS th,
+         |    COUNT(*) AS v FROM cnt GROUP BY lang),
+         |pq AS (SELECT cnt.lang,
+         |    (ct + 0.5) / (tt + 0.5 * v) AS p,
+         |    (ch + 0.5) / (th + 0.5 * v) AS q,
+         |    tt, th, v
+         |  FROM cnt JOIN tot ON cnt.lang = tot.lang),
+         |m AS (SELECT lang, tt, th, v, p, q, (p + q) / 2 AS m FROM pq),
+         |agg AS (SELECT lang, ANY_VALUE(v) AS n_vocab,
+         |    ANY_VALUE(tt) AS n_train_tokens, ANY_VALUE(th) AS n_held_tokens,
+         |    SUM(CAST(round(p * round(ln(p / m), 6), 12)
+         |      AS DECIMAL(28,12))) AS sp,
+         |    SUM(CAST(round(q * round(ln(q / m), 6), 12)
+         |      AS DECIMAL(28,12))) AS sq
+         |  FROM m GROUP BY lang)
+         |SELECT lang, CAST(n_vocab AS INTEGER) AS n_vocab,
+         |  CAST(n_train_tokens AS BIGINT) AS n_train_tokens,
+         |  CAST(n_held_tokens AS BIGINT) AS n_held_tokens,
+         |  round(CAST(sp + sq AS DOUBLE) * 0.5, 6) AS js_divergence
+         |FROM agg ORDER BY lang""".stripMargin),
+    // DSIR: hashed-bigram importance weights vs the quality-target tier
+    Query("q193_dsir_weights", (s, d) => dsirWeights(s, d),
+      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, text, t,
          |    $qualityMeasureColsS
          |  FROM m0),
-         |p AS (SELECT doc_id, source,
-         |    CAST(CAST($qualityScoreExprS AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS qmu,
-         |    CAST(${bpeTokensS("text")} AS BIGINT) AS w
+         |qd AS (SELECT doc_id, t,
+         |    CASE WHEN $QualityScoreS >= 0.5 THEN 1 ELSE 0 END AS tgt
          |  FROM m),
-         |c AS (SELECT source, doc_id, qmu, w,
-         |    SUM(w) OVER (PARTITION BY source ORDER BY qmu, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS cw,
-         |    COUNT(*) OVER (PARTITION BY source ORDER BY qmu, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS cn,
-         |    SUM(w) OVER (PARTITION BY source) AS tw,
-         |    COUNT(*) OVER (PARTITION BY source) AS tn
-         |  FROM p)
-         |SELECT source, CAST(MAX(tn) AS BIGINT) AS n_docs,
-         |  CAST(MAX(tw) AS BIGINT) AS n_tokens,
-         |  round(MIN(CASE WHEN cn * 2 >= tn THEN qmu END) / 1000000.0, 6)
-         |    AS q50_doc,
-         |  round(MIN(CASE WHEN cw * 4 >= tw THEN qmu END) / 1000000.0, 6)
-         |    AS q25_tok,
-         |  round(MIN(CASE WHEN cw * 2 >= tw THEN qmu END) / 1000000.0, 6)
-         |    AS q50_tok,
-         |  round(MIN(CASE WHEN cw * 4 >= tw * 3 THEN qmu END) / 1000000.0, 6)
-         |    AS q75_tok
-         |FROM c GROUP BY source ORDER BY source""".stripMargin,
+         |g0 AS (SELECT doc_id, tgt, unnest(${shinglesS("t", 2)}) AS g
+         |  FROM qd),
+         |g AS (SELECT doc_id, tgt, ${hex60S("md5(g)")} % 4096 AS b FROM g0),
+         |model AS (SELECT b, SUM(tgt) AS cbt, COUNT(*) AS cbr
+         |  FROM g GROUP BY b),
+         |tot AS (SELECT SUM(cbt) AS tt, SUM(cbr) AS tr FROM model),
+         |lr AS (SELECT b, round(ln(
+         |    ((cbt + 0.5) / (tt + 2048.0)) /
+         |    ((cbr + 0.5) / (tr + 2048.0))), 6) AS lr
+         |  FROM model, tot),
+         |sc AS (SELECT doc_id, COUNT(*) AS n_grams,
+         |    SUM(CAST(lr AS DECIMAL(18,6))) AS slr
+         |  FROM g JOIN lr ON g.b = lr.b GROUP BY doc_id)
+         |SELECT doc_id, CAST(n_grams AS INTEGER) AS n_grams,
+         |  CAST(slr AS DOUBLE) / n_grams AS avg_log_ratio
+         |FROM sc ORDER BY avg_log_ratio DESC, doc_id LIMIT 50""".stripMargin),
+    // waterfill: equal-share token budget with capped-source redistribution
+    Query("q196_token_waterfill", (s, d) => tokenWaterfill(s, d),
+      s"""WITH caps AS (SELECT source,
+         |    SUM(CAST(${graft.functions.TextPrims.bpeTokensS("text")}
+         |      AS BIGINT)) AS cap
+         |  FROM documents GROUP BY source),
+         |tot AS (SELECT SUM(cap) AS total, COUNT(*) AS n FROM caps),
+         |rb AS (SELECT source, cap, n,
+         |    CAST(FLOOR(CAST(total AS DOUBLE) * 0.6) AS BIGINT) AS b,
+         |    ROW_NUMBER() OVER (ORDER BY cap, source) AS rk,
+         |    COALESCE(SUM(cap) OVER (ORDER BY cap, source
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS cum_before
+         |  FROM caps, tot),
+         |c AS (SELECT *, CASE WHEN CAST(cap AS DOUBLE) * (n - rk + 1) <=
+         |      CAST(b - cum_before AS DOUBLE) THEN 1 ELSE 0 END AS is_capped
+         |  FROM rb),
+         |lam AS (SELECT CAST(ANY_VALUE(b) -
+         |      COALESCE(SUM(CASE WHEN is_capped = 1 THEN cap END), 0)
+         |      AS DOUBLE) /
+         |    SUM(CASE WHEN is_capped = 0 THEN 1 ELSE 0 END) AS lambda
+         |  FROM c)
+         |SELECT source, CAST(cap AS BIGINT) AS cap,
+         |  CAST(CASE WHEN is_capped = 1 THEN cap
+         |    ELSE CAST(FLOOR(lambda) AS BIGINT) END AS BIGINT) AS allocated,
+         |  CAST(is_capped AS INTEGER) AS is_capped
+         |FROM c, lam ORDER BY source""".stripMargin),
+    // release gate: per-source go/no-go conjunction over the q150 card
+    Query("q200_release_gate", (s, d) => releaseGate(s, d),
+      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, source, text,
+         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
+         |      AS BIGINT) AS toks,
+         |    CAST(len(t) AS DOUBLE) AS words,
+         |    CAST(length(text) AS DOUBLE) AS chars,
+         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
+         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
+         |  FROM d),
+         |q AS (SELECT doc_id, source, text, toks, $QualityScoreS AS qs FROM m),
+         |e AS (SELECT source, COUNT(*) AS n_embedded FROM q
+         |  WHERE doc_id IN (SELECT vec_id FROM embeddings) GROUP BY 1),
+         |du AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_dup_docs FROM
+         |  (SELECT source, md5(text) AS h, COUNT(*) AS cnt FROM q
+         |   GROUP BY 1, 2) g
+         |  WHERE cnt > 1 GROUP BY 1),
+         |base AS (SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |    CAST(SUM(toks) AS BIGINT) AS total_tokens,
+         |    $meanQualityS AS mean_quality
+         |  FROM q GROUP BY 1),
+         |card AS (SELECT base.source, n_docs, total_tokens, mean_quality,
+         |    CAST(COALESCE(e.n_embedded, 0) AS BIGINT) AS n_embedded,
+         |    CAST(COALESCE(du.n_dup_docs, 0) AS BIGINT) AS n_dup_docs
+         |  FROM base LEFT JOIN e ON base.source = e.source
+         |  LEFT JOIN du ON base.source = du.source),
+         |g AS (SELECT *,
+         |    CAST(n_dup_docs AS DOUBLE) / CAST(n_docs AS DOUBLE) AS df,
+         |    CAST(n_embedded AS DOUBLE) / CAST(n_docs AS DOUBLE) AS ec
+         |  FROM card)
+         |SELECT source, n_docs, total_tokens,
+         |  round(df, 6) AS dup_frac, round(ec, 6) AS emb_cover,
+         |  mean_quality,
+         |  CAST(df < 0.05 AS INTEGER) AS gate_dup,
+         |  CAST(mean_quality >= 0.45 AS INTEGER) AS gate_quality,
+         |  CAST(ec >= 0.9 AS INTEGER) AS gate_coverage,
+         |  CAST(total_tokens >= 500 AS INTEGER) AS gate_volume,
+         |  CAST(df < 0.05 AND mean_quality >= 0.45 AND ec >= 0.9
+         |    AND total_tokens >= 500 AS INTEGER) AS release_ok
+         |FROM g ORDER BY source""".stripMargin),
+    // Efraimidis-Spirakis: one-pass weighted sample WITHOUT replacement
+    Query("q202_es_weighted_sample", (s, d) => esWeightedSample(s, d),
+      s"""WITH d AS (SELECT doc_id,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
+         |      AS BIGINT) AS toks
+         |  FROM documents),
+         |ks AS (SELECT doc_id, toks,
+         |    round(ln((${hex60S("md5('es#' || CAST(doc_id AS VARCHAR))")}
+         |      + 1.0) / 1152921504606846976.0), 9) / toks AS es_key
+         |  FROM d WHERE toks > 0),
+         |r AS (SELECT doc_id, toks, es_key,
+         |    CAST(ROW_NUMBER() OVER (ORDER BY es_key DESC, doc_id)
+         |      AS INTEGER) AS rk
+         |  FROM ks)
+         |SELECT doc_id, toks, es_key, rk FROM r
+         |WHERE rk <= 50 ORDER BY rk""".stripMargin),
+    // per-source quality deciles vs global — quantile-normalization map
+    Query("q207_quantile_calibration", (s, d) => quantileCalibration(s, d), {
+      val qsArr = (0 to 10).map(i => i / 10.0)
+      s"""WITH m0 AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, source, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |d AS (SELECT source,
+         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS vq
+         |  FROM m),
+         |bysrc AS (SELECT source,
+         |    quantile_cont(vq, [${qsArr.mkString(", ")}]) AS qs
+         |  FROM d GROUP BY source),
+         |gl AS (SELECT quantile_cont(vq, [${qsArr.mkString(", ")}]) AS gq
+         |  FROM d),
+         |se AS (SELECT source, i - 1 AS i, qs[i] AS src_q
+         |  FROM bysrc, unnest(generate_series(1, 11)) AS u(i)),
+         |ge AS (SELECT i - 1 AS i, gq[i] AS glob_q
+         |  FROM gl, unnest(generate_series(1, 11)) AS u(i))
+         |SELECT source, CAST(se.i AS INTEGER) AS decile,
+         |  src_q / 1000000.0 AS src_q,
+         |  glob_q / 1000000.0 AS glob_q,
+         |  src_q / 1000000.0 - glob_q / 1000000.0 AS shift
+         |FROM se JOIN ge ON se.i = ge.i
+         |ORDER BY source, decile""".stripMargin
+    }),
+    // per-source Gini of token mass — corpus concentration/diversity
+    Query("q210_gini_concentration", (s, d) => giniConcentration(s, d),
+      s"""WITH d AS (SELECT doc_id, source,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
+         |      AS BIGINT) AS toks
+         |  FROM documents),
+         |r AS (SELECT source, toks,
+         |    ROW_NUMBER() OVER (PARTITION BY source
+         |      ORDER BY toks, doc_id) AS i
+         |  FROM d),
+         |a AS (SELECT source, COUNT(*) AS n,
+         |    SUM(CAST(toks AS DECIMAL(38,0))) AS sx,
+         |    SUM(CAST(i AS DECIMAL(38,0)) * toks) AS six
+         |  FROM r GROUP BY source)
+         |SELECT source, CAST(n AS INTEGER) AS n_docs,
+         |  CAST(sx AS BIGINT) AS total_toks,
+         |  round(CAST(CAST(2 AS DECIMAL(38,0)) * six -
+         |      CAST(n + 1 AS DECIMAL(38,0)) * sx AS DOUBLE) /
+         |    CAST(CAST(n AS DECIMAL(38,0)) * sx AS DOUBLE), 6) AS gini
+         |FROM a ORDER BY source""".stripMargin),
+    // scaling-law ladder: nested hash-threshold subsets 1/64..1
+    Query("q215_learning_ladder", (s, d) => learningCurveLadder(s, d), {
+      val bkt = hex60S("md5(CAST(doc_id AS VARCHAR))") + " % 4096"
+      val steps = Seq(64, 16, 4, 1)
+      val sel = steps.map { den =>
+        val thr = 4096L / den
+        s"""SELECT '1/$den' AS step, CAST($thr AS BIGINT) AS threshold,
+           |  CAST(SUM(CASE WHEN b < $thr THEN 1 ELSE 0 END) AS INTEGER)
+           |    AS n_docs,
+           |  CAST(SUM(CASE WHEN b < $thr THEN toks ELSE 0 END) AS BIGINT)
+           |    AS total_tokens,
+           |  CAST(SUM(CASE WHEN b < $thr THEN qu ELSE 0 END) AS DOUBLE) /
+           |    SUM(CASE WHEN b < $thr THEN 1 ELSE 0 END) / 1000000.0
+           |    AS mean_quality
+           |FROM d""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
+         |m AS (SELECT doc_id, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |d AS (SELECT $bkt AS b,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
+         |      AS BIGINT) AS toks,
+         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS qu
+         |  FROM m)
+         |$sel
+         |ORDER BY threshold""".stripMargin
+    }),
+    // PMI collocations: ln(N c(ab) / c(a)c(b)) phrase-mining candidates
+    Query("q216_pmi_collocations", (s, d) => pmiCollocations(s, d),
+      s"""WITH tok AS (SELECT doc_id, u.p AS p, t[u.p] AS w
+         |  FROM (SELECT doc_id, $T AS t FROM documents),
+         |    unnest(generate_series(1, len(t))) AS u(p)),
+         |uni AS (SELECT w, COUNT(*) AS cw FROM tok GROUP BY w),
+         |tot AS (SELECT SUM(cw) AS n FROM uni),
+         |big AS (SELECT w AS wa,
+         |    LEAD(w) OVER (PARTITION BY doc_id ORDER BY p) AS wb
+         |  FROM tok),
+         |cab AS (SELECT wa, wb, COUNT(*) AS cab FROM big
+         |  WHERE wb IS NOT NULL GROUP BY wa, wb HAVING COUNT(*) >= 5)
+         |SELECT wa, wb, CAST(cab AS INTEGER) AS n_ab,
+         |  round(ln(CAST(n AS DOUBLE) * cab /
+         |    (CAST(ua.cw AS DOUBLE) * ub.cw)), 6) AS pmi
+         |FROM cab
+         |JOIN uni ua ON cab.wa = ua.w
+         |JOIN uni ub ON cab.wb = ub.w, tot
+         |ORDER BY pmi DESC, wa, wb LIMIT 20""".stripMargin),
+    // chunk-level lang votes: mixed-language / code-switching detection
+    Query("q219_code_switching", (s, d) => codeSwitching(s, d),
+      s"""WITH t0 AS (SELECT doc_id,
+         |    ${tokensS("substr(text, CAST(s AS INTEGER), 200)")} AS t
+         |  FROM (SELECT doc_id, text,
+         |      unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
+         |    FROM documents)),
+         |sc AS (SELECT doc_id, $langScoresS FROM t0),
+         |p AS (SELECT doc_id, $langPredS AS pred_lang FROM sc),
+         |tot AS (SELECT doc_id, COUNT(*) AS n_chunks FROM p GROUP BY doc_id),
+         |per AS (SELECT doc_id, pred_lang, COUNT(*) AS c FROM p
+         |  WHERE pred_lang <> 'und' GROUP BY 1, 2),
+         |rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+         |    ORDER BY c DESC, pred_lang) AS rk FROM per),
+         |agg AS (SELECT doc_id, SUM(c) AS n_classified,
+         |    COUNT(*) AS n_langs,
+         |    MAX(CASE WHEN rk = 1 THEN pred_lang END) AS majority_lang,
+         |    MAX(CASE WHEN rk = 1 THEN c END) AS cmaj
+         |  FROM rk GROUP BY doc_id)
+         |SELECT tot.doc_id, CAST(n_chunks AS INTEGER) AS n_chunks,
+         |  CAST(COALESCE(n_langs, 0) AS INTEGER) AS n_langs,
+         |  majority_lang,
+         |  round(CAST(cmaj AS DOUBLE) / CAST(n_classified AS DOUBLE), 6)
+         |    AS majority_share,
+         |  CAST(COALESCE(n_langs, 0) >= 2 AND cmaj * 5 <= n_classified * 4
+         |    AS INTEGER) AS is_mixed
+         |FROM tot LEFT JOIN agg ON tot.doc_id = agg.doc_id
+         |ORDER BY tot.doc_id""".stripMargin),
+    // per-source Shannon entropy + KL vs corpus — info-theoretic mix view
+    Query("q220_source_entropy", (s, d) => sourceEntropy(s, d),
+      s"""WITH tok AS (SELECT source, unnest($T) AS w FROM documents),
+         |tf AS (SELECT source, w, COUNT(*) AS c FROM tok
+         |  GROUP BY source, w),
+         |st AS (SELECT source, SUM(c) AS ct, COUNT(*) AS v FROM tf
+         |  GROUP BY source),
+         |g AS (SELECT w, SUM(c) AS cg FROM tf GROUP BY w),
+         |gt AS (SELECT SUM(cg) AS cgt FROM g),
+         |j AS (SELECT tf.source, ct, v,
+         |    CAST(c AS DOUBLE) / ct AS p,
+         |    CAST(cg AS DOUBLE) / cgt AS pg
+         |  FROM tf
+         |  JOIN st ON tf.source = st.source
+         |  JOIN g ON tf.w = g.w, gt),
+         |a AS (SELECT source, ANY_VALUE(ct) AS n_tokens,
+         |    ANY_VALUE(v) AS n_vocab,
+         |    SUM(CAST(round(-p * round(ln(p), 6), 12)
+         |      AS DECIMAL(28,12))) AS hsum,
+         |    SUM(CAST(round(p * round(ln(p / pg), 6), 12)
+         |      AS DECIMAL(28,12))) AS klsum
+         |  FROM j GROUP BY source)
+         |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
+         |  CAST(n_vocab AS INTEGER) AS n_vocab,
+         |  round(CAST(hsum AS DOUBLE), 6) AS entropy,
+         |  round(CAST(klsum AS DOUBLE), 6) AS kl_vs_corpus
+         |FROM a ORDER BY source""".stripMargin),
+    // Church-Gale burstiness: VMR of per-doc counts, topical-token signal
+    Query("q221_token_burstiness", (s, d) => tokenBurstiness(s, d),
+      s"""WITH perdoc AS (SELECT w, doc_id, COUNT(*) AS c FROM
+         |  (SELECT doc_id, unnest($T) AS w FROM documents)
+         |  GROUP BY w, doc_id),
+         |nd AS (SELECT COUNT(*) AS nn FROM documents),
+         |stats AS (SELECT w, COUNT(*) AS n_docs, SUM(c) AS sc,
+         |    SUM(CAST(c * c AS DECIMAL(38,0))) AS sc2
+         |  FROM perdoc GROUP BY w HAVING SUM(c) >= 50),
+         |f AS (SELECT w, n_docs, sc, sc2, CAST(nn AS DOUBLE) AS n FROM
+         |  stats, nd),
+         |m AS (SELECT w, n_docs, sc,
+         |    CAST(sc AS DOUBLE) / n AS mean,
+         |    (CAST(sc2 AS DOUBLE) - (CAST(sc AS DOUBLE) / n)
+         |      * (CAST(sc AS DOUBLE) / n) * n) / (n - 1) AS vr
+         |  FROM f)
+         |SELECT w AS token, CAST(sc AS INTEGER) AS n_occ,
+         |  CAST(n_docs AS INTEGER) AS n_docs,
+         |  round(vr / mean, 6) AS vmr
+         |FROM m ORDER BY vmr DESC, token LIMIT 20""".stripMargin),
+    // chunk quality by structural position — the truncation-policy test
+    Query("q225_position_quality", (s, d) => positionQuality(s, d),
+      s"""WITH m0 AS (SELECT doc_id,
+         |    CAST((s - 1) // 150 AS INTEGER) AS idx,
+         |    substr(text, CAST(s AS INTEGER), 200) AS text
+         |  FROM (SELECT doc_id, text,
+         |      unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
+         |    FROM documents)),
+         |m AS (SELECT doc_id, idx, text, $T AS t FROM m0),
+         |mm AS (SELECT doc_id, idx,
+         |    $qualityMeasureColsS
+         |  FROM m),
+         |q AS (SELECT doc_id, idx,
+         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS qu
+         |  FROM mm),
+         |w AS (SELECT *, MAX(idx) OVER (PARTITION BY doc_id) AS nc FROM q),
+         |p AS (SELECT CASE WHEN idx = 0 THEN '1_head'
+         |    WHEN idx = nc THEN '3_tail' ELSE '2_middle' END AS pos, qu
+         |  FROM w)
+         |SELECT pos, CAST(COUNT(*) AS INTEGER) AS n_chunks,
+         |  CAST(SUM(qu) AS DOUBLE) / COUNT(*) / 1000000.0 AS mean_quality
+         |FROM p GROUP BY pos ORDER BY pos""".stripMargin),
+    // is quality just length? per-source OLS of score on ln(tokens)
+    Query("q228_quality_length_ols", (s, d) => qualityLengthOls(s, d),
+      s"""WITH m0 AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |mq AS (SELECT doc_id, source, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |xy0 AS (SELECT source,
+         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
+         |    $QualityScoreS AS y
+         |  FROM mq),
+         |xy AS (SELECT source, round(ln(CAST(toks AS DOUBLE)), 6) AS x, y
+         |  FROM xy0 WHERE toks > 0),
+         |m AS (SELECT source, CAST(COUNT(*) AS DOUBLE) AS n,
+         |    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
+         |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
+         |    CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS sxy,
+         |    CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS sxx,
+         |    CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
+         |      AS syy
+         |  FROM xy WHERE x IS NOT NULL GROUP BY source),
+         |sl AS (SELECT source, n, sx, sy, sxy, sxx, syy,
+         |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM m),
+         |ab AS (SELECT source, n, sx, sy, sxy, syy, b,
+         |    (sy - b * sx) / n AS a FROM sl)
+         |SELECT source, CAST(n AS INTEGER) AS n_docs,
+         |  round(b, 6) AS slope, round(a, 6) AS intercept,
+         |  round(1.0 - (syy - a * sy - b * sxy) / (syy - sy * sy / n), 6)
+         |    AS r2
+         |FROM ab ORDER BY source""".stripMargin),
+    // chance-corrected lang-ID agreement — kappa, not raw accuracy
+    Query("q229_lang_kappa", (s, d) => langKappa(s, d),
+      s"""WITH d AS (SELECT doc_id, lang, $T AS t FROM documents),
+         |sc AS (SELECT doc_id, lang, $langScoresS FROM d),
+         |p AS (SELECT lang, $langPredS AS pred_lang FROM sc),
+         |agree AS (SELECT COUNT(*) AS n,
+         |    SUM(CASE WHEN lang = pred_lang THEN 1 ELSE 0 END) AS na
+         |  FROM p),
+         |ma AS (SELECT lang, COUNT(*) AS ca FROM p GROUP BY lang),
+         |mb AS (SELECT pred_lang, COUNT(*) AS cb FROM p
+         |  GROUP BY pred_lang),
+         |pe AS (SELECT COALESCE(SUM(CAST(ca * cb AS DECIMAL(38,0))),
+         |    CAST(0 AS DECIMAL(38,0))) AS sab
+         |  FROM ma JOIN mb ON ma.lang = mb.pred_lang)
+         |SELECT CAST(n AS INTEGER) AS n,
+         |  round(CAST(na AS DOUBLE) / n, 6) AS p_observed,
+         |  round(CAST(sab AS DOUBLE) / (CAST(n AS DOUBLE) * n), 6)
+         |    AS p_expected,
+         |  round((CAST(na AS DOUBLE) / n -
+         |      CAST(sab AS DOUBLE) / (CAST(n AS DOUBLE) * n)) /
+         |    (1.0 - CAST(sab AS DOUBLE) / (CAST(n AS DOUBLE) * n)), 6)
+         |    AS kappa
+         |FROM agree, pe""".stripMargin),
+    // PII scan: per-source redaction pre-flight over 4 pattern families
+    Query("q239_pii_scan", (s, d) => piiScan(s, d), {
+      val cols = PiiPatterns.map { case (nm, p) =>
+        s"len(regexp_extract_all(text, '$p')) AS c_$nm" }.mkString(", ")
+      val aggs = PiiPatterns.map { case (nm, _) =>
+        s"""CAST(COUNT(CASE WHEN c_$nm > 0 THEN 1 END) AS INTEGER)
+           |      AS d_$nm,
+           |    CAST(SUM(c_$nm) AS INTEGER) AS h_$nm""".stripMargin
+      }.mkString(",\n    ")
+      val arms = PiiPatterns.map { case (nm, _) =>
+        s"""SELECT source, '$nm' AS pii_type, d_$nm AS n_docs_hit,
+           |  h_$nm AS n_hits FROM a""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH c AS (SELECT source, $cols FROM documents),
+         |a AS (SELECT source,
+         |    $aggs
+         |  FROM c GROUP BY source)
+         |$arms
+         |ORDER BY source, pii_type""".stripMargin
+    }),
+    // PII redaction: tag rewrite + xor content checksums per source
+    Query("q240_pii_redact", (s, d) => piiRedact(s, d), {
+      val red = PiiPatterns.foldLeft("text") { case (e, (nm, p)) =>
+        s"regexp_replace($e, '$p', '<${nm.toUpperCase}>', 'g')" }
+      s"""WITH r AS (SELECT source, text, $red AS redacted FROM documents)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(COUNT(CASE WHEN redacted <> text THEN 1 END) AS INTEGER)
+         |    AS n_docs_changed,
+         |  bit_xor(${graft.functions.TextPrims.hex60S("md5(redacted)")})
+         |    AS xor_redacted,
+         |  bit_xor(${graft.functions.TextPrims.hex60S("md5(text)")})
+         |    AS xor_raw
+         |FROM r GROUP BY source ORDER BY source""".stripMargin
+    }),
+    // next-fit sequence packing: utilization per source at 2048 tokens
+    Query("q241_seq_packing", (s, d) => seqPacking(s, d),
+      s"""WITH RECURSIVE d AS (SELECT source,
+         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
+         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id)
+         |      AS rn
+         |  FROM documents),
+         |p AS (
+         |  SELECT source, rn, toks, CAST(toks AS BIGINT) AS fill,
+         |    CAST(1 AS BIGINT) AS seq
+         |  FROM d WHERE rn = 1
+         |  UNION ALL
+         |  SELECT d.source, d.rn, d.toks,
+         |    CASE WHEN p.fill + d.toks <= 2048
+         |      THEN p.fill + d.toks ELSE CAST(d.toks AS BIGINT) END,
+         |    CASE WHEN p.fill + d.toks <= 2048 THEN p.seq ELSE p.seq + 1
+         |      END
+         |  FROM p JOIN d ON d.source = p.source AND d.rn = p.rn + 1)
+         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(MAX(seq) AS INTEGER) AS n_seqs,
+         |  CAST(COUNT(CASE WHEN toks > 2048 THEN 1 END) AS INTEGER)
+         |    AS n_overflow,
+         |  CAST(SUM(toks) AS INTEGER) AS total_tokens,
+         |  round(CAST(SUM(toks) AS DOUBLE) / (MAX(seq) * 2048), 6)
+         |    AS utilization
+         |FROM p GROUP BY source ORDER BY source""".stripMargin),
+    // the whole curation pipeline as one query: per-stage attrition
+    Query("q242_curation_funnel", (s, d) => curationFunnel(s, d), {
+      val red = PiiPatterns.foldLeft("text") { case (e, (nm, p)) =>
+        s"regexp_replace($e, '$p', '<${nm.toUpperCase}>', 'g')" }
+      def arm(nm: String, rel: String) =
+        s"""SELECT '$nm' AS stage, CAST(COUNT(*) AS INTEGER) AS n_docs,
+           |  CAST(COALESCE(SUM(toks), 0) AS INTEGER) AS n_tokens
+           |FROM $rel""".stripMargin
+      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
+         |mq AS (SELECT doc_id, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |base AS (SELECT doc_id, $QualityScoreS AS q,
+         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
+         |    md5(text) AS h, $red = text AS clean
+         |  FROM mq),
+         |s1 AS (SELECT * FROM base WHERE q >= 0.5),
+         |k AS (SELECT h, MIN(doc_id) AS doc_id FROM s1 GROUP BY h),
+         |s2 AS (SELECT s1.* FROM s1 JOIN k
+         |  ON s1.h = k.h AND s1.doc_id = k.doc_id),
+         |s3 AS (SELECT * FROM s2 WHERE clean),
+         |s4 AS (SELECT * FROM s3 WHERE toks BETWEEN 10 AND 5000)
+         |${arm("0_corpus", "base")}
+         |UNION ALL
+         |${arm("1_quality", "s1")}
+         |UNION ALL
+         |${arm("2_exact_dedup", "s2")}
+         |UNION ALL
+         |${arm("3_pii_clean", "s3")}
+         |UNION ALL
+         |${arm("4_len_band", "s4")}
+         |ORDER BY stage""".stripMargin
+    }),
+    // filter ablation: solo vs marginal cost per quality rule
+    Query("q244_filter_ablation", (s, d) => filterAblation(s, d), {
+      val rules = Seq(
+        "1_quality"   -> "q < 0.5",
+        "2_diversity" -> "ttr < 0.35",
+        "3_stopword"  -> "stopr < 0.02",
+        "4_len_band"  -> "(toks < 20 OR toks > 5000)")
+      val flags = rules.zipWithIndex
+        .map { case ((_, p), i) => s"$p AS f$i" }.mkString(",\n    ")
+      val sums = rules.indices.flatMap { i =>
+        val marg = (s"f$i" +: (0 until i).map(j => s"NOT f$j"))
+          .mkString(" AND ")
+        Seq(
+          s"CAST(COUNT(CASE WHEN f$i THEN 1 END) AS INTEGER) AS ds_$i",
+          s"CAST(COALESCE(SUM(CASE WHEN f$i THEN toks END), 0) AS INTEGER) AS ts_$i",
+          s"CAST(COUNT(CASE WHEN $marg THEN 1 END) AS INTEGER) AS dm_$i",
+          s"CAST(COALESCE(SUM(CASE WHEN $marg THEN toks END), 0) AS INTEGER) AS tm_$i")
+      }.mkString(",\n    ")
+      val arms = (Seq(
+        "SELECT 0 AS rule_idx, '0_corpus' AS rule, n_all AS n_docs_solo, " +
+          "t_all AS n_tokens_solo, n_all AS n_docs_marg, " +
+          "t_all AS n_tokens_marg FROM a") ++
+        rules.zipWithIndex.map { case ((nm, _), i) =>
+          s"SELECT ${i + 1}, '$nm', ds_$i, ts_$i, dm_$i, tm_$i FROM a" })
+        .mkString("\nUNION ALL\n")
+      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
+         |mq AS (SELECT doc_id, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |b AS (SELECT
+         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
+         |    $QualityScoreS AS q,
+         |    CASE WHEN words > 0 THEN
+         |      round(CAST(len(list_distinct(t)) AS DOUBLE) / words, 6)
+         |      END AS ttr,
+         |    CASE WHEN words > 0 THEN round(stops / words, 6) END
+         |      AS stopr
+         |  FROM mq),
+         |f AS (SELECT toks,
+         |    $flags
+         |  FROM b),
+         |a AS (SELECT
+         |    $sums,
+         |    CAST(COUNT(*) AS INTEGER) AS n_all,
+         |    CAST(SUM(toks) AS INTEGER) AS t_all
+         |  FROM f)
+         |$arms
+         |ORDER BY rule_idx""".stripMargin
+    }),
+    // leave-one-source-out corpus impact: totals-minus-source valuation
+    Query("q250_loo_source_impact", (s, d) => looSourceImpact(s, d),
+      s"""WITH m0 AS (SELECT source, text, $T AS t FROM documents),
+         |mq AS (SELECT source, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |per AS (SELECT source,
+         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS qmu,
+         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
+         |      AS BIGINT) AS toks
+         |  FROM mq),
+         |b AS (SELECT source, COUNT(*) AS ns,
+         |    CAST(SUM(qmu) AS BIGINT) AS sq,
+         |    CAST(SUM(toks) AS BIGINT) AS st
+         |  FROM per GROUP BY source),
+         |tot AS (SELECT CAST(SUM(ns) AS BIGINT) AS n,
+         |    CAST(SUM(sq) AS BIGINT) AS totq,
+         |    CAST(SUM(st) AS BIGINT) AS tott FROM b)
+         |SELECT b.source, CAST(b.ns AS INTEGER) AS n_docs,
+         |  CAST(totq AS DOUBLE) / n / 1000000.0 AS glob_mean_q,
+         |  CASE WHEN n > ns THEN CAST(totq - sq AS DOUBLE) / (n - ns)
+         |    / 1000000.0 END AS loo_mean_q,
+         |  CASE WHEN n > ns THEN CAST(totq - sq AS DOUBLE) / (n - ns)
+         |      / 1000000.0 - CAST(totq AS DOUBLE) / n / 1000000.0
+         |    END AS delta_mean_q,
+         |  CAST(tott AS DOUBLE) / n AS glob_mean_toks,
+         |  CASE WHEN n > ns THEN CAST(tott - st AS DOUBLE) / (n - ns)
+         |    END AS loo_mean_toks,
+         |  CASE WHEN n > ns THEN CAST(tott - st AS DOUBLE) / (n - ns)
+         |      - CAST(tott AS DOUBLE) / n END AS delta_mean_toks
+         |FROM b CROSS JOIN tot ORDER BY b.source""".stripMargin),
+    // isotonic (PAV) calibration of quality vs is-English rate
+    Query("q252_isotonic_calibration", (s, d) => isotonicCalibration(s, d),
+      s"""WITH $isoScoredCtesS,
+         |binned AS (SELECT bin, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT)
+         |      AS e, CAST(SUM(qmu) AS BIGINT) AS sq
+         |  FROM (SELECT qmu, pos,
+         |      NTILE(20) OVER (ORDER BY qmu, doc_id) AS bin
+         |    FROM scored)
+         |  GROUP BY bin),
+         |$PavSqlTail""".stripMargin),
+    // binned Theil-Sen robust slope: q228 OLS's robust twin
+    Query("q255_theil_sen", (s, d) => theilSen(s, d),
+      s"""WITH m0 AS (SELECT doc_id, source, text, $T AS t FROM documents),
+         |mq AS (SELECT doc_id, source, text, t,
+         |    $qualityMeasureColsS
+         |  FROM m0),
+         |per AS (SELECT source, doc_id,
+         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
+         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS ymu
+         |  FROM mq),
+         |px AS (SELECT source, doc_id, ymu,
+         |    round(ln(CAST(toks AS DOUBLE)), 6) AS x
+         |  FROM per WHERE toks > 0),
+         |b AS (SELECT source, bin,
+         |    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+         |      AS xc,
+         |    CAST(SUM(ymu) AS DOUBLE) / COUNT(*) / 1000000.0 AS yc
+         |  FROM (SELECT source, x, ymu,
+         |      NTILE(16) OVER (PARTITION BY source ORDER BY x, doc_id)
+         |        AS bin
+         |    FROM px)
+         |  GROUP BY source, bin),
+         |sl AS (SELECT a.source, a.bin AS i, c.bin AS j,
+         |    (c.yc - a.yc) / (c.xc - a.xc) AS sl
+         |  FROM b a JOIN b c ON a.source = c.source AND a.bin < c.bin
+         |  WHERE c.xc <> a.xc),
+         |ranked AS (SELECT *,
+         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY sl, i, j)
+         |      AS rn,
+         |    COUNT(*) OVER (PARTITION BY source) AS ns
+         |  FROM sl)
+         |SELECT source, CAST(MAX(ns) AS INTEGER) AS n_slopes,
+         |  (MIN(sl) + MAX(sl)) / 2 AS ts_slope
+         |FROM ranked
+         |WHERE rn = (ns + 1) // 2 OR rn = ns // 2 + 1
+         |GROUP BY source ORDER BY source""".stripMargin),
+    // q252's 100-TB twin: percentile-boundary bins, same PAV algebra
+    Query("q256_isotonic_boundary", (s, d) => isotonicBoundary(s, d), {
+      val qs = (1 until 20).map(i => i.toDouble / 20)
+      s"""WITH $isoScoredCtesS,
+         |bnd AS (SELECT quantile_cont(qmu, [${qs.mkString(", ")}])
+         |    AS bnd FROM scored),
+         |binned AS (SELECT bin, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT)
+         |      AS e, CAST(SUM(qmu) AS BIGINT) AS sq
+         |  FROM (SELECT qmu, pos,
+         |      CAST(len(list_filter(bnd.bnd,
+         |        b -> CAST(qmu AS DOUBLE) > b)) + 1 AS INTEGER) AS bin
+         |    FROM scored CROSS JOIN bnd)
+         |  GROUP BY bin),
+         |$PavSqlTail""".stripMargin
+    }),
+    // count-min sketch heavy hitters: estimate-vs-exact calibration
+    Query("q257_count_min", (s, d) => countMinTokens(s, d), {
+      def bucketS(j: Int, tok: String) =
+        s"${graft.functions.TextPrims.hex60S(
+          graft.functions.TextPrims.seededMd5S(j, tok))} % 1024"
+      val sketchArms = (0 until 4).map(j =>
+        s"SELECT $j AS j, ${bucketS(j, "tok")} AS bucket, cnt FROM exact")
+        .mkString("\nUNION ALL\n")
+      val probeArms = (0 until 4).map(j =>
+        s"SELECT tok, cnt, $j AS j, ${bucketS(j, "tok")} AS bucket " +
+          "FROM top").mkString("\nUNION ALL\n")
+      s"""WITH exact AS (SELECT tok, COUNT(*) AS cnt FROM (
+         |    SELECT unnest($T) AS tok FROM documents)
+         |  WHERE length(tok) > 0 GROUP BY tok),
+         |ins AS ($sketchArms),
+         |sketch AS (SELECT j, bucket, CAST(SUM(cnt) AS BIGINT) AS counter
+         |  FROM ins GROUP BY j, bucket),
+         |top AS (SELECT * FROM exact ORDER BY cnt DESC, tok LIMIT 20),
+         |probes AS ($probeArms),
+         |est AS (SELECT p.tok, p.cnt, MIN(s.counter) AS est
+         |  FROM probes p JOIN sketch s
+         |    ON p.j = s.j AND p.bucket = s.bucket
+         |  GROUP BY p.tok, p.cnt)
+         |SELECT tok AS token, CAST(cnt AS BIGINT) AS n_exact,
+         |  est AS n_est, est - cnt AS overcount,
+         |  CAST(est - cnt AS DOUBLE) / cnt AS rel_err
+         |FROM est ORDER BY n_exact DESC, token""".stripMargin
+    }),
+    // from-scratch relational HyperLogLog: oracle-checkable sketch
+    Query("q259_hll_distinct", (s, d) => hllDistinct(s, d), {
+      val h = graft.functions.TextPrims.hex60S(
+        graft.functions.TextPrims.seededMd5S(0, "tok"))
+      s"""WITH toks AS (SELECT DISTINCT source, tok FROM (
+         |    SELECT source, unnest($T) AS tok FROM documents)
+         |  WHERE length(tok) > 0),
+         |hh AS (SELECT source, $h AS h FROM toks),
+         |rr AS (SELECT source, h % 1024 AS idx, h // 1024 AS z FROM hh),
+         |rk AS (SELECT source, idx,
+         |    CASE WHEN z = 0 THEN 50 ELSE 51 - length(bin(z)) END AS rank
+         |  FROM rr),
+         |regs AS (SELECT source, idx, MAX(rank) AS mx
+         |  FROM rk GROUP BY source, idx),
+         |sums AS (SELECT source, COUNT(*) AS n_filled,
+         |    CAST(SUM(CAST(1 AS BIGINT) << (50 - mx)) AS BIGINT)
+         |      AS isum_filled
+         |  FROM regs GROUP BY source),
+         |fl AS (SELECT source, n_filled,
+         |    1024 - n_filled AS v0,
+         |    isum_filled + (1024 - n_filled) *
+         |      (CAST(1 AS BIGINT) << 50) AS isum
+         |  FROM sums),
+         |est AS (SELECT source, n_filled, v0,
+         |    $HllAlphaM2 * CAST(CAST(1 AS BIGINT) << 50 AS DOUBLE)
+         |      / CAST(isum AS DOUBLE) AS raw
+         |  FROM fl),
+         |fin AS (SELECT source, n_filled,
+         |    CASE WHEN raw <= ${2.5 * 1024} AND v0 > 0
+         |      THEN 1024.0 * round(ln(1024.0 / CAST(v0 AS DOUBLE)), 6)
+         |      ELSE raw END AS e
+         |  FROM est),
+         |ex AS (SELECT source, COUNT(DISTINCT tok) AS n_exact FROM toks
+         |  GROUP BY source)
+         |SELECT ex.source, CAST(ex.n_exact AS INTEGER) AS n_exact,
+         |  CAST(fin.n_filled AS INTEGER) AS n_filled,
+         |  round(fin.e, 6) AS hll_est,
+         |  round((fin.e - CAST(ex.n_exact AS DOUBLE))
+         |    / CAST(ex.n_exact AS DOUBLE), 6) AS rel_err
+         |FROM fin JOIN ex ON fin.source = ex.source
+         |ORDER BY ex.source""".stripMargin
+    }),
+    // alpha-tempered source sampling weights (p_i ~ tokens^0.3)
+    Query("q268_alpha_mix", (s, d) => alphaMix(s, d),
+      s"""WITH g AS (SELECT source,
+         |    CAST(count(*) AS INTEGER) AS n_docs,
+         |    CAST(SUM(${bpeTokensS("text")}) AS BIGINT) AS n_tokens
+         |  FROM documents GROUP BY source),
+         |u AS (SELECT *, CASE WHEN n_tokens > 0
+         |    THEN round(exp(0.3 * round(ln(CAST(n_tokens AS DOUBLE)), 6)),
+         |      6) ELSE 0.0 END AS u
+         |  FROM g),
+         |tot AS (SELECT CAST(SUM(n_tokens) AS DOUBLE) AS tot_t,
+         |    CAST(SUM(CAST(u AS DECIMAL(18,6))) AS DOUBLE) AS tot_u
+         |  FROM u)
+         |SELECT source, n_docs, n_tokens,
+         |  round(CAST(n_tokens AS DOUBLE) / tot_t, 9) AS p_raw,
+         |  round(u / tot_u, 9) AS p_alpha,
+         |  round(CASE WHEN n_tokens > 0 THEN (u / tot_u) /
+         |    (CAST(n_tokens AS DOUBLE) / tot_t) END, 6) AS boost
+         |FROM u, tot ORDER BY source""".stripMargin),
+    // hash-batched epoch shuffle manifest: no global sort anywhere
+    Query("q269_epoch_batches", (s, d) => epochBatches(s, d), {
+      val planes = (1 to 2).map { e =>
+        s"""SELECT $e AS epoch,
+           |    CAST(${hex60S(seededMd5S(1000 + e,
+                  "CAST(doc_id AS VARCHAR)"))} % 64 AS INTEGER) AS batch,
+           |    source, ${bpeTokensS("text")} AS bt
+           |  FROM documents""".stripMargin
+      }.mkString("\n  UNION ALL\n  ")
+      s"""WITH e AS (
+         |  $planes),
+         |g AS (SELECT epoch, batch,
+         |    CAST(count(*) AS INTEGER) AS n_docs,
+         |    CAST(SUM(bt) AS BIGINT) AS n_tokens,
+         |    CAST(count(DISTINCT source) AS INTEGER) AS n_sources
+         |  FROM e GROUP BY epoch, batch),
+         |t AS (SELECT epoch, CAST(SUM(n_tokens) AS DOUBLE) AS tt
+         |  FROM g GROUP BY epoch)
+         |SELECT g.epoch, g.batch, n_docs, n_tokens, n_sources,
+         |  round(CAST(n_tokens AS DOUBLE) * 64 / tt, 6) AS load_ratio
+         |FROM g JOIN t ON g.epoch = t.epoch
+         |ORDER BY g.epoch, g.batch""".stripMargin
+    }),
+    // Zipf made operational: corpus coverage per vocab budget
+    Query("q273_vocab_coverage", (s, d) => vocabBudgetCoverage(s, d), {
+      val rows = CoverageKs.map { k =>
+        s"""SELECT $k AS vocab_k, t.n_types, t.n_tokens_total,
+           |  CAST((SELECT COALESCE(SUM(cnt), 0) FROM (
+           |     SELECT cnt FROM vc ORDER BY cnt DESC, tok LIMIT $k))
+           |    AS BIGINT) AS covered,
+           |  round(CAST((SELECT COALESCE(SUM(cnt), 0) FROM (
+           |     SELECT cnt FROM vc ORDER BY cnt DESC, tok LIMIT $k))
+           |    AS DOUBLE) / CAST(t.n_tokens_total AS DOUBLE), 6)
+           |    AS coverage
+           |FROM t""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH vc AS MATERIALIZED (SELECT tok, COUNT(*) AS cnt FROM (
+         |    SELECT unnest($T) AS tok FROM documents)
+         |  WHERE length(tok) > 0 GROUP BY tok),
+         |t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_tokens_total,
+         |    CAST(COUNT(*) AS BIGINT) AS n_types FROM vc)
+         |$rows
+         |ORDER BY vocab_k""".stripMargin
+    }),
+    // degenerate-text gate: period-1..3 token loop census per source
+    Query("q276_repetition_loops", (s, d) => repetitionLoops(s, d), {
+      val planes = (1 to 3).map { p =>
+        s"""SELECT doc_id, $p AS p, unnest(CASE WHEN len(t) > $p
+           |    THEN list_filter(generate_series(1, len(t) - $p),
+           |      i -> t[i] = t[i + $p])
+           |    ELSE CAST([] AS BIGINT[]) END) AS i
+           |  FROM b""".stripMargin
+      }.mkString("\n  UNION ALL\n  ")
+      s"""WITH b AS MATERIALIZED (SELECT doc_id, source, $T AS t
+         |  FROM documents),
+         |pl AS MATERIALIZED (
+         |  $planes),
+         |runs AS (SELECT doc_id, p,
+         |    i - ROW_NUMBER() OVER (PARTITION BY doc_id, p ORDER BY i)
+         |      AS isl
+         |  FROM pl),
+         |rl AS (SELECT doc_id, p, isl, COUNT(*) AS len
+         |  FROM runs GROUP BY doc_id, p, isl),
+         |mx AS (SELECT doc_id, p, MAX(len) + p AS rep
+         |  FROM rl GROUP BY doc_id, p),
+         |best AS (SELECT doc_id, rep FROM (
+         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+         |    ORDER BY rep DESC, p) AS rk FROM mx) WHERE rk = 1)
+         |SELECT b.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(CASE WHEN best.rep >= 4 THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS n_loopy,
+         |  CAST(COALESCE(MAX(best.rep), 0) AS BIGINT) AS max_rep,
+         |  round(CAST(SUM(CASE WHEN best.rep >= 4 THEN 1 ELSE 0 END)
+         |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS loopy_frac
+         |FROM b LEFT JOIN best ON b.doc_id = best.doc_id
+         |GROUP BY b.source ORDER BY b.source""".stripMargin
+    }),
+    // q145 at the three real context budgets + overall fill pct
+    Query("q279_packing_sweep", (s, d) => packingSweep(s, d), {
+      val bodies = PackingBudgets.map { c =>
+        s"""SELECT $c AS budget, source,
+           |  CAST(COUNT(*) AS INTEGER) AS n_docs,
+           |  CAST(SUM(toks) AS BIGINT) AS total_toks,
+           |  CAST((SUM(toks) + ${c - 1}) // $c AS BIGINT) AS n_bins,
+           |  CAST(SUM(CASE WHEN (cum - toks) // $c <> (cum - 1) // $c
+           |    THEN 1 ELSE 0 END) AS INTEGER) AS n_boundary_docs,
+           |  CAST(SUM(toks) * 100 //
+           |    (((SUM(toks) + ${c - 1}) // $c) * $c) AS INTEGER)
+           |    AS fill_pct
+           |FROM c GROUP BY source""".stripMargin
+      }.mkString("\nUNION ALL\n")
+      s"""WITH m AS (SELECT doc_id, source,
+         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
+         |      AS BIGINT) AS toks
+         |  FROM documents),
+         |f AS (SELECT * FROM m WHERE toks > 0),
+         |c AS MATERIALIZED (SELECT doc_id, source, toks,
+         |    SUM(toks) OVER (PARTITION BY source ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         |  FROM f)
+         |$bodies
+         |ORDER BY budget, source""".stripMargin
+    }),
+    // word2vec-style unigram^0.75 negative-sampling alias table
+    Query("q282_noise_table", (s, d) => noiseTable(s, d),
+      s"""WITH vc AS MATERIALIZED (SELECT tok, COUNT(*) AS cnt,
+         |    round(exp(0.75 * round(ln(CAST(COUNT(*) AS DOUBLE)), 6)),
+         |      6) AS u
+         |  FROM (SELECT unnest($T) AS tok FROM documents)
+         |  WHERE length(tok) > 0 GROUP BY tok),
+         |t AS (SELECT CAST(SUM(CAST(u AS DECIMAL(18,6))) AS DOUBLE)
+         |    AS tu FROM vc),
+         |top AS (SELECT tok, cnt, u FROM vc
+         |  ORDER BY cnt DESC, tok LIMIT $NoiseTopN)
+         |SELECT tok AS token, cnt AS n_count,
+         |  round(u / tu, 9) AS noise_prob,
+         |  CAST(floor(round(u / tu, 9) *
+         |    ${(1L << NoiseTableBits).toDouble}) AS BIGINT)
+         |    AS table_slots
+         |FROM top, t ORDER BY n_count DESC, token""".stripMargin),
+    // C4 duplicate-sentence rule as a per-source census
+    Query("q283_sentence_dedup", (s, d) => sentenceDedup(s, d),
+      s"""WITH sent AS (SELECT source, md5(sn) AS h FROM (
+         |  SELECT source, regexp_replace(trim(r), '\\s+', ' ', 'g') AS sn
+         |  FROM (SELECT source,
+         |      unnest(regexp_split_to_array(lower(text), '[.!?]+')) AS r
+         |    FROM documents))
+         |  WHERE length(sn) > 0),
+         |ps AS MATERIALIZED (SELECT source, h, COUNT(*) AS c
+         |  FROM sent GROUP BY source, h),
+         |worst AS (SELECT source, h AS top_hash, c AS top_repeats FROM (
+         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY source
+         |    ORDER BY c DESC, h) AS rk FROM ps) WHERE rk = 1)
+         |SELECT g.source, g.n_sentences, g.n_distinct,
+         |  round(CAST(g.n_sentences - g.n_distinct AS DOUBLE) /
+         |    CAST(g.n_sentences AS DOUBLE), 6) AS dup_frac,
+         |  worst.top_hash, worst.top_repeats
+         |FROM (SELECT source, CAST(SUM(c) AS BIGINT) AS n_sentences,
+         |    CAST(COUNT(*) AS BIGINT) AS n_distinct
+         |  FROM ps GROUP BY source) g
+         |JOIN worst ON g.source = worst.source
+         |ORDER BY g.source""".stripMargin),
+    // consistent placement: rendezvous shards + the N->N+1 move census
+    Query("q288_rendezvous_shards", (s, d) => rendezvousShards(s, d), {
+      def comb(s0: Int): String =
+        s"((${hex60S(seededMd5S(3000 + s0, "CAST(doc_id AS VARCHAR)"))}" +
+          s" >> 4) * 16 + ${15 - s0})"
+      def amax(n: Int): String =
+        s"15 - (greatest(${(0 until n).map(comb).mkString(", ")}) % 16)"
+      s"""WITH b AS MATERIALIZED (SELECT doc_id,
+         |    ${bpeTokensS("text")} AS bt,
+         |    ${amax(ShardsBefore)} AS shard_before,
+         |    ${amax(ShardsAfter)} AS shard_after
+         |  FROM documents)
+         |SELECT 'shard' AS row_kind,
+         |  CAST(shard_before AS INTEGER) AS shard,
+         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(bt) AS BIGINT) AS n_tokens,
+         |  CAST(NULL AS DOUBLE) AS moved_frac,
+         |  CAST(NULL AS DOUBLE) AS theory_frac
+         |FROM b GROUP BY shard_before
+         |UNION ALL
+         |SELECT 'expansion', -1,
+         |  CAST(SUM(CASE WHEN shard_before <> shard_after
+         |    THEN 1 ELSE 0 END) AS BIGINT),
+         |  CAST(NULL AS BIGINT),
+         |  round(CAST(SUM(CASE WHEN shard_before <> shard_after
+         |    THEN 1 ELSE 0 END) AS DOUBLE) /
+         |    CAST(COUNT(*) AS DOUBLE), 6),
+         |  round(1.0 / $ShardsAfter, 6)
+         |FROM b
+         |ORDER BY row_kind, shard""".stripMargin
+    }),
+    // RAG ingestion plan: sliding-window chunk census in closed form
+    Query("q294_rag_chunking", (s, d) => ragChunking(s, d),
+      s"""WITH d AS (SELECT source,
+         |    CAST(${bpeTokensS("text")} AS BIGINT) AS nt
+         |  FROM documents),
+         |f AS (SELECT * FROM d WHERE nt > 0),
+         |c AS (SELECT source, nt,
+         |    1 + CAST(ceil(CAST(greatest(nt - $ChunkSize, 0) AS DOUBLE)
+         |      / $ChunkStride) AS BIGINT) AS chunks
+         |  FROM f),
+         |e AS (SELECT source, nt, chunks,
+         |    chunks * $ChunkSize -
+         |      ((chunks - 1) * $ChunkStride + $ChunkSize - nt)
+         |      AS emitted
+         |  FROM c)
+         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(nt) AS BIGINT) AS n_tokens,
+         |  CAST(SUM(chunks) AS BIGINT) AS n_chunks,
+         |  CAST(SUM(CASE WHEN chunks = 1 THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS n_single_chunk,
+         |  round(CAST(SUM(emitted) AS DOUBLE) /
+         |    CAST(SUM(chunks) * $ChunkSize AS DOUBLE), 6) AS mean_fill,
+         |  round(CAST(SUM(emitted) - SUM(nt) AS DOUBLE) /
+         |    CAST(SUM(nt) AS DOUBLE), 6) AS overlap_share
+         |FROM e GROUP BY source ORDER BY source""".stripMargin),
+    // deterministic Poisson-bootstrap CI on per-source mean quality:
+    // one scan, B hash-weighted replicates, order-statistic interval
     // q301: identical Poisson thresholds (JVM-computed longs inlined
     // on both engines), same hash plane, same order-statistic ranks
-    "q301_bootstrap_ci" -> {
+    Query("q301_bootstrap_ci", (s, d) => bootstrapCi(s, d), {
       val h = hex60S(
         "md5('bs' || CAST(b AS VARCHAR) || '#' || CAST(doc_id AS VARCHAR))")
       val wCase = BootThresholds.zipWithIndex
@@ -3946,10 +5112,12 @@ object TextOps {
          |  (ci.hi - ci.lo) / 1000000.0 AS boot_spread
          |FROM fl JOIN ci ON fl.source = ci.source
          |ORDER BY fl.source""".stripMargin
-    },
+    }),
+    // HLL set algebra: pairwise register max-merge union + inclusion-
+    // exclusion intersection estimate vs exact, with relative error
     // q302: q259's register/estimator spelling over the shingle space,
     // plus pair max-merge + inclusion-exclusion
-    "q302_hll_intersect" -> {
+    Query("q302_hll_intersect", (s, d) => hllIntersect(s, d), {
       val h = graft.functions.TextPrims.hex60S(
         graft.functions.TextPrims.seededMd5S(0, "s"))
       val t = tokensS("text")
@@ -4004,11 +5172,14 @@ object TextOps {
          |JOIN ufin u ON u.src_a = pr.src_a AND u.src_b = pr.src_b
          |LEFT JOIN iv ON iv.src_a = pr.src_a AND iv.src_b = pr.src_b
          |ORDER BY pr.src_a, pr.src_b""".stripMargin
-    },
+    }),
+    // hierarchical HLL rollup — q302's thousands-of-sources regime:
+    // source->group->global register max-merge, O(S·m) shuffle rows;
+    // the flat-computed oracle certifies merge associativity
     // q310: the rollup's oracle computes every level's registers FLAT
     // from the gram frame (group/global max over raw grams), so the
     // hash certifies the source->group->global merge lost nothing
-    "q310_hll_hierarchy" -> {
+    Query("q310_hll_hierarchy", (s, d) => hllHierarchy(s, d), {
       val h = graft.functions.TextPrims.hex60S(
         graft.functions.TextPrims.seededMd5S(0, "s"))
       val gh = graft.functions.TextPrims.hex60S(
@@ -4052,750 +5223,224 @@ object TextOps {
          |FROM hfin e JOIN ns ON ns.gid = e.gid
          |JOIN ex ON ex.gid = e.gid
          |ORDER BY e.gid""".stripMargin
-    },
-    "q259_hll_distinct" -> {
-      val h = graft.functions.TextPrims.hex60S(
-        graft.functions.TextPrims.seededMd5S(0, "tok"))
-      s"""WITH toks AS (SELECT DISTINCT source, tok FROM (
-         |    SELECT source, unnest($T) AS tok FROM documents)
-         |  WHERE length(tok) > 0),
-         |hh AS (SELECT source, $h AS h FROM toks),
-         |rr AS (SELECT source, h % 1024 AS idx, h // 1024 AS z FROM hh),
-         |rk AS (SELECT source, idx,
-         |    CASE WHEN z = 0 THEN 50 ELSE 51 - length(bin(z)) END AS rank
-         |  FROM rr),
-         |regs AS (SELECT source, idx, MAX(rank) AS mx
-         |  FROM rk GROUP BY source, idx),
-         |sums AS (SELECT source, COUNT(*) AS n_filled,
-         |    CAST(SUM(CAST(1 AS BIGINT) << (50 - mx)) AS BIGINT)
-         |      AS isum_filled
-         |  FROM regs GROUP BY source),
-         |fl AS (SELECT source, n_filled,
-         |    1024 - n_filled AS v0,
-         |    isum_filled + (1024 - n_filled) *
-         |      (CAST(1 AS BIGINT) << 50) AS isum
-         |  FROM sums),
-         |est AS (SELECT source, n_filled, v0,
-         |    $HllAlphaM2 * CAST(CAST(1 AS BIGINT) << 50 AS DOUBLE)
-         |      / CAST(isum AS DOUBLE) AS raw
-         |  FROM fl),
-         |fin AS (SELECT source, n_filled,
-         |    CASE WHEN raw <= ${2.5 * 1024} AND v0 > 0
-         |      THEN 1024.0 * round(ln(1024.0 / CAST(v0 AS DOUBLE)), 6)
-         |      ELSE raw END AS e
-         |  FROM est),
-         |ex AS (SELECT source, COUNT(DISTINCT tok) AS n_exact FROM toks
-         |  GROUP BY source)
-         |SELECT ex.source, CAST(ex.n_exact AS INTEGER) AS n_exact,
-         |  CAST(fin.n_filled AS INTEGER) AS n_filled,
-         |  round(fin.e, 6) AS hll_est,
-         |  round((fin.e - CAST(ex.n_exact AS DOUBLE))
-         |    / CAST(ex.n_exact AS DOUBLE), 6) AS rel_err
-         |FROM fin JOIN ex ON fin.source = ex.source
-         |ORDER BY ex.source""".stripMargin
-    },
-    "q257_count_min" -> {
-      def bucketS(j: Int, tok: String) =
-        s"${graft.functions.TextPrims.hex60S(
-          graft.functions.TextPrims.seededMd5S(j, tok))} % 1024"
-      val sketchArms = (0 until 4).map(j =>
-        s"SELECT $j AS j, ${bucketS(j, "tok")} AS bucket, cnt FROM exact")
-        .mkString("\nUNION ALL\n")
-      val probeArms = (0 until 4).map(j =>
-        s"SELECT tok, cnt, $j AS j, ${bucketS(j, "tok")} AS bucket " +
-          "FROM top").mkString("\nUNION ALL\n")
-      s"""WITH exact AS (SELECT tok, COUNT(*) AS cnt FROM (
-         |    SELECT unnest($T) AS tok FROM documents)
-         |  WHERE length(tok) > 0 GROUP BY tok),
-         |ins AS ($sketchArms),
-         |sketch AS (SELECT j, bucket, CAST(SUM(cnt) AS BIGINT) AS counter
-         |  FROM ins GROUP BY j, bucket),
-         |top AS (SELECT * FROM exact ORDER BY cnt DESC, tok LIMIT 20),
-         |probes AS ($probeArms),
-         |est AS (SELECT p.tok, p.cnt, MIN(s.counter) AS est
-         |  FROM probes p JOIN sketch s
-         |    ON p.j = s.j AND p.bucket = s.bucket
-         |  GROUP BY p.tok, p.cnt)
-         |SELECT tok AS token, CAST(cnt AS BIGINT) AS n_exact,
-         |  est AS n_est, est - cnt AS overcount,
-         |  CAST(est - cnt AS DOUBLE) / cnt AS rel_err
-         |FROM est ORDER BY n_exact DESC, token""".stripMargin
-    },
-    "q255_theil_sen" ->
-      s"""WITH m0 AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |mq AS (SELECT doc_id, source, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |per AS (SELECT source, doc_id,
-         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
-         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS ymu
-         |  FROM mq),
-         |px AS (SELECT source, doc_id, ymu,
-         |    round(ln(CAST(toks AS DOUBLE)), 6) AS x
-         |  FROM per WHERE toks > 0),
-         |b AS (SELECT source, bin,
-         |    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-         |      AS xc,
-         |    CAST(SUM(ymu) AS DOUBLE) / COUNT(*) / 1000000.0 AS yc
-         |  FROM (SELECT source, x, ymu,
-         |      NTILE(16) OVER (PARTITION BY source ORDER BY x, doc_id)
-         |        AS bin
-         |    FROM px)
-         |  GROUP BY source, bin),
-         |sl AS (SELECT a.source, a.bin AS i, c.bin AS j,
-         |    (c.yc - a.yc) / (c.xc - a.xc) AS sl
-         |  FROM b a JOIN b c ON a.source = c.source AND a.bin < c.bin
-         |  WHERE c.xc <> a.xc),
-         |ranked AS (SELECT *,
-         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY sl, i, j)
-         |      AS rn,
-         |    COUNT(*) OVER (PARTITION BY source) AS ns
-         |  FROM sl)
-         |SELECT source, CAST(MAX(ns) AS INTEGER) AS n_slopes,
-         |  (MIN(sl) + MAX(sl)) / 2 AS ts_slope
-         |FROM ranked
-         |WHERE rn = (ns + 1) // 2 OR rn = ns // 2 + 1
-         |GROUP BY source ORDER BY source""".stripMargin,
-    "q252_isotonic_calibration" ->
-      s"""WITH $isoScoredCtesS,
-         |binned AS (SELECT bin, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT)
-         |      AS e, CAST(SUM(qmu) AS BIGINT) AS sq
-         |  FROM (SELECT qmu, pos,
-         |      NTILE(20) OVER (ORDER BY qmu, doc_id) AS bin
-         |    FROM scored)
-         |  GROUP BY bin),
-         |$PavSqlTail""".stripMargin,
-    "q256_isotonic_boundary" -> {
-      val qs = (1 until 20).map(i => i.toDouble / 20)
-      s"""WITH $isoScoredCtesS,
-         |bnd AS (SELECT quantile_cont(qmu, [${qs.mkString(", ")}])
-         |    AS bnd FROM scored),
-         |binned AS (SELECT bin, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT)
-         |      AS e, CAST(SUM(qmu) AS BIGINT) AS sq
-         |  FROM (SELECT qmu, pos,
-         |      CAST(len(list_filter(bnd.bnd,
-         |        b -> CAST(qmu AS DOUBLE) > b)) + 1 AS INTEGER) AS bin
-         |    FROM scored CROSS JOIN bnd)
-         |  GROUP BY bin),
-         |$PavSqlTail""".stripMargin
-    },
-    "q250_loo_source_impact" ->
-      s"""WITH m0 AS (SELECT source, text, $T AS t FROM documents),
-         |mq AS (SELECT source, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |per AS (SELECT source,
-         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS qmu,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
-         |      AS BIGINT) AS toks
-         |  FROM mq),
-         |b AS (SELECT source, COUNT(*) AS ns,
-         |    CAST(SUM(qmu) AS BIGINT) AS sq,
-         |    CAST(SUM(toks) AS BIGINT) AS st
-         |  FROM per GROUP BY source),
-         |tot AS (SELECT CAST(SUM(ns) AS BIGINT) AS n,
-         |    CAST(SUM(sq) AS BIGINT) AS totq,
-         |    CAST(SUM(st) AS BIGINT) AS tott FROM b)
-         |SELECT b.source, CAST(b.ns AS INTEGER) AS n_docs,
-         |  CAST(totq AS DOUBLE) / n / 1000000.0 AS glob_mean_q,
-         |  CASE WHEN n > ns THEN CAST(totq - sq AS DOUBLE) / (n - ns)
-         |    / 1000000.0 END AS loo_mean_q,
-         |  CASE WHEN n > ns THEN CAST(totq - sq AS DOUBLE) / (n - ns)
-         |      / 1000000.0 - CAST(totq AS DOUBLE) / n / 1000000.0
-         |    END AS delta_mean_q,
-         |  CAST(tott AS DOUBLE) / n AS glob_mean_toks,
-         |  CASE WHEN n > ns THEN CAST(tott - st AS DOUBLE) / (n - ns)
-         |    END AS loo_mean_toks,
-         |  CASE WHEN n > ns THEN CAST(tott - st AS DOUBLE) / (n - ns)
-         |      - CAST(tott AS DOUBLE) / n END AS delta_mean_toks
-         |FROM b CROSS JOIN tot ORDER BY b.source""".stripMargin,
-    "q244_filter_ablation" -> {
-      val rules = Seq(
-        "1_quality"   -> "q < 0.5",
-        "2_diversity" -> "ttr < 0.35",
-        "3_stopword"  -> "stopr < 0.02",
-        "4_len_band"  -> "(toks < 20 OR toks > 5000)")
-      val flags = rules.zipWithIndex
-        .map { case ((_, p), i) => s"$p AS f$i" }.mkString(",\n    ")
-      val sums = rules.indices.flatMap { i =>
-        val marg = (s"f$i" +: (0 until i).map(j => s"NOT f$j"))
-          .mkString(" AND ")
-        Seq(
-          s"CAST(COUNT(CASE WHEN f$i THEN 1 END) AS INTEGER) AS ds_$i",
-          s"CAST(COALESCE(SUM(CASE WHEN f$i THEN toks END), 0) AS INTEGER) AS ts_$i",
-          s"CAST(COUNT(CASE WHEN $marg THEN 1 END) AS INTEGER) AS dm_$i",
-          s"CAST(COALESCE(SUM(CASE WHEN $marg THEN toks END), 0) AS INTEGER) AS tm_$i")
-      }.mkString(",\n    ")
-      val arms = (Seq(
-        "SELECT 0 AS rule_idx, '0_corpus' AS rule, n_all AS n_docs_solo, " +
-          "t_all AS n_tokens_solo, n_all AS n_docs_marg, " +
-          "t_all AS n_tokens_marg FROM a") ++
-        rules.zipWithIndex.map { case ((nm, _), i) =>
-          s"SELECT ${i + 1}, '$nm', ds_$i, ts_$i, dm_$i, tm_$i FROM a" })
-        .mkString("\nUNION ALL\n")
-      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
-         |mq AS (SELECT doc_id, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |b AS (SELECT
-         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
-         |    $QualityScoreS AS q,
-         |    CASE WHEN words > 0 THEN
-         |      round(CAST(len(list_distinct(t)) AS DOUBLE) / words, 6)
-         |      END AS ttr,
-         |    CASE WHEN words > 0 THEN round(stops / words, 6) END
-         |      AS stopr
-         |  FROM mq),
-         |f AS (SELECT toks,
-         |    $flags
-         |  FROM b),
-         |a AS (SELECT
-         |    $sums,
-         |    CAST(COUNT(*) AS INTEGER) AS n_all,
-         |    CAST(SUM(toks) AS INTEGER) AS t_all
-         |  FROM f)
-         |$arms
-         |ORDER BY rule_idx""".stripMargin
-    },
-    "q242_curation_funnel" -> {
-      val red = PiiPatterns.foldLeft("text") { case (e, (nm, p)) =>
-        s"regexp_replace($e, '$p', '<${nm.toUpperCase}>', 'g')" }
-      def arm(nm: String, rel: String) =
-        s"""SELECT '$nm' AS stage, CAST(COUNT(*) AS INTEGER) AS n_docs,
-           |  CAST(COALESCE(SUM(toks), 0) AS INTEGER) AS n_tokens
-           |FROM $rel""".stripMargin
-      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
-         |mq AS (SELECT doc_id, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |base AS (SELECT doc_id, $QualityScoreS AS q,
-         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
-         |    md5(text) AS h, $red = text AS clean
-         |  FROM mq),
-         |s1 AS (SELECT * FROM base WHERE q >= 0.5),
-         |k AS (SELECT h, MIN(doc_id) AS doc_id FROM s1 GROUP BY h),
-         |s2 AS (SELECT s1.* FROM s1 JOIN k
-         |  ON s1.h = k.h AND s1.doc_id = k.doc_id),
-         |s3 AS (SELECT * FROM s2 WHERE clean),
-         |s4 AS (SELECT * FROM s3 WHERE toks BETWEEN 10 AND 5000)
-         |${arm("0_corpus", "base")}
-         |UNION ALL
-         |${arm("1_quality", "s1")}
-         |UNION ALL
-         |${arm("2_exact_dedup", "s2")}
-         |UNION ALL
-         |${arm("3_pii_clean", "s3")}
-         |UNION ALL
-         |${arm("4_len_band", "s4")}
-         |ORDER BY stage""".stripMargin
-    },
-    "q241_seq_packing" ->
-      s"""WITH RECURSIVE d AS (SELECT source,
-         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
-         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id)
-         |      AS rn
+    }),
+    // token-weighted quality quantiles: the median TOKEN's quality vs
+    // the median DOC's — integer-threshold exact selection
+    // q330: identical integer-threshold weighted quantiles in DuckDB
+    Query("q330_weighted_quantiles", (s, d) => weightedQuantiles(s, d),
+      s"""WITH m0 AS (SELECT doc_id, source, text, ${tokensS("text")} AS t
          |  FROM documents),
-         |p AS (
-         |  SELECT source, rn, toks, CAST(toks AS BIGINT) AS fill,
-         |    CAST(1 AS BIGINT) AS seq
-         |  FROM d WHERE rn = 1
-         |  UNION ALL
-         |  SELECT d.source, d.rn, d.toks,
-         |    CASE WHEN p.fill + d.toks <= 2048
-         |      THEN p.fill + d.toks ELSE CAST(d.toks AS BIGINT) END,
-         |    CASE WHEN p.fill + d.toks <= 2048 THEN p.seq ELSE p.seq + 1
-         |      END
-         |  FROM p JOIN d ON d.source = p.source AND d.rn = p.rn + 1)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(MAX(seq) AS INTEGER) AS n_seqs,
-         |  CAST(COUNT(CASE WHEN toks > 2048 THEN 1 END) AS INTEGER)
-         |    AS n_overflow,
-         |  CAST(SUM(toks) AS INTEGER) AS total_tokens,
-         |  round(CAST(SUM(toks) AS DOUBLE) / (MAX(seq) * 2048), 6)
-         |    AS utilization
-         |FROM p GROUP BY source ORDER BY source""".stripMargin,
-    "q240_pii_redact" -> {
-      val red = PiiPatterns.foldLeft("text") { case (e, (nm, p)) =>
-        s"regexp_replace($e, '$p', '<${nm.toUpperCase}>', 'g')" }
-      s"""WITH r AS (SELECT source, text, $red AS redacted FROM documents)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(COUNT(CASE WHEN redacted <> text THEN 1 END) AS INTEGER)
-         |    AS n_docs_changed,
-         |  bit_xor(${graft.functions.TextPrims.hex60S("md5(redacted)")})
-         |    AS xor_redacted,
-         |  bit_xor(${graft.functions.TextPrims.hex60S("md5(text)")})
-         |    AS xor_raw
-         |FROM r GROUP BY source ORDER BY source""".stripMargin
-    },
-    "q239_pii_scan" -> {
-      val cols = PiiPatterns.map { case (nm, p) =>
-        s"len(regexp_extract_all(text, '$p')) AS c_$nm" }.mkString(", ")
-      val aggs = PiiPatterns.map { case (nm, _) =>
-        s"""CAST(COUNT(CASE WHEN c_$nm > 0 THEN 1 END) AS INTEGER)
-           |      AS d_$nm,
-           |    CAST(SUM(c_$nm) AS INTEGER) AS h_$nm""".stripMargin
-      }.mkString(",\n    ")
-      val arms = PiiPatterns.map { case (nm, _) =>
-        s"""SELECT source, '$nm' AS pii_type, d_$nm AS n_docs_hit,
-           |  h_$nm AS n_hits FROM a""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH c AS (SELECT source, $cols FROM documents),
-         |a AS (SELECT source,
-         |    $aggs
-         |  FROM c GROUP BY source)
-         |$arms
-         |ORDER BY source, pii_type""".stripMargin
-    },
-    "q229_lang_kappa" ->
-      s"""WITH d AS (SELECT doc_id, lang, $T AS t FROM documents),
-         |sc AS (SELECT doc_id, lang, $langScoresS FROM d),
-         |p AS (SELECT lang, $langPredS AS pred_lang FROM sc),
-         |agree AS (SELECT COUNT(*) AS n,
-         |    SUM(CASE WHEN lang = pred_lang THEN 1 ELSE 0 END) AS na
-         |  FROM p),
-         |ma AS (SELECT lang, COUNT(*) AS ca FROM p GROUP BY lang),
-         |mb AS (SELECT pred_lang, COUNT(*) AS cb FROM p
-         |  GROUP BY pred_lang),
-         |pe AS (SELECT COALESCE(SUM(CAST(ca * cb AS DECIMAL(38,0))),
-         |    CAST(0 AS DECIMAL(38,0))) AS sab
-         |  FROM ma JOIN mb ON ma.lang = mb.pred_lang)
-         |SELECT CAST(n AS INTEGER) AS n,
-         |  round(CAST(na AS DOUBLE) / n, 6) AS p_observed,
-         |  round(CAST(sab AS DOUBLE) / (CAST(n AS DOUBLE) * n), 6)
-         |    AS p_expected,
-         |  round((CAST(na AS DOUBLE) / n -
-         |      CAST(sab AS DOUBLE) / (CAST(n AS DOUBLE) * n)) /
-         |    (1.0 - CAST(sab AS DOUBLE) / (CAST(n AS DOUBLE) * n)), 6)
-         |    AS kappa
-         |FROM agree, pe""".stripMargin,
-    "q228_quality_length_ols" ->
-      s"""WITH m0 AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |mq AS (SELECT doc_id, source, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |xy0 AS (SELECT source,
-         |    ${graft.functions.TextPrims.bpeTokensS("text")} AS toks,
-         |    $QualityScoreS AS y
-         |  FROM mq),
-         |xy AS (SELECT source, round(ln(CAST(toks AS DOUBLE)), 6) AS x, y
-         |  FROM xy0 WHERE toks > 0),
-         |m AS (SELECT source, CAST(COUNT(*) AS DOUBLE) AS n,
-         |    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS sxy,
-         |    CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS sxx,
-         |    CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS syy
-         |  FROM xy WHERE x IS NOT NULL GROUP BY source),
-         |sl AS (SELECT source, n, sx, sy, sxy, sxx, syy,
-         |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM m),
-         |ab AS (SELECT source, n, sx, sy, sxy, syy, b,
-         |    (sy - b * sx) / n AS a FROM sl)
-         |SELECT source, CAST(n AS INTEGER) AS n_docs,
-         |  round(b, 6) AS slope, round(a, 6) AS intercept,
-         |  round(1.0 - (syy - a * sy - b * sxy) / (syy - sy * sy / n), 6)
-         |    AS r2
-         |FROM ab ORDER BY source""".stripMargin,
-    "q225_position_quality" ->
-      s"""WITH m0 AS (SELECT doc_id,
-         |    CAST((s - 1) // 150 AS INTEGER) AS idx,
-         |    substr(text, CAST(s AS INTEGER), 200) AS text
-         |  FROM (SELECT doc_id, text,
-         |      unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
-         |    FROM documents)),
-         |m AS (SELECT doc_id, idx, text, $T AS t FROM m0),
-         |mm AS (SELECT doc_id, idx,
-         |    $qualityMeasureColsS
-         |  FROM m),
-         |q AS (SELECT doc_id, idx,
-         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS qu
-         |  FROM mm),
-         |w AS (SELECT *, MAX(idx) OVER (PARTITION BY doc_id) AS nc FROM q),
-         |p AS (SELECT CASE WHEN idx = 0 THEN '1_head'
-         |    WHEN idx = nc THEN '3_tail' ELSE '2_middle' END AS pos, qu
-         |  FROM w)
-         |SELECT pos, CAST(COUNT(*) AS INTEGER) AS n_chunks,
-         |  CAST(SUM(qu) AS DOUBLE) / COUNT(*) / 1000000.0 AS mean_quality
-         |FROM p GROUP BY pos ORDER BY pos""".stripMargin,
-    "q220_source_entropy" ->
-      s"""WITH tok AS (SELECT source, unnest($T) AS w FROM documents),
-         |tf AS (SELECT source, w, COUNT(*) AS c FROM tok
-         |  GROUP BY source, w),
-         |st AS (SELECT source, SUM(c) AS ct, COUNT(*) AS v FROM tf
-         |  GROUP BY source),
-         |g AS (SELECT w, SUM(c) AS cg FROM tf GROUP BY w),
-         |gt AS (SELECT SUM(cg) AS cgt FROM g),
-         |j AS (SELECT tf.source, ct, v,
-         |    CAST(c AS DOUBLE) / ct AS p,
-         |    CAST(cg AS DOUBLE) / cgt AS pg
-         |  FROM tf
-         |  JOIN st ON tf.source = st.source
-         |  JOIN g ON tf.w = g.w, gt),
-         |a AS (SELECT source, ANY_VALUE(ct) AS n_tokens,
-         |    ANY_VALUE(v) AS n_vocab,
-         |    SUM(CAST(round(-p * round(ln(p), 6), 12)
-         |      AS DECIMAL(28,12))) AS hsum,
-         |    SUM(CAST(round(p * round(ln(p / pg), 6), 12)
-         |      AS DECIMAL(28,12))) AS klsum
-         |  FROM j GROUP BY source)
-         |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |  CAST(n_vocab AS INTEGER) AS n_vocab,
-         |  round(CAST(hsum AS DOUBLE), 6) AS entropy,
-         |  round(CAST(klsum AS DOUBLE), 6) AS kl_vs_corpus
-         |FROM a ORDER BY source""".stripMargin,
-    "q221_token_burstiness" ->
-      s"""WITH perdoc AS (SELECT w, doc_id, COUNT(*) AS c FROM
-         |  (SELECT doc_id, unnest($T) AS w FROM documents)
-         |  GROUP BY w, doc_id),
-         |nd AS (SELECT COUNT(*) AS nn FROM documents),
-         |stats AS (SELECT w, COUNT(*) AS n_docs, SUM(c) AS sc,
-         |    SUM(CAST(c * c AS DECIMAL(38,0))) AS sc2
-         |  FROM perdoc GROUP BY w HAVING SUM(c) >= 50),
-         |f AS (SELECT w, n_docs, sc, sc2, CAST(nn AS DOUBLE) AS n FROM
-         |  stats, nd),
-         |m AS (SELECT w, n_docs, sc,
-         |    CAST(sc AS DOUBLE) / n AS mean,
-         |    (CAST(sc2 AS DOUBLE) - (CAST(sc AS DOUBLE) / n)
-         |      * (CAST(sc AS DOUBLE) / n) * n) / (n - 1) AS vr
-         |  FROM f)
-         |SELECT w AS token, CAST(sc AS INTEGER) AS n_occ,
-         |  CAST(n_docs AS INTEGER) AS n_docs,
-         |  round(vr / mean, 6) AS vmr
-         |FROM m ORDER BY vmr DESC, token LIMIT 20""".stripMargin,
-    "q219_code_switching" ->
-      s"""WITH t0 AS (SELECT doc_id,
-         |    ${tokensS("substr(text, CAST(s AS INTEGER), 200)")} AS t
-         |  FROM (SELECT doc_id, text,
-         |      unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
-         |    FROM documents)),
-         |sc AS (SELECT doc_id, $langScoresS FROM t0),
-         |p AS (SELECT doc_id, $langPredS AS pred_lang FROM sc),
-         |tot AS (SELECT doc_id, COUNT(*) AS n_chunks FROM p GROUP BY doc_id),
-         |per AS (SELECT doc_id, pred_lang, COUNT(*) AS c FROM p
-         |  WHERE pred_lang <> 'und' GROUP BY 1, 2),
-         |rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-         |    ORDER BY c DESC, pred_lang) AS rk FROM per),
-         |agg AS (SELECT doc_id, SUM(c) AS n_classified,
-         |    COUNT(*) AS n_langs,
-         |    MAX(CASE WHEN rk = 1 THEN pred_lang END) AS majority_lang,
-         |    MAX(CASE WHEN rk = 1 THEN c END) AS cmaj
-         |  FROM rk GROUP BY doc_id)
-         |SELECT tot.doc_id, CAST(n_chunks AS INTEGER) AS n_chunks,
-         |  CAST(COALESCE(n_langs, 0) AS INTEGER) AS n_langs,
-         |  majority_lang,
-         |  round(CAST(cmaj AS DOUBLE) / CAST(n_classified AS DOUBLE), 6)
-         |    AS majority_share,
-         |  CAST(COALESCE(n_langs, 0) >= 2 AND cmaj * 5 <= n_classified * 4
-         |    AS INTEGER) AS is_mixed
-         |FROM tot LEFT JOIN agg ON tot.doc_id = agg.doc_id
-         |ORDER BY tot.doc_id""".stripMargin,
-    "q216_pmi_collocations" ->
-      s"""WITH tok AS (SELECT doc_id, u.p AS p, t[u.p] AS w
-         |  FROM (SELECT doc_id, $T AS t FROM documents),
-         |    unnest(generate_series(1, len(t))) AS u(p)),
-         |uni AS (SELECT w, COUNT(*) AS cw FROM tok GROUP BY w),
-         |tot AS (SELECT SUM(cw) AS n FROM uni),
-         |big AS (SELECT w AS wa,
-         |    LEAD(w) OVER (PARTITION BY doc_id ORDER BY p) AS wb
-         |  FROM tok),
-         |cab AS (SELECT wa, wb, COUNT(*) AS cab FROM big
-         |  WHERE wb IS NOT NULL GROUP BY wa, wb HAVING COUNT(*) >= 5)
-         |SELECT wa, wb, CAST(cab AS INTEGER) AS n_ab,
-         |  round(ln(CAST(n AS DOUBLE) * cab /
-         |    (CAST(ua.cw AS DOUBLE) * ub.cw)), 6) AS pmi
-         |FROM cab
-         |JOIN uni ua ON cab.wa = ua.w
-         |JOIN uni ub ON cab.wb = ub.w, tot
-         |ORDER BY pmi DESC, wa, wb LIMIT 20""".stripMargin,
-    "q215_learning_ladder" -> {
-      val bkt = hex60S("md5(CAST(doc_id AS VARCHAR))") + " % 4096"
-      val steps = Seq(64, 16, 4, 1)
-      val sel = steps.map { den =>
-        val thr = 4096L / den
-        s"""SELECT '1/$den' AS step, CAST($thr AS BIGINT) AS threshold,
-           |  CAST(SUM(CASE WHEN b < $thr THEN 1 ELSE 0 END) AS INTEGER)
-           |    AS n_docs,
-           |  CAST(SUM(CASE WHEN b < $thr THEN toks ELSE 0 END) AS BIGINT)
-           |    AS total_tokens,
-           |  CAST(SUM(CASE WHEN b < $thr THEN qu ELSE 0 END) AS DOUBLE) /
-           |    SUM(CASE WHEN b < $thr THEN 1 ELSE 0 END) / 1000000.0
-           |    AS mean_quality
-           |FROM d""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |d AS (SELECT $bkt AS b,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
-         |      AS BIGINT) AS toks,
-         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS qu
-         |  FROM m)
-         |$sel
-         |ORDER BY threshold""".stripMargin
-    },
-    "q210_gini_concentration" ->
-      s"""WITH d AS (SELECT doc_id, source,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
-         |      AS BIGINT) AS toks
-         |  FROM documents),
-         |r AS (SELECT source, toks,
-         |    ROW_NUMBER() OVER (PARTITION BY source
-         |      ORDER BY toks, doc_id) AS i
-         |  FROM d),
-         |a AS (SELECT source, COUNT(*) AS n,
-         |    SUM(CAST(toks AS DECIMAL(38,0))) AS sx,
-         |    SUM(CAST(i AS DECIMAL(38,0)) * toks) AS six
-         |  FROM r GROUP BY source)
-         |SELECT source, CAST(n AS INTEGER) AS n_docs,
-         |  CAST(sx AS BIGINT) AS total_toks,
-         |  round(CAST(CAST(2 AS DECIMAL(38,0)) * six -
-         |      CAST(n + 1 AS DECIMAL(38,0)) * sx AS DOUBLE) /
-         |    CAST(CAST(n AS DECIMAL(38,0)) * sx AS DOUBLE), 6) AS gini
-         |FROM a ORDER BY source""".stripMargin,
-    "q207_quantile_calibration" -> {
-      val qsArr = (0 to 10).map(i => i / 10.0)
-      s"""WITH m0 AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id, source, text, t,
-         |    $qualityMeasureColsS
-         |  FROM m0),
-         |d AS (SELECT source,
-         |    CAST(CAST($QualityScoreS AS DECIMAL(18,6)) * 1000000
-         |      AS BIGINT) AS vq
-         |  FROM m),
-         |bysrc AS (SELECT source,
-         |    quantile_cont(vq, [${qsArr.mkString(", ")}]) AS qs
-         |  FROM d GROUP BY source),
-         |gl AS (SELECT quantile_cont(vq, [${qsArr.mkString(", ")}]) AS gq
-         |  FROM d),
-         |se AS (SELECT source, i - 1 AS i, qs[i] AS src_q
-         |  FROM bysrc, unnest(generate_series(1, 11)) AS u(i)),
-         |ge AS (SELECT i - 1 AS i, gq[i] AS glob_q
-         |  FROM gl, unnest(generate_series(1, 11)) AS u(i))
-         |SELECT source, CAST(se.i AS INTEGER) AS decile,
-         |  src_q / 1000000.0 AS src_q,
-         |  glob_q / 1000000.0 AS glob_q,
-         |  src_q / 1000000.0 - glob_q / 1000000.0 AS shift
-         |FROM se JOIN ge ON se.i = ge.i
-         |ORDER BY source, decile""".stripMargin
-    },
-    "q202_es_weighted_sample" ->
-      s"""WITH d AS (SELECT doc_id,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
-         |      AS BIGINT) AS toks
-         |  FROM documents),
-         |ks AS (SELECT doc_id, toks,
-         |    round(ln((${hex60S("md5('es#' || CAST(doc_id AS VARCHAR))")}
-         |      + 1.0) / 1152921504606846976.0), 9) / toks AS es_key
-         |  FROM d WHERE toks > 0),
-         |r AS (SELECT doc_id, toks, es_key,
-         |    CAST(ROW_NUMBER() OVER (ORDER BY es_key DESC, doc_id)
-         |      AS INTEGER) AS rk
-         |  FROM ks)
-         |SELECT doc_id, toks, es_key, rk FROM r
-         |WHERE rk <= 50 ORDER BY rk""".stripMargin,
-    "q200_release_gate" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
          |m AS (SELECT doc_id, source, text,
-         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
-         |      AS BIGINT) AS toks,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d),
-         |q AS (SELECT doc_id, source, text, toks, $QualityScoreS AS qs FROM m),
-         |e AS (SELECT source, COUNT(*) AS n_embedded FROM q
-         |  WHERE doc_id IN (SELECT vec_id FROM embeddings) GROUP BY 1),
-         |du AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_dup_docs FROM
-         |  (SELECT source, md5(text) AS h, COUNT(*) AS cnt FROM q
-         |   GROUP BY 1, 2) g
-         |  WHERE cnt > 1 GROUP BY 1),
-         |base AS (SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |    CAST(SUM(toks) AS BIGINT) AS total_tokens,
-         |    $meanQualityS AS mean_quality
-         |  FROM q GROUP BY 1),
-         |card AS (SELECT base.source, n_docs, total_tokens, mean_quality,
-         |    CAST(COALESCE(e.n_embedded, 0) AS BIGINT) AS n_embedded,
-         |    CAST(COALESCE(du.n_dup_docs, 0) AS BIGINT) AS n_dup_docs
-         |  FROM base LEFT JOIN e ON base.source = e.source
-         |  LEFT JOIN du ON base.source = du.source),
-         |g AS (SELECT *,
-         |    CAST(n_dup_docs AS DOUBLE) / CAST(n_docs AS DOUBLE) AS df,
-         |    CAST(n_embedded AS DOUBLE) / CAST(n_docs AS DOUBLE) AS ec
-         |  FROM card)
-         |SELECT source, n_docs, total_tokens,
-         |  round(df, 6) AS dup_frac, round(ec, 6) AS emb_cover,
-         |  mean_quality,
-         |  CAST(df < 0.05 AS INTEGER) AS gate_dup,
-         |  CAST(mean_quality >= 0.45 AS INTEGER) AS gate_quality,
-         |  CAST(ec >= 0.9 AS INTEGER) AS gate_coverage,
-         |  CAST(total_tokens >= 500 AS INTEGER) AS gate_volume,
-         |  CAST(df < 0.05 AND mean_quality >= 0.45 AND ec >= 0.9
-         |    AND total_tokens >= 500 AS INTEGER) AS release_ok
-         |FROM g ORDER BY source""".stripMargin,
-    "q196_token_waterfill" ->
-      s"""WITH caps AS (SELECT source,
-         |    SUM(CAST(${graft.functions.TextPrims.bpeTokensS("text")}
-         |      AS BIGINT)) AS cap
-         |  FROM documents GROUP BY source),
-         |tot AS (SELECT SUM(cap) AS total, COUNT(*) AS n FROM caps),
-         |rb AS (SELECT source, cap, n,
-         |    CAST(FLOOR(CAST(total AS DOUBLE) * 0.6) AS BIGINT) AS b,
-         |    ROW_NUMBER() OVER (ORDER BY cap, source) AS rk,
-         |    COALESCE(SUM(cap) OVER (ORDER BY cap, source
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS cum_before
-         |  FROM caps, tot),
-         |c AS (SELECT *, CASE WHEN CAST(cap AS DOUBLE) * (n - rk + 1) <=
-         |      CAST(b - cum_before AS DOUBLE) THEN 1 ELSE 0 END AS is_capped
-         |  FROM rb),
-         |lam AS (SELECT CAST(ANY_VALUE(b) -
-         |      COALESCE(SUM(CASE WHEN is_capped = 1 THEN cap END), 0)
-         |      AS DOUBLE) /
-         |    SUM(CASE WHEN is_capped = 0 THEN 1 ELSE 0 END) AS lambda
-         |  FROM c)
-         |SELECT source, CAST(cap AS BIGINT) AS cap,
-         |  CAST(CASE WHEN is_capped = 1 THEN cap
-         |    ELSE CAST(FLOOR(lambda) AS BIGINT) END AS BIGINT) AS allocated,
-         |  CAST(is_capped AS INTEGER) AS is_capped
-         |FROM c, lam ORDER BY source""".stripMargin,
-    "q193_dsir_weights" ->
-      s"""WITH m0 AS (SELECT doc_id, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id, text, t,
          |    $qualityMeasureColsS
          |  FROM m0),
-         |qd AS (SELECT doc_id, t,
-         |    CASE WHEN $QualityScoreS >= 0.5 THEN 1 ELSE 0 END AS tgt
+         |p AS (SELECT doc_id, source,
+         |    CAST(CAST($qualityScoreExprS AS DECIMAL(18,6)) * 1000000
+         |      AS BIGINT) AS qmu,
+         |    CAST(${bpeTokensS("text")} AS BIGINT) AS w
          |  FROM m),
-         |g0 AS (SELECT doc_id, tgt, unnest(${shinglesS("t", 2)}) AS g
-         |  FROM qd),
-         |g AS (SELECT doc_id, tgt, ${hex60S("md5(g)")} % 4096 AS b FROM g0),
-         |model AS (SELECT b, SUM(tgt) AS cbt, COUNT(*) AS cbr
-         |  FROM g GROUP BY b),
-         |tot AS (SELECT SUM(cbt) AS tt, SUM(cbr) AS tr FROM model),
-         |lr AS (SELECT b, round(ln(
-         |    ((cbt + 0.5) / (tt + 2048.0)) /
-         |    ((cbr + 0.5) / (tr + 2048.0))), 6) AS lr
-         |  FROM model, tot),
-         |sc AS (SELECT doc_id, COUNT(*) AS n_grams,
-         |    SUM(CAST(lr AS DECIMAL(18,6))) AS slr
-         |  FROM g JOIN lr ON g.b = lr.b GROUP BY doc_id)
-         |SELECT doc_id, CAST(n_grams AS INTEGER) AS n_grams,
-         |  CAST(slr AS DOUBLE) / n_grams AS avg_log_ratio
-         |FROM sc ORDER BY avg_log_ratio DESC, doc_id LIMIT 50""".stripMargin,
-    "q192_split_token_drift" ->
-      s"""WITH tok AS (SELECT lang,
-         |    CASE WHEN ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
-         |      THEN 1 ELSE 0 END AS tr,
-         |    unnest($T) AS t
+         |c AS (SELECT source, doc_id, qmu, w,
+         |    SUM(w) OVER (PARTITION BY source ORDER BY qmu, doc_id
+         |      ROWS UNBOUNDED PRECEDING) AS cw,
+         |    COUNT(*) OVER (PARTITION BY source ORDER BY qmu, doc_id
+         |      ROWS UNBOUNDED PRECEDING) AS cn,
+         |    SUM(w) OVER (PARTITION BY source) AS tw,
+         |    COUNT(*) OVER (PARTITION BY source) AS tn
+         |  FROM p)
+         |SELECT source, CAST(MAX(tn) AS BIGINT) AS n_docs,
+         |  CAST(MAX(tw) AS BIGINT) AS n_tokens,
+         |  round(MIN(CASE WHEN cn * 2 >= tn THEN qmu END) / 1000000.0, 6)
+         |    AS q50_doc,
+         |  round(MIN(CASE WHEN cw * 4 >= tw THEN qmu END) / 1000000.0, 6)
+         |    AS q25_tok,
+         |  round(MIN(CASE WHEN cw * 2 >= tw THEN qmu END) / 1000000.0, 6)
+         |    AS q50_tok,
+         |  round(MIN(CASE WHEN cw * 4 >= tw * 3 THEN qmu END) / 1000000.0, 6)
+         |    AS q75_tok
+         |FROM c GROUP BY source ORDER BY source""".stripMargin),
+    // exact heavy hitters: per-partition Misra-Gries + exact recount
+    // q357: the brute-force groupBy + HAVING the two-pass sketch route
+    // must reproduce exactly
+    Query("q357_heavy_hitters", (s, d) => heavyHitters(s, d),
+      s"""WITH toks AS (SELECT unnest(${tokensS("text")}) AS tok
          |  FROM documents),
-         |cnt AS (SELECT lang, t, SUM(tr) AS ct, SUM(1 - tr) AS ch
-         |  FROM tok GROUP BY lang, t),
-         |tot AS (SELECT lang, SUM(ct) AS tt, SUM(ch) AS th,
-         |    COUNT(*) AS v FROM cnt GROUP BY lang),
-         |pq AS (SELECT cnt.lang,
-         |    (ct + 0.5) / (tt + 0.5 * v) AS p,
-         |    (ch + 0.5) / (th + 0.5 * v) AS q,
-         |    tt, th, v
-         |  FROM cnt JOIN tot ON cnt.lang = tot.lang),
-         |m AS (SELECT lang, tt, th, v, p, q, (p + q) / 2 AS m FROM pq),
-         |agg AS (SELECT lang, ANY_VALUE(v) AS n_vocab,
-         |    ANY_VALUE(tt) AS n_train_tokens, ANY_VALUE(th) AS n_held_tokens,
-         |    SUM(CAST(round(p * round(ln(p / m), 6), 12)
-         |      AS DECIMAL(28,12))) AS sp,
-         |    SUM(CAST(round(q * round(ln(q / m), 6), 12)
-         |      AS DECIMAL(28,12))) AS sq
-         |  FROM m GROUP BY lang)
-         |SELECT lang, CAST(n_vocab AS INTEGER) AS n_vocab,
-         |  CAST(n_train_tokens AS BIGINT) AS n_train_tokens,
-         |  CAST(n_held_tokens AS BIGINT) AS n_held_tokens,
-         |  round(CAST(sp + sq AS DOUBLE) * 0.5, 6) AS js_divergence
-         |FROM agg ORDER BY lang""".stripMargin,
-    "q189_source_vocab_cosine" ->
-      s"""WITH tok AS (SELECT source, unnest($T) AS t FROM documents),
-         |tf AS (SELECT source, t, COUNT(*) AS c FROM tok
-         |  GROUP BY source, t),
-         |norms AS (SELECT source, SUM(c * c) AS n2 FROM tf GROUP BY source),
-         |dots AS (SELECT a.source AS src_a, b.source AS src_b,
-         |    SUM(a.c * b.c) AS dot
-         |  FROM tf a JOIN tf b ON a.t = b.t AND a.source < b.source
+         |nn AS (SELECT COUNT(*) AS n FROM toks)
+         |SELECT tok, COUNT(*) AS cnt,
+         |  round(CAST(COUNT(*) AS DOUBLE)
+         |    / CAST((SELECT n FROM nn) AS DOUBLE), 9) AS frac
+         |FROM toks GROUP BY tok
+         |HAVING COUNT(*) * $HhK > (SELECT n FROM nn)
+         |ORDER BY cnt DESC, tok""".stripMargin),
+    // word2vec-style negative sampling: capped integer sampling table,
+    // seeded 60-bit draws, broadcast interval probe
+    // q361: identical integer sampling table + 60-bit md5 draws
+    Query("q361_negative_sampling", (s, d) => negativeSampling(s, d),
+      s"""WITH toks AS (SELECT unnest(${tokensS("text")}) AS tok
+         |  FROM documents),
+         |counts AS (SELECT tok, COUNT(*) AS w FROM toks GROUP BY tok),
+         |top AS (SELECT tok, w FROM counts
+         |  ORDER BY w DESC, tok LIMIT $NsVocab),
+         |cum AS (SELECT tok, w, COALESCE(SUM(w) OVER (ORDER BY tok
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |    AS lo FROM top),
+         |tot AS (SELECT SUM(w) AS t FROM top),
+         |spine AS (SELECT unnest(generate_series(0, ${NsSamples - 1}))
+         |    AS si),
+         |-- the draw column must not be named i: hex60S expands to a
+         |-- list_transform whose lambda variable is i and would shadow it
+         |draws AS (SELECT
+         |    ${hex60S("md5('ns#' || CAST(si AS VARCHAR))")}
+         |      % (SELECT t FROM tot) AS u FROM spine),
+         |hit AS (SELECT c.tok, c.w FROM draws d JOIN cum c
+         |  ON d.u >= c.lo AND d.u < c.lo + c.w)
+         |SELECT tok, CAST(COUNT(*) AS INTEGER) AS n_drawn, MAX(w) AS w,
+         |  round(CAST(MAX(w) AS DOUBLE)
+         |    / CAST((SELECT t FROM tot) AS DOUBLE) * $NsSamples, 6)
+         |    AS expected
+         |FROM hit GROUP BY tok
+         |ORDER BY n_drawn DESC, tok""".stripMargin),
+    // native NFC normalization expression vs DuckDB's utf8proc builtin
+    // q378: DuckDB's utf8proc NFC vs the JDK Normalizer — same planted
+    // suffixes, same census, fingerprint over the normalized bytes
+    Query("q378_nfc_census", nfcCensus _, {
+      s"""WITH d AS (SELECT lang,
+         |    text || CASE CAST(doc_id % 4 AS INTEGER)
+         |      WHEN 1 THEN 'e' || chr(769)
+         |      WHEN 2 THEN chr(8491)
+         |      WHEN 3 THEN 'A' || chr(778) || chr(64257)
+         |      ELSE '' END AS dtext
+         |  FROM documents),
+         |n AS (SELECT lang, dtext, nfc_normalize(dtext) AS norm FROM d),
+         |h AS (SELECT lang, dtext, norm, ${hex60S("md5(norm)")} AS h
+         |  FROM n)
+         |SELECT lang, CAST(COUNT(*) AS INTEGER) AS n_docs,
+         |  CAST(SUM(CASE WHEN norm <> dtext THEN 1 ELSE 0 END)
+         |    AS INTEGER) AS n_changed,
+         |  CAST(SUM(length(dtext) - length(norm)) AS BIGINT)
+         |    AS delta_chars,
+         |  bit_xor(h) AS xor_fp
+         |FROM h GROUP BY lang ORDER BY lang""".stripMargin
+    }),
+    // Count-Min inner-product join-size estimate vs exact self-join size
+    // q381: same seeded buckets, same integer counters, squares cast
+    // to DECIMAL(38,0) before the multiply on both engines
+    Query("q381_cm_join_size", (s, d) => cmJoinSize(s, d), {
+      val (d, w) = (4, 1024)
+      val bucketRows = (0 until d).map(j =>
+        s"SELECT $j AS j, (${hex60S(seededMd5S(j, "k"))}) % $w AS b, c FROM kc")
+        .mkString("\nUNION ALL\n")
+      s"""WITH kc AS (SELECT CAST(user_id AS VARCHAR) AS k,
+         |    COUNT(*) AS c FROM events GROUP BY 1),
+         |ex AS (SELECT CAST(SUM(CAST(c AS DECIMAL(38,0))
+         |    * CAST(c AS DECIMAL(38,0))) AS BIGINT) AS exact_j
+         |  FROM kc),
+         |jb AS ($bucketRows),
+         |sk AS (SELECT j, b, SUM(c) AS counter FROM jb GROUP BY j, b),
+         |ip AS (SELECT j, SUM(CAST(counter AS DECIMAL(38,0))
+         |    * CAST(counter AS DECIMAL(38,0))) AS ip FROM sk GROUP BY j),
+         |es AS (SELECT CAST(MIN(ip) AS BIGINT) AS est_j FROM ip)
+         |SELECT exact_j, est_j,
+         |  est_j - exact_j AS overcount,
+         |  round(CAST(est_j - exact_j AS DOUBLE)
+         |    / CAST(exact_j AS DOUBLE), 9) AS rel_err
+         |FROM es CROSS JOIN ex""".stripMargin
+    }),
+    // KMV bottom-k distinct sketch: per-source + merged-union estimates
+    // q383: same shingles, same 60-bit hashes, same k-smallest windows
+    // (the oracle pays the sort the engine's top-k rewrite avoids)
+    Query("q383_kmv_distinct", (s, d) => kmvDistinct(s, d), {
+      val k = 128
+      val t = tokensS("text")
+      s"""WITH d AS (SELECT source, $t AS t FROM documents
+         |  WHERE source IN ('src1', 'src2')),
+         |sh AS (SELECT DISTINCT source, s FROM
+         |  (SELECT source, unnest(${shinglesS("t", 3)}) AS s FROM d)),
+         |hs AS (SELECT source, ${hex60S("md5(s)")} AS h FROM sh),
+         |sk AS (SELECT source, h FROM (SELECT source, h,
+         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn
+         |  FROM hs) WHERE rn <= $k),
+         |mg AS (SELECT 'union' AS scope, h FROM (SELECT h,
+         |    ROW_NUMBER() OVER (ORDER BY h) AS rn
+         |  FROM (SELECT DISTINCT h FROM sk)) WHERE rn <= $k),
+         |alls AS (SELECT source AS scope, h FROM sk
+         |  UNION ALL SELECT scope, h FROM mg),
+         |kth AS (SELECT scope, COUNT(*) AS n_sk, MAX(h) AS kth_hash
+         |  FROM alls GROUP BY scope),
+         |ex AS (SELECT source AS scope, COUNT(DISTINCT h) AS n_exact
+         |    FROM hs GROUP BY source
+         |  UNION ALL SELECT 'union', COUNT(DISTINCT h) FROM hs),
+         |es AS (SELECT scope, n_exact, kth_hash,
+         |    CASE WHEN n_sk < $k THEN CAST(n_sk AS DOUBLE)
+         |      ELSE ${k - 1}.0 * 1152921504606846976.0
+         |        / CAST(kth_hash AS DOUBLE) END AS e
+         |  FROM kth JOIN ex USING (scope))
+         |SELECT scope, n_exact, kth_hash, round(e, 6) AS est,
+         |  round((e - CAST(n_exact AS DOUBLE))
+         |    / CAST(n_exact AS DOUBLE), 6) AS rel_err
+         |FROM es ORDER BY scope""".stripMargin
+    }),
+    // document-level co-occurrence PMI over a bounded top-df vocabulary
+    // q387: same presence counts, same bounded top-df vocabulary, same
+    // ln-round-6 PMI shape
+    Query("q387_cooc_pmi", (s, d) => coocPmi(s, d), {
+      val t = tokensS("text")
+      s"""WITH pres AS (SELECT DISTINCT doc_id, tok FROM
+         |    (SELECT doc_id, unnest($t) AS tok FROM documents)
+         |  WHERE length(tok) > 0),
+         |top AS (SELECT tok, COUNT(*) AS df FROM pres GROUP BY tok
+         |  ORDER BY df DESC, tok LIMIT $CoocVocab),
+         |kept AS (SELECT doc_id, p.tok FROM pres p JOIN top USING (tok)),
+         |nn AS (SELECT COUNT(*) AS n FROM documents),
+         |pairs AS (SELECT a.tok AS tok_a, b.tok AS tok_b,
+         |    COUNT(*) AS c_ab
+         |  FROM kept a JOIN kept b ON a.doc_id = b.doc_id
+         |    AND a.tok < b.tok
          |  GROUP BY 1, 2)
-         |SELECT src_a, src_b,
-         |  round(CAST(dot AS DOUBLE) /
-         |    (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))),
-         |    6) AS cosine
-         |FROM dots
-         |JOIN norms na ON dots.src_a = na.source
-         |JOIN norms nb ON dots.src_b = nb.source
-         |ORDER BY src_a, src_b""".stripMargin,
-    "q182_chunk_docs" ->
-      """WITH c AS (SELECT doc_id, text,
-        |    unnest(range(1, greatest(length(text), 1) + 1, 150)) AS s
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST((s - 1) / 150 AS INTEGER) AS chunk_idx,
-        |  CAST(s AS INTEGER) AS start,
-        |  CAST(length(substr(text, CAST(s AS INTEGER), 200)) AS INTEGER)
-        |    AS chunk_chars,
-        |  md5(substr(text, CAST(s AS INTEGER), 200)) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q184_naive_bayes_lang" ->
-      s"""WITH d AS (SELECT doc_id, lang, text,
-         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
-         |      AS is_train
+         |SELECT tok_a, tok_b, CAST(c_ab AS INTEGER) AS n_docs_both,
+         |  round(ln(CAST(n AS DOUBLE) * c_ab
+         |    / (CAST(ta.df AS DOUBLE) * CAST(tb.df AS DOUBLE))), 6)
+         |    AS pmi
+         |FROM pairs
+         |JOIN top ta ON ta.tok = tok_a
+         |JOIN top tb ON tb.tok = tok_b
+         |CROSS JOIN nn
+         |ORDER BY pmi DESC, tok_a, tok_b LIMIT 20""".stripMargin
+    }),
+    // Heaps'-law vocab growth: first-slice occurrence + bounded cum frame
+    // q389: NTILE over the unique doc_id (DuckDB semantics == the
+    // engine's two-pass ntileByKey), min-slice first occurrence, same
+    // bounded cumulative frame
+    Query("q389_heaps_curve", (s, d) => heapsCurve(s, d), {
+      val t = tokensS("text")
+      s"""WITH sl AS (SELECT doc_id,
+         |    NTILE($HeapsSlices) OVER (ORDER BY doc_id) AS slice
          |  FROM documents),
-         |tok AS (SELECT doc_id, lang, is_train, unnest($T) AS t FROM d),
-         |tt AS (SELECT * FROM tok WHERE is_train),
-         |vocab AS (SELECT DISTINCT t FROM tt),
-         |vs AS (SELECT COUNT(*) AS v FROM vocab),
-         |tot AS (SELECT lang, COUNT(*) AS tot FROM tt GROUP BY lang),
-         |ntr AS (SELECT COUNT(*) AS ntr FROM d WHERE is_train),
-         |cls0 AS (SELECT lang, COUNT(*) AS nd FROM d WHERE is_train
-         |  GROUP BY lang),
-         |cls AS (SELECT c.lang AS cls,
-         |    CAST(round(ln(CAST(c.nd AS DOUBLE) / CAST(n.ntr AS DOUBLE)),
-         |      6) AS DECIMAL(18,6)) AS prior,
-         |    CAST(round(ln(CAST(1 AS DOUBLE) /
-         |      CAST(t.tot + v.v AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lp0
-         |  FROM cls0 c JOIN tot t ON c.lang = t.lang
-         |  CROSS JOIN ntr n CROSS JOIN vs v),
-         |lp AS (SELECT ct.lang AS cls, ct.t,
-         |    CAST(round(ln(CAST(ct.cnt + 1 AS DOUBLE) /
-         |      CAST(t.tot + v.v AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lp
-         |  FROM (SELECT lang, t, COUNT(*) AS cnt FROM tt
-         |    GROUP BY lang, t) ct
-         |  JOIN tot t ON ct.lang = t.lang CROSS JOIN vs v),
-         |tcv AS (SELECT doc_id, t, COUNT(*) AS cnt FROM tok
-         |  WHERE NOT is_train AND t IN (SELECT t FROM vocab)
-         |  GROUP BY doc_id, t),
-         |niv AS (SELECT doc_id, SUM(cnt) AS n_iv FROM tcv GROUP BY doc_id),
-         |seen AS (SELECT tcv.doc_id, lp.cls, SUM(tcv.cnt * lp.lp) AS slp,
-         |    SUM(tcv.cnt) AS seen_cnt
-         |  FROM tcv JOIN lp ON tcv.t = lp.t GROUP BY 1, 2),
-         |sc AS (SELECT td.doc_id, td.true_lang, c.cls,
-         |    c.prior + COALESCE(s.slp, CAST(0 AS DECIMAL(18,6)))
-         |      + (COALESCE(n.n_iv, 0) - COALESCE(s.seen_cnt, 0)) * c.lp0
-         |      AS score
-         |  FROM (SELECT doc_id, lang AS true_lang FROM d
-         |    WHERE NOT is_train) td
-         |  CROSS JOIN cls c
-         |  LEFT JOIN niv n ON td.doc_id = n.doc_id
-         |  LEFT JOIN seen s ON td.doc_id = s.doc_id AND c.cls = s.cls),
-         |pr AS (SELECT doc_id, true_lang, cls,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY score DESC, cls) AS rn
-         |  FROM sc)
-         |SELECT true_lang, cls AS pred_lang, COUNT(*) AS n
-         |FROM pr WHERE rn = 1 GROUP BY 1, 2
-         |ORDER BY true_lang, pred_lang""".stripMargin,
-    "q185_bigram_ppl" ->
+         |toks AS (SELECT d.doc_id, sl.slice, tok FROM
+         |    (SELECT doc_id, unnest($t) AS tok FROM documents) d
+         |  JOIN sl ON d.doc_id = sl.doc_id
+         |  WHERE length(tok) > 0),
+         |ps AS (SELECT slice, COUNT(DISTINCT doc_id) AS nd,
+         |    COUNT(*) AS ntok FROM toks GROUP BY slice),
+         |nv AS (SELECT fs AS slice, COUNT(*) AS nv FROM
+         |    (SELECT tok, MIN(slice) AS fs FROM toks GROUP BY tok)
+         |  GROUP BY fs)
+         |SELECT CAST(ps.slice AS INTEGER) AS slice,
+         |  CAST(SUM(nd) OVER (ORDER BY ps.slice) AS INTEGER) AS cum_docs,
+         |  CAST(SUM(ntok) OVER (ORDER BY ps.slice) AS BIGINT)
+         |    AS cum_tokens,
+         |  CAST(SUM(COALESCE(nv.nv, 0)) OVER (ORDER BY ps.slice)
+         |    AS BIGINT) AS cum_vocab,
+         |  round(CAST(SUM(COALESCE(nv.nv, 0)) OVER (ORDER BY ps.slice)
+         |      AS DOUBLE)
+         |    / CAST(SUM(ntok) OVER (ORDER BY ps.slice) AS DOUBLE), 9)
+         |    AS type_token_ratio
+         |FROM ps LEFT JOIN nv ON ps.slice = nv.slice
+         |ORDER BY ps.slice""".stripMargin
+    }),
+    // interpolated Kneser-Ney bigram perplexity: the CCNet-style
+    // LM-quality filter, all stats from one bigram-type frame
+    // q402: interpolated Kneser-Ney, association pinned to the engine's
+    // double expression shape; D=0.75 exact in binary
+    Query("q402_kn_perplexity", (s, d) => knPerplexity(s, d),
       s"""WITH d AS (SELECT doc_id, source, $T AS t,
          |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
          |      AS is_train
@@ -4809,661 +5454,99 @@ object TextOps {
          |tr AS (SELECT * FROM b0 WHERE is_train),
          |vocab AS (SELECT DISTINCT cur AS w FROM tr),
          |vs AS (SELECT COUNT(*) + 1 AS v FROM vocab),
-         |c1 AS (SELECT prev, COUNT(*) AS c1 FROM tr GROUP BY prev),
          |c2 AS (SELECT prev, cur, COUNT(*) AS c2 FROM tr
          |  GROUP BY prev, cur),
+         |c1 AS (SELECT prev, SUM(c2) AS c1, COUNT(*) AS n1f FROM c2
+         |  GROUP BY prev),
+         |n1r AS (SELECT cur, COUNT(*) AS n1r FROM c2 GROUP BY cur),
+         |n1a AS (SELECT COUNT(*) AS n1all FROM c2),
          |te AS (SELECT doc_id, source,
          |    CASE WHEN prev = '<s>' OR prev IN (SELECT w FROM vocab)
          |      THEN prev ELSE '<unk>' END AS p,
          |    CASE WHEN cur IN (SELECT w FROM vocab)
          |      THEN cur ELSE '<unk>' END AS c
          |  FROM b0 WHERE NOT is_train),
-         |lp AS (SELECT doc_id, source,
-         |    CAST(round(ln(CAST(COALESCE(c2.c2, 0) + 1 AS DOUBLE) /
-         |      CAST(COALESCE(c1.c1, 0) + vs.v AS DOUBLE)), 6)
-         |      AS DECIMAL(18,6)) AS lp
-         |  FROM te CROSS JOIN vs
+         |sc AS (SELECT doc_id, source, c2.c2 AS cb, c1.c1 AS c1v,
+         |    c1.n1f AS n1f, n1r.n1r AS n1rv, vs.v AS v,
+         |    n1a.n1all AS n1all
+         |  FROM te CROSS JOIN vs CROSS JOIN n1a
          |  LEFT JOIN c2 ON te.p = c2.prev AND te.c = c2.cur
-         |  LEFT JOIN c1 ON te.p = c1.prev)
-         |SELECT doc_id, source, COUNT(*) AS n_bigrams,
-         |  round(exp(-CAST(SUM(lp) AS DOUBLE) / COUNT(*)), 6) AS ppl
-         |FROM lp GROUP BY doc_id, source ORDER BY doc_id""".stripMargin,
-    "q186_length_batches" ->
-      s"""WITH d AS (SELECT doc_id, len($T) AS nt FROM documents),
-         |b AS (SELECT doc_id, nt,
-         |    CAST(CASE WHEN nt <= 16 THEN 16 WHEN nt <= 32 THEN 32
-         |      WHEN nt <= 64 THEN 64 WHEN nt <= 128 THEN 128
-         |      WHEN nt <= 256 THEN 256 ELSE 512 END AS INTEGER)
-         |      AS bucket_cap
-         |  FROM d),
-         |r AS (SELECT bucket_cap, nt,
-         |    CAST((ROW_NUMBER() OVER (PARTITION BY bucket_cap
-         |      ORDER BY doc_id) - 1) // 8 AS INTEGER) AS batch_idx
-         |  FROM b)
-         |SELECT bucket_cap, batch_idx,
-         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(MAX(nt) AS INTEGER) AS batch_max,
-         |  CAST(SUM(nt) AS BIGINT) AS sum_tokens,
-         |  round(CAST(SUM(nt) AS DOUBLE) /
-         |    CAST(COUNT(*) * MAX(nt) AS DOUBLE), 6) AS fill_pct
-         |FROM r GROUP BY bucket_cap, batch_idx
-         |ORDER BY bucket_cap, batch_idx""".stripMargin,
-    "q160_split_manifest" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t,
-         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 AS bucket
-         |  FROM documents),
-         |m AS (SELECT doc_id, source, text, bucket,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")}
-         |      AS BIGINT) AS toks,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d),
-         |q AS (SELECT source,
-         |    CASE WHEN bucket < 80 THEN 'train'
-         |      WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         |    toks, $QualityScoreS AS qs
-         |  FROM m)
-         |SELECT source, split, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS total_tokens,
-         |  $meanQualityS AS mean_quality
-         |FROM q GROUP BY 1, 2 ORDER BY source, split""".stripMargin,
-    "q150_dataset_card" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id, source, text,
-         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
-         |      AS BIGINT) AS toks,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d),
-         |q AS (SELECT doc_id, source, text, toks, $QualityScoreS AS qs FROM m),
-         |e AS (SELECT source, COUNT(*) AS n_embedded FROM q
-         |  WHERE doc_id IN (SELECT vec_id FROM embeddings) GROUP BY 1),
-         |du AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_dup_docs FROM
-         |  (SELECT source, md5(text) AS h, COUNT(*) AS cnt FROM q
-         |   GROUP BY 1, 2) g
-         |  WHERE cnt > 1 GROUP BY 1),
-         |base AS (SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |    CAST(SUM(toks) AS BIGINT) AS total_tokens,
-         |    $meanQualityS AS mean_quality
-         |  FROM q GROUP BY 1)
-         |SELECT base.source, n_docs, total_tokens, mean_quality,
-         |  CAST(COALESCE(e.n_embedded, 0) AS BIGINT) AS n_embedded,
-         |  CAST(COALESCE(du.n_dup_docs, 0) AS BIGINT) AS n_dup_docs
-         |FROM base LEFT JOIN e ON base.source = e.source
-         |LEFT JOIN du ON base.source = du.source
-         |ORDER BY base.source""".stripMargin,
-    "q144_pps_sample" ->
-      s"""WITH m AS (SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
-         |      AS BIGINT) AS toks
-         |  FROM documents),
-         |f AS (SELECT * FROM m WHERE toks > 0),
-         |c AS (SELECT doc_id, source, toks,
-         |    SUM(toks) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         |    SUM(toks) OVER (PARTITION BY source) AS t_src
-         |  FROM f),
-         |h AS (SELECT *, (cum * 10 + t_src - 1) // t_src
-         |    - ((cum - toks) * 10 + t_src - 1) // t_src AS hits FROM c)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS total_toks,
-         |  CAST(SUM(hits) AS BIGINT) AS n_draws,
-         |  CAST(SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_docs_sampled,
-         |  CAST(MAX(hits) AS BIGINT) AS max_hits
-         |FROM h GROUP BY source ORDER BY source""".stripMargin,
-    "q145_sequence_packing" ->
-      s"""WITH m AS (SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
-         |      AS BIGINT) AS toks
-         |  FROM documents),
-         |f AS (SELECT * FROM m WHERE toks > 0),
-         |c AS (SELECT doc_id, source, toks,
-         |    SUM(toks) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM f),
-         |x AS (SELECT *, CASE WHEN (cum - toks) // 512 <> (cum - 1) // 512
-         |    THEN 1 ELSE 0 END AS crosses FROM c)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS total_toks,
-         |  CAST((SUM(toks) + 511) // 512 AS BIGINT) AS n_bins,
-         |  CAST(SUM(crosses) AS INTEGER) AS n_boundary_docs,
-         |  CAST(((SUM(toks) - 1) % 512 + 1) * 100 // 512 AS INTEGER)
-         |    AS last_bin_fill_pct
-         |FROM x GROUP BY source ORDER BY source""".stripMargin,
-    "q138_boilerplate_df" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |g AS (SELECT doc_id, source, x AS sh
-         |  FROM d, unnest(${shinglesS("t", 2)}) AS u(x)),
-         |sc AS (SELECT source, COUNT(*) AS n_docs_src
-         |  FROM documents GROUP BY 1),
-         |df AS (SELECT source, sh, COUNT(DISTINCT doc_id) AS df
-         |  FROM g GROUP BY 1, 2),
-         |b AS (SELECT df.source, df.sh FROM df JOIN sc USING (source)
-         |  WHERE df.df * 100 >= sc.n_docs_src * 50),
-         |pd AS (SELECT g.doc_id, g.source, COUNT(*) AS total_pos,
-         |    SUM(CASE WHEN b.sh IS NOT NULL THEN 1 ELSE 0 END) AS boiler_pos
-         |  FROM g LEFT JOIN b ON g.source = b.source AND g.sh = b.sh
-         |  GROUP BY 1, 2),
-         |nb AS (SELECT source, CAST(COUNT(*) AS INTEGER) AS n_boiler_grams
-         |  FROM b GROUP BY 1)
-         |SELECT pd.source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(total_pos) AS BIGINT) AS total_positions,
-         |  CAST(SUM(boiler_pos) AS BIGINT) AS boiler_positions,
-         |  round(CAST(SUM(boiler_pos) AS DOUBLE)
-         |    / CAST(SUM(total_pos) AS DOUBLE), 6) AS micro_boiler_ratio,
-         |  CAST(SUM(CASE WHEN boiler_pos * 2 > total_pos THEN 1 ELSE 0 END)
-         |    AS INTEGER) AS n_docs_flagged,
-         |  COALESCE(ANY_VALUE(nb.n_boiler_grams), 0) AS n_boiler_grams
-         |FROM pd LEFT JOIN nb ON pd.source = nb.source
-         |GROUP BY pd.source ORDER BY pd.source""".stripMargin,
-    "q140_temperature_mix" ->
-      """WITH s AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT source, n, sqrt(CAST(n AS DOUBLE)) AS wt FROM s),
-        |q AS (SELECT source, n, wt,
-        |    CAST(FLOOR(wt * 1000000.0) AS BIGINT) AS wtq FROM w),
-        |t AS (SELECT source, n, wt, wtq,
-        |    SUM(wtq) OVER () AS totq FROM q)
-        |SELECT source, CAST(n AS INTEGER) AS n_docs,
-        |  round(wt, 6) AS weight,
-        |  round(CAST(wtq AS DOUBLE) / CAST(totq AS DOUBLE), 6) AS share,
-        |  CAST(FLOOR(5000.0 * (CAST(wtq AS DOUBLE) / CAST(totq AS DOUBLE)))
-        |    AS BIGINT) AS n_target
-        |FROM t ORDER BY source""".stripMargin,
-    "q133_repetition_ratio" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |g AS (SELECT doc_id, source, x AS sh
-         |  FROM d, unnest(${shinglesS("t", 3)}) AS u(x)),
-         |pd AS (SELECT doc_id, source, COUNT(*) AS n_grams,
-         |    COUNT(DISTINCT sh) AS n_distinct
-         |  FROM g GROUP BY 1, 2)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(n_grams) AS BIGINT) AS total_grams,
-         |  CAST(SUM(n_distinct) AS BIGINT) AS distinct_grams,
-         |  round(1.0 - CAST(SUM(n_distinct) AS DOUBLE)
-         |    / CAST(SUM(n_grams) AS DOUBLE), 6) AS micro_rep_ratio,
-         |  CAST(SUM(CASE WHEN 1.0 - CAST(n_distinct AS DOUBLE)
-         |      / CAST(n_grams AS DOUBLE) >= 0.2
-         |    THEN 1 ELSE 0 END) AS INTEGER) AS n_repetitive
-         |FROM pd GROUP BY source ORDER BY source""".stripMargin,
-    "q136_token_budget_mix" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
-         |      AS BIGINT) AS toks,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d),
-         |q AS (SELECT doc_id, source, toks, $QualityScoreS AS q FROM m),
-         |c AS (SELECT doc_id, source, toks,
-         |    SUM(toks) OVER (PARTITION BY source ORDER BY q DESC, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_toks
-         |  FROM q)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS total_tokens,
-         |  CAST(SUM(CASE WHEN cum_toks <= 2000 THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_kept,
-         |  CAST(SUM(CASE WHEN cum_toks <= 2000 THEN toks ELSE 0 END) AS BIGINT)
-         |    AS kept_tokens
-         |FROM c GROUP BY source ORDER BY source""".stripMargin,
-    "q100_pipeline_composite" ->
-      s"""WITH d AS (SELECT doc_id, source, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id, source, text,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d),
-         |q AS (SELECT doc_id, source, text,
-         |    $QualityScoreS AS quality_score
-         |  FROM m),
-         |k AS (SELECT *, percent_rank() OVER
-         |        (PARTITION BY source ORDER BY quality_score, doc_id) AS pr
-         |  FROM q),
-         |kept AS (SELECT * FROM k WHERE pr >= 0.5),
-         |canon AS (SELECT source,
-         |    ${graft.dedup.Dedup.normHashS("text")} AS h,
-         |    COUNT(*) AS copies
-         |  FROM kept GROUP BY source, h)
-         |SELECT source, COUNT(*) AS n_canonical,
-         |  CAST(SUM(copies) AS BIGINT) AS n_kept,
-         |  CAST(SUM(copies) AS BIGINT) - COUNT(*) AS n_dup_copies
-         |FROM canon GROUP BY source ORDER BY source""".stripMargin,
-    "q22_token_stats" ->
-      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(t) AS INTEGER) AS n_ws_tokens,
-         |  CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe')) AS INTEGER) AS n_bpe_tokens,
-         |  CAST(length(text) AS INTEGER) AS n_chars_m,
-         |  round(CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 6) AS ttr
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "q23_quality_score" ->
-      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d)
-         |SELECT doc_id,
-         |  round(chars / NULLIF(words, 0), 6) AS avg_token_len,
-         |  round(punct / NULLIF(chars, 0), 6) AS punct_ratio,
-         |  round(stops / NULLIF(words, 0), 6) AS stopword_ratio,
-         |  $QualityScoreS AS quality_score
-         |FROM m ORDER BY doc_id""".stripMargin,
-    "q77_data_mixing" ->
-      s"""WITH h AS (SELECT source,
-         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 AS bucket
-         |  FROM documents)
-         |SELECT source, CAST(count(*) AS INTEGER) AS n_docs,
-         |  CAST(sum(CASE WHEN bucket <
-         |      (CASE WHEN source < 'src_10' THEN 70 ELSE 30 END)
-         |    THEN 1 ELSE 0 END) AS INTEGER) AS n_sampled
-         |FROM h GROUP BY source ORDER BY source""".stripMargin,
-    "q74_bm25_topk" -> {
-      val terms = Bm25Terms.map(t => s"'$t'").mkString(", ")
-      s"""WITH tok AS (SELECT doc_id, unnest($T) AS token FROM documents),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
-         |  WHERE token IN ($terms) GROUP BY doc_id, token),
-         |dfc AS (SELECT token, CAST(count(*) AS DOUBLE) AS df
-         |  FROM tf GROUP BY token),
-         |sc AS (SELECT tf.token, tf.doc_id,
-         |    ln((n - df + 0.5) / (df + 0.5) + 1.0)
-         |      * ((CAST(tf.tf AS DOUBLE) * ${Bm25K1 + 1.0})
-         |        / (CAST(tf.tf AS DOUBLE) + $Bm25K1 * (${1.0 - Bm25B}
-         |          + $Bm25B * CAST(dl.dl AS DOUBLE) / avgdl))) AS score
-         |  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-         |  JOIN dfc ON tf.token = dfc.token, stats),
-         |r AS (SELECT token, doc_id, round(score, 6) AS bm25,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY token
-         |      ORDER BY round(score, 6) DESC, doc_id) AS INTEGER) AS rk
+         |  LEFT JOIN c1 ON te.p = c1.prev
+         |  LEFT JOIN n1r ON te.c = n1r.cur),
+         |lp AS (SELECT doc_id, source, cb,
+         |    CAST(round(ln(CASE WHEN c1v IS NOT NULL THEN
+         |        (GREATEST(CAST(COALESCE(cb, 0) AS DOUBLE) - 0.75, 0.0)
+         |          + 0.75 * CAST(n1f AS DOUBLE)
+         |            * (CAST(COALESCE(n1rv, 0) + 1 AS DOUBLE)
+         |               / CAST(n1all + v AS DOUBLE)))
+         |          / CAST(c1v AS DOUBLE)
+         |      ELSE CAST(COALESCE(n1rv, 0) + 1 AS DOUBLE)
+         |           / CAST(n1all + v AS DOUBLE) END), 6)
+         |      AS DECIMAL(18,6)) AS lp
          |  FROM sc)
-         |SELECT token, doc_id, rk, bm25 FROM r
-         |WHERE rk <= $Bm25TopN ORDER BY token, rk""".stripMargin
-    },
-    "q73_quality_filter" ->
-      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents),
-         |m AS (SELECT doc_id,
-         |    CAST(len(t) AS DOUBLE) AS words,
-         |    CAST(length(text) AS DOUBLE) AS chars,
-         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) AS punct,
-         |    CAST(${countInSetS("t", Stopwords)} AS DOUBLE) AS stops
-         |  FROM d),
-         |sc AS (SELECT doc_id,
-         |    $QualityScoreS AS quality_score
-         |  FROM m),
-         |p AS (SELECT doc.source, sc.doc_id,
-         |    PERCENT_RANK() OVER (PARTITION BY doc.source
-         |      ORDER BY sc.quality_score, sc.doc_id) AS pr
-         |  FROM sc JOIN documents doc ON sc.doc_id = doc.doc_id)
-         |SELECT source, CAST(count(*) AS INTEGER) AS n_docs,
-         |  CAST(sum(CASE WHEN pr >= 0.5 THEN 1 ELSE 0 END) AS INTEGER)
-         |    AS n_kept_above_median
-         |FROM p GROUP BY source ORDER BY source""".stripMargin,
-    "q176_stratification" -> {
-      val scores = LangMarkers.map { case (l, ms) =>
-        s"${countInSetS("t", ms)} AS s_$l" }.mkString(",\n    ")
-      val pred = LangMarkers.map(_._1).foldRight("'und'") { case (l, e) =>
-        val beats = LangMarkers.map(_._1).filter(_ != l)
-          .map(o => s"s_$l >= s_$o").mkString(" AND ")
-        s"CASE WHEN s_$l > 0 AND $beats THEN '$l' ELSE $e END"
-      }
-      val (qLo, qHi) = StratQualityEdges
-      val (lLo, lHi) = StratLengthEdges
-      s"""WITH d AS (SELECT doc_id, text, $T AS t FROM documents),
-         |sc AS (SELECT doc_id, text, t,
-         |    $scores,
-         |    $qualityMeasureColsS
-         |  FROM d),
-         |q AS (SELECT $pred AS pred_lang, $QualityScoreS AS qs,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")} AS BIGINT)
-         |      AS toks,
-         |    length(text) AS len FROM sc),
-         |c AS (SELECT pred_lang,
-         |    CASE WHEN qs >= $qHi THEN 'high'
-         |      WHEN qs >= $qLo THEN 'mid' ELSE 'low' END AS tier,
-         |    CASE WHEN len < $lLo THEN 'short'
-         |      WHEN len < $lHi THEN 'medium' ELSE 'long' END AS len_bucket,
-         |    toks FROM q)
-         |SELECT pred_lang, tier, len_bucket,
-         |  CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(toks) AS BIGINT) AS total_tokens
-         |FROM c GROUP BY 1, 2, 3
-         |ORDER BY pred_lang, tier, len_bucket""".stripMargin
-    },
-    "q24_lang_id" ->
-      s"""WITH d AS (SELECT doc_id, lang, $T AS t FROM documents),
-         |sc AS (SELECT doc_id, lang,
-         |    $langScoresS
-         |  FROM d),
-         |p AS (SELECT doc_id, lang, $langPredS AS pred_lang FROM sc)
-         |SELECT doc_id, pred_lang,
-         |  CAST(pred_lang = lang AS INTEGER) AS agrees
-         |FROM p ORDER BY doc_id""".stripMargin,
-    "q67_normalize_scrub" ->
-      s"""WITH sc AS (SELECT doc_id,
-         |    CAST(len(regexp_extract_all(text, '$EntRe')) AS INTEGER) AS n_ent,
-         |    CAST(len(regexp_extract_all(text, '$StopRe')) AS INTEGER) AS n_stop,
-         |    trim(regexp_replace(regexp_replace(
-         |      regexp_replace(text, '$EntRe', '<ENT>', 'g'),
-         |      '$StopRe', ' ', 'g'), '\\s+', ' ', 'g')) AS norm
-         |  FROM documents)
-         |SELECT doc_id, n_ent, n_stop,
-         |  CAST(length(norm) AS BIGINT) AS norm_len, md5(norm) AS norm_md5
-         |FROM sc ORDER BY doc_id""".stripMargin,
-    "q25_fingerprint" ->
-      s"""WITH d AS (SELECT doc_id, $T AS t FROM documents)
-         |SELECT doc_id,
-         |  list_reduce(
-         |    list_concat([CAST(0 AS BIGINT)],
-         |      list_transform(t, x -> ${hex32S("md5(x)")})),
-         |    (acc, v) -> (acc * 31 + v) % 1000000007) AS fingerprint
-         |FROM d ORDER BY doc_id""".stripMargin,
-    "q42_corpus_stats" ->
-      s"""WITH d AS (SELECT doc_id, lang, source, n_chars, text, $T AS t
+         |SELECT doc_id, source, COUNT(*) AS n_bigrams,
+         |  CAST(SUM(CASE WHEN cb IS NULL THEN 1 ELSE 0 END) AS INTEGER)
+         |    AS n_backoff,
+         |  round(exp(-CAST(SUM(lp) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)),
+         |    6) AS ppl
+         |FROM lp GROUP BY doc_id, source ORDER BY doc_id""".stripMargin),
+    // Jelinek-Mercer deleted interpolation: 3 EM rounds for the mixture
+    // weight, each one hash-agg over a checkpointed scored frame
+    // q404: identical scored frame (bigram/unigram MLEs), identical EM
+    // update with lambda pinned to 9 dp between rounds
+    Query("q404_jm_interpolation", (s, d) => jmInterpolation(s, d), {
+      val emRound = (src: String) =>
+        s"""SELECT
+           |  round(CAST(SUM(CAST(round(
+           |      (l.lam * p2) / (l.lam * p2 + (1.0 - l.lam) * p1), 9)
+           |    AS DECIMAL(28,9))) AS DOUBLE) / COUNT(*), 9) AS lam,
+           |  round(CAST(SUM(CAST(round(
+           |      ln(l.lam * p2 + (1.0 - l.lam) * p1), 6)
+           |    AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS ll
+           |FROM sc CROSS JOIN $src l""".stripMargin
+      s"""WITH d AS (SELECT doc_id, source, $T AS t,
+         |    ${hex60S("md5(CAST(doc_id AS VARCHAR))")} % 100 < 80
+         |      AS is_train
          |  FROM documents),
-         |m AS (SELECT lang, source, n_chars,
-         |    round(least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) * 0.4
-         |      + (CAST(${countInSetS("t", Stopwords)} AS DOUBLE)
-         |         / CAST(len(t) AS DOUBLE)) * 0.4
-         |      + (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
-         |         / CAST(length(text) AS DOUBLE)) * 0.2, 6) AS q
-         |  FROM d)
-         |SELECT lang, source, count(*) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-         |  CAST(sum(CAST(q AS DECIMAL(18,6))) AS DOUBLE) / count(*)
-         |    AS mean_quality
-         |FROM m GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "q167_tokenizer_fertility" ->
-      s"""WITH m AS (SELECT source,
-         |    CAST(len($T) AS BIGINT) AS words,
-         |    CAST(${graft.functions.TextPrims.bpeTokensS("text")} AS BIGINT)
-         |      AS bpe,
-         |    CAST(length(text) AS BIGINT) AS chars
-         |  FROM documents)
-         |SELECT source, CAST(COUNT(*) AS INTEGER) AS n_docs,
-         |  CAST(SUM(words) AS BIGINT) AS total_words,
-         |  CAST(SUM(bpe) AS BIGINT) AS total_bpe,
-         |  CAST(SUM(chars) AS BIGINT) AS total_chars,
-         |  CAST(SUM(bpe) AS DOUBLE) / NULLIF(SUM(words), 0) AS fertility,
-         |  CAST(SUM(chars) AS DOUBLE) / NULLIF(SUM(bpe), 0) AS chars_per_token
-         |FROM m GROUP BY source ORDER BY source""".stripMargin,
-    "q165_vocab_coverage" -> {
-      val vCols = CoverageTargets.map(t =>
-        s"CAST(MIN(CASE WHEN cum * 100 >= $t * total THEN rk END) AS INTEGER) AS v$t")
-        .mkString(",\n         |  ")
-      s"""WITH tok AS (SELECT unnest($T) AS token FROM documents),
-         |c AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY 1),
-         |t AS (SELECT CAST(SUM(n) AS BIGINT) AS total,
-         |    CAST(COUNT(*) AS INTEGER) AS vocab FROM c),
-         |w AS (SELECT n,
-         |    ROW_NUMBER() OVER (ORDER BY n DESC, token) AS rk,
-         |    SUM(n) OVER (ORDER BY n DESC, token
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM c)
-         |SELECT CAST(total AS BIGINT) AS total_tokens, vocab AS vocab_size,
-         |  $vCols
-         |FROM w, t GROUP BY total, vocab""".stripMargin
-    },
-    "q43_top_tokens" ->
-      s"""SELECT token, count(*) AS n
-         |FROM (SELECT unnest($T) AS token FROM documents)
-         |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin,
-    "q183_zipf_fit" ->
-      s"""WITH f AS (SELECT t, count(*) AS f
-         |  FROM (SELECT unnest($T) AS t FROM documents) GROUP BY t),
-         |rk AS (SELECT f, ROW_NUMBER() OVER (ORDER BY f DESC, t) AS r
-         |  FROM f),
-         |xy AS (SELECT round(ln(r), 6) AS x, round(ln(f), 6) AS y
-         |  FROM rk WHERE r <= 100),
-         |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         |    CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-         |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-         |    CAST(SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS sxy,
-         |    CAST(SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS sxx,
-         |    CAST(SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS DOUBLE)
-         |      AS syy
-         |  FROM xy),
-         |sl AS (SELECT n, sx, sy, sxy, sxx, syy,
-         |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM m),
-         |ab AS (SELECT n, sy, sxy, syy, b, (sy - b * sx) / n AS a FROM sl)
-         |SELECT CAST(n AS INTEGER) AS n_terms, round(b, 6) AS slope,
-         |  round(a, 6) AS intercept,
-         |  round(1.0 - (syy - a * sy - b * sxy) / (syy - sy * sy / n), 6)
-         |    AS r2
-         |FROM ab""".stripMargin,
-    "q64_tfidf_topk" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($T) AS token FROM documents),
-         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-         |dfc AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n FROM documents),
-         |r AS (SELECT doc_id, token, tf, df,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY tf DESC, df ASC, token ASC) AS rk
-         |  FROM tf JOIN dfc USING (token))
-         |SELECT doc_id, token, CAST(tf AS BIGINT) AS tf,
-         |  CAST(df AS BIGINT) AS df,
-         |  round(tf * ln(CAST(n.n AS DOUBLE) / df), 6) AS tfidf,
-         |  CAST(rk AS INTEGER) AS rk
-         |FROM r, n WHERE rk <= $TfidfTopK ORDER BY doc_id, rk""".stripMargin,
-    "q268_alpha_mix" ->
-      s"""WITH g AS (SELECT source,
-         |    CAST(count(*) AS INTEGER) AS n_docs,
-         |    CAST(SUM(${bpeTokensS("text")}) AS BIGINT) AS n_tokens
-         |  FROM documents GROUP BY source),
-         |u AS (SELECT *, CASE WHEN n_tokens > 0
-         |    THEN round(exp(0.3 * round(ln(CAST(n_tokens AS DOUBLE)), 6)),
-         |      6) ELSE 0.0 END AS u
-         |  FROM g),
-         |tot AS (SELECT CAST(SUM(n_tokens) AS DOUBLE) AS tot_t,
-         |    CAST(SUM(CAST(u AS DECIMAL(18,6))) AS DOUBLE) AS tot_u
-         |  FROM u)
-         |SELECT source, n_docs, n_tokens,
-         |  round(CAST(n_tokens AS DOUBLE) / tot_t, 9) AS p_raw,
-         |  round(u / tot_u, 9) AS p_alpha,
-         |  round(CASE WHEN n_tokens > 0 THEN (u / tot_u) /
-         |    (CAST(n_tokens AS DOUBLE) / tot_t) END, 6) AS boost
-         |FROM u, tot ORDER BY source""".stripMargin,
-    "q273_vocab_coverage" -> {
-      val rows = CoverageKs.map { k =>
-        s"""SELECT $k AS vocab_k, t.n_types, t.n_tokens_total,
-           |  CAST((SELECT COALESCE(SUM(cnt), 0) FROM (
-           |     SELECT cnt FROM vc ORDER BY cnt DESC, tok LIMIT $k))
-           |    AS BIGINT) AS covered,
-           |  round(CAST((SELECT COALESCE(SUM(cnt), 0) FROM (
-           |     SELECT cnt FROM vc ORDER BY cnt DESC, tok LIMIT $k))
-           |    AS DOUBLE) / CAST(t.n_tokens_total AS DOUBLE), 6)
-           |    AS coverage
-           |FROM t""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH vc AS MATERIALIZED (SELECT tok, COUNT(*) AS cnt FROM (
-         |    SELECT unnest($T) AS tok FROM documents)
-         |  WHERE length(tok) > 0 GROUP BY tok),
-         |t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_tokens_total,
-         |    CAST(COUNT(*) AS BIGINT) AS n_types FROM vc)
-         |$rows
-         |ORDER BY vocab_k""".stripMargin
-    },
-    "q294_rag_chunking" ->
-      s"""WITH d AS (SELECT source,
-         |    CAST(${bpeTokensS("text")} AS BIGINT) AS nt
-         |  FROM documents),
-         |f AS (SELECT * FROM d WHERE nt > 0),
-         |c AS (SELECT source, nt,
-         |    1 + CAST(ceil(CAST(greatest(nt - $ChunkSize, 0) AS DOUBLE)
-         |      / $ChunkStride) AS BIGINT) AS chunks
-         |  FROM f),
-         |e AS (SELECT source, nt, chunks,
-         |    chunks * $ChunkSize -
-         |      ((chunks - 1) * $ChunkStride + $ChunkSize - nt)
-         |      AS emitted
-         |  FROM c)
-         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(nt) AS BIGINT) AS n_tokens,
-         |  CAST(SUM(chunks) AS BIGINT) AS n_chunks,
-         |  CAST(SUM(CASE WHEN chunks = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_single_chunk,
-         |  round(CAST(SUM(emitted) AS DOUBLE) /
-         |    CAST(SUM(chunks) * $ChunkSize AS DOUBLE), 6) AS mean_fill,
-         |  round(CAST(SUM(emitted) - SUM(nt) AS DOUBLE) /
-         |    CAST(SUM(nt) AS DOUBLE), 6) AS overlap_share
-         |FROM e GROUP BY source ORDER BY source""".stripMargin,
-    "q288_rendezvous_shards" -> {
-      def comb(s0: Int): String =
-        s"((${hex60S(seededMd5S(3000 + s0, "CAST(doc_id AS VARCHAR)"))}" +
-          s" >> 4) * 16 + ${15 - s0})"
-      def amax(n: Int): String =
-        s"15 - (greatest(${(0 until n).map(comb).mkString(", ")}) % 16)"
-      s"""WITH b AS MATERIALIZED (SELECT doc_id,
-         |    ${bpeTokensS("text")} AS bt,
-         |    ${amax(ShardsBefore)} AS shard_before,
-         |    ${amax(ShardsAfter)} AS shard_after
-         |  FROM documents)
-         |SELECT 'shard' AS row_kind,
-         |  CAST(shard_before AS INTEGER) AS shard,
-         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(bt) AS BIGINT) AS n_tokens,
-         |  CAST(NULL AS DOUBLE) AS moved_frac,
-         |  CAST(NULL AS DOUBLE) AS theory_frac
-         |FROM b GROUP BY shard_before
-         |UNION ALL
-         |SELECT 'expansion', -1,
-         |  CAST(SUM(CASE WHEN shard_before <> shard_after
-         |    THEN 1 ELSE 0 END) AS BIGINT),
-         |  CAST(NULL AS BIGINT),
-         |  round(CAST(SUM(CASE WHEN shard_before <> shard_after
-         |    THEN 1 ELSE 0 END) AS DOUBLE) /
-         |    CAST(COUNT(*) AS DOUBLE), 6),
-         |  round(1.0 / $ShardsAfter, 6)
-         |FROM b
-         |ORDER BY row_kind, shard""".stripMargin
-    },
-    "q282_noise_table" ->
-      s"""WITH vc AS MATERIALIZED (SELECT tok, COUNT(*) AS cnt,
-         |    round(exp(0.75 * round(ln(CAST(COUNT(*) AS DOUBLE)), 6)),
-         |      6) AS u
-         |  FROM (SELECT unnest($T) AS tok FROM documents)
-         |  WHERE length(tok) > 0 GROUP BY tok),
-         |t AS (SELECT CAST(SUM(CAST(u AS DECIMAL(18,6))) AS DOUBLE)
-         |    AS tu FROM vc),
-         |top AS (SELECT tok, cnt, u FROM vc
-         |  ORDER BY cnt DESC, tok LIMIT $NoiseTopN)
-         |SELECT tok AS token, cnt AS n_count,
-         |  round(u / tu, 9) AS noise_prob,
-         |  CAST(floor(round(u / tu, 9) *
-         |    ${(1L << NoiseTableBits).toDouble}) AS BIGINT)
-         |    AS table_slots
-         |FROM top, t ORDER BY n_count DESC, token""".stripMargin,
-    "q283_sentence_dedup" ->
-      s"""WITH sent AS (SELECT source, md5(sn) AS h FROM (
-         |  SELECT source, regexp_replace(trim(r), '\\s+', ' ', 'g') AS sn
-         |  FROM (SELECT source,
-         |      unnest(regexp_split_to_array(lower(text), '[.!?]+')) AS r
-         |    FROM documents))
-         |  WHERE length(sn) > 0),
-         |ps AS MATERIALIZED (SELECT source, h, COUNT(*) AS c
-         |  FROM sent GROUP BY source, h),
-         |worst AS (SELECT source, h AS top_hash, c AS top_repeats FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY source
-         |    ORDER BY c DESC, h) AS rk FROM ps) WHERE rk = 1)
-         |SELECT g.source, g.n_sentences, g.n_distinct,
-         |  round(CAST(g.n_sentences - g.n_distinct AS DOUBLE) /
-         |    CAST(g.n_sentences AS DOUBLE), 6) AS dup_frac,
-         |  worst.top_hash, worst.top_repeats
-         |FROM (SELECT source, CAST(SUM(c) AS BIGINT) AS n_sentences,
-         |    CAST(COUNT(*) AS BIGINT) AS n_distinct
-         |  FROM ps GROUP BY source) g
-         |JOIN worst ON g.source = worst.source
-         |ORDER BY g.source""".stripMargin,
-    "q279_packing_sweep" -> {
-      val bodies = PackingBudgets.map { c =>
-        s"""SELECT $c AS budget, source,
-           |  CAST(COUNT(*) AS INTEGER) AS n_docs,
-           |  CAST(SUM(toks) AS BIGINT) AS total_toks,
-           |  CAST((SUM(toks) + ${c - 1}) // $c AS BIGINT) AS n_bins,
-           |  CAST(SUM(CASE WHEN (cum - toks) // $c <> (cum - 1) // $c
-           |    THEN 1 ELSE 0 END) AS INTEGER) AS n_boundary_docs,
-           |  CAST(SUM(toks) * 100 //
-           |    (((SUM(toks) + ${c - 1}) // $c) * $c) AS INTEGER)
-           |    AS fill_pct
-           |FROM c GROUP BY source""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH m AS (SELECT doc_id, source,
-         |    CAST(len(regexp_extract_all(lower(text), '$BpeTokenRe'))
-         |      AS BIGINT) AS toks
-         |  FROM documents),
-         |f AS (SELECT * FROM m WHERE toks > 0),
-         |c AS MATERIALIZED (SELECT doc_id, source, toks,
-         |    SUM(toks) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM f)
-         |$bodies
-         |ORDER BY budget, source""".stripMargin
-    },
-    "q276_repetition_loops" -> {
-      val planes = (1 to 3).map { p =>
-        s"""SELECT doc_id, $p AS p, unnest(CASE WHEN len(t) > $p
-           |    THEN list_filter(generate_series(1, len(t) - $p),
-           |      i -> t[i] = t[i + $p])
-           |    ELSE CAST([] AS BIGINT[]) END) AS i
-           |  FROM b""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      s"""WITH b AS MATERIALIZED (SELECT doc_id, source, $T AS t
-         |  FROM documents),
-         |pl AS MATERIALIZED (
-         |  $planes),
-         |runs AS (SELECT doc_id, p,
-         |    i - ROW_NUMBER() OVER (PARTITION BY doc_id, p ORDER BY i)
-         |      AS isl
-         |  FROM pl),
-         |rl AS (SELECT doc_id, p, isl, COUNT(*) AS len
-         |  FROM runs GROUP BY doc_id, p, isl),
-         |mx AS (SELECT doc_id, p, MAX(len) + p AS rep
-         |  FROM rl GROUP BY doc_id, p),
-         |best AS (SELECT doc_id, rep FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-         |    ORDER BY rep DESC, p) AS rk FROM mx) WHERE rk = 1)
-         |SELECT b.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(CASE WHEN best.rep >= 4 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_loopy,
-         |  CAST(COALESCE(MAX(best.rep), 0) AS BIGINT) AS max_rep,
-         |  round(CAST(SUM(CASE WHEN best.rep >= 4 THEN 1 ELSE 0 END)
-         |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS loopy_frac
-         |FROM b LEFT JOIN best ON b.doc_id = best.doc_id
-         |GROUP BY b.source ORDER BY b.source""".stripMargin
-    },
-    "q269_epoch_batches" -> {
-      val planes = (1 to 2).map { e =>
-        s"""SELECT $e AS epoch,
-           |    CAST(${hex60S(seededMd5S(1000 + e,
-                  "CAST(doc_id AS VARCHAR)"))} % 64 AS INTEGER) AS batch,
-           |    source, ${bpeTokensS("text")} AS bt
-           |  FROM documents""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      s"""WITH e AS (
-         |  $planes),
-         |g AS (SELECT epoch, batch,
-         |    CAST(count(*) AS INTEGER) AS n_docs,
-         |    CAST(SUM(bt) AS BIGINT) AS n_tokens,
-         |    CAST(count(DISTINCT source) AS INTEGER) AS n_sources
-         |  FROM e GROUP BY epoch, batch),
-         |t AS (SELECT epoch, CAST(SUM(n_tokens) AS DOUBLE) AS tt
-         |  FROM g GROUP BY epoch)
-         |SELECT g.epoch, g.batch, n_docs, n_tokens, n_sources,
-         |  round(CAST(n_tokens AS DOUBLE) * 64 / tt, 6) AS load_ratio
-         |FROM g JOIN t ON g.epoch = t.epoch
-         |ORDER BY g.epoch, g.batch""".stripMargin
-    },
+         |b0 AS (SELECT doc_id, source, is_train,
+         |    CASE WHEN i = 1 THEN '<s>' ELSE t[CAST(i - 1 AS INTEGER)] END
+         |      AS prev,
+         |    t[CAST(i AS INTEGER)] AS cur
+         |  FROM (SELECT doc_id, source, is_train, t,
+         |      unnest(range(1, len(t) + 1)) AS i FROM d)),
+         |tr AS (SELECT * FROM b0 WHERE is_train),
+         |vocab AS (SELECT DISTINCT cur AS w FROM tr),
+         |vs AS (SELECT COUNT(*) + 1 AS v FROM vocab),
+         |ns AS (SELECT COUNT(*) AS n FROM tr),
+         |c2 AS (SELECT prev, cur, COUNT(*) AS c2 FROM tr
+         |  GROUP BY prev, cur),
+         |c1 AS (SELECT prev, COUNT(*) AS c1 FROM tr GROUP BY prev),
+         |uni AS (SELECT cur, COUNT(*) AS cw FROM tr GROUP BY cur),
+         |te AS (SELECT
+         |    CASE WHEN prev = '<s>' OR prev IN (SELECT w FROM vocab)
+         |      THEN prev ELSE '<unk>' END AS p,
+         |    CASE WHEN cur IN (SELECT w FROM vocab)
+         |      THEN cur ELSE '<unk>' END AS c
+         |  FROM b0 WHERE NOT is_train),
+         |sc AS (SELECT
+         |    CASE WHEN c1.c1 IS NOT NULL THEN
+         |      CAST(COALESCE(c2.c2, 0) AS DOUBLE) / CAST(c1.c1 AS DOUBLE)
+         |    ELSE 0.0 END AS p2,
+         |    CAST(COALESCE(uni.cw, 0) + 1 AS DOUBLE)
+         |      / CAST(ns.n + vs.v AS DOUBLE) AS p1
+         |  FROM te CROSS JOIN vs CROSS JOIN ns
+         |  LEFT JOIN c2 ON te.p = c2.prev AND te.c = c2.cur
+         |  LEFT JOIN c1 ON te.p = c1.prev
+         |  LEFT JOIN uni ON te.c = uni.cur),
+         |lam0 AS (SELECT CAST(0.5 AS DOUBLE) AS lam),
+         |i1 AS (${emRound("lam0")}),
+         |i2 AS (${emRound("i1")}),
+         |i3 AS (${emRound("i2")})
+         |SELECT CAST(1 AS INTEGER) AS iter, lam AS lambda, ll AS avg_ll
+         |  FROM i1
+         |UNION ALL SELECT 2, lam, ll FROM i2
+         |UNION ALL SELECT 3, lam, ll FROM i3
+         |ORDER BY iter""".stripMargin
+    }),
   )
 }
