@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.listenerBus
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 /** Where one registered query's time goes: one line per Spark job (wall
   * seconds, task count, job description, call site) to find the expensive
@@ -16,6 +17,10 @@ import org.apache.spark.sql.graft.listenerBus
   * names the query that started it, build-time jobs included. Streaming
   * micro-batch jobs keep Spark's own batch description (query id, run id
   * and batch number), which the stream's thread sets for every batch.
+  * Each micro-batch of a streaming query the run starts gets one line of
+  * its own: the audited query's name, the batch number and Spark's
+  * per-phase `durationMs` (the query's progress events, which reach the
+  * same listener as its jobs).
   *
   * Usage: Audit <sfDir> <query>...
   * JSON: {"metric":"audit","name":…,"dir":…,"wall_sec":…,"executor_sec":…,
@@ -27,14 +32,24 @@ object Audit {
   final case class Job(id: Int, sec: Double, tasks: Int, query: String,
                        site: String)
 
+  /** One micro-batch's progress: its batch number and the milliseconds of
+    * each phase Spark reports. */
+  final case class Batch(id: Long, durationMs: Seq[(String, Long)])
+
+  /** The `durationMs` phases a batch line prints, in this order. */
+  val Phases: Seq[String] = Seq("triggerExecution", "latestOffset",
+    "getBatch", "queryPlanning", "addBatch", "walCommit", "commitOffsets")
+
   final case class Report(name: String, dir: String, wallSec: Double,
                           jobs: Seq[Job], executorSec: Double,
                           inputBytes: Long, shuffleWriteBytes: Long,
                           shuffleReadBytes: Long, stages: Long, tasks: Long,
-                          rows: Long) {
+                          rows: Long, batches: Seq[Batch] = Nil) {
     def lines: Seq[String] =
-      f"== $name wall=$wallSec%.2f s, ${jobs.size} jobs (last rep)" +:
-        jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%7.3f s  ${j.tasks}%5d tasks  ${j.query}: ${j.site}") :+
+      (f"== $name wall=$wallSec%.2f s, ${jobs.size} jobs (last rep)" +:
+        jobs.map(j => f"  job ${j.id}%4d  ${j.sec}%7.3f s  ${j.tasks}%5d tasks  ${j.query}: ${j.site}")) ++
+        batches.map(b => f"  batch ${b.id}%3d  $name: " +
+          b.durationMs.map { case (k, v) => s"$k=$v" }.mkString(" ") + " ms") :+
         f"  sum-of-jobs ${jobs.map(_.sec).sum}%.3f s (gaps = driver/stage-setup time)" :+
         Json.obj(Seq("metric" -> Json.str("audit"), "name" -> Json.str(name),
           "dir" -> Json.str(dir), "wall_sec" -> f"$wallSec%.3f",
@@ -51,10 +66,11 @@ object Audit {
     private val started =
       scala.collection.mutable.Map.empty[Int, (Long, Int, String, String)]
     private val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
+    private val batches = scala.collection.mutable.ArrayBuffer.empty[Batch]
     private var input, shufW, shufR, runMs, stages, tasks = 0L
 
     def reset(): Unit = synchronized {
-      started.clear(); jobs.clear()
+      started.clear(); jobs.clear(); batches.clear()
       input = 0; shufW = 0; shufR = 0; runMs = 0; stages = 0; tasks = 0
     }
 
@@ -83,10 +99,19 @@ object Audit {
         tasks += e.stageInfo.numTasks
       }
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case p: QueryProgressEvent => synchronized {
+        val d = p.progress.durationMs
+        batches += Batch(p.progress.batchId, Phases.collect {
+          case k if d.containsKey(k) => k -> d.get(k).longValue })
+      }
+      case _ =>
+    }
+
     def report(name: String, dir: String, wallSec: Double, rows: Long)
         : Report = synchronized {
       Report(name, dir, wallSec, jobs.sortBy(_.id).toSeq, runMs / 1e3,
-        input, shufW, shufR, stages, tasks, rows)
+        input, shufW, shufR, stages, tasks, rows, batches.toSeq)
     }
   }
 

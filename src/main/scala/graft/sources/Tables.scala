@@ -44,7 +44,13 @@ object Tables {
     * inferred physical type: the cached schema IS the inferred one. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
+    normalized(name,
+      spark.read.schema(parquetSchema(spark, path)).parquet(path))
+  }
+
+  /** [[load]]'s `events.ts` normalization, for a batch or a streaming
+    * read of the table's files with its [[parquetSchema]]. */
+  private[graft] def normalized(name: String, df: DataFrame): DataFrame =
     if (name == "events" && df.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)
       df.withColumn("ts",
@@ -54,7 +60,6 @@ object Tables {
       df.withColumn("ts",
         df("ts").cast(org.apache.spark.sql.types.TimestampType))
     else df
-  }
 
   /** What makes one inferred parquet schema reusable: the table path,
     * its leaf files' (name, length, mtime), and the session's parquet-read
@@ -80,19 +85,28 @@ object Tables {
     * `computeIfAbsent` runs the job for one caller while the others wait
     * for its result. */
   private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
+    val files = leafFiles(spark, path)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") ||
         k.startsWith("spark.sql.legacy.parquet.") }.sorted
-    schemas.computeIfAbsent(SchemaKey(path, files.sorted.toSeq, confs),
+    schemas.computeIfAbsent(SchemaKey(path, files.sorted, confs),
       _ => spark.read.parquet(path).schema)
+  }
+
+  /** Every file under `path` (`path` itself when it is a file), by a
+    * recursive `listStatus`: unlike `listFiles`, whose
+    * `LocatedFileStatus` loads each file's permissions (a forked `ls` on
+    * a host without libhadoop), it reads names, lengths and mtimes
+    * only. `.crc` checksum files are not listed. */
+  private[graft] def leafFiles(spark: SparkSession, path: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.flatMap(f =>
+        if (f.isDirectory) walk(f.getPath) else Seq(f))
+    walk(p)
   }
 
   /** Shuffle scratch directory: SPARK_GRAFT_LOCAL_DIR when set, else a
@@ -158,6 +172,11 @@ object Tables {
     "spark.local.dir" -> scratchDir,
     // engine extensions: dot_product SQL function + HOF→DotProduct rule
     "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    // local files through java.nio instead of a forked chmod/readlink
+    // per created file and checkpoint rename (see LocalFs.scala)
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[NioLocalFs].getName,
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet (pyarrow's default
     // for naive timestamps) must read as TimestampType, not TIMESTAMP_NTZ:

@@ -210,21 +210,19 @@ object EventStream {
   }
 
   /** q194 — STREAMING RUNNING-EWMA parity, the eleventh streaming
-    * surface: [[ewmaByUser]] run AvailableNow over a staged events copy,
+    * surface: [[ewmaByUser]] run AvailableNow over the linked events table,
     * checked against a DuckDB RECURSIVE-CTE evaluation of the identical
     * recursion. q130 proved session windows; this proves the harder
     * class — unbounded-horizon numeric state where every emission
     * depends on the full per-key history. Same harness discipline as
-    * q130: one staged file → one micro-batch, fixture-sized stateful
+    * q130: the whole table → one micro-batch, fixture-sized stateful
     * shuffle, NoTimeout. On a live deployment swap in [[kafkaSource]];
     * the recursion is micro-batch-sliceable by construction (state
     * carries the fold). */
   def ewmaStreamParity(s: SparkSession, dir: String): DataFrame =
     staged(s, "q194", Parts8) { h =>
       import s.implicits._
-      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
-        .parquet(h.in.toString)
-      val ds = fileSource(s, h.in.toString)
+      val ds = h.linkedEvents(dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
       h.await(h.sink(ewmaByUser(ds).toDF()))
@@ -496,6 +494,47 @@ object EventStream {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start(), df.schema)
 
+    private val linked = scala.collection.mutable.Set.empty[String]
+
+    /** The `events` table of `sfDir` streamed whole from `in/` without a
+      * copy: the first call symlinks the table's leaf files into `in/`,
+      * and every call returns a new file source over them (a
+      * stream-stream join needs one per side) as [[eventSchema]]. It
+      * reads with [[graft.sources.Tables.parquetSchema]] and
+      * [[graft.sources.Tables.load]]'s `ts` normalization, so the rows
+      * are `load`'s. With no `maxFilesPerTrigger` an AvailableNow run
+      * takes every file in one micro-batch, as it took the one-file copy.
+      * `cleanSource` is never set and the dir's delete removes only the
+      * links, so the table is never touched. A table off the local
+      * filesystem, or one with nested (partition) dirs whose values a flat
+      * `in/` would drop, cannot be linked and fails. */
+    def linkedEvents(sfDir: String): DataFrame = {
+      val path = s"$sfDir/events.parquet"
+      if (linked.add(path)) {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val scheme = Option(p.toUri.getScheme).getOrElse(
+          org.apache.hadoop.fs.FileSystem.getDefaultUri(
+            s.sparkContext.hadoopConfiguration).getScheme)
+        require(scheme == "file",
+          s"$label: $path is not on the local filesystem, so its files " +
+            "cannot be linked into in/")
+        val table = java.nio.file.Paths.get(p.toUri.getPath).toAbsolutePath
+        graft.sources.Tables.leafFiles(s, path).foreach { f =>
+          val target = java.nio.file.Paths.get(f.getPath.toUri)
+          require(target == table || target.getParent == table,
+            s"$label: $path has a nested file $target, so it cannot be " +
+              "linked into one flat in/")
+          java.nio.file.Files.createSymbolicLink(
+            in.resolve(target.getFileName), target)
+        }
+      }
+      graft.sources.Tables.normalized("events", s.readStream
+          .schema(graft.sources.Tables.parquetSchema(s, path))
+          .parquet(in.toString))
+        .select(eventSchema.fields.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+    }
+
     /** Tracks a query started outside [[sink]]/[[appendEach]], so it is
       * stopped on exit too. */
     def track(q: StreamingQuery): StreamingQuery = { started += q; q }
@@ -665,7 +704,9 @@ object EventStream {
         StructType(updates.schema.fields)).parquet(h.in.toString)
       h.await(h.track(
         upsertSink(src, "o_orderkey", "o_orderdate", snap, h.ckpt)))
-      s.read.parquet(snap)
+      // the merge writes the base's columns and types (the updates carry
+      // the same four), so the snapshot reads back with no inference job
+      s.read.schema(orders.schema).parquet(snap)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .orderBy("o_orderkey")
         .localCheckpoint()
@@ -674,7 +715,7 @@ object EventStream {
   /** q109 — oracle-checked INTERVAL-JOIN parity, closing the third
     * streaming surface (q85 = aggregation, q107 = merge, this = join):
     * [[correlateStreams]] executed incrementally over two file sources
-    * reading the same staged events copy, checkpoint-sinked to parquet,
+    * reading the same linked events table, checkpoint-sinked to parquet,
     * read back, and hash-compared to the batch interval join in DuckDB.
     * No sentinel staging is needed: stream-stream INNER join rows are
     * emitted in the micro-batch where both sides match — the watermark
@@ -684,12 +725,10 @@ object EventStream {
     * bit-exact across engines with no DECIMAL routing. */
   def intervalJoinParity(s: SparkSession, dir: String): DataFrame =
     staged(s, "q109", Parts8) { h =>
-      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
-        .parquet(h.in.toString)
-      // two INDEPENDENT file sources over the same staged copy — the
+      // two INDEPENDENT file sources over the same linked files — the
       // stream-stream join requires distinct source plans per side
       h.await(h.sink(correlateStreams(
-        fileSource(s, h.in.toString), fileSource(s, h.in.toString))))
+        h.linkedEvents(dir), h.linkedEvents(dir))))
       h.output.orderBy("click_id", "error_id").localCheckpoint()
     }
 
@@ -706,10 +745,8 @@ object EventStream {
     * break the hash). */
   def semiJoinParity(s: SparkSession, dir: String): DataFrame =
     staged(s, "q247", Parts8) { h =>
-      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
-        .parquet(h.in.toString)
       h.await(h.sink(correlateSemi(
-        fileSource(s, h.in.toString), fileSource(s, h.in.toString))))
+        h.linkedEvents(dir), h.linkedEvents(dir))))
       h.output.orderBy("click_id").localCheckpoint()
     }
 
@@ -1832,7 +1869,7 @@ object EventStream {
   /** q115 — stream-STATIC enrichment parity (fifth streaming surface:
     * q85 = aggregation, q107 = merge, q109 = stream-stream join, q111 =
     * keyed dedup, this = the dimension-enrichment join every production
-    * pipeline runs first): the staged events stream is joined per
+    * pipeline runs first): the linked events stream is joined per
     * micro-batch against the STATIC customer dimension — `broadcast()`d,
     * so each micro-batch plans a BroadcastHashJoin with ZERO shuffle and
     * ZERO streaming state (stream-static inner joins are stateless by
@@ -1844,11 +1881,9 @@ object EventStream {
     * can be refreshed between batches), the fact side never shuffles. */
   def streamStaticJoinParity(s: SparkSession, dir: String): DataFrame =
     staged(s, "q115") { h =>
-      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
-        .parquet(h.in.toString)
       val dim = broadcast(graft.sources.Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey")))
-      val enriched = fileSource(s, h.in.toString)
+      val enriched = h.linkedEvents(dir)
         .join(dim, col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("c_nationkey"),
           col("event_type"), col("value"))
@@ -2141,7 +2176,8 @@ object EventStream {
       staged.coalesce(1).write.mode("overwrite").parquet(h.in.toString)
       val clean = h.dir.resolve("clean").toString
       val quar = h.dir.resolve("quarantine").toString
-      h.await(h.track(fileSource(s, h.in.toString).writeStream
+      val src = fileSource(s, h.in.toString)
+      h.await(h.track(src.writeStream
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
                          batchId: Long) =>
           routeBatch(batch, batchId, clean, quar)
@@ -2150,9 +2186,13 @@ object EventStream {
         .outputMode(OutputMode.Append())
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()))
+      // both sides read back with the routed batches' own schema: no
+      // inference job (the `batch=<id>` dirs still add their column)
+      val routed = withReasonMask(src).schema
       val sides =
-        s.read.parquet(clean).drop("batch").withColumn("side", lit("clean"))
-          .unionByName(s.read.parquet(quar).drop("batch")
+        s.read.schema(routed).parquet(clean).drop("batch")
+          .withColumn("side", lit("clean"))
+          .unionByName(s.read.schema(routed).parquet(quar).drop("batch")
             .withColumn("side", lit("quarantine")))
       sides.groupBy("side", "reason_mask")
         .agg(count(lit(1)).as("n"),
@@ -2171,11 +2211,7 @@ object EventStream {
   private[graft] def routeBatch(batch: Dataset[org.apache.spark.sql.Row],
                                 batchId: Long, cleanDir: String,
                                 quarDir: String): Unit = {
-    val m = batch.withColumn("reason_mask",
-      when(col("value") < 0, 1).otherwise(0) +
-        when(!col("event_type").isin(
-          "click", "error", "purchase", "signup", "view"), 2)
-          .otherwise(0))
+    val m = withReasonMask(batch)
       // the dual write is two actions over this frame — cache it so the
       // micro-batch's source read + mask computation run once, not twice
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2188,11 +2224,20 @@ object EventStream {
     } finally { m.unpersist(); () }
   }
 
+  /** q146's constraint bitmask: 1 = negative value, 2 = unknown
+    * event_type. */
+  private def withReasonMask(df: Dataset[org.apache.spark.sql.Row]): DataFrame =
+    df.withColumn("reason_mask",
+      when(col("value") < 0, 1).otherwise(0) +
+        when(!col("event_type").isin(
+          "click", "error", "purchase", "signup", "view"), 2)
+          .otherwise(0))
+
   /** q130 — oracle-checked SESSIONIZATION parity, the sixth and last
     * stateful streaming surface (q85 = aggregation, q107 = merge, q109 =
     * stream-stream join, q111 = keyed dedup, q115 = stream-static join,
     * this = custom flatMapGroupsWithState): [[sessionize]] run
-    * AvailableNow over the staged events copy with NoTimeout, emitting
+    * AvailableNow over the linked events table with NoTimeout, emitting
     * every CLOSED session — a session closes when a later same-user event
     * exceeds the 2 h gap, which is a pure function of the data, so the
     * emitted set is deterministic. The one non-deterministic piece of the
@@ -2211,12 +2256,10 @@ object EventStream {
   def sessionizeParity(s: SparkSession, dir: String): DataFrame =
     staged(s, "q130", Parts8) { h =>
       import s.implicits._
-      // ONE staged file → ONE micro-batch: every user's full event
+      // the whole table → ONE micro-batch: every user's full event
       // sequence reaches the group function together, so sessions close
       // in-batch and no cross-batch mtime-ordering hazard exists
-      stagedEvents(s, dir).coalesce(1).write.mode("overwrite")
-        .parquet(h.in.toString)
-      val ds = fileSource(s, h.in.toString)
+      val ds = h.linkedEvents(dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
       val sessions = sessionize(ds, gapMs = 7200000L, idleTimeout = None)

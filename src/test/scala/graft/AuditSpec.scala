@@ -48,4 +48,15 @@ class AuditSpec extends SparkSpec {
         r.lines.mkString("\n"))
     }
   }
+
+  test("an Audit of q115 prints one line per micro-batch with its phases") {
+    val q = "q115_stream_static_join"
+    val r = Audit.audit(spark, sfDir, q)
+    assert(r.batches.nonEmpty, r.lines.mkString("\n"))
+    val batchLines = r.lines.filter(_.startsWith("  batch "))
+    assert(batchLines.size == r.batches.size, r.lines.mkString("\n"))
+    assert(batchLines.forall(l => l.contains(s"$q: ") &&
+      Seq("addBatch=", "triggerExecution=").forall(l.contains)),
+      batchLines.mkString("\n"))
+  }
 }

@@ -604,20 +604,51 @@ class StreamingSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(dir))
   }
 
-  test("q85, q115 and q270 leave no active query, pinned conf or " +
-      "scratch dir behind") {
+  /** Runs `names` and asserts they leave no active query, pinned conf or
+    * scratch dir behind, and that `events.parquet` keeps its length and
+    * mtime: q109, q115 and q194 stream the table through links to its
+    * files. */
+  private def leavesNothingBehind(names: String*): Unit = {
     val prov = "spark.sql.streaming.stateStore.providerClass"
     val provBefore = spark.conf.getOption(prov)
     def harnessDirs(): Set[String] =
       Option(graft.sources.Tables.scratchRoot.toFile.list())
         .map(_.toSet).getOrElse(Set.empty).filter(_.startsWith("graft-q"))
+    val events = java.nio.file.Paths.get(sfDir, "events.parquet")
+    def stamp() = (java.nio.file.Files.size(events),
+      java.nio.file.Files.getLastModifiedTime(events))
+    val eventsBefore = stamp()
     val before = harnessDirs()
-    Seq("q85_stream_parity", "q115_stream_static_join", "q270_cm_stream")
-      .foreach(name => SparkEntry.queries(name)(spark, sfDir).count())
+    names.foreach(name => SparkEntry.queries(name)(spark, sfDir).count())
     assert(spark.streams.active.isEmpty)
     assert(spark.conf.getOption(prov) == provBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(harnessDirs() -- before == Set.empty[String])
+    assert(stamp() == eventsBefore)
+  }
+
+  test("q85, q115 and q270 leave no active query, pinned conf or " +
+      "scratch dir behind") {
+    leavesNothingBehind("q85_stream_parity", "q115_stream_static_join",
+      "q270_cm_stream")
+  }
+
+  test("q109 and q194 leave nothing behind, and their linked events " +
+      "table keeps its length and mtime") {
+    leavesNothingBehind("q109_interval_join_parity", "q194_ewma_stream")
+  }
+
+  test("linked staging fails, naming the path, for a non-local or nested table") {
+    def failure(sfDir: String): String =
+      intercept[IllegalArgumentException](EventStream.staged(spark, "qlink") {
+        h => h.linkedEvents(sfDir) }).getMessage
+    val remote = "hdfs://namenode:8020/sf"
+    assert(failure(remote).contains(s"$remote/events.parquet"))
+    val nested = tmp()
+    val part = java.nio.file.Paths.get(nested, "events.parquet", "day=1")
+    java.nio.file.Files.createDirectories(part)
+    java.nio.file.Files.write(part.resolve("f.parquet"), Array[Byte](1))
+    assert(failure(nested).contains(s"$nested/events.parquet has a nested file"))
   }
 
   test("q143 restart parity equals the single-run streaming parity (q85)") {

@@ -15,7 +15,10 @@ For each end-to-end metric of the change's BENCHMARK.json it prints both
 sides' median and quartiles, the parent's IQR (Q3 - Q1), the median gap,
 and in how many pairs the change was better (ties count for neither), then
 whether the claim rule holds: the change better in at least nine tenths of
-the pairs and the median gap wider than the parent's IQR.
+the pairs and the median gap wider than the parent's IQR. Then, for each
+op (pipebench stage or query) in the runs' ``detail.op_median_s``, both
+sides' median of the per-run medians and the gap, so a claim can name the
+stage or query that moved.
 """
 import argparse
 import json
@@ -81,6 +84,19 @@ def report(runs, metrics):
         print(f"{name:<15}{f'{am:.4g} [{a1:.4g}-{a3:.4g}]':>30}"
               f"{f'{bm:.4g} [{b1:.4g}-{b3:.4g}]':>30}{a3 - a1:>9.4g}"
               f"{gap:>9.4g}{f'{wins}/{len(vals)}':>7}  {'yes' if holds else 'no'}")
+    ops = {}
+    for p in pairs:
+        for side, res in by[p].items():
+            for op, v in res.get("detail", {}).get("op_median_s", {}).items():
+                ops.setdefault(op, {}).setdefault(side, []).append(v)
+    if ops:
+        print(f"{'op (median s)':<32}{'parent':>10}{'change':>10}{'gap':>10}")
+    for op, sides in sorted(ops.items()):
+        pm, cm = (statistics.median(sides[k]) if sides.get(k) else None
+                  for k in ("parent", "change"))
+        cell = lambda v: f"{v:>10.4f}" if v is not None else f"{'-':>10}"
+        gap = pm - cm if pm is not None and cm is not None else None
+        print(f"{op:<32}{cell(pm)}{cell(cm)}{cell(gap)}")
 
 
 def main():
